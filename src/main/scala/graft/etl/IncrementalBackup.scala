@@ -2,8 +2,10 @@ package graft.etl
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftx.ParquetFooterSchema
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.{JobLock, ReferenceOps}
 import graft.sources.{FaultPoints, IngestLog, ManifestLog, OrcSink, StatsStore}
@@ -35,10 +37,29 @@ final class IncrementalBackup(
 
   private def now(): Timestamp = new Timestamp(System.currentTimeMillis())
 
-  def pidCol(df: DataFrame): Column =
-    if (cfg.primaryId == "month_sid" && !df.columns.contains("month_sid"))
+  def pidCol(df: DataFrame): Column = pidColOf(df.schema)
+
+  private def pidColOf(schema: StructType): Column =
+    if (cfg.primaryId == "month_sid" && !schema.fieldNames.contains("month_sid"))
       ReferenceOps.monthSid(col("o_orderdate")) // testdata stand-in: derive from order date
     else col(cfg.primaryId)
+
+  /** The lake's schema, bound at most once per drain and only when a read
+    * of lake files needs it: `bind` (a one-file sample's footer, or the
+    * source already read) is evaluated on first use. Every read of lake
+    * files in the drain passes the bound schema, so Spark infers none — an
+    * inference is a Spark job per read. An idle drain reads no lake file
+    * and never binds it. Directory-derived partition columns are part of
+    * the bound schema and `basePath` keeps them resolvable.
+    */
+  private final class LakeSchema(val path: String, bind: => StructType) {
+    lazy val schema: StructType = bind
+
+    def read(files: Seq[String]): DataFrame =
+      spark.read.schema(schema).option("basePath", path).parquet(files: _*)
+
+    def derived: Seq[(String, Column)] = Seq("pid" -> pidColOf(schema))
+  }
 
   /** One partition's slice of `df` — the `WHERE pid = v` of the reference
     * loop. When the pid is DERIVED (month_sid computed from the date
@@ -117,10 +138,13 @@ final class IncrementalBackup(
         // with NULL-ish partition value, guarded by not-exists on table name.
         if (rows.isEmpty) Seq(0L) else Seq.empty
       } else {
-        ReferenceOps
-          .discoverPendingPartitions(source, pidCol(source),
-            recorded.toDF("month_sid"), 0)
-          .as[Long].collect().toSeq.sorted // partition list: small by construction
+        // distinct present pids minus the recorded set, subtracted on the
+        // driver (both are partition lists, small by construction) — the
+        // newest-N exclusion is applied at copy time ([[deferredFrom]]), so
+        // the reference operator's rank window would filter nothing here
+        val rec = recorded.toSet
+        source.select(pidCol(source).as("month_sid")).distinct()
+          .as[Long].collect().filterNot(rec).toSeq.sorted
       }
     if (pendingNew.nonEmpty) {
       val t = now()
@@ -185,45 +209,20 @@ final class IncrementalBackup(
     */
   def run(source: DataFrame, slots: Option[JobSlots] = None): Seq[Long] = {
     discover(source)
-    copyLoopConf {
-      var copied = Vector.empty[Long]
-      var pending = copyablePending()
-      while (pending.nonEmpty) {
-        val next = pending.head.primaryPartitionValue // O1: oldest first
-        slotted(slots) { copyPartition(source, next) }
-        copied :+= next
-        pending = copyablePending()
-      }
-      copied
+    var copied = Vector.empty[Long]
+    var pending = copyablePending()
+    while (pending.nonEmpty) {
+      val next = pending.head.primaryPartitionValue // O1: oldest first
+      slotted(slots) { copyPartition(source, next) }
+      copied :+= next
+      pending = copyablePending()
     }
+    copied
   }
 
   /** Run `f` holding one fleet job slot, when a budget is in force. */
   private def slotted[T](slots: Option[JobSlots])(f: => T): T =
     slots.fold(f)(_.withSlot(f))
-
-  /** Run the COPY LOOP `f` with adaptive execution off, restoring the
-    * session's setting after (r12, guide §1.2). A month copy's plan is
-    * fixed shape — scan → filter → repartition(numMappers) → write; no
-    * join to re-strategize, no skew to split, and AQE never coalesces a
-    * user-specified repartition — but AQE materializes the repartition
-    * exchange as its own job and re-optimizes before the write stage: one
-    * extra scheduling round-trip per copy, measured 0.29 s vs 0.23 s per
-    * copy × ~80 copies per drain at sf0.1. Called ONLY from the
-    * single-threaded drain entry points (never inside the concurrent
-    * pool's worker threads — the conf is session-global, so a per-write
-    * scope would race between overlapping copies).
-    */
-  private def copyLoopConf[T](f: => T): T = {
-    val key = "spark.sql.adaptive.enabled"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try f
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
 
   /** The file subset one partition's copy must read, per the min/max
     * manifest: files whose derived-pid interval contains `pid`. Exposed so
@@ -326,9 +325,11 @@ final class IncrementalBackup(
     * up-to-date drain — under any skip. Only snapshot mode falls back to
     * the full [[discover]].
     */
-  def discoverPruned(sourcePath: String, stats: DataFrame): Seq[Long] = {
-    if (cfg.isFullSnapshot)
-      return discover(spark.read.parquet(sourcePath))
+  def discoverPruned(sourcePath: String, stats: DataFrame): Seq[Long] =
+    if (cfg.isFullSnapshot) discover(spark.read.parquet(sourcePath))
+    else discoverPrunedWith(sampledLake(sourcePath, stats), stats)
+
+  private def discoverPrunedWith(lake: LakeSchema, stats: DataFrame): Seq[Long] = {
     import spark.implicits._
     val tbl = cfg.tableName
     val rows = status.rows().filter(_.tableName == tbl)
@@ -337,8 +338,7 @@ final class IncrementalBackup(
     val pendingNew =
       if (files.isEmpty) Seq.empty[Long]
       else {
-        val sub = spark.read.option("basePath", sourcePath)
-          .parquet(files.toIndexedSeq: _*)
+        val sub = lake.read(files)
         sub.select(pidCol(sub).as("month_sid")).distinct()
           .as[Long].collect().filterNot(recorded).toSeq.sorted
       }
@@ -365,8 +365,11 @@ final class IncrementalBackup(
     * pruning is a superset guarantee), so results are identical to the
     * unpruned path.
     */
-  def copyPartitionPruned(sourcePath: String, stats: DataFrame, pid: Long): Unit = {
-    writePruned(sourcePath, stats, pid)
+  def copyPartitionPruned(sourcePath: String, stats: DataFrame, pid: Long): Unit =
+    copyPrunedWith(sampledLake(sourcePath, stats), stats, pid)
+
+  private def copyPrunedWith(lake: LakeSchema, stats: DataFrame, pid: Long): Unit = {
+    writePruned(lake, stats, pid)
     FaultPoints.hit("drain.copy.written")
     status.markComplete(cfg.tableName, pid, now())
     FaultPoints.hit("drain.copy.marked")
@@ -376,20 +379,15 @@ final class IncrementalBackup(
     * split out so the concurrent drain can serialize ONLY the mark (the
     * status store is single-writer) while copies overlap.
     */
-  private def writePruned(sourcePath: String, stats: DataFrame, pid: Long): Unit = {
+  private def writePruned(lake: LakeSchema, stats: DataFrame, pid: Long): Unit = {
     val files = prunedFiles(stats, pid)
     val slice =
       if (files.isEmpty) {
-        // schema-only empty slice: sample one live manifest file rather
-        // than listing the lake root (empty manifest → root read)
-        schemaRelation(sourcePath, stats).filter(lit(false))
-      } else {
-        // basePath keeps a partitioned lake's directory-derived columns in
-        // the subset read, so both branches (and the unpruned loop) write
-        // the same schema
-        val sub = spark.read.option("basePath", sourcePath).parquet(files: _*)
-        pidSlice(sub, pid)
-      }
+        // schema-only empty slice; the bound schema carries a partitioned
+        // lake's directory-derived columns, so both branches (and the
+        // unpruned loop) write the same schema
+        spark.createDataFrame(java.util.Collections.emptyList[Row](), lake.schema)
+      } else pidSlice(lake.read(files), pid)
     OrcSink.write(
       // ≤ NUM_MAPPERS read→write streams, zero shuffle — see
       // [[copyPartition]] (r12, guide §2.4)
@@ -407,16 +405,17 @@ final class IncrementalBackup(
     */
   def runPruned(sourcePath: String): Seq[Long] = {
     val source = spark.read.parquet(sourcePath)
+    val lake = new LakeSchema(sourcePath, source.schema)
     val stats = StatsStore
       .collectExpr(spark, sourcePath, Seq("pid" -> pidCol(source)))
       .cache()
-    discoverPruned(sourcePath, stats)
-    try copyLoopConf {
+    if (cfg.isFullSnapshot) discover(source) else discoverPrunedWith(lake, stats)
+    try {
       var copied = Vector.empty[Long]
       var pending = copyablePending()
       while (pending.nonEmpty) {
         val next = pending.head.primaryPartitionValue
-        copyPartitionPruned(sourcePath, stats, next)
+        copyPrunedWith(lake, stats, next)
         copied :+= next
         pending = copyablePending()
       }
@@ -465,7 +464,7 @@ final class IncrementalBackup(
     // the log is single-writer; a direct refresh caller must contend on the
     // same lock as a running drain (r10 ADVICE: refreshManifest could race
     // runPrunedIncremental and silently skew markers/cadence)
-    withDrainLock { refreshManifestLogLocked(sourcePath) }
+    withDrainLock { refreshManifestLogLocked(sourcePath)._1 }
 
   /** Run `f` holding [[drainLockPath]]; loud failure when another drain (or
     * direct refresh) holds it. All manifest-log writers route through here.
@@ -480,8 +479,13 @@ final class IncrementalBackup(
     try f finally lock.release()
   }
 
-  /** [[refreshManifestLog]] body — caller MUST hold [[drainLockPath]]. */
-  private def refreshManifestLogLocked(sourcePath: String): ManifestLog = {
+  /** [[refreshManifestLog]] body — caller MUST hold [[drainLockPath]].
+    * Also returns the drain's lake-schema binding: the first build's full
+    * read, else a one-file sample of the log, bound only if a read of lake
+    * files needs it (an idle journaled drain never does).
+    */
+  private def refreshManifestLogLocked(
+      sourcePath: String): (ManifestLog, LakeSchema) = {
     val log = new ManifestLog(spark, manifestPath)
     log.migrateLegacy()
     log.gc()
@@ -499,6 +503,7 @@ final class IncrementalBackup(
       log.commitDelta(full, Seq.empty)
       log.setWaveWatermark(headPre)
       log.checkpoint()
+      (log, new LakeSchema(sourcePath, source.schema))
     } else {
       // journal head BEFORE any listing/scan (both branches) — see above
       val headPre = IngestLog.waves(spark, sourcePath).maxOption.getOrElse(-1L)
@@ -508,17 +513,17 @@ final class IncrementalBackup(
       // lake skip reconciliation forever
       val due = log.bumpRefreshCount() >= cfg.manifestCheckpointEvery
       val reconcile = !journal || due
-      // bind the derived expressions against ONE known file's schema —
-      // no lake-root listing on the steady path
-      val derived = Seq("pid" -> pidCol(schemaRelationFromLog(log, sourcePath)))
+      // bound lazily against ONE known file's schema — no lake-root listing
+      // on the steady path, no inference job on an idle one
+      val lake = new LakeSchema(sourcePath, schemaFromLog(log, sourcePath))
       if (reconcile) {
         gauges.fullListings += 1
         // the diff anti-joins the listing against the DISTRIBUTED fold —
         // only fresh/dead paths reach the driver (r9 verdict: this
         // branch used to collect the whole manifest)
         val prior = log.current().get
-        val diff = StatsStore.collectExprDiff(spark, sourcePath, derived,
-          prior, None)
+        val diff = StatsStore.collectExprDiff(spark, sourcePath, lake.derived,
+          prior, None, Some(lake.schema))
         log.commitDelta(diff.adds, diff.dead)
         if (journal) {
           log.setWaveWatermark(headPre)
@@ -541,7 +546,8 @@ final class IncrementalBackup(
           covered.contains(StatsStore.canon(f)))
         if (fresh.nonEmpty)
           log.commitDelta(
-            StatsStore.statsForFiles(spark, sourcePath, derived, fresh),
+            StatsStore.statsForFiles(spark, sourcePath, lake.derived, fresh,
+              Some(lake.schema)),
             Seq.empty)
         FaultPoints.hit("drain.journal.consumed")
         log.setWaveWatermark(head)
@@ -550,8 +556,8 @@ final class IncrementalBackup(
         log.checkpoint()
         log.resetRefreshCount()
       }
+      (log, lake)
     }
-    log
   }
 
   /** The refreshed manifest as a DataFrame (the log's folded view) — the
@@ -563,40 +569,40 @@ final class IncrementalBackup(
     refreshManifestLog(sourcePath).current().get
   }
 
-  /** A one-file relation carrying the lake's schema (directory-derived
-    * partition columns included, via basePath) — how the steady-state
-    * drain binds derived expressions WITHOUT opening the lake root:
+  /** The lake's schema from its first LIVE file among `candidates`
+    * (directory-derived partition columns included, via basePath) — how a
+    * drain binds its lake reads WITHOUT opening the lake root:
     * `spark.read.parquet(root)` drives a full recursive LIST in the
     * driver's file index, which at 100 TB / millions of files is exactly
-    * the metadata storm the manifest log and ingest journal eliminate.
-    */
-  private def sampleSource(sourcePath: String, anyFile: String): DataFrame =
-    spark.read.option("basePath", sourcePath).parquet(anyFile)
-
-  /** [[sampleSource]] over the first LIVE file in a manifest VIEW — a stale
+    * the metadata storm the manifest log and ingest journal eliminate. The
+    * data schema comes from the file's footer on the driver (no inference
+    * job) and the one-file relation adds the partition columns. A stale
     * manifest may front a deleted file (staleness is allowed: pruning is a
-    * superset guarantee), so candidates are existence-checked and the root
-    * read remains the fallback of last resort (empty or fully-stale view).
+    * superset guarantee), so candidates are existence-checked; None when
+    * none is live (callers fall back to reading the lake root).
     */
-  private def schemaRelation(sourcePath: String, stats: DataFrame): DataFrame = {
+  private def sampledSchema(sourcePath: String,
+      candidates: Seq[String]): Option[StructType] = {
     val fs = new org.apache.hadoop.fs.Path(sourcePath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    stats.select("file").head(8).map(_.getString(0))
-      .find(f => fs.exists(new org.apache.hadoop.fs.Path(f)))
-      .map(f => sampleSource(sourcePath, f))
-      .getOrElse(spark.read.parquet(sourcePath))
+    candidates.map(new org.apache.hadoop.fs.Path(_)).find(fs.exists).map { f =>
+      spark.read.schema(ParquetFooterSchema.of(spark, f))
+        .option("basePath", sourcePath).parquet(f.toString).schema
+    }
   }
 
-  /** [[schemaRelation]] against the log's newest rows (no fold executed). */
-  private def schemaRelationFromLog(log: ManifestLog,
-      sourcePath: String): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(sourcePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    log.sampleFiles(8)
-      .find(f => fs.exists(new org.apache.hadoop.fs.Path(f)))
-      .map(f => sampleSource(sourcePath, f))
-      .getOrElse { gauges.fullListings += 1; spark.read.parquet(sourcePath) }
-  }
+  /** [[sampledSchema]] over the first rows of a manifest VIEW. */
+  private def sampledLake(sourcePath: String, stats: DataFrame): LakeSchema =
+    new LakeSchema(sourcePath,
+      sampledSchema(sourcePath, stats.select("file").head(8).map(_.getString(0)).toSeq)
+        .getOrElse(spark.read.parquet(sourcePath).schema))
+
+  /** [[sampledSchema]] against the log's newest rows (no fold executed). */
+  private def schemaFromLog(log: ManifestLog, sourcePath: String): StructType =
+    sampledSchema(sourcePath, log.sampleFiles(8)).getOrElse {
+      gauges.fullListings += 1
+      spark.read.parquet(sourcePath).schema
+    }
 
   /** The persisted manifest as the pruned drain reads it (the log's folded
     * view) — the spec-facing accessor now that the store is log-structured
@@ -627,7 +633,7 @@ final class IncrementalBackup(
       // manifest FIRST (append cost ∝ new files), then manifest-pruned
       // discovery (scan cost ∝ files holding unrecorded months) — with
       // this ordering NO step of the drain's fixed cost scans history
-      val log = refreshManifestLogLocked(sourcePath)
+      val (log, lake) = refreshManifestLogLocked(sourcePath)
       if (cfg.isFullSnapshot) {
         discover(spark.read.parquet(sourcePath))
       } else {
@@ -644,7 +650,7 @@ final class IncrementalBackup(
         gauges.discoveryCkptRowsRead = disc.checkpointRowsRead
         gauges.discoveryCkptRowsTotal = disc.checkpointRowsTotal
         gauges.discoveryDeltaRows = disc.deltaRowsRead
-        discoverPruned(sourcePath, disc.view)
+        discoverPrunedWith(lake, disc.view)
       }
       val pending = copyablePending()
       if (pending.isEmpty) Seq.empty
@@ -670,18 +676,16 @@ final class IncrementalBackup(
         gauges.copyCkptRowsTotal = cp.checkpointRowsTotal
         gauges.copyDeltaRows = cp.deltaRowsRead
         val stats = cp.view
-        if (maxParallel <= 1) copyLoopConf {
+        if (maxParallel <= 1) {
           var copied = Vector.empty[Long]
           pending.foreach { p =>
             slotted(slots) {
-              copyPartitionPruned(sourcePath, stats, p.primaryPartitionValue)
+              copyPrunedWith(lake, stats, p.primaryPartitionValue)
             }
             copied :+= p.primaryPartitionValue
           }
           copied
-        } else copyLoopConf {
-          drainConcurrent(sourcePath, stats, maxParallel, slots)
-        }
+        } else drainConcurrent(lake, stats, maxParallel, slots)
       }
     }
 
@@ -706,12 +710,13 @@ final class IncrementalBackup(
     */
   def runPrunedConcurrent(sourcePath: String, maxParallel: Int): Seq[Long] = {
     val source = spark.read.parquet(sourcePath)
+    val lake = new LakeSchema(sourcePath, source.schema)
     val stats = StatsStore
       .collectExpr(spark, sourcePath, Seq("pid" -> pidCol(source)))
       .cache()
     stats.count() // materialize once; worker threads only re-read the cache
-    discoverPruned(sourcePath, stats)
-    try copyLoopConf { drainConcurrent(sourcePath, stats, maxParallel) }
+    if (cfg.isFullSnapshot) discover(source) else discoverPrunedWith(lake, stats)
+    try drainConcurrent(lake, stats, maxParallel)
     finally { stats.unpersist(); () }
   }
 
@@ -720,7 +725,7 @@ final class IncrementalBackup(
     * submits the independent month-copy jobs; status flips serialize on a
     * driver-side lock ([[StatusStore]] is single-writer by contract).
     */
-  private def drainConcurrent(sourcePath: String, stats: DataFrame,
+  private def drainConcurrent(lake: LakeSchema, stats: DataFrame,
       maxParallel: Int, slots: Option[JobSlots] = None): Seq[Long] = {
     val pending = copyablePending().map(_.primaryPartitionValue).toSeq
     if (pending.isEmpty) Seq.empty
@@ -736,7 +741,7 @@ final class IncrementalBackup(
           pool.execute { () =>
             try {
               if (failure.get() == null) { // fail fast: skip queued work
-                slotted(slots) { writePruned(sourcePath, stats, pid) }
+                slotted(slots) { writePruned(lake, stats, pid) }
                 statusLock.synchronized {
                   status.markComplete(cfg.tableName, pid, now())
                 }

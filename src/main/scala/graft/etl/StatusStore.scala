@@ -2,7 +2,9 @@ package graft.etl
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, Row, SparkSession}
+
+import graft.sources.DriverParquet
 
 /** One row per (table, partition) backup unit — the reference's
   * `sqoop_etl_status` table (schema inferred from the 8-column insert-select
@@ -28,22 +30,21 @@ final case class BackupStatus(
   * full rewrite per update is cheap at any data scale — the fact data is
   * never touched here.
   *
-  * DRIVER-SIDE IO since r11: the store used to round-trip every read and
-  * write through a Spark job (`spark.read.parquet(...).collect()` /
-  * `ds.coalesce(1).write.parquet(...)`), so a drain of N partitions paid
-  * ~3N distributed-job latencies on a table of a few KB — the dominant
-  * fixed cost of the sequential ETL loop at small scale and pure overhead
-  * at any scale (optimization guide §1.2: remove work the job doesn't
-  * need; §5: metadata belongs on the driver). Reads resolve the pointer
-  * and serve from an in-memory cache keyed by the generation name (an
-  * external writer lands a new generation, so the key check detects it);
-  * a cache miss still loads via Spark (any parquet encoding, e.g. the
-  * INT96 timestamps of Spark-written generations). Writes emit the
-  * parquet file directly on the driver (parquet-hadoop example API, a
-  * layout Spark reads back identically: one part file + `_SUCCESS`), so
-  * the swap protocol — temp generation dir, `_SUCCESS`, pointer swap,
-  * generation GC — is byte-compatible with the previous shape and the
-  * crash-recovery contract ([[latestCompleteGen]]) is unchanged.
+  * ALL IO IS DRIVER-SIDE and no store operation schedules a Spark job:
+  * the set is a few KB, so a job per read or write would be pure
+  * scheduling latency — ~3N job latencies for a drain of N partitions,
+  * the dominant fixed cost of the sequential ETL loop (metadata belongs on
+  * the driver). Reads resolve the pointer and serve from an in-memory
+  * cache keyed by the generation name (an external writer lands a new
+  * generation, so the key check detects it); a cache miss — the first
+  * read of every fresh instance, i.e. once per drain — decodes the
+  * generation's parquet file with [[DriverParquet]], which reads both the
+  * INT64-micros timestamps [[writeGen]] emits and the INT96 timestamps of
+  * Spark-written generations. Writes emit the parquet file with
+  * parquet-hadoop's example API, in the layout Spark's writer produces
+  * (one part file + `_SUCCESS`), so the swap protocol — temp generation
+  * dir, `_SUCCESS`, pointer swap, generation GC — and the crash-recovery
+  * contract ([[latestCompleteGen]]) hold for generations of either writer.
   */
 final class StatusStore(spark: SparkSession, path: String) {
   import spark.implicits._
@@ -56,8 +57,9 @@ final class StatusStore(spark: SparkSession, path: String) {
     * per [[writeRows]]). `newInstance` keeps the setting off the
     * JVM-shared cached FileSystem that Spark's own jobs use; delete/rename
     * still clean up `.crc` siblings left by older writers, and readers
-    * (parquet-hadoop here, `spark.read` on a cache miss) skip verification
-    * when no checksum file exists, so mixed-generation stores are fine.
+    * (parquet-hadoop here, `spark.read` outside the store) skip
+    * verification when no checksum file exists, so mixed-generation stores
+    * are fine.
     */
   private val fs = {
     val f = org.apache.hadoop.fs.FileSystem.newInstance(
@@ -108,13 +110,13 @@ final class StatusStore(spark: SparkSession, path: String) {
   /** The current status set as a plain driver-side collection — the form
     * every consumer actually wants (the set is partition-list sized by
     * contract). Cache hit: no IO beyond the pointer read. Cache miss (first
-    * read, or a generation written by another instance): one Spark read of
-    * the tiny generation dir.
+    * read, or a generation written by another instance): one driver-side
+    * decode of the tiny generation dir.
     */
   def rows(): IndexedSeq[BackupStatus] = {
     def load(dir: String): IndexedSeq[BackupStatus] = {
-      val loaded = spark.read.parquet(s"$path/$dir").as[BackupStatus]
-        .collect().toIndexedSeq
+      val loaded = DriverParquet.read(spark.sparkContext.hadoopConfiguration,
+        DriverParquet.files(fs, new org.apache.hadoop.fs.Path(root, dir))).map(fromRow)
       cache = (dir, loaded)
       loaded
     }
@@ -128,8 +130,7 @@ final class StatusStore(spark: SparkSession, path: String) {
           // parquet read when another process writes twice in that window
           // (only current+previous gens are retained): re-resolve once —
           // the fresh pointer names a live generation
-          case _: org.apache.spark.sql.AnalysisException |
-              _: java.io.FileNotFoundException => None
+          case _: java.io.FileNotFoundException => None
         }
     }
     currentDir.orElse(latestCompleteGen) match {
@@ -139,6 +140,17 @@ final class StatusStore(spark: SparkSession, path: String) {
           currentDir.orElse(latestCompleteGen).fold(
             IndexedSeq.empty[BackupStatus])(load))
     }
+  }
+
+  /** A decoded generation row, by column name. Primitive columns must be
+    * non-null, as the product encoder of a Spark read requires.
+    */
+  private def fromRow(r: Row): BackupStatus = {
+    def at(c: String) = r.fieldIndex(c)
+    BackupStatus(r.getString(at("tableName")), r.getString(at("hiveDb")),
+      r.getTimestamp(at("startDate")), Option(r.getTimestamp(at("endDate"))),
+      r.getString(at("primaryPartitionColumn")), r.getLong(at("primaryPartitionValue")),
+      r.getBoolean(at("isComplete")), r.getInt(at("numMappers")))
   }
 
   /** Read the current status set EAGERLY (driver-resident, then re-lifted):

@@ -1,9 +1,10 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Log-structured manifest store — the lakehouse transaction-log idiom the
   * reference's status table embodies (`/root/reference/sqoop_table.py:143-145`
@@ -85,6 +86,28 @@ final class ManifestLog(spark: SparkSession, path: String) {
   private val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
   private def ckptPath = new Path(root, "checkpoint")
   private def deltaPath(seq: Long) = new Path(root, s"delta-$seq")
+  private def conf = spark.sparkContext.hadoopConfiguration
+
+  /** Data files of one published delta. */
+  private def deltaFiles(seq: Long): Seq[FileStatus] =
+    DriverParquet.files(fs, deltaPath(seq))
+
+  /** Data files of the checkpoint buckets `pbs` (their `pb=N/` dirs,
+    * listed directly — no partition discovery), or, for `None`, of every
+    * bucket and of the flat root (pre-r10 checkpoints, and manifests with
+    * no stats column, are unbucketed). Lazy: a reader that stops early
+    * never lists the remaining buckets.
+    */
+  private def ckptFiles(pbs: Option[Seq[Long]]): LazyList[FileStatus] = {
+    val dirs = pbs match {
+      case Some(ps) => ps.to(LazyList).map(pb => new Path(ckptPath, s"pb=$pb"))
+      case None =>
+        ckptPath #:: fs.listStatus(ckptPath).to(LazyList)
+          .filter(st => st.isDirectory && st.getPath.getName.startsWith("pb="))
+          .map(_.getPath)
+    }
+    dirs.flatMap(d => DriverParquet.files(fs, d))
+  }
 
   /** Coarse bucket width over the first stats column's value space: 100
     * units = one calendar year for yyyymm month keys, and an arbitrary
@@ -214,7 +237,10 @@ final class ManifestLog(spark: SparkSession, path: String) {
     * shadowed by anything the consumer needs — tombstones for pruned rows
     * kill rows the consumer never sees. Cost: driver rows ∝ selected
     * buckets + live deltas; a legacy (pre-r10, summary-less) checkpoint
-    * degrades to a full read, reported honestly in the gauge.
+    * degrades to a full read, reported honestly in the gauge. Every read
+    * here runs on the driver ([[DriverParquet]]): selected buckets are
+    * read from their `pb=N/` dirs, live deltas whole, and the schema comes
+    * from one file footer — the call schedules no Spark job.
     */
   def localizedPruned(keep: (Long, Long) => Boolean): Localized =
     localizedPruned((mn, mx, _) => keep(mn, mx))
@@ -243,11 +269,10 @@ final class ManifestLog(spark: SparkSession, path: String) {
           selB = sel.size
           selR = sel.map(_.rows).sum
           if (sel.isEmpty) Seq.empty
-          else spark.read.parquet(ckptPath.toString)
-            .filter(col("pb").isin(sel.map(_.pb.get): _*)).drop("pb")
-            .collect().toIndexedSeq.map(_ -> upto)
+          else DriverParquet.read(conf, ckptFiles(Some(sel.map(_.pb.get))))
+            .map(_ -> upto)
         case None =>
-          val rows = ckptDf().collect().toIndexedSeq
+          val rows = DriverParquet.read(conf, ckptFiles(None))
           totB = 1; selB = 1; totR = rows.length; selR = rows.length
           rows.map(_ -> upto)
       }
@@ -256,22 +281,25 @@ final class ManifestLog(spark: SparkSession, path: String) {
     // tombstone flag are extracted BEFORE trimming the row (a trimmed
     // GenericRow carries no schema, so fieldIndex would fail downstream).
     val deltaRows: Seq[(String, Row, Long, Boolean)] = live.flatMap { s =>
-      val df = spark.read.parquet(deltaPath(s).toString)
-      val fileIdx = df.schema.fieldIndex("file")
-      val tombIdx = df.schema.fieldIndex("tombstone")
-      df.collect().toIndexedSeq.map { r =>
+      DriverParquet.read(conf, deltaFiles(s)).map { r =>
+        val fileIdx = r.fieldIndex("file")
+        val tombIdx = r.fieldIndex("tombstone")
         (canonKey(r.getString(fileIdx)),
           Row.fromSeq(r.toSeq.patch(tombIdx, Nil, 1)), s,
           r.getBoolean(tombIdx))
       }
     }
-    // local last-writer-wins fold over the (tiny) localized row set
-    val schema: org.apache.spark.sql.types.StructType =
-      if (upto >= 0) ckptDf().schema
-      else {
-        val d = spark.read.parquet(deltaPath(live.head).toString).schema
-        org.apache.spark.sql.types.StructType(d.fields.filterNot(_.name == "tombstone"))
-      }
+    // local last-writer-wins fold over the (tiny) localized row set; the
+    // schema is a checkpoint file's footer (a delta's, minus `tombstone`,
+    // when no checkpoint file exists)
+    val schema: StructType =
+      (if (upto >= 0) ckptFiles(None) else LazyList.empty).headOption
+        .map(DriverParquet.schema(conf, _))
+        .getOrElse {
+          val d = live.to(LazyList).flatMap(deltaFiles).headOption
+            .getOrElse(throw new IllegalStateException(s"no manifest data file at $path"))
+          StructType(DriverParquet.schema(conf, d).fields.filterNot(_.name == "tombstone"))
+        }
     val ckFileIdx = schema.fieldIndex("file")
     val byKey = scala.collection.mutable.HashMap.empty[String, (Long, Boolean, Row)]
     (ckRows.map { case (r, s) =>
@@ -289,21 +317,21 @@ final class ManifestLog(spark: SparkSession, path: String) {
   }
 
   /** Up to `n` file paths from the log without executing the fold — the
-    * drain's schema-sample candidates (newest deltas first, then one
-    * checkpoint row group). Rows may be stale (existence-checked by the
-    * caller); tombstone rows are excluded.
+    * drain's schema-sample candidates (newest deltas first, then the first
+    * checkpoint rows; the checkpoint read stops after the rows it needs).
+    * Rows may be stale (existence-checked by the caller); tombstone rows
+    * are excluded. Driver-side reads only.
     */
   def sampleFiles(n: Int): Seq[String] = {
     val upto = ckptUpto
     val live = deltaSeqs.filter(_ > upto).sorted.reverse
     val fromDeltas = live.iterator.flatMap { s =>
-      spark.read.parquet(deltaPath(s).toString)
-        .filter(!col("tombstone")).select("file")
-        .head(n).map(_.getString(0)).toSeq
+      DriverParquet.read(conf, deltaFiles(s), Seq("file", "tombstone"))
+        .collect { case r if !r.getBoolean(1) => r.getString(0) }
     }.take(n).toIndexedSeq
     if (fromDeltas.size >= n || upto < 0) fromDeltas
-    else fromDeltas ++ spark.read.parquet(ckptPath.toString)
-      .select("file").head(n - fromDeltas.size).map(_.getString(0))
+    else fromDeltas ++ DriverParquet.read(conf, ckptFiles(None), Seq("file"),
+      limit = n - fromDeltas.size).map(_.getString(0))
   }
 
   /** Of `candidates`, the paths whose LAST writer among the LIVE deltas is
@@ -320,7 +348,7 @@ final class ManifestLog(spark: SparkSession, path: String) {
     * steady drain skip its stats while the tombstone keeps the re-created
     * file invisible until the next reconciliation. Re-scanning such a
     * candidate is cheap, and its new add delta shadows the tombstone.
-    * Cost ∝ live deltas, never manifest size.
+    * Cost ∝ live deltas, never manifest size; read on the driver.
     */
   def coveredByLiveDeltas(candidates: Seq[String]): Set[String] = {
     val upto = ckptUpto
@@ -330,14 +358,13 @@ final class ManifestLog(spark: SparkSession, path: String) {
       val cand = candidates.map(canonKey).toSet
       val last = scala.collection.mutable.HashMap.empty[String, (Long, Boolean)]
       live.foreach { s =>
-        spark.read.parquet(deltaPath(s).toString)
-          .select("file", "tombstone").collect().foreach { r =>
-            val k = canonKey(r.getString(0))
-            if (cand(k)) last.get(k) match {
-              case Some((s0, _)) if s0 >= s => ()
-              case _ => last.update(k, (s, r.getBoolean(1)))
-            }
+        DriverParquet.read(conf, deltaFiles(s), Seq("file", "tombstone")).foreach { r =>
+          val k = canonKey(r.getString(0))
+          if (cand(k)) last.get(k) match {
+            case Some((s0, _)) if s0 >= s => ()
+            case _ => last.update(k, (s, r.getBoolean(1)))
           }
+        }
       }
       last.collect { case (k, (_, tomb)) if !tomb => k }.toSet
     }

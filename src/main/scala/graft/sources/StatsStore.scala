@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** File-statistics store for data skipping — the manifest-pruning device of
   * lakehouse table formats, built on public Spark primitives: one scan
@@ -194,11 +195,13 @@ object StatsStore {
     * universe WITHOUT any lake listing (the [[IngestLog]] path — dead
     * detection is skipped, per the journal's append-only contract);
     * `None` performs the full recursive listing and detects deads.
+    * `schema` is passed to [[statsForFiles]].
     */
   def collectExprDiff(spark: SparkSession, dataPath: String,
       derived: Seq[(String, org.apache.spark.sql.Column)],
       prior: DataFrame,
-      candidates: Option[Seq[String]]): ManifestDiff = {
+      candidates: Option[Seq[String]],
+      schema: Option[StructType] = None): ManifestDiff = {
     val (universe, detectDead) = candidates match {
       case Some(c) => (c, false)
       case None =>
@@ -231,7 +234,7 @@ object StatsStore {
         spark.createDataFrame(
           java.util.Collections.emptyList[org.apache.spark.sql.Row](),
           prior.schema)
-      else statsForFiles(spark, dataPath, derived, fresh)
+      else statsForFiles(spark, dataPath, derived, fresh, schema)
     ManifestDiff(adds, dead, fresh)
   }
 
@@ -239,14 +242,15 @@ object StatsStore {
     * for callers (the ingest-journal drain path) that already determined
     * freshness without materializing the manifest. Zero-row files are
     * seeded; `basePath = dataPath` keeps directory-derived partition
-    * columns visible to `derived`.
+    * columns visible to `derived`. A known lake `schema` (partition columns
+    * included) skips the read's schema inference — a Spark job of its own.
     */
   def statsForFiles(spark: SparkSession, dataPath: String,
       derived: Seq[(String, org.apache.spark.sql.Column)],
-      files: Seq[String]): DataFrame = {
+      files: Seq[String], schema: Option[StructType] = None): DataFrame = {
     require(files.nonEmpty, "statsForFiles: empty file set")
-    val df = spark.read.option("basePath", dataPath)
-      .parquet(files.toIndexedSeq: _*)
+    val reader = schema.fold(spark.read)(spark.read.schema(_))
+    val df = reader.option("basePath", dataPath).parquet(files.toIndexedSeq: _*)
     val aggs = Seq(count(lit(1)).as("n_rows")) ++
       derived.flatMap { case (n, _) =>
         Seq(min(col(n)).as(s"min_$n"), max(col(n)).as(s"max_$n")) }

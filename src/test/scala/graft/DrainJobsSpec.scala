@@ -1,0 +1,171 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+
+import graft.etl.{EtlRunner, IncrementalBackup, JobConfig, StatusStore}
+import graft.sources.IngestLog
+
+/** What an ETL drain costs in Spark jobs, and what it leaves behind in the
+  * caller's session. The drain's metadata (status store, manifest log, lake
+  * schema) is read on the driver, so a drain that finds nothing new runs no
+  * job at all; the concurrent runner must not change any session conf.
+  */
+class DrainJobsSpec extends SparkSpec {
+
+  /** Jobs started under a job tag, counted from their start events. */
+  private object JobCounter extends SparkListener {
+    val byTag = new ConcurrentHashMap[String, AtomicInteger]()
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+        .toSeq.flatMap(_.split(',')).foreach { t =>
+          byTag.computeIfAbsent(t, _ => new AtomicInteger()).incrementAndGet()
+        }
+  }
+  private lazy val counter = { spark.sparkContext.addSparkListener(JobCounter); JobCounter }
+  private val tagSeq = new AtomicInteger()
+
+  /** Run `f` under a fresh job tag; its result and the jobs it started. */
+  private def jobsOf[T](f: => T): (T, Int) = {
+    val c = counter
+    val tag = s"drain-jobs-${tagSeq.incrementAndGet()}"
+    val sc = spark.sparkContext
+    sc.addJobTag(tag)
+    val out = try f finally sc.removeJobTag(tag)
+    org.apache.spark.graftx.ListenerBusDrain.drain(sc)
+    (out, Option(c.byTag.get(tag)).fold(0)(_.get))
+  }
+
+  /** One month of rows as a single parquet file landed in `lake` and
+    * recorded in its ingest journal.
+    */
+  private def landMonth(tmp: String, lake: String, m: Long): Unit = {
+    val stage = s"$tmp/stage-$m"
+    spark.range(40).select(lit(m).as("month_sid"), col("id").as("payload"))
+      .coalesce(1).write.parquet(stage)
+    val part = new java.io.File(stage).listFiles().find(_.getName.endsWith(".parquet")).get
+    val dst = Paths.get(lake, s"wave-$m.parquet")
+    Files.copy(part.toPath, dst)
+    IngestLog.record(spark, lake, Seq(dst.toString))
+  }
+
+  test("journaled drain job gate: a drain that finds nothing new runs 0 Spark jobs; one landed month costs at most 6") {
+    val tmp = Files.createTempDirectory("graft-drainjobs").toString
+    val lake = s"$tmp/lake"
+    Files.createDirectories(Paths.get(lake))
+    val cfg = JobConfig(tableName = "t", numMappers = 1, outputFileFormat = "parquet",
+      pruned = true, manifestCheckpointEvery = 8)
+    // what the runner does per drain: a fresh status store and drain object
+    def drain(): Seq[Long] =
+      EtlRunner.runAllFrom(spark, s"$tmp/work",
+        Seq(cfg -> (EtlRunner.LakeSource(lake): EtlRunner.EtlSource)))("t").get
+    landMonth(tmp, lake, 199501L)
+    landMonth(tmp, lake, 199502L)
+    assert(drain() == Seq(199501L, 199502L)) // first drain builds the manifest
+
+    val (idle, idleJobs) = jobsOf(drain())
+    assert(idle.isEmpty)
+    assert(idleJobs == 0, s"an idle journaled drain ran $idleJobs Spark jobs")
+
+    landMonth(tmp, lake, 199503L)
+    val (copied, copyJobs) = jobsOf(drain())
+    assert(copied == Seq(199503L))
+    // stats aggregation, delta write, discovery distinct, the copy write —
+    // each aggregation is a shuffle stage plus a result stage under AQE
+    assert(copyJobs <= 6, s"a one-month drain ran $copyJobs Spark jobs")
+
+    val (again, againJobs) = jobsOf(drain())
+    assert(again.isEmpty && againJobs == 0, s"idle after copy ran $againJobs jobs")
+    // and the backup is whole
+    val back = new IncrementalBackup(spark, cfg,
+      new StatusStore(spark, s"$tmp/work/status/t"), s"$tmp/work/data").readBack()
+    assert(back.count() == 120L)
+  }
+
+  /** Executed-plan trees (inner children included) of every file write
+    * that `f` runs.
+    */
+  private def writePlans(f: => Unit): Seq[String] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new QueryExecutionListener {
+      override def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit = {
+        val tree = qe.executedPlan.treeString
+        if (tree.contains("InsertIntoHadoopFsRelationCommand")) plans.add(tree)
+      }
+      override def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try f finally {
+      org.apache.spark.graftx.ListenerBusDrain.drain(spark.sparkContext)
+      spark.listenerManager.unregister(l)
+    }
+    import scala.jdk.CollectionConverters._
+    plans.asScala.toSeq
+  }
+
+  private def adaptive(tree: String): Boolean =
+    tree.contains(classOf[AdaptiveSparkPlanExec].getSimpleName.stripSuffix("Exec"))
+
+  /** Run `f` with adaptive execution explicitly on, restoring the setting. */
+  private def withAqe[T](f: => T): T = {
+    val key = "spark.sql.adaptive.enabled"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "true")
+    try f finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  test("with AQE on, the relation, pruned and lake copy writes plan no adaptive stage (no exchange to adapt)") {
+    withAqe(copyPlansAreStatic())
+  }
+
+  private def copyPlansAreStatic(): Unit = {
+    val tmp = Files.createTempDirectory("graft-aqecopy").toString
+    // control: a write with an exchange IS planned adaptively
+    val control = writePlans {
+      spark.range(100).repartition(3).write.parquet(s"$tmp/control")
+    }
+    assert(control.nonEmpty && control.forall(adaptive))
+
+    val lake = s"$tmp/lake"
+    spark.range(60).select((lit(199501L) + col("id") % 3).as("month_sid"),
+        col("id").as("payload"))
+      .repartitionByRange(3, col("month_sid")).write.parquet(lake)
+    def job(name: String) = new IncrementalBackup(spark,
+      JobConfig(tableName = "t", numMappers = 2, outputFileFormat = "parquet"),
+      new StatusStore(spark, s"$tmp/status-$name"), s"$tmp/dest-$name")
+    val relation = writePlans { assert(job("r").run(spark.read.parquet(lake)).size == 3) }
+    val pruned = writePlans { assert(job("p").runPruned(lake).size == 3) }
+    val incr = writePlans { assert(job("i").runPrunedIncremental(lake).size == 3) }
+    for ((name, ps) <- Seq("relation" -> relation, "pruned" -> pruned, "lake" -> incr)) {
+      val copies = ps.filter(_.contains("/t/pid="))
+      assert(copies.size == 3, s"$name: ${copies.size} copy writes")
+      assert(!copies.exists(adaptive), s"$name copy planned an adaptive stage")
+    }
+  }
+
+  test("runAllConcurrentFrom leaves the session conf exactly as it found it (AQE on, 3 tables in flight)") {
+    withAqe {
+      val tmp = Files.createTempDirectory("graft-confscope").toString
+      val jobs = Seq("a", "b", "c").map { t =>
+        val df = spark.range(90).select((lit(199501L) + col("id") % 3).as("month_sid"),
+          col("id").as("payload"))
+        JobConfig(tableName = t, numMappers = 1, outputFileFormat = "parquet") ->
+          (EtlRunner.RelationSource(df): EtlRunner.EtlSource)
+      }
+      val before = spark.conf.getAll
+      val out = EtlRunner.runAllConcurrentFrom(spark, tmp, jobs, maxParallel = 3)
+      assert(out.values.forall(_.exists(_.size == 3)), out.toString)
+      assert(spark.conf.getAll == before)
+    }
+  }
+}

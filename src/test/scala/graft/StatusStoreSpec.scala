@@ -5,13 +5,12 @@ import java.sql.Timestamp
 
 import graft.etl.{BackupStatus, StatusStore}
 
-/** r11 optimization: StatusStore reads/writes moved from Spark jobs to
-  * driver-side parquet IO with a generation-keyed cache. These tests pin the
-  * contract the optimization must preserve: the at-rest layout stays
-  * Spark-readable, a FRESH instance (cache-cold, Spark read path) sees
-  * exactly what a driver-side writer wrote (timestamps included), and a
-  * generation landed by ANOTHER writer invalidates the cache via the
-  * pointer resolve.
+/** StatusStore reads and writes are driver-side parquet IO with a
+  * generation-keyed cache. These tests pin the contract that must hold:
+  * the at-rest layout stays Spark-readable, a FRESH instance (cache-cold,
+  * driver-side decode) sees exactly what a driver-side writer wrote
+  * (timestamps included), and a generation landed by ANOTHER writer
+  * invalidates the cache via the pointer resolve.
   */
 class StatusStoreSpec extends SparkSpec {
 
@@ -28,8 +27,8 @@ class StatusStoreSpec extends SparkSpec {
       row("t1", 199502L, done = true, end = Some(new Timestamp(1234567899999L))),
       row("t2", 0L))
     store.writeRows(rows)
-    // fresh instance: no cache, resolves the pointer and loads via Spark —
-    // proves the driver-written parquet is byte-compatible for any reader
+    // fresh instance: no cache, resolves the pointer and decodes the
+    // generation on the driver
     val fresh = new StatusStore(spark, dir)
     assert(fresh.rows().sortBy(_.primaryPartitionValue).sortBy(_.tableName) ==
       rows.sortBy(_.primaryPartitionValue).sortBy(_.tableName))

@@ -1,17 +1,14 @@
 #!/bin/bash
 # Run a graft main class directly (no sbt lock): tools/jrun.sh graft.Timeq args...
-# Mirrors build.sbt javaOptions (JDK17 add-opens, UTC, code cache, heap).
+# JVM flags come from tools/jvm.opts, the file build.sbt's javaOptions read;
+# the heap from SPARK_DRIVER_MEM (default 8g), as in build.sbt.
 set -euo pipefail
 cd "$(dirname "$0")/.."
-OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
-         java.util java.util.concurrent java.util.concurrent.atomic; do
-  OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-exec java $OPENS \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -Xmx"${SPARK_DRIVER_MEM:-8g}" -XX:ReservedCodeCacheSize=1g \
+OPTS=()
+while IFS= read -r line; do
+  line="${line#"${line%%[![:space:]]*}"}"
+  line="${line%"${line##*[![:space:]]}"}"
+  [[ -z "$line" || "$line" == \#* ]] || OPTS+=("$line")
+done < tools/jvm.opts
+exec java "${OPTS[@]}" -Xmx"${SPARK_DRIVER_MEM:-8g}" \
   -cp "target/scala-2.13/classes:/opt/spark/jars/*" "$@"
