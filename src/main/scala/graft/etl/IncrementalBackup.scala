@@ -448,10 +448,14 @@ final class IncrementalBackup(
     * later drain: new files are found either from the ingest journal's
     * unconsumed waves (NO lake listing) or — when no journal exists, and
     * periodically as reconciliation — from a full listing diffed against
-    * the manifest by ANTI-JOIN (only the diff reaches the driver); the
-    * diff is committed as a small delta (write bytes ∝ new files) and
-    * every `cfg.manifestCheckpointEvery` drains the log folds into a new
-    * bucketed checkpoint. Correctness never depends on the manifest's
+    * the manifest by one shuffled full outer join (only the diff reaches
+    * the driver); the diff is committed as a small delta (write bytes ∝
+    * new files). Every `cfg.manifestCheckpointEvery` drains (the "due"
+    * drain) the log first folds its live deltas into a new bucketed
+    * checkpoint, then reconciles the listing against that checkpoint —
+    * a plain scan, no fold left to evaluate — and resets the cadence
+    * counter last, so a crash between the fold and the reconcile still
+    * reconciles on the next drain. Correctness never depends on the manifest's
     * freshness: pruning is a superset guarantee and a stale row is a
     * wasted open, never a wrong answer — and a MISSING row cannot happen
     * because every path (journal or listing) covers all files that
@@ -516,14 +520,15 @@ final class IncrementalBackup(
       // bound lazily against ONE known file's schema — no lake-root listing
       // on the steady path, no inference job on an idle one
       val lake = new LakeSchema(sourcePath, schemaFromLog(log, sourcePath))
+      // fold first, so the reconcile below diffs against a plain checkpoint
+      if (due) log.checkpoint()
       if (reconcile) {
         gauges.fullListings += 1
-        // the diff anti-joins the listing against the DISTRIBUTED fold —
-        // only fresh/dead paths reach the driver (r9 verdict: this
-        // branch used to collect the whole manifest)
-        val prior = log.current().get
+        // only fresh/dead paths reach the driver; the lake schema is bound
+        // only when a fresh file needs stats (a lake emptied outside the
+        // journal has no file to bind it from)
         val diff = StatsStore.collectExprDiff(spark, sourcePath, lake.derived,
-          prior, None, Some(lake.schema))
+          log.current().get, None, Some(lake.schema))
         log.commitDelta(diff.adds, diff.dead)
         if (journal) {
           log.setWaveWatermark(headPre)
@@ -541,9 +546,7 @@ final class IncrementalBackup(
         // size): its one job is making the commitDelta-then-crash replay
         // an empty diff; a checkpoint-resident re-record folds
         // idempotently (last-writer-wins on identical recomputed stats)
-        val covered = log.coveredByLiveDeltas(waveFiles)
-        val fresh = waveFiles.filterNot(f =>
-          covered.contains(StatsStore.canon(f)))
+        val fresh = waveFiles.filterNot(log.coveredByLiveDeltas(waveFiles))
         if (fresh.nonEmpty)
           log.commitDelta(
             StatsStore.statsForFiles(spark, sourcePath, lake.derived, fresh,
@@ -552,10 +555,7 @@ final class IncrementalBackup(
         FaultPoints.hit("drain.journal.consumed")
         log.setWaveWatermark(head)
       }
-      if (due) {
-        log.checkpoint()
-        log.resetRefreshCount()
-      }
+      if (due) log.resetRefreshCount()
       (log, lake)
     }
   }

@@ -53,6 +53,12 @@ object DriverParquet {
     } finally r.close()
   }
 
+  /** The row count of one file, from its footer. */
+  def rowCount(conf: Configuration, file: FileStatus): Long = {
+    val r = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf))
+    try r.getRecordCount finally r.close()
+  }
+
   /** The rows of `files`, projected to `columns` (every column when empty),
     * stopping once `limit` rows are read — later files are never opened.
     * Every file must have the same schema.

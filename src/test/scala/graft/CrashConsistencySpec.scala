@@ -276,6 +276,70 @@ class CrashConsistencySpec extends SparkSpec {
     assert(!fs.exists(new Path(s"${job.manifestPath}/delta-0")))
   }
 
+  test("a due drain killed between its fold and its reconcile (manifest.checkpoint.swapped) reconciles on re-run: a file lost outside the journal is tombstoned and the run converges to the never-crashed twin") {
+    import graft.sources.{FaultPoints, IngestLog, ManifestLog}
+    val root = Files.createTempDirectory("graft-crash-due").toString
+    val cfg = graft.etl.JobConfig(tableName = "t", numMappers = 1,
+      outputFileFormat = "parquet", manifestCheckpointEvery = 2)
+    def land(lake: String, m: Long): java.nio.file.Path = {
+      val stage = s"$lake-stage-$m"
+      spark.range(40).select(lit(m).as("month_sid"), col("id").as("payload"))
+        .coalesce(1).write.parquet(stage)
+      val part = new java.io.File(stage).listFiles().find(_.getName.endsWith(".parquet")).get
+      val dst = java.nio.file.Paths.get(lake, s"m-$m.parquet")
+      Files.createDirectories(dst.getParent)
+      Files.copy(part.toPath, dst)
+      IngestLog.record(spark, lake, Seq(dst.toString))
+      dst
+    }
+    // two drains (the first build, then one month through the journal, a
+    // live delta for the fold), then a file vanishes outside the journal;
+    // the next drain is due
+    def setup(tag: String): (graft.etl.IncrementalBackup, String) = {
+      val lake = s"$root/$tag/lake"
+      val job = new graft.etl.IncrementalBackup(spark, cfg,
+        new graft.etl.StatusStore(spark, s"$root/$tag/status"), s"$root/$tag/dest")
+      val lost = land(lake, 199501L)
+      land(lake, 199502L)
+      job.runPrunedIncremental(lake)
+      land(lake, 199503L)
+      job.runPrunedIncremental(lake)
+      Files.delete(lost)
+      (job, lake)
+    }
+    import spark.implicits._
+    def names(j: graft.etl.IncrementalBackup) =
+      j.readManifest().select("file").as[String].collect().map(f => new Path(f).getName).toSet
+    def backMap(j: graft.etl.IncrementalBackup) = j.readBack()
+      .groupBy(col("pid").cast("long").as("m")).count()
+      .as[(Long, Long)].collect().toMap
+
+    val (twin, twinLake) = setup("twin")
+    assert(twin.runPrunedIncremental(twinLake).isEmpty)
+    assert(names(twin) == Set("m-199502.parquet", "m-199503.parquet"))
+
+    val (job, lake) = setup("crash")
+    FaultPoints.install { n =>
+      if (n == "manifest.checkpoint.swapped") throw new RuntimeException(s"injected@$n")
+    }
+    val crashed =
+      try { job.runPrunedIncremental(lake); false }
+      catch { case e: RuntimeException if e.getMessage.startsWith("injected@") => true }
+      finally FaultPoints.clear()
+    assert(crashed, "the due drain did not reach its fold")
+    val log = new ManifestLog(spark, job.manifestPath)
+    assert(log.deltasSinceCheckpoint == 0, "the fold was swapped in before the kill")
+    assert(names(job).contains("m-199501.parquet"), "the kill came before the reconcile")
+    assert(log.refreshCount >= cfg.manifestCheckpointEvery, "the cadence counter was reset")
+
+    assert(job.runPrunedIncremental(lake).isEmpty)
+    assert(!names(job).contains("m-199501.parquet"), "the re-run must reconcile the lost file")
+    assert(names(job) == names(twin))
+    assert(backMap(job) == backMap(twin))
+    assert(job.runPrunedIncremental(lake).isEmpty)
+    assert(names(job) == names(twin))
+  }
+
   test("a crashed IngestLog.record converges on the ingest's retry at every protocol point: staged, claim-created, published (r11: exclusive-claim protocol)") {
     import graft.sources.{FaultPoints, IngestLog}
     val root = Files.createTempDirectory("graft-crash-ing").toString

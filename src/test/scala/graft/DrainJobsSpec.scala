@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.etl.{EtlRunner, IncrementalBackup, JobConfig, StatusStore}
-import graft.sources.IngestLog
+import graft.sources.{IngestLog, ManifestLog}
 
 /** What an ETL drain costs in Spark jobs, and what it leaves behind in the
   * caller's session. The drain's metadata (status store, manifest log, lake
@@ -87,6 +87,33 @@ class DrainJobsSpec extends SparkSpec {
     val back = new IncrementalBackup(spark, cfg,
       new StatusStore(spark, s"$tmp/work/status/t"), s"$tmp/work/data").readBack()
     assert(back.count() == 120L)
+  }
+
+  test("due drain job gate: a reconcile-and-checkpoint drain that finds nothing new runs at most 6 Spark jobs") {
+    val tmp = Files.createTempDirectory("graft-duejobs").toString
+    val lake = s"$tmp/lake"
+    Files.createDirectories(Paths.get(lake))
+    val cfg = JobConfig(tableName = "t", numMappers = 1, outputFileFormat = "parquet",
+      pruned = true, manifestCheckpointEvery = 2)
+    def drain(): Seq[Long] =
+      EtlRunner.runAllFrom(spark, s"$tmp/work",
+        Seq(cfg -> (EtlRunner.LakeSource(lake): EtlRunner.EtlSource)))("t").get
+    landMonth(tmp, lake, 199501L)
+    assert(drain() == Seq(199501L)) // first build
+    landMonth(tmp, lake, 199502L)
+    assert(drain() == Seq(199502L)) // leaves a live delta for the fold
+    val log = new ManifestLog(spark, s"$tmp/work/data/t_manifest")
+    assert(log.deltasSinceCheckpoint == 1)
+
+    val (due, dueJobs) = jobsOf(drain()) // second drain since the fold: due
+    assert(due.isEmpty)
+    assert(log.deltasSinceCheckpoint == 0, "the due drain must fold the live delta")
+    // the fold's write, the bucket summary (shuffle + result) and the
+    // reconcile's full outer join (two shuffles + result)
+    assert(dueJobs <= 6, s"a due drain that found nothing new ran $dueJobs Spark jobs")
+
+    val (idle, idleJobs) = jobsOf(drain())
+    assert(idle.isEmpty && idleJobs == 0, s"idle after the due drain ran $idleJobs jobs")
   }
 
   /** Executed-plan trees (inner children included) of every file write

@@ -419,6 +419,40 @@ class EtlSpec extends SparkSpec {
     assert(wavesLeft.forall(next > _), "wave numbering must stay monotonic after GC")
   }
 
+  test("a lake emptied outside the journal keeps draining: the reconcile and the fold to an empty manifest copy nothing, and the month that lands next is copied") {
+    val tmp = Files.createTempDirectory("graft-etlempty").toString
+    val lake = s"$tmp/lake"
+    Files.createDirectories(java.nio.file.Paths.get(lake))
+    def land(m: Long): java.nio.file.Path = {
+      val stage = s"$tmp/stage-$m"
+      spark.range(40).select(lit(m).as("month_sid"), col("id").as("payload"))
+        .coalesce(1).write.parquet(stage)
+      val part = new java.io.File(stage).listFiles().find(_.getName.endsWith(".parquet")).get
+      val dst = java.nio.file.Paths.get(lake, s"wave-$m.parquet")
+      Files.copy(part.toPath, dst)
+      graft.sources.IngestLog.record(spark, lake, Seq(dst.toString))
+      dst
+    }
+    val cfg = JobConfig(tableName = "t", numMappers = 1, outputFileFormat = "parquet",
+      manifestCheckpointEvery = 2)
+    val job = new IncrementalBackup(spark, cfg,
+      new StatusStore(spark, s"$tmp/status"), s"$tmp/dest")
+    val landed = Seq(land(199501L), land(199502L))
+    assert(job.runPrunedIncremental(lake) == Seq(199501L, 199502L))
+    landed.foreach(Files.delete)
+    // every second drain is due: the first due drain tombstones both files,
+    // the next folds them into a checkpoint with no rows, the third folds
+    // nothing and reconciles against that empty checkpoint
+    (1 to 6).foreach { i =>
+      assert(job.runPrunedIncremental(lake).isEmpty, s"drain $i after the delete")
+    }
+    assert(job.readManifest().count() == 0L)
+    land(199503L)
+    assert(job.runPrunedIncremental(lake) == Seq(199503L))
+    assert(job.readManifest().count() == 1L)
+    assert(job.readBack().count() == 120L) // the months copied before the delete stay backed up
+  }
+
   test("skipLatestMonths: copies defer exactly the newest N distinct months, pruned discovery stays scan-free, paths agree across a year boundary") {
     val tmp = Files.createTempDirectory("graft-etlskip").toString
     val orders = Tables.orders(spark, sf)

@@ -2,7 +2,9 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.Row
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -179,5 +181,93 @@ class ManifestLogSpec extends SparkSpec {
     // 2-arg callers still see every bucket (flag ignored, not filtered)
     val all = log.localizedPruned((_, _) => true)
     assert(all.checkpointRowsRead == 3L)
+  }
+
+  /** The reference fold over the log's files as they lie on disk:
+    * checkpoint ∪ live deltas ranked per scheme-normalized key by delta
+    * seq (the checkpoint ranks as its `_upto` seq), newest wins, tombstones
+    * dropped — the window `current()` ran before the fold became map-only.
+    * Rows as sorted strings over the manifest columns.
+    */
+  private def windowFold(m: String): Seq[String] = {
+    val fs = new Path(m).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val ck = new Path(m, "checkpoint")
+    val upto =
+      if (!fs.exists(new Path(ck, "_SUCCESS"))) -1L
+      else fs.listStatus(ck).map(_.getPath.getName)
+        .collectFirst { case n if n.startsWith("_upto-") => n.stripPrefix("_upto-").toLong }.get
+    val ckDf =
+      if (upto < 0) Seq.empty
+      else Seq(spark.read.parquet(ck.toString).drop("pb")
+        .withColumn("tombstone", lit(false)).withColumn("__seq", lit(upto)))
+    val deltas = fs.listStatus(new Path(m)).map(_.getPath.getName).toSeq.collect {
+      case n if n.startsWith("delta-") && n.stripPrefix("delta-").toLong > upto =>
+        spark.read.parquet(s"$m/$n").withColumn("__seq", lit(n.stripPrefix("delta-").toLong))
+    }
+    val w = Window.partitionBy(col("__key")).orderBy(col("__seq").desc)
+    sorted((ckDf ++ deltas).reduce(_ unionByName _)
+      .withColumn("__key", regexp_replace(col("file"), "^[a-z][a-z0-9+.\\-]*:/+", "/"))
+      .withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") === 1 && !col("tombstone")))
+  }
+
+  private def sorted(df: DataFrame): Seq[String] =
+    df.select(schema.fieldNames.map(col).toSeq: _*).collect().map(_.toString).sorted.toSeq
+
+  /** Fold `log` (at `m`) and assert the new checkpoint holds exactly the
+    * reference fold's rows, and that `current()` now returns them too.
+    */
+  private def assertFoldEquivalent(log: ManifestLog, m: String, expect: Seq[String]): Unit = {
+    val want = windowFold(m)
+    assert(want == expect.sorted, s"reference fold: $want")
+    assert(log.deltasSinceCheckpoint > 0)
+    log.checkpoint()
+    assert(log.deltasSinceCheckpoint == 0)
+    assert(sorted(spark.read.parquet(s"$m/checkpoint").drop("pb")) == want)
+    assert(sorted(log.current().get) == want)
+  }
+
+  test("fold equivalence: the map-only checkpoint holds exactly the window fold's rows — tombstone over an earlier delta, re-add after a tombstone, file:/x against file:///x, first build, fold to zero rows") {
+    val dir = Files.createTempDirectory("graft-mlog8").toString
+    def row(f: String, n: Long, lo: Long, hi: Long) = s"[$f,$n,$lo,$hi]"
+
+    // first build: no checkpoint exists yet, two deltas fold into the first
+    val m1 = s"$dir/first"
+    val first = new ManifestLog(spark, m1)
+    first.commitDelta(rows(("/a.parquet", 1L, 199501L, 199501L),
+      ("/b.parquet", 2L, 199502L, 199502L)), Seq.empty)
+    first.commitDelta(rows(("/b.parquet", 3L, 199502L, 199503L)), Seq.empty)
+    assertFoldEquivalent(first, m1, Seq(row("/a.parquet", 1L, 199501L, 199501L),
+      row("/b.parquet", 3L, 199502L, 199503L)))
+
+    // a tombstone kills an add made by an earlier live delta, and a
+    // checkpoint row
+    first.commitDelta(rows(("/c.parquet", 4L, 199601L, 199601L)), Seq.empty)
+    first.commitDelta(rows(), Seq("/c.parquet", "/a.parquet"))
+    assertFoldEquivalent(first, m1, Seq(row("/b.parquet", 3L, 199502L, 199503L)))
+
+    // a re-add after a tombstone: the newer add wins, with its new stats
+    first.commitDelta(rows(), Seq("/b.parquet"))
+    first.commitDelta(rows(("/b.parquet", 9L, 199701L, 199702L)), Seq.empty)
+    assertFoldEquivalent(first, m1, Seq(row("/b.parquet", 9L, 199701L, 199702L)))
+
+    // a file:/x tombstone against a file:///x add, in the checkpoint and
+    // in a live delta
+    val m2 = s"$dir/scheme"
+    val scheme = new ManifestLog(spark, m2)
+    scheme.commitDelta(rows((s"file://$dir/x.parquet", 7L, 199501L, 199501L),
+      (s"file://$dir/y.parquet", 8L, 199502L, 199502L)), Seq.empty)
+    scheme.checkpoint()
+    scheme.commitDelta(rows((s"file://$dir/z.parquet", 5L, 199503L, 199503L)), Seq.empty)
+    scheme.commitDelta(rows(), Seq(s"file:$dir/x.parquet", s"file:$dir/z.parquet"))
+    assertFoldEquivalent(scheme, m2, Seq(row(s"file://$dir/y.parquet", 8L, 199502L, 199502L)))
+
+    // a fold to zero rows keeps a readable, empty checkpoint, which later
+    // deltas fold onto
+    first.commitDelta(rows(), Seq("/b.parquet"))
+    assertFoldEquivalent(first, m1, Seq.empty)
+    assert(first.localizedPruned((_, _) => true).view.collect().isEmpty)
+    first.commitDelta(rows(("/d.parquet", 6L, 199801L, 199801L)), Seq.empty)
+    assertFoldEquivalent(first, m1, Seq(row("/d.parquet", 6L, 199801L, 199801L)))
   }
 }
