@@ -87,10 +87,7 @@ object EtlMain {
     // path (pruned incremental drain, within-table MAX_PARALLEL).
     val tablesInFlight =
       sys.env.getOrElse("SPARK_GRAFT_TABLES_PARALLEL", "1").toInt
-    val results =
-      if (tablesInFlight > 1)
-        EtlRunner.runAllConcurrentFrom(spark, root, jobs, tablesInFlight)
-      else EtlRunner.runAllFrom(spark, root, jobs)
+    val results = EtlRunner.runAllFrom(spark, root, jobs, tablesInFlight)
     val line = results.toSeq.sortBy(_._1).map { case (t, r) =>
       s""""$t":${r.map(_.length).getOrElse(-1)}"""
     }.mkString("{", ",", "}")

@@ -1398,7 +1398,7 @@ object QueryCatalog {
   }
 
   /** The concurrent twin of [[qEtlPruned]]: same lake layout, same manifest,
-    * but pending months drain through `runPrunedConcurrent(maxParallel=8)` —
+    * but pending months drain through `runPruned(maxParallel = 8)` —
     * independent month-copy jobs submitted from a worker pool instead of a
     * sequential loop, so the drain's wall clock is bounded by the widest
     * copy, not (#months × per-job latency). Same oracle: concurrency only
@@ -1415,7 +1415,7 @@ object QueryCatalog {
     val cfg = etl.JobConfig(tableName = "orders", numMappers = 4)
     val job = new etl.IncrementalBackup(
       s, cfg, new etl.StatusStore(s, s"$tmp/status"), s"$tmp/dest")
-    job.runPrunedConcurrent(s"$src/src", maxParallel = 8)
+    job.runPruned(s"$src/src", maxParallel = 8)
     job.readBack()
       .groupBy(col("pid").cast("long").as("month_sid"))
       .agg(count(lit(1)).as("n_rows"),

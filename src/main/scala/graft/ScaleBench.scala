@@ -841,8 +841,8 @@ object ScaleBench {
     // ---- cross-table × within-table concurrency (r7 verdict task 3's
     // bench row): two lake tables drained via the manifest-pruned path
     // with a 4-wide copy pool each — sequentially vs 2 tables in flight
-    // (runAllConcurrentFrom). The claim: concurrent wall clock tracks the
-    // WIDEST table, sequential pays the sum.
+    // (runAllFrom with maxParallel = 2). The claim: concurrent wall clock
+    // tracks the WIDEST table, sequential pays the sum.
     val concJson: String = if (!sections("etl_conc")) "" else {
       val dir = "/root/testdata/sf0.1"
       val tmp = java.nio.file.Files.createTempDirectory("graft-etlconc").toString
@@ -879,7 +879,7 @@ object ScaleBench {
       }
       val tConc = timed {
         graft.etl.EtlRunner
-          .runAllConcurrentFrom(spark, s"$tmp/rd", jobs, maxParallel = 2); ()
+          .runAllFrom(spark, s"$tmp/rd", jobs, maxParallel = 2); ()
       }
       System.err.println(f"[scale] etl_conc orders=${tOrders}%.1fs lineitem=${tLine}%.1fs seq=${tSeq}%.1fs conc=${tConc}%.1fs (widest=${math.max(tOrders, tLine)}%.1fs)")
       s""","etl_conc":{"orders_alone_s":${s3(tOrders)},"lineitem_alone_s":${s3(tLine)},"sequential_both_s":${s3(tSeq)},"concurrent_both_s":${s3(tConc)},"widest_table_s":${s3(math.max(tOrders, tLine))}}"""

@@ -3,12 +3,14 @@ package graft.etl
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.operators.JobLock
+import graft.sources.Bounded
 
-/** X5: sequential multi-table run with per-table locking — the analogue of
+/** X5: multi-table run with per-table locking — the analogue of
   * `run_sqoop_job.sh:15-25` driving 6 fact configs + 1 dim config. Tables
-  * run sequentially like the reference; each table's copy is internally
-  * parallel (numMappers-way). Returns per-table copied partitions; locked
-  * tables are skipped (None), mirroring the reference's lock-or-exit.
+  * run sequentially like the reference unless [[runAllFrom]] is given more
+  * than one table in flight; each table's copy is internally parallel
+  * (numMappers-way). Returns per-table copied partitions; locked tables are
+  * skipped (None), mirroring the reference's lock-or-exit.
   */
 object EtlRunner {
 
@@ -24,75 +26,35 @@ object EtlRunner {
   final case class RelationSource(df: DataFrame) extends EtlSource
   final case class LakeSource(path: String) extends EtlSource
 
-  def runAll(spark: SparkSession, root: String,
-      jobs: Seq[(JobConfig, DataFrame)]): Map[String, Option[Seq[Long]]] =
-    runAllFrom(spark, root,
-      jobs.map { case (cfg, df) => cfg -> (RelationSource(df): EtlSource) })
-
-  /** [[runAll]] over source DESCRIPTORS: each table drains through the
-    * path its config selects (relation loop, lake full-scan loop, or
-    * manifest-pruned incremental drain with bounded copy concurrency).
+  /** Drain every table through the path its config selects (relation
+    * loop, lake full-scan loop, or manifest-pruned incremental drain with
+    * bounded copy concurrency), `maxParallel` tables in flight.
+    *
+    * `maxParallel > 1` is what an operator gets on a real cluster by
+    * launching several runner processes at once (the per-table `JobLock`
+    * already arbitrates exactly that), collapsed into one driver: each
+    * table drains on its own thread against its own status store and lock,
+    * and Spark interleaves the copy jobs' tasks. Tables are fully
+    * independent (disjoint status/lock/dest paths by construction), so the
+    * only shared state is the SparkSession, which is thread-safe for job
+    * submission. Lock semantics are unchanged: a table locked by anyone,
+    * a sibling thread included, is skipped as None (`sqoop_etl.py:52-57`).
+    * Once a table fails no queued table starts, the same stop as the
+    * sequential run. Total jobs in flight ≤ maxParallel ×
+    * max(JobConfig.maxParallel) — both knobs are explicit, nothing
+    * multiplies silently — and an optional shared [[JobSlots]] budget caps
+    * the FLEET additively: at most `budget` copy jobs in flight across all
+    * tables, whatever the per-table pools would allow.
     */
   def runAllFrom(spark: SparkSession, root: String,
-      jobs: Seq[(JobConfig, EtlSource)]): Map[String, Option[Seq[Long]]] =
-    jobs.map { case (cfg, source) =>
-      runOne(spark, root, cfg, source)
+      jobs: Seq[(JobConfig, EtlSource)], maxParallel: Int = 1,
+      slots: Option[JobSlots] = None): Map[String, Option[Seq[Long]]] =
+    Bounded.map(jobs, maxParallel) { case (cfg, source) =>
+      runOne(spark, root, cfg, source, slots)
     }.toMap
 
-  /** [[runAll]] with `maxParallel` tables in flight — what an operator gets
-    * on a real cluster by launching several runner processes at once (the
-    * per-table `JobLock` already arbitrates exactly that), collapsed into
-    * one driver: each table drains on its own thread against its own
-    * status store and lock, Spark interleaves the copy jobs' tasks. Tables
-    * are fully independent (disjoint status/lock/dest paths by
-    * construction), so the only shared state is the SparkSession, which is
-    * thread-safe for job submission. Lock semantics are unchanged — a
-    * table locked by anyone (including a concurrent sibling thread, were
-    * the same table listed twice) is skipped as None, the reference's
-    * lock-or-exit (`sqoop_etl.py:52-57`).
-    */
-  def runAllConcurrent(spark: SparkSession, root: String,
-      jobs: Seq[(JobConfig, DataFrame)], maxParallel: Int)
-      : Map[String, Option[Seq[Long]]] =
-    runAllConcurrentFrom(spark, root,
-      jobs.map { case (cfg, df) => cfg -> (RelationSource(df): EtlSource) },
-      maxParallel)
-
-  /** [[runAllConcurrent]] over source DESCRIPTORS (r7 verdict task 3): the
-    * tables-in-flight axis composes with each table's own drain selection,
-    * so a `LakeSource` + `PRUNED` config drains through the manifest-pruned
-    * incremental path with its OWN within-table copy pool
-    * (`JobConfig.maxParallel`) while other tables run beside it. At 100 TB
-    * both axes matter at once: cross-table concurrency bounds the fleet's
-    * wall clock by the widest table (the reference's independent Sqoop
-    * jobs, `run_sqoop_job.sh:15-25`), within-table concurrency bounds that
-    * widest table by its widest month. Total jobs in flight ≤
-    * maxParallel × max(JobConfig.maxParallel) — both knobs are explicit,
-    * nothing multiplies silently — and an optional shared [[JobSlots]]
-    * budget (r9) caps the FLEET additively: at most `budget` copy jobs in
-    * flight across all tables, whatever the per-table pools would allow.
-    */
-  def runAllConcurrentFrom(spark: SparkSession, root: String,
-      jobs: Seq[(JobConfig, EtlSource)], maxParallel: Int,
-      slots: Option[JobSlots] = None)
-      : Map[String, Option[Seq[Long]]] = {
-    val pool = java.util.concurrent.Executors
-      .newFixedThreadPool(math.max(1, maxParallel))
-    try {
-      import scala.jdk.CollectionConverters._
-      val tasks = jobs.map { case (cfg, source) =>
-        new java.util.concurrent.Callable[(String, Option[Seq[Long]])] {
-          override def call(): (String, Option[Seq[Long]]) =
-            runOne(spark, root, cfg, source, slots)
-        }
-      }
-      // invokeAll: waits for all; a table's failure surfaces on .get()
-      pool.invokeAll(tasks.asJava).asScala.map(_.get()).toMap
-    } finally { pool.shutdown(); () }
-  }
-
   private def runOne(spark: SparkSession, root: String, cfg: JobConfig,
-      source: EtlSource, slots: Option[JobSlots] = None)
+      source: EtlSource, slots: Option[JobSlots])
       : (String, Option[Seq[Long]]) = {
     val lock = new JobLock(spark, s"$root/locks/${cfg.tableName}.lock")
     val result =

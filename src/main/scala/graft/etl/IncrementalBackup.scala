@@ -8,7 +8,7 @@ import org.apache.spark.sql.graftx.ParquetFooterSchema
 import org.apache.spark.sql.types.StructType
 
 import graft.operators.{JobLock, ReferenceOps}
-import graft.sources.{FaultPoints, IngestLog, ManifestLog, OrcSink, StatsStore}
+import graft.sources.{Bounded, FaultPoints, IngestLog, ManifestLog, OrcSink, StatsStore}
 
 /** The reference's whole job, Spark-first: incremental partition-by-partition
   * copy of a warehouse table to tuned columnar files, with restartable
@@ -125,27 +125,40 @@ final class IncrementalBackup(
     * copied by any drain, only once it leaves the newest-N window.
     */
   def discover(source: DataFrame): Seq[Long] = {
-    import spark.implicits._
-    val tbl = cfg.tableName // local copy: keeps closures free of `this`
     // ONE status read feeds recording, dedup, and the deferral window
     // (r9 verdict nit: the loop re-read the tiny store several times per
     // iteration — immaterial at month grain, quadratic at day grain)
-    val rows = status.rows().filter(_.tableName == tbl)
-    val recorded = rows.map(_.primaryPartitionValue).toIndexedSeq
-    val pendingNew =
-      if (cfg.isFullSnapshot) {
-        // advertiser_dim path (`sqoop_table.py:141-143`): one synthetic unit
-        // with NULL-ish partition value, guarded by not-exists on table name.
-        if (rows.isEmpty) Seq(0L) else Seq.empty
-      } else {
-        // distinct present pids minus the recorded set, subtracted on the
-        // driver (both are partition lists, small by construction) — the
-        // newest-N exclusion is applied at copy time ([[deferredFrom]]), so
-        // the reference operator's rank window would filter nothing here
-        val rec = recorded.toSet
-        source.select(pidCol(source).as("month_sid")).distinct()
-          .as[Long].collect().filterNot(rec).toSeq.sorted
-      }
+    val rows = tableRows()
+    val recorded = rows.map(_.primaryPartitionValue)
+    record(recorded,
+      // advertiser_dim path (`sqoop_table.py:141-143`): one synthetic unit
+      // with NULL-ish partition value, guarded by not-exists on table name.
+      if (cfg.isFullSnapshot) { if (rows.isEmpty) Seq(0L) else Seq.empty }
+      else unrecordedIn(source, recorded.toSet))
+  }
+
+  /** This table's rows of the status store (a driver-side read). */
+  private def tableRows(): IndexedSeq[BackupStatus] = {
+    val tbl = cfg.tableName // local copy: keeps closures free of `this`
+    status.rows().filter(_.tableName == tbl)
+  }
+
+  /** Distinct pids present in `df` minus the recorded set, oldest first —
+    * subtracted on the driver (both are partition lists, small by
+    * construction). The newest-N exclusion is applied at copy time
+    * ([[deferredFrom]]), so the reference operator's rank window would
+    * filter nothing here.
+    */
+  private def unrecordedIn(df: DataFrame, recorded: Set[Long]): Seq[Long] = {
+    import spark.implicits._
+    df.select(pidCol(df).as("month_sid")).distinct()
+      .as[Long].collect().filterNot(recorded).toSeq.sorted
+  }
+
+  /** The tail every discovery shares: record `pendingNew` as pending, then
+    * report those outside the deferral window of `recorded ++ pendingNew`.
+    */
+  private def record(recorded: Seq[Long], pendingNew: Seq[Long]): Seq[Long] = {
     if (pendingNew.nonEmpty) {
       val t = now()
       status.append(pendingNew.map(v => BackupStatus(
@@ -169,60 +182,76 @@ final class IncrementalBackup(
     else all.distinct.sorted.takeRight(cfg.skipLatestMonths).toSet
 
   /** Pending units that are currently COPYABLE: incomplete and outside the
-    * deferral window, oldest first. Every drain loop consumes this, so a
+    * deferral window, oldest first. Every drain consumes this once, so a
     * deferred month recorded pending is never copied early by any path
     * (loop, bulk, pruned, concurrent). One status read serves both the
     * pending set and the window.
     */
-  private def copyablePending(): IndexedSeq[BackupStatus] = {
-    val tbl = cfg.tableName
-    val rows = status.rows().filter(_.tableName == tbl)
+  private def copyablePending(): Seq[Long] = {
+    val rows = tableRows()
     val deferred = deferredFrom(rows.map(_.primaryPartitionValue))
-    rows.filter(s => !s.isComplete && !deferred.contains(s.primaryPartitionValue))
-      .sortBy(_.primaryPartitionValue)
+    rows.collect { case s if !s.isComplete && !deferred(s.primaryPartitionValue) =>
+      s.primaryPartitionValue }.sorted
+  }
+
+  /** The drain loop (`sqoop_etl.py:77-83`) — the only loop over units.
+    * Per unit, in `pending` order (oldest first): `write` (holding one
+    * fleet job slot when a budget is in force), then flip its status —
+    * write-then-mark (`sqoop_etl.py:36-46`), so a crash leaves the unit
+    * pending and its overwrite replay is idempotent. With `maxParallel > 1`
+    * the writes overlap on a bounded pool: month copies are independent
+    * read→write jobs, and the flips serialize on a driver-side lock because
+    * [[StatusStore]] is single-writer by contract. Only completion ORDER
+    * is weakened then. The pending set is computed once per drain: the
+    * store is single-writer per table, so a re-read would find the same
+    * units. Returns the units copied.
+    */
+  private def drain(pending: Seq[Long], maxParallel: Int,
+      slots: Option[JobSlots])(write: Long => Unit): Seq[Long] = {
+    val statusLock = new Object
+    Bounded.map(pending, maxParallel) { pid =>
+      slots.fold(write(pid))(_.withSlot(write(pid)))
+      FaultPoints.hit("drain.copy.written")
+      statusLock.synchronized {
+        status.markComplete(cfg.tableName, pid, now())
+      }
+      FaultPoints.hit("drain.copy.marked")
+      pid
+    }
   }
 
   /** Steps 6a+6b (`sqoop_etl.py:36-46`): copy one partition, tuned columnar
     * output, then flip status.
     */
   def copyPartition(source: DataFrame, pid: Long): Unit = {
-    val slice =
-      if (cfg.isFullSnapshot) source
-      else pidSlice(source, pid) // pushed predicate (P4) + date-range pushdown
-    OrcSink.write(
-      // ≤ NUM_MAPPERS output streams (X4). r12 (guide §2.4): coalesce, not
-      // repartition — the keyless repartition(n) paid a local sort + a full
-      // shuffle of the slice per copy purely to fix the file count, while
-      // coalesce(n) folds the scan into ≤n read→write streams with ZERO
-      // byte movement: exactly the reference's NUM_MAPPERS shape (n mappers,
-      // each reading its share of the source and writing one file,
-      // `sqoop_json.py:35`). File count stays ≤ numMappers (the X4 spec
-      // bound); at 100 TB the copy no longer round-trips the whole month
-      // slice through shuffle disk.
-      slice.coalesce(cfg.numMappers),
-      s"$destRoot/${cfg.tableName}/pid=$pid", cfg)
-    status.markComplete(cfg.tableName, pid, now())
+    drain(Seq(pid), 1, None)(writeRelation(source, _)); ()
   }
 
-  /** The drain loop (`sqoop_etl.py:77-83`): process oldest-first until no
-    * pending unit remains. Returns partitions copied this run.
+  private def writeRelation(source: DataFrame, pid: Long): Unit =
+    // pushed predicate (P4) + date-range pushdown
+    writeSlice(if (cfg.isFullSnapshot) source else pidSlice(source, pid), pid)
+
+  /** Write one unit's rows to its `pid=` directory: ≤ NUM_MAPPERS output
+    * streams (X4). r12 (guide §2.4): coalesce, not repartition — the
+    * keyless repartition(n) paid a local sort + a full shuffle of the slice
+    * per copy purely to fix the file count, while coalesce(n) folds the
+    * scan into ≤n read→write streams with ZERO byte movement: exactly the
+    * reference's NUM_MAPPERS shape (n mappers, each reading its share of
+    * the source and writing one file, `sqoop_json.py:35`). File count stays
+    * ≤ numMappers (the X4 spec bound); at 100 TB the copy no longer
+    * round-trips the whole month slice through shuffle disk.
+    */
+  private def writeSlice(slice: DataFrame, pid: Long): Unit =
+    OrcSink.write(slice.coalesce(cfg.numMappers),
+      s"$destRoot/${cfg.tableName}/pid=$pid", cfg)
+
+  /** The relation drain: discover, then copy every copyable unit oldest
+    * first. Returns partitions copied this run.
     */
   def run(source: DataFrame, slots: Option[JobSlots] = None): Seq[Long] = {
     discover(source)
-    var copied = Vector.empty[Long]
-    var pending = copyablePending()
-    while (pending.nonEmpty) {
-      val next = pending.head.primaryPartitionValue // O1: oldest first
-      slotted(slots) { copyPartition(source, next) }
-      copied :+= next
-      pending = copyablePending()
-    }
-    copied
+    drain(copyablePending(), 1, slots)(writeRelation(source, _))
   }
-
-  /** Run `f` holding one fleet job slot, when a budget is in force. */
-  private def slotted[T](slots: Option[JobSlots])(f: => T): T =
-    slots.fold(f)(_.withSlot(f))
 
   /** The file subset one partition's copy must read, per the min/max
     * manifest: files whose derived-pid interval contains `pid`. Exposed so
@@ -296,12 +325,8 @@ final class IncrementalBackup(
     * touches only delta rows, however long history is. Exposed so specs
     * can assert the read set.
     */
-  def discoveryFiles(stats: DataFrame): Seq[String] = {
-    val tbl = cfg.tableName
-    val recorded = status.rows().filter(_.tableName == tbl)
-      .map(_.primaryPartitionValue).toSet
-    discoveryFilesWith(stats, recorded)
-  }
+  def discoveryFiles(stats: DataFrame): Seq[String] =
+    discoveryFilesWith(stats, tableRows().map(_.primaryPartitionValue).toSet)
 
   private def discoveryFilesWith(stats: DataFrame,
       recorded: Set[Long]): Seq[String] =
@@ -330,27 +355,11 @@ final class IncrementalBackup(
     else discoverPrunedWith(sampledLake(sourcePath, stats), stats)
 
   private def discoverPrunedWith(lake: LakeSchema, stats: DataFrame): Seq[Long] = {
-    import spark.implicits._
-    val tbl = cfg.tableName
-    val rows = status.rows().filter(_.tableName == tbl)
-    val recorded = rows.map(_.primaryPartitionValue).toSet
-    val files = discoveryFilesWith(stats, recorded)
-    val pendingNew =
-      if (files.isEmpty) Seq.empty[Long]
-      else {
-        val sub = lake.read(files)
-        sub.select(pidCol(sub).as("month_sid")).distinct()
-          .as[Long].collect().filterNot(recorded).toSeq.sorted
-      }
-    if (pendingNew.nonEmpty) {
-      val t = now()
-      status.append(pendingNew.map(v => BackupStatus(
-        cfg.tableName, cfg.hiveDb, t, None, cfg.primaryId, v, isComplete = false,
-        cfg.numMappers)))
-      FaultPoints.hit("drain.discovery.recorded")
-    }
-    val deferred = deferredFrom(recorded.toIndexedSeq ++ pendingNew)
-    pendingNew.filterNot(deferred)
+    val recorded = tableRows().map(_.primaryPartitionValue)
+    val rec = recorded.toSet
+    val files = discoveryFilesWith(stats, rec)
+    record(recorded,
+      if (files.isEmpty) Seq.empty else unrecordedIn(lake.read(files), rec))
   }
 
   /** [[copyPartition]] for a LAKE-resident source: instead of filtering a
@@ -365,34 +374,22 @@ final class IncrementalBackup(
     * pruning is a superset guarantee), so results are identical to the
     * unpruned path.
     */
-  def copyPartitionPruned(sourcePath: String, stats: DataFrame, pid: Long): Unit =
-    copyPrunedWith(sampledLake(sourcePath, stats), stats, pid)
-
-  private def copyPrunedWith(lake: LakeSchema, stats: DataFrame, pid: Long): Unit = {
-    writePruned(lake, stats, pid)
-    FaultPoints.hit("drain.copy.written")
-    status.markComplete(cfg.tableName, pid, now())
-    FaultPoints.hit("drain.copy.marked")
+  def copyPartitionPruned(sourcePath: String, stats: DataFrame, pid: Long): Unit = {
+    val lake = sampledLake(sourcePath, stats)
+    drain(Seq(pid), 1, None)(writePruned(lake, stats, _)); ()
   }
 
-  /** The copy half of [[copyPartitionPruned]] without the status flip —
-    * split out so the concurrent drain can serialize ONLY the mark (the
-    * status store is single-writer) while copies overlap.
-    */
+  /** The copy half of [[copyPartitionPruned]], without the status flip. */
   private def writePruned(lake: LakeSchema, stats: DataFrame, pid: Long): Unit = {
     val files = prunedFiles(stats, pid)
-    val slice =
+    writeSlice(
       if (files.isEmpty) {
         // schema-only empty slice; the bound schema carries a partitioned
         // lake's directory-derived columns, so both branches (and the
         // unpruned loop) write the same schema
         spark.createDataFrame(java.util.Collections.emptyList[Row](), lake.schema)
-      } else pidSlice(lake.read(files), pid)
-    OrcSink.write(
-      // ≤ NUM_MAPPERS read→write streams, zero shuffle — see
-      // [[copyPartition]] (r12, guide §2.4)
-      slice.coalesce(cfg.numMappers),
-      s"$destRoot/${cfg.tableName}/pid=$pid", cfg)
+      } else pidSlice(lake.read(files), pid),
+      pid)
   }
 
   /** Steady-state drain against a lake path: the manifest is ONE
@@ -402,25 +399,27 @@ final class IncrementalBackup(
     * to be a full pid-column scan of history), and then each month's copy
     * is file-subset-read only. Loop cost is therefore proportional to the
     * PENDING data, not to history size.
+    *
+    * `maxParallel > 1` overlaps the month copies (see `drain`): the
+    * sequential loop pays (#pending × per-job latency) even when each copy
+    * uses a fraction of the cluster, while pending months are independent
+    * read→write jobs whose input file sets are disjoint (manifest-pruned).
+    * The reference gets this for free across TABLES (independent Sqoop
+    * jobs); within a table its loop is sequential (`sqoop_etl.py:77-83`) —
+    * this is the within-table generalization, throttled like X4
+    * (`maxParallel` jobs × `numMappers` files each).
     */
-  def runPruned(sourcePath: String): Seq[Long] = {
+  def runPruned(sourcePath: String, maxParallel: Int = 1): Seq[Long] = {
     val source = spark.read.parquet(sourcePath)
     val lake = new LakeSchema(sourcePath, source.schema)
     val stats = StatsStore
       .collectExpr(spark, sourcePath, Seq("pid" -> pidCol(source)))
       .cache()
+    // pooled copies: materialize once; worker threads only re-read the cache
+    if (maxParallel > 1) { stats.count(); () }
     if (cfg.isFullSnapshot) discover(source) else discoverPrunedWith(lake, stats)
-    try {
-      var copied = Vector.empty[Long]
-      var pending = copyablePending()
-      while (pending.nonEmpty) {
-        val next = pending.head.primaryPartitionValue
-        copyPrunedWith(lake, stats, next)
-        copied :+= next
-        pending = copyablePending()
-      }
-      copied
-    } finally { stats.unpersist(); () }
+    try drain(copyablePending(), maxParallel, None)(writePruned(lake, stats, _))
+    finally { stats.unpersist(); () }
   }
 
   /** Where the persisted manifest lives: next to the table's backup dirs,
@@ -491,7 +490,6 @@ final class IncrementalBackup(
   private def refreshManifestLogLocked(
       sourcePath: String): (ManifestLog, LakeSchema) = {
     val log = new ManifestLog(spark, manifestPath)
-    log.migrateLegacy()
     log.gc()
     if (!log.nonEmpty) {
       // first build: the full scan lists the lake anyway, so the root
@@ -637,9 +635,7 @@ final class IncrementalBackup(
       if (cfg.isFullSnapshot) {
         discover(spark.read.parquet(sourcePath))
       } else {
-        val tbl = cfg.tableName
-        val recorded = status.rows().filter(_.tableName == tbl)
-          .map(_.primaryPartitionValue).toSet
+        val recorded = tableRows().map(_.primaryPartitionValue).toSet
         // discovery view: only buckets that may hold an unrecorded month —
         // empty on an up-to-date drain, whatever the history size. The
         // bucket's shapeOk flag gates calendar stepping (see
@@ -664,8 +660,7 @@ final class IncrementalBackup(
         // file interval in a bucket ⊆ the bucket's summary interval, so a
         // bucket whose summary contains NO pending month holds nothing any
         // pending copy reads.
-        val ps: Array[Long] =
-          pending.map(_.primaryPartitionValue).sorted.toArray
+        val ps: Array[Long] = pending.toArray // sorted: oldest first
         def hitsPending(mn: Long, mx: Long): Boolean = {
           var i = java.util.Arrays.binarySearch(ps, mn)
           if (i < 0) i = -i - 1
@@ -675,90 +670,9 @@ final class IncrementalBackup(
         gauges.copyCkptRowsRead = cp.checkpointRowsRead
         gauges.copyCkptRowsTotal = cp.checkpointRowsTotal
         gauges.copyDeltaRows = cp.deltaRowsRead
-        val stats = cp.view
-        if (maxParallel <= 1) {
-          var copied = Vector.empty[Long]
-          pending.foreach { p =>
-            slotted(slots) {
-              copyPrunedWith(lake, stats, p.primaryPartitionValue)
-            }
-            copied :+= p.primaryPartitionValue
-          }
-          copied
-        } else drainConcurrent(lake, stats, maxParallel, slots)
+        drain(pending, maxParallel, slots)(writePruned(lake, cp.view, _))
       }
     }
-
-  /** [[runPruned]] with OVERLAPPING month copies: the sequential loop pays
-    * (#pending × per-job latency) even when each copy uses a fraction of
-    * the cluster — at 100 TB steady state, pending months are independent
-    * read→write jobs whose input file sets are disjoint (manifest-pruned),
-    * so a pool of `maxParallel` driver threads submits them concurrently
-    * and Spark's scheduler interleaves their tasks. The reference gets this
-    * for free across TABLES (independent Sqoop jobs); within a table its
-    * loop is sequential (`sqoop_etl.py:77-83`) — this is the within-table
-    * generalization, throttled like X4 (`maxParallel` jobs × `numMappers`
-    * files each).
-    *
-    * Semantics are unchanged from the sequential drain: per month the order
-    * is still copy-then-mark (crash leaves a month pending, its overwrite
-    * replay is idempotent), and status flips serialize on a driver-side
-    * lock because [[StatusStore]] is single-writer by contract. Only
-    * completion ORDER is weakened (oldest-first submission, completion
-    * races) — acceptable because month copies are independent and the
-    * status set records each independently.
-    */
-  def runPrunedConcurrent(sourcePath: String, maxParallel: Int): Seq[Long] = {
-    val source = spark.read.parquet(sourcePath)
-    val lake = new LakeSchema(sourcePath, source.schema)
-    val stats = StatsStore
-      .collectExpr(spark, sourcePath, Seq("pid" -> pidCol(source)))
-      .cache()
-    stats.count() // materialize once; worker threads only re-read the cache
-    if (cfg.isFullSnapshot) discover(source) else discoverPrunedWith(lake, stats)
-    try drainConcurrent(lake, stats, maxParallel)
-    finally { stats.unpersist(); () }
-  }
-
-  /** The overlapping-copies drain body shared by [[runPrunedConcurrent]]
-    * and [[runPrunedIncremental]]: a pool of `maxParallel` driver threads
-    * submits the independent month-copy jobs; status flips serialize on a
-    * driver-side lock ([[StatusStore]] is single-writer by contract).
-    */
-  private def drainConcurrent(lake: LakeSchema, stats: DataFrame,
-      maxParallel: Int, slots: Option[JobSlots] = None): Seq[Long] = {
-    val pending = copyablePending().map(_.primaryPartitionValue).toSeq
-    if (pending.isEmpty) Seq.empty
-    else {
-      val statusLock = new Object
-      val pool = java.util.concurrent.Executors
-        .newFixedThreadPool(math.max(1, maxParallel))
-      val copied = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-      val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]
-      val latch = new java.util.concurrent.CountDownLatch(pending.size)
-      try {
-        pending.foreach { pid =>
-          pool.execute { () =>
-            try {
-              if (failure.get() == null) { // fail fast: skip queued work
-                slotted(slots) { writePruned(lake, stats, pid) }
-                statusLock.synchronized {
-                  status.markComplete(cfg.tableName, pid, now())
-                }
-                copied.add(pid); ()
-              }
-            } catch {
-              case t: Throwable => failure.compareAndSet(null, t); ()
-            } finally latch.countDown()
-          }
-        }
-        latch.await()
-        if (failure.get() != null) throw failure.get()
-        import scala.jdk.CollectionConverters._
-        copied.asScala.toSeq.sorted
-      } finally { pool.shutdown(); () }
-    }
-  }
 
   /** Bulk variant of the drain loop: ONE job writes every pending partition
     * via `partitionBy(pid)` instead of a job per partition. At 100 TB this
@@ -770,7 +684,7 @@ final class IncrementalBackup(
     */
   def runBulk(source: DataFrame): Seq[Long] = {
     discover(source)
-    val pending = copyablePending().map(_.primaryPartitionValue).toSeq
+    val pending = copyablePending()
     if (pending.nonEmpty) {
       val withPid = source.withColumn("pid", pidCol(source))
         .filter(col("pid").isin(pending: _*))

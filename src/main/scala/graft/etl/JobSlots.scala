@@ -1,7 +1,7 @@
 package graft.etl
 
 /** Fleet-wide copy-job budget (r8 verdict task 7): without it, total jobs
-  * in flight under [[EtlRunner.runAllConcurrentFrom]] is
+  * in flight under a pooled [[EtlRunner.runAllFrom]] is
   * tables-in-flight × max(per-table `maxParallel`) — explicit but
   * MULTIPLICATIVE, so an operator could not cap the fleet. One shared
   * `JobSlots` threaded through every table's drain makes the bound

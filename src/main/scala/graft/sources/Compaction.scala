@@ -19,8 +19,9 @@ object Compaction {
   /** `peakParallel`: highest number of leaf rewrites observed in flight
     * during THIS invocation (1 for a plain [[compact]]) — the throttle
     * contract as a per-call result rather than process-wide state, so
-    * overlapping maintenance passes (e.g. per-table maintenance under
-    * `runAllConcurrentFrom`) each report their own bound truthfully.
+    * overlapping maintenance passes (e.g. per-table maintenance under a
+    * pooled [[graft.etl.EtlRunner.runAllFrom]]) each report their own bound
+    * truthfully.
     */
   final case class Stats(filesBefore: Int, filesAfter: Int, bytes: Long,
       peakParallel: Int = 1)
@@ -280,20 +281,7 @@ object Compaction {
     // the r7 shape recursed with the same maxParallel inside each pooled
     // task, multiplying the limit to maxParallel² on a q=/qb= store.
     // maxParallel=1 keeps the original sequential behavior.
-    val all: Seq[Stats] =
-      if (maxParallel <= 1 || leafDirs.length <= 1) leafDirs.map(one)
-      else {
-        val pool = java.util.concurrent.Executors
-          .newFixedThreadPool(math.min(maxParallel, leafDirs.length))
-        try {
-          import scala.jdk.CollectionConverters._
-          val tasks = leafDirs.map(dir =>
-            new java.util.concurrent.Callable[Stats] {
-              override def call(): Stats = one(dir)
-            })
-          pool.invokeAll(tasks.asJava).asScala.toSeq.map(_.get())
-        } finally { pool.shutdown(); () }
-      }
+    val all = Bounded.map(leafDirs, maxParallel)(one)
     Stats(all.map(_.filesBefore).sum, all.map(_.filesAfter).sum,
       all.map(_.bytes).sum, math.max(1, peakLeaves.get()))
   }

@@ -558,32 +558,4 @@ final class ManifestLog(spark: SparkSession, path: String) {
         p.getName.stripPrefix("_refresh-").toLong != keep)
         fs.delete(p, false)
     }
-
-  // ---- legacy migration ----------------------------------------------------
-
-  /** One-time upgrade from the pre-r9 layout (a plain parquet dir swapped
-    * whole per drain): the legacy rows become the log's first delta, then
-    * the legacy data files are removed from the root. Ordering keeps a
-    * complete manifest readable at every instant — a crash after the delta
-    * commit but before the cleanup leaves both present, and the next call
-    * skips the re-commit (a delta already exists) and finishes the cleanup.
-    * Steady-state cost is one `exists` check once migrated.
-    */
-  def migrateLegacy(): Unit = {
-    Compaction.recover(spark, path) // finish a crashed LEGACY full-swap first
-    val rootSuccess = new Path(root, "_SUCCESS")
-    if (!fs.exists(rootSuccess)) return
-    val legacyFiles = fs.listStatus(root).filter(st =>
-      st.isFile && st.getPath.getName.endsWith(".parquet"))
-      .map(_.getPath.toString).toIndexedSeq
-    if (legacyFiles.nonEmpty && deltaSeqs.isEmpty && ckptUpto < 0) {
-      val legacy = spark.read
-        .schema(DriverParquet.schema(conf, fs.getFileStatus(new Path(legacyFiles.head))))
-        .parquet(legacyFiles: _*)
-      commitDelta(legacy, Seq.empty)
-    }
-    legacyFiles.foreach(f => fs.delete(new Path(f), false))
-    fs.delete(rootSuccess, false)
-    ()
-  }
 }

@@ -482,6 +482,91 @@ class CrashConsistencySpec extends SparkSpec {
     assert(aborted >= 10, s"only $aborted/${picks.size} trials aborted")
   }
 
+  test("crash-fuzz through the pooled executor: a journaled drain at maxParallel = 2 aborted at every copy-phase fault point converges on re-run to the never-crashed twin") {
+    import graft.sources.{FaultPoints, IngestLog}
+    val root = Files.createTempDirectory("graft-fuzz-pool").toString
+    def stage(name: String, months: Seq[Long]): String = {
+      val d = s"$root/stage-$name"
+      months.map(m =>
+          spark.range(40).select(lit(m).as("month_sid"), col("id").as("payload")))
+        .reduce(_ unionByName _)
+        .repartitionByRange(2, col("month_sid"))
+        .sortWithinPartitions("month_sid").write.parquet(d)
+      d
+    }
+    val w1 = stage("w1", Seq(199501L, 199502L))
+    val w2 = stage("w2", Seq(199503L, 199504L, 199505L, 199506L, 199507L))
+    def land(stageDir: String, lake: String, prefix: String): Seq[String] = {
+      Files.createDirectories(java.nio.file.Paths.get(lake))
+      new java.io.File(stageDir).listFiles().toSeq
+        .filter(_.getName.endsWith(".parquet")).map { f =>
+          val dst = java.nio.file.Paths.get(lake, prefix + f.getName)
+          Files.copy(f.toPath, dst); dst.toString
+        }
+    }
+    val cfg = graft.etl.JobConfig(tableName = "t", numMappers = 1,
+      outputFileFormat = "parquet", manifestCheckpointEvery = 2)
+    def drain(tag: String, job: graft.etl.IncrementalBackup): Seq[Long] =
+      job.runPrunedIncremental(s"$root/$tag/lake", maxParallel = 2)
+    // drain 1 copies wave 1; wave 2 (five months) waits for the fuzzed drain
+    def runSetup(tag: String): graft.etl.IncrementalBackup = {
+      val lake = s"$root/$tag/lake"
+      val job = new graft.etl.IncrementalBackup(spark, cfg,
+        new graft.etl.StatusStore(spark, s"$root/$tag/status"), s"$root/$tag/dest")
+      IngestLog.record(spark, lake, land(w1, lake, "w1-"))
+      drain(tag, job)
+      IngestLog.record(spark, lake, land(w2, lake, "w2-"))
+      job
+    }
+    import spark.implicits._
+    def backMap(j: graft.etl.IncrementalBackup) = j.readBack()
+      .groupBy(col("pid").cast("long").as("m")).count()
+      .as[(Long, Long)].collect().toMap
+    def manifestNames(j: graft.etl.IncrementalBackup) =
+      j.readManifest().select("file").as[String].collect()
+        .map(f => new Path(f).getName).toSet
+    val twin = runSetup("twin")
+    assert(drain("twin", twin).size == 5)
+    val wantBack = backMap(twin)
+    val wantManifest = manifestNames(twin)
+
+    // the fault domain, discovered by a counting dry run; the handler runs
+    // on pool threads, so the record is thread-safe
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val dry = runSetup("dry")
+    FaultPoints.install(name => { seen.add(name); () })
+    try drain("dry", dry) finally FaultPoints.clear()
+    import scala.jdk.CollectionConverters._
+    val domain = seen.asScala.toIndexedSeq
+    // everything before the first copy runs on the caller's thread in a
+    // fixed order; from there on every occurrence is a pooled copy's
+    val firstCopy = domain.indexWhere(_.startsWith("drain.copy."))
+    assert(firstCopy > 0 && domain.drop(firstCopy).forall(_.startsWith("drain.copy.")),
+      s"unexpected fault domain: $domain")
+    val picks = firstCopy until domain.size
+    assert(picks.size >= 8, s"too few pooled fault occurrences: $domain")
+    picks.foreach { target =>
+      val tag = s"trial-$target"
+      val job = runSetup(tag)
+      val n = new java.util.concurrent.atomic.AtomicInteger(0)
+      FaultPoints.install { name =>
+        if (n.getAndIncrement() == target)
+          throw new RuntimeException(s"injected@$name#$target")
+      }
+      val crashed =
+        try { drain(tag, job); false }
+        catch { case e: RuntimeException if e.getMessage.startsWith("injected@") => true }
+        finally FaultPoints.clear()
+      assert(crashed, s"$tag: the pooled drain did not surface the injected fault")
+      drain(tag, job)
+      assert(drain(tag, job).isEmpty, s"$tag: drain not quiescent after recovery")
+      assert(backMap(job) == wantBack, s"$tag: read-back diverged")
+      assert(manifestNames(job) == wantManifest, s"$tag: manifest diverged")
+      assert(new graft.etl.StatusStore(spark, s"$root/$tag/status")
+        .pending("t").isEmpty, s"$tag: pending units left")
+    }
+  }
+
   test("IvfStore: a crashed cluster-leaf swap is recovered by compact; rows and probe results preserved") {
     val dir = Files.createTempDirectory("graft-crash-ivfc").toString
     val emb = Tables.embeddings(spark, sf)

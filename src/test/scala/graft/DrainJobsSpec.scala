@@ -116,6 +116,25 @@ class DrainJobsSpec extends SparkSpec {
     assert(idle.isEmpty && idleJobs == 0, s"idle after the due drain ran $idleJobs jobs")
   }
 
+  test("relation drain job gate: run over a 3-month relation runs 5 Spark jobs; an idle re-run runs 2") {
+    val tmp = Files.createTempDirectory("graft-reljobs").toString
+    val lake = s"$tmp/lake"
+    spark.range(90).select((lit(199501L) + col("id") % 3).as("month_sid"),
+        col("id").as("payload"))
+      .repartitionByRange(3, col("month_sid")).write.parquet(lake)
+    val source = spark.read.parquet(lake)
+    val job = new IncrementalBackup(spark,
+      JobConfig(tableName = "t", numMappers = 1, outputFileFormat = "parquet"),
+      new StatusStore(spark, s"$tmp/status"), s"$tmp/dest")
+    val (copied, jobs) = jobsOf(job.run(source))
+    assert(copied == Seq(199501L, 199502L, 199503L))
+    // the discovery distinct (shuffle + result) and one write per month:
+    // the loop itself adds no job per copy
+    assert(jobs == 5, s"a 3-month relation drain ran $jobs Spark jobs")
+    val (again, againJobs) = jobsOf(job.run(source))
+    assert(again.isEmpty && againJobs == 2, s"an idle relation drain ran $againJobs jobs")
+  }
+
   /** Executed-plan trees (inner children included) of every file write
     * that `f` runs.
     */
@@ -190,7 +209,7 @@ class DrainJobsSpec extends SparkSpec {
           (EtlRunner.RelationSource(df): EtlRunner.EtlSource)
       }
       val before = spark.conf.getAll
-      val out = EtlRunner.runAllConcurrentFrom(spark, tmp, jobs, maxParallel = 3)
+      val out = EtlRunner.runAllFrom(spark, tmp, jobs, maxParallel = 3)
       assert(out.values.forall(_.exists(_.size == 3)), out.toString)
       assert(spark.conf.getAll == before)
     }

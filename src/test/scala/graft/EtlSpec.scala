@@ -108,7 +108,7 @@ class EtlSpec extends SparkSpec {
       spark, s"$tmp/src", Seq("pid" -> job.pidCol(spark.read.parquet(s"$tmp/src"))))
     job.copyPartitionPruned(s"$tmp/src", stats, first)
 
-    val copied = job.runPrunedConcurrent(s"$tmp/src", maxParallel = 6)
+    val copied = job.runPruned(s"$tmp/src", maxParallel = 6)
     assert(copied.toSet == allMonths - first)
     assert(store.pending("orders").count() == 0)
     // read-back equals the source exactly (per-month row counts)
@@ -119,7 +119,7 @@ class EtlSpec extends SparkSpec {
       .count().as[(Long, Long)].collect().toMap
     assert(got == want)
     // idempotent re-entry: nothing pending, nothing copied
-    assert(job.runPrunedConcurrent(s"$tmp/src", maxParallel = 6).isEmpty)
+    assert(job.runPruned(s"$tmp/src", maxParallel = 6).isEmpty)
   }
 
   test("incremental manifest: append is a no-op on an unchanged dir, scans only new files, drops dead ones; two-wave drain matches source") {
@@ -1015,7 +1015,7 @@ class EtlSpec extends SparkSpec {
     }
     // BOTH axes at once: 2 tables in flight, each month-draining through
     // the persisted-manifest pruned path with a 4-wide copy pool
-    val out = EtlRunner.runAllConcurrentFrom(spark, s"$dir/work", jobs,
+    val out = EtlRunner.runAllFrom(spark, s"$dir/work", jobs,
       maxParallel = 2)
     // the sequential runner over the SAME configs is the reference result
     val seq = EtlRunner.runAllFrom(spark, s"$dir/work-seq", jobs)
@@ -1036,7 +1036,7 @@ class EtlSpec extends SparkSpec {
         s"$t: concurrent at-rest data diverged from sequential")
     }
     // idempotent re-entry through the same concurrent path
-    val again = EtlRunner.runAllConcurrentFrom(spark, s"$dir/work", jobs,
+    val again = EtlRunner.runAllFrom(spark, s"$dir/work", jobs,
       maxParallel = 2)
     assert(again.values.forall(_.exists(_.isEmpty)), again.toString)
   }
@@ -1062,7 +1062,7 @@ class EtlSpec extends SparkSpec {
     // without a budget the bound is 2 tables x 4 = 8 jobs; the shared
     // slot pool must cap the FLEET at 3 while both pools stay 4-wide
     val slots = new graft.etl.JobSlots(3)
-    val out = EtlRunner.runAllConcurrentFrom(spark, s"$dir/work", jobs,
+    val out = EtlRunner.runAllFrom(spark, s"$dir/work", jobs,
       maxParallel = 2, Some(slots))
     assert(slots.peak.get() <= 3,
       s"budget exceeded: ${slots.peak.get()} copy jobs in flight")

@@ -76,23 +76,6 @@ class ManifestLogSpec extends SparkSpec {
     assert(log.refreshCount == 0L)
   }
 
-  test("legacy migration: a pre-r9 flat manifest becomes the first delta; re-entry after a partial migration completes it") {
-    val dir = Files.createTempDirectory("graft-mlog4").toString
-    val m = s"$dir/m"
-    rows(("/old1.parquet", 3L, 1L, 1L), ("/old2.parquet", 4L, 2L, 2L))
-      .coalesce(1).write.parquet(m) // the legacy layout: flat parquet + _SUCCESS
-    val log = new ManifestLog(spark, m)
-    log.migrateLegacy()
-    assert(files(log) == Set("/old1.parquet", "/old2.parquet"))
-    // no legacy parquet remains at the root; re-running is a no-op
-    val fs = new org.apache.hadoop.fs.Path(m)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(!fs.listStatus(new org.apache.hadoop.fs.Path(m))
-      .exists(st => st.isFile && st.getPath.getName.endsWith(".parquet")))
-    log.migrateLegacy()
-    assert(files(log) == Set("/old1.parquet", "/old2.parquet"))
-  }
-
   test("bucketed checkpoint: localizedPruned reads only intersecting buckets, folds identically to current(), and tombstones/re-adds shadow inside the localized view") {
     val dir = Files.createTempDirectory("graft-mlog5").toString
     val log = new ManifestLog(spark, s"$dir/m")

@@ -63,9 +63,10 @@ class OperatorsSpec extends SparkSpec {
 
   test("EtlRunner drives a fact + dim config sequence like run_sqoop_job.sh") {
     val tmp = Files.createTempDirectory("graft-runner").toString
-    val out = EtlRunner.runAll(spark, tmp, Seq(
+    val out = EtlRunner.runAllFrom(spark, tmp, Seq(
       JobConfig(tableName = "orders", numMappers = 2) -> Tables.orders(spark, sf),
-      JobConfig(tableName = "nation", primaryId = "") -> Tables.nation(spark, sf)))
+      JobConfig(tableName = "nation", primaryId = "") -> Tables.nation(spark, sf))
+      .map { case (cfg, df) => cfg -> (EtlRunner.RelationSource(df): EtlRunner.EtlSource) })
     assert(out("orders").exists(_.nonEmpty))
     assert(out("nation").contains(Seq(0L)))
     assert(spark.read.orc(s"$tmp/data/orders").count() ==
@@ -78,10 +79,11 @@ class OperatorsSpec extends SparkSpec {
     // (None) exactly like the sequential one — lock semantics unchanged
     val held = new JobLock(spark, s"$tmp/locks/customer.lock")
     assert(held.acquire())
-    val out = EtlRunner.runAllConcurrent(spark, tmp, Seq(
+    val out = EtlRunner.runAllFrom(spark, tmp, Seq(
       JobConfig(tableName = "orders", numMappers = 2) -> Tables.orders(spark, sf),
       JobConfig(tableName = "nation", primaryId = "") -> Tables.nation(spark, sf),
-      JobConfig(tableName = "customer", primaryId = "") -> Tables.customer(spark, sf)),
+      JobConfig(tableName = "customer", primaryId = "") -> Tables.customer(spark, sf))
+      .map { case (cfg, df) => cfg -> (EtlRunner.RelationSource(df): EtlRunner.EtlSource) },
       maxParallel = 3)
     held.release()
     assert(out("orders").exists(_.nonEmpty))
