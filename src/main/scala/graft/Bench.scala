@@ -9,7 +9,7 @@ import org.apache.spark.sql.SparkSession
   * pressure, heap/metaspace growth, GC debt) the r4 post-mortem first
   * identified. The fix is structural, not a bigger knob: the suite is
   * SPLIT INTO SECTIONS, EACH TIMED IN A FRESH CHILD JVM (batch queries in
-  * chunks of ≤ [[chunkSize]], the streaming drains, the RocksDB backend
+  * chunks of ≤ `chunkSize`, the streaming drains, the RocksDB backend
   * axis), so no query's timing can depend on how many unrelated queries
   * ran before it. The parent merges the per-section results, runs the
   * plan-fingerprint and state-equivalence gates, and prints the one-line

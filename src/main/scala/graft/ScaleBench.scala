@@ -290,7 +290,7 @@ object ScaleBench {
         val mid = months(months.length / 2)
         job.discover(src)
         val stats = graft.sources.StatsStore.collectExpr(
-          spark, srcDir, Seq("pid" -> job.pidCol(src))).cache()
+          spark, srcDir, Seq("pid" -> job.pidKey(src.schema))).cache()
         stats.count()
         val nPruned = job.prunedFiles(stats, mid).size
         val nTotal = src.inputFiles.length
@@ -505,8 +505,7 @@ object ScaleBench {
         } finally st.close()
       }
       def probe(histDir: String): (Double, Long, Long, Double) = {
-        val pid = Seq("pid" -> graft.operators.ReferenceOps
-          .monthSid(col("o_orderdate")))
+        val pid = Seq("pid" -> graft.sources.StatsStore.Key.MonthOf("o_orderdate"))
         // steady state: manifest persisted, read back cold
         graft.sources.StatsStore.collectExpr(spark, histDir, pid)
           .coalesce(1).write.parquet(s"$histDir-manifest")

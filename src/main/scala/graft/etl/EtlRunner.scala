@@ -15,7 +15,7 @@ import graft.sources.Bounded
 object EtlRunner {
 
   /** What a table's copy reads: a bound relation (the reference's
-    * warehouse-table shape — every operator sees a [[DataFrame]]) or a
+    * warehouse-table shape — every operator sees a `DataFrame`) or a
     * LAKE directory, which additionally unlocks the manifest-pruned
     * incremental drain ([[JobConfig.pruned]]) and within-table copy
     * concurrency ([[JobConfig.maxParallel]]) — both config-selected, so

@@ -9,6 +9,7 @@ import org.apache.spark.sql.types.StructType
 
 import graft.operators.{JobLock, ReferenceOps}
 import graft.sources.{Bounded, FaultPoints, IngestLog, ManifestLog, OrcSink, StatsStore}
+import graft.sources.StatsStore.Key
 
 /** The reference's whole job, Spark-first: incremental partition-by-partition
   * copy of a warehouse table to tuned columnar files, with restartable
@@ -40,9 +41,20 @@ final class IncrementalBackup(
   def pidCol(df: DataFrame): Column = pidColOf(df.schema)
 
   private def pidColOf(schema: StructType): Column =
-    if (cfg.primaryId == "month_sid" && !schema.fieldNames.contains("month_sid"))
-      ReferenceOps.monthSid(col("o_orderdate")) // testdata stand-in: derive from order date
+    if (derivedPid(schema)) ReferenceOps.monthSid(col("o_orderdate"))
     else col(cfg.primaryId)
+
+  /** The pid as a stats key of the manifest: the same value as
+    * [[pidCol]], stated by shape so file stats come from parquet footers.
+    */
+  def pidKey(schema: StructType): Key =
+    if (derivedPid(schema)) Key.MonthOf("o_orderdate") else Key.Stored(cfg.primaryId)
+
+  /** Is the pid derived from the order date? The testdata stand-in for a
+    * stored `month_sid` column.
+    */
+  private def derivedPid(schema: StructType): Boolean =
+    cfg.primaryId == "month_sid" && !schema.fieldNames.contains("month_sid")
 
   /** The lake's schema, bound at most once per drain and only when a read
     * of lake files needs it: `bind` (a one-file sample's footer, or the
@@ -58,7 +70,7 @@ final class IncrementalBackup(
     def read(files: Seq[String]): DataFrame =
       spark.read.schema(schema).option("basePath", path).parquet(files: _*)
 
-    def derived: Seq[(String, Column)] = Seq("pid" -> pidColOf(schema))
+    def keys: Seq[(String, Key)] = Seq("pid" -> pidKey(schema))
   }
 
   /** One partition's slice of `df` — the `WHERE pid = v` of the reference
@@ -75,9 +87,8 @@ final class IncrementalBackup(
     */
   def pidSlice(df: DataFrame, pid: Long): DataFrame = {
     val base = df.filter(pidCol(df) === lit(pid))
-    val derived = cfg.primaryId == "month_sid" && !df.columns.contains("month_sid")
     val mm = pid % 100
-    if (!derived || pid < 100L || mm < 1 || mm > 12) base
+    if (!derivedPid(df.schema) || pid < 100L || mm < 1 || mm > 12) base
     else {
       val y = pid / 100
       val (ny, nm) = if (mm == 12) (y + 1, 1L) else (y, mm + 1)
@@ -145,14 +156,15 @@ final class IncrementalBackup(
 
   /** Distinct pids present in `df` minus the recorded set, oldest first —
     * subtracted on the driver (both are partition lists, small by
-    * construction). The newest-N exclusion is applied at copy time
-    * ([[deferredFrom]]), so the reference operator's rank window would
-    * filter nothing here.
+    * construction). A null pid is no unit: no copy's `pid = v` slice holds
+    * its rows, so it is skipped. The newest-N exclusion is applied at copy
+    * time ([[deferredFrom]]), so the reference operator's rank window
+    * would filter nothing here.
     */
   private def unrecordedIn(df: DataFrame, recorded: Set[Long]): Seq[Long] = {
     import spark.implicits._
     df.select(pidCol(df).as("month_sid")).distinct()
-      .as[Long].collect().filterNot(recorded).toSeq.sorted
+      .as[Option[Long]].collect().flatten.filterNot(recorded).toSeq.sorted
   }
 
   /** The tail every discovery shares: record `pendingNew` as pending, then
@@ -316,50 +328,61 @@ final class IncrementalBackup(
       found
     }
 
-  /** The files [[discoverPruned]] must scan: those whose manifest interval
-    * may hold an unrecorded pid. Steady state this is exactly the new
-    * wave's files (history's months are all recorded), and a drain with
-    * nothing new scans NOTHING. Driver cost ∝ the rows of the `stats` view
+  /** The files whose manifest interval may hold an unrecorded pid — the
+    * candidates of [[discoverPruned]]. Steady state this is exactly the
+    * new wave's files (history's months are all recorded), and a drain
+    * with nothing new has none. Driver cost ∝ the rows of the `stats` view
     * GIVEN — the drain passes a bucket-localized view
-    * ([[ManifestLog.localizedPruned]]), so at steady state the filter
-    * touches only delta rows, however long history is. Exposed so specs
-    * can assert the read set.
+    * ([[graft.sources.ManifestLog.localizedPruned(keep:(Long,Long)=>Boolean)*]]),
+    * so at steady state the filter touches only delta rows, however long
+    * history is. Exposed so specs can assert the candidate set.
     */
   def discoveryFiles(stats: DataFrame): Seq[String] =
-    discoveryFilesWith(stats, tableRows().map(_.primaryPartitionValue).toSet)
+    candidates(stats, tableRows().map(_.primaryPartitionValue).toSet).map(_._1)
 
-  private def discoveryFilesWith(stats: DataFrame,
-      recorded: Set[Long]): Seq[String] =
-    stats.select(col("file"), col("min_pid"), col("max_pid")).collect()
-      .filter(r => !r.isNullAt(1) &&
-        mayHoldUnrecorded(r.getLong(1), r.getLong(2), recorded))
-      .map(_.getString(0)).toSeq
+  /** `(file, min_pid, max_pid)` of each [[discoveryFiles]] candidate. A
+    * zero-row file has null bounds and is never one.
+    */
+  private def candidates(stats: DataFrame,
+      recorded: Set[Long]): Seq[(String, Long, Long)] =
+    stats.select(col("file"), col("min_pid"), col("max_pid")).collect().toSeq
+      .collect { case r if !r.isNullAt(1) &&
+          mayHoldUnrecorded(r.getLong(1), r.getLong(2), recorded) =>
+        (r.getString(0), r.getLong(1), r.getLong(2)) }
 
   /** [[discover]] with the MANIFEST as the file filter — the last piece of
     * drain fixed cost that still grew with history (the pid-column scan
-    * over the whole lake, documented as "unavoidable" in [[runPruned]]).
-    * Exact: an unrecorded month must appear in SOME file whose
-    * [min_pid, max_pid] interval contains an unrecorded candidate, so
-    * scanning only [[discoveryFiles]] yields precisely the full scan's
-    * distinct-minus-recorded set; results are identical by construction
-    * and spec-asserted against [[ReferenceOps.discoverPendingPartitions]].
-    * `skipLatestMonths > 0` does not defeat the pruning: discovery records
-    * every present month and the newest-N exclusion is applied at copy
-    * time from the status journal ([[deferredFrom]]), so the scan set here
-    * stays exactly "files that may hold an unrecorded month" — EMPTY on an
-    * up-to-date drain — under any skip. Only snapshot mode falls back to
-    * the full [[discover]].
+    * over the whole lake). Exact: an unrecorded month must appear in SOME
+    * file whose [min_pid, max_pid] interval contains an unrecorded
+    * candidate, so only [[discoveryFiles]] can contribute one. A
+    * candidate whose interval is a single pid (it has rows, so that pid is
+    * present) contributes it straight from the manifest, with no read;
+    * only candidates spanning several pids are read, by one distinct over
+    * just those files. Steady state a landed month is one file of one
+    * month, so discovery runs no Spark job. The result is the full scan's
+    * distinct-minus-recorded set (spec-asserted against
+    * `ReferenceOps.discoverPendingPartitions`); a null pid is skipped on
+    * both routes. `skipLatestMonths > 0` does not defeat the pruning:
+    * discovery records every present month and the newest-N exclusion is
+    * applied at copy time from the status journal (`deferredFrom`), so
+    * the candidates stay exactly "files that may hold an unrecorded month"
+    * — none on an up-to-date drain — under any skip. Only snapshot mode
+    * falls back to the full [[discover]].
     */
   def discoverPruned(sourcePath: String, stats: DataFrame): Seq[Long] =
     if (cfg.isFullSnapshot) discover(spark.read.parquet(sourcePath))
     else discoverPrunedWith(sampledLake(sourcePath, stats), stats)
 
+  /** [[discoverPruned]] over a bound lake schema: single-pid candidates
+    * from their intervals, the rest by a distinct over their files.
+    */
   private def discoverPrunedWith(lake: LakeSchema, stats: DataFrame): Seq[Long] = {
     val recorded = tableRows().map(_.primaryPartitionValue)
     val rec = recorded.toSet
-    val files = discoveryFilesWith(stats, rec)
-    record(recorded,
-      if (files.isEmpty) Seq.empty else unrecordedIn(lake.read(files), rec))
+    val (onePid, spanning) = candidates(stats, rec).partition { case (_, lo, hi) => lo == hi }
+    val scanned =
+      if (spanning.isEmpty) Seq.empty else unrecordedIn(lake.read(spanning.map(_._1)), rec)
+    record(recorded, (onePid.map(_._2) ++ scanned).distinct.sorted)
   }
 
   /** [[copyPartition]] for a LAKE-resident source: instead of filtering a
@@ -412,14 +435,10 @@ final class IncrementalBackup(
   def runPruned(sourcePath: String, maxParallel: Int = 1): Seq[Long] = {
     val source = spark.read.parquet(sourcePath)
     val lake = new LakeSchema(sourcePath, source.schema)
-    val stats = StatsStore
-      .collectExpr(spark, sourcePath, Seq("pid" -> pidCol(source)))
-      .cache()
-    // pooled copies: materialize once; worker threads only re-read the cache
-    if (maxParallel > 1) { stats.count(); () }
+    // a driver-local relation: pooled copies share it without a cache
+    val stats = StatsStore.collectExpr(spark, sourcePath, lake.keys)
     if (cfg.isFullSnapshot) discover(source) else discoverPrunedWith(lake, stats)
-    try drain(copyablePending(), maxParallel, None)(writePruned(lake, stats, _))
-    finally { stats.unpersist(); () }
+    drain(copyablePending(), maxParallel, None)(writePruned(lake, stats, _))
   }
 
   /** Where the persisted manifest lives: next to the table's backup dirs,
@@ -429,7 +448,7 @@ final class IncrementalBackup(
 
   /** The drain lock guarding [[runPrunedIncremental]] — the manifest log
     * and ingest-journal watermark are single-writer stores, and before r10
-    * only [[EtlRunner.runOne]] enforced that (a direct API caller could
+    * only `EtlRunner.runOne` enforced that (a direct API caller could
     * race a runner: the delta-seq race fails loudly, but interleaved
     * refresh/wave markers skew the checkpoint cadence silently). Lives
     * beside the manifest so every caller that can reach the same log
@@ -499,13 +518,11 @@ final class IncrementalBackup(
       // the scan did see is an empty diff; missing them is impossible).
       val headPre = IngestLog.waves(spark, sourcePath).maxOption.getOrElse(-1L)
       gauges.fullListings += 1
-      val source = spark.read.parquet(sourcePath)
-      val derived = Seq("pid" -> pidCol(source))
-      val full = StatsStore.collectExpr(spark, sourcePath, derived)
-      log.commitDelta(full, Seq.empty)
+      val lake = new LakeSchema(sourcePath, spark.read.parquet(sourcePath).schema)
+      log.commitDelta(StatsStore.collectExpr(spark, sourcePath, lake.keys), Seq.empty)
       log.setWaveWatermark(headPre)
       log.checkpoint()
-      (log, new LakeSchema(sourcePath, source.schema))
+      (log, lake)
     } else {
       // journal head BEFORE any listing/scan (both branches) — see above
       val headPre = IngestLog.waves(spark, sourcePath).maxOption.getOrElse(-1L)
@@ -525,7 +542,7 @@ final class IncrementalBackup(
         // only fresh/dead paths reach the driver; the lake schema is bound
         // only when a fresh file needs stats (a lake emptied outside the
         // journal has no file to bind it from)
-        val diff = StatsStore.collectExprDiff(spark, sourcePath, lake.derived,
+        val diff = StatsStore.collectExprDiff(spark, sourcePath, lake.keys,
           log.current().get, None, Some(lake.schema))
         log.commitDelta(diff.adds, diff.dead)
         if (journal) {
@@ -547,7 +564,7 @@ final class IncrementalBackup(
         val fresh = waveFiles.filterNot(log.coveredByLiveDeltas(waveFiles))
         if (fresh.nonEmpty)
           log.commitDelta(
-            StatsStore.statsForFiles(spark, sourcePath, lake.derived, fresh,
+            StatsStore.statsForFiles(spark, sourcePath, lake.keys, fresh,
               Some(lake.schema)),
             Seq.empty)
         FaultPoints.hit("drain.journal.consumed")
@@ -619,8 +636,9 @@ final class IncrementalBackup(
     * superset guarantee); only the fixed cost per drain stops growing with
     * history — including DRIVER memory, which since r10 holds only the
     * checkpoint buckets intersecting unrecorded/pending months plus live
-    * deltas ([[ManifestLog.localizedPruned]]; [[gauges]] reports the
-    * counts). Serialized per table by [[drainLockPath]]: the manifest log
+    * deltas
+    * ([[graft.sources.ManifestLog.localizedPruned(keep:(Long,Long)=>Boolean)*]];
+    * [[gauges]] reports the counts). Serialized per table by [[drainLockPath]]: the manifest log
     * is single-writer, and a second concurrent caller fails loudly instead
     * of skewing the log's markers.
     */

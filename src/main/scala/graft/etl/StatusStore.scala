@@ -2,7 +2,7 @@ package graft.etl
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoders, Row, SparkSession}
 
 import graft.sources.DriverParquet
 
@@ -38,35 +38,23 @@ final case class BackupStatus(
   * cache keyed by the generation name (an external writer lands a new
   * generation, so the key check detects it); a cache miss — the first
   * read of every fresh instance, i.e. once per drain — decodes the
-  * generation's parquet file with [[DriverParquet]], which reads both the
-  * INT64-micros timestamps [[writeGen]] emits and the INT96 timestamps of
-  * Spark-written generations. Writes emit the parquet file with
-  * parquet-hadoop's example API, in the layout Spark's writer produces
-  * (one part file + `_SUCCESS`), so the swap protocol — temp generation
-  * dir, `_SUCCESS`, pointer swap, generation GC — and the crash-recovery
-  * contract ([[latestCompleteGen]]) hold for generations of either writer.
+  * generation's parquet file with [[graft.sources.DriverParquet]], which
+  * reads both the INT64-micros timestamps its writer emits and the INT96
+  * timestamps of Spark-written generations. Writes go through
+  * `DriverParquet.write`, in the layout Spark's writer produces (one part
+  * file + `_SUCCESS`), so the swap protocol — temp generation dir,
+  * `_SUCCESS`, pointer swap, generation GC — and the crash-recovery
+  * contract (`latestCompleteGen`) hold for generations of either writer.
   */
 final class StatusStore(spark: SparkSession, path: String) {
   import spark.implicits._
 
-  /** PRIVATE (non-cached) FileSystem instance with write checksums off
-    * (r12, guide §6: the store's writes are KB-sized METADATA mutations
-    * whose cost is fs operations, not bytes — on a checksummed local fs
-    * every created file spawns a `.crc` sibling, doubling the creates per
-    * generation write; measured ~5 ms per create on this host, ~3 creates
-    * per [[writeRows]]). `newInstance` keeps the setting off the
-    * JVM-shared cached FileSystem that Spark's own jobs use; delete/rename
-    * still clean up `.crc` siblings left by older writers, and readers
-    * (parquet-hadoop here, `spark.read` outside the store) skip
-    * verification when no checksum file exists, so mixed-generation stores
-    * are fine.
+  /** The store's writes are KB-sized metadata mutations: they go through
+    * the checksum-off FileSystem (`DriverParquet.metadataFs`), which creates
+    * no `.crc` sibling per file.
     */
-  private val fs = {
-    val f = org.apache.hadoop.fs.FileSystem.newInstance(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    f.setWriteChecksum(false)
-    f
-  }
+  private val fs = DriverParquet.metadataFs(
+    new org.apache.hadoop.fs.Path(path), spark.sparkContext.hadoopConfiguration)
   private val root = new org.apache.hadoop.fs.Path(path)
   private val pointer = new org.apache.hadoop.fs.Path(root, "_CURRENT")
 
@@ -162,30 +150,10 @@ final class StatusStore(spark: SparkSession, path: String) {
     */
   def read(): Dataset[BackupStatus] = spark.createDataset(rows())
 
-  /** Parquet schema of the status row, matching what Spark's own writer
-    * produced for `Dataset[BackupStatus]` (nullability per the product
-    * encoder; timestamps as INT64 micros, which Spark reads as
-    * TIMESTAMP — the pinned-UTC session makes the value identical to the
-    * previous INT96 encoding).
+  /** The status row's schema as Spark's product encoder gives it: strings
+    * and timestamps nullable, the primitive columns not.
     */
-  private def parquetSchema: org.apache.parquet.schema.MessageType = {
-    import org.apache.parquet.schema.{LogicalTypeAnnotation => L, Types}
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    import org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit
-    Types.buildMessage()
-      .optional(BINARY).as(L.stringType()).named("tableName")
-      .optional(BINARY).as(L.stringType()).named("hiveDb")
-      .optional(INT64).as(L.timestampType(true, TimeUnit.MICROS)).named("startDate")
-      .optional(INT64).as(L.timestampType(true, TimeUnit.MICROS)).named("endDate")
-      .optional(BINARY).as(L.stringType()).named("primaryPartitionColumn")
-      .required(INT64).named("primaryPartitionValue")
-      .required(BOOLEAN).named("isComplete")
-      .required(INT32).named("numMappers")
-      .named("spark_schema")
-  }
-
-  private def micros(t: Timestamp): Long =
-    org.apache.spark.sql.catalyst.util.DateTimeUtils.fromJavaTimestamp(t)
+  private val rowSchema = Encoders.product[BackupStatus].schema
 
   /** Write `rows` as one parquet file + `_SUCCESS` under `gen` — the same
     * at-rest layout `ds.coalesce(1).write.parquet` produced, minus the
@@ -194,44 +162,11 @@ final class StatusStore(spark: SparkSession, path: String) {
     * external `spark.read.parquet`) sees the identical row set.
     */
   private def writeGen(gen: String, rows: Seq[BackupStatus]): Unit = {
-    import org.apache.parquet.example.data.simple.SimpleGroupFactory
-    import org.apache.parquet.hadoop.example.ExampleParquetWriter
-    import org.apache.parquet.hadoop.metadata.CompressionCodecName
     val dir = new org.apache.hadoop.fs.Path(root, gen)
     fs.delete(dir, true)
-    fs.mkdirs(dir)
-    val file = new org.apache.hadoop.fs.Path(dir, s"part-00000-$gen.snappy.parquet")
-    val factory = new SimpleGroupFactory(parquetSchema)
-    // write through THIS instance's checksum-off fs (HadoopOutputFile would
-    // resolve the JVM-cached checksummed fs and emit a .crc sibling)
-    val sink = new org.apache.parquet.io.OutputFile {
-      private def open(overwrite: Boolean) =
-        org.apache.parquet.hadoop.util.HadoopStreams.wrap(fs.create(file, overwrite))
-      def create(blockSizeHint: Long) = open(false)
-      def createOrOverwrite(blockSizeHint: Long) = open(true)
-      def supportsBlockSize() = false
-      def defaultBlockSize() = 0L
-      override def getPath = file.toString
-    }
-    val w = ExampleParquetWriter.builder(sink)
-      .withType(parquetSchema)
-      .withCompressionCodec(CompressionCodecName.SNAPPY)
-      .build()
-    try rows.foreach { s =>
-      val g = factory.newGroup()
-      if (s.tableName != null) g.append("tableName", s.tableName)
-      if (s.hiveDb != null) g.append("hiveDb", s.hiveDb)
-      if (s.startDate != null) g.append("startDate", micros(s.startDate))
-      s.endDate.foreach(t => g.append("endDate", micros(t)))
-      if (s.primaryPartitionColumn != null)
-        g.append("primaryPartitionColumn", s.primaryPartitionColumn)
-      g.append("primaryPartitionValue", s.primaryPartitionValue)
-      g.append("isComplete", s.isComplete)
-      g.append("numMappers", s.numMappers)
-      w.write(g)
-    } finally w.close()
-    val ok = fs.create(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"), true)
-    ok.close()
+    DriverParquet.write(fs, dir, rowSchema, rows.map(s => Row(s.tableName, s.hiveDb,
+      s.startDate, s.endDate.orNull, s.primaryPartitionColumn, s.primaryPartitionValue,
+      s.isComplete, s.numMappers)))
   }
 
   /** Full-set overwrite with atomic pointer swap: readers see either the old

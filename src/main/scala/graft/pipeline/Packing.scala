@@ -74,7 +74,7 @@ object Packing {
     * wave-1 doc_id precedes every wave-2 doc_id within a shard (waves cut
     * by ingestion-ordered ids — the landing-directory reality), the union
     * of per-wave manifests is bit-identical to packing everything at once
-    * ([[PackingSpec]] asserts it). Cost: the same one hash shuffle as
+    * (`PackingSpec` asserts it). Cost: the same one hash shuffle as
     * [[packManifest]] plus a broadcast of the (≤ shards)-row totals.
     */
   def packAppend(newDocs: DataFrame, priorTokens: DataFrame, seqLen: Int,

@@ -5,24 +5,27 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.example.data.Group
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
 import org.apache.parquet.hadoop.api.{InitContext, ReadSupport}
-import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.schema.{LogicalTypeAnnotation => L, MessageType, Type}
+import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopStreams}
+import org.apache.parquet.io.OutputFile
+import org.apache.parquet.schema.{LogicalTypeAnnotation => L, MessageType, Type, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.types._
 
-/** Driver-side reader for the small flat parquet files of the ETL's own
-  * metadata stores (status generations, manifest deltas, bucketed manifest
-  * checkpoints) — the read-side counterpart of `StatusStore.writeGen`.
-  * `spark.read.parquet(dir).collect()` schedules a schema-inference job
-  * plus a scan job for a KB-sized file; at the per-drain cadence those
-  * jobs were the drain's fixed cost. This reads the same rows through
-  * parquet-hadoop's `ParquetReader` on the calling thread.
+/** Driver-side reader and writer for the small flat parquet files of the
+  * ETL's own metadata stores (status generations, manifest deltas, bucketed
+  * manifest checkpoints). `spark.read.parquet(dir).collect()` schedules a
+  * schema-inference job plus a scan job for a KB-sized file, and
+  * `df.coalesce(1).write.parquet(dir)` a write job; at the per-drain
+  * cadence those jobs were the drain's fixed cost. This reads and writes
+  * the same rows through parquet-hadoop on the calling thread.
   *
   * Values come back exactly as `spark.read.parquet(...).collect()` returns
   * them (all fields nullable, like every Spark file-source read), for the
@@ -30,9 +33,27 @@ import org.apache.spark.sql.types._
   * timestamps both as UTC-adjusted INT64 micros and as the INT96 Spark's
   * writer emits. Any other type (decimal, binary, date, nested, legacy
   * calendar-rebased timestamps, ...) fails loudly, naming the column —
-  * never a silently different value.
+  * never a silently different value. [[write]] emits the same types.
   */
 object DriverParquet {
+
+  private val metadataFss = new java.util.concurrent.ConcurrentHashMap[java.net.URI, FileSystem]()
+
+  /** The checksum-off FileSystem of `path`'s filesystem, one instance per
+    * filesystem URI, for the metadata stores. Their writes are KB-sized
+    * mutations whose cost is fs operations, not bytes: on a checksummed
+    * local fs every created file spawns a `.crc` sibling, doubling the
+    * creates. `newInstance` keeps the setting off the JVM-shared cached
+    * FileSystem that Spark's own jobs use. Deletes and renames still clean
+    * up `.crc` siblings left by older writers, and readers skip
+    * verification when no checksum file exists.
+    */
+  def metadataFs(path: Path, conf: Configuration): FileSystem =
+    metadataFss.computeIfAbsent(path.getFileSystem(conf).getUri, { uri =>
+      val fs = FileSystem.newInstance(uri, conf)
+      fs.setWriteChecksum(false)
+      fs
+    })
 
   /** Parquet data files directly under `dir`, in name order; names starting
     * with `_` or `.` (committer markers, checksums) are skipped, as Spark's
@@ -96,6 +117,67 @@ object DriverParquet {
     out.result()
   }
 
+  /** Write `rows` of `schema` into `dir` in the layout Spark's writer
+    * produces for one task: one snappy part file, then `_SUCCESS`. Types
+    * are those [[read]] decodes: string, boolean, int, long, double, and
+    * timestamps as UTC-adjusted INT64 micros. A nullable field is
+    * `optional` and a non-nullable one `required`, as Spark lays them out,
+    * so `read` and `spark.read.parquet` return `rows`. Any other type
+    * throws naming the column, before anything is written. The files are
+    * created through `fs`, so a [[metadataFs]] writes no `.crc` sibling.
+    */
+  def write(fs: FileSystem, dir: Path, schema: StructType, rows: Iterable[Row]): Unit = {
+    val (types, add) = schema.fields.toIndexedSeq.map(writeField).unzip
+    val message = new MessageType("spark_schema", types.asJava)
+    val file = new Path(dir, "part-00000.snappy.parquet")
+    // through `fs` itself: HadoopOutputFile would resolve the JVM-cached fs
+    val sink = new OutputFile {
+      private def open(overwrite: Boolean) = HadoopStreams.wrap(fs.create(file, overwrite))
+      def create(blockSizeHint: Long) = open(false)
+      def createOrOverwrite(blockSizeHint: Long) = open(true)
+      def supportsBlockSize() = false
+      def defaultBlockSize() = 0L
+      override def getPath = file.toString
+    }
+    val factory = new SimpleGroupFactory(message)
+    val w = ExampleParquetWriter.builder(sink).withType(message)
+      .withCompressionCodec(CompressionCodecName.SNAPPY).build()
+    try rows.foreach { r =>
+      val g = factory.newGroup()
+      add.indices.foreach { i =>
+        if (!r.isNullAt(i)) add(i)(g, i, r.get(i))
+        else if (!schema(i).nullable) throw new IllegalArgumentException(
+          s"column `${schema(i).name}` is not nullable, but a row holds null")
+      }
+      w.write(g)
+    } finally w.close()
+    fs.create(new Path(dir, "_SUCCESS"), true).close()
+  }
+
+  /** The parquet field of `f` and the appender of its non-null values. */
+  private def writeField(f: StructField): (Type, (Group, Int, Any) => Unit) = {
+    val rep = if (f.nullable) Type.Repetition.OPTIONAL else Type.Repetition.REQUIRED
+    def prim(t: org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName) =
+      Types.primitive(t, rep)
+    val (t, add) = f.dataType match {
+      case StringType =>
+        (prim(BINARY).as(L.stringType()), (g: Group, i: Int, v: Any) => g.add(i, v.asInstanceOf[String]))
+      case BooleanType => (prim(BOOLEAN), (g: Group, i: Int, v: Any) => g.add(i, v.asInstanceOf[Boolean]))
+      case IntegerType => (prim(INT32), (g: Group, i: Int, v: Any) => g.add(i, v.asInstanceOf[Int]))
+      case LongType => (prim(INT64), (g: Group, i: Int, v: Any) => g.add(i, v.asInstanceOf[Long]))
+      case DoubleType => (prim(DOUBLE), (g: Group, i: Int, v: Any) => g.add(i, v.asInstanceOf[Double]))
+      case TimestampType =>
+        (prim(INT64).as(L.timestampType(true, L.TimeUnit.MICROS)), (g: Group, i: Int, v: Any) =>
+          g.add(i, v match {
+            case ts: java.sql.Timestamp => DateTimeUtils.fromJavaTimestamp(ts)
+            case ts: java.time.Instant => DateTimeUtils.instantToMicros(ts)
+          }))
+      case other => throw new UnsupportedOperationException(
+        s"column `${f.name}`: type ${other.simpleString} is not supported by the driver writer")
+    }
+    (t.named(f.name), add)
+  }
+
   /** Group read support that projects to the requested columns and binds
     * their decoders once the reader opens the footer.
     */
@@ -124,7 +206,7 @@ object DriverParquet {
   /** Spark writer footer keys marking values rebased to the legacy hybrid
     * calendar; reading them would need the rebase Spark applies.
     */
-  private val legacyCalendarKeys =
+  private[sources] val legacyCalendarKeys =
     Set("org.apache.spark.legacyINT96", "org.apache.spark.legacyDateTime")
 
   /** The Spark schema of `m` and one value decoder per column. */

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{BooleanType, StructType}
 
 /** Log-structured manifest store — the lakehouse transaction-log idiom the
   * reference's status table embodies (`/root/reference/sqoop_table.py:143-145`
@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.StructType
   * checkpoint+deltas into a new checkpoint. Steady-state manifest WRITE
   * cost is therefore ∝ new files; the O(N) fold is paid 1/k of the time,
   * in one map-only pass: the live deltas (∝ new files, and read whole by
-  * every drain's [[localizedPruned]] anyway) are folded last-writer-wins
+  * every drain's `localizedPruned` anyway) are folded last-writer-wins
   * on the driver, and the checkpoint is streamed once, minus the rows
   * they shadow, into the new checkpoint — no join, window or broadcast.
   * Schemas are bound from parquet footers read on the driver, never
@@ -25,7 +25,7 @@ import org.apache.spark.sql.types.StructType
   * by a coarse range bucket of the first stats column
   * (`pb = floor(min_pid / 100)` — year granularity for yyyymm month keys)
   * and records a per-bucket `[min, max, rows]` summary beside it, so a
-  * drain's consumers ([[localizedPruned]]) open ONLY the buckets whose
+  * drain's consumers (`localizedPruned`) open ONLY the buckets whose
   * interval intersects what they are looking for. That closes the r9
   * verdict's last O(total-files) step: the per-drain DRIVER materialization
   * of the whole manifest (prior-localization, discovery, per-month
@@ -40,7 +40,8 @@ import org.apache.spark.sql.types.StructType
   *                 `pb=N/` parquet partitions, a `_upto-N` marker naming
   *                 the highest delta seq folded in, and a `_buckets`
   *                 per-bucket summary (one text line per bucket)
-  *   delta-N/      one small parquet dir: manifest rows + `tombstone` col
+  *   delta-N/      one small parquet dir, written on the driver: manifest
+  *                 rows + `tombstone` col
   *   _wave-N       ingest-journal watermark (see [[IngestLog]])
   *
   * Crash discipline: a delta is staged at `.delta-N.tmp` and published by
@@ -87,7 +88,8 @@ object ManifestLog {
 final class ManifestLog(spark: SparkSession, path: String) {
 
   private val root = new Path(path)
-  private val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  // checksum-off: the log's files are small metadata, created by the driver
+  private val fs = DriverParquet.metadataFs(root, spark.sparkContext.hadoopConfiguration)
   private def ckptPath = new Path(root, "checkpoint")
   private def deltaPath(seq: Long) = new Path(root, s"delta-$seq")
   private def conf = spark.sparkContext.hadoopConfiguration
@@ -242,7 +244,7 @@ final class ManifestLog(spark: SparkSession, path: String) {
   /** The folded manifest: checkpoint ∪ live deltas, last-writer-wins per
     * file, tombstoned files dropped — one row per file. None when the log
     * is empty. With no live delta this is the checkpoint relation itself
-    * (a fold's output); otherwise the map-only [[fold]].
+    * (a fold's output); otherwise the map-only `fold`.
     */
   def current(): Option[DataFrame] = {
     Compaction.recover(spark, ckptPath.toString)
@@ -292,7 +294,7 @@ final class ManifestLog(spark: SparkSession, path: String) {
   def localizedPruned(keep: (Long, Long) => Boolean): Localized =
     localizedPruned((mn, mx, _) => keep(mn, mx))
 
-  /** [[localizedPruned]] with the bucket's `shapeOk` flag exposed to the
+  /** [[localizedPruned(keep:(Long,Long)=>Boolean)*]] with the bucket's `shapeOk` flag exposed to the
     * predicate (third argument): true iff EVERY file interval in the bucket
     * has yyyymm-shaped bounds, so calendar-stepping consumers can fall back
     * to conservative integer semantics on mixed-shape buckets. Interval
@@ -384,18 +386,21 @@ final class ManifestLog(spark: SparkSession, path: String) {
 
   /** Append one delta: `adds` are full manifest rows for files that
     * appeared; `dead` are stored paths of files that vanished (tombstones).
-    * Staged at `.delta-N.tmp`, published by a single atomic rename — a
-    * crash before the rename leaves only invisible debris ([[gc]] clears
-    * it), a crash after it leaves a committed delta whose re-derivation on
-    * retry is an empty diff. Write size ∝ the diff, never the manifest.
-    * Returns the published seq, or None for an empty diff (no delta dir is
-    * created — idle drains append nothing).
+    * The delta is a handful of rows, and `adds` is a driver-local relation
+    * (`StatsStore` collects its stats), so the rows are collected and
+    * written on the driver (`DriverParquet.write`: one part file plus
+    * `_SUCCESS`) — no Spark job. Staged at `.delta-N.tmp`, published by a
+    * single atomic rename — a crash before the rename leaves only
+    * invisible debris ([[gc]] clears it), a crash after it leaves a
+    * committed delta whose re-derivation on retry is an empty diff. Write
+    * size ∝ the diff, never the manifest. Returns the published seq, or
+    * None for an empty diff (no delta dir is created — idle drains append
+    * nothing).
     */
   def commitDelta(adds: DataFrame, dead: Seq[String]): Option[Long] = {
-    val hasAdds = adds.head(1).nonEmpty
-    if (!hasAdds && dead.isEmpty) return None
-    val withT = adds.withColumn("tombstone", lit(false))
-    val schema = withT.schema
+    val added = adds.collect()
+    if (added.isEmpty && dead.isEmpty) return None
+    val schema = adds.schema.add("tombstone", BooleanType, nullable = false)
     // tombstone rows are built BY FIELD NAME (r10 verdict: the positional
     // `f +: tail` construction assumed `file` is physically first — true
     // for every current producer, but a reordered stats projection would
@@ -404,18 +409,16 @@ final class ManifestLog(spark: SparkSession, path: String) {
       Row.fromSeq(schema.fields.toSeq.map { fd =>
         fd.name match {
           case "file"      => f
-          case "tombstone" => java.lang.Boolean.TRUE
+          case "tombstone" => true
           case "n_rows"    => 0L
           case _           => null
         }
       })
     }
-    import scala.jdk.CollectionConverters._
-    val delta = withT.unionByName(spark.createDataFrame(tombs.asJava, schema))
     val seq = nextSeq
     val tmp = new Path(root, s".delta-$seq.tmp")
     fs.delete(tmp, true)
-    delta.coalesce(1).write.parquet(tmp.toString)
+    DriverParquet.write(fs, tmp, schema, added.map(r => Row.fromSeq(r.toSeq :+ false)) ++ tombs)
     FaultPoints.hit("manifest.delta.staged")
     Compaction.renameOrThrow(fs, tmp, deltaPath(seq))
     FaultPoints.hit("manifest.delta.published")
@@ -424,16 +427,16 @@ final class ManifestLog(spark: SparkSession, path: String) {
 
   /** Fold checkpoint + live deltas into a NEW checkpoint (atomic two-rename
     * swap), then GC the folded deltas. No-op when no delta is live. The
-    * fold is the map-only [[fold]]: the live deltas are folded on the
+    * fold is the map-only `fold`: the live deltas are folded on the
     * driver, and the checkpoint is streamed once, minus the rows they
     * shadow, straight into the new snapshot — the O(total-files) scan and
     * write stay distributed, paid once per `manifestCheckpointEvery`
     * drains. The snapshot is sharded from an upper bound on its rows (the
     * checkpoint's footer row counts plus the delta rows; ~2 M rows ≈
     * 50-100 MB parquet per task) and partitioned by the coarse
-    * [[bucketSpan]] bucket of the first stats column, with the per-bucket
+    * `bucketSpan` bucket of the first stats column, with the per-bucket
     * summary written beside it — the localization index
-    * [[localizedPruned]] prunes with. A fold to zero rows writes one
+    * [[localizedPruned(keep:(Long,Long)=>Boolean)*]] prunes with. A fold to zero rows writes one
     * schema-only file, so the manifest schema stays readable from a
     * footer.
     */
@@ -471,7 +474,7 @@ final class ManifestLog(spark: SparkSession, path: String) {
 
   /** One `pb \t min \t max \t rows \t shapeOk` line per bucket, written
     * inside the STAGED checkpoint dir (atomic with the snapshot). The row
-    * counts make [[localizedPruned]]'s gauge free; the intervals make
+    * counts make [[localizedPruned(keep:(Long,Long)=>Boolean)*]]'s gauge free; the intervals make
     * bucket skipping sound (every file interval in a bucket ⊆ the bucket's
     * summary interval, so an unselected bucket provably holds nothing the
     * consumer's predicate can match); the shape flag (1 iff EVERY interval

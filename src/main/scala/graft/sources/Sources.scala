@@ -45,7 +45,7 @@ object Sources {
     * `JDBCTableCatalog` compiles the aggregate to dialect SQL and, on an
     * unpartitioned read, executes it COMPLETELY warehouse-side (the plan
     * shows `PushedAggregates` and no row-level scan). Read tables as
-    * `spark.table(s"$name.<table>")`.
+    * `spark.table(s"\$name.<table>")`.
     *
     * Catalog instances are cached by name in the session's CatalogManager
     * after first resolution — callers must use a distinct `name` per URL.

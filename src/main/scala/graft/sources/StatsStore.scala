@@ -1,15 +1,41 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.time.{LocalDate, ZoneId, ZoneOffset}
+
+import scala.jdk.CollectionConverters._
+import scala.language.implicitConversions
+
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.column.statistics.Statistics
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.{ColumnPath, ParquetMetadata}
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.{LogicalTypeAnnotation => L, PrimitiveType, Type}
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{INT32, INT64}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.graftx.ParquetFooterSchema
+import org.apache.spark.sql.types._
+
+import graft.operators.ReferenceOps
 
 /** File-statistics store for data skipping — the manifest-pruning device of
-  * lakehouse table formats, built on public Spark primitives: one scan
-  * computes per-file (count, min, max) for the declared columns via
-  * `input_file_name()`, the manifest is persisted next to the data, and
-  * range reads consult the manifest to open only files whose interval
-  * intersects the predicate.
+  * lakehouse table formats, built on public Spark primitives: per data
+  * file, the row count and the `[min, max]` of each declared key; the
+  * manifest is persisted next to the data, and range reads consult it to
+  * open only files whose interval intersects the predicate.
+  *
+  * A file's stats come from its parquet footer, read on the driver: the
+  * row count, plus the key column's min and max over all row groups — no
+  * Spark job. That needs the key's shape ([[StatsStore.Key]]): a stored
+  * integer column, or the month of a stored date or timestamp column.
+  * A file whose footer cannot give a key's bounds (a row group without
+  * statistics, a key column the footer does not hold — a directory-derived
+  * partition column —, or a key that is any other expression) is
+  * aggregated instead: one scan of just those files computes per-file
+  * (count, min, max) via `input_file_name()`. Both paths give the same
+  * rows.
   *
   * Pairs with [[ZOrder]]: the layout makes per-file ranges tight on both
   * curve columns, the manifest turns those ranges into skipped IO. At
@@ -22,6 +48,40 @@ import org.apache.spark.sql.types.StructType
   * the same discipline as the reference's partition lists (SCALE.md).
   */
 object StatsStore {
+
+  /** The shape of a stats key: how each row's key value derives from the
+    * file's stored columns. The shape decides whether a footer can give
+    * the key's bounds; [[column]] is the same key as an expression, which
+    * the aggregation computes. Bounds are longs for both footer shapes.
+    */
+  sealed trait Key {
+    def column: Column
+  }
+
+  object Key {
+
+    /** A stored integer or long column. */
+    final case class Stored(name: String) extends Key {
+      def column: Column = col(name).cast(LongType)
+    }
+
+    /** `ReferenceOps.monthSid` (`year * 100 + month`) of a stored DATE,
+      * TIMESTAMP or TIMESTAMP_NTZ column. It never decreases as the date
+      * grows, so the months of the footer's min and max are exactly the
+      * file's month interval. TIMESTAMP values fall into the months of the
+      * session time zone, as `year()` and `month()` see them.
+      */
+    final case class MonthOf(name: String) extends Key {
+      def column: Column = ReferenceOps.monthSid(col(name))
+    }
+
+    /** Any other expression: its stats are always aggregated. */
+    final case class Expr(column: Column) extends Key
+
+    /** Keys given as plain columns are [[Expr]] keys. */
+    implicit def fromColumns(keys: Seq[(String, Column)]): Seq[(String, Key)] =
+      keys.map { case (n, c) => n -> Expr(c) }
+  }
 
   /** The materialized refresh diff: stats rows for files that appeared
     * (zero-row files seeded), stored paths of files that vanished, and the
@@ -48,8 +108,7 @@ object StatsStore {
     * file failed the existence check, was evicted as dead, and pruned
     * copies silently skipped its rows.
     */
-  private def listDataFiles(fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] = {
+  private def listDataFiles(fs: FileSystem, dir: Path): Seq[Path] = {
     val entries = fs.listStatus(dir).filterNot { s =>
       val n = s.getPath.getName
       n.startsWith("_") || n.startsWith(".")
@@ -81,10 +140,9 @@ object StatsStore {
     val have = rows.map(r => canon(r.getString(0))).toSet
     val missing = listed.filterNot(f => have.contains(canon(f)))
     val seeded = rows ++ missing.map { f =>
-      org.apache.spark.sql.Row.fromSeq(f +: schema.fields.toSeq.tail.map(fd =>
+      Row.fromSeq(f +: schema.fields.toSeq.tail.map(fd =>
         if (fd.name == "n_rows") 0L else null))
     }
-    import scala.jdk.CollectionConverters._
     spark.createDataFrame(seeded.asJava, schema)
   }
 
@@ -98,30 +156,20 @@ object StatsStore {
       .agg(aggs.head, aggs.tail: _*)
   }
 
-  /** [[collect]] generalized to DERIVED columns: per-file (count, min, max)
-    * of arbitrary expressions — the device that makes a derived partition
-    * key (e.g. `month_sid(o_orderdate)`) prunable even though no file
-    * source can push a predicate on it. Correct for ANY expression (the
-    * read-side still applies the real predicate); tight exactly when the
-    * expression is monotone in the file layout (time-ordered ingest makes
-    * a date-derived month key monotone per file).
+  /** Stats rows for every data file under `dataPath` — the recursive
+    * `listDataFiles` universe, zero-row files included — computed by
+    * [[statsForFiles]], so a first manifest build takes the same footer
+    * path as a refresh. Tight exactly when the key is monotone in the file
+    * layout (time-ordered ingest makes a date-derived month key monotone
+    * per file); correct for any key, since the read side still applies the
+    * real predicate.
     */
   def collectExpr(spark: SparkSession, dataPath: String,
-      derived: Seq[(String, org.apache.spark.sql.Column)]): DataFrame = {
-    val df = spark.read.parquet(dataPath)
-    val aggs = Seq(count(lit(1)).as("n_rows")) ++
-      derived.flatMap { case (n, _) =>
-        Seq(min(col(n)).as(s"min_$n"), max(col(n)).as(s"max_$n")) }
-    val stats = df.select(input_file_name().as("file") +:
-        derived.map { case (n, e) => e.as(n) }: _*)
-      .groupBy(col("file"))
-      .agg(aggs.head, aggs.tail: _*)
-    // seed zero-row files from the listing so the manifest's universe is
-    // exactly the directory's (and [[collectExprAppend]] agrees with it)
+      keys: Seq[(String, Key)]): DataFrame = {
     fullListings.incrementAndGet()
-    val root = new org.apache.hadoop.fs.Path(dataPath)
+    val root = new Path(dataPath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    seedEmptyFiles(spark, listDataFiles(fs, root).map(_.toString), stats)
+    statsForFiles(spark, dataPath, keys, listDataFiles(fs, root).map(_.toString))
   }
 
   /** Canonical identity of a data-file path: the scheme-less path
@@ -134,13 +182,13 @@ object StatsStore {
     * manifests are built.
     */
   private def canon(path: String): String =
-    new org.apache.hadoop.fs.Path(path).toUri.getPath
+    new Path(path).toUri.getPath
 
   /** [[canon]] as a Catalyst expression (the fold key of [[ManifestLog]]):
     * strips any `scheme:/+` prefix down to a single leading `/`, agreeing
     * with [[canon]] for the URI-safe paths manifests carry by contract.
     */
-  private def canonExpr(c: org.apache.spark.sql.Column) =
+  private def canonExpr(c: Column) =
     regexp_replace(c, "^[a-z][a-z0-9+.\\-]*:/+", "/")
 
   /** Incremental manifest maintenance: stats are computed ONLY for files
@@ -153,7 +201,7 @@ object StatsStore {
     * directory this is a no-op: the returned manifest has exactly the
     * prior's rows.
     *
-    * The listing is RECURSIVE ([[listDataFiles]]) so partitioned lake
+    * The listing is RECURSIVE (`listDataFiles`) so partitioned lake
     * layouts (`pid=…/`, `date=…/` — what this repo's own writers produce)
     * have the same file universe here as in the full rebuild's
     * `spark.read.parquet`: with a top-level-only listing (the r7 verdict's
@@ -163,9 +211,8 @@ object StatsStore {
     * expressions, exactly as in the rebuild.
     */
   def collectExprAppend(spark: SparkSession, dataPath: String,
-      derived: Seq[(String, org.apache.spark.sql.Column)],
-      prior: DataFrame): DataFrame = {
-    val d = collectExprDiff(spark, dataPath, derived, prior, None)
+      keys: Seq[(String, Key)], prior: DataFrame): DataFrame = {
+    val d = collectExprDiff(spark, dataPath, keys, prior, None)
     val kept = dropFiles(spark, prior, d.dead)
     if (d.scanned.isEmpty) kept else kept.unionByName(d.adds)
   }
@@ -195,11 +242,11 @@ object StatsStore {
     * universe WITHOUT any lake listing (the [[IngestLog]] path — dead
     * detection is skipped, per the journal's append-only contract);
     * `None` performs the full recursive listing and detects deads.
-    * `derived` and `schema` (passed to [[statsForFiles]]) are evaluated
-    * only when a fresh file needs stats.
+    * `keys` and `schema` (passed to [[statsForFiles]]) are evaluated only
+    * when a fresh file needs stats.
     */
   def collectExprDiff(spark: SparkSession, dataPath: String,
-      derived: => Seq[(String, org.apache.spark.sql.Column)],
+      keys: => Seq[(String, Key)],
       prior: DataFrame,
       candidates: Option[Seq[String]],
       schema: => Option[StructType] = None): ManifestDiff = {
@@ -207,9 +254,9 @@ object StatsStore {
       case Some(c) => (c, false)
       case None =>
         fullListings.incrementAndGet()
-        val fs = new org.apache.hadoop.fs.Path(dataPath)
+        val fs = new Path(dataPath)
           .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        (listDataFiles(fs, new org.apache.hadoop.fs.Path(dataPath))
+        (listDataFiles(fs, new Path(dataPath))
           .map(_.toString), true)
     }
     // fresh/dead by joining the listing against `prior` instead of
@@ -241,34 +288,176 @@ object StatsStore {
     val adds =
       if (fresh.isEmpty)
         spark.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+          java.util.Collections.emptyList[Row](),
           prior.schema)
-      else statsForFiles(spark, dataPath, derived, fresh, schema)
+      else statsForFiles(spark, dataPath, keys, fresh, schema)
     ManifestDiff(adds, dead, fresh)
   }
 
-  /** Stats rows for a KNOWN-fresh file set — the adds computation alone,
-    * for callers (the ingest-journal drain path) that already determined
-    * freshness without materializing the manifest. Zero-row files are
-    * seeded; `basePath = dataPath` keeps directory-derived partition
-    * columns visible to `derived`. A known lake `schema` (partition columns
-    * included) skips the read's schema inference — a Spark job of its own.
+  /** Stats rows for a KNOWN-fresh file set, as a driver-local relation:
+    * one row per file with `file`, `n_rows`, then `min_k`/`max_k` per key.
+    * Each row comes from the file's footer (`footerRow`), read on the
+    * driver; the files whose footer cannot give every key's bounds are
+    * aggregated in one Spark job over just those files (`aggregate`),
+    * and so are all files of a call with an [[Key.Expr]] key. `file` is
+    * the string `input_file_name()` gives; a zero-row file keeps its
+    * listed path and has null bounds, as the aggregation seeds it. For
+    * the aggregation, `basePath = dataPath` keeps directory-derived
+    * partition columns visible to the keys, and a known lake `schema`
+    * (partition columns included) skips the read's schema inference — a
+    * Spark job of its own. A file whose footer types differ from `schema`
+    * is aggregated.
     */
   def statsForFiles(spark: SparkSession, dataPath: String,
-      derived: Seq[(String, org.apache.spark.sql.Column)],
-      files: Seq[String], schema: Option[StructType] = None): DataFrame = {
+      keys: Seq[(String, Key)], files: Seq[String],
+      schema: Option[StructType] = None): DataFrame = {
     require(files.nonEmpty, "statsForFiles: empty file set")
+    if (keys.exists(_._2.isInstanceOf[Key.Expr]))
+      aggregate(spark, dataPath, keys, files, schema)
+    else {
+      val conf = spark.sparkContext.hadoopConfiguration
+      val fs = new Path(dataPath).getFileSystem(conf)
+      val zone = DateTimeUtils.getZoneId(spark.conf.get("spark.sql.session.timeZone"))
+      val fromFooter = files.map(f => f -> footerRow(spark, fs, f, keys, schema, zone))
+      val rest = fromFooter.collect { case (f, None) => f }
+      val rows = fromFooter.flatMap(_._2) ++
+        (if (rest.isEmpty) Nil else aggregate(spark, dataPath, keys, rest, schema).collect().toSeq)
+      spark.createDataFrame(rows.asJava, StructType(
+        StructField("file", StringType, nullable = false) +:
+          StructField("n_rows", LongType, nullable = false) +:
+          keys.flatMap { case (n, _) =>
+            Seq(StructField(s"min_$n", LongType), StructField(s"max_$n", LongType)) }))
+    }
+  }
+
+  /** Stats rows of `files` computed by one Spark job: the keys grouped by
+    * `input_file_name()`, zero-row files seeded.
+    */
+  private def aggregate(spark: SparkSession, dataPath: String,
+      keys: Seq[(String, Key)], files: Seq[String],
+      schema: Option[StructType]): DataFrame = {
     val reader = schema.fold(spark.read)(spark.read.schema(_))
     val df = reader.option("basePath", dataPath).parquet(files.toIndexedSeq: _*)
     val aggs = Seq(count(lit(1)).as("n_rows")) ++
-      derived.flatMap { case (n, _) =>
+      keys.flatMap { case (n, _) =>
         Seq(min(col(n)).as(s"min_$n"), max(col(n)).as(s"max_$n")) }
     val add = df.select(input_file_name().as("file") +:
-        derived.map { case (n, e) => e.as(n) }: _*)
+        keys.map { case (n, k) => k.column.as(n) }: _*)
       .groupBy(col("file"))
       .agg(aggs.head, aggs.tail: _*)
     seedEmptyFiles(spark, files.toIndexedSeq, add)
   }
+
+  /** One file's stats row from its footer; None when the footer cannot
+    * give some key's bounds ([[footerBounds]]). A zero-row file needs no
+    * bounds.
+    */
+  private def footerRow(spark: SparkSession, fs: FileSystem, file: String,
+      keys: Seq[(String, Key)], schema: Option[StructType],
+      zone: ZoneId): Option[Row] = {
+    val st = fs.getFileStatus(new Path(file))
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, fs.getConf))
+    val footer = try reader.getFooter finally reader.close()
+    val nRows = footer.getBlocks.asScala.map(_.getRowCount).sum
+    if (nRows == 0L) Some(Row.fromSeq(file +: 0L +: keys.flatMap(_ => Seq(null, null))))
+    else {
+      // the Spark types a read of this file alone would infer
+      lazy val fileTypes =
+        scala.util.Try(ParquetFooterSchema.fromFooter(spark, st.getPath, footer)).toOption
+      val bounds = keys.map { case (_, k) => footerBounds(footer, k, schema, fileTypes, zone) }
+      val asInputFileName = st.getPath.toUri.toString
+      if (bounds.exists(_.isEmpty)) None
+      else Some(Row.fromSeq(asInputFileName +: nRows +: bounds.flatMap(
+        _.get.fold(Seq[Any](null, null)) { case (lo, hi) => Seq(lo, hi) })))
+    }
+  }
+
+  /** A key's `[min, max]` over the file's non-null values, from the footer:
+    * Some(None) when every value is null; None when the footer cannot
+    * tell — the key is no stored column of the file, its type is not one
+    * the key's shape covers or differs from the lake `schema`'s, or a row
+    * group holding values has no min/max.
+    */
+  private def footerBounds(footer: ParquetMetadata, key: Key,
+      schema: Option[StructType], fileTypes: => Option[StructType],
+      zone: ZoneId): Option[Option[(Long, Long)]] = {
+    val fields = footer.getFileMetaData.getSchema
+    for {
+      name <- key match {
+        case Key.Stored(n) => Some(n)
+        case Key.MonthOf(n) => Some(n)
+        case Key.Expr(_) => None
+      }
+      if fields.containsField(name)
+      field = fields.getType(fields.getFieldIndex(name))
+      if field.isPrimitive && !field.isRepetition(Type.Repetition.REPEATED)
+      fileType <- fileTypes.flatMap(_.find(_.name == name)).map(_.dataType)
+      if schema.forall(_.find(_.name == name).exists(_.dataType == fileType))
+      value <- keyValue(key, field.asPrimitiveType, fileType,
+        footer.getFileMetaData.getKeyValueMetaData.keySet.asScala, zone)
+      bounds <- rowGroupBounds(footer, name)
+    } yield bounds.map { case (lo, hi) => (value(lo), value(hi)) }
+  }
+
+  /** The map from a footer statistic of `field`, read as `sparkType`, to
+    * the key's value — None when the key's shape does not cover the type.
+    * Dates and timestamps rebased to the legacy calendar by old Spark
+    * writers are not covered.
+    */
+  private def keyValue(key: Key, field: PrimitiveType, sparkType: DataType,
+      footerKeys: collection.Set[String], zone: ZoneId): Option[Long => Long] = {
+    val ann = field.getLogicalTypeAnnotation
+    val legacy = footerKeys.exists(DriverParquet.legacyCalendarKeys)
+    def monthOfDay(days: Long): Long = {
+      val d = LocalDate.ofEpochDay(days)
+      d.getYear * 100L + d.getMonthValue
+    }
+    (key, field.getPrimitiveTypeName, sparkType) match {
+      case (Key.Stored(_), INT32, IntegerType) | (Key.Stored(_), INT64, LongType) =>
+        Some(identity)
+      case (Key.MonthOf(_), INT32, DateType) if ann == L.dateType() && !legacy =>
+        Some(monthOfDay)
+      case (Key.MonthOf(_), INT64, TimestampType | TimestampNTZType) if !legacy =>
+        ann match {
+          case ts: L.TimestampLogicalTypeAnnotation if ts.getUnit != L.TimeUnit.NANOS =>
+            val toMicros = if (ts.getUnit == L.TimeUnit.MILLIS) 1000L else 1L
+            // TIMESTAMP_NTZ values are wall-clock times: no zone shift
+            val z = if (sparkType == TimestampNTZType) ZoneOffset.UTC else zone
+            Some(v => monthOfDay(DateTimeUtils.microsToDays(v * toMicros, z)))
+          case _ => None
+        }
+      case _ => None
+    }
+  }
+
+  /** The min and max of column `name` over the row groups that hold rows,
+    * from their statistics: Some(None) when every value is null, None when
+    * a row group holding values has no min/max.
+    */
+  private def rowGroupBounds(footer: ParquetMetadata,
+      name: String): Option[Option[(Long, Long)]] = {
+    val path = ColumnPath.get(name)
+    footer.getBlocks.asScala.filter(_.getRowCount > 0)
+      .foldLeft(Option(Option.empty[(Long, Long)])) { (acc, block) =>
+        for {
+          sofar <- acc
+          chunk <- block.getColumns.asScala.find(_.getPath == path)
+          group <- chunkBounds(chunk.getStatistics, chunk.getValueCount)
+        } yield (sofar ++ group).reduceOption((a, b) =>
+          (math.min(a._1, b._1), math.max(a._2, b._2)))
+      }
+  }
+
+  /** One row group's bounds of a column from its statistics `s`:
+    * Some(None) when all `values` are null, None without a min/max.
+    */
+  private def chunkBounds(s: Statistics[_], values: Long): Option[Option[(Long, Long)]] =
+    if (s == null) None
+    else if (s.hasNonNullValue)
+      Some(Some((s.genericGetMin.asInstanceOf[Number].longValue,
+        s.genericGetMax.asInstanceOf[Number].longValue)))
+    else if (s.isNumNullsSet && s.getNumNulls == values) Some(None)
+    else None
 
   /** Data files whose [min_c, max_c] intersects [lo, hi]. */
   def survivingFiles(stats: DataFrame, c: String, lo: Long, hi: Long): Seq[String] =

@@ -2,6 +2,7 @@ package org.apache.spark.sql.graftx
 
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
@@ -20,7 +21,11 @@ object ParquetFooterSchema {
     val conf = spark.sessionState.newHadoopConf()
     val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
     val footer = try reader.getFooter finally reader.close()
+    fromFooter(spark, file, footer)
+  }
+
+  /** [[of]] for a footer the caller has already read. */
+  def fromFooter(spark: SparkSession, file: Path, footer: ParquetMetadata): StructType =
     ParquetFileFormat.readSchemaFromFooter(new Footer(file, footer),
       new ParquetToSparkSchemaConverter(spark.sessionState.conf))
-  }
 }

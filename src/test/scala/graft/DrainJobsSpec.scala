@@ -1,10 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
@@ -16,32 +13,10 @@ import graft.sources.{IngestLog, ManifestLog}
 /** What an ETL drain costs in Spark jobs, and what it leaves behind in the
   * caller's session. The drain's metadata (status store, manifest log, lake
   * schema) is read on the driver, so a drain that finds nothing new runs no
-  * job at all; the concurrent runner must not change any session conf.
+  * job at all, and one that copies a landed month runs only the copy write;
+  * the concurrent runner must not change any session conf.
   */
-class DrainJobsSpec extends SparkSpec {
-
-  /** Jobs started under a job tag, counted from their start events. */
-  private object JobCounter extends SparkListener {
-    val byTag = new ConcurrentHashMap[String, AtomicInteger]()
-    override def onJobStart(e: SparkListenerJobStart): Unit =
-      Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
-        .toSeq.flatMap(_.split(',')).foreach { t =>
-          byTag.computeIfAbsent(t, _ => new AtomicInteger()).incrementAndGet()
-        }
-  }
-  private lazy val counter = { spark.sparkContext.addSparkListener(JobCounter); JobCounter }
-  private val tagSeq = new AtomicInteger()
-
-  /** Run `f` under a fresh job tag; its result and the jobs it started. */
-  private def jobsOf[T](f: => T): (T, Int) = {
-    val c = counter
-    val tag = s"drain-jobs-${tagSeq.incrementAndGet()}"
-    val sc = spark.sparkContext
-    sc.addJobTag(tag)
-    val out = try f finally sc.removeJobTag(tag)
-    org.apache.spark.graftx.ListenerBusDrain.drain(sc)
-    (out, Option(c.byTag.get(tag)).fold(0)(_.get))
-  }
+class DrainJobsSpec extends SparkSpec with JobCount {
 
   /** One month of rows as a single parquet file landed in `lake` and
     * recorded in its ingest journal.
@@ -77,9 +52,10 @@ class DrainJobsSpec extends SparkSpec {
     landMonth(tmp, lake, 199503L)
     val (copied, copyJobs) = jobsOf(drain())
     assert(copied == Seq(199503L))
-    // stats aggregation, delta write, discovery distinct, the copy write —
-    // each aggregation is a shuffle stage plus a result stage under AQE
-    assert(copyJobs <= 6, s"a one-month drain ran $copyJobs Spark jobs")
+    // only the copy write: the wave file's stats come from its footer, the
+    // manifest delta is written on the driver, and the file's one-month
+    // interval is its discovered month
+    assert(copyJobs == 1, s"a one-month drain ran $copyJobs Spark jobs")
 
     val (again, againJobs) = jobsOf(drain())
     assert(again.isEmpty && againJobs == 0, s"idle after copy ran $againJobs jobs")

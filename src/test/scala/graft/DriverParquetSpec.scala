@@ -13,9 +13,10 @@ import graft.sources.{DriverParquet, ManifestLog}
 
 /** The driver-side metadata reader returns exactly the rows (and schema)
   * of `spark.read.parquet(...)` for every file shape the status store and
-  * manifest log keep at rest, and fails loudly on a type it cannot decode.
+  * manifest log keep at rest, and fails loudly on a type it cannot decode;
+  * what the driver-side writer writes reads back the same through both.
   */
-class DriverParquetSpec extends SparkSpec {
+class DriverParquetSpec extends SparkSpec with JobCount {
 
   private def conf = spark.sparkContext.hadoopConfiguration
   private def fs = org.apache.hadoop.fs.FileSystem.get(conf)
@@ -103,6 +104,48 @@ class DriverParquetSpec extends SparkSpec {
     val want = spark.read.parquet(s"$dir/m/checkpoint").drop("pb")
     assert(sorted(DriverParquet.read(conf, files)) == sorted(want.collect().toSeq))
     assert(DriverParquet.schema(conf, files.head) == want.schema)
+  }
+
+  test("DriverParquet.write: every supported type, nulls and non-nullable columns read back the same through DriverParquet.read and spark.read") {
+    val dir = Files.createTempDirectory("graft-dp-write").toString
+    val schema = StructType(Seq(
+      StructField("s", StringType), StructField("b", BooleanType),
+      StructField("i", IntegerType, nullable = false), StructField("l", LongType),
+      StructField("d", DoubleType), StructField("t", TimestampType)))
+    val rows = Seq(
+      Row("a", true, 1, 10L, 1.5, new Timestamp(1234567891234L)),
+      Row(null, null, -2, null, null, null),
+      Row("", false, Int.MaxValue, Long.MinValue, -0.25, new Timestamp(-86400000L)))
+    val fs = DriverParquet.metadataFs(new Path(dir), conf)
+    val (_, jobs) = jobsOf(DriverParquet.write(fs, new Path(s"$dir/out"), schema, rows))
+    assert(jobs == 0)
+    assert(new java.io.File(s"$dir/out").list().toSeq.sorted ==
+      Seq("_SUCCESS", "part-00000.snappy.parquet"), "one part file, no .crc sibling")
+    assertSameAsSpark(Seq(s"$dir/out"))
+    assert(sorted(DriverParquet.read(conf, DriverParquet.files(fs, new Path(s"$dir/out")))) ==
+      sorted(rows))
+
+    val bad = StructType(Seq(StructField("id", LongType), StructField("day", DateType)))
+    val e = intercept[UnsupportedOperationException](
+      DriverParquet.write(fs, new Path(s"$dir/bad"), bad, Seq(Row(1L, null))))
+    assert(e.getMessage.contains("day"), e.getMessage)
+    assert(!fs.exists(new Path(s"$dir/bad")), "nothing is written for an unsupported type")
+    val e2 = intercept[IllegalArgumentException](
+      DriverParquet.write(fs, new Path(s"$dir/null"), schema, Seq(Row("x", true, null, 1L, 1.0, null))))
+    assert(e2.getMessage.contains("`i`"), e2.getMessage)
+  }
+
+  test("a manifest delta is written on the driver: no Spark job, and spark.read sees its rows, null bounds and tombstones") {
+    val dir = Files.createTempDirectory("graft-dp-delta").toString
+    val log = new ManifestLog(spark, s"$dir/m")
+    val adds = manifestRows(("/a.parquet", 10L, 199501L, 199506L), ("/b.parquet", 0L, null, null))
+    val (seq, jobs) = jobsOf(log.commitDelta(adds, Seq("/gone.parquet")))
+    assert(seq.contains(0L) && jobs == 0, s"commitDelta ran $jobs Spark jobs")
+    val delta = s"$dir/m/delta-0"
+    assertSameAsSpark(Seq(delta))
+    val want = adds.withColumn("tombstone", lit(false)).collect().toSeq :+
+      Row("/gone.parquet", 0L, null, null, true)
+    assert(sorted(spark.read.parquet(delta).collect().toSeq) == sorted(want))
   }
 
   test("a column of an unsupported type fails loudly, naming the column") {

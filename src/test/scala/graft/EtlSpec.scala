@@ -65,7 +65,7 @@ class EtlSpec extends SparkSpec {
     // the subset assertion: a mid-history month's slice opens strictly
     // fewer files than history holds, and the PLAN reads only those files
     val stats = graft.sources.StatsStore.collectExpr(
-      spark, s"$tmp/src", Seq("pid" -> job.pidCol(spark.read.parquet(s"$tmp/src"))))
+      spark, s"$tmp/src", Seq("pid" -> job.pidKey(spark.read.parquet(s"$tmp/src").schema)))
     import spark.implicits._
     val allMonths = orders.select(ReferenceOps.monthSid(col("o_orderdate")))
       .distinct().as[Long].collect().sorted
@@ -105,7 +105,7 @@ class EtlSpec extends SparkSpec {
     val first = store.pending("orders").collect()
       .map(_.primaryPartitionValue).min
     val stats = graft.sources.StatsStore.collectExpr(
-      spark, s"$tmp/src", Seq("pid" -> job.pidCol(spark.read.parquet(s"$tmp/src"))))
+      spark, s"$tmp/src", Seq("pid" -> job.pidKey(spark.read.parquet(s"$tmp/src").schema)))
     job.copyPartitionPruned(s"$tmp/src", stats, first)
 
     val copied = job.runPruned(s"$tmp/src", maxParallel = 6)
@@ -145,7 +145,7 @@ class EtlSpec extends SparkSpec {
     val cfg = JobConfig(tableName = "orders", numMappers = 2)
     val store = new StatusStore(spark, s"$tmp/status")
     val job = new IncrementalBackup(spark, cfg, store, s"$tmp/dest")
-    val pid = Seq("pid" -> job.pidCol(spark.read.parquet(lake)))
+    val pid = Seq("pid" -> job.pidKey(spark.read.parquet(lake).schema))
 
     // drain 1: full manifest build, persisted
     job.runPrunedIncremental(lake)
@@ -278,7 +278,7 @@ class EtlSpec extends SparkSpec {
     // wave 2 lands in a NEW partition dir; the refresh must (a) evict no
     // live file and (b) read no wave-1 file
     land(orders.filter(col("o_orderdate") >= lit("1996-01-01")), "ingest=2")
-    val pid = Seq("pid" -> job.pidCol(spark.read.parquet(lake)))
+    val pid = Seq("pid" -> job.pidKey(spark.read.parquet(lake).schema))
     val updated = graft.sources.StatsStore.collectExprAppend(spark, lake, pid, m1)
     import spark.implicits._
     val live = spark.read.parquet(lake).inputFiles.map(canon).toSet
@@ -708,7 +708,7 @@ class EtlSpec extends SparkSpec {
       .filter(_.getName.endsWith(".parquet")).head
     Files.copy(emptyPart.toPath, java.nio.file.Paths.get(lake, "z-empty.parquet"))
 
-    val pid = Seq("pid" -> ReferenceOps.monthSid(col("o_orderdate")))
+    val pid = Seq("pid" -> graft.sources.StatsStore.Key.MonthOf("o_orderdate"))
     val m = graft.sources.StatsStore.collectExpr(spark, lake, pid)
     // invariant: manifest rows == lake files, INCLUDING the empty one
     assert(m.count() == 3, s"expected 3 manifest rows, got ${m.count()}")

@@ -1,7 +1,8 @@
 #!/bin/bash
 # Run a graft main class directly (no sbt lock): tools/jrun.sh graft.Timeq args...
 # JVM flags come from tools/jvm.opts, the file build.sbt's javaOptions read;
-# the heap from SPARK_DRIVER_MEM (default 8g), as in build.sbt.
+# the heap from SPARK_DRIVER_MEM (default 8g), as in build.sbt; the Spark
+# jars from $SPARK_HOME/jars, by default the install build.sbt uses.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 OPTS=()
@@ -11,4 +12,4 @@ while IFS= read -r line; do
   [[ -z "$line" || "$line" == \#* ]] || OPTS+=("$line")
 done < tools/jvm.opts
 exec java "${OPTS[@]}" -Xmx"${SPARK_DRIVER_MEM:-8g}" \
-  -cp "target/scala-2.13/classes:/opt/spark/jars/*" "$@"
+  -cp "target/scala-2.13/classes:${SPARK_HOME:-/opt/spark}/jars/*" "$@"
