@@ -1,11 +1,17 @@
 package graft.etl
 
+import java.io.IOException
 import java.sql.Timestamp
+import java.util.UUID
 
+import scala.collection.mutable
+
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftx.ParquetFooterSchema
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StructType}
 
 import graft.operators.{JobLock, ReferenceOps}
 import graft.sources.{Bounded, FaultPoints, IngestLog, ManifestLog, OrcSink, StatsStore}
@@ -13,25 +19,30 @@ import graft.sources.StatsStore.Key
 
 /** The reference's whole job, Spark-first: incremental partition-by-partition
   * copy of a warehouse table to tuned columnar files, with restartable
-  * exactly-once status — the faithful analogue of the loop at
-  * `/root/reference/sqoop_etl.py:48-84`, minus the five execution domains
-  * (Vertica temp table + Sqoop2 + HDFS text + Hive ORC rewrite collapse into
-  * a single `read → filter → write` plan per partition; SURVEY §3.1).
+  * exactly-once status — the analogue of the loop at `sqoop_etl.py:48-84`,
+  * minus the five execution domains (Vertica temp table + Sqoop2 + HDFS
+  * text + Hive ORC rewrite collapse into a single `read → filter → write`
+  * plan; SURVEY §3.1).
   *
   * Scale design:
-  *  - Each iteration touches ONE source partition (`WHERE pid = v` is pushed
-  *    into the scan → partition pruning), like the reference (`sqoop_table.py:97`).
-  *  - The copy itself is an embarrassingly parallel scan→write, sized by
-  *    `numMappers` output files (the reference's NUM_MAPPERS throttle,
-  *    `sqoop_json.py:35`).
-  *  - Replays are safe: each partition lands in its own subdirectory with
-  *    `mode("overwrite")`, and status is only flipped after the write commits
-  *    (write-then-mark, same ordering as `sqoop_etl.py:36-46`).
+  *  - A drain writes in WAVES: runs of consecutive copyable months, capped
+  *    by their estimated source bytes. One job scans a wave's input once —
+  *    the relation, or the manifest-pruned files of its months — and writes
+  *    every month of the wave to its own `pid=` directory, like the
+  *    reference's staged partition extracted by NUM_MAPPERS mappers
+  *    (`sqoop_table.py:94-104`, `sqoop_json.py:23-42`). A backfill thus
+  *    scans the source once per wave, not once per month.
+  *  - Each month lands in at most `numMappers` files: the wave is
+  *    coalesced, not shuffled (the NUM_MAPPERS throttle, `sqoop_json.py:35`).
+  *  - Replays are safe: a wave is staged in a hidden `_wave-*` directory,
+  *    then each month is published over its live `pid=` directory by
+  *    rename and only then marked complete (write-then-mark, the ordering
+  *    of `sqoop_etl.py:36-46`), oldest first.
   *  - Since r10, NO step of the steady-state drain materializes the full
   *    manifest on the driver: the log checkpoint is bucketed
-  *    ([[graft.sources.ManifestLog]]) and discovery / per-month copies
-  *    localize only the buckets intersecting what they need
-  *    ([[DrainGauges]] reports the localized row counts per invocation).
+  *    ([[graft.sources.ManifestLog]]) and discovery / copies localize only
+  *    the buckets intersecting what they need ([[DrainGauges]] reports the
+  *    localized row counts per invocation).
   */
 final class IncrementalBackup(
     spark: SparkSession, cfg: JobConfig, status: StatusStore, destRoot: String) {
@@ -73,26 +84,25 @@ final class IncrementalBackup(
     def keys: Seq[(String, Key)] = Seq("pid" -> pidKey(schema))
   }
 
-  /** One partition's slice of `df` — the `WHERE pid = v` of the reference
-    * loop. When the pid is DERIVED (month_sid computed from the date
-    * column) no file source can push `year(d)*100+month(d) = v` into the
-    * scan; since r12 the slice carries the EQUIVALENT calendar-month range
-    * predicate on the raw date column alongside it (exact for any yyyymm
-    * value: `monthSid(d) = v ⟺ d ∈ [first-of-month, first-of-next)`,
-    * evaluated in the same session timezone), so `PushedFilters` reaches
-    * the parquet scan and row-group/file statistics prune history instead
-    * of every copy scanning all of it (guide §6 — predicate pushdown must
-    * reach the scan). The derived-pid filter stays conjoined, so the row
-    * set is identical by construction.
+  /** The rows of `df` whose pid is one of `wave`'s months — the
+    * `WHERE pid = v` of the reference loop, for a run of months. When the
+    * pid is DERIVED (month_sid computed from the date column) no file
+    * source can push `year(d)*100+month(d) IN (…)` into the scan, so the
+    * slice also carries the calendar range that spans the wave on the raw
+    * date column: `[first of its oldest month, first of the month after
+    * its newest)`, evaluated in the same session timezone. `PushedFilters` then reaches
+    * the parquet scan and row-group/file statistics prune history outside
+    * the wave (guide §6 — predicate pushdown must reach the scan). The
+    * derived-pid filter stays conjoined, so the row set is identical by
+    * construction, also for a wave with gaps between its months.
     */
-  def pidSlice(df: DataFrame, pid: Long): DataFrame = {
-    val base = df.filter(pidCol(df) === lit(pid))
-    val mm = pid % 100
-    if (!derivedPid(df.schema) || pid < 100L || mm < 1 || mm > 12) base
+  private def waveSlice(df: DataFrame, wave: Seq[Long]): DataFrame = {
+    val base = df.filter(pidCol(df).isin(wave: _*))
+    val (lo, hi) = (wave.min, wave.max)
+    if (!derivedPid(df.schema) || !looksLikeYyyymm(lo) || !looksLikeYyyymm(hi)) base
     else {
-      val y = pid / 100
-      val (ny, nm) = if (mm == 12) (y + 1, 1L) else (y, mm + 1)
-      base.filter(col("o_orderdate") >= lit(f"$y%04d-$mm%02d-01") &&
+      val (ny, nm) = if (hi % 100 == 12) (hi / 100 + 1, 1L) else (hi / 100, hi % 100 + 1)
+      base.filter(col("o_orderdate") >= lit(f"${lo / 100}%04d-${lo % 100}%02d-01") &&
         col("o_orderdate") < lit(f"$ny%04d-$nm%02d-01"))
     }
   }
@@ -154,17 +164,20 @@ final class IncrementalBackup(
     status.rows().filter(_.tableName == tbl)
   }
 
-  /** Distinct pids present in `df` minus the recorded set, oldest first —
-    * subtracted on the driver (both are partition lists, small by
-    * construction). A null pid is no unit: no copy's `pid = v` slice holds
+  /** Distinct pids present in `df` minus the recorded set, oldest first.
+    * One map-only job: each partition collects its own pid set, and the
+    * sets are unioned and the recorded set subtracted on the driver (all
+    * are partition lists, small by construction) — no shuffle, unlike a
+    * `distinct()`. A null pid is no unit: no copy's `pid = v` slice holds
     * its rows, so it is skipped. The newest-N exclusion is applied at copy
     * time ([[deferredFrom]]), so the reference operator's rank window
     * would filter nothing here.
     */
   private def unrecordedIn(df: DataFrame, recorded: Set[Long]): Seq[Long] = {
     import spark.implicits._
-    df.select(pidCol(df).as("month_sid")).distinct()
-      .as[Option[Long]].collect().flatten.filterNot(recorded).toSeq.sorted
+    df.select(pidCol(df).cast(LongType)).as[Option[Long]]
+      .mapPartitions(rows => rows.flatten.toSet.iterator)
+      .collect().toSet.filterNot(recorded).toSeq.sorted
   }
 
   /** The tail every discovery shares: record `pendingNew` as pending, then
@@ -196,73 +209,197 @@ final class IncrementalBackup(
   /** Pending units that are currently COPYABLE: incomplete and outside the
     * deferral window, oldest first. Every drain consumes this once, so a
     * deferred month recorded pending is never copied early by any path
-    * (loop, bulk, pruned, concurrent). One status read serves both the
-    * pending set and the window.
+    * (loop, bulk, pruned, concurrent). One status read (`rows`) serves
+    * both the pending set and the window.
     */
-  private def copyablePending(): Seq[Long] = {
-    val rows = tableRows()
+  private def copyablePending(rows: IndexedSeq[BackupStatus] = tableRows()): Seq[Long] = {
     val deferred = deferredFrom(rows.map(_.primaryPartitionValue))
     rows.collect { case s if !s.isComplete && !deferred(s.primaryPartitionValue) =>
       s.primaryPartitionValue }.sorted
   }
 
-  /** The drain loop (`sqoop_etl.py:77-83`) — the only loop over units.
-    * Per unit, in `pending` order (oldest first): `write` (holding one
-    * fleet job slot when a budget is in force), then flip its status —
-    * write-then-mark (`sqoop_etl.py:36-46`), so a crash leaves the unit
-    * pending and its overwrite replay is idempotent. With `maxParallel > 1`
-    * the writes overlap on a bounded pool: month copies are independent
-    * read→write jobs, and the flips serialize on a driver-side lock because
-    * [[StatusStore]] is single-writer by contract. Only completion ORDER
-    * is weakened then. The pending set is computed once per drain: the
-    * store is single-writer per table, so a re-read would find the same
-    * units. Returns the units copied.
+  /** What a drain's waves read. `pieces(m)` names the parts of the source
+    * that month `m`'s rows come from, with their estimated bytes: a wave's
+    * size is the sum over the distinct pieces of its months. `read(wave)`
+    * is the wave's input, before the pid filter.
     */
-  private def drain(pending: Seq[Long], maxParallel: Int,
-      slots: Option[JobSlots])(write: Long => Unit): Seq[Long] = {
-    val statusLock = new Object
-    Bounded.map(pending, maxParallel) { pid =>
-      slots.fold(write(pid))(_.withSlot(write(pid)))
-      FaultPoints.hit("drain.copy.written")
-      statusLock.synchronized {
-        status.markComplete(cfg.tableName, pid, now())
+  private final class WaveSource(
+      val pieces: Long => Seq[(String, Double)], val read: Seq[Long] => DataFrame)
+
+  /** A relation's waves. Each reads the whole relation, and a month's
+    * share of it is estimated from the relation's plan statistics (its
+    * bytes over the months the status store has seen): no job, no listing.
+    * Without statistics the estimate is huge, and every month is a wave of
+    * its own.
+    */
+  private def relationWaves(source: DataFrame, months: Int): WaveSource = {
+    val perMonth = source.queryExecution.optimizedPlan.stats.sizeInBytes.toDouble /
+      math.max(1, months)
+    new WaveSource(m => Seq(m.toString -> perMonth), _ => source)
+  }
+
+  /** A lake's waves, per a manifest view: a month reads the files whose
+    * `[min_pid, max_pid]` interval holds it, a wave the union of its
+    * months' files — a file that spans several months of one wave is read
+    * once. A file's bytes are estimated as its manifest row count times the
+    * lake schema's default row size. With no file to read, a wave's input
+    * is a schema-only empty relation; the bound schema carries a
+    * partitioned lake's directory-derived columns, so every branch writes
+    * the same schema.
+    */
+  private def prunedWaves(lake: LakeSchema, stats: DataFrame): WaveSource = {
+    val files = stats.select(col("file"), col("n_rows"), col("min_pid"), col("max_pid"))
+      .collect().toSeq.collect { case r if !r.isNullAt(2) && !r.isNullAt(3) =>
+        (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)) }
+    def of(m: Long) = files.filter { case (_, _, lo, hi) => lo <= m && m <= hi }
+    lazy val rowBytes = lake.schema.defaultSize.toDouble
+    new WaveSource(
+      m => of(m).map { case (f, n, _, _) => f -> n * rowBytes },
+      wave => wave.flatMap(of).map(_._1).distinct match {
+        case Seq() => spark.createDataFrame(java.util.Collections.emptyList[Row](), lake.schema)
+        case paths => lake.read(paths)
+      })
+  }
+
+  /** The most source bytes a wave may span: `numMappers` splits of
+    * `spark.sql.files.maxPartitionBytes`, what the wave's `numMappers`
+    * write tasks read in one split each. A month is never split: one whose
+    * estimate alone exceeds the cap is a wave of its own.
+    */
+  private def waveCap: Double =
+    cfg.numMappers.toDouble * JavaUtils.byteStringAsBytes(
+      spark.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
+
+  /** Cut `pending` (oldest first) into waves of consecutive months whose
+    * distinct pieces fit in [[waveCap]]. A month whose pieces the wave
+    * already reads joins it for free, so only a wave's first month can
+    * take it past the cap.
+    */
+  private def cutWaves(pending: Seq[Long], src: WaveSource): Seq[Seq[Long]] = {
+    val cap = waveCap
+    val waves = Seq.newBuilder[Seq[Long]]
+    val wave = mutable.ArrayBuffer.empty[Long]
+    val seen = mutable.HashSet.empty[String]
+    var bytes = 0.0
+    pending.foreach { m =>
+      val pieces = src.pieces(m)
+      val add = pieces.collect { case (k, b) if !seen(k) => b }.sum
+      if (wave.nonEmpty && add > 0 && bytes + add > cap) {
+        waves += wave.toList; wave.clear(); seen.clear(); bytes = 0.0
       }
-      FaultPoints.hit("drain.copy.marked")
-      pid
+      pieces.foreach { case (k, b) => if (seen.add(k)) bytes += b }
+      wave += m
     }
+    if (wave.nonEmpty) waves += wave.toList
+    waves.result()
+  }
+
+  private lazy val destFs: FileSystem =
+    new Path(destRoot).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  private def tableDir = new Path(destRoot, cfg.tableName)
+
+  /** The drain loop (`sqoop_etl.py:77-83`) — the only loop over units. It
+    * cuts `pending` (oldest first) into waves ([[cutWaves]]) and, per wave:
+    * stages it ([[stageWave]], holding one fleet job slot when a budget is
+    * in force), then walks its months oldest first — publish the month's
+    * staged `pid=` dir over the live one, then flip its status. That is
+    * write-then-mark (`sqoop_etl.py:36-46`): a crash before a month's mark
+    * leaves it pending, and its replay stages and publishes it again. The
+    * staged dir is deleted after the wave's last month, and a drain that
+    * writes a wave first deletes any `_wave-*` dir a crashed drain left.
+    * With `maxParallel > 1` the waves overlap on a bounded pool, each
+    * publishing its own months; the flips serialize on a driver-side lock
+    * because [[StatusStore]] is single-writer by contract. Only completion
+    * ORDER across waves is weakened then. The pending set is computed once
+    * per drain: the store is single-writer per table, so a re-read would
+    * find the same units. Returns the units copied.
+    */
+  private def drain(pending: Seq[Long], maxParallel: Int, slots: Option[JobSlots],
+      src: WaveSource): Seq[Long] = {
+    val waves = cutWaves(pending, src)
+    if (waves.nonEmpty) clearStaged()
+    val statusLock = new Object
+    Bounded.map(waves, maxParallel) { wave =>
+      def stage() = stageWave(waveRows(src.read(wave), wave).coalesce(cfg.numMappers), wave)
+      val staged = slots.fold(stage())(_.withSlot(stage()))
+      FaultPoints.hit("drain.copy.staged")
+      wave.foreach { pid =>
+        publish(staged, pid)
+        FaultPoints.hit("drain.copy.written")
+        statusLock.synchronized {
+          status.markComplete(cfg.tableName, pid, now())
+        }
+        FaultPoints.hit("drain.copy.marked")
+      }
+      destFs.delete(staged, true)
+      wave
+    }.flatten
+  }
+
+  /** `wave`'s rows of `input`, with their month as the `pid` column. */
+  private def waveRows(input: DataFrame, wave: Seq[Long]): DataFrame =
+    if (cfg.isFullSnapshot) input.withColumn("pid", lit(0L))
+    else waveSlice(input, wave).withColumn("pid", pidCol(input).cast(LongType))
+
+  /** Delete the `_wave-*` dirs a crashed drain left. */
+  private def clearStaged(): Unit =
+    Option(destFs.globStatus(new Path(tableDir, "_wave-*"))).toSeq.flatten
+      .foreach(st => destFs.delete(st.getPath, true))
+
+  /** Write `rows` (a wave's, see [[waveRows]]) in one job to a fresh staged
+    * dir `<table>/_wave-<nonce>/`, one `pid=` subdir per month. The name
+    * starts with `_` and holds no `=`, so Spark's file index (and so
+    * [[readBack]]) never lists it. A drain passes its rows coalesced to
+    * numMappers: that folds the scan into at most numMappers read→write
+    * tasks with ZERO byte movement (r12, guide §2.4: a keyless repartition
+    * paid a sort and a shuffle of every row just to fix the file count),
+    * so each month lands in at most numMappers files — exactly the
+    * reference's NUM_MAPPERS shape (`sqoop_json.py:35`). A one-month wave
+    * is written straight into its `pid=` subdir, with no partitioned
+    * writer to plan, and so is a month that a wave's write gave no rows:
+    * its published dir is what a copy of an empty slice always left, one
+    * schema-only file. Returns the staged dir.
+    */
+  private def stageWave(rows: DataFrame, wave: Seq[Long]): Path = {
+    val staged = new Path(tableDir, s"_wave-${UUID.randomUUID()}")
+    val direct =
+      if (wave.size == 1) wave
+      else {
+        OrcSink.write(rows, staged.toString, cfg, Seq("pid"))
+        val written = destFs.listStatus(staged).map(_.getPath.getName).toSet
+        wave.filterNot(m => written(s"pid=$m"))
+      }
+    direct.foreach { m =>
+      OrcSink.write(rows.filter(col("pid") === m).drop("pid"), s"$staged/pid=$m", cfg)
+    }
+    staged
+  }
+
+  /** Replace month `pid`'s live dir with its staged one: delete, then
+    * rename. A crash in between leaves the month absent and pending.
+    */
+  private def publish(staged: Path, pid: Long): Unit = {
+    val live = new Path(tableDir, s"pid=$pid")
+    destFs.delete(live, true)
+    if (!destFs.rename(new Path(staged, s"pid=$pid"), live))
+      throw new IOException(s"could not publish $staged/pid=$pid to $live")
   }
 
   /** Steps 6a+6b (`sqoop_etl.py:36-46`): copy one partition, tuned columnar
     * output, then flip status.
     */
   def copyPartition(source: DataFrame, pid: Long): Unit = {
-    drain(Seq(pid), 1, None)(writeRelation(source, _)); ()
+    drain(Seq(pid), 1, None, relationWaves(source, 1)); ()
   }
 
-  private def writeRelation(source: DataFrame, pid: Long): Unit =
-    // pushed predicate (P4) + date-range pushdown
-    writeSlice(if (cfg.isFullSnapshot) source else pidSlice(source, pid), pid)
-
-  /** Write one unit's rows to its `pid=` directory: ≤ NUM_MAPPERS output
-    * streams (X4). r12 (guide §2.4): coalesce, not repartition — the
-    * keyless repartition(n) paid a local sort + a full shuffle of the slice
-    * per copy purely to fix the file count, while coalesce(n) folds the
-    * scan into ≤n read→write streams with ZERO byte movement: exactly the
-    * reference's NUM_MAPPERS shape (n mappers, each reading its share of
-    * the source and writing one file, `sqoop_json.py:35`). File count stays
-    * ≤ numMappers (the X4 spec bound); at 100 TB the copy no longer
-    * round-trips the whole month slice through shuffle disk.
-    */
-  private def writeSlice(slice: DataFrame, pid: Long): Unit =
-    OrcSink.write(slice.coalesce(cfg.numMappers),
-      s"$destRoot/${cfg.tableName}/pid=$pid", cfg)
-
   /** The relation drain: discover, then copy every copyable unit oldest
-    * first. Returns partitions copied this run.
+    * first, a wave per relation scan. Returns partitions copied this run.
     */
   def run(source: DataFrame, slots: Option[JobSlots] = None): Seq[Long] = {
     discover(source)
-    drain(copyablePending(), 1, slots)(writeRelation(source, _))
+    val rows = tableRows()
+    drain(copyablePending(rows), 1, slots, relationWaves(source, rows.size))
   }
 
   /** The file subset one partition's copy must read, per the min/max
@@ -387,7 +524,8 @@ final class IncrementalBackup(
 
   /** [[copyPartition]] for a LAKE-resident source: instead of filtering a
     * full-history scan on the derived pid (which no file source can prune —
-    * the r5 scale finding), the copy opens ONLY the files whose per-file
+    * the r5 scale finding), the copy (a one-month wave, as in
+    * [[runPruned]]) opens ONLY the files whose per-file
     * [min_pid, max_pid] interval (from a [[graft.sources.StatsStore]]
     * manifest over the DERIVED key) contains the month. With time-ordered
     * ingest the intervals are tight, so one month's copy reads ~one month
@@ -398,39 +536,24 @@ final class IncrementalBackup(
     * unpruned path.
     */
   def copyPartitionPruned(sourcePath: String, stats: DataFrame, pid: Long): Unit = {
-    val lake = sampledLake(sourcePath, stats)
-    drain(Seq(pid), 1, None)(writePruned(lake, stats, _)); ()
-  }
-
-  /** The copy half of [[copyPartitionPruned]], without the status flip. */
-  private def writePruned(lake: LakeSchema, stats: DataFrame, pid: Long): Unit = {
-    val files = prunedFiles(stats, pid)
-    writeSlice(
-      if (files.isEmpty) {
-        // schema-only empty slice; the bound schema carries a partitioned
-        // lake's directory-derived columns, so both branches (and the
-        // unpruned loop) write the same schema
-        spark.createDataFrame(java.util.Collections.emptyList[Row](), lake.schema)
-      } else pidSlice(lake.read(files), pid),
-      pid)
+    drain(Seq(pid), 1, None, prunedWaves(sampledLake(sourcePath, stats), stats)); ()
   }
 
   /** Steady-state drain against a lake path: the manifest is ONE
     * single-column scan (use [[runPrunedIncremental]] to maintain it
     * incrementally between drains instead), discovery reads only the
     * files that may hold unrecorded months ([[discoverPruned]] — it used
-    * to be a full pid-column scan of history), and then each month's copy
-    * is file-subset-read only. Loop cost is therefore proportional to the
-    * PENDING data, not to history size.
+    * to be a full pid-column scan of history), and then each wave of
+    * pending months reads only the union of its months' files, once. Loop
+    * cost is therefore proportional to the PENDING data, not to history
+    * size.
     *
-    * `maxParallel > 1` overlaps the month copies (see `drain`): the
-    * sequential loop pays (#pending × per-job latency) even when each copy
-    * uses a fraction of the cluster, while pending months are independent
-    * read→write jobs whose input file sets are disjoint (manifest-pruned).
-    * The reference gets this for free across TABLES (independent Sqoop
-    * jobs); within a table its loop is sequential (`sqoop_etl.py:77-83`) —
-    * this is the within-table generalization, throttled like X4
-    * (`maxParallel` jobs × `numMappers` files each).
+    * `maxParallel > 1` overlaps the waves' staged writes (see `drain`): a
+    * backlog bigger than one wave cap is several independent read→write
+    * jobs. The reference gets this for free across TABLES (independent
+    * Sqoop jobs); within a table its loop is sequential
+    * (`sqoop_etl.py:77-83`) — this is the within-table generalization,
+    * throttled like X4 (`maxParallel` jobs × `numMappers` files each).
     */
   def runPruned(sourcePath: String, maxParallel: Int = 1): Seq[Long] = {
     val source = spark.read.parquet(sourcePath)
@@ -438,7 +561,7 @@ final class IncrementalBackup(
     // a driver-local relation: pooled copies share it without a cache
     val stats = StatsStore.collectExpr(spark, sourcePath, lake.keys)
     if (cfg.isFullSnapshot) discover(source) else discoverPrunedWith(lake, stats)
-    drain(copyablePending(), maxParallel, None)(writePruned(lake, stats, _))
+    drain(copyablePending(), maxParallel, None, prunedWaves(lake, stats))
   }
 
   /** Where the persisted manifest lives: next to the table's backup dirs,
@@ -631,8 +754,8 @@ final class IncrementalBackup(
   /** [[runPruned]] with PERSISTED, incrementally-maintained manifest and
     * optional within-table concurrency — the steady-state production drain:
     * per drain, manifest refresh (∝ NEW files), manifest-pruned discovery
-    * (scan ∝ files holding unrecorded months), and a manifest-pruned copy
-    * per pending month. Results are identical to [[runPruned]] (same
+    * (scan ∝ files holding unrecorded months), and a manifest-pruned wave
+    * write per run of pending months. Results are identical to [[runPruned]] (same
     * superset guarantee); only the fixed cost per drain stops growing with
     * history — including DRIVER memory, which since r10 holds only the
     * checkpoint buckets intersecting unrecorded/pending months plus live
@@ -688,50 +811,46 @@ final class IncrementalBackup(
         gauges.copyCkptRowsRead = cp.checkpointRowsRead
         gauges.copyCkptRowsTotal = cp.checkpointRowsTotal
         gauges.copyDeltaRows = cp.deltaRowsRead
-        drain(pending, maxParallel, slots)(writePruned(lake, cp.view, _))
+        drain(pending, maxParallel, slots, prunedWaves(lake, cp.view))
       }
     }
 
-  /** Bulk variant of the drain loop: ONE job writes every pending partition
-    * via `partitionBy(pid)` instead of a job per partition. At 100 TB this
-    * is the first-load / backfill path (the per-partition loop is the
-    * steady-state incremental path — its unit of retry matches the
-    * reference's, `sqoop_etl.py:77-83`). Partition dirs land identically to
-    * [[copyPartition]], so the two modes interoperate and `readBack` is
-    * unchanged.
+  /** Bulk variant of the drain: ONE job writes every pending partition,
+    * through [[graft.sources.OrcSink]] with the drain's writer options,
+    * and ONE status write marks them all — the unit of retry is the whole
+    * backlog, where the drain's is a month. Unlike a drain's coalesced wave it shuffles
+    * every row once, salted within pid, so a hot month spreads over
+    * several tasks. It stages and publishes like a drain's wave, so a
+    * month copied before keeps its dir, and a crash before the mark leaves
+    * the whole backlog pending.
     */
   def runBulk(source: DataFrame): Seq[Long] = {
     discover(source)
     val pending = copyablePending()
     if (pending.nonEmpty) {
-      val withPid = source.withColumn("pid", pidCol(source))
-        .filter(col("pid").isin(pending: _*))
       // Salt WITHIN pid so a hot month splits across tasks: hashing on pid
       // alone capped intra-partition parallelism at one task per month (the
       // r5 scale finding) — the reference's own mappers split within one
-      // partition via rowId ranges (`sqoop_table.py:94-104`), and so does
-      // the loop path's repartition(n). The salt is a deterministic
-      // row-content hash mod numMappers, so each pid still lands in at most
-      // NUM_MAPPERS files (the X4 throttle) while task count scales with
-      // the partition count. Cap guards the degenerate huge-backfill case.
+      // partition via rowId ranges (`sqoop_table.py:94-104`). The salt is a
+      // deterministic row-content hash mod numMappers, so each pid still
+      // lands in at most NUM_MAPPERS files (the X4 throttle) while task
+      // count scales with the partition count. Cap guards the degenerate
+      // huge-backfill case.
       val salt = pmod(
         xxhash64(source.columns.map(col).toIndexedSeq: _*),
         lit(cfg.numMappers.toLong))
       val nTasks = math.min(
         cfg.numMappers.toLong * pending.size, 100000L).toInt
-      withPid
-        .repartition(nTasks, col("pid"), salt)
-        .write.mode("overwrite")
-        .partitionBy("pid")
-        .format(cfg.outputFileFormat)
-        .option("compression", cfg.compression)
-        .save(s"$destRoot/${cfg.tableName}")
-      val t = now()
+      clearStaged()
+      val staged = stageWave(
+        waveRows(source, pending).repartition(nTasks, col("pid"), salt), pending)
+      pending.foreach(publish(staged, _))
+      destFs.delete(staged, true)
       // ONE status write: the single bulk job above wrote every pending
       // partition (crash before this line leaves all pending — the same
       // replay unit as the job itself), so N markComplete round-trips were
       // pure fs-metadata overhead (r12)
-      status.markCompleteAll(cfg.tableName, pending.toSet, t)
+      status.markCompleteAll(cfg.tableName, pending.toSet, now())
     }
     pending
   }

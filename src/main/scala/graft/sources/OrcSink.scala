@@ -11,8 +11,14 @@ import graft.etl.JobConfig
   * (`sqoop_pyhive.py:28-40`) has no Spark equivalent because none is needed.
   */
 object OrcSink {
-  def write(df: DataFrame, path: String, cfg: JobConfig): Unit = {
-    val w = df.write.mode("overwrite")
+
+  /** Overwrite `path` with `df` in the configured format, one
+    * `col=value` subdirectory per value of the `partitionBy` columns.
+    */
+  def write(df: DataFrame, path: String, cfg: JobConfig,
+      partitionBy: Seq[String] = Nil): Unit = {
+    val w0 = df.write.mode("overwrite")
+    val w = if (partitionBy.isEmpty) w0 else w0.partitionBy(partitionBy: _*)
     cfg.outputFileFormat match {
       case "orc" =>
         w.format("orc")

@@ -483,6 +483,13 @@ class CrashConsistencySpec extends SparkSpec {
   }
 
   test("crash-fuzz through the pooled executor: a journaled drain at maxParallel = 2 aborted at every copy-phase fault point converges on re-run to the never-crashed twin") {
+    // a 1 KB split caps a wave below one lake file's estimated bytes, so
+    // each of wave 2's files starts a wave of its own and the waves run on
+    // the pool
+    withConf("spark.sql.files.maxPartitionBytes", "1k")(pooledFuzz())
+  }
+
+  private def pooledFuzz(): Unit = {
     import graft.sources.{FaultPoints, IngestLog}
     val root = Files.createTempDirectory("graft-fuzz-pool").toString
     def stage(name: String, months: Seq[Long]): String = {
@@ -545,6 +552,7 @@ class CrashConsistencySpec extends SparkSpec {
       s"unexpected fault domain: $domain")
     val picks = firstCopy until domain.size
     assert(picks.size >= 8, s"too few pooled fault occurrences: $domain")
+    assert(domain.count(_ == "drain.copy.staged") >= 2, s"one wave, no pool: $domain")
     picks.foreach { target =>
       val tag = s"trial-$target"
       val job = runSetup(tag)
@@ -564,6 +572,57 @@ class CrashConsistencySpec extends SparkSpec {
       assert(manifestNames(job) == wantManifest, s"$tag: manifest diverged")
       assert(new graft.etl.StatusStore(spark, s"$root/$tag/status")
         .pending("t").isEmpty, s"$tag: pending units left")
+    }
+  }
+
+  test("a relation drain crashed with its wave staged but unpublished, or with a month published but unmarked, shows only whole months; the next drain removes the staged dir and converges to the never-crashed twin, marking every month once") {
+    val root = Files.createTempDirectory("graft-crash-wave").toString
+    val cfg = graft.etl.JobConfig(tableName = "t", numMappers = 1)
+    def land(lake: String, months: Seq[Long]): Unit =
+      months.map(m => spark.range(40).select(lit(m).as("month_sid"), col("id").as("payload")))
+        .reduce(_ unionByName _).write.mode("append").parquet(lake)
+    // months 1-2 are copied, then months 3-4 land for the drain under test
+    def setup(tag: String): (graft.etl.IncrementalBackup, StatusStore, String) = {
+      val lake = s"$root/$tag/lake"
+      land(lake, Seq(199501L, 199502L))
+      val store = new StatusStore(spark, s"$root/$tag/status")
+      val job = new graft.etl.IncrementalBackup(spark, cfg, store, s"$root/$tag/dest")
+      assert(job.run(spark.read.parquet(lake)) == Seq(199501L, 199502L))
+      land(lake, Seq(199503L, 199504L))
+      (job, store, lake)
+    }
+    import spark.implicits._
+    def backMap(j: graft.etl.IncrementalBackup) = j.readBack()
+      .groupBy(col("pid").cast("long").as("m")).count()
+      .as[(Long, Long)].collect().toMap
+    def staged(tag: String) = fs.listStatus(new Path(s"$root/$tag/dest/t"))
+      .map(_.getPath.getName).filter(_.startsWith("_wave-")).toSeq
+
+    val (twin, _, twinLake) = setup("twin")
+    assert(twin.run(spark.read.parquet(twinLake)) == Seq(199503L, 199504L))
+    val want = backMap(twin)
+    for ((point, visible) <- Seq(
+        "drain.copy.staged" -> Set(199501L, 199502L),
+        "drain.copy.written" -> Set(199501L, 199502L, 199503L))) {
+      val tag = point.replace('.', '-')
+      val (job, store, lake) = setup(tag)
+      val (out, marks) = DrainMarks.record(store, "t", Some(point)) {
+        job.run(spark.read.parquet(lake))
+      }
+      assert(out.isEmpty && marks.isEmpty, s"$point: the fault did not fire before a mark")
+      // the crash state: earlier months, plus a published month whole
+      val seen = backMap(job)
+      assert(seen.keySet == visible && seen.forall { case (m, n) => want(m) == n },
+        s"$point: read-back shows $seen")
+      assert(staged(tag).size == 1, s"$point: staged dirs ${staged(tag)}")
+      assert(store.pending("t").count() == 2)
+
+      val (again, remarks) = DrainMarks.record(store, "t")(job.run(spark.read.parquet(lake)))
+      assert(again.contains(Seq(199503L, 199504L)), s"$point: re-run copied $again")
+      assert(remarks == Seq(199503L, 199504L), s"$point: re-run marks $remarks")
+      assert(staged(tag).isEmpty, s"$point: staged dirs left ${staged(tag)}")
+      assert(backMap(job) == want, s"$point: read-back diverged")
+      assert(store.pending("t").isEmpty)
     }
   }
 

@@ -92,7 +92,7 @@ class DrainJobsSpec extends SparkSpec with JobCount {
     assert(idle.isEmpty && idleJobs == 0, s"idle after the due drain ran $idleJobs jobs")
   }
 
-  test("relation drain job gate: run over a 3-month relation runs 5 Spark jobs; an idle re-run runs 2") {
+  test("relation drain job gate: run over a 3-month relation runs 2 Spark jobs; an idle re-run runs 1") {
     val tmp = Files.createTempDirectory("graft-reljobs").toString
     val lake = s"$tmp/lake"
     spark.range(90).select((lit(199501L) + col("id") % 3).as("month_sid"),
@@ -104,11 +104,11 @@ class DrainJobsSpec extends SparkSpec with JobCount {
       new StatusStore(spark, s"$tmp/status"), s"$tmp/dest")
     val (copied, jobs) = jobsOf(job.run(source))
     assert(copied == Seq(199501L, 199502L, 199503L))
-    // the discovery distinct (shuffle + result) and one write per month:
-    // the loop itself adds no job per copy
-    assert(jobs == 5, s"a 3-month relation drain ran $jobs Spark jobs")
+    // the map-only discovery and one wave write for all three months:
+    // publishing and marking a month adds no job
+    assert(jobs == 2, s"a 3-month relation drain ran $jobs Spark jobs")
     val (again, againJobs) = jobsOf(job.run(source))
-    assert(again.isEmpty && againJobs == 2, s"an idle relation drain ran $againJobs jobs")
+    assert(again.isEmpty && againJobs == 1, s"an idle relation drain ran $againJobs jobs")
   }
 
   /** Executed-plan trees (inner children included) of every file write
@@ -136,15 +136,7 @@ class DrainJobsSpec extends SparkSpec with JobCount {
     tree.contains(classOf[AdaptiveSparkPlanExec].getSimpleName.stripSuffix("Exec"))
 
   /** Run `f` with adaptive execution explicitly on, restoring the setting. */
-  private def withAqe[T](f: => T): T = {
-    val key = "spark.sql.adaptive.enabled"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "true")
-    try f finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+  private def withAqe[T](f: => T): T = withConf("spark.sql.adaptive.enabled", "true")(f)
 
   test("with AQE on, the relation, pruned and lake copy writes plan no adaptive stage (no exchange to adapt)") {
     withAqe(copyPlansAreStatic())
@@ -169,8 +161,9 @@ class DrainJobsSpec extends SparkSpec with JobCount {
     val pruned = writePlans { assert(job("p").runPruned(lake).size == 3) }
     val incr = writePlans { assert(job("i").runPrunedIncremental(lake).size == 3) }
     for ((name, ps) <- Seq("relation" -> relation, "pruned" -> pruned, "lake" -> incr)) {
-      val copies = ps.filter(_.contains("/t/pid="))
-      assert(copies.size == 3, s"$name: ${copies.size} copy writes")
+      // the three months are one wave: one staged write
+      val copies = ps.filter(_.contains("/t/_wave-"))
+      assert(copies.size == 1, s"$name: ${copies.size} copy writes")
       assert(!copies.exists(adaptive), s"$name copy planned an adaptive stage")
     }
   }

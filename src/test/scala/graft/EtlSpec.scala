@@ -108,7 +108,11 @@ class EtlSpec extends SparkSpec {
       spark, s"$tmp/src", Seq("pid" -> job.pidKey(spark.read.parquet(s"$tmp/src").schema)))
     job.copyPartitionPruned(s"$tmp/src", stats, first)
 
-    val copied = job.runPruned(s"$tmp/src", maxParallel = 6)
+    // an 8 KB split caps a wave at about one of the 8 lake files, so the
+    // remaining months form several waves that overlap on the pool
+    val copied = withConf("spark.sql.files.maxPartitionBytes", "8k") {
+      job.runPruned(s"$tmp/src", maxParallel = 6)
+    }
     assert(copied.toSet == allMonths - first)
     assert(store.pending("orders").count() == 0)
     // read-back equals the source exactly (per-month row counts)
@@ -1062,8 +1066,11 @@ class EtlSpec extends SparkSpec {
     // without a budget the bound is 2 tables x 4 = 8 jobs; the shared
     // slot pool must cap the FLEET at 3 while both pools stay 4-wide
     val slots = new graft.etl.JobSlots(3)
-    val out = EtlRunner.runAllFrom(spark, s"$dir/work", jobs,
-      maxParallel = 2, Some(slots))
+    // a 100 KB split caps a lineitem wave at about one of its 4 lake files,
+    // so its waves overlap on its 4-wide pool
+    val out = withConf("spark.sql.files.maxPartitionBytes", "100k") {
+      EtlRunner.runAllFrom(spark, s"$dir/work", jobs, maxParallel = 2, Some(slots))
+    }
     assert(slots.peak.get() <= 3,
       s"budget exceeded: ${slots.peak.get()} copy jobs in flight")
     assert(slots.peak.get() >= 2,

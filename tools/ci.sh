@@ -1,13 +1,26 @@
 #!/bin/bash
-# CI gate: compile, unit/e2e suites, and the scaladoc build. A malformed
-# doc comment fails `sbt doc`; any warning it prints (a broken, ambiguous
-# or private [[link]]) fails this gate too, so the API docs stay
-# publishable. The correctness drive (Verify + DuckDB oracle) is the
-# driver's job; run it manually per README when touching query semantics.
+# CI gate: compile, unit/e2e suites, the ETL oracle and the scaladoc
+# build. The ETL oracle runs the 8 q_etl_* queries (every write path of the
+# backup loop) through Verify at sf0.001 and checks them against DuckDB;
+# without the testdata it is skipped, and says so. A malformed doc comment
+# fails `sbt doc`; any warning it prints (a broken, ambiguous or private
+# [[link]]) fails this gate too, so the API docs stay publishable. The full
+# correctness drive (all queries through Verify + DuckDB) is run manually
+# per README when touching query semantics.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 sbt -batch compile Test/compile
 sbt -batch test
+etl_sf="$HOME/testdata/sf0.001"
+if [[ -d "$etl_sf" ]]; then
+  etl_out=$(mktemp -d)
+  tools/jrun.sh graft.Verify "$etl_sf" "$etl_out" q_etl_backup q_etl_bulk \
+    q_etl_pruned q_etl_conc q_etl_incr q_etl_incr_part q_etl_journal q_etl_skip
+  python3 tools/oracle_check.py "$etl_sf" "$etl_out"
+  rm -rf "$etl_out"
+else
+  echo "ETL oracle skipped: no testdata at $etl_sf"
+fi
 doc_log=$(sbt -batch doc 2>&1) || { echo "$doc_log"; exit 1; }
 if grep -q '^\[warn\]' <<<"$doc_log"; then
   grep '^\[warn\]' <<<"$doc_log"
