@@ -13,8 +13,7 @@ import org.apache.spark.sql.functions._
   * no read-modify-write), and readers resolve the latest version per key
   * with one window over the key — a shuffle on the key only, no global
   * sort. Tombstones (`op = "d"`) delete at read time. Periodic compaction =
-  * write `latest(...)` back as the new base (same atomic-swap discipline as
-  * `sources.Compaction`).
+  * write `latest(...)` back as the new base (`sources.Compaction.swapIn`).
   */
 object MergeOnRead {
 
@@ -69,31 +68,26 @@ object MergeOnRead {
 
   /** Fold a base directory + accumulated delta directory back into a single
     * resolved base (tombstones applied, versions reset to 0, delta dir
-    * emptied). The new base lands in a sibling temp dir and is swapped in
-    * with renames — the same readers-see-old-or-new discipline as
-    * `sources.Compaction`. Read amplification then restarts from zero.
+    * emptied). The new base is swapped in by `sources.Compaction.swapIn`
+    * (readers see old or new; a swap a kill interrupted is finished
+    * first), and the deltas are deleted only after it returns — a failed
+    * or killed compaction keeps them, and re-folding them onto the new
+    * base gives the same rows. Read amplification then restarts from zero.
     */
   def compact(spark: org.apache.spark.sql.SparkSession, basePath: String,
       deltaPath: String, keys: Seq[String], version: String,
       op: String = "op"): Unit = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(basePath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val delta = new Path(deltaPath)
-    val all =
-      if (fs.exists(delta) && fs.listStatus(delta).exists(_.isFile))
-        spark.read.parquet(basePath).unionByName(spark.read.parquet(deltaPath))
-      else spark.read.parquet(basePath)
-    val resolved = latest(all, keys, version, op)
-      .withColumn(version, lit(0L)).withColumn(op, lit(UpsertOp))
-    val tmp = new Path(p.getParent, s".${p.getName}.mor.tmp")
-    val old = new Path(p.getParent, s".${p.getName}.mor.old")
-    fs.delete(tmp, true); fs.delete(old, true)
-    try resolved.write.parquet(tmp.toString)
-    catch { case e: Throwable => fs.delete(tmp, true); throw e }
-    fs.rename(p, old)
-    fs.rename(tmp, p)
-    fs.delete(old, true)
+    val delta = new org.apache.hadoop.fs.Path(deltaPath)
+    val fs = delta.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    graft.sources.Compaction.swapIn(spark, basePath) { tmp =>
+      val all =
+        if (fs.exists(delta) && fs.listStatus(delta).exists(_.isFile))
+          spark.read.parquet(basePath).unionByName(spark.read.parquet(deltaPath))
+        else spark.read.parquet(basePath)
+      latest(all, keys, version, op)
+        .withColumn(version, lit(0L)).withColumn(op, lit(UpsertOp))
+        .write.parquet(tmp)
+    }
     fs.delete(delta, true)
   }
 }

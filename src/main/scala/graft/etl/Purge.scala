@@ -4,13 +4,15 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Compaction
+
 /** Key purge across a table family — the right-to-be-forgotten mutation at
   * scale. The reference's world deletes by key with SQL DELETE (SURVEY
   * §2.9 M3); on immutable columnar storage the scalable spelling is an
   * anti-join rewrite: stream the table once, drop the condemned keys,
-  * swap atomically (the Compaction rename discipline — readers see the
-  * old files or the new files, never a mix, and a mid-write failure
-  * leaves the original untouched).
+  * swap atomically (`Compaction.swapIn` — readers see the old files or
+  * the new files, never a mix, a mid-write failure leaves the original
+  * untouched, and the next purge finishes a swap a kill interrupted).
   *
   * The deletion batch is BROADCAST (a request batch is thousands of keys,
   * not billions), so the rewrite is one map-only pass per table — no
@@ -25,33 +27,15 @@ object Purge {
   /** Rewrite one parquet table dropping rows whose `keyCol` ∈ `keys`. */
   def purge(spark: SparkSession, path: String, keyCol: String,
       keys: DataFrame): Stats = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val before = spark.read.parquet(path)
-    val nBefore = before.count()
-    val kept = before.join(
-      broadcast(keys.select(col(keys.columns.head).as(keyCol)).distinct()),
-      Seq(keyCol), "left_anti")
-    val tmp = new Path(p.getParent, s".${p.getName}.purge.tmp")
-    val old = new Path(p.getParent, s".${p.getName}.purge.old")
-    fs.delete(tmp, true); fs.delete(old, true)
-    try kept.write.parquet(tmp.toString)
-    catch { case e: Throwable => fs.delete(tmp, true); throw e }
-    // Hadoop rename signals failure by RETURNING FALSE, not throwing —
-    // check each step and restore the original on partial failure so the
-    // swap is all-or-nothing (never a stranded table under .purge.old).
-    if (!fs.rename(p, old)) {
-      fs.delete(tmp, true)
-      throw new java.io.IOException(s"purge: rename $p -> $old failed")
+    var nBefore = 0L
+    Compaction.swapIn(spark, path) { tmp =>
+      val before = spark.read.parquet(path)
+      nBefore = before.count()
+      before.join(
+        broadcast(keys.select(col(keys.columns.head).as(keyCol)).distinct()),
+        Seq(keyCol), "left_anti").write.parquet(tmp)
     }
-    if (!fs.rename(tmp, p)) {
-      val restored = fs.rename(old, p)
-      fs.delete(tmp, true)
-      throw new java.io.IOException(
-        s"purge: rename $tmp -> $p failed (original restored: $restored)")
-    }
-    fs.delete(old, true)
-    Stats(p.getName, nBefore, spark.read.parquet(path).count())
+    Stats(new Path(path).getName, nBefore, spark.read.parquet(path).count())
   }
 
   /** One deletion batch across every table holding the key:

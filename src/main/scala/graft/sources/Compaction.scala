@@ -76,9 +76,11 @@ object Compaction {
 
   /** Atomically replace directory `path` with whatever `write` produces in
     * a sibling temp dir — the two-rename swap + [[recover]] roll-forward/
-    * back discipline of [[compact]], exposed for any store that commits a
-    * full rewrite (manifests, rebuilt indexes). `path` absent is allowed
-    * (first write). `write` must produce a COMPLETE dir including
+    * back discipline, and the one copy of it in the code base:
+    * [[compact]], [[compactPartitions]], `etl.Purge` and
+    * `etl.MergeOnRead.compact` all go through it. It recovers a crashed
+    * swap of `path` first, so `write` may read `path`. `path` absent is
+    * allowed (first write). `write` must produce a COMPLETE dir including
     * `_SUCCESS` (Spark's committers do) before any rename happens.
     */
   def swapIn(spark: SparkSession, path: String)(write: String => Unit): Unit = {
@@ -212,9 +214,9 @@ object Compaction {
     // maxParallel=8 for ~6 MB of data). Instead: ONE distributed job reads
     // the whole store and writes the compacted tree into a hidden staging
     // dir — same total bytes shuffled as the per-leaf rewrites, one job —
-    // and then each leaf is swapped in with the SAME two-rename + _SUCCESS
-    // discipline as [[compact]], so readers still see old-or-new per leaf
-    // and [[recover]] converges from any crash point unchanged. Leaves
+    // and then each leaf is swapped in by [[swapIn]], as [[compact]] does,
+    // so readers still see old-or-new per leaf and [[recover]] converges
+    // from any crash point unchanged. Leaves
     // whose files hold zero rows produce no staged dir and are left as
     // they are (counted unchanged). Leaves needing >1 file fall back to
     // the pooled per-leaf path below.
@@ -251,14 +253,10 @@ object Compaction {
         val staged = new Path(stage, relOf(leaf))
         if (!fs.exists(staged)) filesAfter += nBefore // zero-row leaf: keep
         else {
-          val tmp = new Path(leaf.getParent, s".${leaf.getName}.compact.tmp")
-          val old = new Path(leaf.getParent, s".${leaf.getName}.compact.old")
-          fs.delete(tmp, true); fs.delete(old, true)
-          renameOrThrow(fs, staged, tmp)
-          fs.create(new Path(tmp, "_SUCCESS"), true).close()
-          renameOrThrow(fs, leaf, old)
-          renameOrThrow(fs, tmp, leaf)
-          fs.delete(old, true)
+          swapIn(spark, leaf.toString) { tmp =>
+            renameOrThrow(fs, staged, new Path(tmp))
+            fs.create(new Path(tmp, "_SUCCESS"), true).close()
+          }
           filesAfter += fs.listStatus(leaf).count(st =>
             st.isFile && !st.getPath.getName.startsWith("_"))
         }

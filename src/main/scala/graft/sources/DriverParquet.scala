@@ -20,7 +20,7 @@ import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.types._
 
 /** Driver-side reader and writer for the small flat parquet files of the
-  * ETL's own metadata stores (status generations, manifest deltas, bucketed
+  * ETL's own metadata stores (status snapshots, manifest deltas, bucketed
   * manifest checkpoints). `spark.read.parquet(dir).collect()` schedules a
   * schema-inference job plus a scan job for a KB-sized file, and
   * `df.coalesce(1).write.parquet(dir)` a write job; at the per-drain
@@ -57,7 +57,8 @@ object DriverParquet {
 
   /** Parquet data files directly under `dir`, in name order; names starting
     * with `_` or `.` (committer markers, checksums) are skipped, as Spark's
-    * file index skips them. A missing `dir` throws `FileNotFoundException`.
+    * file index skips them. A file `dir` lists as itself. A missing `dir`
+    * throws `FileNotFoundException`.
     */
   def files(fs: FileSystem, dir: Path): Seq[FileStatus] =
     fs.listStatus(dir).toSeq.filter { st =>
@@ -127,9 +128,14 @@ object DriverParquet {
     * created through `fs`, so a [[metadataFs]] writes no `.crc` sibling.
     */
   def write(fs: FileSystem, dir: Path, schema: StructType, rows: Iterable[Row]): Unit = {
+    writeFile(fs, new Path(dir, "part-00000.snappy.parquet"), schema, rows)
+    fs.create(new Path(dir, "_SUCCESS"), true).close()
+  }
+
+  /** [[write]]'s part file alone, written at `file`. */
+  def writeFile(fs: FileSystem, file: Path, schema: StructType, rows: Iterable[Row]): Unit = {
     val (types, add) = schema.fields.toIndexedSeq.map(writeField).unzip
     val message = new MessageType("spark_schema", types.asJava)
-    val file = new Path(dir, "part-00000.snappy.parquet")
     // through `fs` itself: HadoopOutputFile would resolve the JVM-cached fs
     val sink = new OutputFile {
       private def open(overwrite: Boolean) = HadoopStreams.wrap(fs.create(file, overwrite))
@@ -151,7 +157,6 @@ object DriverParquet {
       }
       w.write(g)
     } finally w.close()
-    fs.create(new Path(dir, "_SUCCESS"), true).close()
   }
 
   /** The parquet field of `f` and the appender of its non-null values. */

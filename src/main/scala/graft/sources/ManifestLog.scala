@@ -35,23 +35,23 @@ import org.apache.spark.sql.types.{BooleanType, StructType}
   * partition-pruning discipline (`sqoop_table.py:97`) applied to the
   * manifest itself.
   *
-  * Layout under `path`:
-  *   checkpoint/   bucketed snapshot ([[Compaction.swapIn]]-managed):
-  *                 `pb=N/` parquet partitions, a `_upto-N` marker naming
-  *                 the highest delta seq folded in, and a `_buckets`
-  *                 per-bucket summary (one text line per bucket)
+  * Layout under `path`, an `AtomicLog`:
+  *   checkpoint-N/ bucketed snapshot folding every delta up to seq N:
+  *                 `pb=K/` parquet partitions and a `_buckets` per-bucket
+  *                 summary (one text line per bucket)
   *   delta-N/      one small parquet dir, written on the driver: manifest
   *                 rows + `tombstone` col
   *   _wave-N       ingest-journal watermark (see [[IngestLog]])
+  *   _refresh-N    drains since the last fold (the reconcile cadence)
   *
-  * Crash discipline: a delta is staged at `.delta-N.tmp` and published by
-  * ONE atomic rename; the checkpoint uses the two-rename + [[Compaction.recover]]
-  * protocol (the `_buckets` summary and `_upto` marker are written INSIDE
-  * the staged dir, so a checkpoint is only ever visible whole); deltas
-  * already folded (seq <= upto) are ignored by readers, so the GC after a
-  * checkpoint can die midway without consequence. A reader at ANY crash
-  * instant sees a complete manifest (old or new), never a mix. Single
-  * writer per table by contract — enforced by the drain-side
+  * Crash discipline: deltas and checkpoints are staged at `.<kind>-N.tmp`
+  * and published by ONE rename (the `_buckets` summary is written INSIDE
+  * the staged checkpoint, so a checkpoint is only ever visible whole). The
+  * newest checkpoint wins and only deltas above its seq are live, so the
+  * GC of folded deltas and older checkpoints can die midway without
+  * consequence. A reader at ANY crash instant sees a complete manifest
+  * (old or new), never a mix. Single writer per table by contract —
+  * enforced by the drain-side
   * [[graft.operators.JobLock]] that EVERY writing entry point acquires
   * (`IncrementalBackup.withDrainLock`: both the drain and a direct
   * `refreshManifestLog`/`refreshManifest` call contend on the same lock
@@ -77,9 +77,7 @@ object ManifestLog {
     * guard — a bucket whose [min,max] looks calendar-shaped can still hold
     * a file with a 13..99 month block under a wrong `pidIsYyyymm`
     * declaration). Consumers that step candidates through CALENDAR months
-    * may only do so on buckets with `shapeOk = true`; summaries written
-    * before the flag existed parse as `false` (conservative: the generic
-    * integer-enumeration branch decides, never calendar stepping).
+    * may only do so on buckets with `shapeOk = true`.
     */
   private final case class BucketSum(pb: Option[Long], mn: Option[Long],
       mx: Option[Long], rows: Long, shapeOk: Boolean)
@@ -90,26 +88,36 @@ final class ManifestLog(spark: SparkSession, path: String) {
   private val root = new Path(path)
   // checksum-off: the log's files are small metadata, created by the driver
   private val fs = DriverParquet.metadataFs(root, spark.sparkContext.hadoopConfiguration)
-  private def ckptPath = new Path(root, "checkpoint")
-  private def deltaPath(seq: Long) = new Path(root, s"delta-$seq")
+  private val log = new AtomicLog(fs, root)
+  private val Delta = "delta"
+  private val Ckpt = "checkpoint"
   private def conf = spark.sparkContext.hadoopConfiguration
+
+  /** The log from one listing: the newest checkpoint's seq (`upto`, -1
+    * when none exists) and the live deltas above it, oldest first.
+    */
+  private final class State(val listing: AtomicLog.Listing) {
+    val upto: Long = listing.newest(Ckpt).getOrElse(-1L)
+    val live: Seq[Long] = listing.seqs(Delta).filter(_ > upto)
+    def ckptPath: Path = log.path(Ckpt, upto)
+  }
+  private def state(): State = new State(log.list())
 
   /** Data files of one published delta. */
   private def deltaFiles(seq: Long): Seq[FileStatus] =
-    DriverParquet.files(fs, deltaPath(seq))
+    DriverParquet.files(fs, log.path(Delta, seq))
 
   /** Data files of the checkpoint buckets `pbs` (their `pb=N/` dirs,
     * listed directly — no partition discovery), or, for `None`, of every
-    * bucket and of the flat root (pre-r10 checkpoints, and manifests with
-    * no stats column, are unbucketed). Lazy: a reader that stops early
-    * never lists the remaining buckets.
+    * bucket. Lazy: a reader that stops early never lists the remaining
+    * buckets.
     */
-  private def ckptFiles(pbs: Option[Seq[Long]]): LazyList[FileStatus] = {
+  private def ckptFiles(st: State, pbs: Option[Seq[Long]]): LazyList[FileStatus] = {
     val dirs = pbs match {
-      case Some(ps) => ps.to(LazyList).map(pb => new Path(ckptPath, s"pb=$pb"))
+      case Some(ps) => ps.to(LazyList).map(pb => new Path(st.ckptPath, s"pb=$pb"))
       case None =>
-        ckptPath #:: fs.listStatus(ckptPath).to(LazyList)
-          .filter(st => st.isDirectory && st.getPath.getName.startsWith("pb="))
+        fs.listStatus(st.ckptPath).to(LazyList)
+          .filter(f => f.isDirectory && f.getPath.getName.startsWith("pb="))
           .map(_.getPath)
     }
     dirs.flatMap(d => DriverParquet.files(fs, d))
@@ -124,49 +132,25 @@ final class ManifestLog(spark: SparkSession, path: String) {
     */
   private val bucketSpan = 100L
 
-  private def deltaSeqs: Seq[Long] =
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).map(_.getPath.getName).collect {
-      case n if n.startsWith("delta-") &&
-        fs.exists(new Path(root, s"$n/_SUCCESS")) =>
-        n.stripPrefix("delta-").toLong
-    }.toIndexedSeq
+  def deltasSinceCheckpoint: Int = state().live.size
 
-  /** Highest delta seq folded into the checkpoint; -1 when none exists. */
-  private def ckptUpto: Long =
-    if (!fs.exists(new Path(ckptPath, "_SUCCESS"))) -1L
-    else fs.listStatus(ckptPath).map(_.getPath.getName)
-      .collectFirst { case n if n.startsWith("_upto-") =>
-        n.stripPrefix("_upto-").toLong }
-      .getOrElse(throw new IllegalStateException(
-        s"checkpoint at $ckptPath has no _upto marker"))
-
-  def deltasSinceCheckpoint: Int = {
-    val upto = ckptUpto
-    deltaSeqs.count(_ > upto)
-  }
-
-  /** Cheap existence check (marker files only — no plan built, no fold):
-    * does a checkpoint or any live delta exist?
+  /** Cheap existence check (one listing — no plan built, no fold): does a
+    * checkpoint or any live delta exist?
     */
   def nonEmpty: Boolean = {
-    val upto = ckptUpto
-    upto >= 0 || deltaSeqs.exists(_ > upto)
+    val st = state()
+    st.upto >= 0 || st.live.nonEmpty
   }
 
-  /** Clean up folded deltas (a checkpoint that crashed between its swap and
-    * the delta GC leaves them — harmless to readers, removed here) and any
-    * staging dir a crashed [[commitDelta]] left. Single-writer contract
-    * makes deleting stale `.delta-*.tmp` safe.
+  /** Clean up folded deltas and older checkpoints (a checkpoint that
+    * crashed before its GC leaves them — harmless to readers, removed
+    * here) and any staging dir a crashed [[commitDelta]] or [[checkpoint]]
+    * left. Single-writer contract makes deleting the debris safe.
     */
   def gc(): Unit = {
-    if (!fs.exists(root)) return
-    val upto = ckptUpto
-    deltaSeqs.filter(_ <= upto).foreach(s => fs.delete(deltaPath(s), true))
-    fs.listStatus(root).map(_.getPath).foreach { p =>
-      if (p.getName.startsWith(".delta-") && p.getName.endsWith(".tmp"))
-        fs.delete(p, true)
-    }
+    val st = state()
+    log.gc(st.listing)(e =>
+      (e.kind == Delta && e.seq <= st.upto) || (e.kind == Ckpt && e.seq < st.upto))
   }
 
   /** Scheme-normalized fold key: `input_file_name()` yields `file:///x`
@@ -178,28 +162,23 @@ final class ManifestLog(spark: SparkSession, path: String) {
   private def keyExpr = regexp_replace(col("file"), schemePrefix, "/")
   private def keyOf(p: String): String = p.replaceFirst(schemePrefix, "/")
 
-  private def liveSeqs(upto: Long): Seq[Long] = deltaSeqs.filter(_ > upto).sorted
-
   /** The manifest schema (no `tombstone`): a checkpoint file's footer, else
     * a live delta's. Read on the driver — no inference job.
     */
-  private def manifestSchema(upto: Long, live: Seq[Long]): StructType =
-    (if (upto >= 0) ckptFiles(None) else LazyList.empty).headOption
+  private def manifestSchema(st: State): StructType =
+    (if (st.upto >= 0) ckptFiles(st, None) else LazyList.empty).headOption
       .map(DriverParquet.schema(conf, _))
       .getOrElse {
-        val d = live.to(LazyList).flatMap(deltaFiles).headOption
+        val d = st.live.to(LazyList).flatMap(deltaFiles).headOption
           .getOrElse(throw new IllegalStateException(s"no manifest data file at $path"))
         StructType(DriverParquet.schema(conf, d).fields.filterNot(_.name == "tombstone"))
       }
 
   /** The checkpoint relation with the bucket partition column dropped —
-    * readers see the manifest schema whether or not the snapshot is
-    * bucketed (legacy pre-r10 checkpoints are flat).
+    * readers see the manifest schema.
     */
-  private def ckptDf(schema: StructType): DataFrame = {
-    val df = spark.read.schema(schema).parquet(ckptPath.toString)
-    if (df.columns.contains("pb")) df.drop("pb") else df
-  }
+  private def ckptDf(st: State, schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(st.ckptPath.toString).drop("pb")
 
   /** The live deltas `live` folded last-writer-wins on the driver: per
     * fold key, the newest delta's row (the first one within a delta),
@@ -226,15 +205,15 @@ final class ManifestLog(spark: SparkSession, path: String) {
     * rows. Map-only — the deltas are folded on the driver, the checkpoint
     * is filtered by key membership, no join or window runs.
     */
-  private def fold(upto: Long, live: Seq[Long]): (DataFrame, Long) = {
-    val schema = manifestSchema(upto, live)
-    val (deltas, read) = foldDeltas(live, schema.fieldNames.toSeq)
+  private def fold(st: State): (DataFrame, Long) = {
+    val schema = manifestSchema(st)
+    val (deltas, read) = foldDeltas(st.live, schema.fieldNames.toSeq)
     import scala.jdk.CollectionConverters._
     val adds = spark.createDataFrame(deltas.values.flatten.toIndexedSeq.asJava, schema)
     val out =
-      if (upto < 0) adds
+      if (st.upto < 0) adds
       else {
-        val ck = ckptDf(schema)
+        val ck = ckptDf(st, schema)
         val kept = if (deltas.isEmpty) ck else ck.filter(!keyExpr.isin(deltas.keys.toSeq: _*))
         kept.unionByName(adds)
       }
@@ -247,34 +226,26 @@ final class ManifestLog(spark: SparkSession, path: String) {
     * (a fold's output); otherwise the map-only `fold`.
     */
   def current(): Option[DataFrame] = {
-    Compaction.recover(spark, ckptPath.toString)
-    val upto = ckptUpto
-    val live = liveSeqs(upto)
-    if (upto < 0 && live.isEmpty) None
-    else if (live.isEmpty) Some(ckptDf(manifestSchema(upto, live)))
-    else Some(fold(upto, live)._1)
+    val st = state()
+    if (st.upto < 0 && st.live.isEmpty) None
+    else if (st.live.isEmpty) Some(ckptDf(st, manifestSchema(st)))
+    else Some(fold(st)._1)
   }
 
   import ManifestLog.{BucketSum, Localized}
 
-  private def summaryPath = new Path(ckptPath, "_buckets")
-
-  private def readSummary(): Option[Seq[BucketSum]] =
-    if (!fs.exists(summaryPath)) None
-    else {
-      val in = fs.open(summaryPath)
-      val text =
-        try new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
-        finally in.close()
-      def opt(s: String): Option[Long] =
-        if (s == "null") None else Some(s.toLong)
-      Some(text.split('\n').filter(_.nonEmpty).toIndexedSeq.map { line =>
-        val f = line.split('\t')
-        // pre-r11 summaries carry no shape field → conservative false
-        BucketSum(opt(f(0)), opt(f(1)), opt(f(2)), f(3).toLong,
-          shapeOk = f.length > 4 && f(4) == "1")
-      })
+  private def readSummary(st: State): Seq[BucketSum] = {
+    val in = fs.open(new Path(st.ckptPath, "_buckets"))
+    val text =
+      try new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
+      finally in.close()
+    def opt(s: String): Option[Long] =
+      if (s == "null") None else Some(s.toLong)
+    text.split('\n').filter(_.nonEmpty).toIndexedSeq.map { line =>
+      val f = line.split('\t')
+      BucketSum(opt(f(0)), opt(f(1)), opt(f(2)), f(3).toLong, shapeOk = f(4) == "1")
     }
+  }
 
   /** The manifest restricted to checkpoint buckets whose `[min, max]`
     * summary interval `keep` selects, plus ALL live deltas, folded
@@ -285,9 +256,8 @@ final class ManifestLog(spark: SparkSession, path: String) {
     * conversely a file whose checkpoint row was pruned away cannot be
     * shadowed by anything the consumer needs — tombstones for pruned rows
     * kill rows the consumer never sees. Cost: driver rows ∝ selected
-    * buckets + live deltas; a legacy (pre-r10, summary-less) checkpoint
-    * degrades to a full read, reported honestly in the gauge. Every read
-    * here runs on the driver ([[DriverParquet]]): selected buckets are
+    * buckets + live deltas. Every read here runs on the driver
+    * ([[DriverParquet]]): selected buckets are
     * read from their `pb=N/` dirs, live deltas whole, and the schema comes
     * from one file footer — the call schedules no Spark job.
     */
@@ -301,41 +271,26 @@ final class ManifestLog(spark: SparkSession, path: String) {
     * intersection consumers ignore it (interval logic is shape-free).
     */
   def localizedPruned(keep: (Long, Long, Boolean) => Boolean): Localized = {
-    Compaction.recover(spark, ckptPath.toString)
-    val upto = ckptUpto
-    val live = liveSeqs(upto)
-    require(upto >= 0 || live.nonEmpty, s"no manifest at $path")
-    var selB = 0; var totB = 0
-    var selR = 0L; var totR = 0L
+    val st = state()
+    require(st.upto >= 0 || st.live.nonEmpty, s"no manifest at $path")
+    val sums = if (st.upto < 0) Seq.empty else readSummary(st)
+    val sel = sums.filter(b =>
+      b.mn.isDefined && b.mx.isDefined && keep(b.mn.get, b.mx.get, b.shapeOk))
     val ckRows: Seq[Row] =
-      if (upto < 0) Seq.empty
-      else readSummary() match {
-        case Some(sums) =>
-          totB = sums.size
-          totR = sums.map(_.rows).sum
-          val sel = sums.filter(b =>
-            b.mn.isDefined && b.mx.isDefined && keep(b.mn.get, b.mx.get, b.shapeOk))
-          selB = sel.size
-          selR = sel.map(_.rows).sum
-          if (sel.isEmpty) Seq.empty
-          else DriverParquet.read(conf, ckptFiles(Some(sel.map(_.pb.get))))
-        case None =>
-          val rows = DriverParquet.read(conf, ckptFiles(None))
-          totB = 1; selB = 1; totR = rows.length; selR = rows.length
-          rows
-      }
+      if (sel.isEmpty) Seq.empty
+      else DriverParquet.read(conf, ckptFiles(st, Some(sel.map(_.pb.get))))
     // deltas are always read whole: small by construction (∝ new files
     // since the last fold, GC'd at checkpoint cadence). The local fold is
     // last-writer-wins over the (tiny) localized row set: a delta row
     // shadows the checkpoint row with its key.
-    val schema = manifestSchema(upto, live)
-    val (deltas, deltaRead) = foldDeltas(live, schema.fieldNames.toSeq)
+    val schema = manifestSchema(st)
+    val (deltas, deltaRead) = foldDeltas(st.live, schema.fieldNames.toSeq)
     val ckFileIdx = schema.fieldIndex("file")
     val folded = ckRows.filterNot(r => deltas.contains(keyOf(r.getString(ckFileIdx)))) ++
       deltas.values.flatten
     import scala.jdk.CollectionConverters._
     Localized(spark.createDataFrame(folded.asJava, schema),
-      selB, totB, selR, totR, deltaRead)
+      sel.size, sums.size, sel.map(_.rows).sum, sums.map(_.rows).sum, deltaRead)
   }
 
   /** Up to `n` file paths from the log without executing the fold — the
@@ -345,14 +300,13 @@ final class ManifestLog(spark: SparkSession, path: String) {
     * are excluded. Driver-side reads only.
     */
   def sampleFiles(n: Int): Seq[String] = {
-    val upto = ckptUpto
-    val live = deltaSeqs.filter(_ > upto).sorted.reverse
-    val fromDeltas = live.iterator.flatMap { s =>
+    val st = state()
+    val fromDeltas = st.live.reverseIterator.flatMap { s =>
       DriverParquet.read(conf, deltaFiles(s), Seq("file", "tombstone"))
         .collect { case r if !r.getBoolean(1) => r.getString(0) }
     }.take(n).toIndexedSeq
-    if (fromDeltas.size >= n || upto < 0) fromDeltas
-    else fromDeltas ++ DriverParquet.read(conf, ckptFiles(None), Seq("file"),
+    if (fromDeltas.size >= n || st.upto < 0) fromDeltas
+    else fromDeltas ++ DriverParquet.read(conf, ckptFiles(st, None), Seq("file"),
       limit = n - fromDeltas.size).map(_.getString(0))
   }
 
@@ -373,16 +327,13 @@ final class ManifestLog(spark: SparkSession, path: String) {
     * Cost ∝ live deltas, never manifest size; read on the driver.
     */
   def coveredByLiveDeltas(candidates: Seq[String]): Set[String] = {
-    val live = liveSeqs(ckptUpto)
+    val live = state().live
     if (live.isEmpty || candidates.isEmpty) Set.empty
     else {
       val (deltas, _) = foldDeltas(live, Seq("file"))
       candidates.filter(c => deltas.get(keyOf(c)).exists(_.isDefined)).toSet
     }
   }
-
-  private def nextSeq: Long =
-    math.max(ckptUpto, deltaSeqs.maxOption.getOrElse(-1L)) + 1
 
   /** Append one delta: `adds` are full manifest rows for files that
     * appeared; `dead` are stored paths of files that vanished (tombstones).
@@ -391,13 +342,16 @@ final class ManifestLog(spark: SparkSession, path: String) {
     * written on the driver (`DriverParquet.write`: one part file plus
     * `_SUCCESS`) — no Spark job. Staged at `.delta-N.tmp`, published by a
     * single atomic rename — a crash before the rename leaves only
-    * invisible debris ([[gc]] clears it), a crash after it leaves a
+    * invisible debris (the next write clears it), a crash after it leaves a
     * committed delta whose re-derivation on retry is an empty diff. Write
     * size ∝ the diff, never the manifest. Returns the published seq, or
     * None for an empty diff (no delta dir is created — idle drains append
-    * nothing).
+    * nothing). The rows must carry a `min_` stats column: the checkpoint
+    * buckets by it.
     */
   def commitDelta(adds: DataFrame, dead: Seq[String]): Option[Long] = {
+    require(adds.columns.exists(_.startsWith("min_")),
+      s"manifest rows need a min_ stats column; got: ${adds.columns.mkString(", ")}")
     val added = adds.collect()
     if (added.isEmpty && dead.isEmpty) return None
     val schema = adds.schema.add("tombstone", BooleanType, nullable = false)
@@ -415,18 +369,21 @@ final class ManifestLog(spark: SparkSession, path: String) {
         }
       })
     }
-    val seq = nextSeq
-    val tmp = new Path(root, s".delta-$seq.tmp")
-    fs.delete(tmp, true)
-    DriverParquet.write(fs, tmp, schema, added.map(r => Row.fromSeq(r.toSeq :+ false)) ++ tombs)
-    FaultPoints.hit("manifest.delta.staged")
-    Compaction.renameOrThrow(fs, tmp, deltaPath(seq))
+    val st = state()
+    val seq = (st.upto +: st.listing.seqs(Delta)).max + 1
+    log.gc(st.listing)(_ => false)
+    log.publish(Delta, seq) { tmp =>
+      DriverParquet.write(fs, tmp, schema, added.map(r => Row.fromSeq(r.toSeq :+ false)) ++ tombs)
+      FaultPoints.hit("manifest.delta.staged")
+    }
     FaultPoints.hit("manifest.delta.published")
     Some(seq)
   }
 
-  /** Fold checkpoint + live deltas into a NEW checkpoint (atomic two-rename
-    * swap), then GC the folded deltas. No-op when no delta is live. The
+  /** Fold checkpoint + live deltas into a NEW checkpoint, `checkpoint-N`
+    * for the newest delta N it folds (staged, published by one rename),
+    * then GC the folded deltas and the older checkpoint. No-op when no
+    * delta is live. The
     * fold is the map-only `fold`: the live deltas are folded on the
     * driver, and the checkpoint is streamed once, minus the rows they
     * shadow, straight into the new snapshot — the O(total-files) scan and
@@ -441,32 +398,22 @@ final class ManifestLog(spark: SparkSession, path: String) {
     * footer.
     */
   def checkpoint(): Unit = {
-    Compaction.recover(spark, ckptPath.toString)
-    val upto = ckptUpto
-    val live = liveSeqs(upto)
-    if (live.isEmpty) return
+    val st = state()
+    if (st.live.isEmpty) return
     FaultPoints.hit("manifest.checkpoint.pre")
-    val (folded, deltaRows) = fold(upto, live)
+    val (folded, deltaRows) = fold(st)
     val ckptRows =
-      if (upto < 0) 0L else ckptFiles(None).map(DriverParquet.rowCount(conf, _)).sum
+      if (st.upto < 0) 0L else ckptFiles(st, None).map(DriverParquet.rowCount(conf, _)).sum
     val shards = math.max(1L, (ckptRows + deltaRows) / 2000000L).toInt
-    val minCol = folded.columns.find(_.startsWith("min_"))
-    Compaction.swapIn(spark, ckptPath.toString) { tmp =>
-      minCol match {
-        case Some(mc) =>
-          folded.withColumn("pb", floor(col(mc) / bucketSpan))
-            .coalesce(shards).write.partitionBy("pb").parquet(tmp)
-          // no bucket: the partitioned write left no data file, so one
-          // schema-only file keeps the manifest schema in a footer
-          if (writeBucketSummary(tmp, folded, mc) == 0)
-            spark.createDataFrame(java.util.Collections.emptyList[Row](), folded.schema)
-              .write.mode("append").parquet(tmp)
-        case None =>
-          folded.coalesce(shards).write.parquet(tmp)
-      }
-      // marker AFTER the snapshot is complete, still before any rename —
-      // a checkpoint is only ever visible with its coverage recorded
-      fs.create(new Path(tmp, s"_upto-${live.max}"), true).close()
+    val mc = folded.columns.find(_.startsWith("min_")).get
+    log.gc(st.listing)(_ => false)
+    log.publish(Ckpt, st.live.max) { tmp =>
+      folded.withColumn("pb", floor(col(mc) / bucketSpan))
+        .coalesce(shards).write.partitionBy("pb").parquet(tmp.toString)
+      // no bucket: the partitioned write left no data file, so one
+      // schema-only file keeps the manifest schema in a footer
+      if (writeBucketSummary(tmp, folded, mc) == 0)
+        DriverParquet.write(fs, new Path(tmp, "pb=0"), folded.schema, Nil)
     }
     FaultPoints.hit("manifest.checkpoint.swapped")
     gc()
@@ -482,7 +429,7 @@ final class ManifestLog(spark: SparkSession, path: String) {
     * consumers keep their per-file conservative guard at bucket grain.
     * Returns the number of buckets.
     */
-  private def writeBucketSummary(tmpDir: String, folded: DataFrame,
+  private def writeBucketSummary(tmpDir: Path, folded: DataFrame,
       minCol: String): Int = {
     val maxCol = "max_" + minCol.stripPrefix("min_")
     def yyyymm(c: Column): Column =

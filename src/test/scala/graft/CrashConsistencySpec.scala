@@ -27,47 +27,47 @@ class CrashConsistencySpec extends SparkSpec {
       BackupStatus("t1", "db", t, None, "m", i.toLong, isComplete = false, 4))
   }
 
-  test("StatusStore: kill between pointer delete and rename rolls forward to the committed set") {
+  private def snapshots(dir: String): Set[String] =
+    fs.listStatus(new Path(dir)).map(_.getPath.getName)
+      .filterNot(_.endsWith(".crc")).toSet
+
+  test("StatusStore: a kill after a snapshot's publish but before its GC leaves the newest snapshot winning") {
     val dir = Files.createTempDirectory("graft-crash-st").toString
     val store = new StatusStore(spark, dir)
-    store.append(statusRows(3)) // old set, committed normally
-    // --- simulate write(newSet) crashing between delete(_CURRENT) and
-    // rename(tmp, _CURRENT): a complete newer gen + tmp pointer exist,
-    // the pointer is gone
+    store.append(statusRows(3))                 // snapshot-0
+    store.markComplete("t1", 1L, new java.sql.Timestamp(1L)) // snapshot-1
+    // a writer killed right after publishing snapshot-2, before deleting
+    // snapshot-0 (snapshot-2 written by Spark, INT96 timestamps)
     import spark.implicits._
     val newSet = statusRows(3).map(_.copy(isComplete = true))
-    val gen = s"gen-${System.currentTimeMillis() + 1000}-42"
-    spark.createDataset(newSet).coalesce(1).write.parquet(s"$dir/$gen")
-    val tmp = new Path(dir, s"_CURRENT.tmp.$gen")
-    val out = fs.create(tmp, true)
-    try out.write(gen.getBytes("UTF-8")) finally out.close()
-    fs.delete(new Path(dir, "_CURRENT"), false)
-    // reader in the crash window: the newest COMPLETE gen — the set being
-    // committed — not an empty store
-    assert(store.read().collect().forall(_.isComplete),
-      "crash-window read must see the committed new set")
-    // and the store keeps working: a subsequent write commits + GCs
-    store.markComplete("t1", 1L, new java.sql.Timestamp(1L))
-    assert(store.read().count() == 3)
-    val gens = fs.listStatus(new Path(dir)).map(_.getPath.getName)
-      .count(_.startsWith("gen-"))
-    assert(gens <= 2, s"generation GC left $gens dirs")
+    spark.createDataset(newSet).coalesce(1).write.parquet(s"$dir/snapshot-2")
+    assert(snapshots(dir) == Set("snapshot-0", "snapshot-1", "snapshot-2"))
+    // a reader in the crash state sees the newest snapshot, whole
+    val fresh = new StatusStore(spark, dir)
+    assert(fresh.read().collect().toSet == newSet.toSet)
+    // and the store keeps working: the next write keeps the newest two
+    fresh.delete("t1", 3L)
+    assert(fresh.read().count() == 2)
+    assert(snapshots(dir) == Set("snapshot-2", "snapshot-3"))
   }
 
-  test("StatusStore: an UNCOMMITTED generation (no _SUCCESS) is never read") {
+  test("StatusStore: a staged, unpublished snapshot is never read, and the next write clears it") {
     val dir = Files.createTempDirectory("graft-crash-st2").toString
     val store = new StatusStore(spark, dir)
     store.append(statusRows(2))
-    // a write that died mid-parquet-job: gen dir present, no _SUCCESS
-    val orphan = new Path(dir, s"gen-${System.currentTimeMillis() + 5000}-7")
+    // a write killed before its rename, complete under the staged name
+    // of the next seq, and one killed mid-write
+    import spark.implicits._
+    spark.createDataset(statusRows(5)).coalesce(1).write.parquet(s"$dir/.snapshot-1.tmp")
+    val orphan = new Path(dir, ".snapshot-2.tmp")
     fs.mkdirs(orphan)
     val junk = fs.create(new Path(orphan, "part-00000.parquet"), true)
     try junk.write(Array[Byte](1, 2, 3)) finally junk.close()
-    // pointer intact → pointer wins
-    assert(store.read().count() == 2)
-    // pointer lost → fallback must SKIP the incomplete gen
-    fs.delete(new Path(dir, "_CURRENT"), false)
-    assert(store.read().count() == 2)
+    assert(new StatusStore(spark, dir).read().count() == 2)
+    store.markComplete("t1", 1L, new java.sql.Timestamp(1L))
+    assert(snapshots(dir) == Set("snapshot-0", "snapshot-1"))
+    val rows = new StatusStore(spark, dir).rows()
+    assert(rows.size == 2 && rows.count(_.isComplete) == 1)
   }
 
   test("Compaction: reader sees old or new at every crash state; recovery converges from each") {
@@ -187,19 +187,17 @@ class CrashConsistencySpec extends SparkSpec {
     fs.rename(p, old)
     Compaction.recover(spark, m)
     assert(spark.read.parquet(m).count() == 7, "roll-back to the displaced set")
-    // a refresh that died MID-CHECKPOINT-WRITE (incomplete tmp inside the
-    // manifest log, no _SUCCESS, no live checkpoint yet) must not be
-    // mistaken for a checkpoint: refreshManifest clears the debris and
-    // commits a fresh, correct build. (A crashed checkpoint whose tmp
-    // completed is the roll-forward case above — swapIn's protocol is the
-    // same at the new location.)
+    // a refresh that died MID-CHECKPOINT-WRITE (a staged, unpublished
+    // checkpoint inside the manifest log, no live checkpoint yet) must not
+    // be mistaken for a checkpoint: refreshManifest clears the debris and
+    // commits a fresh, correct build.
     val lakeDf = Tables.orders(spark, sf).limit(500)
     lakeDf.repartition(2).write.parquet(s"$dir/lake")
     val cfg = graft.etl.JobConfig(tableName = "orders", numMappers = 2)
     val job = new graft.etl.IncrementalBackup(spark, cfg,
       new graft.etl.StatusStore(spark, s"$dir/status"), dir)
     val mroot = new Path(job.manifestPath)
-    val mtmp = new Path(mroot, ".checkpoint.compact.tmp")
+    val mtmp = new Path(mroot, ".checkpoint-0.tmp")
     fs.mkdirs(mtmp)
     val mj = fs.create(new Path(mtmp, "part-dead.parquet"), true)
     try mj.write(Array[Byte](2)) finally mj.close()
@@ -701,5 +699,70 @@ class CrashConsistencySpec extends SparkSpec {
       if (s.isDirectory) noMarkers(s.getPath)
     }
     noMarkers(new Path(vis))
+  }
+
+  /** Hand-build the kill window of a `Compaction.swapIn` of `live`: the
+    * complete rewrite `staged` (written by Spark, so with `_SUCCESS`) under
+    * the staged name, and the live dir renamed to the old name.
+    */
+  private def killBetweenRenames(live: String,
+      staged: org.apache.spark.sql.DataFrame): Unit = {
+    val p = new Path(live)
+    staged.coalesce(1).write.parquet(s"${p.getParent}/.${p.getName}.compact.tmp")
+    assert(fs.rename(p, new Path(p.getParent, s".${p.getName}.compact.old")))
+    assert(!fs.exists(p))
+  }
+
+  test("MergeOnRead.compact killed between its renames: the next compact converges to the never-crashed rows, and the deltas survive the crash") {
+    import spark.implicits._
+    import graft.etl.MergeOnRead
+    val dir = Files.createTempDirectory("graft-crash-mor").toString
+    def land(at: String): Unit = {
+      Seq((1L, "a", 0L, "u"), (2L, "b", 0L, "u"), (3L, "c", 0L, "u"))
+        .toDF("k", "v", "version", "op").write.parquet(s"$at/base")
+      Seq((2L, "b2", 1L, "u"), (3L, "c", 1L, "d"), (4L, "d", 1L, "u"))
+        .toDF("k", "v", "version", "op").write.parquet(s"$at/delta")
+    }
+    def rows(at: String) = spark.read.parquet(s"$at/base")
+      .collect().map(_.toString).sorted.toSeq
+    land(s"$dir/twin")
+    MergeOnRead.compact(spark, s"$dir/twin/base", s"$dir/twin/delta", Seq("k"), "version")
+    val want = rows(s"$dir/twin")
+    assert(want.size == 3)
+
+    val at = s"$dir/crash"
+    land(at)
+    val folded = MergeOnRead.latest(spark.read.parquet(s"$at/base")
+      .unionByName(spark.read.parquet(s"$at/delta")), Seq("k"), "version")
+      .withColumn("version", lit(0L)).withColumn("op", lit("u"))
+    killBetweenRenames(s"$at/base", folded)
+    assert(fs.exists(new Path(s"$at/delta")), "the deltas outlive the crash")
+    MergeOnRead.compact(spark, s"$at/base", s"$at/delta", Seq("k"), "version")
+    assert(rows(at) == want)
+    assert(!fs.exists(new Path(s"$at/delta")))
+    assert(fs.listStatus(new Path(at)).map(_.getPath.getName).toSet == Set("base"))
+  }
+
+  test("Purge.purge killed between its renames: the next purge converges to the never-crashed rows") {
+    import spark.implicits._
+    import graft.etl.Purge
+    val dir = Files.createTempDirectory("graft-crash-purge").toString
+    def land(at: String): Unit =
+      (1L to 40L).map(k => (k, s"v$k")).toDF("key", "v").write.parquet(s"$at/t")
+    val keys = Seq(3L, 7L).toDF("key")
+    def rows(at: String) = spark.read.parquet(s"$at/t")
+      .collect().map(_.toString).sorted.toSeq
+    land(s"$dir/twin")
+    Purge.purge(spark, s"$dir/twin/t", "key", keys)
+    val want = rows(s"$dir/twin")
+    assert(want.size == 38)
+
+    val at = s"$dir/crash"
+    land(at)
+    killBetweenRenames(s"$at/t", spark.read.parquet(s"$at/t").filter(!col("key").isin(3L, 7L)))
+    val st = Purge.purge(spark, s"$at/t", "key", keys)
+    assert(rows(at) == want)
+    assert(st.rowsBefore == 38L && st.rowsAfter == 38L)
+    assert(fs.listStatus(new Path(at)).map(_.getPath.getName).toSet == Set("t"))
   }
 }

@@ -45,26 +45,20 @@ class DriverParquetSpec extends SparkSpec with JobCount {
         isComplete = false, 1))
   }
 
-  private def gens(dir: String): Seq[String] =
-    new java.io.File(dir).listFiles().map(_.getName).filter(_.startsWith("gen-"))
-      .map(g => s"$dir/$g").toSeq
-
-  test("a driver-written (writeGen) status generation reads as Spark reads it") {
+  test("a driver-written status snapshot reads as Spark reads it") {
     val dir = Files.createTempDirectory("graft-dp-gen").toString
     new StatusStore(spark, dir).writeRows(statusRows)
-    assertSameAsSpark(gens(dir))
+    assertSameAsSpark(Seq(s"$dir/snapshot-0"))
     assert(new StatusStore(spark, dir).rows().toSet == statusRows.toSet)
   }
 
   test("a Spark-written status generation (INT96 timestamps) reads as Spark reads it") {
     val dir = Files.createTempDirectory("graft-dp-sgen").toString
     import spark.implicits._
-    val gen = s"$dir/gen-1-1"
-    spark.createDataset(statusRows).coalesce(1).write.parquet(gen)
-    assertSameAsSpark(Seq(gen))
+    val snap = s"$dir/snapshot-0"
+    spark.createDataset(statusRows).coalesce(1).write.parquet(snap)
+    assertSameAsSpark(Seq(snap))
     // and the store decodes it into the same status rows
-    val ptr = fs.create(new Path(dir, "_CURRENT"), true)
-    try ptr.write("gen-1-1".getBytes("UTF-8")) finally ptr.close()
     assert(new StatusStore(spark, dir).rows().toSet == statusRows.toSet)
   }
 
@@ -97,11 +91,11 @@ class DriverParquetSpec extends SparkSpec with JobCount {
     assert(proj.size == 2 && proj.head.schema.fieldNames.toSeq == Seq("tombstone", "file"))
 
     log.checkpoint()
-    val buckets = new java.io.File(s"$dir/m/checkpoint").listFiles()
+    val buckets = new java.io.File(s"$dir/m/checkpoint-0").listFiles()
       .filter(_.getName.startsWith("pb=")).map(_.getPath).toSeq
     assert(buckets.size >= 2, s"expected a bucketed checkpoint: $buckets")
     val files = buckets.flatMap(b => DriverParquet.files(fs, new Path(b)))
-    val want = spark.read.parquet(s"$dir/m/checkpoint").drop("pb")
+    val want = spark.read.parquet(s"$dir/m/checkpoint-0").drop("pb")
     assert(sorted(DriverParquet.read(conf, files)) == sorted(want.collect().toSeq))
     assert(DriverParquet.schema(conf, files.head) == want.schema)
   }

@@ -168,17 +168,16 @@ class ManifestLogSpec extends SparkSpec {
 
   /** The reference fold over the log's files as they lie on disk:
     * checkpoint ∪ live deltas ranked per scheme-normalized key by delta
-    * seq (the checkpoint ranks as its `_upto` seq), newest wins, tombstones
+    * seq (the checkpoint `checkpoint-N` ranks as seq N), newest wins, tombstones
     * dropped — the window `current()` ran before the fold became map-only.
     * Rows as sorted strings over the manifest columns.
     */
   private def windowFold(m: String): Seq[String] = {
     val fs = new Path(m).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ck = new Path(m, "checkpoint")
-    val upto =
-      if (!fs.exists(new Path(ck, "_SUCCESS"))) -1L
-      else fs.listStatus(ck).map(_.getPath.getName)
-        .collectFirst { case n if n.startsWith("_upto-") => n.stripPrefix("_upto-").toLong }.get
+    val upto = fs.listStatus(new Path(m)).map(_.getPath.getName)
+      .collect { case n if n.startsWith("checkpoint-") => n.stripPrefix("checkpoint-").toLong }
+      .maxOption.getOrElse(-1L)
+    val ck = new Path(m, s"checkpoint-$upto")
     val ckDf =
       if (upto < 0) Seq.empty
       else Seq(spark.read.parquet(ck.toString).drop("pb")
@@ -206,7 +205,9 @@ class ManifestLogSpec extends SparkSpec {
     assert(log.deltasSinceCheckpoint > 0)
     log.checkpoint()
     assert(log.deltasSinceCheckpoint == 0)
-    assert(sorted(spark.read.parquet(s"$m/checkpoint").drop("pb")) == want)
+    val ck = new java.io.File(m).list().filter(_.startsWith("checkpoint-")).toSeq
+    assert(ck.size == 1, s"older checkpoints left: $ck")
+    assert(sorted(spark.read.parquet(s"$m/${ck.head}").drop("pb")) == want)
     assert(sorted(log.current().get) == want)
   }
 
@@ -252,5 +253,14 @@ class ManifestLogSpec extends SparkSpec {
     assert(first.localizedPruned((_, _) => true).view.collect().isEmpty)
     first.commitDelta(rows(("/d.parquet", 6L, 199801L, 199801L)), Seq.empty)
     assertFoldEquivalent(first, m1, Seq(row("/d.parquet", 6L, 199801L, 199801L)))
+  }
+
+  test("commitDelta rejects rows without a min_ stats column, naming their columns") {
+    val dir = Files.createTempDirectory("graft-mlog9").toString
+    val log = new ManifestLog(spark, s"$dir/m")
+    val e = intercept[IllegalArgumentException](
+      log.commitDelta(rows(("/a.parquet", 1L, 1L, 1L)).drop("min_pid"), Seq.empty))
+    assert(e.getMessage.contains("file, n_rows, max_pid"), e.getMessage)
+    assert(!log.nonEmpty)
   }
 }

@@ -6,11 +6,11 @@ import java.sql.Timestamp
 import graft.etl.{BackupStatus, StatusStore}
 
 /** StatusStore reads and writes are driver-side parquet IO with a
-  * generation-keyed cache. These tests pin the contract that must hold:
+  * snapshot-keyed cache. These tests pin the contract that must hold:
   * the at-rest layout stays Spark-readable, a FRESH instance (cache-cold,
   * driver-side decode) sees exactly what a driver-side writer wrote
-  * (timestamps included), and a generation landed by ANOTHER writer
-  * invalidates the cache via the pointer resolve.
+  * (timestamps included), and a snapshot landed by ANOTHER writer
+  * invalidates the cache via the listing every read makes.
   */
 class StatusStoreSpec extends SparkSpec {
 
@@ -27,15 +27,15 @@ class StatusStoreSpec extends SparkSpec {
       row("t1", 199502L, done = true, end = Some(new Timestamp(1234567899999L))),
       row("t2", 0L))
     store.writeRows(rows)
-    // fresh instance: no cache, resolves the pointer and decodes the
-    // generation on the driver
+    // fresh instance: no cache, lists the log and decodes the newest
+    // snapshot on the driver
     val fresh = new StatusStore(spark, dir)
     assert(fresh.rows().sortBy(_.primaryPartitionValue).sortBy(_.tableName) ==
       rows.sortBy(_.primaryPartitionValue).sortBy(_.tableName))
-    // and a plain Spark read of the generation dir sees the same values
+    // and a plain Spark read of the snapshot sees the same values
     val gen = spark.read.parquet(
       new java.io.File(dir).listFiles().map(_.getName)
-        .filter(_.startsWith("gen-")).map(g => s"$dir/$g"): _*)
+        .filter(_.startsWith("snapshot-")).map(g => s"$dir/$g"): _*)
     assert(gen.count() == 3)
     import org.apache.spark.sql.functions.col
     assert(gen.filter(col("isComplete")).count() == 1)
@@ -46,8 +46,8 @@ class StatusStoreSpec extends SparkSpec {
     val a = new StatusStore(spark, dir)
     val b = new StatusStore(spark, dir)
     a.writeRows(Seq(row("t", 1L)))
-    assert(b.rows().map(_.primaryPartitionValue) == IndexedSeq(1L)) // b caches gen 1
-    a.writeRows(Seq(row("t", 1L), row("t", 2L)))                    // a lands gen 2
+    assert(b.rows().map(_.primaryPartitionValue) == IndexedSeq(1L)) // b caches snapshot-0
+    a.writeRows(Seq(row("t", 1L), row("t", 2L)))                    // a lands snapshot-1
     assert(b.rows().map(_.primaryPartitionValue).sorted == IndexedSeq(1L, 2L))
   }
 
