@@ -768,29 +768,26 @@ object ScaleBench {
       }
       // r9 verdict task 4: the soak also pins the BOUNDED-GROWTH invariant
       // of every drain-side log — live deltas <= checkpoint cadence, journal
-      // waves <= cadence + 1 (the sequence anchor), refresh markers <= 1 —
-      // end-to-end across all cycles, not just per-call in specs
-      def refreshMarkers(): Int = {
-        val p = new org.apache.hadoop.fs.Path(job.manifestPath)
-        val mfs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!mfs.exists(p)) 0
-        else mfs.listStatus(p).count(_.getPath.getName.startsWith("_refresh-"))
-      }
+      // waves <= cadence + 1 (the sequence anchor), cadence and watermark
+      // entries <= 1 each — end-to-end across all cycles, not just per-call
+      // in specs
       var copiedTotal = 0
       val per = (0 until cycles).map { k =>
         landMonth(months(k), k)
         var copied = Seq.empty[Long]
         val etlS = timed { copied = job.runPrunedIncremental(lake, maxParallel = 4) }
         copiedTotal += copied.size
-        val deltasLive = new graft.sources.ManifestLog(spark, job.manifestPath)
-          .deltasSinceCheckpoint
+        val mlog = new graft.sources.ManifestLog(spark, job.manifestPath)
+        val deltasLive = mlog.deltasSinceCheckpoint
         val wavesLive = graft.sources.IngestLog.waves(spark, lake).size
-        val markers = refreshMarkers()
+        val cadence = mlog.entryCount(graft.sources.ManifestLog.Cadence)
+        val watermarks = mlog.entryCount(graft.sources.ManifestLog.Watermark)
         assert(deltasLive <= cfg.manifestCheckpointEvery,
           s"cycle $k: $deltasLive live deltas > cadence ${cfg.manifestCheckpointEvery}")
         assert(wavesLive <= cfg.manifestCheckpointEvery + 1,
           s"cycle $k: $wavesLive journal waves > cadence + anchor")
-        assert(markers <= 1, s"cycle $k: $markers refresh markers")
+        assert(cadence <= 1, s"cycle $k: $cadence cadence entries")
+        assert(watermarks <= 1, s"cycle $k: $watermarks watermark entries")
         val batch = sigs.filter(col("doc_id") >= 250 &&
           pmod(col("doc_id"), lit(cycles.toLong)) === k)
         val visS = timed {
@@ -824,16 +821,16 @@ object ScaleBench {
               targetBytes = 64L * 1024 * 1024, maxParallel = 8)
             ()
           } else 0.0
-        System.err.println(f"[scale] steady_drain cycle $k%2d etl=${etlS}%.2fs vis=${visS}%.2fs ivf=${ivfS}%.2fs pidx=${pidxS}%.2fs maint=${maintS}%.2fs lake_files=${countParquetFiles(lake)} deltas=$deltasLive waves=$wavesLive markers=$markers")
+        System.err.println(f"[scale] steady_drain cycle $k%2d etl=${etlS}%.2fs vis=${visS}%.2fs ivf=${ivfS}%.2fs pidx=${pidxS}%.2fs maint=${maintS}%.2fs lake_files=${countParquetFiles(lake)} deltas=$deltasLive waves=$wavesLive cadence=$cadence watermarks=$watermarks")
         (etlS, visS, ivfS, pidxS, maintS, countParquetFiles(lake),
-          deltasLive, wavesLive, markers)
+          deltasLive, wavesLive, cadence)
       }
       val (etl, vis, ivf, pidx, maint, lakeF) =
         (per.map(_._1), per.map(_._2), per.map(_._3), per.map(_._4),
           per.map(_._5), per.map(_._6))
       val (dLive, wLive, mLive) = (per.map(_._7), per.map(_._8), per.map(_._9))
       System.err.println(f"[scale] steady_drain etl ${avgD(etl.take(5))}%.2f->${avgD(etl.takeRight(5))}%.2fs vis ${avgD(vis.take(5))}%.2f->${avgD(vis.takeRight(5))}%.2fs ivf ${avgD(ivf.take(5))}%.2f->${avgD(ivf.takeRight(5))}%.2fs pidx ${avgD(pidx.take(5))}%.2f->${avgD(pidx.takeRight(5))}%.2fs months=$copiedTotal deltas_max=${dLive.max} waves_max=${wLive.max}")
-      s""","steady_drain":{"cycles":$cycles,"months_copied":$copiedTotal,"etl_s":${s3arr(etl)},"vis_probe_s":${s3arr(vis)},"ivf_probe_s":${s3arr(ivf)},"pidx_probe_s":${s3arr(pidx)},"maintenance_s":${s3arr(maint)},"lake_files":${iarr(lakeF)},"live_deltas":${iarr(dLive)},"journal_waves":${iarr(wLive)},"refresh_markers":${iarr(mLive)},"log_growth_bounded":true,"etl_first5_avg_s":${s3(avgD(etl.take(5)))},"etl_last5_avg_s":${s3(avgD(etl.takeRight(5)))},"vis_first5_avg_s":${s3(avgD(vis.take(5)))},"vis_last5_avg_s":${s3(avgD(vis.takeRight(5)))},"ivf_first5_avg_s":${s3(avgD(ivf.take(5)))},"ivf_last5_avg_s":${s3(avgD(ivf.takeRight(5)))},"pidx_first5_avg_s":${s3(avgD(pidx.take(5)))},"pidx_last5_avg_s":${s3(avgD(pidx.takeRight(5)))}}"""
+      s""","steady_drain":{"cycles":$cycles,"months_copied":$copiedTotal,"etl_s":${s3arr(etl)},"vis_probe_s":${s3arr(vis)},"ivf_probe_s":${s3arr(ivf)},"pidx_probe_s":${s3arr(pidx)},"maintenance_s":${s3arr(maint)},"lake_files":${iarr(lakeF)},"live_deltas":${iarr(dLive)},"journal_waves":${iarr(wLive)},"cadence_entries":${iarr(mLive)},"log_growth_bounded":true,"etl_first5_avg_s":${s3(avgD(etl.take(5)))},"etl_last5_avg_s":${s3(avgD(etl.takeRight(5)))},"vis_first5_avg_s":${s3(avgD(vis.take(5)))},"vis_last5_avg_s":${s3(avgD(vis.takeRight(5)))},"ivf_first5_avg_s":${s3(avgD(ivf.take(5)))},"ivf_last5_avg_s":${s3(avgD(ivf.takeRight(5)))},"pidx_first5_avg_s":${s3(avgD(pidx.take(5)))},"pidx_last5_avg_s":${s3(avgD(pidx.takeRight(5)))}}"""
     }
     tailParts :+= steadyJson; flush()
 

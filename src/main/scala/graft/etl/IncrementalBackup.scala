@@ -570,10 +570,11 @@ final class IncrementalBackup(
   def manifestPath: String = s"$destRoot/${cfg.tableName}_manifest"
 
   /** The drain lock guarding [[runPrunedIncremental]] — the manifest log
-    * and ingest-journal watermark are single-writer stores, and before r10
-    * only `EtlRunner.runOne` enforced that (a direct API caller could
-    * race a runner: the delta-seq race fails loudly, but interleaved
-    * refresh/wave markers skew the checkpoint cadence silently). Lives
+    * (with its ingest-journal watermark and cadence entries) is a
+    * single-writer store, and before r10 only `EtlRunner.runOne` enforced
+    * that (a direct API caller could race a runner: the delta-seq race
+    * fails loudly, but interleaved cadence and watermark updates skew the
+    * checkpoint cadence silently). Lives
     * beside the manifest so every caller that can reach the same log
     * contends on the same lock file. A crashed drain's stale lock is
     * released manually ([[graft.operators.JobLock.release]]) — the same
@@ -581,6 +582,19 @@ final class IncrementalBackup(
     * (`sqoop_etl.py:52-57`).
     */
   def drainLockPath: String = s"$destRoot/${cfg.tableName}.drain.lock"
+
+  /** Run `f` holding [[drainLockPath]]; loud failure when another drain (or
+    * direct refresh) holds it. All manifest-log writers route through here.
+    */
+  private def withDrainLock[T](f: => T): T = {
+    val lock = new JobLock(spark, drainLockPath)
+    if (!lock.acquire())
+      throw new IllegalStateException(
+        s"another drain holds $drainLockPath (manifest log is " +
+          "single-writer); if no drain is live, the lock is stale from a " +
+          "kill — release it and re-run")
+    try f finally lock.release()
+  }
 
   /** Bring the persisted manifest up to date with the lake and return the
     * refreshed LOG (r6 verdict task 4; log-structured since r9; bucketed
@@ -604,42 +618,27 @@ final class IncrementalBackup(
     * snapshotted BEFORE the scan that justifies it (r9 ADVICE: a head read
     * after the listing could cover a wave the listing never saw, a silent
     * backup gap for up to a reconciliation cadence).
-    */
-  def refreshManifestLog(sourcePath: String): ManifestLog =
-    // the log is single-writer; a direct refresh caller must contend on the
-    // same lock as a running drain (r10 ADVICE: refreshManifest could race
-    // runPrunedIncremental and silently skew markers/cadence)
-    withDrainLock { refreshManifestLogLocked(sourcePath)._1 }
-
-  /** Run `f` holding [[drainLockPath]]; loud failure when another drain (or
-    * direct refresh) holds it. All manifest-log writers route through here.
-    */
-  private def withDrainLock[T](f: => T): T = {
-    val lock = new JobLock(spark, drainLockPath)
-    if (!lock.acquire())
-      throw new IllegalStateException(
-        s"another drain holds $drainLockPath (manifest log is " +
-          "single-writer); if no drain is live, the lock is stale from a " +
-          "kill — release it and re-run")
-    try f finally lock.release()
-  }
-
-  /** [[refreshManifestLog]] body — caller MUST hold [[drainLockPath]].
-    * Also returns the drain's lake-schema binding: the first build's full
-    * read, else a one-file sample of the log, bound only if a read of lake
-    * files needs it (an idle journaled drain never does).
+    *
+    * The caller MUST hold [[drainLockPath]]. The log is read through ONE
+    * listing of its directory and the journal through ONE listing of its
+    * own. Also returns the drain's lake-schema binding: the first build's
+    * full read, else a one-file sample of the log, bound only if a read of
+    * lake files needs it (an idle journaled drain never does).
     */
   private def refreshManifestLogLocked(
       sourcePath: String): (ManifestLog, LakeSchema) = {
     val log = new ManifestLog(spark, manifestPath)
     log.gc()
+    // the journal's one listing, BEFORE any listing or scan of the lake:
+    // whether it exists, its head, and the waves to consume. A wave landing
+    // mid-scan stays above the watermark and is consumed by the next drain
+    // (re-deriving files the scan did see is an empty diff; missing them is
+    // impossible).
+    val journal = IngestLog.list(spark, sourcePath)
+    val headPre = journal.flatMap(_.lastOption).getOrElse(-1L)
     if (!log.nonEmpty) {
       // first build: the full scan lists the lake anyway, so the root
-      // read costs nothing extra here. Journal head snapshotted BEFORE
-      // the scan starts — a wave landing mid-scan stays above the
-      // watermark and is consumed by the next drain (re-deriving files
-      // the scan did see is an empty diff; missing them is impossible).
-      val headPre = IngestLog.waves(spark, sourcePath).maxOption.getOrElse(-1L)
+      // read costs nothing extra here
       gauges.fullListings += 1
       val lake = new LakeSchema(sourcePath, spark.read.parquet(sourcePath).schema)
       log.commitDelta(StatsStore.collectExpr(spark, sourcePath, lake.keys), Seq.empty)
@@ -647,14 +646,13 @@ final class IncrementalBackup(
       log.checkpoint()
       (log, lake)
     } else {
-      // journal head BEFORE any listing/scan (both branches) — see above
-      val headPre = IngestLog.waves(spark, sourcePath).maxOption.getOrElse(-1L)
-      val journal = IngestLog.exists(spark, sourcePath)
       // cadence counts DRAINS, not deltas: an idle journaled drain
       // appends no delta, so a delta-based cadence would let a quiet
       // lake skip reconciliation forever
-      val due = log.bumpRefreshCount() >= cfg.manifestCheckpointEvery
-      val reconcile = !journal || due
+      val drains = log.refreshCount + 1
+      log.setRefreshCount(drains)
+      val due = drains >= cfg.manifestCheckpointEvery
+      val reconcile = journal.isEmpty || due
       // bound lazily against ONE known file's schema — no lake-root listing
       // on the steady path, no inference job on an idle one
       val lake = new LakeSchema(sourcePath, schemaFromLog(log, sourcePath))
@@ -668,7 +666,7 @@ final class IncrementalBackup(
         val diff = StatsStore.collectExprDiff(spark, sourcePath, lake.keys,
           log.current().get, None, Some(lake.schema))
         log.commitDelta(diff.adds, diff.dead)
-        if (journal) {
+        if (journal.nonEmpty) {
           log.setWaveWatermark(headPre)
           FaultPoints.hit("drain.ingest.gc.pre")
           // this refresh listed the lake, so every wave recorded BEFORE
@@ -678,7 +676,7 @@ final class IncrementalBackup(
         }
       } else {
         val (waveFiles, head) = IngestLog
-          .filesSince(spark, sourcePath, log.waveWatermark)
+          .filesSince(spark, sourcePath, journal.get, log.waveWatermark)
         gauges.candidateFiles = waveFiles.size
         // freshness against LIVE DELTAS only (∝ cadence, never manifest
         // size): its one job is making the commitDelta-then-crash replay
@@ -693,7 +691,8 @@ final class IncrementalBackup(
         FaultPoints.hit("drain.journal.consumed")
         log.setWaveWatermark(head)
       }
-      if (due) log.resetRefreshCount()
+      // the cadence is cleared LAST: a crash before here re-runs as due
+      if (due) log.setRefreshCount(0)
       (log, lake)
     }
   }
@@ -704,7 +703,7 @@ final class IncrementalBackup(
     */
   def refreshManifest(sourcePath: String): DataFrame = {
     gauges.reset()
-    refreshManifestLog(sourcePath).current().get
+    withDrainLock { refreshManifestLogLocked(sourcePath)._1.current().get }
   }
 
   /** The lake's schema from its first LIVE file among `candidates`
@@ -763,7 +762,7 @@ final class IncrementalBackup(
     * ([[graft.sources.ManifestLog.localizedPruned(keep:(Long,Long)=>Boolean)*]];
     * [[gauges]] reports the counts). Serialized per table by [[drainLockPath]]: the manifest log
     * is single-writer, and a second concurrent caller fails loudly instead
-    * of skewing the log's markers.
+    * of skewing the log's cadence and watermark.
     */
   def runPrunedIncremental(sourcePath: String, maxParallel: Int = 1,
       slots: Option[JobSlots] = None): Seq[Long] =

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Ingest wave journal — the sidecar that lets steady-state manifest
@@ -8,7 +8,8 @@ import org.apache.spark.sql.SparkSession
   * `landWave` idiom: copy a wave's files into the lake dir) optionally
   * records each wave as `_ingest_log/wave-N`, a small text file listing
   * the paths it landed; the drain's manifest refresh then consumes waves
-  * past its watermark ([[ManifestLog.waveWatermark]]) instead of
+  * past its watermark (the manifest log's `watermark-N` entry,
+  * [[ManifestLog.waveWatermark]]) instead of
   * recursively listing the lake — at 100 TB / millions of files that
   * listing is a multi-minute object-store LIST storm per drain, while the
   * journal read is O(new waves).
@@ -33,28 +34,27 @@ object IngestLog {
   private def fsOf(spark: SparkSession, lakePath: String) =
     new Path(lakePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  def exists(spark: SparkSession, lakePath: String): Boolean =
-    fsOf(spark, lakePath).exists(dir(lakePath))
+  /** One listing of the journal dir; None when no journal exists. */
+  private def listing(fs: FileSystem, d: Path): Option[Seq[FileStatus]] =
+    try Some(fs.listStatus(d).toSeq)
+    catch { case _: java.io.FileNotFoundException => None }
 
-  def waves(spark: SparkSession, lakePath: String): Seq[Long] = {
-    val fs = fsOf(spark, lakePath)
-    val d = dir(lakePath)
-    if (!fs.exists(d)) Seq.empty
-    else fs.listStatus(d).map(_.getPath.getName).collect {
-      case n if n.startsWith("wave-") => n.stripPrefix("wave-").toLong
-    }.toIndexedSeq.sorted
-  }
+  private val Wave = "wave-(\\d+)".r
+  // a sequence claimed by an in-flight (or crashed) recorder; a claimed but
+  // never published seq is a harmless gap in the wave numbering
+  private val Claim = "\\.claim-(\\d+)".r
 
-  /** Sequences already claimed by an in-flight (or crashed) recorder —
-    * `.claim-N` markers. A claimed-but-never-published seq is a harmless
-    * gap in the wave numbering; readers iterate the waves that exist.
+  private def seqs(l: Seq[FileStatus], kind: scala.util.matching.Regex): Seq[Long] =
+    l.map(_.getPath.getName).collect { case kind(s) => s.toLong }.sorted
+
+  /** The journal's published wave seqs, ascending, from ONE listing; None
+    * when no journal exists. Its last seq is the journal head.
     */
-  private def claims(fs: org.apache.hadoop.fs.FileSystem,
-      d: Path): Seq[Long] =
-    if (!fs.exists(d)) Seq.empty
-    else fs.listStatus(d).map(_.getPath.getName).collect {
-      case n if n.startsWith(".claim-") => n.stripPrefix(".claim-").toLong
-    }.toIndexedSeq
+  def list(spark: SparkSession, lakePath: String): Option[Seq[Long]] =
+    listing(fsOf(spark, lakePath), dir(lakePath)).map(seqs(_, Wave))
+
+  def waves(spark: SparkSession, lakePath: String): Seq[Long] =
+    list(spark, lakePath).getOrElse(Seq.empty)
 
   /** Exclusive create of an empty marker. On a local filesystem this goes
     * through `File.createNewFile` (atomic per POSIX — Hadoop's
@@ -62,8 +62,7 @@ object IngestLog {
     * namenode makes `create(overwrite=false)` atomic. Object stores without
     * atomic create keep a small race window — documented on [[record]].
     */
-  private def exclusiveCreate(fs: org.apache.hadoop.fs.FileSystem,
-      p: Path): Boolean = {
+  private def exclusiveCreate(fs: FileSystem, p: Path): Boolean = {
     val local = fs.getUri.getScheme == "file"
     if (local) new java.io.File(p.toUri.getPath).createNewFile()
     else
@@ -109,8 +108,8 @@ object IngestLog {
     var attempt = 0
     val maxAttempts = 64
     while (true) {
-      val seq = (waves(spark, lakePath) ++ claims(fs, d))
-        .maxOption.getOrElse(0L) + 1
+      val l = fs.listStatus(d).toSeq
+      val seq = (seqs(l, Wave) ++ seqs(l, Claim)).maxOption.getOrElse(0L) + 1
       if (exclusiveCreate(fs, new Path(d, s".claim-$seq"))) {
         FaultPoints.hit("ingest.claim.created")
         val dst = new Path(d, s"wave-$seq")
@@ -142,11 +141,12 @@ object IngestLog {
   def gc(spark: SparkSession, lakePath: String, upTo: Long): Unit = {
     val fs = fsOf(spark, lakePath)
     val d = dir(lakePath)
+    val l = listing(fs, d).getOrElse(Seq.empty)
     // keep the HIGHEST consumed wave as the sequence anchor: deleting it
     // would reset [[record]]'s numbering below the manifest's watermark,
     // and the journal fast path would skip the renumbered waves until the
     // next reconciliation
-    waves(spark, lakePath).filter(_ <= upTo).dropRight(1)
+    seqs(l, Wave).filter(_ <= upTo).dropRight(1)
       .foreach(s => fs.delete(new Path(d, s"wave-$s"), false))
     // staging debris from a crashed record() (unique-named, never visible
     // to readers) and claim markers — cleared once stale, so the journal
@@ -159,7 +159,7 @@ object IngestLog {
     // back-fills gaps (seq = max + 1), so freeing it cannot reuse a seq
     // below anyone's watermark.
     val staleBefore = System.currentTimeMillis() - 3600L * 1000
-    if (fs.exists(d)) fs.listStatus(d).foreach { st =>
+    l.foreach { st =>
       val n = st.getPath.getName
       val debris = (n.startsWith(".wave-") && n.endsWith(".tmp")) ||
         n.startsWith(".claim-")
@@ -168,15 +168,16 @@ object IngestLog {
     }
   }
 
-  /** Every file recorded by waves with seq > `watermark`, plus the journal
-    * head (the caller's next watermark). The read set is the NEW waves'
-    * listing files only — no lake directory traversal.
+  /** Every file recorded by the `waves` (a [[list]] of the journal) with
+    * seq > `watermark`, plus their head (the caller's next watermark). The
+    * read set is the NEW waves' listing files only — no lake directory
+    * traversal, and no second listing of the journal.
     */
-  def filesSince(spark: SparkSession, lakePath: String,
+  def filesSince(spark: SparkSession, lakePath: String, waves: Seq[Long],
       watermark: Long): (Seq[String], Long) = {
     val fs = fsOf(spark, lakePath)
     val d = dir(lakePath)
-    val fresh = waves(spark, lakePath).filter(_ > watermark)
+    val fresh = waves.filter(_ > watermark)
     if (fresh.isEmpty) return (Seq.empty, watermark)
     val files = fresh.flatMap { s =>
       val in = fs.open(new Path(d, s"wave-$s"))

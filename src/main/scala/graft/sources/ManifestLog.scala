@@ -41,21 +41,24 @@ import org.apache.spark.sql.types.{BooleanType, StructType}
   *                 summary (one text line per bucket)
   *   delta-N/      one small parquet dir, written on the driver: manifest
   *                 rows + `tombstone` col
-  *   _wave-N       ingest-journal watermark (see [[IngestLog]])
-  *   _refresh-N    drains since the last fold (the reconcile cadence)
+  *   watermark-N   empty file: ingest-journal waves up to N are folded in
+  *                 (see [[IngestLog]])
+  *   cadence-N     empty file: N drains since the last fold (the reconcile
+  *                 cadence; no entry for 0)
   *
-  * Crash discipline: deltas and checkpoints are staged at `.<kind>-N.tmp`
-  * and published by ONE rename (the `_buckets` summary is written INSIDE
-  * the staged checkpoint, so a checkpoint is only ever visible whole). The
-  * newest checkpoint wins and only deltas above its seq are live, so the
-  * GC of folded deltas and older checkpoints can die midway without
-  * consequence. A reader at ANY crash instant sees a complete manifest
-  * (old or new), never a mix. Single writer per table by contract —
-  * enforced by the drain-side
+  * Crash discipline: every entry is staged at `.<kind>-N.tmp` and
+  * published by ONE rename (the `_buckets` summary is written INSIDE the
+  * staged checkpoint, so a checkpoint is only ever visible whole). The
+  * newest entry of each kind wins, and only deltas above the newest
+  * checkpoint's seq are live, so the GC of folded deltas and older
+  * entries can die midway without consequence. A reader at ANY crash
+  * instant sees a complete manifest (old or new), never a mix. Single
+  * writer per table by contract — enforced by the drain-side
   * [[graft.operators.JobLock]] that EVERY writing entry point acquires
   * (`IncrementalBackup.withDrainLock`: both the drain and a direct
-  * `refreshManifestLog`/`refreshManifest` call contend on the same lock
-  * file since r11; before that a direct refresh could race a drain).
+  * `refreshManifest` call contend on the same lock file since r11; before
+  * that a direct refresh could race a drain). So an instance lists the
+  * directory once and keeps that listing current through its own writes.
   */
 object ManifestLog {
 
@@ -81,27 +84,54 @@ object ManifestLog {
     */
   private final case class BucketSum(pb: Option[Long], mn: Option[Long],
       mx: Option[Long], rows: Long, shapeOk: Boolean)
+
+  /** Entry kinds of the log. */
+  private[graft] val Delta = "delta"
+  private[graft] val Ckpt = "checkpoint"
+  private[graft] val Watermark = "watermark"
+  private[graft] val Cadence = "cadence"
 }
 
 final class ManifestLog(spark: SparkSession, path: String) {
+  import ManifestLog.{BucketSum, Cadence, Ckpt, Delta, Localized, Watermark}
 
   private val root = new Path(path)
   // checksum-off: the log's files are small metadata, created by the driver
   private val fs = DriverParquet.metadataFs(root, spark.sparkContext.hadoopConfiguration)
   private val log = new AtomicLog(fs, root)
-  private val Delta = "delta"
-  private val Ckpt = "checkpoint"
   private def conf = spark.sparkContext.hadoopConfiguration
 
-  /** The log from one listing: the newest checkpoint's seq (`upto`, -1
-    * when none exists) and the live deltas above it, oldest first.
+  /** This instance's listing of the log: taken on first use, then carried
+    * forward by the instance's own publishes and GCs, which is sound for
+    * the single writer (see the class doc). A reader that needs another
+    * writer's changes makes a new instance. A write that throws drops the
+    * listing (it may have left staged debris), so the next use lists again.
     */
-  private final class State(val listing: AtomicLog.Listing) {
-    val upto: Long = listing.newest(Ckpt).getOrElse(-1L)
-    val live: Seq[Long] = listing.seqs(Delta).filter(_ > upto)
-    def ckptPath: Path = log.path(Ckpt, upto)
+  private var listed: AtomicLog.Listing = null
+  private def listing: AtomicLog.Listing = {
+    if (listed == null) listed = log.list()
+    listed
   }
-  private def state(): State = new State(log.list())
+
+  private def publish(kind: String, seq: Long)(write: Path => Unit): Unit = {
+    val l = listing
+    listed = null
+    listed = l + log.publish(kind, seq)(write)
+  }
+
+  private def gcWhere(drop: AtomicLog.Entry => Boolean): Unit = {
+    val l = listing
+    listed = null
+    listed = log.gc(l)(drop)
+  }
+
+  /** The newest checkpoint's seq, -1 when none exists. */
+  private def upto: Long = listing.newest(Ckpt).getOrElse(-1L)
+
+  /** The live deltas, those above `upto`, oldest first. */
+  private def live: Seq[Long] = listing.seqs(Delta).filter(_ > upto)
+
+  private def ckptPath: Path = log.path(Ckpt, upto)
 
   /** Data files of one published delta. */
   private def deltaFiles(seq: Long): Seq[FileStatus] =
@@ -112,11 +142,11 @@ final class ManifestLog(spark: SparkSession, path: String) {
     * bucket. Lazy: a reader that stops early never lists the remaining
     * buckets.
     */
-  private def ckptFiles(st: State, pbs: Option[Seq[Long]]): LazyList[FileStatus] = {
+  private def ckptFiles(pbs: Option[Seq[Long]]): LazyList[FileStatus] = {
     val dirs = pbs match {
-      case Some(ps) => ps.to(LazyList).map(pb => new Path(st.ckptPath, s"pb=$pb"))
+      case Some(ps) => ps.to(LazyList).map(pb => new Path(ckptPath, s"pb=$pb"))
       case None =>
-        fs.listStatus(st.ckptPath).to(LazyList)
+        fs.listStatus(ckptPath).to(LazyList)
           .filter(f => f.isDirectory && f.getPath.getName.startsWith("pb="))
           .map(_.getPath)
     }
@@ -132,25 +162,26 @@ final class ManifestLog(spark: SparkSession, path: String) {
     */
   private val bucketSpan = 100L
 
-  def deltasSinceCheckpoint: Int = state().live.size
+  def deltasSinceCheckpoint: Int = live.size
 
-  /** Cheap existence check (one listing — no plan built, no fold): does a
-    * checkpoint or any live delta exist?
+  /** Cheap existence check (no plan built, no fold): does a checkpoint or
+    * any live delta exist?
     */
-  def nonEmpty: Boolean = {
-    val st = state()
-    st.upto >= 0 || st.live.nonEmpty
-  }
+  def nonEmpty: Boolean = upto >= 0 || live.nonEmpty
 
-  /** Clean up folded deltas and older checkpoints (a checkpoint that
+  /** Published entries of `kind` (one of the companion's kinds). */
+  private[graft] def entryCount(kind: String): Int = listing.seqs(kind).size
+
+  /** Clean up folded deltas, and every other entry older than the newest
+    * of its kind: checkpoints, watermarks, cadence counts (a write that
     * crashed before its GC leaves them — harmless to readers, removed
-    * here) and any staging dir a crashed [[commitDelta]] or [[checkpoint]]
-    * left. Single-writer contract makes deleting the debris safe.
+    * here), and any staging a crashed write left. Single-writer contract
+    * makes deleting the debris safe.
     */
   def gc(): Unit = {
-    val st = state()
-    log.gc(st.listing)(e =>
-      (e.kind == Delta && e.seq <= st.upto) || (e.kind == Ckpt && e.seq < st.upto))
+    val l = listing
+    val u = upto
+    gcWhere(e => if (e.kind == Delta) e.seq <= u else l.newest(e.kind).exists(e.seq < _))
   }
 
   /** Scheme-normalized fold key: `input_file_name()` yields `file:///x`
@@ -163,13 +194,14 @@ final class ManifestLog(spark: SparkSession, path: String) {
   private def keyOf(p: String): String = p.replaceFirst(schemePrefix, "/")
 
   /** The manifest schema (no `tombstone`): a checkpoint file's footer, else
-    * a live delta's. Read on the driver — no inference job.
+    * a live delta's. Read on the driver — no inference job — once per
+    * instance: every footer of a log carries the same (all-nullable) schema.
     */
-  private def manifestSchema(st: State): StructType =
-    (if (st.upto >= 0) ckptFiles(st, None) else LazyList.empty).headOption
+  private lazy val manifestSchema: StructType =
+    (if (upto >= 0) ckptFiles(None) else LazyList.empty).headOption
       .map(DriverParquet.schema(conf, _))
       .getOrElse {
-        val d = st.live.to(LazyList).flatMap(deltaFiles).headOption
+        val d = live.to(LazyList).flatMap(deltaFiles).headOption
           .getOrElse(throw new IllegalStateException(s"no manifest data file at $path"))
         StructType(DriverParquet.schema(conf, d).fields.filterNot(_.name == "tombstone"))
       }
@@ -177,8 +209,8 @@ final class ManifestLog(spark: SparkSession, path: String) {
   /** The checkpoint relation with the bucket partition column dropped —
     * readers see the manifest schema.
     */
-  private def ckptDf(st: State, schema: StructType): DataFrame =
-    spark.read.schema(schema).parquet(st.ckptPath.toString).drop("pb")
+  private def ckptDf: DataFrame =
+    spark.read.schema(manifestSchema).parquet(ckptPath.toString).drop("pb")
 
   /** The live deltas `live` folded last-writer-wins on the driver: per
     * fold key, the newest delta's row (the first one within a delta),
@@ -205,15 +237,15 @@ final class ManifestLog(spark: SparkSession, path: String) {
     * rows. Map-only — the deltas are folded on the driver, the checkpoint
     * is filtered by key membership, no join or window runs.
     */
-  private def fold(st: State): (DataFrame, Long) = {
-    val schema = manifestSchema(st)
-    val (deltas, read) = foldDeltas(st.live, schema.fieldNames.toSeq)
+  private def fold(): (DataFrame, Long) = {
+    val schema = manifestSchema
+    val (deltas, read) = foldDeltas(live, schema.fieldNames.toSeq)
     import scala.jdk.CollectionConverters._
     val adds = spark.createDataFrame(deltas.values.flatten.toIndexedSeq.asJava, schema)
     val out =
-      if (st.upto < 0) adds
+      if (upto < 0) adds
       else {
-        val ck = ckptDf(st, schema)
+        val ck = ckptDf
         val kept = if (deltas.isEmpty) ck else ck.filter(!keyExpr.isin(deltas.keys.toSeq: _*))
         kept.unionByName(adds)
       }
@@ -225,17 +257,22 @@ final class ManifestLog(spark: SparkSession, path: String) {
     * is empty. With no live delta this is the checkpoint relation itself
     * (a fold's output); otherwise the map-only `fold`.
     */
-  def current(): Option[DataFrame] = {
-    val st = state()
-    if (st.upto < 0 && st.live.isEmpty) None
-    else if (st.live.isEmpty) Some(ckptDf(st, manifestSchema(st)))
-    else Some(fold(st)._1)
+  def current(): Option[DataFrame] =
+    if (!nonEmpty) None
+    else if (live.isEmpty) Some(ckptDf)
+    else Some(fold()._1)
+
+  /** The newest checkpoint's bucket summary, read once per checkpoint:
+    * (its seq, its buckets); none before the first checkpoint.
+    */
+  private var summary: (Long, Seq[BucketSum]) = (-1L, Seq.empty)
+  private def buckets: Seq[BucketSum] = {
+    if (summary._1 != upto) summary = (upto, readSummary())
+    summary._2
   }
 
-  import ManifestLog.{BucketSum, Localized}
-
-  private def readSummary(st: State): Seq[BucketSum] = {
-    val in = fs.open(new Path(st.ckptPath, "_buckets"))
+  private def readSummary(): Seq[BucketSum] = {
+    val in = fs.open(new Path(ckptPath, "_buckets"))
     val text =
       try new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
       finally in.close()
@@ -271,20 +308,19 @@ final class ManifestLog(spark: SparkSession, path: String) {
     * intersection consumers ignore it (interval logic is shape-free).
     */
   def localizedPruned(keep: (Long, Long, Boolean) => Boolean): Localized = {
-    val st = state()
-    require(st.upto >= 0 || st.live.nonEmpty, s"no manifest at $path")
-    val sums = if (st.upto < 0) Seq.empty else readSummary(st)
+    require(nonEmpty, s"no manifest at $path")
+    val sums = buckets
     val sel = sums.filter(b =>
       b.mn.isDefined && b.mx.isDefined && keep(b.mn.get, b.mx.get, b.shapeOk))
     val ckRows: Seq[Row] =
       if (sel.isEmpty) Seq.empty
-      else DriverParquet.read(conf, ckptFiles(st, Some(sel.map(_.pb.get))))
+      else DriverParquet.read(conf, ckptFiles(Some(sel.map(_.pb.get))))
     // deltas are always read whole: small by construction (∝ new files
     // since the last fold, GC'd at checkpoint cadence). The local fold is
     // last-writer-wins over the (tiny) localized row set: a delta row
     // shadows the checkpoint row with its key.
-    val schema = manifestSchema(st)
-    val (deltas, deltaRead) = foldDeltas(st.live, schema.fieldNames.toSeq)
+    val schema = manifestSchema
+    val (deltas, deltaRead) = foldDeltas(live, schema.fieldNames.toSeq)
     val ckFileIdx = schema.fieldIndex("file")
     val folded = ckRows.filterNot(r => deltas.contains(keyOf(r.getString(ckFileIdx)))) ++
       deltas.values.flatten
@@ -300,13 +336,12 @@ final class ManifestLog(spark: SparkSession, path: String) {
     * are excluded. Driver-side reads only.
     */
   def sampleFiles(n: Int): Seq[String] = {
-    val st = state()
-    val fromDeltas = st.live.reverseIterator.flatMap { s =>
+    val fromDeltas = live.reverseIterator.flatMap { s =>
       DriverParquet.read(conf, deltaFiles(s), Seq("file", "tombstone"))
         .collect { case r if !r.getBoolean(1) => r.getString(0) }
     }.take(n).toIndexedSeq
-    if (fromDeltas.size >= n || st.upto < 0) fromDeltas
-    else fromDeltas ++ DriverParquet.read(conf, ckptFiles(st, None), Seq("file"),
+    if (fromDeltas.size >= n || upto < 0) fromDeltas
+    else fromDeltas ++ DriverParquet.read(conf, ckptFiles(None), Seq("file"),
       limit = n - fromDeltas.size).map(_.getString(0))
   }
 
@@ -327,7 +362,6 @@ final class ManifestLog(spark: SparkSession, path: String) {
     * Cost ∝ live deltas, never manifest size; read on the driver.
     */
   def coveredByLiveDeltas(candidates: Seq[String]): Set[String] = {
-    val live = state().live
     if (live.isEmpty || candidates.isEmpty) Set.empty
     else {
       val (deltas, _) = foldDeltas(live, Seq("file"))
@@ -369,10 +403,9 @@ final class ManifestLog(spark: SparkSession, path: String) {
         }
       })
     }
-    val st = state()
-    val seq = (st.upto +: st.listing.seqs(Delta)).max + 1
-    log.gc(st.listing)(_ => false)
-    log.publish(Delta, seq) { tmp =>
+    val seq = (upto +: listing.seqs(Delta)).max + 1
+    gcWhere(_ => false)
+    publish(Delta, seq) { tmp =>
       DriverParquet.write(fs, tmp, schema, added.map(r => Row.fromSeq(r.toSeq :+ false)) ++ tombs)
       FaultPoints.hit("manifest.delta.staged")
     }
@@ -398,16 +431,16 @@ final class ManifestLog(spark: SparkSession, path: String) {
     * footer.
     */
   def checkpoint(): Unit = {
-    val st = state()
-    if (st.live.isEmpty) return
+    if (live.isEmpty) return
     FaultPoints.hit("manifest.checkpoint.pre")
-    val (folded, deltaRows) = fold(st)
+    val newest = live.max
+    val (folded, deltaRows) = fold()
     val ckptRows =
-      if (st.upto < 0) 0L else ckptFiles(st, None).map(DriverParquet.rowCount(conf, _)).sum
+      if (upto < 0) 0L else ckptFiles(None).map(DriverParquet.rowCount(conf, _)).sum
     val shards = math.max(1L, (ckptRows + deltaRows) / 2000000L).toInt
     val mc = folded.columns.find(_.startsWith("min_")).get
-    log.gc(st.listing)(_ => false)
-    log.publish(Ckpt, st.live.max) { tmp =>
+    gcWhere(_ => false)
+    publish(Ckpt, newest) { tmp =>
       folded.withColumn("pb", floor(col(mc) / bucketSpan))
         .coalesce(shards).write.partitionBy("pb").parquet(tmp.toString)
       // no bucket: the partitioned write left no data file, so one
@@ -451,61 +484,39 @@ final class ManifestLog(spark: SparkSession, path: String) {
     sums.length
   }
 
-  // ---- ingest-journal watermark ------------------------------------------
+  // ---- ingest-journal watermark and reconcile cadence -------------------
+
+  /** An entry whose name is its whole content. */
+  private def mark(tmp: Path): Unit = fs.create(tmp, true).close()
 
   /** Highest [[IngestLog]] wave already folded into this manifest; -1 when
-    * journal consumption hasn't started. Stored as an empty `_wave-N`
-    * marker file; on update the new marker is created before old ones are
-    * deleted, so a crash leaves several markers and the max wins —
-    * re-consuming an already-folded wave is an empty diff (idempotent).
+    * journal consumption hasn't started. Stored as the log entry
+    * `watermark-N`; an update publishes the new entry before it GCs the
+    * old one, so a crash leaves both and the newest wins — re-consuming an
+    * already-folded wave is an empty diff (idempotent).
     */
-  def waveWatermark: Long =
-    if (!fs.exists(root)) -1L
-    else fs.listStatus(root).map(_.getPath.getName)
-      .collect { case n if n.startsWith("_wave-") =>
-        n.stripPrefix("_wave-").toLong }
-      .maxOption.getOrElse(-1L)
+  def waveWatermark: Long = listing.newest(Watermark).getOrElse(-1L)
 
-  def setWaveWatermark(n: Long): Unit = {
-    if (n < 0 || n <= waveWatermark) return
-    fs.mkdirs(root)
-    fs.create(new Path(root, s"_wave-$n"), true).close()
-    FaultPoints.hit("manifest.watermark.created")
-    fs.listStatus(root).map(_.getPath).foreach { p =>
-      if (p.getName.startsWith("_wave-") &&
-        p.getName.stripPrefix("_wave-").toLong < n)
-        fs.delete(p, false)
+  def setWaveWatermark(n: Long): Unit =
+    if (n > waveWatermark) {
+      publish(Watermark, n)(mark)
+      FaultPoints.hit("manifest.watermark.created")
+      gc()
     }
-  }
 
   /** Refreshes since the last checkpoint-fold — the cadence counter for
     * reconciliation. Counting DRAINS (not deltas) matters because an idle
     * journaled drain appends no delta: were the cadence delta-based, a
     * quiet lake would never reconcile and a journal-invisible deletion
-    * could stay in the manifest forever. Marker-file discipline as with
-    * [[waveWatermark]] (create new before deleting old; max wins).
+    * could stay in the manifest forever. Stored as the log entry
+    * `cadence-N` (none for 0), newest wins as with [[waveWatermark]].
     */
-  def refreshCount: Long =
-    if (!fs.exists(root)) 0L
-    else fs.listStatus(root).map(_.getPath.getName)
-      .collect { case n if n.startsWith("_refresh-") =>
-        n.stripPrefix("_refresh-").toLong }
-      .maxOption.getOrElse(0L)
+  def refreshCount: Long = listing.newest(Cadence).getOrElse(0L)
 
-  def bumpRefreshCount(): Long = {
-    val n = refreshCount + 1
-    fs.mkdirs(root)
-    fs.create(new Path(root, s"_refresh-$n"), true).close()
-    dropRefreshMarkers(keep = n)
-    n
-  }
-
-  def resetRefreshCount(): Unit = dropRefreshMarkers(keep = -1L)
-
-  private def dropRefreshMarkers(keep: Long): Unit =
-    fs.listStatus(root).map(_.getPath).foreach { p =>
-      if (p.getName.startsWith("_refresh-") &&
-        p.getName.stripPrefix("_refresh-").toLong != keep)
-        fs.delete(p, false)
-    }
+  /** Publish count `n`, above the current one, then GC the older entry;
+    * 0 deletes the count.
+    */
+  def setRefreshCount(n: Long): Unit =
+    if (n > 0) { publish(Cadence, n)(mark); gc() }
+    else gcWhere(_.kind == Cadence)
 }

@@ -5,15 +5,18 @@ import java.sql.Timestamp
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types._
 
-import graft.etl.{BackupStatus, StatusStore}
-import graft.sources.{AtomicLog, DriverParquet, ManifestLog}
+import graft.etl.{BackupStatus, IncrementalBackup, JobConfig, StatusStore}
+import graft.sources.{AtomicLog, DriverParquet, FaultPoints, IngestLog, ManifestLog}
 
 /** The publish-by-rename log under the status store and the manifest log,
   * checked against hand-made filesystem states: each state is one a kill
   * can leave (a staged entry, a publish without its GC, a GC cut short),
-  * and every reader must see the newest published entries only.
+  * and every reader must see the newest published entries only. A
+  * `ManifestLog` instance lists its directory once, so each hand-made state
+  * is read through a new instance, as the next drain would read it.
   */
 class AtomicLogSpec extends SparkSpec {
 
@@ -78,8 +81,9 @@ class AtomicLogSpec extends SparkSpec {
     spark.createDataFrame(Seq(Row("/b.parquet", 2L, 2L, 2L, false)).asJava,
       manifestSchema.add("tombstone", BooleanType, nullable = false))
       .coalesce(1).write.parquet(s"$dir/m/.delta-1.tmp")
-    assert(files(m) == Seq("/a.parquet"))
-    assert(m.deltasSinceCheckpoint == 1)
+    val next = new ManifestLog(spark, s"$dir/m")
+    assert(files(next) == Seq("/a.parquet"))
+    assert(next.deltasSinceCheckpoint == 1)
   }
 
   test("a kill after the publish but before GC leaves the newest entry winning") {
@@ -100,12 +104,13 @@ class AtomicLogSpec extends SparkSpec {
     assert(names(s"$dir/m") == Set("checkpoint-2"))
     Seq("checkpoint-0", "delta-1", "delta-2").foreach(n =>
       assert(fs.rename(new Path(keep, n), new Path(dir, s"m/$n"))))
-    assert(files(m) == want && m.deltasSinceCheckpoint == 0,
+    val next = new ManifestLog(spark, s"$dir/m")
+    assert(files(next) == want && next.deltasSinceCheckpoint == 0,
       "the newest checkpoint wins; deltas it folded are not live")
-    assert(m.localizedPruned((_, _) => true).view.count() == 2)
-    m.gc()
+    assert(next.localizedPruned((_, _) => true).view.count() == 2)
+    next.gc()
     assert(names(s"$dir/m") == Set("checkpoint-2"))
-    assert(files(m) == want)
+    assert(files(next) == want)
   }
 
   test("GC dying midway is harmless, and the next GC finishes it") {
@@ -140,11 +145,77 @@ class AtomicLogSpec extends SparkSpec {
     fs.mkdirs(new Path(dir, "m/.delta-1.tmp"))
     text(new Path(dir, "m/.delta-1.tmp/part-00000.snappy.parquet"), "junk")
     fs.mkdirs(new Path(dir, "m/.checkpoint-1.tmp"))
-    assert(m.commitDelta(adds("/b.parquet"), Seq.empty).contains(1L))
+    assert(new ManifestLog(spark, s"$dir/m").commitDelta(adds("/b.parquet"), Seq.empty)
+      .contains(1L))
     assert(names(s"$dir/m") == Set("delta-0", "delta-1"))
     fs.mkdirs(new Path(dir, "m/.checkpoint-1.tmp/pb=1995"))
-    m.checkpoint()
+    val next = new ManifestLog(spark, s"$dir/m")
+    next.checkpoint()
     assert(names(s"$dir/m") == Set("checkpoint-1"))
-    assert(files(m) == Seq("/a.parquet", "/b.parquet"))
+    assert(files(next) == Seq("/a.parquet", "/b.parquet"))
+  }
+
+  test("a kill after a new watermark entry is published but before the older one is GC'd leaves the newest winning, and the next write clears the older one") {
+    val dir = Files.createTempDirectory("graft-alog-wm").toString
+    val m = s"$dir/m"
+    val log = new ManifestLog(spark, m)
+    log.setWaveWatermark(3L)
+    log.setRefreshCount(1L)
+    FaultPoints.install { n =>
+      if (n == "manifest.watermark.created") throw new RuntimeException(s"injected@$n")
+    }
+    try intercept[RuntimeException](log.setWaveWatermark(5L))
+    finally FaultPoints.clear()
+    // and the same window for the cadence, made by hand
+    text(new Path(m, "cadence-2"), "")
+    assert(names(m) == Set("watermark-3", "watermark-5", "cadence-1", "cadence-2"))
+    val next = new ManifestLog(spark, m)
+    assert(next.waveWatermark == 5L && next.refreshCount == 2L, "the newest entry wins")
+    next.setWaveWatermark(7L)
+    assert(names(m) == Set("watermark-7", "cadence-2"))
+    next.setRefreshCount(3L)
+    assert(names(m) == Set("watermark-7", "cadence-3"))
+    next.setRefreshCount(0L)
+    assert(names(m) == Set("watermark-7"))
+    assert(new ManifestLog(spark, m).refreshCount == 0L)
+  }
+
+  test("a manifest dir holding old-layout _wave-N/_refresh-N files: a journaled drain ignores them, commits no delta, and the cadence restarts at 0") {
+    val dir = Files.createTempDirectory("graft-alog-old").toString
+    val lake = s"$dir/lake"
+    def land(month: Long, journal: Boolean): Unit = {
+      val stage = s"$dir/stage-$month"
+      spark.range(40).select(lit(month).as("month_sid"), col("id").as("payload"))
+        .coalesce(1).write.parquet(stage)
+      val part = new java.io.File(stage).listFiles().find(_.getName.endsWith(".parquet")).get
+      val dst = java.nio.file.Paths.get(lake, s"m-$month.parquet")
+      Files.createDirectories(dst.getParent)
+      Files.copy(part.toPath, dst)
+      if (journal) IngestLog.record(spark, lake, Seq(dst.toString))
+    }
+    val job = new IncrementalBackup(spark, JobConfig(tableName = "t", numMappers = 1,
+      outputFileFormat = "parquet", manifestCheckpointEvery = 8),
+      new StatusStore(spark, s"$dir/status"), s"$dir/dest")
+    val m = job.manifestPath
+    land(199501L, journal = false) // the first build lists the lake
+    assert(job.runPrunedIncremental(lake) == Seq(199501L))
+    land(199502L, journal = true)  // then the journal feeds a live delta
+    assert(job.runPrunedIncremental(lake) == Seq(199502L))
+    assert(names(m) == Set("checkpoint-0", "delta-1", "watermark-1", "cadence-1"))
+    def manifest() = job.readManifest().collect().map(_.toString).sorted.toSeq
+    val before = manifest()
+    // the same store as the marker files of the old layout would hold it
+    assert(fs.rename(new Path(m, "watermark-1"), new Path(m, "_wave-1")))
+    assert(fs.rename(new Path(m, "cadence-1"), new Path(m, "_refresh-1")))
+    val old = new ManifestLog(spark, m)
+    assert(old.waveWatermark == -1L && old.refreshCount == 0L)
+
+    // the journal is re-read from the start; its one wave sits in the live
+    // delta, so the diff is empty
+    assert(job.runPrunedIncremental(lake).isEmpty)
+    assert(names(m) == Set("checkpoint-0", "delta-1", "watermark-1", "cadence-1",
+      "_wave-1", "_refresh-1"), "no delta committed; the old files are left alone")
+    assert(manifest() == before)
+    assert(new ManifestLog(spark, m).refreshCount == 1L, "the cadence restarted at 0")
   }
 }

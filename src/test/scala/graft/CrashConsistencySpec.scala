@@ -239,7 +239,7 @@ class CrashConsistencySpec extends SparkSpec {
       .collectExprDiff(spark, lake, pid, prior, None)
     diff.adds.withColumn("tombstone", lit(false)).coalesce(1)
       .write.parquet(s"${job.manifestPath}/.delta-1.tmp")
-    assert(log.current().get.count() == w1Count,
+    assert(new graft.sources.ManifestLog(spark, job.manifestPath).current().get.count() == w1Count,
       "a staged, unpublished delta must be invisible")
     // retry converges: debris cleared, delta re-derived and committed
     val m2 = job.refreshManifest(lake)
@@ -359,7 +359,7 @@ class CrashConsistencySpec extends SparkSpec {
       // simply records again (the r9 contract — a loser/crasher never
       // aborts a landed ingest)
       val seq = IngestLog.record(spark, lake, files)
-      val (got, head) = IngestLog.filesSince(spark, lake, -1L)
+      val (got, head) = IngestLog.filesSince(spark, lake, IngestLog.waves(spark, lake), -1L)
       assert(head == seq, s"$point: head $head != $seq")
       if (point == "ingest.wave.published") {
         // crash AFTER publish: wave 1 landed, the retry re-records the

@@ -1,0 +1,55 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.functions._
+
+import graft.etl.{EtlRunner, JobConfig}
+import graft.sources.IngestLog
+
+/** What a steady journaled drain costs in filesystem metadata operations
+  * on the manifest log and the ingest journal: each is listed once per
+  * drain, and neither is stat'ed. The table's backup root and its lake sit
+  * on a counting local filesystem.
+  */
+class DrainFsOpsSpec extends SparkSpec {
+
+  test("a journaled drain lists the manifest root once and the ingest journal once, and stats neither") {
+    CountingLocalFs.install(spark)
+    val tmp = Files.createTempDirectory("graft-drainfsops").toString
+    val at = s"${CountingLocalFs.Scheme}://$tmp"
+    val lake = s"$tmp/lake"
+    Files.createDirectories(Paths.get(lake))
+    def landMonth(m: Long): Unit = {
+      val stage = s"$tmp/stage-$m"
+      spark.range(40).select(lit(m).as("month_sid"), col("id").as("payload"))
+        .coalesce(1).write.parquet(stage)
+      val part = new java.io.File(stage).listFiles().find(_.getName.endsWith(".parquet")).get
+      Files.copy(part.toPath, Paths.get(lake, s"wave-$m.parquet"))
+      IngestLog.record(spark, s"$at/lake", Seq(s"$at/lake/wave-$m.parquet"))
+    }
+    val cfg = JobConfig(tableName = "t", numMappers = 1, outputFileFormat = "parquet",
+      pruned = true, manifestCheckpointEvery = 8)
+    def drain(): Seq[Long] = EtlRunner.runAllFrom(spark, s"$at/work",
+      Seq(cfg -> (EtlRunner.LakeSource(s"$at/lake"): EtlRunner.EtlSource)))("t").get
+    landMonth(199501L)
+    assert(drain() == Seq(199501L)) // the first build
+    landMonth(199502L)
+    assert(drain() == Seq(199502L)) // a live delta, a watermark and a cadence count
+
+    val manifest = s"$tmp/work/data/t_manifest"
+    val journal = s"$lake/_ingest_log"
+    def assertOnce(what: String): Unit = {
+      val ops = Seq("list" -> manifest, "stat" -> manifest, "list" -> journal, "stat" -> journal)
+        .map { case (op, p) => s"$op ${p.stripPrefix(tmp)}" -> CountingLocalFs.count(op, p) }
+      assert(ops.map(_._2) == Seq(1, 0, 1, 0), s"$what: $ops")
+    }
+    CountingLocalFs.reset()
+    assert(drain().isEmpty)
+    assertOnce("an idle drain")
+    landMonth(199503L)
+    CountingLocalFs.reset()
+    assert(drain() == Seq(199503L))
+    assertOnce("a copy drain")
+  }
+}

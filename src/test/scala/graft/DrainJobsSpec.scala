@@ -78,11 +78,12 @@ class DrainJobsSpec extends SparkSpec with JobCount {
     assert(drain() == Seq(199501L)) // first build
     landMonth(tmp, lake, 199502L)
     assert(drain() == Seq(199502L)) // leaves a live delta for the fold
-    val log = new ManifestLog(spark, s"$tmp/work/data/t_manifest")
+    def log = new ManifestLog(spark, s"$tmp/work/data/t_manifest")
     assert(log.deltasSinceCheckpoint == 1)
 
     val (due, dueJobs) = jobsOf(drain()) // second drain since the fold: due
     assert(due.isEmpty)
+    // a fresh instance: one lists the log once and sees only its own writes
     assert(log.deltasSinceCheckpoint == 0, "the due drain must fold the live delta")
     // the fold's write, the bucket summary (shuffle + result) and the
     // reconcile's full outer join (two shuffles + result)

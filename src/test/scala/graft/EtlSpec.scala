@@ -1265,7 +1265,8 @@ class EtlSpec extends SparkSpec {
     assert(graft.sources.IngestLog.waves(spark, lake).size == n,
       "a wave file was silently replaced by a racing recorder")
     // every recorder's full file list is readable through the journal
-    val (files, head) = graft.sources.IngestLog.filesSince(spark, lake, -1L)
+    val (files, head) = graft.sources.IngestLog.filesSince(spark, lake,
+      graft.sources.IngestLog.waves(spark, lake), -1L)
     assert(head == got.max)
     assert(files.toSet == (0 until n)
       .flatMap(i => (0 until 4).map(j => s"/w$i/f$j.parquet")).toSet,

@@ -54,7 +54,7 @@ class ManifestLogSpec extends SparkSpec {
       "the scheme variant must shadow the stored form")
   }
 
-  test("empty diff commits nothing; checkpoint folds and ignores stale deltas; watermark and refresh counter are monotonic markers") {
+  test("empty diff commits nothing; checkpoint folds and ignores stale deltas; watermark and refresh counter are log entries") {
     val dir = Files.createTempDirectory("graft-mlog3").toString
     val log = new ManifestLog(spark, s"$dir/m")
     assert(log.commitDelta(rows(), Seq.empty).isEmpty)
@@ -65,15 +65,24 @@ class ManifestLogSpec extends SparkSpec {
     log.checkpoint()
     assert(log.deltasSinceCheckpoint == 0)
     assert(files(log) == Set("/a.parquet", "/b.parquet"))
-    // markers
+    // watermark and cadence entries
     assert(log.waveWatermark == -1L)
     log.setWaveWatermark(5L)
     log.setWaveWatermark(3L) // lower: no-op
     assert(log.waveWatermark == 5L)
     assert(log.refreshCount == 0L)
-    assert(log.bumpRefreshCount() == 1L && log.bumpRefreshCount() == 2L)
-    log.resetRefreshCount()
+    log.setRefreshCount(1L)
+    assert(log.refreshCount == 1L)
+    log.setRefreshCount(2L)
+    assert(log.refreshCount == 2L)
+    // a new instance reads them from the directory: one entry each
+    val again = new ManifestLog(spark, s"$dir/m")
+    assert(again.waveWatermark == 5L && again.refreshCount == 2L)
+    assert(new java.io.File(s"$dir/m").list().toSet ==
+      Set("checkpoint-1", "watermark-5", "cadence-2"))
+    log.setRefreshCount(0L)
     assert(log.refreshCount == 0L)
+    assert(new ManifestLog(spark, s"$dir/m").refreshCount == 0L)
   }
 
   test("bucketed checkpoint: localizedPruned reads only intersecting buckets, folds identically to current(), and tombstones/re-adds shadow inside the localized view") {

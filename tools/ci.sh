@@ -1,12 +1,13 @@
 #!/bin/bash
-# CI gate: the rename allowlist, compile, unit/e2e suites, the ETL oracle
-# and the scaladoc build. The ETL oracle runs the 8 q_etl_* queries (every
-# write path of the backup loop) through Verify at sf0.001 and checks them
-# against DuckDB; without the testdata it is skipped, and says so. A
-# malformed doc comment fails `sbt doc`; any warning it prints (a broken,
-# ambiguous or private [[link]]) fails this gate too, so the API docs stay
-# publishable. The full correctness drive (all queries through Verify +
-# DuckDB) is run manually per README when touching query semantics.
+# CI gate: the rename allowlist, the manifest-root gate, compile, unit/e2e
+# suites, the ETL oracle and the scaladoc build. The ETL oracle runs the 8
+# q_etl_* queries (every write path of the backup loop) through Verify at
+# sf0.001 and checks them against DuckDB; without the testdata it is
+# skipped, and says so. A malformed doc comment fails `sbt doc`; any
+# warning it prints (a broken, ambiguous or private [[link]]) fails this
+# gate too, so the API docs stay publishable. The full correctness drive
+# (all queries through Verify + DuckDB) is run manually per README when
+# touching query semantics.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 # Rename gate: a rename under src/main publishes something, and only the
@@ -25,6 +26,13 @@ rename_bad=$({ grep -rlE '\.rename\(|renameOrThrow\(' src/main || true; } |
 if [[ -n "$rename_bad" ]]; then
   echo "rename outside the allowlist (use AtomicLog or Compaction.swapIn):" >&2
   echo "$rename_bad" >&2
+  exit 1
+fi
+# Root gate: a ManifestLog instance reads its directory through ONE
+# AtomicLog.list and carries that listing forward itself; a direct listing
+# or stat of the root would be a metadata op on every call.
+if grep -nE 'listStatus\(root|exists\(root' src/main/scala/graft/sources/ManifestLog.scala; then
+  echo "ManifestLog lists or stats its root directly (read it through AtomicLog.list)" >&2
   exit 1
 fi
 sbt -batch compile Test/compile
