@@ -1,7 +1,9 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftx.ParquetFooterSchema
 
 import graft.etl.{EtlRunner, JobConfig, YamlConfig}
 import graft.operators.ReferenceOps
@@ -35,14 +37,15 @@ object EtlMain {
   /** Bind a config to its source relation. The testdata facts are
     * monthly-partitioned on their date column when the config asks for
     * `month_sid` (the reference's PRIMARY_ID); a snapshot config
-    * (`PRIMARY_ID: ""`) takes the table as-is.
+    * (`PRIMARY_ID: ""`) takes the table as-is. The table file's schema is
+    * read from its footer on the driver, so binding runs no inference job.
     */
   private def source(spark: SparkSession, sfDir: String,
       cfg: JobConfig): DataFrame = {
     val base = cfg.tableName match {
-      case "orders"   => Tables.orders(spark, sfDir)
-      case "lineitem" => Tables.lineitem(spark, sfDir)
-      case "customer" => Tables.customer(spark, sfDir)
+      case t @ ("orders" | "lineitem" | "customer") =>
+        Tables.load(spark, sfDir, t,
+          Some(ParquetFooterSchema.of(spark, new Path(s"$sfDir/$t.parquet"))))
       case other => sys.error(
         s"no testdata source for table '$other' (have orders|lineitem|customer)")
     }

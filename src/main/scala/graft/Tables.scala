@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated testdata tables (TESTDATA.md).
   *
@@ -19,8 +20,14 @@ object Tables {
     */
   val broadcastable: Set[String] = Set("region", "nation")
 
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    normalizeNtz(spark.read.parquet(s"$sfDir/$name.parquet"))
+  /** Table `name`, its schema inferred by Spark (a job), or `schema` when
+    * the caller already holds it.
+    */
+  def load(spark: SparkSession, sfDir: String, name: String,
+      schema: Option[StructType] = None): DataFrame = {
+    val file = s"$sfDir/$name.parquet"
+    normalizeNtz(schema.fold(spark.read)(spark.read.schema).parquet(file))
+  }
 
   /** The generator emits parquet TIMESTAMP(MICROS) without the
     * adjusted-to-UTC flag, which Spark 4 infers as TIMESTAMP_NTZ

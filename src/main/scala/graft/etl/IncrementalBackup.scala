@@ -14,7 +14,7 @@ import org.apache.spark.sql.graftx.ParquetFooterSchema
 import org.apache.spark.sql.types.{LongType, StructType}
 
 import graft.operators.{JobLock, ReferenceOps}
-import graft.sources.{Bounded, FaultPoints, IngestLog, ManifestLog, OrcSink, StatsStore}
+import graft.sources.{Bounded, FaultPoints, IngestLog, ManifestLog, OrcSink, PartitionIndex, StatsStore}
 import graft.sources.StatsStore.Key
 
 /** The reference's whole job, Spark-first: incremental partition-by-partition
@@ -349,11 +349,12 @@ final class IncrementalBackup(
 
   /** Write `rows` (a wave's, see [[waveRows]]) in one job to a fresh staged
     * dir `<table>/_wave-<nonce>/`, one `pid=` subdir per month. The name
-    * starts with `_` and holds no `=`, so Spark's file index (and so
-    * [[readBack]]) never lists it. A drain passes its rows coalesced to
-    * numMappers: that folds the scan into at most numMappers read→write
-    * tasks with ZERO byte movement (r12, guide §2.4: a keyless repartition
-    * paid a sort and a shuffle of every row just to fix the file count),
+    * starts with `_` and holds no `=`, so Spark's file index never lists
+    * it, and [[readBack]] lists only marked months' `pid=` dirs. A drain
+    * passes its rows coalesced to numMappers: that folds the scan into at
+    * most numMappers read→write tasks with ZERO byte movement (r12, guide
+    * §2.4: a keyless repartition paid a sort and a shuffle of every row
+    * just to fix the file count),
     * so each month lands in at most numMappers files — exactly the
     * reference's NUM_MAPPERS shape (`sqoop_json.py:35`). A one-month wave
     * is written straight into its `pid=` subdir, with no partitioned
@@ -635,7 +636,7 @@ final class IncrementalBackup(
     // (re-deriving files the scan did see is an empty diff; missing them is
     // impossible).
     val journal = IngestLog.list(spark, sourcePath)
-    val headPre = journal.flatMap(_.lastOption).getOrElse(-1L)
+    val headPre = journal.fold(-1L)(_.head)
     if (!log.nonEmpty) {
       // first build: the full scan lists the lake anyway, so the root
       // read costs nothing extra here
@@ -670,13 +671,13 @@ final class IncrementalBackup(
           log.setWaveWatermark(headPre)
           FaultPoints.hit("drain.ingest.gc.pre")
           // this refresh listed the lake, so every wave recorded BEFORE
-          // the pre-listing snapshot is covered — GC those to keep the
-          // journal dir bounded
-          IngestLog.gc(spark, sourcePath, headPre)
+          // the pre-listing snapshot is covered — GC those (from the same
+          // journal listing) to keep the journal dir bounded
+          IngestLog.gc(spark, sourcePath, journal.get, headPre)
         }
       } else {
         val (waveFiles, head) = IngestLog
-          .filesSince(spark, sourcePath, journal.get, log.waveWatermark)
+          .filesSince(spark, sourcePath, journal.get.waves, log.waveWatermark)
         gauges.candidateFiles = waveFiles.size
         // freshness against LIVE DELTAS only (∝ cadence, never manifest
         // size): its one job is making the commitDelta-then-crash replay
@@ -855,8 +856,20 @@ final class IncrementalBackup(
   }
 
   /** Read the backup back (the reference's Vertica external-table read-back,
-    * `sqoop_table.py:158-165`).
+    * `sqoop_table.py:158-165`: a catalog object created after the copy, not
+    * a directory scan). The relation's partitions are the table's months
+    * marked complete in the status store ([[graft.sources.PartitionIndex]]):
+    * a month is visible once it is MARKED, so a month published but not yet
+    * marked (a crash between the two) stays hidden until its replay marks
+    * it. The pid filters prune months on the driver and only the surviving
+    * `pid=` dirs are listed, on the driver — no listing job, however many
+    * months (a join's size statistic still lists every complete month). The data
+    * schema is read on the driver from the newest complete month's first
+    * non-empty file, in every output format. Fails, naming the table's dir,
+    * when no complete month has a file.
     */
   def readBack(): DataFrame =
-    spark.read.format(cfg.outputFileFormat).load(s"$destRoot/${cfg.tableName}")
+    PartitionIndex.read(spark, tableDir.toString, "pid",
+      tableRows().collect { case s if s.isComplete => s.primaryPartitionValue },
+      cfg.outputFileFormat)
 }

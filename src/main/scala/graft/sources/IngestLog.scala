@@ -47,14 +47,20 @@ object IngestLog {
   private def seqs(l: Seq[FileStatus], kind: scala.util.matching.Regex): Seq[Long] =
     l.map(_.getPath.getName).collect { case kind(s) => s.toLong }.sorted
 
-  /** The journal's published wave seqs, ascending, from ONE listing; None
-    * when no journal exists. Its last seq is the journal head.
+  /** One listing of the journal dir: its published wave seqs, ascending
+    * (the last is the journal head), and the entries [[gc]] drops.
     */
-  def list(spark: SparkSession, lakePath: String): Option[Seq[Long]] =
-    listing(fsOf(spark, lakePath), dir(lakePath)).map(seqs(_, Wave))
+  final class Journal private[IngestLog] (private[IngestLog] val entries: Seq[FileStatus]) {
+    val waves: Seq[Long] = seqs(entries, Wave)
+    def head: Long = waves.lastOption.getOrElse(-1L)
+  }
+
+  /** The journal from ONE listing; None when no journal exists. */
+  def list(spark: SparkSession, lakePath: String): Option[Journal] =
+    listing(fsOf(spark, lakePath), dir(lakePath)).map(new Journal(_))
 
   def waves(spark: SparkSession, lakePath: String): Seq[Long] =
-    list(spark, lakePath).getOrElse(Seq.empty)
+    list(spark, lakePath).fold(Seq.empty[Long])(_.waves)
 
   /** Exclusive create of an empty marker. On a local filesystem this goes
     * through `File.createNewFile` (atomic per POSIX — Hadoop's
@@ -130,7 +136,8 @@ object IngestLog {
     -1L // unreachable
   }
 
-  /** Drop waves at or below `upTo` — called by the drain once a
+  /** Drop waves at or below `upTo` of `journal` (the caller's [[list]],
+    * not listed again) — called by the drain once a
     * reconciliation (full-listing) refresh has covered them, so the
     * journal directory stays bounded by the checkpoint cadence instead of
     * accumulating one marker file per drain forever (after years of
@@ -138,15 +145,14 @@ object IngestLog {
     * metadata op). Consumed-but-unGC'd waves are harmless: re-reading
     * them yields known files, an empty diff.
     */
-  def gc(spark: SparkSession, lakePath: String, upTo: Long): Unit = {
+  def gc(spark: SparkSession, lakePath: String, journal: Journal, upTo: Long): Unit = {
     val fs = fsOf(spark, lakePath)
     val d = dir(lakePath)
-    val l = listing(fs, d).getOrElse(Seq.empty)
     // keep the HIGHEST consumed wave as the sequence anchor: deleting it
     // would reset [[record]]'s numbering below the manifest's watermark,
     // and the journal fast path would skip the renumbered waves until the
     // next reconciliation
-    seqs(l, Wave).filter(_ <= upTo).dropRight(1)
+    journal.waves.filter(_ <= upTo).dropRight(1)
       .foreach(s => fs.delete(new Path(d, s"wave-$s"), false))
     // staging debris from a crashed record() (unique-named, never visible
     // to readers) and claim markers — cleared once stale, so the journal
@@ -159,7 +165,7 @@ object IngestLog {
     // back-fills gaps (seq = max + 1), so freeing it cannot reuse a seq
     // below anyone's watermark.
     val staleBefore = System.currentTimeMillis() - 3600L * 1000
-    l.foreach { st =>
+    journal.entries.foreach { st =>
       val n = st.getPath.getName
       val debris = (n.startsWith(".wave-") && n.endsWith(".tmp")) ||
         n.startsWith(".claim-")

@@ -599,19 +599,22 @@ class CrashConsistencySpec extends SparkSpec {
     val (twin, _, twinLake) = setup("twin")
     assert(twin.run(spark.read.parquet(twinLake)) == Seq(199503L, 199504L))
     val want = backMap(twin)
+    // a month is visible once marked: published but unmarked, it stays hidden
     for ((point, visible) <- Seq(
         "drain.copy.staged" -> Set(199501L, 199502L),
-        "drain.copy.written" -> Set(199501L, 199502L, 199503L))) {
+        "drain.copy.written" -> Set(199501L, 199502L))) {
       val tag = point.replace('.', '-')
       val (job, store, lake) = setup(tag)
       val (out, marks) = DrainMarks.record(store, "t", Some(point)) {
         job.run(spark.read.parquet(lake))
       }
       assert(out.isEmpty && marks.isEmpty, s"$point: the fault did not fire before a mark")
-      // the crash state: earlier months, plus a published month whole
+      // the crash state: the earlier months, whole
       val seen = backMap(job)
       assert(seen.keySet == visible && seen.forall { case (m, n) => want(m) == n },
         s"$point: read-back shows $seen")
+      assert(fs.exists(new Path(s"$root/$tag/dest/t/pid=199503")) ==
+        (point == "drain.copy.written"), s"$point: publish state of 199503")
       assert(staged(tag).size == 1, s"$point: staged dirs ${staged(tag)}")
       assert(store.pending("t").count() == 2)
 

@@ -1,9 +1,9 @@
 #!/bin/bash
 # CI gate: the rename allowlist, the manifest-root gate, compile, unit/e2e
-# suites, the ETL oracle and the scaladoc build. The ETL oracle runs the 8
-# q_etl_* queries (every write path of the backup loop) through Verify at
-# sf0.001 and checks them against DuckDB; without the testdata it is
-# skipped, and says so. A malformed doc comment fails `sbt doc`; any
+# suites, the benchmark's own build, the ETL oracle and the scaladoc build.
+# The ETL oracle runs the 8 q_etl_* queries (every write path of the backup
+# loop) through Verify at sf0.001 and checks them against DuckDB; without
+# the testdata it is skipped, and says so. A malformed doc comment fails `sbt doc`; any
 # warning it prints (a broken, ambiguous or private [[link]]) fails this
 # gate too, so the API docs stay publishable. The full correctness drive
 # (all queries through Verify + DuckDB) is run manually per README when
@@ -37,6 +37,16 @@ if grep -nE 'listStatus\(root|exists\(root' src/main/scala/graft/sources/Manifes
 fi
 sbt -batch compile Test/compile
 sbt -batch test
+# Benchmark build: perfbench compiles src/main with the Spark install's own
+# Scala compiler, not sbt, then self-tests its filesystem op counter; a
+# change that compiles under sbt only fails here, not at the next benchmark
+# run. Skipped, and said so, without such an install.
+if python3 -c 'import sys; sys.path.insert(0, "perfbench"); import build; build.spark_jars()' \
+    >/dev/null 2>&1; then
+  python3 perfbench/tests/test_fs_counter.py
+else
+  echo "perfbench build check skipped: no Spark installation with the Scala compiler jars"
+fi
 etl_sf="$HOME/testdata/sf0.001"
 if [[ -d "$etl_sf" ]]; then
   etl_out=$(mktemp -d)
