@@ -24,9 +24,11 @@ import graft.operators.ReferenceOps
   * shape: monthly-partitioned fact tables sequentially (orders, lineitem —
   * the testdata's facts), then a full-snapshot dim (customer — the
   * `advertiser_dim.yaml` path with `PRIMARY_ID: ""`). Re-running resumes
-  * idempotently: completed partitions are discovered via the status store's
-  * NOT-EXISTS anti-join and skipped, exactly like the reference's restart
-  * behavior.
+  * idempotently, like the reference's restart: partitions the status store
+  * has recorded are not discovered again, and completed ones are skipped. A
+  * re-run over an up-to-date backup reads the status store and each fact
+  * table's parquet footer only, and runs no Spark job: the footer's bounds
+  * on the date column show every month recorded.
   *
   * Exit code 0 = every table ran (or was cleanly lock-skipped); the
   * per-table copied-partition counts print as one JSON line for

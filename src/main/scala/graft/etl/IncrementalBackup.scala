@@ -2,16 +2,23 @@ package graft.etl
 
 import java.io.IOException
 import java.sql.Timestamp
+import java.time.ZoneOffset
 import java.util.UUID
 
+import scala.annotation.tailrec
 import scala.collection.mutable
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeMap, AttributeReference, Cast, Expression}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftx.ParquetFooterSchema
-import org.apache.spark.sql.types.{LongType, StructType}
+import org.apache.spark.sql.types.{DataType, DateType, IntegerType, LongType, StructType, TimestampNTZType, TimestampType}
 
 import graft.operators.{JobLock, ReferenceOps}
 import graft.sources.{Bounded, FaultPoints, IngestLog, ManifestLog, OrcSink, PartitionIndex, StatsStore}
@@ -136,6 +143,15 @@ final class IncrementalBackup(
   /** Step 1 of the loop (`sqoop_table.py:131-148`): discover partitions not
     * yet in the status table, record them pending.
     *
+    * The map-only pid scan (`unrecordedIn`) runs only when the source
+    * may hold an unrecorded month. Once the status store has recorded any
+    * month, the footers of the source's own parquet files are checked
+    * first (`footersAllRecorded`): when their pid bounds show every month
+    * recorded, nothing is recorded and no Spark job runs — an up-to-date
+    * re-run reads footers only. When they cannot tell (a source that is no
+    * plain parquet relation, a pid the footers cannot bound), it scans. A
+    * fresh backfill has nothing recorded and scans straight away.
+    *
     * Since r9, discovery records EVERY unrecorded present month and the
     * `SKIP_LATEST_MONTHS` exclusion moved from record time to COPY time:
     * with the status table a complete journal of seen months, the
@@ -145,17 +161,106 @@ final class IncrementalBackup(
     * time is identical to the reference's: a month is reported here, and
     * copied by any drain, only once it leaves the newest-N window.
     */
-  def discover(source: DataFrame): Seq[Long] = {
+  def discover(source: DataFrame): Seq[Long] = discovered(source)._1
+
+  /** [[discover]], with the table's status rows after it: the rows it read
+    * when it recorded nothing, else a fresh read.
+    */
+  private def discovered(source: DataFrame): (Seq[Long], IndexedSeq[BackupStatus]) = {
     // ONE status read feeds recording, dedup, and the deferral window
     // (r9 verdict nit: the loop re-read the tiny store several times per
     // iteration — immaterial at month grain, quadratic at day grain)
     val rows = tableRows()
     val recorded = rows.map(_.primaryPartitionValue)
-    record(recorded,
+    val rec = recorded.toSet
+    val pendingNew =
       // advertiser_dim path (`sqoop_table.py:141-143`): one synthetic unit
       // with NULL-ish partition value, guarded by not-exists on table name.
       if (cfg.isFullSnapshot) { if (rows.isEmpty) Seq(0L) else Seq.empty }
-      else unrecordedIn(source, recorded.toSet))
+      else if (rec.nonEmpty && footersAllRecorded(source, rec)) Seq.empty
+      else unrecordedIn(source, rec)
+    (record(recorded, pendingNew), if (pendingNew.isEmpty) rows else tableRows())
+  }
+
+  /** Do the footers of `source`'s own parquet files show that it holds no
+    * pid outside `recorded`? True only when the footers can tell: the pid
+    * is a footer key of the one relation `source` reads ([[footerKeyOf]]),
+    * and every file's `[lo, hi]` fails [[mayHoldUnrecorded]] — a zero-row
+    * or all-null file holds no pid. The bounds are over the files the
+    * relation's scan would read, so they bound the source's pids. One
+    * footer open per file, on the driver, and no Spark job; a footer that
+    * cannot tell (a key type its shape does not cover, or that differs from
+    * the relation's data schema, a row group without statistics) makes the
+    * answer false.
+    */
+  private def footersAllRecorded(source: DataFrame, recorded: Set[Long]): Boolean =
+    footerKeyOf(source).exists { case (key, rel) =>
+      StatsStore.footerIntervals(spark, rel.location.inputFiles.toSeq, key, rel.dataSchema)
+        .exists(_.flatten.forall { case (lo, hi) => !mayHoldUnrecorded(lo, hi, recorded) })
+    }
+
+  /** `source`'s pid as a footer [[Key]] of the relation it reads, or None
+    * when footers cannot bound it. One optimized plan selects the pid and,
+    * for each date or timestamp column of `source`, the column and its
+    * `ReferenceOps.monthSid`; with its Project aliases inlined
+    * ([[inlinedToFiles]]) it must be a chain of Project/Filter nodes over
+    * one parquet relation without partition columns (a Filter only removes
+    * rows). The inlined pid must then be a stored INT/BIGINT column
+    * ([[Key.Stored]]), or semantically equal to the month of a `source`
+    * column that is itself a stored date or timestamp ([[Key.MonthOf]];
+    * equality implies the pid is deterministic). That is the pid
+    * `EtlMain.source` builds over `Tables.load`'s TIMESTAMP_NTZ to
+    * TIMESTAMP cast, which counts as stored only under UTC: in a zone with
+    * DST gaps the cast shifts wall-clock times, and the cast value's month
+    * is not monotone in the stored one. A column missing from the files or
+    * the relation's data schema is caught by the footer read.
+    */
+  private def footerKeyOf(source: DataFrame): Option[(Key, HadoopFsRelation)] = {
+    def dated(t: DataType) = t == DateType || t == TimestampType || t == TimestampNTZType
+    // unique names only: another would be ambiguous in the select below
+    val dates = source.schema.fields.toSeq.groupBy(_.name.toLowerCase).values.collect {
+      case Seq(f) if dated(f.dataType) => col(s"`${f.name.replace("`", "``")}`")
+    }.toSeq
+    val plan = source.select(pidCol(source) +: dates.flatMap(c =>
+      Seq(c, ReferenceOps.monthSid(c))): _*).queryExecution.optimizedPlan
+    def stored(e: Expression): Option[Attribute] = e match {
+      case a: AttributeReference if dated(a.dataType) => Some(a)
+      case Cast(a: AttributeReference, TimestampType, Some(zone), _)
+          if a.dataType == TimestampNTZType &&
+            DateTimeUtils.getZoneId(zone).normalized == ZoneOffset.UTC => Some(a)
+      case _ => None
+    }
+    inlinedToFiles(plan.output, plan).flatMap { case (es, rel) =>
+      val (pid, pairs) = (es.head, es.tail)
+      (pid match {
+        case a: AttributeReference if a.dataType == IntegerType || a.dataType == LongType =>
+          Some(Key.Stored(a.name))
+        case _ => pairs.grouped(2).flatMap {
+          case Seq(date, month) if month.semanticEquals(pid) => stored(date)
+          case _ => None
+        }.nextOption().map(a => Key.MonthOf(a.name))
+      }).map(_ -> rel)
+    }
+  }
+
+  /** `es`, expressions over `plan`'s output, rewritten over the file
+    * relation at the bottom of a chain of Project and Filter nodes, each
+    * Project's aliases inlined; None for any other plan, or a relation that
+    * is not parquet or has partition columns.
+    */
+  @tailrec private def inlinedToFiles(es: Seq[Expression],
+      plan: LogicalPlan): Option[(Seq[Expression], HadoopFsRelation)] = plan match {
+    case Project(list, child) =>
+      val defs = AttributeMap(list.collect { case a: Alias => a.toAttribute -> a.child })
+      inlinedToFiles(es.map(_.transformUp { case a: Attribute => defs.getOrElse(a, a) }), child)
+    case Filter(_, child) => inlinedToFiles(es, child)
+    case l: LogicalRelation => l.relation match {
+      case r: HadoopFsRelation
+          if r.fileFormat.isInstanceOf[ParquetFileFormat] && r.partitionSchema.isEmpty =>
+        Some(es -> r)
+      case _ => None
+    }
+    case _ => None
   }
 
   /** This table's rows of the status store (a driver-side read). */
@@ -228,12 +333,12 @@ final class IncrementalBackup(
 
   /** A relation's waves. Each reads the whole relation, and a month's
     * share of it is estimated from the relation's plan statistics (its
-    * bytes over the months the status store has seen): no job, no listing.
-    * Without statistics the estimate is huge, and every month is a wave of
-    * its own.
+    * bytes over the months the status store has seen): no job, no listing,
+    * and no plan work until a month is cut into a wave. Without statistics
+    * the estimate is huge, and every month is a wave of its own.
     */
   private def relationWaves(source: DataFrame, months: Int): WaveSource = {
-    val perMonth = source.queryExecution.optimizedPlan.stats.sizeInBytes.toDouble /
+    lazy val perMonth = source.queryExecution.optimizedPlan.stats.sizeInBytes.toDouble /
       math.max(1, months)
     new WaveSource(m => Seq(m.toString -> perMonth), _ => source)
   }
@@ -396,10 +501,12 @@ final class IncrementalBackup(
 
   /** The relation drain: discover, then copy every copyable unit oldest
     * first, a wave per relation scan. Returns partitions copied this run.
+    * A re-run with every month of the source recorded and copied reads
+    * the status store and the source's parquet footers only: no Spark job
+    * and no wave estimate (see [[discover]]).
     */
   def run(source: DataFrame, slots: Option[JobSlots] = None): Seq[Long] = {
-    discover(source)
-    val rows = tableRows()
+    val rows = discovered(source)._2
     drain(copyablePending(rows), 1, slots, relationWaves(source, rows.size))
   }
 
@@ -825,8 +932,7 @@ final class IncrementalBackup(
     * the whole backlog pending.
     */
   def runBulk(source: DataFrame): Seq[Long] = {
-    discover(source)
-    val pending = copyablePending()
+    val pending = copyablePending(discovered(source)._2)
     if (pending.nonEmpty) {
       // Salt WITHIN pid so a hot month splits across tasks: hashing on pid
       // alone capped intra-partition parallelism at one task per month (the

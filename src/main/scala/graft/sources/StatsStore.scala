@@ -315,9 +315,8 @@ object StatsStore {
     if (keys.exists(_._2.isInstanceOf[Key.Expr]))
       aggregate(spark, dataPath, keys, files, schema)
     else {
-      val conf = spark.sparkContext.hadoopConfiguration
-      val fs = new Path(dataPath).getFileSystem(conf)
-      val zone = DateTimeUtils.getZoneId(spark.conf.get("spark.sql.session.timeZone"))
+      val fs = new Path(dataPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val zone = sessionZone(spark)
       val fromFooter = files.map(f => f -> footerRow(spark, fs, f, keys, schema, zone))
       val rest = fromFooter.collect { case (f, None) => f }
       val rows = fromFooter.flatMap(_._2) ++
@@ -329,6 +328,28 @@ object StatsStore {
             Seq(StructField(s"min_$n", LongType), StructField(s"max_$n", LongType)) }))
     }
   }
+
+  /** Per file of `files`, `key`'s `[min, max]` from its footer alone: one
+    * footer open per file, on the driver, and never a Spark job. A zero-row
+    * or all-null file has no interval (None). The whole answer is None as
+    * soon as one footer cannot tell (`footerBounds`): the key's column is
+    * missing from the file or from `schema`, its footer type differs from
+    * `schema`'s, or a row group holding values has no min/max. `schema` is
+    * the data schema of the relation that reads the files.
+    */
+  def footerIntervals(spark: SparkSession, files: Seq[String], key: Key,
+      schema: StructType): Option[Seq[Option[(Long, Long)]]] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val zone = sessionZone(spark)
+    val rows = files.iterator.map { f =>
+      footerRow(spark, new Path(f).getFileSystem(conf), f, Seq("k" -> key), Some(schema), zone)
+    }.takeWhile(_.isDefined).flatten.toSeq
+    if (rows.size < files.size) None
+    else Some(rows.map(r => if (r.isNullAt(2)) None else Some((r.getLong(2), r.getLong(3)))))
+  }
+
+  private def sessionZone(spark: SparkSession): ZoneId =
+    DateTimeUtils.getZoneId(spark.conf.get("spark.sql.session.timeZone"))
 
   /** Stats rows of `files` computed by one Spark job: the keys grouped by
     * `input_file_name()`, zero-row files seeded.

@@ -1,6 +1,7 @@
 #!/bin/bash
 # CI gate: the rename allowlist, the manifest-root gate, compile, unit/e2e
-# suites, the benchmark's own build, the ETL oracle and the scaladoc build.
+# suites, the benchmark's own build, the idle-job gate, the ETL oracle and
+# the scaladoc build.
 # The ETL oracle runs the 8 q_etl_* queries (every write path of the backup
 # loop) through Verify at sf0.001 and checks them against DuckDB; without
 # the testdata it is skipped, and says so. A malformed doc comment fails `sbt doc`; any
@@ -40,12 +41,16 @@ sbt -batch test
 # Benchmark build: perfbench compiles src/main with the Spark install's own
 # Scala compiler, not sbt, then self-tests its filesystem op counter; a
 # change that compiles under sbt only fails here, not at the next benchmark
-# run. Skipped, and said so, without such an install.
+# run. Idle-job gate: one traced backfill, whose idle re-runs (EtlMain over
+# an up-to-date backup) must run 0 Spark jobs. Both are skipped, and say
+# so, without such an install.
 if python3 -c 'import sys; sys.path.insert(0, "perfbench"); import build; build.spark_jars()' \
     >/dev/null 2>&1; then
   python3 perfbench/tests/test_fs_counter.py
+  python3 perfbench/run.py --workload backfill --seed 901 --seconds 1 --trace 1 >/dev/null
+  python3 tools/drain_map.py .bench_work/results/backfill-s901.trace.jsonl --max-jobs idle=0
 else
-  echo "perfbench build check skipped: no Spark installation with the Scala compiler jars"
+  echo "perfbench build check and idle-job gate skipped: no Spark installation with the Scala compiler jars"
 fi
 etl_sf="$HOME/testdata/sf0.001"
 if [[ -d "$etl_sf" ]]; then

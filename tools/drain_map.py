@@ -15,8 +15,13 @@ A steady drain's class is `due` (the reconcile-and-checkpoint drain),
 `copy` (a month landed before it) or `idle`; other operations keep their
 kind (`backfill`, `query`, `ingest`, ...).
 
-Usage: python3 tools/drain_map.py TRACE.jsonl
+With `--max-jobs CLASS=N` (repeatable) it exits 1, naming the operations,
+when any operation of that class ran more than N Spark jobs, or when the
+trace holds no operation of that class.
+
+Usage: python3 tools/drain_map.py TRACE.jsonl [--max-jobs CLASS=N ...]
 """
+import argparse
 import json
 import statistics
 import sys
@@ -43,7 +48,28 @@ def fs_ops(op, area=None):
                and (area is None or k.split(".", 1)[0] == area))
 
 
-def main(path):
+def job_limit(text):
+    cls, sep, n = text.partition("=")
+    if not sep or not cls or not n.isdigit():
+        raise argparse.ArgumentTypeError(f"expected CLASS=N, got {text!r}")
+    return cls, int(n)
+
+
+def over_limits(by_class, jobs_of_op, limits):
+    """One message per limit broken: an op over it, or no op of its class."""
+    bad = []
+    for cls, n in limits:
+        ops = by_class.get(cls, [])
+        if not ops:
+            bad.append(f"--max-jobs {cls}={n}: no {cls} operation in the trace")
+        for o in ops:
+            ran = len(jobs_of_op.get(o["id"], []))
+            if ran > n:
+                bad.append(f"--max-jobs {cls}={n}: op {o['id']} (pass {o['pass']}) ran {ran} jobs")
+    return bad
+
+
+def main(path, limits=()):
     spans = load(path)
     ops = sorted((s for s in spans if s["type"] == "op"), key=lambda o: o["id"])
     sqls = [s for s in spans if s["type"] == "sql"]
@@ -86,8 +112,16 @@ def main(path):
         if loose:
             print(f"  jobs outside any SQL execution: {len(loose)}")
 
+    bad = over_limits(by_class, jobs_of_op, limits)
+    for line in bad:
+        print(line, file=sys.stderr)
+    return 1 if bad else 0
+
 
 if __name__ == "__main__":
-    if len(sys.argv) != 2:
-        sys.exit(__doc__)
-    main(sys.argv[1])
+    ap = argparse.ArgumentParser(usage=__doc__)
+    ap.add_argument("trace")
+    ap.add_argument("--max-jobs", type=job_limit, action="append", default=[],
+                    metavar="CLASS=N")
+    a = ap.parse_args()
+    sys.exit(main(a.trace, a.max_jobs))
