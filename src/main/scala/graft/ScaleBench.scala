@@ -280,31 +280,32 @@ object ScaleBench {
       }
       def probe(srcDir: String): (Double, Double, Long, Long, Int, Int) = {
         val src = spark.read.parquet(srcDir)
-        val cfg = graft.etl.JobConfig(tableName = "orders", numMappers = 4)
+        val cfg = graft.etl.JobConfig(tableName = "orders", numMappers = 4, pruned = true)
         val dest = s"$tmpRoot/dest-${srcDir.split('/').last}"
-        val job = new graft.etl.IncrementalBackup(spark, cfg,
-          new graft.etl.StatusStore(spark, s"$dest/status"), s"$dest/out")
+        val store = new graft.etl.StatusStore(spark, s"$dest/status")
+        val job = new graft.etl.IncrementalBackup(spark, cfg, store, s"$dest/out")
         val months = src
           .select(graft.operators.ReferenceOps.monthSid(col("o_orderdate")).as("m"))
           .distinct().as[Long].collect().sorted
         val mid = months(months.length / 2)
         job.discover(src)
-        val stats = graft.sources.StatsStore.collectExpr(
-          spark, srcDir, Seq("pid" -> job.pidKey(src.schema))).cache()
+        // the persisted manifest, built untimed: a timed pruned drain only
+        // reconciles it against a listing of the unchanged source
+        val stats = job.refreshManifest(srcDir).cache()
         stats.count()
         val nPruned = job.prunedFiles(stats, mid).size
         val nTotal = src.inputFiles.length
+        // a one-month drain: every month complete but `mid`, then drain
+        val recorded = store.rows()
+        def drainMid(source: graft.etl.EtlRunner.EtlSource): Double = {
+          store.writeRows(recorded.map(r => r.copy(isComplete = r.primaryPartitionValue != mid)))
+          val t0 = System.nanoTime()
+          job.drain(source)
+          (System.nanoTime() - t0) / 1e9
+        }
         // two timed copies each (overwrite-idempotent), min: absorbs codegen
-        val tP = (1 to 2).map { _ =>
-          val t0 = System.nanoTime()
-          job.copyPartitionPruned(srcDir, stats, mid)
-          (System.nanoTime() - t0) / 1e9
-        }.min
-        val tF = (1 to 2).map { _ =>
-          val t0 = System.nanoTime()
-          job.copyPartition(src, mid)
-          (System.nanoTime() - t0) / 1e9
-        }.min
+        val tP = (1 to 2).map(_ => drainMid(graft.etl.EtlRunner.LakeSource(srcDir))).min
+        val tF = (1 to 2).map(_ => drainMid(graft.etl.EtlRunner.RelationSource(src))).min
         // bytes of the DATA slice read alone (the part that scales with
         // history): the API-level copy also re-reads the partition-list-
         // sized status store, which is O(months) noise at this fixture size
@@ -463,7 +464,7 @@ object ScaleBench {
     // ---- manifest maintenance cost vs history size (r6 verdict task 4's
     // bench row): prior manifest PERSISTED (steady state reads it back,
     // never re-derives it), the same fixed wave lands in a 1× and a 10×
-    // history, and the timed collectExprAppend must cost ~the wave in
+    // history, and the timed collectExprDiff must cost ~the wave in
     // both — while the full rebuild it replaces scans the whole history.
     tailParts :+= visualJson; flush()
 
@@ -514,8 +515,8 @@ object ScaleBench {
         var n = 0L
         val t0 = System.nanoTime()
         val bytes = inputBytes {
-          n = graft.sources.StatsStore
-            .collectExprAppend(spark, histDir, pid, prior).count()
+          val d = graft.sources.StatsStore.collectExprDiff(spark, histDir, pid, prior, None)
+          n = prior.count() - d.dead.size + d.adds.count()
         }
         val t = (System.nanoTime() - t0) / 1e9
         // the anchor: what the pre-r7 drain paid instead (full rebuild)
@@ -742,7 +743,7 @@ object ScaleBench {
         ()
       }
       val cfg = graft.etl.JobConfig(tableName = "orders", numMappers = 2,
-        outputFileFormat = "parquet")
+        outputFileFormat = "parquet", pruned = true, maxParallel = 4)
       val job = new graft.etl.IncrementalBackup(spark, cfg,
         new graft.etl.StatusStore(spark, s"$tmp/status"), s"$tmp/dest")
       val sigs = graft.multimodal.Multimodal.imageDhash(
@@ -775,7 +776,7 @@ object ScaleBench {
       val per = (0 until cycles).map { k =>
         landMonth(months(k), k)
         var copied = Seq.empty[Long]
-        val etlS = timed { copied = job.runPrunedIncremental(lake, maxParallel = 4) }
+        val etlS = timed { copied = job.drain(graft.etl.EtlRunner.LakeSource(lake)) }
         copiedTotal += copied.size
         val mlog = new graft.sources.ManifestLog(spark, job.manifestPath)
         val deltasLive = mlog.deltasSinceCheckpoint

@@ -48,24 +48,29 @@ import graft.sources.StatsStore.Key
   *  - Since r10, NO step of the steady-state drain materializes the full
   *    manifest on the driver: the log checkpoint is bucketed
   *    ([[graft.sources.ManifestLog]]) and discovery / copies localize only
-  *    the buckets intersecting what they need ([[DrainGauges]] reports the
-  *    localized row counts per invocation).
+  *    the buckets intersecting what they need (the drain's gauges report
+  *    the localized row counts per invocation).
+  *
+  * One way in, as in the reference: [[drain]] backs a table up from a
+  * relation or a lake, [[runBulk]] is the one-job backfill, and
+  * [[readBack]] reads the backup. Both writers take the table's one lock
+  * file first (`lock.getLock() or exit`, `sqoop_etl.py:92-94`), so every
+  * writer of the table's status store, manifest log and `pid=` dirs
+  * contends on it, whoever calls.
   */
 final class IncrementalBackup(
     spark: SparkSession, cfg: JobConfig, status: StatusStore, destRoot: String) {
 
   private def now(): Timestamp = new Timestamp(System.currentTimeMillis())
 
-  def pidCol(df: DataFrame): Column = pidColOf(df.schema)
-
-  private def pidColOf(schema: StructType): Column =
-    if (derivedPid(schema)) ReferenceOps.monthSid(col("o_orderdate"))
+  private[graft] def pidCol(df: DataFrame): Column =
+    if (derivedPid(df.schema)) ReferenceOps.monthSid(col("o_orderdate"))
     else col(cfg.primaryId)
 
   /** The pid as a stats key of the manifest: the same value as
     * [[pidCol]], stated by shape so file stats come from parquet footers.
     */
-  def pidKey(schema: StructType): Key =
+  private[graft] def pidKey(schema: StructType): Key =
     if (derivedPid(schema)) Key.MonthOf("o_orderdate") else Key.Stored(cfg.primaryId)
 
   /** Is the pid derived from the order date? The testdata stand-in for a
@@ -116,13 +121,13 @@ final class IncrementalBackup(
 
   /** Per-invocation drain instrumentation (r9 ADVICE: the zero-listing
     * contract was asserted through a process-global counter, flaky under
-    * any concurrent suite). Reset at the start of every
-    * [[runPrunedIncremental]] / [[refreshManifest]]; -1 means the stage
-    * didn't run. `*CkptRowsRead` vs `*CkptRowsTotal` is the r9 verdict's
-    * localization gauge: on an up-to-date steady-state drain, read = 0
-    * while total ∝ history.
+    * any concurrent suite). Reset at the start of every pruned lake drain
+    * and [[refreshManifest]]; -1 means the stage didn't run.
+    * `*CkptRowsRead` vs `*CkptRowsTotal` is the r9 verdict's localization
+    * gauge: on an up-to-date steady-state drain, read = 0 while total ∝
+    * history.
     */
-  final class DrainGauges {
+  private[graft] final class DrainGauges {
     @volatile var fullListings: Int = 0
     @volatile var candidateFiles: Int = -1
     @volatile var discoveryCkptRowsRead: Long = -1L
@@ -138,7 +143,7 @@ final class IncrementalBackup(
       copyCkptRowsRead = -1L; copyCkptRowsTotal = -1L; copyDeltaRows = -1L
     }
   }
-  val gauges = new DrainGauges
+  private[graft] val gauges = new DrainGauges
 
   /** Step 1 of the loop (`sqoop_table.py:131-148`): discover partitions not
     * yet in the status table, record them pending.
@@ -161,7 +166,7 @@ final class IncrementalBackup(
     * time is identical to the reference's: a month is reported here, and
     * copied by any drain, only once it leaves the newest-N window.
     */
-  def discover(source: DataFrame): Seq[Long] = discovered(source)._1
+  private[graft] def discover(source: DataFrame): Seq[Long] = discovered(source)._1
 
   /** [[discover]], with the table's status rows after it: the rows it read
     * when it recorded nothing, else a fresh read.
@@ -404,7 +409,7 @@ final class IncrementalBackup(
 
   private def tableDir = new Path(destRoot, cfg.tableName)
 
-  /** The drain loop (`sqoop_etl.py:77-83`) — the only loop over units. It
+  /** The copy loop (`sqoop_etl.py:77-83`) — the only loop over units. It
     * cuts `pending` (oldest first) into waves ([[cutWaves]]) and, per wave:
     * stages it ([[stageWave]], holding one fleet job slot when a budget is
     * in force), then walks its months oldest first — publish the month's
@@ -413,19 +418,19 @@ final class IncrementalBackup(
     * leaves it pending, and its replay stages and publishes it again. The
     * staged dir is deleted after the wave's last month, and a drain that
     * writes a wave first deletes any `_wave-*` dir a crashed drain left.
-    * With `maxParallel > 1` the waves overlap on a bounded pool, each
-    * publishing its own months; the flips serialize on a driver-side lock
-    * because [[StatusStore]] is single-writer by contract. Only completion
-    * ORDER across waves is weakened then. The pending set is computed once
-    * per drain: the store is single-writer per table, so a re-read would
-    * find the same units. Returns the units copied.
+    * With `cfg.maxParallel > 1` (MAX_PARALLEL) the waves overlap on a
+    * bounded pool, each publishing its own months; the flips serialize on a
+    * driver-side lock because [[StatusStore]] is single-writer by contract.
+    * Only completion ORDER across waves is weakened then. The pending set
+    * is computed once per drain: the drain holds the table's lock, so a
+    * re-read would find the same units. Returns the units copied.
     */
-  private def drain(pending: Seq[Long], maxParallel: Int, slots: Option[JobSlots],
+  private def copyWaves(pending: Seq[Long], slots: Option[JobSlots],
       src: WaveSource): Seq[Long] = {
     val waves = cutWaves(pending, src)
     if (waves.nonEmpty) clearStaged()
     val statusLock = new Object
-    Bounded.map(waves, maxParallel) { wave =>
+    Bounded.map(waves, cfg.maxParallel) { wave =>
       def stage() = stageWave(waveRows(src.read(wave), wave).coalesce(cfg.numMappers), wave)
       val staged = slots.fold(stage())(_.withSlot(stage()))
       FaultPoints.hit("drain.copy.staged")
@@ -492,12 +497,33 @@ final class IncrementalBackup(
       throw new IOException(s"could not publish $staged/pid=$pid to $live")
   }
 
-  /** Steps 6a+6b (`sqoop_etl.py:36-46`): copy one partition, tuned columnar
-    * output, then flip status.
+  /** Back the table up from `source`: the reference's one backup loop
+    * (`start_backup`, `sqoop_etl.py:48-84`) behind its one lock per table
+    * (`lock.getLock() or exit`, `sqoop_etl.py:92-94`). The drain first
+    * takes the table's lock file, `<destRoot>/<table>.drain.lock`, and
+    * throws [[DrainLockedException]] while another writer holds it; the
+    * lock is released however the drain ends. Then, by source and config:
+    *  - a [[EtlRunner.RelationSource]], or a [[EtlRunner.LakeSource]]
+    *    without `cfg.pruned`, is a relation drain (over `spark.read.parquet`
+    *    of the lake): footer-checked discovery, then waves that each scan
+    *    the relation once;
+    *  - a [[EtlRunner.LakeSource]] with `cfg.pruned` (PRUNED) is the
+    *    steady-state lake drain: the persisted manifest log is refreshed
+    *    from new files only, discovery and copies read only the files the
+    *    manifest places in unrecorded or pending months.
+    *
+    * Waves overlap up to `cfg.maxParallel` (MAX_PARALLEL), each holding a
+    * slot of the optional fleet budget `slots` while it writes. Returns the
+    * months copied, oldest first within a wave.
     */
-  def copyPartition(source: DataFrame, pid: Long): Unit = {
-    drain(Seq(pid), 1, None, relationWaves(source, 1)); ()
-  }
+  def drain(source: EtlRunner.EtlSource, slots: Option[JobSlots] = None): Seq[Long] =
+    withDrainLock {
+      source match {
+        case EtlRunner.RelationSource(df) => relationDrain(df, slots)
+        case EtlRunner.LakeSource(path) if cfg.pruned => lakeDrain(path, slots)
+        case EtlRunner.LakeSource(path) => relationDrain(spark.read.parquet(path), slots)
+      }
+    }
 
   /** The relation drain: discover, then copy every copyable unit oldest
     * first, a wave per relation scan. Returns partitions copied this run.
@@ -505,20 +531,20 @@ final class IncrementalBackup(
     * the status store and the source's parquet footers only: no Spark job
     * and no wave estimate (see [[discover]]).
     */
-  def run(source: DataFrame, slots: Option[JobSlots] = None): Seq[Long] = {
+  private def relationDrain(source: DataFrame, slots: Option[JobSlots]): Seq[Long] = {
     val rows = discovered(source)._2
-    drain(copyablePending(rows), 1, slots, relationWaves(source, rows.size))
+    copyWaves(copyablePending(rows), slots, relationWaves(source, rows.size))
   }
 
   /** The file subset one partition's copy must read, per the min/max
     * manifest: files whose derived-pid interval contains `pid`. Exposed so
     * specs can assert the subset property directly.
     */
-  def prunedFiles(stats: DataFrame, pid: Long): Seq[String] =
+  private[graft] def prunedFiles(stats: DataFrame, pid: Long): Seq[String] =
     StatsStore.survivingFiles(stats, "pid", pid, pid)
 
   /** Can a file hold a pid value outside `recorded`, given its manifest
-    * [lo, hi] interval? The exactness hinge of [[discoverPruned]]: a file
+    * [lo, hi] interval? The exactness hinge of `discoverPruned`: a file
     * may be SKIPPED only when every value its interval can contain is
     * already recorded. Whether candidates step through CALENDAR months
     * (yyyymm — stepping integers would manufacture junk candidates like
@@ -574,7 +600,7 @@ final class IncrementalBackup(
     }
 
   /** The files whose manifest interval may hold an unrecorded pid — the
-    * candidates of [[discoverPruned]]. Steady state this is exactly the
+    * candidates of `discoverPruned`. Steady state this is exactly the
     * new wave's files (history's months are all recorded), and a drain
     * with nothing new has none. Driver cost ∝ the rows of the `stats` view
     * GIVEN — the drain passes a bucket-localized view
@@ -582,7 +608,7 @@ final class IncrementalBackup(
     * so at steady state the filter touches only delta rows, however long
     * history is. Exposed so specs can assert the candidate set.
     */
-  def discoveryFiles(stats: DataFrame): Seq[String] =
+  private[graft] def discoveryFiles(stats: DataFrame): Seq[String] =
     candidates(stats, tableRows().map(_.primaryPartitionValue).toSet).map(_._1)
 
   /** `(file, min_pid, max_pid)` of each [[discoveryFiles]] candidate. A
@@ -612,16 +638,10 @@ final class IncrementalBackup(
     * applied at copy time from the status journal (`deferredFrom`), so
     * the candidates stay exactly "files that may hold an unrecorded month"
     * — none on an up-to-date drain — under any skip. Only snapshot mode
-    * falls back to the full [[discover]].
+    * falls back to the full [[discover]]. `lake` binds the schema of the
+    * spanning candidates' read.
     */
-  def discoverPruned(sourcePath: String, stats: DataFrame): Seq[Long] =
-    if (cfg.isFullSnapshot) discover(spark.read.parquet(sourcePath))
-    else discoverPrunedWith(sampledLake(sourcePath, stats), stats)
-
-  /** [[discoverPruned]] over a bound lake schema: single-pid candidates
-    * from their intervals, the rest by a distinct over their files.
-    */
-  private def discoverPrunedWith(lake: LakeSchema, stats: DataFrame): Seq[Long] = {
+  private def discoverPruned(lake: LakeSchema, stats: DataFrame): Seq[Long] = {
     val recorded = tableRows().map(_.primaryPartitionValue)
     val rec = recorded.toSet
     val (onePid, spanning) = candidates(stats, rec).partition { case (_, lo, hi) => lo == hi }
@@ -630,77 +650,28 @@ final class IncrementalBackup(
     record(recorded, (onePid.map(_._2) ++ scanned).distinct.sorted)
   }
 
-  /** [[copyPartition]] for a LAKE-resident source: instead of filtering a
-    * full-history scan on the derived pid (which no file source can prune —
-    * the r5 scale finding), the copy (a one-month wave, as in
-    * [[runPruned]]) opens ONLY the files whose per-file
-    * [min_pid, max_pid] interval (from a [[graft.sources.StatsStore]]
-    * manifest over the DERIVED key) contains the month. With time-ordered
-    * ingest the intervals are tight, so one month's copy reads ~one month
-    * of files no matter how long history grows — the elimination Vertica's
-    * physical partitioning gives the reference (`sqoop_table.py:97`) for
-    * free. The predicate is still applied to the rows read (manifest
-    * pruning is a superset guarantee), so results are identical to the
-    * unpruned path.
-    */
-  def copyPartitionPruned(sourcePath: String, stats: DataFrame, pid: Long): Unit = {
-    drain(Seq(pid), 1, None, prunedWaves(sampledLake(sourcePath, stats), stats)); ()
-  }
-
-  /** Steady-state drain against a lake path: the manifest is ONE
-    * single-column scan (use [[runPrunedIncremental]] to maintain it
-    * incrementally between drains instead), discovery reads only the
-    * files that may hold unrecorded months ([[discoverPruned]] — it used
-    * to be a full pid-column scan of history), and then each wave of
-    * pending months reads only the union of its months' files, once. Loop
-    * cost is therefore proportional to the PENDING data, not to history
-    * size.
-    *
-    * `maxParallel > 1` overlaps the waves' staged writes (see `drain`): a
-    * backlog bigger than one wave cap is several independent read→write
-    * jobs. The reference gets this for free across TABLES (independent
-    * Sqoop jobs); within a table its loop is sequential
-    * (`sqoop_etl.py:77-83`) — this is the within-table generalization,
-    * throttled like X4 (`maxParallel` jobs × `numMappers` files each).
-    */
-  def runPruned(sourcePath: String, maxParallel: Int = 1): Seq[Long] = {
-    val source = spark.read.parquet(sourcePath)
-    val lake = new LakeSchema(sourcePath, source.schema)
-    // a driver-local relation: pooled copies share it without a cache
-    val stats = StatsStore.collectExpr(spark, sourcePath, lake.keys)
-    if (cfg.isFullSnapshot) discover(source) else discoverPrunedWith(lake, stats)
-    drain(copyablePending(), maxParallel, None, prunedWaves(lake, stats))
-  }
-
   /** Where the persisted manifest lives: next to the table's backup dirs,
     * outside any `pid=` partition (readBack never sees it).
     */
-  def manifestPath: String = s"$destRoot/${cfg.tableName}_manifest"
+  private[graft] def manifestPath: String = s"$destRoot/${cfg.tableName}_manifest"
 
-  /** The drain lock guarding [[runPrunedIncremental]] — the manifest log
-    * (with its ingest-journal watermark and cadence entries) is a
-    * single-writer store, and before r10 only `EtlRunner.runOne` enforced
-    * that (a direct API caller could race a runner: the delta-seq race
-    * fails loudly, but interleaved cadence and watermark updates skew the
-    * checkpoint cadence silently). Lives
-    * beside the manifest so every caller that can reach the same log
-    * contends on the same lock file. A crashed drain's stale lock is
-    * released manually ([[graft.operators.JobLock.release]]) — the same
-    * lock-or-exit operational contract as the reference
-    * (`sqoop_etl.py:52-57`).
+  /** The table's one lock: [[drain]], [[runBulk]] and [[refreshManifest]]
+    * hold it while they write, so every writer of the table's status store,
+    * manifest log (with its ingest-journal watermark and cadence entries)
+    * and `pid=` dirs contends on this one file, whoever calls. It lives
+    * beside the table's backup dirs, outside any `pid=` partition. A
+    * crashed drain's stale lock is released manually
+    * ([[graft.operators.JobLock.release]]) — the same lock-or-exit
+    * operational contract as the reference (`sqoop_etl.py:52-57`).
     */
-  def drainLockPath: String = s"$destRoot/${cfg.tableName}.drain.lock"
+  private[graft] def drainLockPath: String = s"$destRoot/${cfg.tableName}.drain.lock"
 
-  /** Run `f` holding [[drainLockPath]]; loud failure when another drain (or
-    * direct refresh) holds it. All manifest-log writers route through here.
+  /** Run `f` holding [[drainLockPath]]; throws [[DrainLockedException]]
+    * when another writer holds it.
     */
   private def withDrainLock[T](f: => T): T = {
     val lock = new JobLock(spark, drainLockPath)
-    if (!lock.acquire())
-      throw new IllegalStateException(
-        s"another drain holds $drainLockPath (manifest log is " +
-          "single-writer); if no drain is live, the lock is stale from a " +
-          "kill — release it and re-run")
+    if (!lock.acquire()) throw new DrainLockedException(drainLockPath)
     try f finally lock.release()
   }
 
@@ -807,9 +778,9 @@ final class IncrementalBackup(
 
   /** The refreshed manifest as a DataFrame (the log's folded view) — the
     * spec-facing API; the drain itself consumes bucket-localized views of
-    * the log instead ([[runPrunedIncremental]]).
+    * the log instead (`lakeDrain`).
     */
-  def refreshManifest(sourcePath: String): DataFrame = {
+  private[graft] def refreshManifest(sourcePath: String): DataFrame = {
     gauges.reset()
     withDrainLock { refreshManifestLogLocked(sourcePath)._1.current().get }
   }
@@ -836,12 +807,6 @@ final class IncrementalBackup(
     }
   }
 
-  /** [[sampledSchema]] over the first rows of a manifest VIEW. */
-  private def sampledLake(sourcePath: String, stats: DataFrame): LakeSchema =
-    new LakeSchema(sourcePath,
-      sampledSchema(sourcePath, stats.select("file").head(8).map(_.getString(0)).toSeq)
-        .getOrElse(spark.read.parquet(sourcePath).schema))
-
   /** [[sampledSchema]] against the log's newest rows (no fold executed). */
   private def schemaFromLog(log: ManifestLog, sourcePath: String): StructType =
     sampledSchema(sourcePath, log.sampleFiles(8)).getOrElse {
@@ -853,74 +818,73 @@ final class IncrementalBackup(
     * view) — the spec-facing accessor now that the store is log-structured
     * and `spark.read.parquet(manifestPath)` would see raw deltas.
     */
-  def readManifest(): DataFrame =
+  private[graft] def readManifest(): DataFrame =
     new ManifestLog(spark, manifestPath).current()
       .getOrElse(throw new IllegalStateException(
         s"no manifest at $manifestPath"))
 
-  /** [[runPruned]] with PERSISTED, incrementally-maintained manifest and
-    * optional within-table concurrency — the steady-state production drain:
-    * per drain, manifest refresh (∝ NEW files), manifest-pruned discovery
-    * (scan ∝ files holding unrecorded months), and a manifest-pruned wave
-    * write per run of pending months. Results are identical to [[runPruned]] (same
-    * superset guarantee); only the fixed cost per drain stops growing with
-    * history — including DRIVER memory, which since r10 holds only the
-    * checkpoint buckets intersecting unrecorded/pending months plus live
-    * deltas
+  /** The steady-state lake drain, with a PERSISTED, incrementally
+    * maintained manifest: per drain, manifest refresh (∝ NEW files),
+    * manifest-pruned discovery (scan ∝ files holding unrecorded months), and
+    * a manifest-pruned wave write per run of pending months, each reading
+    * only the union of its months' files, once — the elimination Vertica's
+    * physical partitioning gives the reference (`sqoop_table.py:97`) for
+    * free. Results are identical to a relation drain over the lake (pruning
+    * is a superset guarantee and the pid filter still applies to the rows
+    * read); only the fixed cost per drain stops growing with history —
+    * including DRIVER memory, which since r10 holds only the checkpoint
+    * buckets intersecting unrecorded/pending months plus live deltas
     * ([[graft.sources.ManifestLog.localizedPruned(keep:(Long,Long)=>Boolean)*]];
-    * [[gauges]] reports the counts). Serialized per table by [[drainLockPath]]: the manifest log
-    * is single-writer, and a second concurrent caller fails loudly instead
-    * of skewing the log's cadence and watermark.
+    * [[gauges]] reports the counts). The caller holds [[drainLockPath]]:
+    * the manifest log is single-writer.
     */
-  def runPrunedIncremental(sourcePath: String, maxParallel: Int = 1,
-      slots: Option[JobSlots] = None): Seq[Long] =
-    withDrainLock {
-      gauges.reset()
-      // manifest FIRST (append cost ∝ new files), then manifest-pruned
-      // discovery (scan cost ∝ files holding unrecorded months) — with
-      // this ordering NO step of the drain's fixed cost scans history
-      val (log, lake) = refreshManifestLogLocked(sourcePath)
-      if (cfg.isFullSnapshot) {
-        discover(spark.read.parquet(sourcePath))
-      } else {
-        val recorded = tableRows().map(_.primaryPartitionValue).toSet
-        // discovery view: only buckets that may hold an unrecorded month —
-        // empty on an up-to-date drain, whatever the history size. The
-        // bucket's shapeOk flag gates calendar stepping (see
-        // [[mayHoldUnrecordedAt]]): a mixed-shape bucket is judged by the
-        // conservative generic branch, never by yyyymm arithmetic.
-        val disc = log.localizedPruned((mn, mx, shapeOk) =>
-          mayHoldUnrecordedAt(mn, mx, recorded, calendarOk = shapeOk))
-        gauges.discoveryCkptRowsRead = disc.checkpointRowsRead
-        gauges.discoveryCkptRowsTotal = disc.checkpointRowsTotal
-        gauges.discoveryDeltaRows = disc.deltaRowsRead
-        discoverPrunedWith(lake, disc.view)
-      }
-      val pending = copyablePending()
-      if (pending.isEmpty) Seq.empty
-      else {
-        // copy view: only buckets intersecting the pending months' SET —
-        // ∝ pending data at steady state, not history. Set, not [lo, hi]
-        // hull (r10 verdict nit): a sparse pending set (a reactivated old
-        // table leaving {199801, 202401} pending) must not localize every
-        // bucket in between. Exact per bucket: a file can feed a pending
-        // month's copy only if its interval contains that month, and every
-        // file interval in a bucket ⊆ the bucket's summary interval, so a
-        // bucket whose summary contains NO pending month holds nothing any
-        // pending copy reads.
-        val ps: Array[Long] = pending.toArray // sorted: oldest first
-        def hitsPending(mn: Long, mx: Long): Boolean = {
-          var i = java.util.Arrays.binarySearch(ps, mn)
-          if (i < 0) i = -i - 1
-          i < ps.length && ps(i) <= mx
-        }
-        val cp = log.localizedPruned((mn, mx) => hitsPending(mn, mx))
-        gauges.copyCkptRowsRead = cp.checkpointRowsRead
-        gauges.copyCkptRowsTotal = cp.checkpointRowsTotal
-        gauges.copyDeltaRows = cp.deltaRowsRead
-        drain(pending, maxParallel, slots, prunedWaves(lake, cp.view))
-      }
+  private def lakeDrain(sourcePath: String, slots: Option[JobSlots]): Seq[Long] = {
+    gauges.reset()
+    // manifest FIRST (append cost ∝ new files), then manifest-pruned
+    // discovery (scan cost ∝ files holding unrecorded months) — with
+    // this ordering NO step of the drain's fixed cost scans history
+    val (log, lake) = refreshManifestLogLocked(sourcePath)
+    if (cfg.isFullSnapshot) {
+      discover(spark.read.parquet(sourcePath))
+    } else {
+      val recorded = tableRows().map(_.primaryPartitionValue).toSet
+      // discovery view: only buckets that may hold an unrecorded month —
+      // empty on an up-to-date drain, whatever the history size. The
+      // bucket's shapeOk flag gates calendar stepping (see
+      // [[mayHoldUnrecordedAt]]): a mixed-shape bucket is judged by the
+      // conservative generic branch, never by yyyymm arithmetic.
+      val disc = log.localizedPruned((mn, mx, shapeOk) =>
+        mayHoldUnrecordedAt(mn, mx, recorded, calendarOk = shapeOk))
+      gauges.discoveryCkptRowsRead = disc.checkpointRowsRead
+      gauges.discoveryCkptRowsTotal = disc.checkpointRowsTotal
+      gauges.discoveryDeltaRows = disc.deltaRowsRead
+      discoverPruned(lake, disc.view)
     }
+    val pending = copyablePending()
+    if (pending.isEmpty) Seq.empty
+    else {
+      // copy view: only buckets intersecting the pending months' SET —
+      // ∝ pending data at steady state, not history. Set, not [lo, hi]
+      // hull (r10 verdict nit): a sparse pending set (a reactivated old
+      // table leaving {199801, 202401} pending) must not localize every
+      // bucket in between. Exact per bucket: a file can feed a pending
+      // month's copy only if its interval contains that month, and every
+      // file interval in a bucket ⊆ the bucket's summary interval, so a
+      // bucket whose summary contains NO pending month holds nothing any
+      // pending copy reads.
+      val ps: Array[Long] = pending.toArray // sorted: oldest first
+      def hitsPending(mn: Long, mx: Long): Boolean = {
+        var i = java.util.Arrays.binarySearch(ps, mn)
+        if (i < 0) i = -i - 1
+        i < ps.length && ps(i) <= mx
+      }
+      val cp = log.localizedPruned((mn, mx) => hitsPending(mn, mx))
+      gauges.copyCkptRowsRead = cp.checkpointRowsRead
+      gauges.copyCkptRowsTotal = cp.checkpointRowsTotal
+      gauges.copyDeltaRows = cp.deltaRowsRead
+      copyWaves(pending, slots, prunedWaves(lake, cp.view))
+    }
+  }
 
   /** Bulk variant of the drain: ONE job writes every pending partition,
     * through [[graft.sources.OrcSink]] with the drain's writer options,
@@ -929,9 +893,10 @@ final class IncrementalBackup(
     * every row once, salted within pid, so a hot month spreads over
     * several tasks. It stages and publishes like a drain's wave, so a
     * month copied before keeps its dir, and a crash before the mark leaves
-    * the whole backlog pending.
+    * the whole backlog pending. Holds the table's lock like [[drain]], and
+    * throws [[DrainLockedException]] while another writer holds it.
     */
-  def runBulk(source: DataFrame): Seq[Long] = {
+  def runBulk(source: DataFrame): Seq[Long] = withDrainLock {
     val pending = copyablePending(discovered(source)._2)
     if (pending.nonEmpty) {
       // Salt WITHIN pid so a hot month splits across tasks: hashing on pid
@@ -979,3 +944,11 @@ final class IncrementalBackup(
       tableRows().collect { case s if s.isComplete => s.primaryPartitionValue },
       cfg.outputFileFormat)
 }
+
+/** An [[IncrementalBackup]] writer found the table's lock held by another
+  * writer: the reference's lock-or-exit (`sqoop_etl.py:92-94`).
+  * `EtlRunner` skips the table; a direct caller sees this exception.
+  */
+final class DrainLockedException(lockPath: String) extends IllegalStateException(
+  s"another drain holds $lockPath (manifest log is single-writer); if no " +
+    "drain is live, the lock is stale from a kill — release it and re-run")

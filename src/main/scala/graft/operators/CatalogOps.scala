@@ -44,6 +44,8 @@ object CatalogOps {
 /** X1: per-table job lock — atomic create-if-absent of a lock file, the
   * Spark-side analogue of the reference's `JobLock.getLock/releaseLock`
   * (`/root/reference/sqoop_etl.py:29`,`:92`,`:104`).
+  * A table's one lock is its drain lock, which `graft.etl.IncrementalBackup`
+  * takes in every writer.
   */
 final class JobLock(spark: SparkSession, path: String) {
   private val p = new org.apache.hadoop.fs.Path(path)

@@ -53,12 +53,12 @@ import org.apache.spark.sql.types.{BooleanType, StructType}
   * checkpoint's seq are live, so the GC of folded deltas and older
   * entries can die midway without consequence. A reader at ANY crash
   * instant sees a complete manifest (old or new), never a mix. Single
-  * writer per table by contract — enforced by the drain-side
-  * [[graft.operators.JobLock]] that EVERY writing entry point acquires
-  * (`IncrementalBackup.withDrainLock`: both the drain and a direct
-  * `refreshManifest` call contend on the same lock file since r11; before
-  * that a direct refresh could race a drain). So an instance lists the
-  * directory once and keeps that listing current through its own writes.
+  * writer per table by contract — enforced by the table's one
+  * [[graft.operators.JobLock]], which `IncrementalBackup` takes in every
+  * writer (`drain`, `runBulk` and a direct `refreshManifest` contend on the
+  * same lock file; the runner takes no lock of its own). So an instance
+  * lists the directory once and keeps that listing current through its own
+  * writes.
   */
 object ManifestLog {
 

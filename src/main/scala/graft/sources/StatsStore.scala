@@ -84,13 +84,9 @@ object StatsStore {
   }
 
   /** The materialized refresh diff: stats rows for files that appeared
-    * (zero-row files seeded), stored paths of files that vanished, and the
-    * exact file set the diff SCANNED — exposed so specs can assert the
-    * read-set shape directly (history never re-read) instead of inferring
-    * it from lazy-plan input files.
+    * (zero-row files seeded) and stored paths of files that vanished.
     */
-  final case class ManifestDiff(adds: DataFrame, dead: Seq[String],
-      scanned: Seq[String])
+  final case class ManifestDiff(adds: DataFrame, dead: Seq[String])
 
   /** Test instrumentation: full recursive lake listings performed since
     * process start. The ingest-journal drain path's contract is ZERO new
@@ -191,59 +187,26 @@ object StatsStore {
   private def canonExpr(c: Column) =
     regexp_replace(c, "^[a-z][a-z0-9+.\\-]*:/+", "/")
 
-  /** Incremental manifest maintenance: stats are computed ONLY for files
-    * not already covered by `prior` — the steady-state discipline at
-    * 100 TB, where each drain appends a handful of files to a manifest
-    * covering years of history. One file-listing plus a scan of the NEW
-    * files; history is never re-read. Prior rows for files that no longer
-    * exist (overwritten or compacted away) are DROPPED, so
-    * [[survivingFiles]] never returns a dead path. Over an unchanged
-    * directory this is a no-op: the returned manifest has exactly the
-    * prior's rows.
+  /** Incremental manifest maintenance, as the diff a caller commits
+    * (`ManifestLog.commitDelta`): stats rows for files not in `prior`, and
+    * the prior paths that no longer exist (overwritten or compacted away),
+    * so [[survivingFiles]] never returns a dead path once they are dropped.
+    * The steady-state discipline at 100 TB, where each drain adds a
+    * handful of files to a manifest covering years of history: stats are
+    * read for the NEW files only, and history is never re-read; over an
+    * unchanged directory the diff is empty.
     *
-    * The listing is RECURSIVE (`listDataFiles`) so partitioned lake
-    * layouts (`pid=…/`, `date=…/` — what this repo's own writers produce)
-    * have the same file universe here as in the full rebuild's
-    * `spark.read.parquet`: with a top-level-only listing (the r7 verdict's
-    * hazard) every nested file was evicted as dead and silently skipped by
-    * pruned reads. Fresh files are read with `basePath = dataPath` so
-    * directory-derived partition columns stay visible to `derived`
-    * expressions, exactly as in the rebuild.
-    */
-  def collectExprAppend(spark: SparkSession, dataPath: String,
-      keys: Seq[(String, Key)], prior: DataFrame): DataFrame = {
-    val d = collectExprDiff(spark, dataPath, keys, prior, None)
-    val kept = dropFiles(spark, prior, d.dead)
-    if (d.scanned.isEmpty) kept else kept.unionByName(d.adds)
-  }
-
-  /** `prior` minus the rows for `dead` paths. Small dead sets inline as a
-    * NOT IN filter; large ones (a compaction or backfill that replaced
-    * much of the lake) would build a giant expression tree, so they go
-    * through a broadcast anti-join on the canonical path instead.
-    */
-  def dropFiles(spark: SparkSession, prior: DataFrame,
-      dead: Seq[String]): DataFrame =
-    if (dead.isEmpty) prior
-    else if (dead.size <= 1000)
-      prior.filter(!col("file").isin(dead.toIndexedSeq: _*))
-    else {
-      import spark.implicits._
-      val deadDf = dead.map(canon).toDF("__dead_key")
-      val keyed = prior.withColumn("__key",
-        regexp_replace(col("file"), "^[a-z][a-z0-9+.\\-]*:/+", "/"))
-      keyed.join(broadcast(deadDf), keyed("__key") === deadDf("__dead_key"),
-        "left_anti").drop("__key")
-    }
-
-  /** The DIFF underlying [[collectExprAppend]], as data the caller can
-    * journal: stats rows for files not in `prior` + prior paths that no
-    * longer exist. `candidates = Some(files)` supplies the new-file
-    * universe WITHOUT any lake listing (the [[IngestLog]] path — dead
-    * detection is skipped, per the journal's append-only contract);
-    * `None` performs the full recursive listing and detects deads.
-    * `keys` and `schema` (passed to [[statsForFiles]]) are evaluated only
-    * when a fresh file needs stats.
+    * `candidates = Some(files)` supplies the new-file universe WITHOUT any
+    * lake listing (the [[IngestLog]] path — dead detection is skipped, per
+    * the journal's append-only contract). `None` performs the full
+    * recursive listing (`listDataFiles`) and detects deads: partitioned
+    * lake layouts (`pid=…/`, `date=…/`) then have the same file universe
+    * as the full rebuild's `spark.read.parquet` — with a top-level-only
+    * listing (the r7 hazard) every nested file was evicted as dead. Fresh
+    * files are read with `basePath = dataPath`, so directory-derived
+    * partition columns stay visible to the keys. `keys` and `schema`
+    * (passed to [[statsForFiles]]) are evaluated only when a fresh file
+    * needs stats.
     */
   def collectExprDiff(spark: SparkSession, dataPath: String,
       keys: => Seq[(String, Key)],
@@ -291,7 +254,7 @@ object StatsStore {
           java.util.Collections.emptyList[Row](),
           prior.schema)
       else statsForFiles(spark, dataPath, keys, fresh, schema)
-    ManifestDiff(adds, dead, fresh)
+    ManifestDiff(adds, dead)
   }
 
   /** Stats rows for a KNOWN-fresh file set, as a driver-local relation:

@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types._
 
 import graft.etl.{BackupStatus, IncrementalBackup, JobConfig, StatusStore}
+import graft.etl.EtlRunner.LakeSource
 import graft.sources.{AtomicLog, DriverParquet, FaultPoints, IngestLog, ManifestLog}
 
 /** The publish-by-rename log under the status store and the manifest log,
@@ -194,13 +195,13 @@ class AtomicLogSpec extends SparkSpec {
       if (journal) IngestLog.record(spark, lake, Seq(dst.toString))
     }
     val job = new IncrementalBackup(spark, JobConfig(tableName = "t", numMappers = 1,
-      outputFileFormat = "parquet", manifestCheckpointEvery = 8),
+      outputFileFormat = "parquet", pruned = true, manifestCheckpointEvery = 8),
       new StatusStore(spark, s"$dir/status"), s"$dir/dest")
     val m = job.manifestPath
     land(199501L, journal = false) // the first build lists the lake
-    assert(job.runPrunedIncremental(lake) == Seq(199501L))
+    assert(job.drain(LakeSource(lake)) == Seq(199501L))
     land(199502L, journal = true)  // then the journal feeds a live delta
-    assert(job.runPrunedIncremental(lake) == Seq(199502L))
+    assert(job.drain(LakeSource(lake)) == Seq(199502L))
     assert(names(m) == Set("checkpoint-0", "delta-1", "watermark-1", "cadence-1"))
     def manifest() = job.readManifest().collect().map(_.toString).sorted.toSeq
     val before = manifest()
@@ -212,7 +213,7 @@ class AtomicLogSpec extends SparkSpec {
 
     // the journal is re-read from the start; its one wave sits in the live
     // delta, so the diff is empty
-    assert(job.runPrunedIncremental(lake).isEmpty)
+    assert(job.drain(LakeSource(lake)).isEmpty)
     assert(names(m) == Set("checkpoint-0", "delta-1", "watermark-1", "cadence-1",
       "_wave-1", "_refresh-1"), "no delta committed; the old files are left alone")
     assert(manifest() == before)

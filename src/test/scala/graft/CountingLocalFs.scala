@@ -4,13 +4,18 @@ import java.net.URI
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.hadoop.fs.{FileStatus, LocatedFileStatus, Path, RawLocalFileSystem, RemoteIterator}
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, FileStatus, LocatedFileStatus, Path,
+  RawLocalFileSystem, RemoteIterator}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
 
 /** The local filesystem under the private scheme `countfs:`, counting the
-  * listings and stats each path gets — the fake-filesystem idiom of
-  * Spark's own suites. Registered with `fs.countfs.impl`, so only paths a
-  * test writes as `countfs:///...` reach it. Only outermost calls count:
-  * `exists` reaching `getFileStatus` is one stat.
+  * listings, stats, opens and creates each path gets — the fake-filesystem
+  * idiom of Spark's own suites. Registered with `fs.countfs.impl`, so only
+  * paths a test writes as `countfs:///...` reach it. Only outermost calls
+  * count: `exists` reaching `getFileStatus` is one stat.
   */
 class CountingLocalFs extends RawLocalFileSystem {
   import CountingLocalFs.counted
@@ -31,6 +36,18 @@ class CountingLocalFs extends RawLocalFileSystem {
 
   override def exists(f: Path): Boolean =
     counted("stat", f)(super.exists(f))
+
+  override def open(f: Path, bufferSize: Int): FSDataInputStream =
+    counted("open", f)(super.open(f, bufferSize))
+
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
+      blockSize: Long, progress: Progressable): FSDataOutputStream =
+    counted("create", f)(super.create(f, overwrite, bufferSize, replication, blockSize, progress))
+
+  override def create(f: Path, permission: FsPermission, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long, progress: Progressable): FSDataOutputStream =
+    counted("create", f)(
+      super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress))
 }
 
 object CountingLocalFs {
@@ -55,7 +72,14 @@ object CountingLocalFs {
 
   def reset(): Unit = counts.clear()
 
-  /** `op` ("list" or "stat") calls on the local path `path` since [[reset]]. */
+  /** `op` ("list", "stat", "open" or "create") calls on the local path
+    * `path` since [[reset]].
+    */
   def count(op: String, path: String): Int =
     Option(counts.get(key(op, path))).fold(0)(_.get)
+
+  /** Every local path `op` was called on since [[reset]], with its count. */
+  def calls(op: String): Map[String, Int] = counts.asScala.collect {
+    case (k, n) if k.startsWith(s"$op ") => k.stripPrefix(s"$op ") -> n.get
+  }.toMap
 }

@@ -6,6 +6,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 
 import graft.etl.{BackupStatus, StatusStore}
+import graft.etl.EtlRunner.{LakeSource, RelationSource}
 import graft.sources.Compaction
 
 /** Failure injection at the swap boundaries of the atomic-swap stores
@@ -278,7 +279,7 @@ class CrashConsistencySpec extends SparkSpec {
     import graft.sources.{FaultPoints, IngestLog, ManifestLog}
     val root = Files.createTempDirectory("graft-crash-due").toString
     val cfg = graft.etl.JobConfig(tableName = "t", numMappers = 1,
-      outputFileFormat = "parquet", manifestCheckpointEvery = 2)
+      outputFileFormat = "parquet", pruned = true, manifestCheckpointEvery = 2)
     def land(lake: String, m: Long): java.nio.file.Path = {
       val stage = s"$lake-stage-$m"
       spark.range(40).select(lit(m).as("month_sid"), col("id").as("payload"))
@@ -299,9 +300,9 @@ class CrashConsistencySpec extends SparkSpec {
         new graft.etl.StatusStore(spark, s"$root/$tag/status"), s"$root/$tag/dest")
       val lost = land(lake, 199501L)
       land(lake, 199502L)
-      job.runPrunedIncremental(lake)
+      job.drain(LakeSource(lake))
       land(lake, 199503L)
-      job.runPrunedIncremental(lake)
+      job.drain(LakeSource(lake))
       Files.delete(lost)
       (job, lake)
     }
@@ -313,7 +314,7 @@ class CrashConsistencySpec extends SparkSpec {
       .as[(Long, Long)].collect().toMap
 
     val (twin, twinLake) = setup("twin")
-    assert(twin.runPrunedIncremental(twinLake).isEmpty)
+    assert(twin.drain(LakeSource(twinLake)).isEmpty)
     assert(names(twin) == Set("m-199502.parquet", "m-199503.parquet"))
 
     val (job, lake) = setup("crash")
@@ -321,7 +322,7 @@ class CrashConsistencySpec extends SparkSpec {
       if (n == "manifest.checkpoint.swapped") throw new RuntimeException(s"injected@$n")
     }
     val crashed =
-      try { job.runPrunedIncremental(lake); false }
+      try { job.drain(LakeSource(lake)); false }
       catch { case e: RuntimeException if e.getMessage.startsWith("injected@") => true }
       finally FaultPoints.clear()
     assert(crashed, "the due drain did not reach its fold")
@@ -330,11 +331,11 @@ class CrashConsistencySpec extends SparkSpec {
     assert(names(job).contains("m-199501.parquet"), "the kill came before the reconcile")
     assert(log.refreshCount >= cfg.manifestCheckpointEvery, "the cadence counter was reset")
 
-    assert(job.runPrunedIncremental(lake).isEmpty)
+    assert(job.drain(LakeSource(lake)).isEmpty)
     assert(!names(job).contains("m-199501.parquet"), "the re-run must reconcile the lost file")
     assert(names(job) == names(twin))
     assert(backMap(job) == backMap(twin))
-    assert(job.runPrunedIncremental(lake).isEmpty)
+    assert(job.drain(LakeSource(lake)).isEmpty)
     assert(names(job) == names(twin))
   }
 
@@ -406,20 +407,20 @@ class CrashConsistencySpec extends SparkSpec {
       landed.toSeq
     }
     val cfg = graft.etl.JobConfig(tableName = "t", numMappers = 1,
-      outputFileFormat = "parquet", manifestCheckpointEvery = 2)
+      outputFileFormat = "parquet", pruned = true, manifestCheckpointEvery = 2)
     def mkJob(tag: String) = new graft.etl.IncrementalBackup(spark, cfg,
       new graft.etl.StatusStore(spark, s"$root/$tag/status"), s"$root/$tag/dest")
     def runSetup(tag: String): graft.etl.IncrementalBackup = {
       val lake = s"$root/$tag/lake"
       val job = mkJob(tag)
       IngestLog.record(spark, lake, land(w1, lake, "w1-"))
-      job.runPrunedIncremental(lake)
+      job.drain(LakeSource(lake))
       IngestLog.record(spark, lake, land(w2, lake, "w2-"))
       job
     }
     // the never-crashed TWIN: the convergence target
     val twin = runSetup("twin")
-    twin.runPrunedIncremental(s"$root/twin/lake")
+    twin.drain(LakeSource(s"$root/twin/lake"))
     import spark.implicits._
     def backMap(j: graft.etl.IncrementalBackup) = j.readBack()
       .groupBy(col("pid").cast("long").as("m")).count()
@@ -438,7 +439,7 @@ class CrashConsistencySpec extends SparkSpec {
     val seen = scala.collection.mutable.ArrayBuffer.empty[String]
     val dry = runSetup("dry") // setup OUTSIDE the count: trials fuzz drain 2 only
     FaultPoints.install(name => { seen += name; () })
-    try dry.runPrunedIncremental(s"$root/dry/lake")
+    try dry.drain(LakeSource(s"$root/dry/lake"))
     finally FaultPoints.clear()
     val domain = seen.toIndexedSeq
     assert(domain.size >= 10, s"too few fault occurrences to fuzz: $domain")
@@ -462,13 +463,13 @@ class CrashConsistencySpec extends SparkSpec {
           throw new RuntimeException(s"injected@$name#$target")
       }
       val crashed =
-        try { job.runPrunedIncremental(lake); false }
+        try { job.drain(LakeSource(lake)); false }
         catch { case e: RuntimeException if e.getMessage.startsWith("injected@") => true }
         finally FaultPoints.clear()
       if (crashed) aborted += 1
       // convergence: the plain re-run completes whatever the abort left
-      val again = job.runPrunedIncremental(lake)
-      assert(job.runPrunedIncremental(lake).isEmpty,
+      val again = job.drain(LakeSource(lake))
+      assert(job.drain(LakeSource(lake)).isEmpty,
         s"$tag: drain not quiescent after recovery (copied $again then more)")
       assert(backMap(job) == wantBack, s"$tag: read-back diverged")
       assert(manifestNames(job) == wantManifest, s"$tag: manifest diverged")
@@ -510,9 +511,10 @@ class CrashConsistencySpec extends SparkSpec {
         }
     }
     val cfg = graft.etl.JobConfig(tableName = "t", numMappers = 1,
-      outputFileFormat = "parquet", manifestCheckpointEvery = 2)
+      outputFileFormat = "parquet", pruned = true, maxParallel = 2,
+      manifestCheckpointEvery = 2)
     def drain(tag: String, job: graft.etl.IncrementalBackup): Seq[Long] =
-      job.runPrunedIncremental(s"$root/$tag/lake", maxParallel = 2)
+      job.drain(LakeSource(s"$root/$tag/lake"))
     // drain 1 copies wave 1; wave 2 (five months) waits for the fuzzed drain
     def runSetup(tag: String): graft.etl.IncrementalBackup = {
       val lake = s"$root/$tag/lake"
@@ -585,7 +587,7 @@ class CrashConsistencySpec extends SparkSpec {
       land(lake, Seq(199501L, 199502L))
       val store = new StatusStore(spark, s"$root/$tag/status")
       val job = new graft.etl.IncrementalBackup(spark, cfg, store, s"$root/$tag/dest")
-      assert(job.run(spark.read.parquet(lake)) == Seq(199501L, 199502L))
+      assert(job.drain(RelationSource(spark.read.parquet(lake))) == Seq(199501L, 199502L))
       land(lake, Seq(199503L, 199504L))
       (job, store, lake)
     }
@@ -597,7 +599,7 @@ class CrashConsistencySpec extends SparkSpec {
       .map(_.getPath.getName).filter(_.startsWith("_wave-")).toSeq
 
     val (twin, _, twinLake) = setup("twin")
-    assert(twin.run(spark.read.parquet(twinLake)) == Seq(199503L, 199504L))
+    assert(twin.drain(RelationSource(spark.read.parquet(twinLake))) == Seq(199503L, 199504L))
     val want = backMap(twin)
     // a month is visible once marked: published but unmarked, it stays hidden
     for ((point, visible) <- Seq(
@@ -606,7 +608,7 @@ class CrashConsistencySpec extends SparkSpec {
       val tag = point.replace('.', '-')
       val (job, store, lake) = setup(tag)
       val (out, marks) = DrainMarks.record(store, "t", Some(point)) {
-        job.run(spark.read.parquet(lake))
+        job.drain(RelationSource(spark.read.parquet(lake)))
       }
       assert(out.isEmpty && marks.isEmpty, s"$point: the fault did not fire before a mark")
       // the crash state: the earlier months, whole
@@ -618,7 +620,7 @@ class CrashConsistencySpec extends SparkSpec {
       assert(staged(tag).size == 1, s"$point: staged dirs ${staged(tag)}")
       assert(store.pending("t").count() == 2)
 
-      val (again, remarks) = DrainMarks.record(store, "t")(job.run(spark.read.parquet(lake)))
+      val (again, remarks) = DrainMarks.record(store, "t")(job.drain(RelationSource(spark.read.parquet(lake))))
       assert(again.contains(Seq(199503L, 199504L)), s"$point: re-run copied $again")
       assert(remarks == Seq(199503L, 199504L), s"$point: re-run marks $remarks")
       assert(staged(tag).isEmpty, s"$point: staged dirs left ${staged(tag)}")

@@ -9,8 +9,8 @@ import graft.sources.IngestLog
 
 /** What a steady journaled drain costs in filesystem metadata operations
   * on the manifest log and the ingest journal: each is listed once per
-  * drain, and neither is stat'ed. The table's backup root and its lake sit
-  * on a counting local filesystem.
+  * drain, and neither is stat'ed; and the one lock file a drain takes. The
+  * table's backup root and its lake sit on a counting local filesystem.
   */
 class DrainFsOpsSpec extends SparkSpec {
 
@@ -60,6 +60,24 @@ class DrainFsOpsSpec extends SparkSpec {
     CountingLocalFs.reset()
     assert(drain() == Seq(199503L))
     assertOnce("a copy drain")
+  }
+
+  test("a drain through the runner creates one lock file, the table's drain lock, for a lake and a relation source alike") {
+    val (tmp, landMonth, drain) = journaledLake(every = 8)
+    def lockCreates(): Seq[String] =
+      CountingLocalFs.calls("create").toSeq.collect { case (p, n) if p.endsWith(".lock") =>
+        s"${p.stripPrefix(tmp)} x$n" }
+    landMonth(199503L)
+    CountingLocalFs.reset()
+    assert(drain() == Seq(199503L))
+    assert(lockCreates() == Seq("/work/data/t.drain.lock x1"))
+    val rows = spark.range(40).select(lit(199501L).as("month_sid"), col("id").as("payload"))
+    CountingLocalFs.reset()
+    val out = EtlRunner.runAllFrom(spark, s"${CountingLocalFs.Scheme}://$tmp/rel",
+      Seq(JobConfig(tableName = "r", numMappers = 1, outputFileFormat = "parquet") ->
+        (EtlRunner.RelationSource(rows): EtlRunner.EtlSource)))
+    assert(out == Map("r" -> Some(Seq(199501L))))
+    assert(lockCreates() == Seq("/rel/data/r.drain.lock x1"))
   }
 
   test("a due journaled drain lists the ingest journal once: its garbage collection reuses the refresh's listing") {

@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.etl.{EtlRunner, IncrementalBackup, JobConfig, StatusStore}
+import graft.etl.EtlRunner.{LakeSource, RelationSource}
 import graft.sources.{IngestLog, ManifestLog}
 
 /** What an ETL drain costs in Spark jobs, and what it leaves behind in the
@@ -103,14 +104,14 @@ class DrainJobsSpec extends SparkSpec with JobCount {
     val job = new IncrementalBackup(spark,
       JobConfig(tableName = "t", numMappers = 1, outputFileFormat = "parquet"),
       new StatusStore(spark, s"$tmp/status"), s"$tmp/dest")
-    val (copied, jobs) = jobsOf(job.run(source))
+    val (copied, jobs) = jobsOf(job.drain(RelationSource(source)))
     assert(copied == Seq(199501L, 199502L, 199503L))
     // the map-only discovery and one wave write for all three months:
     // publishing and marking a month adds no job
     assert(jobs == 2, s"a 3-month relation drain ran $jobs Spark jobs")
     // every month recorded, and the footers of the source's files bound
     // its stored month_sid to recorded months: no discovery scan
-    val (again, againJobs) = jobsOf(job.run(source))
+    val (again, againJobs) = jobsOf(job.drain(RelationSource(source)))
     assert(again.isEmpty && againJobs == 0, s"an idle relation drain ran $againJobs jobs")
   }
 
@@ -157,13 +158,13 @@ class DrainJobsSpec extends SparkSpec with JobCount {
     spark.range(60).select((lit(199501L) + col("id") % 3).as("month_sid"),
         col("id").as("payload"))
       .repartitionByRange(3, col("month_sid")).write.parquet(lake)
-    def job(name: String) = new IncrementalBackup(spark,
-      JobConfig(tableName = "t", numMappers = 2, outputFileFormat = "parquet"),
+    def job(name: String, pruned: Boolean = false) = new IncrementalBackup(spark,
+      JobConfig(tableName = "t", numMappers = 2, outputFileFormat = "parquet", pruned = pruned),
       new StatusStore(spark, s"$tmp/status-$name"), s"$tmp/dest-$name")
-    val relation = writePlans { assert(job("r").run(spark.read.parquet(lake)).size == 3) }
-    val pruned = writePlans { assert(job("p").runPruned(lake).size == 3) }
-    val incr = writePlans { assert(job("i").runPrunedIncremental(lake).size == 3) }
-    for ((name, ps) <- Seq("relation" -> relation, "pruned" -> pruned, "lake" -> incr)) {
+    val relation = writePlans { assert(job("r").drain(RelationSource(spark.read.parquet(lake))).size == 3) }
+    val lakeScan = writePlans { assert(job("l").drain(LakeSource(lake)).size == 3) }
+    val pruned = writePlans { assert(job("p", pruned = true).drain(LakeSource(lake)).size == 3) }
+    for ((name, ps) <- Seq("relation" -> relation, "lake" -> lakeScan, "pruned lake" -> pruned)) {
       // the three months are one wave: one staged write
       val copies = ps.filter(_.contains("/t/_wave-"))
       assert(copies.size == 1, s"$name: ${copies.size} copy writes")

@@ -4,7 +4,9 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.etl.{BackupStatus, IncrementalBackup, JobConfig, StatusStore, TypeMapping}
+import graft.etl.{BackupStatus, DrainLockedException, EtlRunner, IncrementalBackup, JobConfig,
+  StatusStore, TypeMapping}
+import graft.etl.EtlRunner.{LakeSource, RelationSource}
 import graft.operators.ReferenceOps
 
 /** End-to-end incremental copy (the reference's whole job) + components. */
@@ -17,7 +19,7 @@ class EtlSpec extends SparkSpec {
     val job = new IncrementalBackup(spark, cfg, store, s"$tmp/dest")
     val orders = Tables.orders(spark, sf)
 
-    val copied = job.run(orders)
+    val copied = job.drain(RelationSource(orders))
     assert(copied.nonEmpty)
     // every source month copied
     import spark.implicits._
@@ -28,7 +30,7 @@ class EtlSpec extends SparkSpec {
     assert(job.readBack().count() == orders.count())
 
     // rerun: nothing pending, no double-copy, counts unchanged
-    val copiedAgain = job.run(orders)
+    val copiedAgain = job.drain(RelationSource(orders))
     assert(copiedAgain.isEmpty)
     assert(job.readBack().count() == orders.count())
   }
@@ -41,11 +43,15 @@ class EtlSpec extends SparkSpec {
     val orders = Tables.orders(spark, sf)
 
     val discovered = job.discover(orders)
-    // simulate a crash after copying only the first partition
-    job.copyPartition(orders, discovered.head)
+    // simulate a crash after copying only the first partition: the drain
+    // dies right after its first mark
+    val (out, marks) = DrainMarks.record(store, "orders", Some("drain.copy.marked")) {
+      job.drain(RelationSource(orders))
+    }
+    assert(out.isEmpty && marks == Seq(discovered.head))
     assert(store.pending("orders").count() == discovered.size - 1)
     // resume drains the rest (discover() finds nothing new — not-exists guard)
-    val copied = job.run(orders)
+    val copied = job.drain(RelationSource(orders))
     assert(copied.toSet == discovered.drop(1).toSet)
     assert(job.readBack().count() == orders.count())
   }
@@ -58,7 +64,7 @@ class EtlSpec extends SparkSpec {
     orders.repartitionByRange(8, col("o_orderdate"))
       .sortWithinPartitions("o_orderdate")
       .write.parquet(s"$tmp/src")
-    val cfg = JobConfig(tableName = "orders", numMappers = 2)
+    val cfg = JobConfig(tableName = "orders", numMappers = 2, pruned = true)
     val store = new StatusStore(spark, s"$tmp/status")
     val job = new IncrementalBackup(spark, cfg, store, s"$tmp/dest")
 
@@ -80,10 +86,10 @@ class EtlSpec extends SparkSpec {
       subset.map(f => java.net.URLDecoder.decode(f, "UTF-8")).toSet)
 
     // and the full pruned drain reproduces the source exactly
-    val copied = job.runPruned(s"$tmp/src")
+    val copied = job.drain(LakeSource(s"$tmp/src"))
     assert(copied.toSet == allMonths.toSet)
     assert(job.readBack().count() == orders.count())
-    assert(job.runPruned(s"$tmp/src").isEmpty) // idempotent re-entry
+    assert(job.drain(LakeSource(s"$tmp/src")).isEmpty) // idempotent re-entry
   }
 
   test("concurrent pruned drain: overlapping month copies reproduce the sequential result, mid-drain crash resumes") {
@@ -92,26 +98,27 @@ class EtlSpec extends SparkSpec {
     orders.repartitionByRange(8, col("o_orderdate"))
       .sortWithinPartitions("o_orderdate")
       .write.parquet(s"$tmp/src")
-    val cfg = JobConfig(tableName = "orders", numMappers = 2)
+    val cfg = JobConfig(tableName = "orders", numMappers = 2, pruned = true, maxParallel = 6)
     val store = new StatusStore(spark, s"$tmp/status")
     val job = new IncrementalBackup(spark, cfg, store, s"$tmp/dest")
 
     import spark.implicits._
     val allMonths = orders.select(ReferenceOps.monthSid(col("o_orderdate")))
       .distinct().as[Long].collect().toSet
-    // partial sequential progress first (one month already complete) —
-    // the concurrent drain must pick up exactly the remainder
-    job.discover(spark.read.parquet(s"$tmp/src"))
-    val first = store.pending("orders").collect()
-      .map(_.primaryPartitionValue).min
-    val stats = graft.sources.StatsStore.collectExpr(
-      spark, s"$tmp/src", Seq("pid" -> job.pidKey(spark.read.parquet(s"$tmp/src").schema)))
-    job.copyPartitionPruned(s"$tmp/src", stats, first)
+    // partial sequential progress first (one month already complete: a
+    // one-wave drain that dies after its first mark) — the concurrent
+    // drain must pick up exactly the remainder
+    val (out, marks) = DrainMarks.record(store, "orders", Some("drain.copy.marked")) {
+      job.drain(LakeSource(s"$tmp/src"))
+    }
+    assert(out.isEmpty && marks.size == 1)
+    val first = marks.head
+    assert(first == allMonths.min)
 
     // an 8 KB split caps a wave at about one of the 8 lake files, so the
     // remaining months form several waves that overlap on the pool
     val copied = withConf("spark.sql.files.maxPartitionBytes", "8k") {
-      job.runPruned(s"$tmp/src", maxParallel = 6)
+      job.drain(LakeSource(s"$tmp/src"))
     }
     assert(copied.toSet == allMonths - first)
     assert(store.pending("orders").count() == 0)
@@ -123,7 +130,7 @@ class EtlSpec extends SparkSpec {
       .count().as[(Long, Long)].collect().toMap
     assert(got == want)
     // idempotent re-entry: nothing pending, nothing copied
-    assert(job.runPruned(s"$tmp/src", maxParallel = 6).isEmpty)
+    assert(job.drain(LakeSource(s"$tmp/src")).isEmpty)
   }
 
   test("incremental manifest: append is a no-op on an unchanged dir, scans only new files, drops dead ones; two-wave drain matches source") {
@@ -137,51 +144,62 @@ class EtlSpec extends SparkSpec {
     land(orders.filter(col("o_orderdate") >= lit("1996-01-01")), 3, "w2")
     val lake = s"$tmp/lake"
     Files.createDirectories(java.nio.file.Paths.get(lake))
-    def append(sub: String, prefix: String): Unit = {
+    def append(sub: String, prefix: String): Seq[String] = {
+      val landed = scala.collection.mutable.ArrayBuffer.empty[String]
       val st = Files.list(java.nio.file.Paths.get(s"$tmp/$sub"))
       try st.forEach { p =>
-        if (p.getFileName.toString.endsWith(".parquet"))
-          Files.copy(p, java.nio.file.Paths.get(lake, prefix + p.getFileName))
+        if (p.getFileName.toString.endsWith(".parquet")) {
+          val dst = java.nio.file.Paths.get(lake, prefix + p.getFileName)
+          Files.copy(p, dst); landed += dst.toString
+        }
       } finally st.close()
+      landed.toSeq
     }
     append("w1", "w1-")
+    // the drain reads the lake through the counting filesystem, so a
+    // refresh's file opens can be asserted
+    CountingLocalFs.install(spark)
+    val source = LakeSource(s"${CountingLocalFs.Scheme}://$lake")
 
-    val cfg = JobConfig(tableName = "orders", numMappers = 2)
+    val cfg = JobConfig(tableName = "orders", numMappers = 2, pruned = true, maxParallel = 4)
     val store = new StatusStore(spark, s"$tmp/status")
     val job = new IncrementalBackup(spark, cfg, store, s"$tmp/dest")
     val pid = Seq("pid" -> job.pidKey(spark.read.parquet(lake).schema))
+    def canon(f: String) = new org.apache.hadoop.fs.Path(f).toUri.getPath
+    // the manifest's rows, order-free and keyed by the scheme-less path
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(r =>
+      (canon(r.getAs[String]("file")), r.getAs[Long]("n_rows"),
+        r.getAs[Long]("min_pid"), r.getAs[Long]("max_pid"))).toSeq.sorted
 
     // drain 1: full manifest build, persisted
-    job.runPrunedIncremental(lake)
-    val m1 = job.readManifest()
+    job.drain(source)
+    val m1 = rows(job.readManifest())
     val w1Files = spark.read.parquet(lake).inputFiles.toSet
-    assert(m1.count() == w1Files.size)
+    assert(m1.size == w1Files.size)
 
     // no-op: unchanged dir → exactly the prior's rows, nothing re-added
     // (the r6 advice bug: a path-format mismatch silently re-added every
     // existing file, duplicating pruned reads)
-    val noop = graft.sources.StatsStore.collectExprAppend(spark, lake, pid, m1)
-    assert(noop.count() == m1.count(), "append over unchanged dir must be a no-op")
+    assert(rows(job.refreshManifest(source.path)) == m1,
+      "a refresh over an unchanged dir must be a no-op")
 
-    // wave 2 lands; the refresh covers all files but READS only new ones
-    append("w2", "w2-")
-    val updated = graft.sources.StatsStore.collectExprAppend(spark, lake, pid, m1)
-    val fresh = graft.sources.StatsStore.collectExpr(spark, lake, pid)
-    assert(updated.count() == fresh.count(), "append must cover what a fresh build covers")
-    val readW1 = updated.inputFiles
-      .map(f => java.net.URLDecoder.decode(f, "UTF-8"))
-      .filter(_.contains("/w1-")).toSeq
-    assert(readW1.isEmpty, s"history files re-read by append: $readW1")
-    // identical stats row-for-row (order-free compare on the file key)
-    import spark.implicits._
-    def asMap(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => new org.apache.hadoop.fs.Path(
-        r.getAs[String]("file")).toUri.getPath ->
-        (r.getAs[Long]("n_rows"), r.getAs[Long]("min_pid"), r.getAs[Long]("max_pid"))).toMap
-    assert(asMap(updated) == asMap(fresh))
+    // wave 2 lands; the refresh covers all files but READS only new ones:
+    // every new file's footer, and at most one history footer (the lake
+    // schema's one-file sample)
+    val w2Files = append("w2", "w2-").map(canon)
+    CountingLocalFs.reset()
+    val updated = rows(job.refreshManifest(source.path))
+    val opened = CountingLocalFs.calls("open").keySet
+    assert(w2Files.forall(opened), s"new files not read by the refresh: ${w2Files.filterNot(opened)}")
+    val readW1 = opened.filter(_.contains("/w1-"))
+    assert(readW1.size <= 1, s"history files re-read by the refresh: $readW1")
+    // identical stats row-for-row to a fresh build over the same lake
+    assert(updated == rows(graft.sources.StatsStore.collectExpr(spark, lake, pid)),
+      "the refresh must cover what a fresh build covers")
 
     // drain 2 copies exactly the new months; read-back equals the source
-    job.runPrunedIncremental(lake, maxParallel = 4)
+    job.drain(source)
+    import spark.implicits._
     val got = job.readBack()
       .groupBy(col("pid").cast("long").as("m")).count()
       .as[(Long, Long)].collect().toMap
@@ -189,20 +207,18 @@ class EtlSpec extends SparkSpec {
       .count().as[(Long, Long)].collect().toMap
     assert(got == want)
     // manifest persisted current: covers every lake file exactly once
-    val m2 = job.readManifest()
-    assert(m2.count() == spark.read.parquet(lake).inputFiles.length)
+    val m2 = rows(job.readManifest())
+    assert(m2.size == spark.read.parquet(lake).inputFiles.length)
 
     // dead files are dropped: delete a wave-1 file, refresh, no dead path
     val victim = new org.apache.hadoop.fs.Path(
       spark.read.parquet(lake).inputFiles.filter(_.contains("/w1-")).head)
     victim.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .delete(victim, false)
-    val pruned = graft.sources.StatsStore.collectExprAppend(spark, lake, pid, m2)
-    val survivors = pruned.select("file").as[String].collect()
-      .map(f => new org.apache.hadoop.fs.Path(f).toUri.getPath)
+    val survivors = rows(job.refreshManifest(source.path)).map(_._1)
     assert(!survivors.contains(victim.toUri.getPath),
       "a deleted file must leave the manifest")
-    assert(survivors.length == m2.count() - 1)
+    assert(survivors.length == m2.size - 1)
   }
 
   test("manifest-pruned discovery scans only files holding unrecorded months; result identical to the full-scan discovery") {
@@ -221,10 +237,10 @@ class EtlSpec extends SparkSpec {
       } finally st.close()
     }
     land(orders.filter(col("o_orderdate") < lit("1996-01-01")), 6, "w1-")
-    val cfg = JobConfig(tableName = "orders", numMappers = 2)
+    val cfg = JobConfig(tableName = "orders", numMappers = 2, pruned = true, maxParallel = 4)
     val store = new StatusStore(spark, s"$tmp/status")
     val job = new IncrementalBackup(spark, cfg, store, s"$tmp/dest")
-    job.runPrunedIncremental(lake, maxParallel = 4) // wave 1 drained
+    job.drain(LakeSource(lake)) // wave 1 drained
     // steady-state no-op: every month recorded → discovery scans NOTHING
     val statsIdle = job.refreshManifest(lake)
     assert(job.discoveryFiles(statsIdle).isEmpty,
@@ -247,11 +263,10 @@ class EtlSpec extends SparkSpec {
         spark.read.parquet(lake),
         job.pidCol(spark.read.parquet(lake)), recorded, 0)
       .as[Long].collect().sorted.toSeq
-    val got = job.discoverPruned(lake, stats)
+    // the drain discovers through the manifest and copies what it found:
+    // with no month deferred, that is the discovered set
+    val got = job.drain(LakeSource(lake))
     assert(got == expect, s"pruned discovery $got != full-scan $expect")
-    // discoverPruned recorded them pending; drain completes and read-back
-    // matches the source
-    job.runPrunedIncremental(lake, maxParallel = 4)
     assert(job.readBack().count() == orders.count())
     assert(job.discoveryFiles(job.refreshManifest(lake)).isEmpty)
   }
@@ -270,36 +285,41 @@ class EtlSpec extends SparkSpec {
         .sortWithinPartitions("o_orderdate")
         .write.parquet(s"$lake/$sub")
     land(orders.filter(col("o_orderdate") < lit("1996-01-01")), "ingest=1")
+    // the drain reads the lake through the counting filesystem, so a
+    // refresh's file opens can be asserted
+    CountingLocalFs.install(spark)
+    val source = LakeSource(s"${CountingLocalFs.Scheme}://$lake")
 
-    val cfg = JobConfig(tableName = "orders", numMappers = 2)
+    val cfg = JobConfig(tableName = "orders", numMappers = 2, pruned = true, maxParallel = 2)
     val store = new StatusStore(spark, s"$tmp/status")
     val job = new IncrementalBackup(spark, cfg, store, s"$tmp/dest")
-    job.runPrunedIncremental(lake, maxParallel = 2)
+    job.drain(source)
     val m1 = job.readManifest()
     assert(m1.count() == spark.read.parquet(lake).inputFiles.length,
       "manifest must cover every nested file after the first drain")
 
     // wave 2 lands in a NEW partition dir; the refresh must (a) evict no
-    // live file and (b) read no wave-1 file
+    // live file and (b) read no wave-1 file beyond one footer, the lake
+    // schema's one-file sample
     land(orders.filter(col("o_orderdate") >= lit("1996-01-01")), "ingest=2")
-    val pid = Seq("pid" -> job.pidKey(spark.read.parquet(lake).schema))
-    val updated = graft.sources.StatsStore.collectExprAppend(spark, lake, pid, m1)
+    CountingLocalFs.reset()
+    val updated = job.refreshManifest(source.path)
     import spark.implicits._
     val live = spark.read.parquet(lake).inputFiles.map(canon).toSet
     val covered = updated.select("file").as[String].collect().map(canon).toSet
     assert(covered == live,
       s"evicted live files: ${(live -- covered).take(3).mkString(",")}; " +
         s"phantom files: ${(covered -- live).take(3).mkString(",")}")
-    val readW1 = updated.inputFiles.map(canon).filter(_.contains("ingest=1"))
-    assert(readW1.isEmpty, s"history re-read by append: ${readW1.take(3).mkString(",")}")
+    val readW1 = CountingLocalFs.calls("open").keys.filter(_.contains("ingest=1"))
+    assert(readW1.size <= 1, s"history re-read by the refresh: ${readW1.take(3).mkString(",")}")
 
     // drain 2, then row-for-row equality with the UNPRUNED reference loop
     // over the same lake (same schema incl. the ingest partition column —
     // the basePath contract)
-    job.runPrunedIncremental(lake, maxParallel = 2)
+    job.drain(source)
     val store2 = new StatusStore(spark, s"$tmp/status2")
     val job2 = new IncrementalBackup(spark, cfg, store2, s"$tmp/dest2")
-    job2.run(spark.read.parquet(lake))
+    job2.drain(RelationSource(spark.read.parquet(lake)))
     val a = job.readBack()
     val b = job2.readBack().select(a.columns.map(col).toIndexedSeq: _*)
     assert(a.schema.fieldNames.sorted.sameElements(
@@ -335,7 +355,7 @@ class EtlSpec extends SparkSpec {
       } finally st.close()
       landed.toSeq
     }
-    val cfg = JobConfig(tableName = "orders", numMappers = 2)
+    val cfg = JobConfig(tableName = "orders", numMappers = 2, pruned = true, maxParallel = 2)
     val jobs = lakes.map { case (m, _) =>
       m -> new IncrementalBackup(spark, cfg,
         new StatusStore(spark, s"$tmp/status-$m"), s"$tmp/dest-$m")
@@ -344,18 +364,18 @@ class EtlSpec extends SparkSpec {
     graft.sources.IngestLog.record(spark, lakes("j"),
       land(w1, lakes("j"), "w1-"))
     land(w1, lakes("l"), "w1-")
-    jobs("j").runPrunedIncremental(lakes("j"), maxParallel = 2)
-    jobs("l").runPrunedIncremental(lakes("l"), maxParallel = 2)
+    jobs("j").drain(LakeSource(lakes("j")))
+    jobs("l").drain(LakeSource(lakes("l")))
     // wave 2 lands; the JOURNALED drain must not list the lake AT ALL
     graft.sources.IngestLog.record(spark, lakes("j"),
       land(w2, lakes("j"), "w2-"))
     land(w2, lakes("l"), "w2-")
-    jobs("j").runPrunedIncremental(lakes("j"), maxParallel = 2)
+    jobs("j").drain(LakeSource(lakes("j")))
     // per-invocation gauge (r9 ADVICE: the process-global counter was
     // flaky under any concurrently-listing suite)
     assert(jobs("j").gauges.fullListings == 0,
       "a journaled steady-state drain must perform zero full-lake listings")
-    jobs("l").runPrunedIncremental(lakes("l"), maxParallel = 2)
+    jobs("l").drain(LakeSource(lakes("l")))
     // identical manifests either path (keyed by file NAME — the lakes'
     // prefixes differ), identical read-backs, both matching the source
     def manifestMap(m: String) = jobs(m).readManifest().collect().map { r =>
@@ -372,7 +392,7 @@ class EtlSpec extends SparkSpec {
       .count().as[(Long, Long)].collect().toMap
     assert(back("j") == want && back("l") == want)
     // an idle journaled drain is also listing-free AND copies nothing
-    assert(jobs("j").runPrunedIncremental(lakes("j"), maxParallel = 2).isEmpty)
+    assert(jobs("j").drain(LakeSource(lakes("j"))).isEmpty)
     assert(jobs("j").gauges.fullListings == 0)
   }
 
@@ -394,10 +414,10 @@ class EtlSpec extends SparkSpec {
     graft.sources.IngestLog.record(spark, lake, landed.toSeq)
     // checkpoint every 2 deltas → reconciliation no later than 2 drains out
     val cfg = JobConfig(tableName = "orders", numMappers = 2,
-      manifestCheckpointEvery = 2)
+      pruned = true, manifestCheckpointEvery = 2)
     val job = new IncrementalBackup(spark, cfg,
       new StatusStore(spark, s"$tmp/status"), s"$tmp/dest")
-    job.runPrunedIncremental(lake)
+    job.drain(LakeSource(lake))
     // a compaction-like mutation the journal cannot see
     val victim = landed.head
     new org.apache.hadoop.fs.Path(victim)
@@ -406,8 +426,8 @@ class EtlSpec extends SparkSpec {
     // drain 1 after the delete: journal path, stale row may survive —
     // harmless (superset guarantee). drain 2 hits the checkpoint cadence,
     // reconciles against a real listing, and the dead row is gone.
-    job.runPrunedIncremental(lake)
-    job.runPrunedIncremental(lake)
+    job.drain(LakeSource(lake))
+    job.drain(LakeSource(lake))
     val files = job.readManifest().select("file").as[String](
       org.apache.spark.sql.Encoders.STRING).collect()
       .map(f => new org.apache.hadoop.fs.Path(f).toUri.getPath)
@@ -438,21 +458,21 @@ class EtlSpec extends SparkSpec {
       dst
     }
     val cfg = JobConfig(tableName = "t", numMappers = 1, outputFileFormat = "parquet",
-      manifestCheckpointEvery = 2)
+      pruned = true, manifestCheckpointEvery = 2)
     val job = new IncrementalBackup(spark, cfg,
       new StatusStore(spark, s"$tmp/status"), s"$tmp/dest")
     val landed = Seq(land(199501L), land(199502L))
-    assert(job.runPrunedIncremental(lake) == Seq(199501L, 199502L))
+    assert(job.drain(LakeSource(lake)) == Seq(199501L, 199502L))
     landed.foreach(Files.delete)
     // every second drain is due: the first due drain tombstones both files,
     // the next folds them into a checkpoint with no rows, the third folds
     // nothing and reconciles against that empty checkpoint
     (1 to 6).foreach { i =>
-      assert(job.runPrunedIncremental(lake).isEmpty, s"drain $i after the delete")
+      assert(job.drain(LakeSource(lake)).isEmpty, s"drain $i after the delete")
     }
     assert(job.readManifest().count() == 0L)
     land(199503L)
-    assert(job.runPrunedIncremental(lake) == Seq(199503L))
+    assert(job.drain(LakeSource(lake)) == Seq(199503L))
     assert(job.readManifest().count() == 1L)
     assert(job.readBack().count() == 120L) // the months copied before the delete stay backed up
   }
@@ -481,10 +501,10 @@ class EtlSpec extends SparkSpec {
     land(w1, 4, "w1-")
 
     val cfg = JobConfig(tableName = "orders", numMappers = 2,
-      skipLatestMonths = 2)
+      skipLatestMonths = 2, pruned = true, maxParallel = 2)
     val job = new IncrementalBackup(spark, cfg,
       new StatusStore(spark, s"$tmp/status"), s"$tmp/dest")
-    val copied1 = job.runPrunedIncremental(lake, maxParallel = 2)
+    val copied1 = job.drain(LakeSource(lake))
     val m1 = months(w1)
     assert(copied1.sorted == m1.dropRight(2),
       s"drain 1 must defer the newest 2 months: copied $copied1")
@@ -498,7 +518,7 @@ class EtlSpec extends SparkSpec {
     // wave 2 lands across the Dec→Jan boundary; the window slides and the
     // previously-deferred 1995 months become copyable
     land(w2, 2, "w2-")
-    val copied2 = job.runPrunedIncremental(lake, maxParallel = 2)
+    val copied2 = job.drain(LakeSource(lake))
     val all = months(orders)
     assert((copied1 ++ copied2).sorted == all.dropRight(2),
       "after the window slides, everything but the newest 2 overall is copied")
@@ -508,8 +528,8 @@ class EtlSpec extends SparkSpec {
     // equivalence with the UNPRUNED reference loop driven wave-for-wave
     val jobR = new IncrementalBackup(spark, cfg,
       new StatusStore(spark, s"$tmp/status-r"), s"$tmp/dest-r")
-    val r1 = jobR.run(w1)
-    val r2 = jobR.run(spark.read.parquet(lake))
+    val r1 = jobR.drain(RelationSource(w1))
+    val r2 = jobR.drain(RelationSource(spark.read.parquet(lake)))
     assert(r1.sorted == copied1.sorted && r2.sorted == copied2.sorted,
       s"pruned ($copied1 / $copied2) != reference loop ($r1 / $r2)")
     def back(j: IncrementalBackup) = j.readBack()
@@ -544,14 +564,14 @@ class EtlSpec extends SparkSpec {
     val w1 = orders.filter(col("o_orderdate") < lit("1996-01-01"))
     val w2 = orders.filter(col("o_orderdate") >= lit("1996-01-01"))
     val cfg = JobConfig(tableName = "orders", numMappers = 2,
-      skipLatestMonths = 2)
+      skipLatestMonths = 2, pruned = true, maxParallel = 2)
     val job = new IncrementalBackup(spark, cfg,
       new StatusStore(spark, s"$tmp/status"), s"$tmp/dest")
     graft.sources.IngestLog.record(spark, lake, land(w1, "w1-"))
-    val copied1 = job.runPrunedIncremental(lake, maxParallel = 2)
+    val copied1 = job.drain(LakeSource(lake))
     assert(copied1.sorted == months(w1).dropRight(2))
     graft.sources.IngestLog.record(spark, lake, land(w2, "w2-"))
-    val copied2 = job.runPrunedIncremental(lake, maxParallel = 2)
+    val copied2 = job.drain(LakeSource(lake))
     assert(job.gauges.fullListings == 0,
       "journal + skip drain must not list the lake")
     assert((copied1 ++ copied2).sorted == months(orders).dropRight(2))
@@ -579,7 +599,7 @@ class EtlSpec extends SparkSpec {
     val (h1, m1) = mkLake("h1", 1995 to 1996)
     val (h5, m5) = mkLake("h5", 1995 to 2004)
     val cfg = JobConfig(tableName = "t", numMappers = 1,
-      outputFileFormat = "parquet")
+      outputFileFormat = "parquet", pruned = true)
     def mkJob(name: String) = new IncrementalBackup(spark, cfg,
       new StatusStore(spark, s"$tmp/status-$name"), s"$tmp/dest-$name")
     val jobs = Map("h1" -> mkJob("h1"), "h5" -> mkJob("h5"))
@@ -596,7 +616,7 @@ class EtlSpec extends SparkSpec {
     // UP-TO-DATE drain: discovery must localize ZERO checkpoint rows on
     // both histories — the judge's flat-across-history criterion
     for ((name, lake) <- Seq("h1" -> h1, "h5" -> h5)) {
-      assert(jobs(name).runPrunedIncremental(lake).isEmpty)
+      assert(jobs(name).drain(LakeSource(lake)).isEmpty)
       val g = jobs(name).gauges
       assert(g.discoveryCkptRowsRead == 0L,
         s"$name: up-to-date drain localized ${g.discoveryCkptRowsRead} " +
@@ -618,7 +638,7 @@ class EtlSpec extends SparkSpec {
         .repartitionByRange(2, col("month_sid"))
         .sortWithinPartitions("month_sid")
         .write.mode("append").parquet(lake)
-      val copied = jobs(name).runPrunedIncremental(lake)
+      val copied = jobs(name).drain(LakeSource(lake))
       assert(copied == wave, s"$name: copied $copied")
       val g = jobs(name).gauges
       assert(g.discoveryCkptRowsRead == 0L && g.copyCkptRowsRead == 0L,
@@ -663,7 +683,7 @@ class EtlSpec extends SparkSpec {
     orders.repartitionByRange(3, col("o_orderdate"))
       .sortWithinPartitions("o_orderdate").write.parquet(lake)
     val cfg = JobConfig(tableName = "orders", numMappers = 2,
-      outputFileFormat = "parquet")
+      outputFileFormat = "parquet", pruned = true)
     val store = new StatusStore(spark, s"$tmp/status")
     // two independent handles on the SAME table/dest — the direct-API race
     // EtlRunner's own lock never saw (r9 verdict "what's wrong" #2)
@@ -671,10 +691,10 @@ class EtlSpec extends SparkSpec {
     val jobB = new IncrementalBackup(spark, cfg, store, s"$tmp/dest")
     val results = new java.util.concurrent.ConcurrentHashMap[String, Any]()
     val tA = new Thread(() =>
-      try results.put("A", jobA.runPrunedIncremental(lake))
+      try results.put("A", jobA.drain(LakeSource(lake)))
       catch { case e: IllegalStateException => results.put("A", e) })
     val tB = new Thread(() =>
-      try results.put("B", jobB.runPrunedIncremental(lake))
+      try results.put("B", jobB.drain(LakeSource(lake)))
       catch { case e: IllegalStateException => results.put("B", e) })
     tA.start()
     Thread.sleep(300) // guarantee overlap: A's drain takes seconds
@@ -689,14 +709,41 @@ class EtlSpec extends SparkSpec {
     // reference run over the same lake
     val ref = new IncrementalBackup(spark, cfg,
       new StatusStore(spark, s"$tmp/status-ref"), s"$tmp/dest-ref")
-    ref.runPrunedIncremental(lake)
+    ref.drain(LakeSource(lake))
     import spark.implicits._
     def back(j: IncrementalBackup) = j.readBack()
       .groupBy(col("pid").cast("long").as("m")).count()
       .as[(Long, Long)].collect().toMap
     assert(back(jobA) == back(ref))
     // the lock released on both paths: a later drain acquires and no-ops
-    assert(jobB.runPrunedIncremental(lake).isEmpty)
+    assert(jobB.drain(LakeSource(lake)).isEmpty)
+  }
+
+  test("a held table lock skips that table in the runner, which still drains the others; a direct drain and runBulk throw while it is held") {
+    val tmp = Files.createTempDirectory("graft-etlheld").toString
+    val rows = spark.range(60).select((lit(199501L) + col("id") % 3).as("month_sid"),
+      col("id").as("payload"))
+    val months = Seq(199501L, 199502L, 199503L)
+    val cfgs = Seq("a", "b").map(t =>
+      JobConfig(tableName = t, numMappers = 1, outputFileFormat = "parquet"))
+    // what the runner builds per table under its root
+    def backup(cfg: JobConfig) = new IncrementalBackup(spark, cfg,
+      new StatusStore(spark, s"$tmp/status/${cfg.tableName}"), s"$tmp/data")
+    val a = backup(cfgs.head)
+    val held = new graft.operators.JobLock(spark, a.drainLockPath)
+    assert(held.acquire())
+    try {
+      val out = EtlRunner.runAllFrom(spark, tmp,
+        cfgs.map(c => c -> (RelationSource(rows): EtlRunner.EtlSource)))
+      assert(out == Map("a" -> None, "b" -> Some(months)))
+      val e = intercept[DrainLockedException](a.drain(RelationSource(rows)))
+      assert(e.getMessage.contains(a.drainLockPath))
+      intercept[DrainLockedException](a.runBulk(rows))
+      assert(new StatusStore(spark, s"$tmp/status/a").rows().isEmpty,
+        "a writer without the lock recorded months")
+    } finally held.release()
+    // released: the skipped table drains
+    assert(a.drain(RelationSource(rows)) == months)
   }
 
   test("zero-row parquet files are seeded into the manifest: no perpetual re-scan, never opened by pruned reads") {
@@ -718,13 +765,18 @@ class EtlSpec extends SparkSpec {
     assert(m.count() == 3, s"expected 3 manifest rows, got ${m.count()}")
     // refresh over the unchanged dir is a true no-op: the empty file is
     // known (seeded), so it is not re-classified as fresh and re-scanned.
-    // Prior is persisted + read back — the steady-state shape — so the
-    // no-op's input files expose exactly what the refresh re-reads.
-    m.coalesce(1).write.parquet(s"$tmp/manifest")
-    val prior = spark.read.parquet(s"$tmp/manifest")
-    val noop = graft.sources.StatsStore.collectExprAppend(spark, lake, pid, prior)
-    assert(noop.count() == 3)
-    assert(!noop.inputFiles.exists(_.contains("z-empty")),
+    // The manifest is persisted and refreshed — the steady-state shape —
+    // over the counting filesystem, whose opens expose exactly what the
+    // refresh re-reads.
+    CountingLocalFs.install(spark)
+    val at = s"${CountingLocalFs.Scheme}://$lake"
+    val job = new IncrementalBackup(spark,
+      JobConfig(tableName = "orders", numMappers = 2, pruned = true),
+      new StatusStore(spark, s"$tmp/status"), s"$tmp/dest")
+    assert(job.refreshManifest(at).count() == 3) // the first build seeds it
+    CountingLocalFs.reset()
+    assert(job.refreshManifest(at).count() == 3)
+    assert(!CountingLocalFs.calls("open").keys.exists(_.contains("z-empty")),
       "the empty file must not be re-scanned on refresh")
     // null bounds keep it out of every pruned read
     val surv = graft.sources.StatsStore.survivingFiles(m, "pid", Long.MinValue, Long.MaxValue)
@@ -785,9 +837,9 @@ class EtlSpec extends SparkSpec {
     val store = new StatusStore(spark, s"$tmp/status")
     val job = new IncrementalBackup(spark, cfg, store, s"$tmp/dest")
     val nation = Tables.nation(spark, sf)
-    assert(job.run(nation) == Seq(0L))
+    assert(job.drain(RelationSource(nation)) == Seq(0L))
     assert(job.readBack().count() == nation.count())
-    assert(job.run(nation).isEmpty)
+    assert(job.drain(RelationSource(nation)).isEmpty)
   }
 
   test("status store markComplete flips exactly the targeted row") {
@@ -1156,7 +1208,7 @@ class EtlSpec extends SparkSpec {
     df.repartitionByRange(40, col("month_sid"))
       .sortWithinPartitions("month_sid").write.parquet(lake)
     val cfg = JobConfig(tableName = "t", numMappers = 1,
-      outputFileFormat = "parquet")
+      outputFileFormat = "parquet", pruned = true)
     val store = new StatusStore(spark, s"$tmp/status")
     val job = new IncrementalBackup(spark, cfg, store, s"$tmp/dest")
     job.refreshManifest(lake) // initial full build + bucketed checkpoint
@@ -1167,7 +1219,7 @@ class EtlSpec extends SparkSpec {
     store.append(months.map(m => BackupStatus("t", "db", t0,
       if (sparse(m)) None else Some(t0), "month_sid", m,
       isComplete = !sparse(m), 1)))
-    val copied = job.runPrunedIncremental(lake)
+    val copied = job.drain(LakeSource(lake))
     assert(copied.sorted == sparse.toSeq.sorted, s"copied $copied")
     val g = job.gauges
     // the hull predicate would select every bucket — measure it directly
@@ -1207,17 +1259,17 @@ class EtlSpec extends SparkSpec {
     // cadence far out: the tombstone delta must stay LIVE (unfolded) while
     // the journal fast path later judges the re-created path
     val cfg = JobConfig(tableName = "t", numMappers = 1,
-      outputFileFormat = "parquet", manifestCheckpointEvery = 8)
+      outputFileFormat = "parquet", pruned = true, manifestCheckpointEvery = 8)
     val job = new IncrementalBackup(spark, cfg,
       new StatusStore(spark, s"$tmp/status"), s"$tmp/dest")
     // drain 1: first build (full scan + checkpoint), no journal yet
-    assert(job.runPrunedIncremental(lake).sorted ==
+    assert(job.drain(LakeSource(lake)).sorted ==
       Seq(199501L, 199502L, 199503L))
     // the file vanishes (compaction/retention) …
     Files.delete(java.nio.file.Paths.get(victim))
     // … drain 2 reconciles (still no journal → every drain lists) and
     // commits a LIVE tombstone delta for it (cadence not due → no fold)
-    assert(job.runPrunedIncremental(lake).isEmpty)
+    assert(job.drain(LakeSource(lake)).isEmpty)
     // the path is RE-CREATED with a brand-new month, and an ingest journal
     // starts up, recording it as a wave
     land(199912L, "x.parquet")
@@ -1227,7 +1279,7 @@ class EtlSpec extends SparkSpec {
     // leave 199912 undiscoverable until the next reconciliation; the
     // last-writer-wins coverage re-scans it and the add shadows the
     // tombstone.
-    val copied = job.runPrunedIncremental(lake)
+    val copied = job.drain(LakeSource(lake))
     assert(job.gauges.fullListings == 0,
       "drain 3 must be the journal fast path, not a reconciliation")
     assert(copied == Seq(199912L),
@@ -1279,7 +1331,7 @@ class EtlSpec extends SparkSpec {
     Tables.orders(spark, sf).repartitionByRange(3, col("o_orderdate"))
       .sortWithinPartitions("o_orderdate").write.parquet(lake)
     val cfg = JobConfig(tableName = "orders", numMappers = 2,
-      outputFileFormat = "parquet")
+      outputFileFormat = "parquet", pruned = true)
     val job = new IncrementalBackup(spark, cfg,
       new StatusStore(spark, s"$tmp/status"), s"$tmp/dest")
     // hold the drain lock the way a live drain does, then refresh directly
@@ -1289,6 +1341,6 @@ class EtlSpec extends SparkSpec {
     finally lock.release()
     // standalone: acquires, refreshes, releases — and a drain can follow
     assert(job.refreshManifest(lake).count() > 0)
-    assert(job.runPrunedIncremental(lake).nonEmpty)
+    assert(job.drain(LakeSource(lake)).nonEmpty)
   }
 }

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.TimestampType
 
 import graft.etl.{IncrementalBackup, JobConfig, StatusStore}
+import graft.etl.EtlRunner.RelationSource
 import graft.operators.ReferenceOps
 
 /** A relation drain checks the footers of its source's parquet files
@@ -72,7 +73,7 @@ class FooterDiscoverySpec extends SparkSpec with JobCount {
     val subject = job("subject")
     private val twin = job("twin")
     private def scanned(): DataFrame = source().repartition(2)
-    subject.run(source())
+    subject.drain(RelationSource(source()))
     twin.discover(scanned())
 
     /** The subject's discovered months and the jobs it ran, after asserting
@@ -111,13 +112,13 @@ class FooterDiscoverySpec extends SparkSpec with JobCount {
       val pair = new Pair(tmp, JobConfig(tableName = "t", numMappers = 1), () => read(tmp, lake))
       val (idle, idleJobs) = pair.rediscover()
       assert(idle.isEmpty && idleJobs == 0, s"$name: an idle discovery ran $idleJobs jobs")
-      assert(pair.subject.run(read(tmp, lake)).isEmpty)
+      assert(pair.subject.drain(RelationSource(read(tmp, lake))).isEmpty)
 
       append(tmp, shape(rows(Seq(gap))), lake, "gap")
       val (found, jobs) = pair.rediscover()
       assert(found == Seq(gap), name)
       assert(jobs >= 1, s"$name: the gap month was found without a scan")
-      assert(pair.subject.run(read(tmp, lake)) == Seq(gap), name)
+      assert(pair.subject.drain(RelationSource(read(tmp, lake))) == Seq(gap), name)
       assert(pair.subject.readBack().count() == 120L, name)
     }
   }

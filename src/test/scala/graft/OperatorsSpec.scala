@@ -77,7 +77,7 @@ class OperatorsSpec extends SparkSpec {
     val tmp = Files.createTempDirectory("graft-runnerc").toString
     // hold customer's lock up front: the concurrent runner must skip it
     // (None) exactly like the sequential one — lock semantics unchanged
-    val held = new JobLock(spark, s"$tmp/locks/customer.lock")
+    val held = new JobLock(spark, s"$tmp/data/customer.drain.lock")
     assert(held.acquire())
     val out = EtlRunner.runAllFrom(spark, tmp, Seq(
       JobConfig(tableName = "orders", numMappers = 2) -> Tables.orders(spark, sf),

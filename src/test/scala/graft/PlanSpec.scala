@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.etl.{IncrementalBackup, JobConfig, StatusStore}
+import graft.etl.EtlRunner.RelationSource
 import graft.sources.Bucketing
 
 /** Physical-plan assertions: the shuffle/pruning behavior SCALE.md claims. */
@@ -33,7 +34,7 @@ class PlanSpec extends SparkSpec {
     val cfg = JobConfig(tableName = "orders", numMappers = 2)
     val job = new IncrementalBackup(spark, cfg,
       new StatusStore(spark, s"$tmp/status"), s"$tmp/dest")
-    job.run(Tables.orders(spark, sf))
+    job.drain(RelationSource(Tables.orders(spark, sf)))
     val back = job.readBack()
     val minPid = back.agg(min("pid")).head().get(0).asInstanceOf[Number].longValue()
     val one = back.filter(col("pid") === minPid)

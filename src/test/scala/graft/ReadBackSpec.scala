@@ -11,6 +11,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType}
 
 import graft.etl.{IncrementalBackup, JobConfig, StatusStore}
+import graft.etl.EtlRunner.RelationSource
 
 /** `IncrementalBackup.readBack` reads the months the status store marks
   * complete through a driver-side file index: a published but unmarked
@@ -53,15 +54,15 @@ class ReadBackSpec extends SparkSpec {
     val cfg = JobConfig(tableName = "t", numMappers = 1, outputFileFormat = fmt)
     val all = months(199501L, 3)
     val (twin, _) = backup(s"$root/twin", cfg)
-    twin.run(rows(all.take(1), fmt))
-    twin.run(rows(all, fmt))
+    twin.drain(RelationSource(rows(all.take(1), fmt)))
+    twin.drain(RelationSource(rows(all, fmt)))
     val want = byMonth(twin.readBack())
     assert(want == all.map(_ -> 40L).toMap)
 
     val (job, store) = backup(s"$root/crash", cfg)
-    job.run(rows(all.take(1), fmt))
+    job.drain(RelationSource(rows(all.take(1), fmt)))
     val (out, marks) = DrainMarks.record(store, "t", Some("drain.copy.written")) {
-      job.run(rows(all, fmt))
+      job.drain(RelationSource(rows(all, fmt)))
     }
     assert(out.isEmpty && marks.isEmpty, "the fault did not fire before a mark")
     val published = Paths.get(s"$root/crash/dest/t/pid=${all(1)}")
@@ -69,7 +70,7 @@ class ReadBackSpec extends SparkSpec {
     assert(byMonth(job.readBack()) == Map(all.head -> 40L),
       "a published but unmarked month is visible")
 
-    assert(job.run(rows(all, fmt)) == all.tail)
+    assert(job.drain(RelationSource(rows(all, fmt))) == all.tail)
     assert(byMonth(job.readBack()) == want)
     val cols = twin.readBack().columns.toSeq.map(col)
     assert(job.readBack().select(cols: _*).exceptAll(twin.readBack().select(cols: _*)).isEmpty)
@@ -87,7 +88,7 @@ class ReadBackSpec extends SparkSpec {
            ("long", JobConfig("t", numMappers = 1, outputFileFormat = fmt),
              rows(Seq(big, big + 1), fmt), LongType))) {
       val (job, _) = backup(s"$root/$fmt-$kind", cfg)
-      job.run(src)
+      job.drain(RelationSource(src))
       val back = job.readBack()
       val load = spark.read.format(fmt).load(s"$root/$fmt-$kind/dest/t")
       assert(back.schema == load.schema, s"$fmt $kind")
@@ -101,7 +102,7 @@ class ReadBackSpec extends SparkSpec {
     val tmp = Files.createTempDirectory("graft-readback-point").toString
     val ms = months(199501L, 34)
     val (job, _) = backup(s"${CountingLocalFs.Scheme}://$tmp", JobConfig("t", numMappers = 1))
-    assert(job.run(rows(ms)) == ms)
+    assert(job.drain(RelationSource(rows(ms))) == ms)
     val point = ms(5)
     val table = s"$tmp/dest/t"
 
@@ -137,7 +138,7 @@ class ReadBackSpec extends SparkSpec {
   test("readBack's size statistic is the sum of its data files' lengths, as a directory load's") {
     val root = Files.createTempDirectory("graft-readback-size").toString
     val (job, _) = backup(root, JobConfig("t", numMappers = 2))
-    job.run(rows(months(199501L, 4)))
+    job.drain(RelationSource(rows(months(199501L, 4))))
     val table = Paths.get(s"$root/dest/t")
     val walk = Files.walk(table)
     val lengths =
@@ -155,15 +156,18 @@ class ReadBackSpec extends SparkSpec {
     val root = Files.createTempDirectory("graft-readback-plan").toString
     val ms = months(199501L, 4)
     val (facts, _) = backup(s"$root/f", JobConfig("t", numMappers = 2))
-    facts.run(rows(ms))
+    facts.drain(RelationSource(rows(ms)))
     val (dims, _) = backup(s"$root/d", JobConfig("d", numMappers = 1, primaryId = ""))
-    dims.run(rows(Seq(199501L)).select(col("id").as("d_id"), col("name").as("d_name")))
+    dims.drain(RelationSource(rows(Seq(199501L)).select(col("id").as("d_id"), col("name").as("d_name"))))
     def queries(f: DataFrame, d: DataFrame): Seq[DataFrame] = Seq(
       f.filter(col("pid") === ms(1)).select("id", "price"),
       f.filter(col("pid") >= ms(2)).join(d, col("id") === col("d_id"))
         .groupBy("d_name").agg(sum("price")))
-    def plan(df: DataFrame): String = df.queryExecution.executedPlan.toString
-      .replaceAll("#\\d+L?", "#N").replaceAll("plan_id=\\d+", "plan_id=N")
+    // the scan's metadata untruncated: a cut at the default 100 characters
+    // falls at a different place in the two Locations' paths
+    def plan(df: DataFrame): String = withConf("spark.sql.maxMetadataStringLength", "1000") {
+      df.queryExecution.executedPlan.toString
+    }.replaceAll("#\\d+L?", "#N").replaceAll("plan_id=\\d+", "plan_id=N")
       .replaceAll("Location: \\w+", "Location: L")
     val got = queries(facts.readBack(), dims.readBack())
     val want = queries(spark.read.orc(s"$root/f/dest/t"), spark.read.orc(s"$root/d/dest/d"))
@@ -178,9 +182,9 @@ class ReadBackSpec extends SparkSpec {
   test("two read-backs of one table are the same relation, so a cached read-back serves the next; another table's is not") {
     val root = Files.createTempDirectory("graft-readback-equal").toString
     val (job, _) = backup(s"$root/a", JobConfig("t", numMappers = 1))
-    job.run(rows(months(199501L, 2)))
+    job.drain(RelationSource(rows(months(199501L, 2))))
     val (other, _) = backup(s"$root/b", JobConfig("t", numMappers = 1))
-    other.run(rows(months(199501L, 2)))
+    other.drain(RelationSource(rows(months(199501L, 2))))
     assert(job.readBack().queryExecution.analyzed.sameResult(job.readBack().queryExecution.analyzed))
     assert(!job.readBack().queryExecution.analyzed.sameResult(other.readBack().queryExecution.analyzed))
     val cached = job.readBack().cache()

@@ -7,6 +7,7 @@ import org.apache.orc.OrcFile
 import org.apache.spark.sql.functions._
 
 import graft.etl.{BackupStatus, IncrementalBackup, JobConfig, StatusStore}
+import graft.etl.EtlRunner.RelationSource
 
 /** The drain's unit of writing is a wave: a run of consecutive copyable
   * months staged by one job, then published and marked month by month,
@@ -42,7 +43,7 @@ class WaveSpec extends SparkSpec with JobCount {
       .collect().map(_.toString).sorted.toSeq
 
     val (one, _) = job("one")
-    val (copiedOne, oneJobs) = jobsOf(one.run(source))
+    val (copiedOne, oneJobs) = jobsOf(one.drain(RelationSource(source)))
     assert(copiedOne == months)
     assert(oneJobs == 2, s"the one-wave drain ran $oneJobs jobs") // discovery + one wave
 
@@ -62,7 +63,7 @@ class WaveSpec extends SparkSpec with JobCount {
     val bytes = source.queryExecution.optimizedPlan.stats.sizeInBytes.toLong
     val ((copied, jobs), marks) = withConf("spark.sql.files.maxPartitionBytes",
         (bytes / 4).toString) {
-      val (out, marks) = DrainMarks.record(store, "t")(jobsOf(split.run(source)))
+      val (out, marks) = DrainMarks.record(store, "t")(jobsOf(split.drain(RelationSource(source))))
       (out.get, marks)
     }
     val all = empty +: months
@@ -103,7 +104,7 @@ class WaveSpec extends SparkSpec with JobCount {
     assert(bulk.runBulk(orders).nonEmpty)
     assert(stride("bulk") == Set(cfg.orcIndexStride))
     val drained = job("drain")
-    assert(drained.run(orders).nonEmpty)
+    assert(drained.drain(RelationSource(orders)).nonEmpty)
     assert(stride("drain") == Set(cfg.orcIndexStride))
   }
 
@@ -114,7 +115,11 @@ class WaveSpec extends SparkSpec with JobCount {
     val job = new IncrementalBackup(spark, cfg, store, s"$tmp/dest")
     val orders = Tables.orders(spark, sf)
     val months = job.discover(orders)
-    job.copyPartition(orders, months.head)
+    // a drain that dies after marking its first month
+    val (out, marks) = DrainMarks.record(store, "orders", Some("drain.copy.marked")) {
+      job.drain(RelationSource(orders))
+    }
+    assert(out.isEmpty && marks == Seq(months.head))
     assert(job.runBulk(orders) == months.tail)
     assert(store.pending("orders").isEmpty)
     assert(job.readBack().count() == orders.count())

@@ -1,7 +1,7 @@
 #!/bin/bash
-# CI gate: the rename allowlist, the manifest-root gate, compile, unit/e2e
-# suites, the benchmark's own build, the idle-job gate, the ETL oracle and
-# the scaladoc build.
+# CI gate: the rename allowlist, the lock gate, the manifest-root gate,
+# compile, unit/e2e suites, the benchmark's own build, the idle-job and
+# steady-drain job gates, the ETL oracle and the scaladoc build.
 # The ETL oracle runs the 8 q_etl_* queries (every write path of the backup
 # loop) through Verify at sf0.001 and checks them against DuckDB; without
 # the testdata it is skipped, and says so. A malformed doc comment fails `sbt doc`; any
@@ -29,6 +29,16 @@ if [[ -n "$rename_bad" ]]; then
   echo "$rename_bad" >&2
   exit 1
 fi
+# Lock gate: a table has one lock, the drain lock that IncrementalBackup
+# takes in every writer of the table; a lock file taken anywhere else would
+# be a second guard on the same writers.
+lock_bad=$({ grep -rlE 'new ([[:alnum:]_]+\.)*JobLock\(' src/main || true; } |
+  { grep -v '/IncrementalBackup\.scala$' || true; })
+if [[ -n "$lock_bad" ]]; then
+  echo "JobLock constructed outside IncrementalBackup (a table has one lock, its drain lock):" >&2
+  echo "$lock_bad" >&2
+  exit 1
+fi
 # Root gate: a ManifestLog instance reads its directory through ONE
 # AtomicLog.list and carries that listing forward itself; a direct listing
 # or stat of the root would be a metadata op on every call.
@@ -42,23 +52,32 @@ sbt -batch test
 # Scala compiler, not sbt, then self-tests its filesystem op counter; a
 # change that compiles under sbt only fails here, not at the next benchmark
 # run. Idle-job gate: one traced backfill, whose idle re-runs (EtlMain over
-# an up-to-date backup) must run 0 Spark jobs. Both are skipped, and say
-# so, without such an install.
+# an up-to-date backup) must run 0 Spark jobs. Steady-drain gate: one traced
+# steady pass, whose lake drains through EtlRunner must run 0 Spark jobs
+# when idle, 1 when a month landed and at most 6 when due. All are skipped,
+# and say so, without such an install.
 if python3 -c 'import sys; sys.path.insert(0, "perfbench"); import build; build.spark_jars()' \
     >/dev/null 2>&1; then
   python3 perfbench/tests/test_fs_counter.py
   python3 perfbench/run.py --workload backfill --seed 901 --seconds 1 --trace 1 >/dev/null
   python3 tools/drain_map.py .bench_work/results/backfill-s901.trace.jsonl --max-jobs idle=0
+  python3 perfbench/run.py --workload steady --seed 901 --seconds 1 --trace 1 >/dev/null
+  python3 tools/drain_map.py .bench_work/results/steady-s901.trace.jsonl \
+    --max-jobs idle=0 --max-jobs copy=1 --max-jobs due=6
 else
-  echo "perfbench build check and idle-job gate skipped: no Spark installation with the Scala compiler jars"
+  echo "perfbench build check, idle-job and steady-drain gates skipped: no Spark installation with the Scala compiler jars"
 fi
 etl_sf="$HOME/testdata/sf0.001"
 if [[ -d "$etl_sf" ]]; then
+  # the queries' temp dirs (backups, lakes, manifests) go under $etl_out
+  # too, and leave with it, whether the run passes or fails
   etl_out=$(mktemp -d)
-  tools/jrun.sh graft.Verify "$etl_sf" "$etl_out" q_etl_backup q_etl_bulk \
+  trap 'rm -rf "$etl_out"' EXIT
+  mkdir "$etl_out/tmp"
+  JAVA_TOOL_OPTIONS="-Djava.io.tmpdir=$etl_out/tmp" \
+    tools/jrun.sh graft.Verify "$etl_sf" "$etl_out/out" q_etl_backup q_etl_bulk \
     q_etl_pruned q_etl_conc q_etl_incr q_etl_incr_part q_etl_journal q_etl_skip
-  python3 tools/oracle_check.py "$etl_sf" "$etl_out"
-  rm -rf "$etl_out"
+  python3 tools/oracle_check.py "$etl_sf" "$etl_out/out"
 else
   echo "ETL oracle skipped: no testdata at $etl_sf"
 fi
