@@ -1,11499 +1,37 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
 
-import graft.dedup.Dedup
-import graft.functions.{CountMin, Exact, SketchStore, TextFunctions, VectorFunctions}
-import graft.pipeline.TokenBudget
-import org.apache.spark.sql.graftx.RollingHash.rolling_hash
-import graft.multimodal.Multimodal
-import graft.operators.ReferenceOps
-import graft.similarity.{KMeansIvf, ModelCache, ProductQuantizer, Similarity}
+import graft.catalog._
+import graft.catalog.CatalogCommon.{Q, RocksDbProvider, StateProviderKey, withConf}
+import graft.catalog.Kind.{Batch, Drain}
 
 /** The declared query surface: one entry per operator from SURVEY.md §2 plus
-  * the north-star training-data-pipeline operators, each with (where SQL can
-  * express it) a DuckDB oracle that is value-identical by construction:
-  * exact decimal arithmetic cast to double at the end, deterministic ORDER BY
-  * with unique tie-breaks, explicit casts so schemas line up.
+  * the north-star training-data-pipeline operators, each with a DuckDB
+  * oracle that is value-identical by construction: exact decimal arithmetic
+  * cast to double at the end, deterministic ORDER BY with unique
+  * tie-breaks, explicit casts so schemas line up.
   *
   * Where the oracle SQL encodes nontrivial logic (language-ID argmax, LSH
   * bucket bits), the SQL is GENERATED from the same constants the Spark
   * implementation uses, so the two sides cannot drift.
+  *
+  * Each query is one `QuerySpec` next to its body, in the family object
+  * under `graft/catalog/`; the maps and sets below are views of their
+  * concatenation.
   */
 object QueryCatalog {
 
-  private type Q = (SparkSession, String) => DataFrame
-
-  // ------------------------------------------------------------ helpers
-
-  private def monthSid(c: Column): Column = ReferenceOps.monthSid(c)
-
-  private val monthSidSql = "CAST(year(o_orderdate)*100 + month(o_orderdate) AS BIGINT)"
-
-  /** revenue term: exact decimal price * (1 - discount), summed, as double */
-  private def revenueSum = Exact.sumDisc(col("l_extendedprice"), col("l_discount"))
-  private val revenueSumSql =
-    "CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4)) * " +
-      "(CAST(1 AS DECIMAL(8,4)) - CAST(l_discount AS DECIMAL(8,4)))) AS DOUBLE)"
-
-  // ------------------------------------------------------------ reference ops
-
-  private val qPartitionDiscovery: Q = (s, dir) => {
-    val o = Tables.orders(s, dir)
-    val status = o.select(monthSid(col("o_orderdate")).as("month_sid"))
-      .filter(col("month_sid") < 199800).distinct()
-    ReferenceOps.discoverPendingPartitions(o, monthSid(col("o_orderdate")), status, 2)
-      .orderBy("month_sid")
-  }
-
-  private val partitionDiscoverySql =
-    s"""WITH discovered AS (
-       |  SELECT month_sid, row_number() OVER (ORDER BY month_sid DESC) AS rn
-       |  FROM (SELECT DISTINCT $monthSidSql AS month_sid FROM orders) c
-       |), status AS (
-       |  SELECT DISTINCT $monthSidSql AS month_sid FROM orders
-       |  WHERE $monthSidSql < 199800
-       |)
-       |SELECT d.month_sid FROM discovered d
-       |WHERE d.rn > 2
-       |  AND NOT EXISTS (SELECT 1 FROM status s WHERE s.month_sid = d.month_sid)
-       |ORDER BY d.month_sid""".stripMargin
-
-  private val qOldestPending: Q = (s, dir) =>
-    ReferenceOps.oldestPending(qPartitionDiscovery(s, dir))
-
-  private val qPartitionRowcount: Q = (s, dir) =>
-    ReferenceOps.partitionRowCount(Tables.orders(s, dir), monthSid(col("o_orderdate")), 199801L)
-
-  private val qDistinctPartitions: Q = (s, dir) =>
-    ReferenceOps.distinctPartitions(Tables.orders(s, dir), monthSid(col("o_orderdate")))
-      .orderBy("month_sid")
-
-  private val qBucketHistogram: Q = (s, dir) =>
-    ReferenceOps.bucketHistogram(Tables.orders(s, dir), col("o_orderkey"), 8)
-      .orderBy("bucket")
-
-  private val qSchemaDdl: Q = (s, dir) =>
-    ReferenceOps.concatProjection(Tables.nation(s, dir), Tables.region(s, dir))
-      .orderBy("n_nationkey")
-
-  private val qCustomersWithoutOrders: Q = (s, dir) => {
-    val c = Tables.customer(s, dir)
-    val o = Tables.orders(s, dir)
-    c.join(o, c("c_custkey") === o("o_custkey"), "left_anti")
-      .select(col("c_custkey"), col("c_name")).orderBy("c_custkey")
-  }
-
-  private val qSegmentWithOrders: Q = (s, dir) => {
-    val c = Tables.customer(s, dir)
-    val o = Tables.orders(s, dir)
-    c.join(o, c("c_custkey") === o("o_custkey"), "left_semi")
-      .groupBy(col("c_mktsegment")).agg(count(lit(1)).as("n"))
-      .orderBy("c_mktsegment")
-  }
-
-  private val qLatestOrderPerCustomer: Q = (s, dir) => {
-    val w = Window.partitionBy(col("o_custkey"))
-      .orderBy(col("o_orderdate").desc, col("o_orderkey").asc)
-    Tables.orders(s, dir)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("o_custkey"), col("o_orderkey"), col("o_orderdate"))
-      .orderBy("o_custkey")
-  }
-
-  // ------------------------------------------------------------ analytics
-
-  private val qPricingSummary: Q = (s, dir) =>
-    Tables.lineitem(s, dir)
-      .filter(col("l_shipdate") <= lit(java.sql.Timestamp.valueOf("1998-09-02 00:00:00")))
-      .groupBy(col("l_returnflag"), col("l_linestatus"))
-      .agg(
-        Exact.sumExact(col("l_quantity")).as("sum_qty"),
-        Exact.sumExact(col("l_extendedprice")).as("sum_base_price"),
-        revenueSum.as("sum_disc_price"),
-        Exact.avgExact(col("l_quantity")).as("avg_qty"),
-        count(lit(1)).as("count_order"))
-      .orderBy("l_returnflag", "l_linestatus")
-
-  private val pricingSummarySql =
-    s"""SELECT l_returnflag, l_linestatus,
-       |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
-       |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_base_price,
-       |  $revenueSumSql AS sum_disc_price,
-       |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) / COUNT(*) AS avg_qty,
-       |  COUNT(*) AS count_order
-       |FROM lineitem
-       |WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-       |GROUP BY l_returnflag, l_linestatus
-       |ORDER BY l_returnflag, l_linestatus""".stripMargin
-
-  private val qTopOrders: Q = (s, dir) => {
-    val c = Tables.customer(s, dir).filter(col("c_mktsegment") === "BUILDING")
-    val o = Tables.orders(s, dir)
-      .filter(col("o_orderdate") < lit(java.sql.Timestamp.valueOf("1998-03-15 00:00:00")))
-    val l = Tables.lineitem(s, dir)
-      .filter(col("l_shipdate") > lit(java.sql.Timestamp.valueOf("1995-03-15 00:00:00")))
-    l.join(o, col("l_orderkey") === col("o_orderkey"))
-      .join(c, col("o_custkey") === col("c_custkey"))
-      .groupBy(col("o_orderkey"), col("o_orderdate"), col("o_orderpriority"))
-      .agg(revenueSum.as("revenue"))
-      .select(col("o_orderkey"), col("revenue"), col("o_orderdate"), col("o_orderpriority"))
-      .orderBy(col("revenue").desc, col("o_orderkey").asc)
-      .limit(10)
-  }
-
-  private val topOrdersSql =
-    s"""SELECT o_orderkey, $revenueSumSql AS revenue, o_orderdate, o_orderpriority
-       |FROM customer
-       |JOIN orders ON c_custkey = o_custkey
-       |JOIN lineitem ON l_orderkey = o_orderkey
-       |WHERE c_mktsegment = 'BUILDING'
-       |  AND o_orderdate < TIMESTAMP '1998-03-15 00:00:00'
-       |  AND l_shipdate > TIMESTAMP '1995-03-15 00:00:00'
-       |GROUP BY o_orderkey, o_orderdate, o_orderpriority
-       |ORDER BY revenue DESC, o_orderkey LIMIT 10""".stripMargin
-
-  private val qRegionRevenue: Q = (s, dir) => {
-    val l = Tables.lineitem(s, dir)
-    val sup = Tables.supplier(s, dir)
-    val n = Tables.nation(s, dir)
-    val r = Tables.region(s, dir)
-    l.join(sup, col("l_suppkey") === col("s_suppkey"))
-      .join(broadcast(n), col("s_nationkey") === col("n_nationkey"))
-      .join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
-      .groupBy(col("r_name"), col("n_name"))
-      .agg(revenueSum.as("revenue"))
-      .orderBy("r_name", "n_name")
-  }
-
-  private val regionRevenueSql =
-    s"""SELECT r_name, n_name, $revenueSumSql AS revenue
-       |FROM lineitem
-       |JOIN supplier ON l_suppkey = s_suppkey
-       |JOIN nation ON s_nationkey = n_nationkey
-       |JOIN region ON n_regionkey = r_regionkey
-       |GROUP BY r_name, n_name
-       |ORDER BY r_name, n_name""".stripMargin
-
-  /** TPC-H Q10 shape — returned-item revenue per customer: 3 fact-side
-    * joins + broadcast nation dim, exact-decimal revenue, top-20.
-    */
-  private val qReturnedItems: Q = (s, dir) => {
-    val l = Tables.lineitem(s, dir).filter(col("l_returnflag") === "R")
-    val o = Tables.orders(s, dir)
-      .filter(col("o_orderdate") >= lit(java.sql.Timestamp.valueOf("1996-10-01 00:00:00")) &&
-        col("o_orderdate") < lit(java.sql.Timestamp.valueOf("1997-01-01 00:00:00")))
-    val c = Tables.customer(s, dir)
-    val n = Tables.nation(s, dir)
-    l.join(o, col("l_orderkey") === col("o_orderkey"))
-      .join(c, col("o_custkey") === col("c_custkey"))
-      .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
-      .groupBy(col("c_custkey"), col("c_name"), col("c_acctbal"), col("n_name"))
-      .agg(revenueSum.as("revenue"))
-      .select(col("c_custkey"), col("c_name"), col("revenue"),
-        col("c_acctbal"), col("n_name"))
-      .orderBy(col("revenue").desc, col("c_custkey").asc)
-      .limit(20)
-  }
-
-  private val returnedItemsSql =
-    s"""SELECT c_custkey, c_name, $revenueSumSql AS revenue, c_acctbal, n_name
-       |FROM lineitem
-       |JOIN orders ON l_orderkey = o_orderkey
-       |JOIN customer ON o_custkey = c_custkey
-       |JOIN nation ON c_nationkey = n_nationkey
-       |WHERE l_returnflag = 'R'
-       |  AND o_orderdate >= TIMESTAMP '1996-10-01 00:00:00'
-       |  AND o_orderdate <  TIMESTAMP '1997-01-01 00:00:00'
-       |GROUP BY c_custkey, c_name, c_acctbal, n_name
-       |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin
-
-  /** TPC-H Q18 shape — large-volume orders: the HAVING subquery becomes a
-    * semi-join against the re-aggregated lineitem (aggregate pushed before
-    * the join on both legs).
-    */
-  private val qLargeOrders: Q = (s, dir) => {
-    val l = Tables.lineitem(s, dir)
-    val big = l.groupBy(col("l_orderkey"))
-      .agg(Exact.sumExact(col("l_quantity")).as("sum_qty"))
-      .filter(col("sum_qty") > 250.0)
-    val o = Tables.orders(s, dir)
-    val c = Tables.customer(s, dir)
-    o.join(big, col("o_orderkey") === col("l_orderkey"))
-      .join(c, col("o_custkey") === col("c_custkey"))
-      .select(col("c_name"), col("c_custkey"), col("o_orderkey"),
-        col("o_orderdate"), col("o_totalprice"), col("sum_qty"))
-      .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-      .limit(100)
-  }
-
-  private val largeOrdersSql =
-    """SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice, sum_qty
-      |FROM (
-      |  SELECT l_orderkey,
-      |    CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty
-      |  FROM lineitem GROUP BY l_orderkey
-      |  HAVING CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) > 250.0) big
-      |JOIN orders ON o_orderkey = big.l_orderkey
-      |JOIN customer ON o_custkey = c_custkey
-      |ORDER BY o_totalprice DESC, o_orderkey LIMIT 100""".stripMargin
-
-  /** Statistical moments per group: sample stddev of extendedprice and the
-    * quantity↔price correlation, computed from EXACT decimal power sums
-    * (Σx, Σx², Σy, Σy², Σxy) — the two-pass-free moment formulation every
-    * engine can partial-aggregate. Built-in `stddev`/`corr` stream doubles
-    * in engine-specific order and are not bit-reproducible; the decimal
-    * sums are exact and order-free, and the final double arithmetic
-    * (+,-,*,/ and IEEE sqrt are correctly rounded) is applied in the same
-    * expression shape on both sides. The one non-reproducible step is each
-    * engine's decimal→double cast (1-ulp divergence observed), so the
-    * derived stats are rounded per the established transcendental rule.
-    */
-  private val qStatsMoments: Q = (s, dir) => {
-    val x = Exact.dec(col("l_extendedprice"))
-    val y = Exact.dec(col("l_quantity"))
-    Tables.lineitem(s, dir)
-      .groupBy(col("l_returnflag"))
-      .agg(count(lit(1)).cast("double").as("n"),
-        sum(x).cast("double").as("sx"), sum(x * x).cast("double").as("sxx"),
-        sum(y).cast("double").as("sy"), sum(y * y).cast("double").as("syy"),
-        sum(x * y).cast("double").as("sxy"))
-      .select(col("l_returnflag"), col("n").cast("long").as("n_rows"),
-        round(col("sx") / col("n"), 6).as("mean_price"),
-        round(sqrt((col("sxx") - col("sx") * col("sx") / col("n")) / (col("n") - lit(1.0))), 6)
-          .as("stddev_price"),
-        round((col("sxy") - col("sx") * col("sy") / col("n")) /
-          (sqrt(col("sxx") - col("sx") * col("sx") / col("n")) *
-            sqrt(col("syy") - col("sy") * col("sy") / col("n"))), 9)
-          .as("corr_qty_price"))
-      .orderBy("l_returnflag")
-  }
-
-  private val statsMomentsSql =
-    """WITH m AS (
-      |  SELECT l_returnflag,
-      |    CAST(COUNT(*) AS DOUBLE) AS n,
-      |    CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sx,
-      |    CAST(SUM(CAST(l_extendedprice AS DECIMAL(19,4)) * CAST(l_extendedprice AS DECIMAL(19,4))) AS DOUBLE) AS sxx,
-      |    CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sy,
-      |    CAST(SUM(CAST(l_quantity AS DECIMAL(19,4)) * CAST(l_quantity AS DECIMAL(19,4))) AS DOUBLE) AS syy,
-      |    CAST(SUM(CAST(l_extendedprice AS DECIMAL(19,4)) * CAST(l_quantity AS DECIMAL(19,4))) AS DOUBLE) AS sxy
-      |  FROM lineitem GROUP BY l_returnflag)
-      |SELECT l_returnflag, CAST(n AS BIGINT) AS n_rows,
-      |  round(sx / n, 6) AS mean_price,
-      |  round(sqrt((sxx - sx * sx / n) / (n - 1.0)), 6) AS stddev_price,
-      |  round((sxy - sx * sy / n) /
-      |    (sqrt(sxx - sx * sx / n) * sqrt(syy - sy * sy / n)), 9) AS corr_qty_price
-      |FROM m ORDER BY l_returnflag""".stripMargin
-
-  /** Key purge across a table family (etl.Purge) — right-to-be-forgotten
-    * with a CASCADE: a deletion batch of customers removes their orders
-    * (by o_custkey) and those orders' lineitems (by l_orderkey, resolved
-    * BEFORE the first purge lands). Each table is one broadcast anti-join
-    * rewrite with the atomic-swap discipline; the emitted before/after
-    * counts plus a content xor over the SURVIVORS hash-match only if
-    * exactly the condemned rows — and nothing else — are gone.
-    */
-  private val qKeyPurge: Q = (s, dir) => {
-    // pristine table family is a build-once test input; the purge MUTATES
-    // it (atomic swap), so each run rewrites a fresh local copy — the
-    // timed operator is the purge itself, not the input generation
-    val fx = Fixtures.getOrBuild(s"purge:$dir") { f =>
-      Tables.orders(s, dir).write.parquet(s"$f/orders")
-      Tables.lineitem(s, dir)
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
-        .write.parquet(s"$f/lineitem")
-    }
-    val tmp = Fixtures.mutableCopy(fx)
-    val users = Tables.customer(s, dir)
-      .filter(col("c_custkey") % 97 === 5).select(col("c_custkey"))
-    // resolve the cascade BEFORE the first purge mutates orders —
-    // localCheckpoint (not cache) so eviction can never recompute the
-    // plan against the swapped/renamed orders directory
-    val doomedOrders = s.read.parquet(s"$tmp/orders")
-      .join(broadcast(users), col("o_custkey") === col("c_custkey"), "left_semi")
-      .select(col("o_orderkey"))
-      .localCheckpoint()
-    val so = etl.Purge.purge(s, s"$tmp/orders", "o_custkey", users)
-    val sl = etl.Purge.purge(s, s"$tmp/lineitem", "l_orderkey", doomedOrders)
-    val ro = s.read.parquet(s"$tmp/orders")
-      .agg(expr("bit_xor(o_orderkey)").as("content_xor"))
-      .select(lit("orders").as("tbl"), lit(so.rowsBefore).as("rows_before"),
-        lit(so.rowsAfter).as("rows_after"), col("content_xor"))
-    val rl = s.read.parquet(s"$tmp/lineitem")
-      .agg(expr("bit_xor(l_orderkey * 7 + l_linenumber)").as("content_xor"))
-      .select(lit("lineitem").as("tbl"), lit(sl.rowsBefore).as("rows_before"),
-        lit(sl.rowsAfter).as("rows_after"), col("content_xor"))
-    rl.unionByName(ro).orderBy("tbl")
-  }
-
-  private val keyPurgeSql =
-    """WITH pu AS (
-      |  SELECT c_custkey FROM customer WHERE c_custkey % 97 = 5
-      |), po AS (
-      |  SELECT o_orderkey FROM orders
-      |  WHERE o_custkey IN (SELECT c_custkey FROM pu)
-      |), ro AS (
-      |  SELECT * FROM orders
-      |  WHERE o_custkey NOT IN (SELECT c_custkey FROM pu)
-      |), rl AS (
-      |  SELECT * FROM lineitem
-      |  WHERE l_orderkey NOT IN (SELECT o_orderkey FROM po)
-      |)
-      |SELECT 'lineitem' AS tbl,
-      |  (SELECT COUNT(*) FROM lineitem) AS rows_before,
-      |  (SELECT COUNT(*) FROM rl) AS rows_after,
-      |  (SELECT CAST(bit_xor(l_orderkey * 7 + l_linenumber) AS BIGINT)
-      |     FROM rl) AS content_xor
-      |UNION ALL
-      |SELECT 'orders',
-      |  (SELECT COUNT(*) FROM orders),
-      |  (SELECT COUNT(*) FROM ro),
-      |  (SELECT CAST(bit_xor(o_orderkey) AS BIGINT) FROM ro)
-      |ORDER BY tbl""".stripMargin
-
-  /** Temporal interval normalization (Teradata NORMALIZE / Postgres
-    * range_agg): overlapping validity intervals merged into maximal
-    * disjoint ones per key — the interval-END-driven variant of
-    * gaps-and-islands (an island breaks when the next START clears the
-    * running MAX of all previous ENDS, not on a fixed gap like
-    * q_sessionize). Ten-day shipment windows per supplier; emits merged
-    * interval count, covered days and an epoch-encoded boundary xor per
-    * supplier, so a single mis-merged boundary breaks the hash. One
-    * window sort per key — partitioned, no global ordering.
-    */
-  private val qIntervalMerge: Q = (s, dir) => {
-    val iv = Tables.lineitem(s, dir).select(
-      col("l_suppkey").as("k"), to_date(col("l_shipdate")).as("s"),
-      date_add(to_date(col("l_shipdate")), 10).as("e"))
-    val w = Window.partitionBy("k").orderBy("s", "e")
-    val marked = iv
-      .withColumn("pmax",
-        max(col("e")).over(w.rowsBetween(Window.unboundedPreceding, -1)))
-      .withColumn("isl",
-        sum(when(col("pmax").isNull || col("s") > col("pmax"), 1)
-          .otherwise(0))
-          .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    marked.groupBy(col("k"), col("isl"))
-      .agg(min(col("s")).as("st"), max(col("e")).as("en"))
-      .groupBy(col("k"))
-      .agg(count(lit(1)).as("n_intervals"),
-        sum(datediff(col("en"), col("st"))).cast("long").as("covered_days"),
-        expr("""bit_xor(CAST(datediff(en, DATE'1990-01-01') AS BIGINT)
-          * 100000 + CAST(datediff(st, DATE'1990-01-01') AS BIGINT))""")
-          .as("bounds_xor"))
-      .orderBy("k")
-  }
-
-  private val intervalMergeSql =
-    """WITH iv AS (
-      |  SELECT l_suppkey AS k, CAST(l_shipdate AS DATE) AS s,
-      |         CAST(l_shipdate AS DATE) + 10 AS e
-      |  FROM lineitem
-      |), m AS (
-      |  SELECT k, s, e, MAX(e) OVER (PARTITION BY k ORDER BY s, e
-      |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pmax
-      |  FROM iv
-      |), i AS (
-      |  SELECT k, s, e,
-      |    SUM(CASE WHEN pmax IS NULL OR s > pmax THEN 1 ELSE 0 END)
-      |      OVER (PARTITION BY k ORDER BY s, e
-      |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS isl
-      |  FROM m
-      |), g AS (
-      |  SELECT k, isl, MIN(s) AS st, MAX(e) AS en FROM i GROUP BY k, isl
-      |)
-      |SELECT k, COUNT(*) AS n_intervals,
-      |  CAST(SUM(en - st) AS BIGINT) AS covered_days,
-      |  CAST(bit_xor(CAST(en - DATE '1990-01-01' AS BIGINT) * 100000
-      |    + CAST(st - DATE '1990-01-01' AS BIGINT)) AS BIGINT) AS bounds_xor
-      |FROM g GROUP BY k ORDER BY k""".stripMargin
-
-  /** Spearman rank correlation per group — the robust (monotonic, outlier-
-    * insensitive) complement of q_stats_moments' Pearson. Tie-averaged
-    * ranks are kept in INTEGER form as double-ranks (2·avg_rank = min_rank
-    * + max_rank; Pearson is affine-invariant, so correlating double-ranks
-    * IS Spearman), with max_rank read off a RANGE frame over the same
-    * ordering as rank() — one sort per variable, no second exchange for
-    * the tie counts. Power sums are exact decimals, doubles only in the
-    * final closed form (the q_stats_moments discipline).
-    */
-  private val qSpearman: Q = (s, dir) => {
-    def dr(v: String): Column =
-      (rank().over(Window.partitionBy("g").orderBy(v)) +
-        count(lit(1)).over(Window.partitionBy("g").orderBy(v)
-          .rangeBetween(Window.unboundedPreceding, Window.currentRow)))
-        .cast("decimal(38,0)")
-    val ranked = Tables.lineitem(s, dir)
-      .select(col("l_returnflag").as("g"), col("l_quantity").as("qv"),
-        col("l_extendedprice").as("pv"))
-      .select(col("g"), dr("qv").as("x"), dr("pv").as("y"))
-    ranked.groupBy("g")
-      .agg(count(lit(1)).cast("double").as("n"),
-        sum(col("x")).cast("double").as("sx"),
-        sum(col("x") * col("x")).cast("double").as("sxx"),
-        sum(col("y")).cast("double").as("sy"),
-        sum(col("y") * col("y")).cast("double").as("syy"),
-        sum(col("x") * col("y")).cast("double").as("sxy"))
-      .select(col("g"), col("n").cast("long").as("n_rows"),
-        round((col("n") * col("sxy") - col("sx") * col("sy")) /
-          (sqrt(col("n") * col("sxx") - col("sx") * col("sx")) *
-            sqrt(col("n") * col("syy") - col("sy") * col("sy"))), 9)
-          .as("spearman_qty_price"))
-      .orderBy("g")
-  }
-
-  private val spearmanSql =
-    """WITH r AS (
-      |  SELECT l_returnflag AS g,
-      |    CAST(rank() OVER (PARTITION BY l_returnflag ORDER BY l_quantity)
-      |      + COUNT(*) OVER (PARTITION BY l_returnflag ORDER BY l_quantity
-      |          RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-      |      AS DECIMAL(38,0)) AS x,
-      |    CAST(rank() OVER (PARTITION BY l_returnflag ORDER BY l_extendedprice)
-      |      + COUNT(*) OVER (PARTITION BY l_returnflag ORDER BY l_extendedprice
-      |          RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-      |      AS DECIMAL(38,0)) AS y
-      |  FROM lineitem
-      |), m AS (
-      |  SELECT g, CAST(COUNT(*) AS DOUBLE) AS n,
-      |    CAST(SUM(x) AS DOUBLE) AS sx, CAST(SUM(x * x) AS DOUBLE) AS sxx,
-      |    CAST(SUM(y) AS DOUBLE) AS sy, CAST(SUM(y * y) AS DOUBLE) AS syy,
-      |    CAST(SUM(x * y) AS DOUBLE) AS sxy
-      |  FROM r GROUP BY g)
-      |SELECT g, CAST(n AS BIGINT) AS n_rows,
-      |  round((n * sxy - sx * sy) /
-      |    (sqrt(n * sxx - sx * sx) * sqrt(n * syy - sy * sy)), 9)
-      |    AS spearman_qty_price
-      |FROM m ORDER BY g""".stripMargin
-
-  /** TPC-H Q4 shape (order-priority checking): orders in a quarter with at
-    * least one "late" line (shipped >60 days after the order date — the
-    * testdata has no commit/receipt dates, so lateness is defined against
-    * the order date), counted per priority. The correlated EXISTS becomes a
-    * left-semi join with a compound condition — no exchange beyond the one
-    * orderkey shuffle.
-    */
-  private val qOrderPriority: Q = (s, dir) => {
-    val o = Tables.orders(s, dir)
-      .filter(col("o_orderdate") >= lit("1996-07-01") &&
-        col("o_orderdate") < lit("1996-10-01"))
-    val l = Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_shipdate"))
-    o.join(l,
-        col("l_orderkey") === col("o_orderkey") &&
-          col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 60 DAYS"),
-        "left_semi")
-      .groupBy(col("o_orderpriority"))
-      .agg(count(lit(1)).as("order_count"))
-      .orderBy("o_orderpriority")
-  }
-
-  private val orderPrioritySql =
-    """SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS order_count
-      |FROM orders
-      |WHERE o_orderdate >= '1996-07-01' AND o_orderdate < '1996-10-01'
-      |  AND EXISTS (SELECT 1 FROM lineitem
-      |              WHERE l_orderkey = o_orderkey
-      |                AND l_shipdate > o_orderdate + INTERVAL 60 DAY)
-      |GROUP BY 1 ORDER BY 1""".stripMargin
-
-  /** TPC-H Q7 shape (volume shipping): bilateral trade volume between two
-    * nations by ship year. Both nation dims are pre-filtered to the two
-    * names and broadcast; the OR condition that excludes same-nation pairs
-    * runs on the joined row.
-    */
-  private val qNationVolume: Q = (s, dir) => {
-    val names = Seq("NATION_3", "NATION_7")
-    val n1 = Tables.nation(s, dir).filter(col("n_name").isin(names: _*))
-      .select(col("n_nationkey").as("s_nk"), col("n_name").as("supp_nation"))
-    val n2 = Tables.nation(s, dir).filter(col("n_name").isin(names: _*))
-      .select(col("n_nationkey").as("c_nk"), col("n_name").as("cust_nation"))
-    Tables.lineitem(s, dir)
-      .join(Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey")),
-        col("l_orderkey") === col("o_orderkey"))
-      .join(Tables.customer(s, dir).select(col("c_custkey"), col("c_nationkey")),
-        col("o_custkey") === col("c_custkey"))
-      .join(broadcast(Tables.supplier(s, dir).select(col("s_suppkey"), col("s_nationkey"))),
-        col("l_suppkey") === col("s_suppkey"))
-      .join(broadcast(n1), col("s_nationkey") === col("s_nk"))
-      .join(broadcast(n2), col("c_nationkey") === col("c_nk"))
-      .filter(col("supp_nation") =!= col("cust_nation"))
-      .groupBy(col("supp_nation"), col("cust_nation"),
-        year(col("l_shipdate")).cast("long").as("l_year"))
-      .agg(revenueSum.as("revenue"))
-      .orderBy("supp_nation", "cust_nation", "l_year")
-  }
-
-  private val nationVolumeSql =
-    s"""SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-       |  CAST(year(l_shipdate) AS BIGINT) AS l_year, $revenueSumSql AS revenue
-       |FROM lineitem
-       |JOIN orders ON l_orderkey = o_orderkey
-       |JOIN customer ON o_custkey = c_custkey
-       |JOIN supplier ON l_suppkey = s_suppkey
-       |JOIN nation n1 ON s_nationkey = n1.n_nationkey
-       |JOIN nation n2 ON c_nationkey = n2.n_nationkey
-       |WHERE n1.n_name IN ('NATION_3', 'NATION_7')
-       |  AND n2.n_name IN ('NATION_3', 'NATION_7')
-       |  AND n1.n_name <> n2.n_name
-       |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin
-
-  /** TPC-H Q14 shape (promotion effect): promo revenue share of one ship
-    * month. Both sums are exact decimal; the 100·promo/total ratio is the
-    * only double step, applied identically on both sides.
-    */
-  private val qPromoRevenue: Q = (s, dir) => {
-    Tables.lineitem(s, dir)
-      .filter(col("l_shipdate") >= lit("1996-09-01") &&
-        col("l_shipdate") < lit("1996-10-01"))
-      .join(Tables.part(s, dir).select(col("p_partkey"), col("p_type")),
-        col("l_partkey") === col("p_partkey"))
-      .agg(
-        Exact.sumDisc(when(col("p_type") === "PROMO", col("l_extendedprice"))
-          .otherwise(lit(0.0)), col("l_discount")).as("promo"),
-        revenueSum.as("total"))
-      .select(((lit(100.0) * col("promo")) / col("total")).as("promo_revenue"))
-  }
-
-  private val promoRevenueSql =
-    s"""SELECT (100.0 * CAST(SUM(CAST(CASE WHEN p_type = 'PROMO'
-       |    THEN l_extendedprice ELSE 0.0 END AS DECIMAL(18,4)) *
-       |    (CAST(1 AS DECIMAL(8,4)) - CAST(l_discount AS DECIMAL(8,4)))) AS DOUBLE))
-       |  / $revenueSumSql AS promo_revenue
-       |FROM lineitem JOIN part ON l_partkey = p_partkey
-       |WHERE l_shipdate >= '1996-09-01' AND l_shipdate < '1996-10-01'""".stripMargin
-
-  /** TPC-H Q19 shape (discounted revenue, disjunctive predicates): three
-    * brand × size × quantity bands OR-ed together. The disjunction stays a
-    * single scan-side filter after one partkey join — no union-of-scans.
-    */
-  private val qBrandRevenue: Q = (s, dir) => {
-    Tables.lineitem(s, dir)
-      .join(Tables.part(s, dir).select(col("p_partkey"), col("p_brand"), col("p_size")),
-        col("l_partkey") === col("p_partkey"))
-      .filter(
-        (col("p_brand") === "Brand#1" && col("p_size").between(1, 10) &&
-          col("l_quantity").between(1, 15)) ||
-        (col("p_brand") === "Brand#2" && col("p_size").between(10, 25) &&
-          col("l_quantity").between(10, 30)) ||
-        (col("p_brand") === "Brand#3" && col("p_size").between(20, 40) &&
-          col("l_quantity").between(20, 45)))
-      .agg(revenueSum.as("revenue"))
-  }
-
-  private val brandRevenueSql =
-    s"""SELECT $revenueSumSql AS revenue
-       |FROM lineitem JOIN part ON l_partkey = p_partkey
-       |WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 10 AND l_quantity BETWEEN 1 AND 15)
-       |   OR (p_brand = 'Brand#2' AND p_size BETWEEN 10 AND 25 AND l_quantity BETWEEN 10 AND 30)
-       |   OR (p_brand = 'Brand#3' AND p_size BETWEEN 20 AND 40 AND l_quantity BETWEEN 20 AND 45)""".stripMargin
-
-  /** TPC-H Q22 shape (global sales opportunity), adapted to the testdata
-    * (no phone column; every customer has SOME order, so "never ordered"
-    * selects nothing — lapsed means no order since 1999): per nation,
-    * customers holding above-average positive balances with no recent
-    * order. Scalar-subquery threshold via a broadcast 1-row cross join,
-    * anti join against the filtered orders, exact decimal balance sums.
-    */
-  private val qIdleCustomers: Q = (s, dir) => {
-    val c = Tables.customer(s, dir)
-    val avgB = c.filter(col("c_acctbal") > lit(0.0))
-      .agg(Exact.avgExact(col("c_acctbal")).as("ab"))
-    c.crossJoin(broadcast(avgB))
-      .filter(col("c_acctbal") > col("ab"))
-      .join(Tables.orders(s, dir)
-          .filter(col("o_orderdate") >= lit("1999-01-01"))
-          .select(col("o_custkey")),
-        col("c_custkey") === col("o_custkey"), "left_anti")
-      .join(broadcast(Tables.nation(s, dir)),
-        col("c_nationkey") === col("n_nationkey"))
-      .groupBy(col("n_name"))
-      .agg(count(lit(1)).as("numcust"),
-        Exact.sumExact(col("c_acctbal")).as("totacctbal"))
-      .orderBy("n_name")
-  }
-
-  private val idleCustomersSql =
-    """WITH ab AS (
-      |  SELECT CAST(SUM(CAST(c_acctbal AS DECIMAL(18,4))) AS DOUBLE) / COUNT(*) AS ab
-      |  FROM customer WHERE c_acctbal > 0.0)
-      |SELECT n_name, CAST(COUNT(*) AS BIGINT) AS numcust,
-      |  CAST(SUM(CAST(c_acctbal AS DECIMAL(18,4))) AS DOUBLE) AS totacctbal
-      |FROM customer CROSS JOIN ab
-      |JOIN nation ON c_nationkey = n_nationkey
-      |WHERE c_acctbal > ab
-      |  AND NOT EXISTS (SELECT 1 FROM orders
-      |                  WHERE o_custkey = c_custkey
-      |                    AND o_orderdate >= '1999-01-01')
-      |GROUP BY n_name ORDER BY n_name""".stripMargin
-
-  /** TPC-H Q6 shape (forecast revenue change): pure scan-side filter +
-    * single exact-decimal aggregate — the canonical predicate-pushdown
-    * query (no join, no shuffle beyond the final 1-row reduce).
-    */
-  private val qForecastRevenue: Q = (s, dir) =>
-    Tables.lineitem(s, dir)
-      .filter(col("l_shipdate") >= lit("1997-01-01") &&
-        col("l_shipdate") < lit("1998-01-01") &&
-        col("l_discount").between(0.05, 0.07) &&
-        col("l_quantity") < 24)
-      .agg(sum(Exact.dec(col("l_extendedprice")) * Exact.frac(col("l_discount")))
-        .cast("double").as("revenue"))
-
-  private val forecastRevenueSql =
-    """SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4)) *
-      |    CAST(l_discount AS DECIMAL(8,4))) AS DOUBLE) AS revenue
-      |FROM lineitem
-      |WHERE l_shipdate >= '1997-01-01' AND l_shipdate < '1998-01-01'
-      |  AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24""".stripMargin
-
-  /** TPC-H Q2 shape (minimum-cost supplier): the testdata has no partsupp,
-    * so the part↔supplier offer relation is derived from lineitem (an
-    * offer's cost = the supplier's cheapest extended price for that part).
-    * The correlated min subquery becomes a join against the re-aggregated
-    * offer table, restricted to suppliers of one region — the cost column
-    * stays DECIMAL until after the equality so min-matching is exact.
-    */
-  private val qMinCostSupplier: Q = (s, dir) => {
-    val p = Tables.part(s, dir).filter(col("p_size") === 15)
-      .select(col("p_partkey"))
-    val regionSupp = Tables.supplier(s, dir)
-      .join(broadcast(Tables.nation(s, dir)), col("s_nationkey") === col("n_nationkey"))
-      .join(broadcast(Tables.region(s, dir).filter(col("r_name") === "ASIA")),
-        col("n_regionkey") === col("r_regionkey"))
-      .select(col("s_suppkey"), col("s_name"), col("s_acctbal"), col("n_name"))
-    val offers = Tables.lineitem(s, dir)
-      .join(broadcast(p), col("l_partkey") === col("p_partkey"))
-      .join(broadcast(regionSupp), col("l_suppkey") === col("s_suppkey"))
-      .groupBy(col("p_partkey"), col("s_suppkey"), col("s_name"),
-        col("s_acctbal"), col("n_name"))
-      .agg(min(Exact.dec(col("l_extendedprice"))).as("cost"))
-    val minCost = offers.groupBy(col("p_partkey").as("mc_partkey"))
-      .agg(min(col("cost")).as("min_cost"))
-    offers.join(minCost,
-        col("p_partkey") === col("mc_partkey") && col("cost") === col("min_cost"))
-      .select(col("s_acctbal"), col("s_name"), col("n_name"), col("p_partkey"),
-        col("cost").cast("double").as("cost"))
-      .orderBy(col("s_acctbal").desc, col("n_name").asc, col("s_name").asc,
-        col("p_partkey").asc)
-      .limit(100)
-  }
-
-  private val minCostSupplierSql =
-    """WITH offers AS (
-      |  SELECT p_partkey, s_suppkey, s_name, s_acctbal, n_name,
-      |    MIN(CAST(l_extendedprice AS DECIMAL(18,4))) AS cost
-      |  FROM lineitem
-      |  JOIN part ON l_partkey = p_partkey AND p_size = 15
-      |  JOIN supplier ON l_suppkey = s_suppkey
-      |  JOIN nation ON s_nationkey = n_nationkey
-      |  JOIN region ON n_regionkey = r_regionkey AND r_name = 'ASIA'
-      |  GROUP BY 1, 2, 3, 4, 5)
-      |SELECT s_acctbal, s_name, n_name, p_partkey, CAST(cost AS DOUBLE) AS cost
-      |FROM offers o
-      |WHERE cost = (SELECT MIN(cost) FROM offers i WHERE i.p_partkey = o.p_partkey)
-      |ORDER BY s_acctbal DESC, n_name, s_name, p_partkey LIMIT 100""".stripMargin
-
-  /** TPC-H Q8 shape (national market share): one nation's share of a
-    * region's revenue for one part type, by order year. Numerator and
-    * denominator are both exact decimal sums; the single double division is
-    * applied identically on both sides.
-    */
-  private val qMarketShare: Q = (s, dir) => {
-    val p = Tables.part(s, dir).filter(col("p_type") === "ECONOMY")
-      .select(col("p_partkey"))
-    val custRegion = Tables.customer(s, dir)
-      .join(broadcast(Tables.nation(s, dir)), col("c_nationkey") === col("n_nationkey"))
-      .join(broadcast(Tables.region(s, dir).filter(col("r_name") === "ASIA")),
-        col("n_regionkey") === col("r_regionkey"))
-      .select(col("c_custkey"))
-    val suppNation = Tables.supplier(s, dir)
-      .join(broadcast(Tables.nation(s, dir)), col("s_nationkey") === col("n_nationkey"))
-      .select(col("s_suppkey"), col("n_name").as("supp_nation"))
-    Tables.lineitem(s, dir)
-      .join(broadcast(p), col("l_partkey") === col("p_partkey"))
-      .join(Tables.orders(s, dir)
-          .filter(col("o_orderdate") >= lit("1996-01-01") &&
-            col("o_orderdate") < lit("1998-01-01"))
-          .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate")),
-        col("l_orderkey") === col("o_orderkey"))
-      .join(custRegion, col("o_custkey") === col("c_custkey"), "left_semi")
-      .join(broadcast(suppNation), col("l_suppkey") === col("s_suppkey"))
-      .groupBy(year(col("o_orderdate")).cast("long").as("o_year"))
-      .agg(
-        Exact.sumDisc(when(col("supp_nation") === "NATION_5", col("l_extendedprice"))
-          .otherwise(lit(0.0)), col("l_discount")).as("nation_vol"),
-        revenueSum.as("total_vol"))
-      .select(col("o_year"), (col("nation_vol") / col("total_vol")).as("mkt_share"))
-      .orderBy("o_year")
-  }
-
-  private val marketShareSql =
-    s"""SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
-       |  CAST(SUM(CAST(CASE WHEN sn.n_name = 'NATION_5' THEN l_extendedprice ELSE 0.0 END
-       |      AS DECIMAL(18,4)) *
-       |    (CAST(1 AS DECIMAL(8,4)) - CAST(l_discount AS DECIMAL(8,4)))) AS DOUBLE)
-       |  / $revenueSumSql AS mkt_share
-       |FROM lineitem
-       |JOIN part ON l_partkey = p_partkey AND p_type = 'ECONOMY'
-       |JOIN orders ON l_orderkey = o_orderkey
-       |JOIN supplier ON l_suppkey = s_suppkey
-       |JOIN nation sn ON s_nationkey = sn.n_nationkey
-       |WHERE o_orderdate >= '1996-01-01' AND o_orderdate < '1998-01-01'
-       |  AND EXISTS (SELECT 1 FROM customer
-       |              JOIN nation cn ON c_nationkey = cn.n_nationkey
-       |              JOIN region ON cn.n_regionkey = r_regionkey
-       |              WHERE c_custkey = o_custkey AND r_name = 'ASIA')
-       |GROUP BY 1 ORDER BY 1""".stripMargin
-
-  /** TPC-H Q9 shape (product-type profit): no partsupp supply cost in the
-    * testdata, so cost = retail price × quantity; profit stays an exact
-    * decimal expression end-to-end (negative profit is expected and fine).
-    * Grouped by supplier nation × order year.
-    */
-  private val qProductProfit: Q = (s, dir) => {
-    val p = Tables.part(s, dir).filter(col("p_name").contains("widget"))
-      .select(col("p_partkey"), col("p_retailprice"))
-    val suppNation = Tables.supplier(s, dir)
-      .join(broadcast(Tables.nation(s, dir)), col("s_nationkey") === col("n_nationkey"))
-      .select(col("s_suppkey"), col("n_name").as("nation"))
-    Tables.lineitem(s, dir)
-      .join(broadcast(p), col("l_partkey") === col("p_partkey"))
-      .join(Tables.orders(s, dir).select(col("o_orderkey"), col("o_orderdate")),
-        col("l_orderkey") === col("o_orderkey"))
-      .join(broadcast(suppNation), col("l_suppkey") === col("s_suppkey"))
-      .groupBy(col("nation"), year(col("o_orderdate")).cast("long").as("o_year"))
-      .agg(sum(
-          Exact.dec(col("l_extendedprice")) *
-            (lit(1).cast(org.apache.spark.sql.types.DecimalType(8, 4)) -
-              Exact.frac(col("l_discount"))) -
-          Exact.dec(col("p_retailprice")) * Exact.dec(col("l_quantity")))
-        .cast("double").as("sum_profit"))
-      .orderBy(col("nation").asc, col("o_year").desc)
-  }
-
-  private val productProfitSql =
-    """SELECT n_name AS nation, CAST(year(o_orderdate) AS BIGINT) AS o_year,
-      |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4)) *
-      |      (CAST(1 AS DECIMAL(8,4)) - CAST(l_discount AS DECIMAL(8,4))) -
-      |      CAST(p_retailprice AS DECIMAL(18,4)) * CAST(l_quantity AS DECIMAL(18,4)))
-      |    AS DOUBLE) AS sum_profit
-      |FROM lineitem
-      |JOIN part ON l_partkey = p_partkey AND p_name LIKE '%widget%'
-      |JOIN orders ON l_orderkey = o_orderkey
-      |JOIN supplier ON l_suppkey = s_suppkey
-      |JOIN nation ON s_nationkey = n_nationkey
-      |GROUP BY 1, 2 ORDER BY nation, o_year DESC""".stripMargin
-
-  /** TPC-H Q11 shape (important stock): per-part lineitem value from one
-    * nation's suppliers, kept when above a scalar-subquery fraction of the
-    * total — the threshold is a broadcast 1-row cross join, compared in
-    * double on both sides.
-    */
-  private val qImportantParts: Q = (s, dir) => {
-    val suppN = Tables.supplier(s, dir)
-      .join(broadcast(Tables.nation(s, dir).filter(col("n_name") === "NATION_2")),
-        col("s_nationkey") === col("n_nationkey"))
-      .select(col("s_suppkey"))
-    val value = Tables.lineitem(s, dir)
-      .join(broadcast(suppN), col("l_suppkey") === col("s_suppkey"), "left_semi")
-      .groupBy(col("l_partkey"))
-      .agg(Exact.sumExact(col("l_extendedprice")).as("part_value"))
-    val total = value.agg(sum(col("part_value")).as("total_value"))
-    value.crossJoin(broadcast(total))
-      .filter(col("part_value") > col("total_value") * lit(0.002))
-      .select(col("l_partkey"), col("part_value"))
-      .orderBy(col("part_value").desc, col("l_partkey").asc)
-  }
-
-  private val importantPartsSql =
-    """WITH v AS (
-      |  SELECT l_partkey,
-      |    CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS part_value
-      |  FROM lineitem
-      |  WHERE l_suppkey IN (SELECT s_suppkey FROM supplier
-      |                      JOIN nation ON s_nationkey = n_nationkey
-      |                      WHERE n_name = 'NATION_2')
-      |  GROUP BY 1)
-      |SELECT l_partkey, part_value FROM v
-      |WHERE part_value > (SELECT SUM(part_value) FROM v) * 0.002
-      |ORDER BY part_value DESC, l_partkey""".stripMargin
-
-  /** TPC-H Q12 shape (shipping-priority lateness): no ship mode or commit
-    * date in the testdata, so "late" = shipped >90 days after the order
-    * date, bucketed by line status instead of ship mode; counts split into
-    * critical (URGENT/HIGH) vs other order priorities.
-    */
-  private val qLateLines: Q = (s, dir) => {
-    val crit = col("o_orderpriority") === "1-URGENT" || col("o_orderpriority") === "2-HIGH"
-    Tables.lineitem(s, dir)
-      .filter(col("l_shipdate") >= lit("1997-01-01") && col("l_shipdate") < lit("1998-01-01"))
-      .join(Tables.orders(s, dir).select(col("o_orderkey"), col("o_orderdate"),
-          col("o_orderpriority")),
-        col("l_orderkey") === col("o_orderkey"))
-      .filter(col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 90 DAYS"))
-      .groupBy(col("l_linestatus"))
-      .agg(sum(when(crit, lit(1L)).otherwise(lit(0L))).as("high_line_count"),
-        sum(when(crit, lit(0L)).otherwise(lit(1L))).as("low_line_count"))
-      .orderBy("l_linestatus")
-  }
-
-  private val lateLinesSql =
-    """SELECT l_linestatus,
-      |  CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-      |  CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
-      |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-      |WHERE l_shipdate >= '1997-01-01' AND l_shipdate < '1998-01-01'
-      |  AND l_shipdate > o_orderdate + INTERVAL 90 DAY
-      |GROUP BY 1 ORDER BY 1""".stripMargin
-
-  /** TPC-H Q13 shape (customer order-count distribution): left outer join
-    * with a join-side filter (priority stands in for the comment LIKE),
-    * then a second aggregation over the first — count(col) counts only
-    * non-null matches on both sides.
-    */
-  private val qCustDistribution: Q = (s, dir) => {
-    val o = Tables.orders(s, dir)
-      .filter(col("o_orderpriority") =!= "4-NOT SPECIFIED")
-      .select(col("o_orderkey"), col("o_custkey"))
-    Tables.customer(s, dir).select(col("c_custkey"))
-      .join(o, col("c_custkey") === col("o_custkey"), "left_outer")
-      .groupBy(col("c_custkey"))
-      .agg(count(col("o_orderkey")).as("c_count"))
-      .groupBy(col("c_count"))
-      .agg(count(lit(1)).as("custdist"))
-      .orderBy(col("custdist").desc, col("c_count").desc)
-  }
-
-  private val custDistributionSql =
-    """SELECT c_count, CAST(COUNT(*) AS BIGINT) AS custdist
-      |FROM (
-      |  SELECT c_custkey, CAST(COUNT(o_orderkey) AS BIGINT) AS c_count
-      |  FROM customer
-      |  LEFT OUTER JOIN orders ON c_custkey = o_custkey
-      |    AND o_orderpriority <> '4-NOT SPECIFIED'
-      |  GROUP BY c_custkey) c
-      |GROUP BY c_count ORDER BY custdist DESC, c_count DESC""".stripMargin
-
-  /** TPC-H Q15 shape (top supplier): quarterly revenue per supplier, keep
-    * the max — revenue stays DECIMAL through the max-equality (exact in
-    * both engines), cast to double only in the output projection.
-    */
-  private val qTopSupplier: Q = (s, dir) => {
-    val rev = Tables.lineitem(s, dir)
-      .filter(col("l_shipdate") >= lit("1997-01-01") && col("l_shipdate") < lit("1997-04-01"))
-      .groupBy(col("l_suppkey"))
-      .agg(sum(Exact.dec(col("l_extendedprice")) *
-          (lit(1).cast(org.apache.spark.sql.types.DecimalType(8, 4)) -
-            Exact.frac(col("l_discount")))).as("total_revenue"))
-    val maxRev = rev.agg(max(col("total_revenue")).as("max_revenue"))
-    rev.crossJoin(broadcast(maxRev))
-      .filter(col("total_revenue") === col("max_revenue"))
-      .join(broadcast(Tables.supplier(s, dir)), col("l_suppkey") === col("s_suppkey"))
-      .select(col("s_suppkey"), col("s_name"),
-        col("total_revenue").cast("double").as("total_revenue"))
-      .orderBy("s_suppkey")
-  }
-
-  private val topSupplierSql =
-    """WITH rev AS (
-      |  SELECT l_suppkey,
-      |    SUM(CAST(l_extendedprice AS DECIMAL(18,4)) *
-      |      (CAST(1 AS DECIMAL(8,4)) - CAST(l_discount AS DECIMAL(8,4)))) AS total_revenue
-      |  FROM lineitem
-      |  WHERE l_shipdate >= '1997-01-01' AND l_shipdate < '1997-04-01'
-      |  GROUP BY 1)
-      |SELECT s_suppkey, s_name, CAST(total_revenue AS DOUBLE) AS total_revenue
-      |FROM rev JOIN supplier ON l_suppkey = s_suppkey
-      |WHERE total_revenue = (SELECT MAX(total_revenue) FROM rev)
-      |ORDER BY s_suppkey""".stripMargin
-
-  /** TPC-H Q16 shape (supplier counts by part attributes): lineitem is the
-    * part↔supplier bridge; the complaints NOT-IN subquery becomes an
-    * anti join against negative-balance suppliers; COUNT(DISTINCT) after
-    * the anti join.
-    */
-  private val qSupplierCnt: Q = (s, dir) => {
-    val p = Tables.part(s, dir)
-      .filter(col("p_brand") =!= "Brand#5" && col("p_type") =!= "PROMO" &&
-        col("p_size").isin(1, 14, 23, 45))
-      .select(col("p_partkey"), col("p_brand"), col("p_type"), col("p_size"))
-    val badSupp = Tables.supplier(s, dir).filter(col("s_acctbal") < 0.0)
-      .select(col("s_suppkey"))
-    Tables.lineitem(s, dir).select(col("l_partkey"), col("l_suppkey"))
-      .join(broadcast(p), col("l_partkey") === col("p_partkey"))
-      .join(broadcast(badSupp), col("l_suppkey") === col("s_suppkey"), "left_anti")
-      .groupBy(col("p_brand"), col("p_type"), col("p_size"))
-      .agg(countDistinct(col("l_suppkey")).as("supplier_cnt"))
-      .orderBy(col("supplier_cnt").desc, col("p_brand").asc, col("p_type").asc,
-        col("p_size").asc)
-  }
-
-  private val supplierCntSql =
-    """SELECT p_brand, p_type, p_size,
-      |  CAST(COUNT(DISTINCT l_suppkey) AS BIGINT) AS supplier_cnt
-      |FROM lineitem JOIN part ON l_partkey = p_partkey
-      |WHERE p_brand <> 'Brand#5' AND p_type <> 'PROMO' AND p_size IN (1, 14, 23, 45)
-      |  AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0.0)
-      |GROUP BY 1, 2, 3
-      |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin
-
-  /** TPC-H Q17 shape (small-quantity revenue): the correlated per-part
-    * average-quantity subquery becomes a join against the re-aggregated
-    * lineitem; the 0.2× threshold and the ÷7 are double steps applied
-    * identically on both sides.
-    */
-  private val qSmallQtyRevenue: Q = (s, dir) => {
-    val p = Tables.part(s, dir)
-      .filter(col("p_brand") === "Brand#7" && col("p_type") === "SMALL")
-      .select(col("p_partkey"))
-    // restrict the per-part aggregate to the probed parts BEFORE grouping:
-    // at 100 TB the correlated subquery only ever touches ~a dozen parts,
-    // so aggregating all parts first would be a full-corpus shuffle for a
-    // tiny probe (the semi join pushes into the scan as a runtime filter)
-    val avgQty = Tables.lineitem(s, dir)
-      .join(broadcast(p), col("l_partkey") === col("p_partkey"), "left_semi")
-      .groupBy(col("l_partkey").as("aq_partkey"))
-      .agg(Exact.avgExact(col("l_quantity")).as("avg_qty"))
-    Tables.lineitem(s, dir)
-      .join(broadcast(p), col("l_partkey") === col("p_partkey"))
-      .join(avgQty, col("l_partkey") === col("aq_partkey"))
-      .filter(col("l_quantity") < lit(0.2) * col("avg_qty"))
-      .agg((Exact.sumExact(col("l_extendedprice")) / lit(7.0)).as("avg_yearly"))
-  }
-
-  private val smallQtyRevenueSql =
-    """SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) / 7.0 AS avg_yearly
-      |FROM lineitem
-      |JOIN part ON l_partkey = p_partkey
-      |WHERE p_brand = 'Brand#7' AND p_type = 'SMALL'
-      |  AND l_quantity < 0.2 * (
-      |    SELECT CAST(SUM(CAST(l2.l_quantity AS DECIMAL(18,4))) AS DOUBLE) / COUNT(*)
-      |    FROM lineitem l2 WHERE l2.l_partkey = part.p_partkey)""".stripMargin
-
-  /** TPC-H Q20 shape (suppliers with excess shipments): availqty doesn't
-    * exist, so the nested subquery selects suppliers whose 1997 shipped
-    * quantity of SMALL-type parts exceeds a threshold; the outer query
-    * keeps one nation's suppliers via semi join.
-    */
-  private val qExcessSuppliers: Q = (s, dir) => {
-    val smallParts = Tables.part(s, dir).filter(col("p_type") === "SMALL")
-      .select(col("p_partkey"))
-    val shippers = Tables.lineitem(s, dir)
-      .filter(col("l_shipdate") >= lit("1997-01-01") && col("l_shipdate") < lit("1998-01-01"))
-      .join(broadcast(smallParts), col("l_partkey") === col("p_partkey"), "left_semi")
-      .groupBy(col("l_suppkey"))
-      .agg(Exact.sumExact(col("l_quantity")).as("shipped_qty"))
-      .filter(col("shipped_qty") > 300.0)
-      .select(col("l_suppkey"))
-    Tables.supplier(s, dir)
-      .join(broadcast(Tables.nation(s, dir).filter(col("n_name") === "NATION_4")),
-        col("s_nationkey") === col("n_nationkey"))
-      .join(shippers, col("s_suppkey") === col("l_suppkey"), "left_semi")
-      .select(col("s_name"), col("s_acctbal"))
-      .orderBy("s_name")
-  }
-
-  private val excessSuppliersSql =
-    """SELECT s_name, s_acctbal
-      |FROM supplier JOIN nation ON s_nationkey = n_nationkey
-      |WHERE n_name = 'NATION_4'
-      |  AND s_suppkey IN (
-      |    SELECT l_suppkey FROM lineitem
-      |    WHERE l_shipdate >= '1997-01-01' AND l_shipdate < '1998-01-01'
-      |      AND l_partkey IN (SELECT p_partkey FROM part WHERE p_type = 'SMALL')
-      |    GROUP BY l_suppkey
-      |    HAVING CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) > 300.0)
-      |ORDER BY s_name""".stripMargin
-
-  /** TPC-H Q21 shape (suppliers who kept orders waiting): no commit/receipt
-    * dates, so "kept waiting" = the supplier is the UNIQUE latest shipper
-    * of a multi-supplier F-status order. The EXISTS / NOT-EXISTS pair
-    * becomes per-order distinct-supplier counts (overall and at the max
-    * ship date) computed in one aggregation pass each — timestamps compare
-    * exactly so the max-equality is deterministic.
-    */
-  private val qWaitingSuppliers: Q = (s, dir) => {
-    val lf = Tables.lineitem(s, dir)
-      .select(col("l_orderkey"), col("l_suppkey"), col("l_shipdate"))
-      .join(Tables.orders(s, dir).filter(col("o_orderstatus") === "F")
-          .select(col("o_orderkey")),
-        col("l_orderkey") === col("o_orderkey"), "left_semi")
-    val perOrder = lf.groupBy(col("l_orderkey").as("agg_orderkey"))
-      .agg(max(col("l_shipdate")).as("max_ship"),
-        countDistinct(col("l_suppkey")).as("nsupp"))
-    val late = lf.join(perOrder,
-        col("l_orderkey") === col("agg_orderkey") && col("l_shipdate") === col("max_ship"))
-      .select(col("l_orderkey"), col("l_suppkey"), col("nsupp")).distinct()
-    val nLate = late.groupBy(col("l_orderkey").as("nl_orderkey"))
-      .agg(count(lit(1)).as("nlate"))
-    late.join(nLate, col("l_orderkey") === col("nl_orderkey"))
-      .filter(col("nlate") === 1 && col("nsupp") > 1)
-      .join(broadcast(Tables.supplier(s, dir)), col("l_suppkey") === col("s_suppkey"))
-      .groupBy(col("s_name"))
-      .agg(countDistinct(col("l_orderkey")).as("numwait"))
-      .orderBy(col("numwait").desc, col("s_name").asc)
-      .limit(100)
-  }
-
-  private val waitingSuppliersSql =
-    """SELECT s_name, CAST(COUNT(DISTINCT l1.l_orderkey) AS BIGINT) AS numwait
-      |FROM lineitem l1
-      |JOIN supplier ON l1.l_suppkey = s_suppkey
-      |JOIN orders ON l1.l_orderkey = o_orderkey AND o_orderstatus = 'F'
-      |WHERE l1.l_shipdate = (SELECT MAX(l2.l_shipdate) FROM lineitem l2
-      |                       WHERE l2.l_orderkey = l1.l_orderkey)
-      |  AND EXISTS (SELECT 1 FROM lineitem l3
-      |              WHERE l3.l_orderkey = l1.l_orderkey AND l3.l_suppkey <> l1.l_suppkey)
-      |  AND NOT EXISTS (SELECT 1 FROM lineitem l4
-      |                  WHERE l4.l_orderkey = l1.l_orderkey
-      |                    AND l4.l_suppkey <> l1.l_suppkey
-      |                    AND l4.l_shipdate = (SELECT MAX(l5.l_shipdate) FROM lineitem l5
-      |                                         WHERE l5.l_orderkey = l1.l_orderkey))
-      |GROUP BY s_name ORDER BY numwait DESC, s_name LIMIT 100""".stripMargin
-
-  /** PageRank (operators.PageRank) over the supplier→customer shipment
-    * graph (node ids disambiguated by even/odd). 5 iterations of EXACT
-    * fixed-point arithmetic (scale 10¹², damping 850‰, integer division)
-    * make the ranks engine-independent, so the oracle replays the same
-    * recurrence as 5 generated chained CTEs over identical BIGINT math and
-    * the hash must match bit-for-bit — a fully-checked iterative graph
-    * computation, not a bound check.
-    */
-  private val qPageRank: Q = (s, dir) =>
-    operators.PageRank.run(suppCustEdges(s, dir), iters = 5, dedup = true)
-      .orderBy(col("r").desc, col("node").asc)
-      .limit(50)
-
-  /** Generated, not hand-written: the iteration count and constants come
-    * from the same values the Spark side uses, so the two cannot drift.
-    */
-  private val pageRankSql: String = {
-    val scale = 1000000000000L
-    val damping = 850L
-    val iters = 5
-    val iterCtes = (1 to iters).map { i =>
-      s"""it$i AS (
-         |  SELECT n.node, (SELECT b FROM params) + COALESCE(c.cs, 0) AS r
-         |  FROM nodes n LEFT JOIN (
-         |    SELECT e.dst AS node, SUM((p.r * $damping) // (1000 * od.od)) AS cs
-         |    FROM it${i - 1} p JOIN edges e ON p.node = e.src
-         |    JOIN outdeg od ON od.src = e.src
-         |    GROUP BY e.dst) c USING (node))""".stripMargin
-    }.mkString(",\n")
-    s"""WITH edges AS (
-       |  SELECT DISTINCT l_suppkey * 2 AS src, o_custkey * 2 + 1 AS dst
-       |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-       |), nodes AS (
-       |  SELECT src AS node FROM edges UNION SELECT dst FROM edges
-       |), outdeg AS (
-       |  SELECT src, COUNT(*) AS od FROM edges GROUP BY src
-       |), params AS (
-       |  SELECT ($scale * ${1000 - damping}) // (1000 * COUNT(*)) AS b,
-       |         $scale // COUNT(*) AS r0
-       |  FROM nodes
-       |), it0 AS (
-       |  SELECT node, (SELECT r0 FROM params) AS r FROM nodes
-       |),
-       |$iterCtes
-       |SELECT node, CAST(r AS BIGINT) AS r FROM it$iters
-       |ORDER BY r DESC, node LIMIT 50""".stripMargin
-  }
-
-  /** Distributed connected components on the part co-occurrence graph with
-    * the single-task shortcut DISABLED (`maxLocalEdges = 0`), so the
-    * declared query exercises the pointer-jumping RDD loop — the path that
-    * carries a 100 TB edge list — at every scale point. (The adaptive
-    * default would solve graphs under ~2M edges in one task, which is what
-    * `q_dedup_clusters` keeps; this query exists so the distributed loop
-    * itself is oracle-gated and scale-measured, r5 verdict task 3.) Output
-    * is the component size profile; the oracle computes the same closure
-    * with a recursive CTE and must match exactly.
-    */
-  private val qCcCopurchase: Q = (s, dir) =>
-    graft.operators.ConnectedComponents(
-        coPurchaseEdges(s, dir), "a", "b", maxLocalEdges = 0L)
-      .groupBy(col("component").cast("long").as("component"))
-      .agg(count(lit(1)).as("n_nodes"))
-      .orderBy("component")
-
-  private val ccCopurchaseSql =
-    """WITH RECURSIVE pairs AS (
-      |  SELECT DISTINCT x.l_partkey AS a, y.l_partkey AS b
-      |  FROM lineitem x JOIN lineitem y ON x.l_orderkey = y.l_orderkey
-      |  WHERE x.l_partkey < y.l_partkey
-      |),
-      |edges AS (SELECT a AS u, b AS v FROM pairs
-      |          UNION SELECT b AS u, a AS v FROM pairs),
-      |reach(u, v) AS (SELECT u, v FROM edges
-      |                UNION SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u),
-      |lbl AS (SELECT u, LEAST(u, MIN(v)) AS component FROM reach GROUP BY u)
-      |SELECT CAST(component AS BIGINT) AS component,
-      |  COUNT(*) AS n_nodes
-      |FROM lbl GROUP BY component ORDER BY component""".stripMargin
-
-  /** Co-purchase pairs tagged with an ingest wave (70/30 split by order
-    * key), the input for incremental component maintenance — same
-    * build-once [[Fixtures]] discipline as [[coPurchaseEdges]], kept as a
-    * separate fixture because the wave tag needs the order key, which the
-    * plain edge fixture deliberately drops.
-    */
-  private def coPurchaseWaves(s: SparkSession, dir: String): DataFrame = {
-    val fx = Fixtures.getOrBuild(s"copurchase-waves:$dir") { out =>
-      val li = Tables.lineitem(s, dir)
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-      li.as("x").join(li.as("y"), col("x.ok") === col("y.ok"))
-        .filter(col("x.pk") < col("y.pk"))
-        .select(col("x.pk").as("a"), col("y.pk").as("b"),
-          when(pmod(col("x.ok"), lit(10)) < 7, lit(0)).otherwise(lit(1))
-            .as("wave"))
-        .write.parquet(s"$out/edges")
-    }
-    s.read.parquet(s"$fx/edges")
-  }
-
-  /** Incremental connected components: wave 0 of the co-purchase pairs is
-    * labeled from scratch, wave 1 is MERGED into those labels via
-    * [[graft.operators.ConnectedComponents.merge]] — the collapsed-graph
-    * maintenance path whose per-wave cost tracks the wave, not the
-    * accumulated edge history (at 100 TB the historical pair list is never
-    * even stored, only the label table). The oracle is the recursive-CTE
-    * closure over ALL pairs, so the hash check IS the incremental ≡
-    * from-scratch equivalence.
-    */
-  private val qCcIncremental: Q = (s, dir) => {
-    val waves = coPurchaseWaves(s, dir)
-    val prev = graft.operators.ConnectedComponents(
-      waves.filter(col("wave") === 0), "a", "b")
-    graft.operators.ConnectedComponents
-      .merge(prev, waves.filter(col("wave") === 1), "a", "b")
-      .groupBy(col("component").cast("long").as("component"))
-      .agg(count(lit(1)).as("n_nodes"))
-      .orderBy("component")
-  }
-
-  /** Remaining ranking/navigation window functions in one query:
-    * dense_rank, cume_dist, nth_value over an explicit ROWS frame.
-    */
-  private val qWindowMisc: Q = (s, dir) => {
-    val w = Window.partitionBy(col("o_orderstatus"))
-      .orderBy(col("o_totalprice").asc, col("o_orderkey").asc)
-    val wf = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    Tables.orders(s, dir)
-      .filter(col("o_custkey") <= 100)
-      .select(col("o_orderkey"), col("o_orderstatus"),
-        dense_rank().over(w).cast("long").as("dr"),
-        cume_dist().over(w).as("cd"),
-        nth_value(col("o_orderkey"), 3).over(wf).as("third_ok"))
-      .orderBy("o_orderkey")
-  }
-
-  private val windowMiscSql =
-    """SELECT o_orderkey, o_orderstatus,
-      |  CAST(dense_rank() OVER w AS BIGINT) AS dr,
-      |  cume_dist() OVER w AS cd,
-      |  nth_value(o_orderkey, 3) OVER
-      |    (w ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS third_ok
-      |FROM orders WHERE o_custkey <= 100
-      |WINDOW w AS (PARTITION BY o_orderstatus ORDER BY o_totalprice, o_orderkey)
-      |ORDER BY o_orderkey""".stripMargin
-
-  private val qRollupOrders: Q = (s, dir) =>
-    Tables.orders(s, dir)
-      .withColumn("order_year", year(col("o_orderdate")).cast("long"))
-      .rollup(col("order_year"), col("o_orderstatus"))
-      .agg(count(lit(1)).as("n"), Exact.sumExact(col("o_totalprice")).as("total"))
-      .orderBy(col("order_year").asc_nulls_first, col("o_orderstatus").asc_nulls_first)
-
-  private val rollupOrdersSql =
-    """SELECT CAST(year(o_orderdate) AS BIGINT) AS order_year, o_orderstatus,
-      |  COUNT(*) AS n,
-      |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total
-      |FROM orders
-      |GROUP BY ROLLUP(CAST(year(o_orderdate) AS BIGINT), o_orderstatus)
-      |ORDER BY order_year NULLS FIRST, o_orderstatus NULLS FIRST""".stripMargin
-
-  private val qRunningRevenue: Q = (s, dir) => {
-    val w = Window.partitionBy(col("l_suppkey"))
-      .orderBy(col("l_shipdate").asc, col("l_orderkey").asc, col("l_linenumber").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    Tables.lineitem(s, dir)
-      .filter(col("l_suppkey") <= 5)
-      .withColumn("running",
-        sum(Exact.dec(col("l_extendedprice"))).over(w).cast("double"))
-      .select(col("l_suppkey"), col("l_orderkey"), col("l_linenumber"), col("running"))
-      .orderBy("l_suppkey", "l_orderkey", "l_linenumber")
-  }
-
-  private val runningRevenueSql =
-    """SELECT l_suppkey, l_orderkey, l_linenumber,
-      |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) OVER (
-      |    PARTITION BY l_suppkey
-      |    ORDER BY l_shipdate, l_orderkey, l_linenumber
-      |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running
-      |FROM lineitem WHERE l_suppkey <= 5
-      |ORDER BY l_suppkey, l_orderkey, l_linenumber""".stripMargin
-
-  private val qOrderGaps: Q = (s, dir) => {
-    val w = Window.partitionBy(col("o_custkey"))
-      .orderBy(col("o_orderdate").asc, col("o_orderkey").asc)
-    Tables.orders(s, dir)
-      .filter(col("o_custkey") <= 50)
-      .select(col("o_custkey"), col("o_orderkey"),
-        lag(col("o_orderkey"), 1).over(w).as("prev_order"),
-        lead(col("o_orderkey"), 1).over(w).as("next_order"))
-      .orderBy("o_custkey", "o_orderkey")
-  }
-
-  private val orderGapsSql =
-    """SELECT o_custkey, o_orderkey,
-      |  lag(o_orderkey) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS prev_order,
-      |  lead(o_orderkey) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS next_order
-      |FROM orders WHERE o_custkey <= 50
-      |ORDER BY o_custkey, o_orderkey""".stripMargin
-
-  private val qSetOps: Q = (s, dir) => {
-    val o = Tables.orders(s, dir)
-    val f = o.filter(col("o_orderstatus") === "F").select(col("o_custkey"))
-    val open = o.filter(col("o_orderstatus") === "O").select(col("o_custkey"))
-    val urgent = o.filter(col("o_orderpriority") === "1-URGENT").select(col("o_custkey"))
-    f.intersect(open).except(urgent).orderBy("o_custkey")
-  }
-
-  /** Bag-semantics set ops (INTERSECT ALL / EXCEPT ALL keep multiplicity). */
-  private val qSetOpsAll: Q = (s, dir) => {
-    val o = Tables.orders(s, dir)
-    val f = o.filter(col("o_orderstatus") === "F").select(col("o_custkey"))
-    val open = o.filter(col("o_orderstatus") === "O").select(col("o_custkey"))
-    val urgent = o.filter(col("o_orderpriority") === "1-URGENT").select(col("o_custkey"))
-    f.intersectAll(open).exceptAll(urgent)
-      .groupBy(col("o_custkey")).agg(count(lit(1)).as("multiplicity"))
-      .orderBy("o_custkey")
-  }
-
-  private val setOpsAllSql =
-    """SELECT o_custkey, COUNT(*) AS multiplicity FROM (
-      |  (SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
-      |   INTERSECT ALL
-      |   SELECT o_custkey FROM orders WHERE o_orderstatus = 'O')
-      |  EXCEPT ALL
-      |  SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT'
-      |) t GROUP BY o_custkey ORDER BY o_custkey""".stripMargin
-
-  /** NOT IN (null-aware anti join) via the SQL surface. */
-  private val qNotIn: Q = (s, dir) => {
-    Tables.customer(s, dir).createOrReplaceTempView("customer_ni")
-    Tables.nation(s, dir).createOrReplaceTempView("nation_ni")
-    s.sql(
-      """SELECT c_custkey, c_name FROM customer_ni
-        |WHERE c_nationkey NOT IN (SELECT n_nationkey FROM nation_ni WHERE n_regionkey <= 1)
-        |ORDER BY c_custkey""".stripMargin)
-  }
-
-  private val notInSql =
-    """SELECT c_custkey, c_name FROM customer
-      |WHERE c_nationkey NOT IN (SELECT n_nationkey FROM nation WHERE n_regionkey <= 1)
-      |ORDER BY c_custkey""".stripMargin
-
-  private val setOpsSql =
-    """SELECT o_custkey FROM (
-      |  (SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
-      |   INTERSECT
-      |   SELECT o_custkey FROM orders WHERE o_orderstatus = 'O')
-      |  EXCEPT
-      |  SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT'
-      |) t ORDER BY o_custkey""".stripMargin
-
-  private val qMonthlyOrders: Q = (s, dir) =>
-    Tables.orders(s, dir)
-      .groupBy(monthSid(col("o_orderdate")).as("month_sid"))
-      .agg(
-        count(lit(1)).as("n_orders"),
-        Exact.sumExact(col("o_totalprice")).as("total"),
-        Exact.avgExact(col("o_totalprice")).as("avg_price"))
-      .orderBy("month_sid")
-
-  private val monthlyOrdersSql =
-    s"""SELECT $monthSidSql AS month_sid, COUNT(*) AS n_orders,
-       |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total,
-       |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) / COUNT(*) AS avg_price
-       |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin
-
-  /** The WHOLE reference job as a correctness-gated query: run the
-    * incremental partition-by-partition backup (discover → copy oldest-first
-    * → mark complete, tuned ORC output), then aggregate the READ-BACK files
-    * per partition. The oracle aggregates the source directly — they match
-    * iff every partition was copied exactly once and read back losslessly.
-    */
-  private val qEtlBackup: Q = (s, dir) => {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-etl-q").toString
-    val cfg = etl.JobConfig(tableName = "orders", numMappers = 4)
-    val job = new etl.IncrementalBackup(
-      s, cfg, new etl.StatusStore(s, s"$tmp/status"), s"$tmp/dest")
-    job.drain(etl.EtlRunner.RelationSource(Tables.orders(s, dir)))
-    job.readBack()
-      .groupBy(col("pid").cast("long").as("month_sid"))
-      .agg(count(lit(1)).as("n_rows"),
-        Exact.sumExact(col("o_totalprice")).as("total"))
-      .orderBy("month_sid")
-  }
-
-  private val etlBackupSql =
-    s"""SELECT $monthSidSql AS month_sid, COUNT(*) AS n_rows,
-       |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total
-       |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin
-
-  /** The backfill twin of [[qEtlBackup]]: ONE `partitionBy(pid)` job writes
-    * every pending partition (`IncrementalBackup.runBulk`) instead of a job
-    * per partition. Same oracle — the at-rest layout and read-back are
-    * identical by contract; benched separately so the steady-state loop and
-    * the first-load path are each regression-tracked (the loop's ~84
-    * jobs × fixed overhead dominates at sf0.1 and would otherwise mask
-    * movement in either path).
-    */
-  private val qEtlBulk: Q = (s, dir) => {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-etl-qb").toString
-    val cfg = etl.JobConfig(tableName = "orders", numMappers = 4)
-    val job = new etl.IncrementalBackup(
-      s, cfg, new etl.StatusStore(s, s"$tmp/status"), s"$tmp/dest")
-    job.runBulk(Tables.orders(s, dir))
-    job.readBack()
-      .groupBy(col("pid").cast("long").as("month_sid"))
-      .agg(count(lit(1)).as("n_rows"),
-        Exact.sumExact(col("o_totalprice")).as("total"))
-      .orderBy("month_sid")
-  }
-
-  /** The manifest-pruned steady-state twin of [[qEtlBackup]] (r5 verdict
-    * task 1): the source lands as a TIME-ORDERED lake table (range-
-    * partitioned by order date — the ingest reality), a StatsStore manifest
-    * over the DERIVED month key is built once, and then each month's copy
-    * opens only the files whose [min, max] month interval contains it — the
-    * PRUNED lake drain (`IncrementalBackup.drain` of a `LakeSource`). Same
-    * oracle as the unpruned loop: the manifest is a superset guarantee, so
-    * results are identical; only the IO per iteration changes (file subset
-    * instead of full history).
-    */
-  private val qEtlPruned: Q = (s, dir) => {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-etl-qp").toString
-    // the time-ordered lake layout is the build-once INPUT (in production
-    // it's what ingest already landed); the timed operator is the drain
-    val src = Fixtures.getOrBuild(s"etllake:$dir") { f =>
-      Tables.orders(s, dir)
-        .repartitionByRange(8, col("o_orderdate"))
-        .sortWithinPartitions("o_orderdate")
-        .write.parquet(s"$f/src")
-    }
-    val cfg = etl.JobConfig(tableName = "orders", numMappers = 4, pruned = true)
-    val job = new etl.IncrementalBackup(
-      s, cfg, new etl.StatusStore(s, s"$tmp/status"), s"$tmp/dest")
-    job.drain(etl.EtlRunner.LakeSource(s"$src/src"))
-    job.readBack()
-      .groupBy(col("pid").cast("long").as("month_sid"))
-      .agg(count(lit(1)).as("n_rows"),
-        Exact.sumExact(col("o_totalprice")).as("total"))
-      .orderBy("month_sid")
-  }
-
-  /** The concurrent twin of [[qEtlPruned]]: same lake layout, same manifest,
-    * but pending months drain with `maxParallel = 8` (MAX_PARALLEL) —
-    * independent wave-copy jobs submitted from a worker pool instead of a
-    * sequential loop, so the drain's wall clock is bounded by the widest
-    * copy, not (#months × per-job latency). Same oracle: concurrency only
-    * reorders completions; the at-rest layout and read-back are identical.
-    */
-  private val qEtlConc: Q = (s, dir) => {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-etl-qc").toString
-    val src = Fixtures.getOrBuild(s"etllake:$dir") { f =>
-      Tables.orders(s, dir)
-        .repartitionByRange(8, col("o_orderdate"))
-        .sortWithinPartitions("o_orderdate")
-        .write.parquet(s"$f/src")
-    }
-    val cfg = etl.JobConfig(tableName = "orders", numMappers = 4, pruned = true,
-      maxParallel = 8)
-    val job = new etl.IncrementalBackup(
-      s, cfg, new etl.StatusStore(s, s"$tmp/status"), s"$tmp/dest")
-    job.drain(etl.EtlRunner.LakeSource(s"$src/src"))
-    job.readBack()
-      .groupBy(col("pid").cast("long").as("month_sid"))
-      .agg(count(lit(1)).as("n_rows"),
-        Exact.sumExact(col("o_totalprice")).as("total"))
-      .orderBy("month_sid")
-  }
-
-  /** Land one wave's parquet files in the lake dir — the file-level append
-    * ingest performs (no Spark job; names prefixed so waves' part numbers
-    * can't collide).
-    */
-  private def landWave(srcDir: String, lakeDir: String, prefix: String): Unit = {
-    landWaveListing(srcDir, lakeDir, prefix); ()
-  }
-
-  /** [[landWave]] returning the landed paths — what a journaling ingest
-    * hands to [[graft.sources.IngestLog.record]].
-    */
-  private def landWaveListing(srcDir: String, lakeDir: String,
-      prefix: String): Seq[String] = {
-    val landed = scala.collection.mutable.ArrayBuffer.empty[String]
-    val stream = java.nio.file.Files.list(java.nio.file.Paths.get(srcDir))
-    try stream.forEach { p =>
-      val n = p.getFileName.toString
-      if (n.endsWith(".parquet")) {
-        val dst = java.nio.file.Paths.get(lakeDir, s"$prefix$n")
-        java.nio.file.Files.copy(p, dst)
-        landed += dst.toString
-      }
-    } finally stream.close()
-    landed.toSeq
-  }
-
-  /** The INCREMENTALLY-MAINTAINED-manifest twin of [[qEtlPruned]] (r6
-    * verdict task 4), driven the way steady state actually runs: wave 1
-    * (history) lands, a drain copies it and PERSISTS the manifest; wave 2's
-    * files then land as a file-level append (what ingest does), and the
-    * second drain's manifest refresh lists the directory and reads stats of
-    * ONLY the new files (`StatsStore.collectExprDiff`, committed as a
-    * manifest delta) before copying the new months through the bounded
-    * worker pool. Same oracle as the other ETL
-    * twins — the at-rest layout and read-back are identical by contract;
-    * what changes is the drain-fixed cost, now proportional to NEW data
-    * instead of history size (the r6 verdict's missing #2).
-    */
-  private val qEtlIncr: Q = (s, dir) => {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-etl-qi").toString
-    val waves = Fixtures.getOrBuild(s"etllake2:$dir") { f =>
-      Tables.orders(s, dir).filter(col("o_orderdate") < lit("1996-01-01"))
-        .repartitionByRange(6, col("o_orderdate"))
-        .sortWithinPartitions("o_orderdate")
-        .write.parquet(s"$f/w1")
-      Tables.orders(s, dir).filter(col("o_orderdate") >= lit("1996-01-01"))
-        .repartitionByRange(3, col("o_orderdate"))
-        .sortWithinPartitions("o_orderdate")
-        .write.parquet(s"$f/w2")
-    }
-    val lake = s"$tmp/lake"
-    landWave(s"$waves/w1", { java.nio.file.Files
-      .createDirectories(java.nio.file.Paths.get(lake)); lake }, "w1-")
-    val cfg = etl.JobConfig(tableName = "orders", numMappers = 4, pruned = true,
-      maxParallel = 4)
-    val job = new etl.IncrementalBackup(
-      s, cfg, new etl.StatusStore(s, s"$tmp/status"), s"$tmp/dest")
-    job.drain(etl.EtlRunner.LakeSource(lake))
-    landWave(s"$waves/w2", lake, "w2-")
-    job.drain(etl.EtlRunner.LakeSource(lake))
-    job.readBack()
-      .groupBy(col("pid").cast("long").as("month_sid"))
-      .agg(count(lit(1)).as("n_rows"),
-        Exact.sumExact(col("o_totalprice")).as("total"))
-      .orderBy("month_sid")
-  }
-
-  /** [[qEtlIncr]] on a PARTITIONED lake (r7 verdict task 1): each wave
-    * lands under its own `ingest=N/` partition directory — the layout real
-    * lakes use (`date=…/`) and this repo's own backup writer produces
-    * (`pid=…/`). Same oracle as every ETL twin: the manifest's RECURSIVE
-    * listing plus basePath subset reads make the partitioned drain
-    * result-identical to the flat one. This hash is exactly what the r7
-    * hazard would have failed — nested files evicted as dead on the second
-    * refresh, their months silently missing from the pruned copies.
-    */
-  private val qEtlIncrPart: Q = (s, dir) => {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-etl-qipt").toString
-    val waves = Fixtures.getOrBuild(s"etllake2:$dir") { f =>
-      Tables.orders(s, dir).filter(col("o_orderdate") < lit("1996-01-01"))
-        .repartitionByRange(6, col("o_orderdate"))
-        .sortWithinPartitions("o_orderdate")
-        .write.parquet(s"$f/w1")
-      Tables.orders(s, dir).filter(col("o_orderdate") >= lit("1996-01-01"))
-        .repartitionByRange(3, col("o_orderdate"))
-        .sortWithinPartitions("o_orderdate")
-        .write.parquet(s"$f/w2")
-    }
-    val lake = s"$tmp/lake"
-    def part(n: Int): String = {
-      val p = s"$lake/ingest=$n"
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(p))
-      p
-    }
-    landWave(s"$waves/w1", part(1), "w1-")
-    val cfg = etl.JobConfig(tableName = "orders", numMappers = 4, pruned = true,
-      maxParallel = 4)
-    val job = new etl.IncrementalBackup(
-      s, cfg, new etl.StatusStore(s, s"$tmp/status"), s"$tmp/dest")
-    job.drain(etl.EtlRunner.LakeSource(lake))
-    landWave(s"$waves/w2", part(2), "w2-")
-    job.drain(etl.EtlRunner.LakeSource(lake))
-    job.readBack()
-      .groupBy(col("pid").cast("long").as("month_sid"))
-      .agg(count(lit(1)).as("n_rows"),
-        Exact.sumExact(col("o_totalprice")).as("total"))
-      .orderBy("month_sid")
-  }
-
-  /** The INGEST-JOURNALED twin of [[qEtlIncr]] (r9): each wave records the
-    * files it landed in the lake's `_ingest_log/` sidecar, so the second
-    * drain's manifest refresh consumes the journal and performs ZERO
-    * full-lake listings (spec-asserted via the listing counter in
-    * `EtlSpec`; here the result is pinned against the same oracle as every
-    * ETL twin). At 100 TB this is the difference between a per-drain
-    * multi-minute object-store LIST storm and an O(new waves) journal read.
-    */
-  private val qEtlJournal: Q = (s, dir) => {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-etl-qj").toString
-    val waves = Fixtures.getOrBuild(s"etllake2:$dir") { f =>
-      Tables.orders(s, dir).filter(col("o_orderdate") < lit("1996-01-01"))
-        .repartitionByRange(6, col("o_orderdate"))
-        .sortWithinPartitions("o_orderdate")
-        .write.parquet(s"$f/w1")
-      Tables.orders(s, dir).filter(col("o_orderdate") >= lit("1996-01-01"))
-        .repartitionByRange(3, col("o_orderdate"))
-        .sortWithinPartitions("o_orderdate")
-        .write.parquet(s"$f/w2")
-    }
-    val lake = s"$tmp/lake"
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(lake))
-    graft.sources.IngestLog.record(s, lake,
-      landWaveListing(s"$waves/w1", lake, "w1-"))
-    val cfg = etl.JobConfig(tableName = "orders", numMappers = 4, pruned = true,
-      maxParallel = 4)
-    val job = new etl.IncrementalBackup(
-      s, cfg, new etl.StatusStore(s, s"$tmp/status"), s"$tmp/dest")
-    job.drain(etl.EtlRunner.LakeSource(lake))
-    graft.sources.IngestLog.record(s, lake,
-      landWaveListing(s"$waves/w2", lake, "w2-"))
-    job.drain(etl.EtlRunner.LakeSource(lake))
-    job.readBack()
-      .groupBy(col("pid").cast("long").as("month_sid"))
-      .agg(count(lit(1)).as("n_rows"),
-        Exact.sumExact(col("o_totalprice")).as("total"))
-      .orderBy("month_sid")
-  }
-
-  /** The SKIP_LATEST_MONTHS twin (r9): the reference ships this knob on
-    * every fact table (`agg_geo_lucid_daily.yaml:10`, applied
-    * `sqoop_table.py:145`) — the newest N distinct months are not copied
-    * until newer ones arrive. Two drains with skip=2: drain 1 defers the
-    * newest two 1995 months, wave 2 slides the window and drain 2 promotes
-    * them, so the final read-back is everything except the newest two
-    * months of the FULL table — which is what the oracle states directly.
-    * Discovery stays manifest-pruned throughout (scan-free when up to
-    * date; spec-asserted in EtlSpec).
-    */
-  private val qEtlSkip: Q = (s, dir) => {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-etl-qk").toString
-    val waves = Fixtures.getOrBuild(s"etllake2:$dir") { f =>
-      Tables.orders(s, dir).filter(col("o_orderdate") < lit("1996-01-01"))
-        .repartitionByRange(6, col("o_orderdate"))
-        .sortWithinPartitions("o_orderdate")
-        .write.parquet(s"$f/w1")
-      Tables.orders(s, dir).filter(col("o_orderdate") >= lit("1996-01-01"))
-        .repartitionByRange(3, col("o_orderdate"))
-        .sortWithinPartitions("o_orderdate")
-        .write.parquet(s"$f/w2")
-    }
-    val lake = s"$tmp/lake"
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(lake))
-    landWave(s"$waves/w1", lake, "w1-")
-    val cfg = etl.JobConfig(tableName = "orders", numMappers = 4,
-      skipLatestMonths = 2, pruned = true, maxParallel = 4)
-    val job = new etl.IncrementalBackup(
-      s, cfg, new etl.StatusStore(s, s"$tmp/status"), s"$tmp/dest")
-    job.drain(etl.EtlRunner.LakeSource(lake))
-    landWave(s"$waves/w2", lake, "w2-")
-    job.drain(etl.EtlRunner.LakeSource(lake))
-    job.readBack()
-      .groupBy(col("pid").cast("long").as("month_sid"))
-      .agg(count(lit(1)).as("n_rows"),
-        Exact.sumExact(col("o_totalprice")).as("total"))
-      .orderBy("month_sid")
-  }
-
-  private val etlSkipSql =
-    s"""SELECT month_sid, COUNT(*) AS n_rows,
-       |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total
-       |FROM (SELECT $monthSidSql AS month_sid, o_totalprice FROM orders)
-       |WHERE month_sid <= (
-       |  SELECT DISTINCT month_sid
-       |  FROM (SELECT $monthSidSql AS month_sid FROM orders)
-       |  ORDER BY month_sid DESC LIMIT 1 OFFSET 2)
-       |GROUP BY 1 ORDER BY 1""".stripMargin
-
-  // ------------------------------------------------ analytics (extended ops)
-
-  private val qCubeOrders: Q = (s, dir) =>
-    Tables.orders(s, dir)
-      .cube(col("o_orderstatus"), col("o_orderpriority"))
-      .agg(count(lit(1)).as("n"))
-      .orderBy(col("o_orderstatus").asc_nulls_first, col("o_orderpriority").asc_nulls_first)
-
-  private val cubeOrdersSql =
-    """SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n
-      |FROM orders GROUP BY CUBE(o_orderstatus, o_orderpriority)
-      |ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin
-
-  /** GROUPING SETS — exercised through the SQL entry point (`spark.sql`),
-    * the DataFrame API has no grouping-sets builder.
-    */
-  private val qGroupingSets: Q = (s, dir) => {
-    Tables.orders(s, dir).createOrReplaceTempView("orders_gs")
-    s.sql(
-      """SELECT st, yr, COUNT(*) AS n FROM (
-        |  SELECT o_orderstatus AS st, CAST(year(o_orderdate) AS BIGINT) AS yr
-        |  FROM orders_gs) t
-        |GROUP BY GROUPING SETS ((st, yr), (st), (yr), ())
-        |ORDER BY st NULLS FIRST, yr NULLS FIRST""".stripMargin)
-  }
-
-  private val groupingSetsSql =
-    """SELECT st, yr, COUNT(*) AS n FROM (
-      |  SELECT o_orderstatus AS st, CAST(year(o_orderdate) AS BIGINT) AS yr
-      |  FROM orders) t
-      |GROUP BY GROUPING SETS ((st, yr), (st), (yr), ())
-      |ORDER BY st NULLS FIRST, yr NULLS FIRST""".stripMargin
-
-  private val qStringFuncs: Q = (s, dir) =>
-    Tables.part(s, dir).select(
-      col("p_partkey"),
-      upper(col("p_name")).as("uname"),
-      substring(col("p_name"), 1, 8).as("prefix"),
-      regexp_replace(col("p_brand"), lit("Brand#"), lit("B-")).as("brand2"),
-      length(col("p_type")).cast("long").as("type_len"),
-      concat_ws("|", col("p_brand"), col("p_type")).as("tag"),
-      levenshtein(substring(col("p_name"), 1, 5), col("p_brand")).cast("long").as("lev"))
-      .orderBy("p_partkey")
-
-  private val stringFuncsSql =
-    """SELECT p_partkey,
-      |  upper(p_name) AS uname,
-      |  substr(p_name, 1, 8) AS prefix,
-      |  replace(p_brand, 'Brand#', 'B-') AS brand2,
-      |  CAST(length(p_type) AS BIGINT) AS type_len,
-      |  concat_ws('|', p_brand, p_type) AS tag,
-      |  CAST(levenshtein(substr(p_name, 1, 5), p_brand) AS BIGINT) AS lev
-      |FROM part ORDER BY p_partkey""".stripMargin
-
-  private val qDateFuncs: Q = (s, dir) =>
-    Tables.orders(s, dir)
-      .filter(col("o_orderkey") <= 1000)
-      .select(
-        col("o_orderkey"),
-        year(col("o_orderdate")).cast("long").as("yr"),
-        quarter(col("o_orderdate")).cast("long").as("qtr"),
-        month(col("o_orderdate")).cast("long").as("mon"),
-        (col("o_orderdate") + expr("INTERVAL 30 DAYS")).as("due_date"),
-        datediff(lit(java.sql.Timestamp.valueOf("1999-01-01 00:00:00")), col("o_orderdate"))
-          .cast("long").as("days_to_99"))
-      .orderBy("o_orderkey")
-
-  private val dateFuncsSql =
-    """SELECT o_orderkey,
-      |  CAST(year(o_orderdate) AS BIGINT) AS yr,
-      |  CAST(quarter(o_orderdate) AS BIGINT) AS qtr,
-      |  CAST(month(o_orderdate) AS BIGINT) AS mon,
-      |  CAST(o_orderdate + INTERVAL 30 DAY AS TIMESTAMP) AS due_date,
-      |  CAST(date_diff('day', o_orderdate, TIMESTAMP '1999-01-01 00:00:00') AS BIGINT) AS days_to_99
-      |FROM orders WHERE o_orderkey <= 1000 ORDER BY o_orderkey""".stripMargin
-
-  private val qCaseNull: Q = (s, dir) =>
-    Tables.orders(s, dir)
-      .filter(col("o_orderkey") <= 2000)
-      .select(
-        col("o_orderkey"),
-        when(col("o_totalprice") > 100000, "big")
-          .when(col("o_totalprice") > 50000, "mid")
-          .otherwise("small").as("band"),
-        coalesce(nullif(col("o_orderstatus"), lit("P")), lit("pending")).as("st"))
-      .orderBy("o_orderkey")
-
-  private val caseNullSql =
-    """SELECT o_orderkey,
-      |  CASE WHEN o_totalprice > 100000 THEN 'big'
-      |       WHEN o_totalprice > 50000 THEN 'mid'
-      |       ELSE 'small' END AS band,
-      |  coalesce(nullif(o_orderstatus, 'P'), 'pending') AS st
-      |FROM orders WHERE o_orderkey <= 2000 ORDER BY o_orderkey""".stripMargin
-
-  private val qInSubquery: Q = (s, dir) => {
-    val nat = Tables.nation(s, dir)
-      .filter(col("n_regionkey") === 1).select(col("n_nationkey"))
-    Tables.customer(s, dir)
-      .join(broadcast(nat), col("c_nationkey") === col("n_nationkey"), "left_semi")
-      .select(col("c_custkey"), col("c_name"))
-      .orderBy("c_custkey")
-  }
-
-  private val inSubquerySql =
-    """SELECT c_custkey, c_name FROM customer
-      |WHERE c_nationkey IN (SELECT n_nationkey FROM nation WHERE n_regionkey = 1)
-      |ORDER BY c_custkey""".stripMargin
-
-  private val qUnionAll: Q = (s, dir) => {
-    val l = Tables.lineitem(s, dir)
-    val cut = lit(java.sql.Timestamp.valueOf("1998-01-01 00:00:00"))
-    val recent = l.filter(col("l_shipdate") >= cut)
-      .select(lit("recent").as("flag"), col("l_extendedprice").as("v"))
-    val old = l.filter(col("l_shipdate") < cut)
-      .select(lit("old").as("flag"), col("l_extendedprice").as("v"))
-    recent.unionAll(old)
-      .groupBy(col("flag"))
-      .agg(Exact.sumExact(col("v")).as("total"), count(lit(1)).as("n"))
-      .orderBy("flag")
-  }
-
-  private val unionAllSql =
-    """SELECT flag, CAST(SUM(CAST(v AS DECIMAL(18,4))) AS DOUBLE) AS total, COUNT(*) AS n
-      |FROM (
-      |  SELECT 'recent' AS flag, l_extendedprice AS v FROM lineitem
-      |  WHERE l_shipdate >= TIMESTAMP '1998-01-01 00:00:00'
-      |  UNION ALL
-      |  SELECT 'old', l_extendedprice FROM lineitem
-      |  WHERE l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
-      |) t GROUP BY flag ORDER BY flag""".stripMargin
-
-  private val qConditionalAgg: Q = (s, dir) =>
-    Tables.lineitem(s, dir)
-      .groupBy(col("l_returnflag"))
-      .agg(
-        sum(when(col("l_discount") > 0.05, 1).otherwise(0)).cast("long").as("n_highdisc"),
-        sum(when(col("l_tax") > 0.04, 1).otherwise(0)).cast("long").as("n_hightax"),
-        countDistinct(col("l_suppkey")).as("n_supp"))
-      .orderBy("l_returnflag")
-
-  private val conditionalAggSql =
-    """SELECT l_returnflag,
-      |  CAST(SUM(CASE WHEN l_discount > 0.05 THEN 1 ELSE 0 END) AS BIGINT) AS n_highdisc,
-      |  CAST(SUM(CASE WHEN l_tax > 0.04 THEN 1 ELSE 0 END) AS BIGINT) AS n_hightax,
-      |  COUNT(DISTINCT l_suppkey) AS n_supp
-      |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin
-
-  private val qNtile: Q = (s, dir) => {
-    val w = Window.partitionBy(col("o_orderstatus"))
-      .orderBy(col("o_totalprice").asc, col("o_orderkey").asc)
-    Tables.orders(s, dir)
-      .filter(col("o_custkey") <= 100)
-      .select(
-        col("o_orderkey"), col("o_orderstatus"),
-        ntile(4).over(w).cast("long").as("quartile"),
-        percent_rank().over(w).as("pr"))
-      .orderBy("o_orderkey")
-  }
-
-  private val ntileSql =
-    """SELECT o_orderkey, o_orderstatus,
-      |  CAST(ntile(4) OVER w AS BIGINT) AS quartile,
-      |  percent_rank() OVER w AS pr
-      |FROM orders WHERE o_custkey <= 100
-      |WINDOW w AS (PARTITION BY o_orderstatus ORDER BY o_totalprice, o_orderkey)
-      |ORDER BY o_orderkey""".stripMargin
-
-  private val qFirstLast: Q = (s, dir) => {
-    val w = Window.partitionBy(col("o_custkey"))
-      .orderBy(col("o_orderdate").asc, col("o_orderkey").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    Tables.orders(s, dir)
-      .filter(col("o_custkey") <= 50)
-      .select(
-        col("o_custkey"), col("o_orderkey"),
-        first(col("o_orderkey")).over(w).as("first_ok"),
-        last(col("o_orderkey")).over(w).as("last_ok"))
-      .orderBy("o_custkey", "o_orderkey")
-  }
-
-  private val firstLastSql =
-    """SELECT o_custkey, o_orderkey,
-      |  first_value(o_orderkey) OVER w AS first_ok,
-      |  last_value(o_orderkey) OVER w AS last_ok
-      |FROM orders WHERE o_custkey <= 50
-      |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-      |  ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-      |ORDER BY o_custkey, o_orderkey""".stripMargin
-
-  /** Approximate distinct counts (HLL++) next to exact — sketch aggregates
-    * are the 100 TB answer to COUNT(DISTINCT) over high-cardinality keys.
-    * DuckDB's HLL differs bit-wise, so the sketch value itself can't hash-
-    * match; instead the query EMITS the error-bound check as a boolean next
-    * to the exact count. The oracle recomputes the exact count and expects
-    * `within_tol = TRUE` — if the sketch drifts past ±2% the Spark side
-    * emits FALSE and the driver's hash compare goes red.
-    */
-  private val qApproxDistinct: Q = (s, dir) =>
-    Tables.lineitem(s, dir)
-      .groupBy(col("l_returnflag"))
-      .agg(
-        approx_count_distinct(col("l_orderkey"), rsd = 0.01).as("approx_orders"),
-        countDistinct(col("l_orderkey")).as("exact_orders"))
-      .select(
-        col("l_returnflag"),
-        col("exact_orders"),
-        (abs(col("approx_orders") - col("exact_orders")).cast("double") <=
-          col("exact_orders").cast("double") * lit(0.02)).as("within_tol"))
-      .orderBy("l_returnflag")
-
-  private val approxDistinctSql =
-    """SELECT l_returnflag, COUNT(DISTINCT l_orderkey) AS exact_orders,
-      |  TRUE AS within_tol
-      |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin
-
-  /** Left-outer aggregate: customers kept with zero orders (COUNT of a
-    * right-side column, not COUNT(*), so unmatched rows count 0).
-    */
-  private val qOuterJoin: Q = (s, dir) => {
-    val c = Tables.customer(s, dir)
-    val o = Tables.orders(s, dir)
-    c.join(o, c("c_custkey") === o("o_custkey"), "left_outer")
-      .groupBy(col("c_custkey"))
-      .agg(
-        count(col("o_orderkey")).as("n_orders"),
-        Exact.sumExact(coalesce(col("o_totalprice"), lit(0.0))).as("total"))
-      .orderBy("c_custkey")
-  }
-
-  private val outerJoinSql =
-    """SELECT c_custkey, COUNT(o_orderkey) AS n_orders,
-      |  CAST(SUM(CAST(coalesce(o_totalprice, 0.0) AS DECIMAL(18,4))) AS DOUBLE) AS total
-      |FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-      |GROUP BY c_custkey ORDER BY c_custkey""".stripMargin
-
-  /** Exact interpolated percentiles (median / p90) — both engines implement
-    * the linear-interpolation definition, so doubles match bit-for-bit.
-    */
-  /** Deterministic MODE per group — most frequent value with ties to the
-    * SMALLEST value (SQL's MODE leaves ties unspecified; a total tie
-    * order is what makes the answer reproducible across engines and
-    * partitionings — the LabelPropagation argmax discipline). Two hash
-    * aggregates, both map-side combinable: value counts, then a
-    * lexicographic struct-max — never a per-group sort.
-    */
-  private val qModeAgg: Q = (s, dir) =>
-    Tables.lineitem(s, dir)
-      .select(col("l_returnflag").as("g"), col("l_quantity").cast("long").as("v"))
-      .groupBy("g", "v").agg(count(lit(1)).as("c"))
-      .groupBy("g")
-      .agg(max(struct(col("c"), (-col("v")).as("nv"))).as("m"),
-        sum(col("c")).as("n_rows"))
-      .select(col("g"), (-col("m.nv")).as("mode_qty"),
-        col("m.c").as("mode_count"), col("n_rows"))
-      .orderBy("g")
-
-  private val modeAggSql =
-    """WITH c AS (
-      |  SELECT l_returnflag AS g, CAST(l_quantity AS BIGINT) AS v,
-      |         COUNT(*) AS c
-      |  FROM lineitem GROUP BY 1, 2
-      |), r AS (
-      |  SELECT g, v, c, ROW_NUMBER() OVER (PARTITION BY g
-      |    ORDER BY c DESC, v ASC) AS rk,
-      |    SUM(c) OVER (PARTITION BY g) AS n_rows
-      |  FROM c
-      |)
-      |SELECT g, v AS mode_qty, c AS mode_count,
-      |  CAST(n_rows AS BIGINT) AS n_rows
-      |FROM r WHERE rk = 1 ORDER BY g""".stripMargin
-
-  /** Equi-depth histogram (optimizer-statistics flavor, next to
-    * q_histogram's equal-width): decile boundaries from ONE exact-
-    * percentile aggregate, then a map-only bucketing pass against the
-    * broadcast 9-double boundary array — never an NTILE global window
-    * (the SURVEY §7 hazard; at 100 TB swap the boundary pass to
-    * approx_percentile and the shape is unchanged). Boundary ties bucket
-    * by `<=` in both engines, so counts are exact, not approximately
-    * equal — the oracle replays boundaries and buckets identically.
-    */
-  private val qEquidepthHist: Q = (s, dir) => {
-    // ONE percentile aggregate returning all 9 boundaries — nine separate
-    // percentile() exprs would each buffer the column independently
-    val bounds = Tables.orders(s, dir).agg(
-      expr(s"percentile(o_totalprice, array(${(1 to 9)
-        .map(i => s"0.$i").mkString(", ")}))").as("bs"))
-    Tables.orders(s, dir).crossJoin(broadcast(bounds))
-      .select(expr("size(filter(bs, x -> x <= o_totalprice))").as("bucket"),
-        col("o_totalprice"))
-      .groupBy("bucket")
-      .agg(count(lit(1)).as("n"), min(col("o_totalprice")).as("lo"),
-        max(col("o_totalprice")).as("hi"))
-      .orderBy("bucket")
-  }
-
-  private val equidepthHistSql = {
-    val pcts = (1 to 9).map(i => s"0.$i").mkString(", ")
-    s"""WITH bs AS (SELECT percentile_cont([$pcts])
-       |    WITHIN GROUP (ORDER BY o_totalprice) AS b FROM orders)
-       |SELECT CAST(len(list_filter(b, x -> x <= o_totalprice)) AS INT)
-       |    AS bucket,
-       |  COUNT(*) AS n, MIN(o_totalprice) AS lo, MAX(o_totalprice) AS hi
-       |FROM orders, bs GROUP BY 1 ORDER BY 1""".stripMargin
-  }
-
-  private val qPercentiles: Q = (s, dir) =>
-    Tables.orders(s, dir)
-      .groupBy(col("o_orderstatus"))
-      .agg(
-        expr("percentile(o_totalprice, 0.5)").as("median"),
-        expr("percentile(o_totalprice, 0.9)").as("p90"))
-      .orderBy("o_orderstatus")
-
-  private val percentilesSql =
-    """SELECT o_orderstatus,
-      |  percentile_cont(0.5) WITHIN GROUP (ORDER BY o_totalprice) AS median,
-      |  percentile_cont(0.9) WITHIN GROUP (ORDER BY o_totalprice) AS p90
-      |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin
-
-  /** Approximate quantiles (KLL-style sketch via `approx_percentile`) next
-    * to exact — same driver-visible contract as `q_approx_distinct`: the
-    * sketch value can't hash-match across engines, so the query emits the
-    * tolerance check as booleans beside oracle-verifiable exact quantiles.
-    * accuracy=10000 → rank error ≤ n/10000, far inside the 1% value bound.
-    */
-  private val qApproxQuantiles: Q = (s, dir) =>
-    Tables.lineitem(s, dir)
-      .groupBy(col("l_returnflag"))
-      .agg(
-        expr("percentile(l_extendedprice, 0.5)").as("p50_exact"),
-        expr("percentile(l_extendedprice, 0.99)").as("p99_exact"),
-        expr("approx_percentile(l_extendedprice, 0.5, 10000)").as("p50_approx"),
-        expr("approx_percentile(l_extendedprice, 0.99, 10000)").as("p99_approx"))
-      .select(
-        col("l_returnflag"), col("p50_exact"), col("p99_exact"),
-        (abs(col("p50_approx") - col("p50_exact")) <= abs(col("p50_exact")) * lit(0.01))
-          .as("p50_ok"),
-        (abs(col("p99_approx") - col("p99_exact")) <= abs(col("p99_exact")) * lit(0.01))
-          .as("p99_ok"))
-      .orderBy("l_returnflag")
-
-  private val approxQuantilesSql =
-    """SELECT l_returnflag,
-      |  percentile_cont(0.5) WITHIN GROUP (ORDER BY l_extendedprice) AS p50_exact,
-      |  percentile_cont(0.99) WITHIN GROUP (ORDER BY l_extendedprice) AS p99_exact,
-      |  TRUE AS p50_ok, TRUE AS p99_ok
-      |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin
-
-  /** Sliding windows (1 h window, 30 min slide) via explicit epoch-ms window
-    * math — symmetric in both engines (each event lands in exactly 2
-    * windows). The Structured-Streaming `window()` equivalent is exercised
-    * in `StreamingSpec`; this batch twin is the oracle-checkable one.
-    */
-  private val qEventsSliding: Q = (s, dir) => {
-    val slide = 1800000L
-    val win = 3600000L
-    Tables.events(s, dir)
-      .select(col("event_type"), col("value"), unix_millis(col("ts")).as("tms"))
-      .withColumn("win_start",
-        explode(array(
-          (col("tms") - pmod(col("tms"), lit(slide))).as("w0"),
-          (col("tms") - pmod(col("tms"), lit(slide)) - lit(slide)))))
-      .filter(col("tms") < col("win_start") + lit(win) && col("tms") >= col("win_start"))
-      .groupBy(col("win_start"), col("event_type"))
-      .agg(count(lit(1)).as("n"), Exact.sumExact(col("value")).as("total_value"))
-      .orderBy("win_start", "event_type")
-  }
-
-  private val eventsSlidingSql =
-    """SELECT win_start, event_type, COUNT(*) AS n,
-      |  CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS total_value
-      |FROM (
-      |  SELECT event_type, value, tms,
-      |    unnest([tms - (tms % 1800000), tms - (tms % 1800000) - 1800000]) AS win_start
-      |  FROM (SELECT event_type, value, epoch_ms(ts) AS tms FROM events) e
-      |) w
-      |WHERE tms < win_start + 3600000 AND tms >= win_start
-      |GROUP BY win_start, event_type
-      |ORDER BY win_start, event_type""".stripMargin
-
-  /** Grouped collection: per-customer sorted order list, stringified so the
-    * cross-engine compare sees a scalar (array cell formatting differs).
-    */
-  private val qCollectList: Q = (s, dir) =>
-    Tables.orders(s, dir)
-      .filter(col("o_custkey") <= 20)
-      .groupBy(col("o_custkey"))
-      .agg(concat_ws(",", array_sort(collect_list(col("o_orderkey")))).as("order_ids"))
-      .orderBy("o_custkey")
-
-  private val collectListSql =
-    """SELECT o_custkey, array_to_string(list_sort(list(o_orderkey)), ',') AS order_ids
-      |FROM orders WHERE o_custkey <= 20
-      |GROUP BY o_custkey ORDER BY o_custkey""".stripMargin
-
-  private val qRegex: Q = (s, dir) =>
-    Tables.part(s, dir)
-      .select(
-        col("p_partkey"),
-        regexp_extract(col("p_brand"), "[0-9]+", 0).cast("long").as("brand_num"),
-        regexp_extract(col("p_name"), "^[a-z]+", 0).as("first_word"))
-      .orderBy("p_partkey")
-
-  private val regexSql =
-    """SELECT p_partkey,
-      |  CAST(regexp_extract(p_brand, '[0-9]+') AS BIGINT) AS brand_num,
-      |  regexp_extract(p_name, '^[a-z]+') AS first_word
-      |FROM part ORDER BY p_partkey""".stripMargin
-
-  /** RANGE frame: trailing-30-day spend per customer (peers at the same day
-    * aggregate together, so the result is tie-insensitive).
-    */
-  private val qRangeFrame: Q = (s, dir) => {
-    val dayNum = datediff(col("o_orderdate"),
-      lit(java.sql.Timestamp.valueOf("1970-01-01 00:00:00")))
-    val w = Window.partitionBy(col("o_custkey"))
-      .orderBy(col("day_num"))
-      .rangeBetween(-30, 0)
-    Tables.orders(s, dir)
-      .filter(col("o_custkey") <= 100)
-      .withColumn("day_num", dayNum.cast("long"))
-      .withColumn("trailing_30d",
-        sum(Exact.dec(col("o_totalprice"))).over(w).cast("double"))
-      .select(col("o_custkey"), col("o_orderkey"), col("day_num"), col("trailing_30d"))
-      .orderBy("o_custkey", "o_orderkey")
-  }
-
-  private val rangeFrameSql =
-    """SELECT o_custkey, o_orderkey, day_num,
-      |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) OVER (
-      |    PARTITION BY o_custkey ORDER BY day_num
-      |    RANGE BETWEEN 30 PRECEDING AND CURRENT ROW) AS DOUBLE) AS trailing_30d
-      |FROM (
-      |  SELECT o_custkey, o_orderkey, o_totalprice,
-      |    CAST(date_diff('day', TIMESTAMP '1970-01-01 00:00:00', o_orderdate) AS BIGINT) AS day_num
-      |  FROM orders WHERE o_custkey <= 100) t
-      |ORDER BY o_custkey, o_orderkey""".stripMargin
-
-  /** Correlated scalar subquery — via the SQL entry point; Catalyst
-    * decorrelates it into an aggregate + left outer join (no per-row
-    * re-execution, unlike the reference's per-partition probe loops).
-    */
-  private val qScalarSubquery: Q = (s, dir) => {
-    Tables.customer(s, dir).createOrReplaceTempView("customer_sq")
-    Tables.orders(s, dir).createOrReplaceTempView("orders_sq")
-    s.sql(
-      """SELECT c_custkey,
-        |  CAST((SELECT CAST(MAX(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE)
-        |        FROM orders_sq WHERE o_custkey = c_custkey) AS DOUBLE) AS max_order
-        |FROM customer_sq WHERE c_custkey <= 200
-        |ORDER BY c_custkey""".stripMargin)
-  }
-
-  private val scalarSubquerySql =
-    """SELECT c_custkey,
-      |  CAST((SELECT CAST(MAX(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE)
-      |        FROM orders WHERE o_custkey = c_custkey) AS DOUBLE) AS max_order
-      |FROM customer WHERE c_custkey <= 200
-      |ORDER BY c_custkey""".stripMargin
-
-  /** Pivot: status columns per order-year. The oracle expresses the same
-    * result as conditional aggregation (engine-portable pivot form).
-    */
-  private val qPivot: Q = (s, dir) =>
-    Tables.orders(s, dir)
-      .withColumn("yr", year(col("o_orderdate")).cast("long"))
-      .groupBy(col("yr"))
-      .pivot("o_orderstatus", Seq("F", "O", "P"))
-      .agg(count(lit(1)))
-      .na.fill(0L, Seq("F", "O", "P"))
-      .orderBy("yr")
-
-  private val pivotSql =
-    """SELECT CAST(year(o_orderdate) AS BIGINT) AS yr,
-      |  CAST(SUM(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS BIGINT) AS F,
-      |  CAST(SUM(CASE WHEN o_orderstatus = 'O' THEN 1 ELSE 0 END) AS BIGINT) AS O,
-      |  CAST(SUM(CASE WHEN o_orderstatus = 'P' THEN 1 ELSE 0 END) AS BIGINT) AS P
-      |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin
-
-  // ------------------------------------------------------------ text analysis
-
-  private val qTokenStats: Q = (s, dir) =>
-    Tables.documents(s, dir).select(
-      col("doc_id"),
-      TextFunctions.tokenCount(col("text")).as("n_tokens"),
-      TextFunctions.distinctTokenCount(col("text")).as("n_distinct"),
-      TextFunctions.regexTokenCount(col("text")).as("n_subword"))
-      .orderBy("doc_id")
-
-  private val tokenStatsSql =
-    """SELECT doc_id,
-      |  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-      |  CAST(len(list_distinct(string_split(text, ' '))) AS BIGINT) AS n_distinct,
-      |  CAST(len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9 ]')) AS BIGINT) AS n_subword
-      |FROM documents ORDER BY doc_id""".stripMargin
-
-  private val stopListSql = TextFunctions.EnglishStopwords.map(w => s"'$w'").mkString("[", ", ", "]")
-
-  private val qTextQuality: Q = (s, dir) =>
-    Tables.documents(s, dir).select(
-      col("doc_id"),
-      TextFunctions.tokenCount(col("text")).as("n_tokens"),
-      TextFunctions.stopwordRatio(col("text")).as("stop_ratio"),
-      TextFunctions.avgTokenLength(col("text")).as("avg_token_len"),
-      TextFunctions.typeTokenRatio(col("text")).as("ttr"),
-      TextFunctions.qualityLabel(col("text")).as("quality"))
-      .orderBy("doc_id")
-
-  private val textQualitySql =
-    s"""SELECT doc_id, n_tokens, stop_ratio, avg_token_len, ttr,
-       |  CASE WHEN n_tokens < 5 THEN 'too_short'
-       |       WHEN ttr < 0.3 THEN 'repetitive'
-       |       WHEN stop_ratio > 0.5 THEN 'boilerplate'
-       |       ELSE 'ok' END AS quality
-       |FROM (
-       |  SELECT doc_id,
-       |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-       |    CAST(len(list_filter(string_split(text, ' '), t -> list_contains($stopListSql, t))) AS DOUBLE)
-       |      / CAST(len(string_split(text, ' ')) AS DOUBLE) AS stop_ratio,
-       |    (CAST(length(text) AS DOUBLE) - CAST(len(string_split(text, ' ')) - 1 AS DOUBLE))
-       |      / CAST(len(string_split(text, ' ')) AS DOUBLE) AS avg_token_len,
-       |    CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE)
-       |      / CAST(len(string_split(text, ' ')) AS DOUBLE) AS ttr
-       |  FROM documents
-       |) t ORDER BY doc_id""".stripMargin
-
-  private val qLangId: Q = (s, dir) =>
-    Tables.documents(s, dir).select(
-      col("doc_id"), col("lang"),
-      TextFunctions.langId(col("text")).as("pred_lang"))
-      .withColumn("hit", (col("pred_lang") === col("lang")).cast("boolean"))
-      .orderBy("doc_id")
-
-  /** lang-ID oracle generated from the SAME marker lists as the Spark impl. */
-  private val langIdSql: String = {
-    val markers = TextFunctions.LangMarkers
-    val scoreDefs = markers.map { case (lang, ws) =>
-      val lst = ws.map(w => s"'$w'").mkString("[", ", ", "]")
-      s"len(list_filter(string_split(text, ' '), t -> list_contains($lst, t))) AS s_$lang"
-    }.mkString(",\n    ")
-    val cases = markers.zipWithIndex.map { case ((lang, _), i) =>
-      val earlier = markers.take(i).map { case (l2, _) => s"s_$lang > s_$l2" }
-      val later = markers.drop(i + 1).map { case (l2, _) => s"s_$lang >= s_$l2" }
-      val conds = (earlier ++ later :+ s"s_$lang > 0").mkString(" AND ")
-      s"WHEN $conds THEN '$lang'"
-    }.mkString("\n       ", "\n       ", "")
-    s"""SELECT doc_id, lang,
-       |  CASE$cases
-       |  ELSE 'unk' END AS pred_lang,
-       |  (CASE$cases
-       |  ELSE 'unk' END = lang) AS hit
-       |FROM (
-       |  SELECT doc_id, lang, text,
-       |    $scoreDefs
-       |  FROM documents
-       |) t ORDER BY doc_id""".stripMargin
-  }
-
-  /** Fingerprint-first exact dedup (the 100 TB path: 16-byte shuffle rows,
-    * never document bodies — plan-asserted in PlanSpec). The oracle groups by
-    * the SAME rolling-hash fold in HUGEINT SQL, so fingerprint collisions —
-    * were one ever to appear in the corpus — would surface as a hash
-    * mismatch rather than silently passing.
-    */
-  private val qExactDedup: Q = (s, dir) =>
-    Dedup.exactByFingerprint(Tables.documents(s, dir))
-      .select(col("canonical_id"), col("n_copies"))
-      .orderBy("canonical_id")
-
-  private val exactDedupSql =
-    s"""WITH f AS (SELECT doc_id, ${rollingFoldSql("text")} AS h FROM documents)
-       |SELECT min(doc_id) AS canonical_id, count(*) AS n_copies
-       |FROM f GROUP BY h ORDER BY canonical_id""".stripMargin
-
-  /** Byte-distribution Shannon entropy per document (graftx.ByteEntropy —
-    * one-pass codegen kernel): the compressibility quality signal. Rounded
-    * to 6 dp on both sides (log2 is transcendental: StrictMath vs libm
-    * differ by ulps).
-    */
-  private val qCharEntropy: Q = (s, dir) =>
-    Tables.documents(s, dir)
-      .select(col("doc_id"),
-        round(org.apache.spark.sql.graftx.Sketches.byte_entropy(col("text")), 6)
-          .as("entropy"))
-      .orderBy("doc_id")
-
-  private val charEntropySql =
-    """WITH c AS (
-      |  SELECT doc_id, ascii(text[g.i]) AS b
-      |  FROM documents, UNNEST(generate_series(1, length(text))) AS g(i)
-      |), cnt AS (
-      |  SELECT doc_id, b, CAST(COUNT(*) AS DOUBLE) AS cnt FROM c GROUP BY 1, 2
-      |), n AS (
-      |  SELECT doc_id, CAST(length(text) AS DOUBLE) AS n FROM documents
-      |), e AS (
-      |  SELECT cnt.doc_id, -list_sum(list((cnt/n.n) * log2(cnt/n.n) ORDER BY b)) AS h
-      |  FROM cnt JOIN n ON cnt.doc_id = n.doc_id
-      |  GROUP BY cnt.doc_id
-      |)
-      |SELECT d.doc_id, round(COALESCE(e.h, 0.0), 6) AS entropy
-      |FROM documents d LEFT JOIN e ON d.doc_id = e.doc_id
-      |ORDER BY d.doc_id""".stripMargin
-
-  /** Word-shingle frequency via the native GENERATOR expression
-    * (graftx.ShingleGenerator — the UDTF extension type): one row per
-    * shingle without materializing per-document arrays. The oracle unnests
-    * the same clamped shingle definition generated by SketchOracleSql.
-    */
-  private val qShingleExplode: Q = (s, dir) =>
-    Tables.documents(s, dir)
-      .select(col("doc_id"),
-        org.apache.spark.sql.graftx.Sketches.shingle_explode(col("text"), 3).as("shingle"))
-      .groupBy(col("shingle")).agg(count(lit(1)).as("n"))
-      .filter(col("n") >= 5)
-      .orderBy(col("n").desc, col("shingle"))
-
-  private val shingleExplodeSql =
-    s"""WITH tk0 AS (
-       |  SELECT doc_id, string_split(text, ' ') AS tk FROM documents
-       |), sh AS (
-       |  SELECT doc_id, unnest(${SketchOracleSql.shingleList(3)}) AS shingle FROM tk0
-       |)
-       |SELECT shingle, COUNT(*) AS n FROM sh GROUP BY 1 HAVING COUNT(*) >= 5
-       |ORDER BY n DESC, shingle""".stripMargin
-
-  /** Dedup on NORMALIZED text (lowercase/punct-strip/space-collapse), again
-    * fingerprint-keyed: catches trivial-variant duplicates. The oracle runs
-    * the same normalization regexes and the same HUGEINT fold.
-    */
-  private val qNormalizedDedup: Q = (s, dir) =>
-    Dedup.exactByFingerprint(
-      Tables.documents(s, dir)
-        .withColumn("text", TextFunctions.normalize(col("text"))))
-      .select(col("canonical_id"), col("n_copies"))
-      .orderBy("canonical_id")
-
-  private val normalizedDedupSql =
-    s"""WITH n AS (
-       |  SELECT doc_id,
-       |    trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'),
-       |         ' +', ' ', 'g')) AS text
-       |  FROM documents
-       |), f AS (SELECT doc_id, ${rollingFoldSql("text")} AS h FROM n)
-       |SELECT min(doc_id) AS canonical_id, count(*) AS n_copies
-       |FROM f GROUP BY h ORDER BY canonical_id""".stripMargin
-
-  private val qNgramJaccard: Q = (s, dir) =>
-    Dedup.ngramJaccardPairs(Tables.documents(s, dir), threshold = 0.6)
-      .orderBy("doc_a", "doc_b")
-
-  private val ngramJaccardSql =
-    """WITH k AS (
-      |  SELECT doc_id, lang, CAST(floor(n_chars / 100) AS BIGINT) AS len_bucket,
-      |    list_distinct(string_split(text, ' ')) AS toks
-      |  FROM documents
-      |)
-      |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-      |  CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE)
-      |    / CAST(len(list_distinct(list_concat(a.toks, b.toks))) AS DOUBLE) AS jaccard
-      |FROM k a JOIN k b ON a.lang = b.lang AND a.len_bucket = b.len_bucket
-      |WHERE a.doc_id < b.doc_id
-      |  AND CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE)
-      |    / CAST(len(list_distinct(list_concat(a.toks, b.toks))) AS DOUBLE) >= 0.6
-      |ORDER BY doc_a, doc_b""".stripMargin
-
-  /** Near-dup pairs → duplicate GROUPS: connected components over the
-    * Jaccard pair graph; each doc labeled with its cluster's min doc_id
-    * (= the representative an actual dedup would keep).
-    */
-  private val qDedupClusters: Q = (s, dir) => {
-    val pairs = Dedup.ngramJaccardPairs(Tables.documents(s, dir), threshold = 0.6)
-    graft.operators.ConnectedComponents(pairs, "doc_a", "doc_b")
-      .select(col("id").cast("long").as("doc_id"),
-        col("component").cast("long").as("cluster_id"))
-      .orderBy("doc_id")
-  }
-
-  /** CC oracle: the SAME pair query as `ngramJaccardSql`, then transitive
-    * closure via recursive CTE, label = min reachable id (incl. self).
-    */
-  private val dedupClustersSql = {
-    val pairs = ngramJaccardSql.replace("ORDER BY doc_a, doc_b", "")
-    s"""WITH RECURSIVE pairs AS (
-       |$pairs
-       |),
-       |edges AS (SELECT doc_a AS u, doc_b AS v FROM pairs
-       |          UNION SELECT doc_b AS u, doc_a AS v FROM pairs),
-       |reach(u, v) AS (SELECT u, v FROM edges
-       |                UNION SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u)
-       |SELECT u AS doc_id, LEAST(u, MIN(v)) AS cluster_id
-       |FROM reach GROUP BY u ORDER BY doc_id""".stripMargin
-  }
-
-  /** Corpus token frequency (top-100): the explode/Generator surface — the
-    * wordcount every text pipeline starts from. Ties broken by token so the
-    * LIMIT cut is deterministic.
-    */
-  private val qWordFreq: Q = (s, dir) =>
-    Tables.documents(s, dir)
-      .select(explode(TextFunctions.tokens(col("text"))).as("token"))
-      .filter(col("token") =!= "")
-      .groupBy("token").agg(count(lit(1)).as("cnt"))
-      .orderBy(col("cnt").desc, col("token"))
-      .limit(100)
-
-  private val wordFreqSql =
-    """SELECT token, COUNT(*) AS cnt
-      |FROM (SELECT unnest(string_split(text, ' ')) AS token FROM documents) t
-      |WHERE token <> '' GROUP BY token
-      |ORDER BY cnt DESC, token LIMIT 100""".stripMargin
-
-  /** Per-language token-budget sampling (pipeline.TokenBudget): the
-    * mixture-control step of a training-data pipeline. Hash-ordered running
-    * sum per language, whole docs taken while the cumulative token count
-    * stays within the language's budget. Fully SQL-expressible → exact
-    * oracle.
-    */
-  private val qTokenBudget: Q = (s, dir) =>
-    TokenBudget.sample(Tables.documents(s, dir),
-      budgets = Map("en" -> 8000L), defaultBudget = 3000L)
-      .orderBy("lang", "rk")
-
-  private val tokenBudgetSql =
-    """SELECT lang, rk, doc_id, n_tokens, cum_tokens FROM (
-      |  SELECT lang, doc_id,
-      |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-      |    CAST(ROW_NUMBER() OVER w AS BIGINT) AS rk,
-      |    CAST(SUM(len(string_split(text, ' ')))
-      |      OVER (w ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-      |      AS cum_tokens
-      |  FROM documents
-      |  WINDOW w AS (PARTITION BY lang
-      |    ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id)) t
-      |WHERE cum_tokens <= CASE WHEN lang = 'en' THEN 8000 ELSE 3000 END
-      |ORDER BY lang, rk""".stripMargin
-
-  /** Count-min-sketch heavy hitters (functions.CountMin): the sketch is
-    * engine-specific, so — per the established sketch-oracle pattern — the
-    * query emits the EXACT top-20 word counts (SQL-reproducible) plus the
-    * CMS guarantees evaluated in-engine as booleans: est ≥ exact always
-    * (deterministic CMS property), est ≤ exact + ⌈(e/width)·N⌉ (the ε
-    * bound). The oracle recomputes the exact side and expects TRUE flags —
-    * a broken sketch flips a boolean and the hash compare goes red.
-    */
-  private val qHeavyHitters: Q = (s, dir) => {
-    val counts = Tables.documents(s, dir)
-      .select(explode(TextFunctions.tokens(col("text"))).as("token"))
-      .filter(col("token") =!= "")
-      .groupBy("token").agg(count(lit(1)).as("n"))
-    val sketch = CountMin.fromCounts(counts, "token", "n",
-      depth = 4, width = 1024)
-    val est = CountMin.estimate(sketch, col("token"))
-    counts
-      .orderBy(col("n").desc, col("token"))
-      .limit(20)
-      .select(col("token"), col("n"),
-        (est >= col("n")).as("est_ge_exact"),
-        (est <= col("n") + lit(CountMin.errorBound(sketch)))
-          .as("est_within_eps"))
-      .orderBy(col("n").desc, col("token"))
-  }
-
-  private val heavyHittersSql =
-    """SELECT token, n, TRUE AS est_ge_exact, TRUE AS est_within_eps FROM (
-      |  SELECT token, CAST(COUNT(*) AS BIGINT) AS n
-      |  FROM (SELECT unnest(string_split(text, ' ')) AS token FROM documents) t
-      |  WHERE token <> '' GROUP BY token)
-      |ORDER BY n DESC, token LIMIT 20""".stripMargin
-
-  /** Within-document repetition signals (Gopher-style quality rule): the
-    * fraction of all word 2-grams taken by the most frequent one, and the
-    * distinct-2-gram ratio. The stats are a function of each document
-    * alone, so a one-pass codegen kernel (graftx.GramStats) computes them
-    * at scan speed — ZERO shuffle, vs the two shuffles of the relational
-    * explode → count(doc,gram) → per-doc rollup it replaces (both
-    * formulations cross-checked in TextSpec). Exact integer counts + one
-    * IEEE division → full oracle.
-    */
-  private val qRepNgrams: Q = (s, dir) =>
-    Tables.documents(s, dir)
-      .filter(size(TextFunctions.tokens(col("text"))) >= 2)
-      .select(col("doc_id"),
-        org.apache.spark.sql.graftx.Sketches.gram_stats(col("text")).as("st"))
-      .select(col("doc_id"),
-        col("st.n_grams").as("n_grams"),
-        col("st.n_distinct").as("n_distinct"),
-        (col("st.top_n").cast("double") / col("st.n_grams").cast("double"))
-          .as("top_frac"),
-        (col("st.n_distinct").cast("double") / col("st.n_grams").cast("double"))
-          .as("distinct_frac"))
-      .orderBy("doc_id")
-
-  private val repNgramsSql =
-    """WITH g AS (
-      |  SELECT doc_id,
-      |    unnest(list_transform(generate_series(1, len(string_split(text, ' ')) - 1),
-      |      i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i+1]))
-      |      AS gram
-      |  FROM documents WHERE len(string_split(text, ' ')) >= 2
-      |), pg AS (
-      |  SELECT doc_id, gram, COUNT(*) AS n FROM g GROUP BY 1, 2
-      |)
-      |SELECT doc_id, CAST(SUM(n) AS BIGINT) AS n_grams,
-      |  CAST(COUNT(*) AS BIGINT) AS n_distinct,
-      |  CAST(MAX(n) AS DOUBLE) / CAST(SUM(n) AS DOUBLE) AS top_frac,
-      |  CAST(COUNT(*) AS DOUBLE) / CAST(SUM(n) AS DOUBLE) AS distinct_frac
-      |FROM pg GROUP BY doc_id ORDER BY doc_id""".stripMargin
-
-  /** Benchmark decontamination (dedup.decontaminate): corpus docs sharing
-    * any word 8-gram with the benchmark slice (doc_id % 50 = 0 stands in for
-    * an eval suite) are flagged. The engine joins on 64-bit gram
-    * fingerprints with the benchmark side broadcast (map-only at corpus
-    * scale); the oracle joins on the gram strings — identical semantics
-    * unless the fingerprint path is broken, which is exactly what the hash
-    * compare would then surface.
-    */
-  private val qDecontaminate: Q = (s, dir) => {
-    val docs = Tables.documents(s, dir)
-    Dedup.decontaminate(docs.filter(col("doc_id") % 50 =!= 0),
-      docs.filter(col("doc_id") % 50 === 0), n = 8)
-      .orderBy("doc_id")
-  }
-
-  private val decontaminateSql =
-    """WITH s AS (
-      |  SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-      |), g AS (
-      |  SELECT doc_id, unnest(list_distinct(list_transform(
-      |    generate_series(1, greatest(len(toks) - 7, 1)),
-      |    i -> array_to_string(toks[i:i+7], ' ')))) AS gram
-      |  FROM s
-      |), bad AS (
-      |  SELECT DISTINCT g.doc_id
-      |  FROM g JOIN (SELECT DISTINCT gram FROM g WHERE doc_id % 50 = 0) bg
-      |    USING (gram)
-      |  WHERE g.doc_id % 50 <> 0
-      |)
-      |SELECT d.doc_id, d.doc_id IN (SELECT doc_id FROM bad) AS contaminated
-      |FROM documents d WHERE d.doc_id % 50 <> 0 ORDER BY d.doc_id""".stripMargin
-
-  /** Span-level exact-substring dedup (Dedup.substringDupPairs, w=1): doc
-    * pairs sharing any identical 32-char window, with the count of distinct
-    * shared window contents — the ExactSubstr granularity (repeated SPANS,
-    * not whole near-dup documents) that suffix-array pipelines target. The
-    * kernel (graftx.SubstrAnchors) emits every window's rolling hash in one
-    * pass; the pair join keys on the window CONTENT, so hash collisions
-    * cannot corrupt the result and the oracle is pure relational SQL.
-    */
-  private val qSubstringDedup: Q = (s, dir) =>
-    // repartition: the SF-scale corpus is one small file = one input split;
-    // without the fan-out the whole kernel+partial-agg stage runs on one
-    // core (at real scale the scan is already parallel and this is a no-op
-    // cost — the shuffle moves each doc once)
-    Dedup.substringDupPairs(
-      Tables.documents(s, dir).repartition(col("doc_id")), k = 32, w = 1)
-      .orderBy("doc_a", "doc_b")
-
-  /** Winnowed span-level dedup (Dedup.substringDupPairs, w=16): the scale
-    * path — anchors thinned to ~2/(w+1) density by sliding-window-minimum
-    * selection (Schleimer/Wilkes/Aiken winnowing) with the deterministic
-    * guarantee that any shared span of length >= k+w-1 (47 chars here)
-    * still collides in both docs. The oracle replays the kernel bit-for-bit
-    * (mod-2^64 window hashes, packed selection keys, window minima) in
-    * HUGEINT SQL, then runs the same content-keyed pair join.
-    */
-  private val qWinnowPairs: Q = (s, dir) =>
-    Dedup.substringDupPairs(
-      Tables.documents(s, dir).repartition(col("doc_id")), k = 32, w = 16)
-      .orderBy("doc_a", "doc_b")
-
-  /** Bloom-prefiltered decontamination (dedup.decontaminateBloom): same
-    * exact semantics as q_decontaminate, different physical shape — the
-    * benchmark grams become ONE bloom blob (Spark's BloomFilterAggregate,
-    * exposed via graftx), the corpus grams are pruned map-side by a codegen
-    * might_contain before any shuffle, and only the survivors reach the
-    * exact join that removes false positives. Because the bloom is a
-    * prefilter, not the answer, the result is exact and shares the plain
-    * decontaminate oracle.
-    */
-  private val qBloomDecontaminate: Q = (s, dir) => {
-    val docs = Tables.documents(s, dir)
-    Dedup.decontaminateBloom(docs.filter(col("doc_id") % 50 =!= 0),
-      docs.filter(col("doc_id") % 50 === 0), n = 8)
-      .orderBy("doc_id")
-  }
-
-  /** Blocked fuzzy self-join (operators.FuzzyJoin): distinct part names at
-    * edit distance ≤3, blocked on the noun token — levenshtein exists in
-    * both engines so the oracle verifies the full pair set and distances
-    * exactly (blocking predicate reproduced verbatim in SQL).
-    */
-  private val qFuzzyJoin: Q = (s, dir) =>
-    operators.FuzzyJoin.selfJoin(Tables.part(s, dir), "p_name",
-        name => element_at(split(name, " "), 2), maxDist = 3)
-      .orderBy("name_a", "name_b")
-
-  private val fuzzyJoinSql =
-    """WITH names AS (SELECT DISTINCT p_name AS name FROM part)
-      |SELECT a.name AS name_a, b.name AS name_b,
-      |  CAST(levenshtein(a.name, b.name) AS BIGINT) AS dist
-      |FROM names a JOIN names b
-      |  ON split_part(a.name, ' ', 2) = split_part(b.name, ' ', 2)
-      | AND a.name < b.name
-      |WHERE levenshtein(a.name, b.name) <= 3
-      |ORDER BY 1, 2""".stripMargin
-
-  /** Subword tokenization (graftx.SubwordPieces — greedy longest-match
-    * WordPiece inference as a codegen'd native expression): per-document
-    * piece count + an order-sensitive fingerprint of the full piece
-    * sequence. The oracle REPLAYS greedy matching in a recursive CTE over
-    * the distinct words with the same vocab list literal (generated from
-    * the same Scala constants) — piece boundaries, order and count are all
-    * hash-checked, not just totals.
-    */
-  private val qSubwordTokens: Q = (s, dir) => {
-    import org.apache.spark.sql.graftx.WordPiece.subword_pieces
-    Tables.documents(s, dir)
-      .select(col("doc_id"), subword_pieces(col("text")).as("pieces"))
-      .select(col("doc_id"), size(col("pieces")).cast("long").as("n_pieces"),
-        rolling_hash(array_join(col("pieces"), "\u0001")).as("pieces_fp"))
-      .orderBy("doc_id")
-  }
-
-  /** CTE chain replaying greedy longest-match subword tokenization over
-    * the distinct words of `src` (a CTE/table with doc_id, text): emits
-    * `toks` (doc_id, ord, word) and `done` (word, pieces). Greedy longest
-    * match is unique: at most one piece of each length matches at a
-    * position, so "pick the longer" is a total tie-free rule. Vocab is
-    * total over printable ASCII (QueryCatalogSpec asserts the corpus is
-    * ASCII), so list_filter below is never empty. Callers must open the
-    * WITH as RECURSIVE.
-    */
-  private def subwordCtes(src: String): String = {
-    import org.apache.spark.sql.graftx.WordPiece
-    val vocab = (WordPiece.MultiChar ++ WordPiece.SingleChar)
-      .filterNot(_ == " ")
-      .map(p => "'" + p.replace("'", "''") + "'").mkString("[", ", ", "]")
-    s"""tks AS (
-       |  SELECT doc_id, string_split(text, ' ') AS tk FROM $src
-       |), toks AS (
-       |  SELECT doc_id, i AS ord, tk[i] AS word
-       |  FROM tks, LATERAL unnest(generate_series(1, len(tk))) AS u(i)
-       |  WHERE tk[i] <> ''
-       |), words AS (SELECT DISTINCT word FROM toks
-       |), wp(word, pos, pieces) AS (
-       |  SELECT word, CAST(1 AS BIGINT), CAST([] AS VARCHAR[]) FROM words
-       |  UNION ALL
-       |  SELECT word, pos + length(best), list_append(pieces, best) FROM (
-       |    SELECT word, pos, pieces,
-       |      list_reduce(list_filter($vocab,
-       |          p -> substr(word, CAST(pos AS INTEGER), length(p)) = p),
-       |        (a, b) -> CASE WHEN length(b) > length(a) THEN b ELSE a END) AS best
-       |    FROM wp WHERE pos <= length(word)) s
-       |), done AS (
-       |  SELECT word, pieces FROM wp WHERE pos = length(word) + 1
-       |)""".stripMargin
-  }
-
-  private def subwordTokensSqlGen: String =
-    s"""WITH RECURSIVE ${subwordCtes("documents")}, agg AS (
-       |  SELECT t.doc_id, SUM(len(d.pieces)) AS n_pieces,
-       |    string_agg(array_to_string(d.pieces, chr(1)), chr(1) ORDER BY t.ord) AS allp
-       |  FROM toks t JOIN done d USING (word) GROUP BY t.doc_id)
-       |SELECT doc_id, CAST(n_pieces AS BIGINT) AS n_pieces,
-       |  ${u64ToSigned(rollingFoldSql("allp"))} AS pieces_fp
-       |FROM agg ORDER BY doc_id""".stripMargin
-
-  /** Tokenizer fertility per language (pieces-per-word — THE metric for
-    * how well a subword vocab fits each language; high fertility inflates
-    * effective sequence length and training cost). Subword pieces come
-    * from the codegen WordPiece tokenizer (map-only), words from the
-    * whitespace split; per-language sums give integer-exact fertility in
-    * milli-units. The oracle replays the greedy tokenizer via the shared
-    * recursive-CTE chain.
-    */
-  private val qTokenizerFertility: Q = (s, dir) => {
-    import org.apache.spark.sql.graftx.WordPiece.subword_pieces
-    Tables.documents(s, dir)
-      .select(col("lang"),
-        size(split(col("text"), " ")).cast("long").as("n_words"),
-        size(subword_pieces(col("text"))).cast("long").as("n_pieces"))
-      .groupBy("lang")
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_words")).as("n_words"),
-        sum(col("n_pieces")).as("n_pieces"))
-      .withColumn("fertility_milli", expr("n_pieces * 1000 div n_words"))
-      .orderBy("lang")
-  }
-
-  private def tokenizerFertilitySqlGen: String =
-    s"""WITH RECURSIVE ${subwordCtes("documents")}, perdoc AS (
-       |  SELECT t.doc_id, SUM(len(d.pieces)) AS n_pieces
-       |  FROM toks t JOIN done d USING (word) GROUP BY t.doc_id),
-       |base AS (
-       |  SELECT doc_id, lang,
-       |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_words
-       |  FROM documents)
-       |SELECT lang, COUNT(*) AS n_docs,
-       |  CAST(SUM(n_words) AS BIGINT) AS n_words,
-       |  CAST(SUM(n_pieces) AS BIGINT) AS n_pieces,
-       |  CAST(SUM(n_pieces) * 1000 // SUM(n_words) AS BIGINT)
-       |    AS fertility_milli
-       |FROM base JOIN perdoc USING (doc_id)
-       |GROUP BY lang ORDER BY lang""".stripMargin
-
-  /** v3 composed pipeline (pipeline.TrainingDataPipeline.summaryV3): the
-    * LEARNED-model flow — hashed-linear classifier gate → exact dedup →
-    * per-language token budget costed in SUBWORD pieces (the unit an LLM
-    * trains on). The oracle replays classifier scoring, dedup, the greedy
-    * subword tokenizer (recursive CTE) and the budget window end to end.
-    */
-  private val qTrainingPipelineV3: Q = (s, dir) =>
-    pipeline.TrainingDataPipeline.summaryV3(Tables.documents(s, dir),
-      budgets = Map("en" -> 20000L), defaultBudget = 8000L)
-
-  private def trainingPipelineV3SqlGen: String =
-    s"""WITH RECURSIVE gated AS (
-       |  SELECT doc_id, lang, text FROM documents
-       |  WHERE ${graft.quality.LinearScorer.scoreSql("text")} > 0
-       |), src AS (
-       |  SELECT g.* FROM gated g
-       |  WHERE doc_id IN (SELECT MIN(doc_id) FROM gated GROUP BY text)
-       |), ${subwordCtes("src")}, np AS (
-       |  SELECT t.doc_id, CAST(SUM(len(d.pieces)) AS BIGINT) AS n_pieces
-       |  FROM toks t JOIN done d USING (word) GROUP BY t.doc_id
-       |), sel AS (
-       |  SELECT s.lang, s.doc_id,
-       |    SUM(COALESCE(n.n_pieces, 0)) OVER (PARTITION BY s.lang
-       |      ORDER BY md5(CAST(s.doc_id AS VARCHAR)), s.doc_id
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-       |  FROM src s LEFT JOIN np n USING (doc_id)
-       |)
-       |SELECT lang, COUNT(*) AS n_docs, CAST(MAX(cum) AS BIGINT) AS pieces_used,
-       |  CAST(bit_xor(doc_id) AS BIGINT) AS id_xor,
-       |  MAX(cum) <= CASE WHEN lang = 'en' THEN 20000 ELSE 8000 END AS within_budget
-       |FROM sel WHERE cum <= CASE WHEN lang = 'en' THEN 20000 ELSE 8000 END
-       |GROUP BY lang ORDER BY lang""".stripMargin
-
-  /** End-to-end entity resolution: blocked fuzzy candidate pairs
-    * (operators.FuzzyJoin) → connected components over the match graph
-    * (operators.ConnectedComponents, nodes = 64-bit name hashes so the CC
-    * loop shuffles 16-byte rows, never strings) → canonical record = the
-    * lexicographic min name per component → every record mapped to its
-    * canonical + cluster size (singletons canonicalize to themselves).
-    * The oracle replays the pair predicate verbatim and closes it with a
-    * recursive CTE — the full record-linkage pipeline, hash-checked.
-    */
-  private val qEntityResolution: Q = (s, dir) => {
-    val names = Tables.part(s, dir).select(col("p_name").as("name")).distinct()
-    val pairs = operators.FuzzyJoin.selfJoin(Tables.part(s, dir), "p_name",
-      name => element_at(split(name, " "), 2), maxDist = 3)
-    val cc = graft.operators.ConnectedComponents(
-      pairs.select(rolling_hash(col("name_a")).as("src"),
-        rolling_hash(col("name_b")).as("dst")))
-    val withComp = names
-      .join(cc.withColumnRenamed("id", "nid"),
-        rolling_hash(col("name")) === col("nid"), "left")
-    val canon = withComp.filter(col("component").isNotNull)
-      .groupBy("component").agg(min(col("name")).as("cname"))
-    val resolved = withComp.join(canon, Seq("component"), "left")
-      .select(col("name"), coalesce(col("cname"), col("name")).as("canonical"))
-    // cluster size via a window on the canonical partitioning (degree-
-    // bounded groups) — one shuffle, where groupBy+join back costs two
-    resolved
-      .withColumn("n_members",
-        count(lit(1)).over(Window.partitionBy(col("canonical"))))
-      .select(col("name"), col("canonical"), col("n_members"))
-      .orderBy("name")
-  }
-
-  private val entityResolutionSql =
-    """WITH RECURSIVE names AS (SELECT DISTINCT p_name AS name FROM part),
-      |pairs AS (
-      |  SELECT a.name AS name_a, b.name AS name_b
-      |  FROM names a JOIN names b
-      |    ON split_part(a.name, ' ', 2) = split_part(b.name, ' ', 2)
-      |   AND a.name < b.name
-      |  WHERE levenshtein(a.name, b.name) <= 3),
-      |edges AS (SELECT name_a AS u, name_b AS v FROM pairs
-      |          UNION SELECT name_b AS u, name_a AS v FROM pairs),
-      |reach(u, v) AS (SELECT u, v FROM edges
-      |                UNION SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u),
-      |comp AS (SELECT u AS name, LEAST(u, MIN(v)) AS cname FROM reach GROUP BY u),
-      |resolved AS (
-      |  SELECT n.name, COALESCE(c.cname, n.name) AS canonical
-      |  FROM names n LEFT JOIN comp c ON n.name = c.name)
-      |SELECT name, canonical,
-      |  COUNT(*) OVER (PARTITION BY canonical) AS n_members
-      |FROM resolved ORDER BY name""".stripMargin
-
-  /** Corpus-frequency boilerplate removal (pipeline.Boilerplate): the
-    * C4-style "drop lines repeated across many pages" cleanup over 2-token
-    * chunks — chunk df > 20 is boilerplate, survivors reassembled in
-    * order. Fully SQL-expressible, so the oracle checks the reassembled
-    * text verbatim.
-    */
-  private val qBoilerplate: Q = (s, dir) =>
-    pipeline.Boilerplate.removeFrequentChunks(
-        Tables.documents(s, dir), chunkLen = 2, maxDf = 20)
-      .orderBy("doc_id")
-
-  private val boilerplateSql =
-    """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-      |c AS (
-      |  SELECT doc_id, i, array_to_string(toks[(i-1)*2+1:(i-1)*2+2], ' ') AS chunk
-      |  FROM t, UNNEST(generate_series(1, CAST(ceil(len(toks)/2.0) AS INT))) AS u(i)),
-      |f AS (SELECT chunk, COUNT(DISTINCT doc_id) AS df FROM c GROUP BY 1)
-      |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_chunks,
-      |  CAST(SUM(CASE WHEN df > 20 THEN 1 ELSE 0 END) AS BIGINT) AS n_removed,
-      |  COALESCE(string_agg(chunk, ' ' ORDER BY i) FILTER (WHERE df <= 20), '')
-      |    AS kept_text
-      |FROM c JOIN f USING (chunk)
-      |GROUP BY doc_id ORDER BY doc_id""".stripMargin
-
-  /** Source-preference dedup (dedup.preferredCopy): a curated overlay
-    * (every fifth doc, re-identified) collides with the web corpus; the
-    * curated copy must win every collision. The oracle replays the same
-    * rolling-hash fingerprint election in HUGEINT SQL, so both the winner
-    * choice and the survivor set are value-checked.
-    */
-  private val qSourcePrefDedup: Q = (s, dir) => {
-    val d = Tables.documents(s, dir).select(col("doc_id"), col("text"), col("source"))
-    val overlay = d.filter(col("doc_id") % 5 === 0)
-      .select((col("doc_id") + 1000000L).as("doc_id"), col("text"),
-        lit("curated").as("source"))
-    val all = d.unionByName(overlay)
-    Dedup.preferredCopy(all,
-        when(col("source") === "curated", lit(0)).otherwise(lit(1)))
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_kept"), sum(col("doc_id")).as("id_sum"))
-      .orderBy("source")
-  }
-
-  private val sourcePrefDedupSql =
-    s"""WITH all_docs AS (
-       |  SELECT doc_id, text, source FROM documents
-       |  UNION ALL
-       |  SELECT doc_id + 1000000, text, 'curated' FROM documents WHERE doc_id % 5 = 0),
-       |f AS (
-       |  SELECT doc_id, source, ${rollingFoldSql("text")} AS fp,
-       |    CASE WHEN source = 'curated' THEN 0 ELSE 1 END AS prio
-       |  FROM all_docs),
-       |w AS (
-       |  SELECT doc_id, source,
-       |    row_number() OVER (PARTITION BY fp ORDER BY prio, doc_id) AS rn
-       |  FROM f)
-       |SELECT source, CAST(COUNT(*) AS BIGINT) AS n_kept,
-       |  CAST(SUM(doc_id) AS BIGINT) AS id_sum
-       |FROM w WHERE rn = 1 GROUP BY 1 ORDER BY 1""".stripMargin
-
-  /** Cross-source overlap matrix: distinct word bigrams per source,
-    * pairwise shared-gram counts — the dataset-curation "how much do my
-    * sources overlap" report. Equality join on the gram (hash-partitioned;
-    * per-gram fan-out bounded by source-pair cardinality, never rows²).
-    */
-  private val qSourceOverlap: Q = (s, dir) => {
-    val g = Tables.documents(s, dir)
-      .select(col("source"),
-        explode(TextFunctions.wordShingles(col("text"), 2)).as("gram"))
-      .distinct()
-    val a = g.select(col("source").as("src_a"), col("gram"))
-    val b = g.select(col("source").as("src_b"), col("gram"))
-    a.join(b, Seq("gram")).filter(col("src_a") < col("src_b"))
-      .groupBy(col("src_a"), col("src_b"))
-      .agg(count(lit(1)).as("shared"))
-      .orderBy("src_a", "src_b")
-  }
-
-  private val sourceOverlapSql =
-    """WITH s AS (SELECT source, string_split(text, ' ') AS toks FROM documents),
-      |g AS (
-      |  SELECT DISTINCT source, unnest(list_transform(
-      |    generate_series(1, greatest(len(toks) - 1, 1)),
-      |    i -> array_to_string(toks[i:i+1], ' '))) AS gram
-      |  FROM s)
-      |SELECT a.source AS src_a, b.source AS src_b, CAST(COUNT(*) AS BIGINT) AS shared
-      |FROM g a JOIN g b USING (gram)
-      |WHERE a.source < b.source
-      |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
-
-  /** Vertica-style aggregate projection (etl.AggProjection): build over
-    * pre-1997 facts, incrementally maintain with the 1997+ batch (partials
-    * appended, old facts never re-read), answer the GROUP BY from stored
-    * partials only. The oracle aggregates the raw facts directly — the
-    * hash matches only if build+maintain+merge lose nothing.
-    */
-  private val qMvProjection: Q = (s, dir) => {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-mv").toString
-    val l = Tables.lineitem(s, dir)
-    val groups = Seq("l_returnflag", "l_linestatus")
-    val measures = Seq("l_quantity", "l_extendedprice")
-    val cut = lit("1997-01-01")
-    etl.AggProjection.build(l.filter(col("l_shipdate") < cut), groups, measures,
-      s"$tmp/proj")
-    etl.AggProjection.maintain(l.filter(col("l_shipdate") >= cut), groups,
-      measures, s"$tmp/proj")
-    etl.AggProjection.answer(s, s"$tmp/proj", groups, measures)
-      .orderBy("l_returnflag", "l_linestatus")
-  }
-
-  private val mvProjectionSql =
-    """SELECT l_returnflag, l_linestatus, CAST(COUNT(*) AS BIGINT) AS cnt,
-      |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_l_quantity,
-      |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_l_extendedprice
-      |FROM lineitem
-      |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
-
-  /** Projection REWRITE (graftx.RewriteAggToProjection): the query below is
-    * the naive fact-table aggregate; with the rule registered, its
-    * canonicalized plan matches the MvRegistry entry and execution is
-    * rerouted to the projection partials (fact never scanned —
-    * plan-asserted in OperatorsSpec). The oracle aggregates the facts
-    * directly, hash-proving the swap is semantics-preserving.
-    */
-  private val qMvRewrite: Q = (s, dir) => {
-    import org.apache.spark.sql.graftx.{MvRegistry, RewriteAggToProjection}
-    val tmp = java.nio.file.Files.createTempDirectory("graft-mvr").toString
-    val groups = Seq("l_returnflag")
-    val measures = Seq("l_extendedprice")
-    etl.AggProjection.build(Tables.lineitem(s, dir), groups, measures, s"$tmp/proj")
-    def naive = Tables.lineitem(s, dir)
-      .groupBy(col("l_returnflag"))
-      .agg(count(lit(1)).as("cnt"),
-        Exact.sumExact(col("l_extendedprice")).as("sum_l_extendedprice"))
-      .orderBy("l_returnflag")
-    val viaMv = etl.AggProjection.answer(s, s"$tmp/proj", groups, measures)
-      .orderBy("l_returnflag")
-    MvRegistry.register(naive, viaMv)
-    if (!s.experimental.extraOptimizations.contains(RewriteAggToProjection))
-      s.experimental.extraOptimizations ++= Seq(RewriteAggToProjection)
-    s.conf.set("spark.graft.mv.rewrite", "true")
-    naive // a FRESH naive plan — matched by canonical equality, not identity
-  }
-
-  private val mvRewriteSql =
-    """SELECT l_returnflag, CAST(COUNT(*) AS BIGINT) AS cnt,
-      |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_l_extendedprice
-      |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin
-
-  /** PRE-JOIN projection — the other half of Vertica's projection concept
-    * (q_mv_projection/q_mv_rewrite cover the aggregate half): the fact
-    * DENORMALIZED with its dimension at load time, so serving queries
-    * never pay the join. The store is built once; the declared query is a
-    * FRESH naive join+aggregate whose canonical plan the rewrite rule
-    * swaps for the store scan — the join is provably gone (no join node,
-    * neither base table scanned; asserted in OperatorsSpec). The oracle
-    * answers the naive join directly, so the hash also proves the
-    * projection is semantically transparent.
-    */
-  private val qMvPrejoin: Q = (s, dir) => {
-    import org.apache.spark.sql.graftx.{MvRegistry, RewriteAggToProjection}
-    val tmp = java.nio.file.Files.createTempDirectory("graft-mvpj").toString
-    etl.PrejoinProjection.build(Tables.orders(s, dir),
-      Tables.customer(s, dir), col("o_custkey") === col("c_custkey"),
-      Seq(col("o_orderkey"), col("o_totalprice"), col("c_mktsegment")),
-      s"$tmp/prejoin")
-    val store = etl.PrejoinProjection.answer(s, s"$tmp/prejoin")
-    def agg(src: DataFrame) = src
-      .groupBy(col("c_mktsegment"))
-      .agg(count(lit(1)).as("n"), expr("bit_xor(o_orderkey)").as("key_xor"),
-        Exact.sumExact(col("o_totalprice")).as("revenue"))
-      .orderBy("c_mktsegment")
-    def naive = agg(Tables.orders(s, dir).join(Tables.customer(s, dir),
-      col("o_custkey") === col("c_custkey")))
-    MvRegistry.register(naive, agg(store))
-    if (!s.experimental.extraOptimizations.contains(RewriteAggToProjection))
-      s.experimental.extraOptimizations ++= Seq(RewriteAggToProjection)
-    s.conf.set("spark.graft.mv.rewrite", "true")
-    naive // fresh plan — rerouted by canonical equality, not identity
-  }
-
-  private val mvPrejoinSql =
-    """SELECT c_mktsegment, COUNT(*) AS n,
-      |  CAST(bit_xor(o_orderkey) AS BIGINT) AS key_xor,
-      |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS revenue
-      |FROM orders JOIN customer ON o_custkey = c_custkey
-      |GROUP BY 1 ORDER BY 1""".stripMargin
-
-  /** HLL intersection estimate (SketchStore.estimateIntersection):
-    * customer overlap between the year's two halves answered from STORED
-    * month sketches by inclusion–exclusion — sketches union exactly but
-    * can't intersect, so this is the standard estimator and its error
-    * compounds across three estimates. Exact overlap counts are the
-    * oracle-reproducible columns; the estimator's accuracy (within 10% of
-    * the exact union) is emitted as in-engine booleans, per the
-    * established sketch contract.
-    */
-  private val qSketchIntersect: Q = (s, dir) => {
-    val o = Tables.orders(s, dir)
-      .select(monthSid(col("o_orderdate")).as("month_sid"), col("o_custkey"))
-    val sk = SketchStore.build(o, col("month_sid"), col("o_custkey"))
-      .withColumnRenamed("g", "month_sid")
-    val h1 = sk.filter(col("month_sid") % 100 <= 6)
-    val h2 = sk.filter(col("month_sid") % 100 > 6)
-    val est = SketchStore.estimateIntersection(h1, h2)
-    val exact = o.select(col("o_custkey"),
-        (col("month_sid") % 100 <= 6).as("inH1"))
-      .groupBy("o_custkey")
-      .agg(max(when(col("inH1"), 1).otherwise(0)).as("a"),
-        max(when(!col("inH1"), 1).otherwise(0)).as("b"))
-      .agg(sum(col("a")).as("exact_a"), sum(col("b")).as("exact_b"),
-        sum(col("a") * col("b")).as("exact_both"),
-        count(lit(1)).as("exact_union"))
-    exact.crossJoin(broadcast(est)).select(
-      col("exact_a"), col("exact_b"), col("exact_both"), col("exact_union"),
-      (abs(col("est_a") - col("exact_a")) <= col("exact_union") * 0.1)
-        .as("ok_a"),
-      (abs(col("est_b") - col("exact_b")) <= col("exact_union") * 0.1)
-        .as("ok_b"),
-      (abs(col("est_intersection") - col("exact_both"))
-        <= col("exact_union") * 0.1).as("ok_intersection"))
-  }
-
-  private val sketchIntersectSql =
-    """WITH pm AS (
-      |  SELECT o_custkey,
-      |    MAX(CASE WHEN month(o_orderdate) <= 6 THEN 1 ELSE 0 END) AS a,
-      |    MAX(CASE WHEN month(o_orderdate) > 6 THEN 1 ELSE 0 END) AS b
-      |  FROM orders GROUP BY o_custkey
-      |)
-      |SELECT CAST(SUM(a) AS BIGINT) AS exact_a,
-      |  CAST(SUM(b) AS BIGINT) AS exact_b,
-      |  CAST(SUM(a * b) AS BIGINT) AS exact_both,
-      |  COUNT(*) AS exact_union,
-      |  TRUE AS ok_a, TRUE AS ok_b, TRUE AS ok_intersection
-      |FROM pm""".stripMargin
-
-  /** Mergeable HLL sketch store (functions.SketchStore): one sketch per
-    * order-month persisted to parquet, distinct-customer questions over
-    * month SUBSETS answered by unioning stored sketches (never re-scanning
-    * orders). Engine-specific sketch → the established contract: exact
-    * values (oracle-reproducible) + the ±5% estimate check emitted as a
-    * boolean (HLL lgK=12 rel. err ≈1.6%).
-    */
-  private val qSketchStore: Q = (s, dir) => {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-hll").toString
-    val o = Tables.orders(s, dir)
-      .select(monthSid(col("o_orderdate")).as("month_sid"), col("o_custkey"))
-    SketchStore.build(o, col("month_sid"), col("o_custkey"))
-      .withColumnRenamed("g", "month_sid")
-      .write.mode("overwrite").parquet(s"$tmp/sketches")
-    val sk = s.read.parquet(s"$tmp/sketches")
-    def subset(name: String, pred: Column): DataFrame = {
-      val est = SketchStore.estimateUnion(sk.filter(pred))
-        .withColumnRenamed("n_groups", "n_months")
-      val exact = o.filter(pred)
-        .agg(countDistinct(col("o_custkey")).as("n_exact"))
-      est.crossJoin(broadcast(exact))
-        .select(lit(name).as("subset"), col("n_months"), col("n_exact"),
-          (abs(col("est") - col("n_exact")).cast("double") /
-            col("n_exact").cast("double") <= lit(0.05)).as("est_ok"))
-    }
-    subset("all", lit(true))
-      .unionByName(subset("m199706", col("month_sid") === 199706L))
-      .unionByName(subset("y1997",
-        col("month_sid") >= 199701L && col("month_sid") <= 199712L))
-      .orderBy("subset")
-  }
-
-  private val sketchStoreSql = {
-    def row(name: String, where: String) =
-      s"""SELECT '$name' AS subset,
-         |  CAST(COUNT(DISTINCT month_sid) AS BIGINT) AS n_months,
-         |  CAST(COUNT(DISTINCT o_custkey) AS BIGINT) AS n_exact,
-         |  TRUE AS est_ok
-         |FROM m WHERE $where""".stripMargin
-    s"""WITH m AS (
-       |  SELECT $monthSidSql AS month_sid, o_custkey FROM orders)
-       |${row("all", "TRUE")}
-       |UNION ALL
-       |${row("m199706", "month_sid = 199706")}
-       |UNION ALL
-       |${row("y1997", "month_sid BETWEEN 199701 AND 199712")}
-       |ORDER BY subset""".stripMargin
-  }
-
-  /** Mergeable KLL quantile store (functions.QuantileStore), same contract
-    * as the HLL store: per-month sketches persisted once, month-subset
-    * percentile questions answered by merging stored sketch bytes — never
-    * re-scanning facts. Row counts carried by the sketches are hash-checked
-    * exactly against the oracle; the p50/p95 readouts are checked in-engine
-    * by computing their EXACT ranks over the subset and asserting they land
-    * within KLL's rank error (±3% at k=200, comfortably above the ~0.7%
-    * expected) — emitted as booleans the oracle expects TRUE, because the
-    * KLL compaction coin-flip makes raw estimates non-reproducible across
-    * engines (same device as q_approx_distinct).
-    */
-  private val qQuantileStore: Q = (s, dir) => {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-kll").toString
-    val o = Tables.orders(s, dir)
-      .select(monthSid(col("o_orderdate")).as("month_sid"),
-        col("o_totalprice").cast("float").as("v"))
-    graft.functions.QuantileStore.build(o, col("month_sid"), col("v"))
-      .withColumnRenamed("g", "month_sid")
-      .write.mode("overwrite").parquet(s"$tmp/sketches")
-    val sk = s.read.parquet(s"$tmp/sketches")
-    def subset(name: String, pred: Column): DataFrame = {
-      val sel = sk.filter(pred)
-      val merged = graft.functions.QuantileStore.mergeAll(sel)
-      val (q50, q95) = (merged.getQuantile(0.5), merged.getQuantile(0.95))
-      val stats = sel.agg(count(lit(1)).as("n_months"),
-        sum(col("n")).cast("long").as("n_rows"))
-      val exact = o.filter(pred).agg(
-        count(lit(1)).as("n_exact"),
-        (sum(when(col("v") <= lit(q50), 1L).otherwise(0L)).cast("double") /
-          count(lit(1)).cast("double")).as("r50"),
-        (sum(when(col("v") <= lit(q95), 1L).otherwise(0L)).cast("double") /
-          count(lit(1)).cast("double")).as("r95"))
-      // accuracy bound = KLL rank error (±3% at k=200) + 1/n readout
-      // granularity: the achievable rank fractions are k/n, so for a tiny
-      // subset the nearest achievable point to φ can itself be 1/n away
-      // (r12 fix: the m199706 subset at sf0.001 has n=17 — r95 can only be
-      // 16/17=0.941 or 17/17=1.0, and the exact-sketch readout of
-      // rank ⌈0.95·17⌉ is 1.0, outside a bare ±3%). Booleans stay the
-      // oracle-expected TRUE at every SF; the claim is now satisfiable by
-      // construction at any n.
-      val slack = lit(0.03) + lit(1.0) / col("n_exact").cast("double")
-      stats.crossJoin(broadcast(exact))
-        .select(lit(name).as("subset"), col("n_months"), col("n_rows"),
-          col("n_exact"),
-          (col("n_rows") === col("n_exact")).as("count_ok"),
-          (abs(col("r50") - lit(0.5)) <= slack).as("r50_ok"),
-          (abs(col("r95") - lit(0.95)) <= slack).as("r95_ok"))
-    }
-    subset("all", lit(true))
-      .unionByName(subset("m199706", col("month_sid") === 199706L))
-      .unionByName(subset("y1997",
-        col("month_sid") >= 199701L && col("month_sid") <= 199712L))
-      .orderBy("subset")
-  }
-
-  private val quantileStoreSql = {
-    def row(name: String, where: String) =
-      s"""SELECT '$name' AS subset,
-         |  CAST(COUNT(DISTINCT month_sid) AS BIGINT) AS n_months,
-         |  CAST(COUNT(*) AS BIGINT) AS n_rows,
-         |  CAST(COUNT(*) AS BIGINT) AS n_exact,
-         |  TRUE AS count_ok, TRUE AS r50_ok, TRUE AS r95_ok
-         |FROM m WHERE $where""".stripMargin
-    s"""WITH m AS (
-       |  SELECT $monthSidSql AS month_sid FROM orders)
-       |${row("all", "TRUE")}
-       |UNION ALL
-       |${row("m199706", "month_sid = 199706")}
-       |UNION ALL
-       |${row("y1997", "month_sid BETWEEN 199701 AND 199712")}
-       |ORDER BY subset""".stripMargin
-  }
-
-  /** JSONL round-trip (sources.Sources.jsonl/jsonlWrite): documents out to
-    * gzip line-JSON and back with an explicit schema, then aggregated with
-    * an order-free 64-bit content checksum (bit_xor of rolling hashes) per
-    * language. The oracle aggregates the ORIGINAL table — the hash matches
-    * only if every row and every text byte survived the format hop.
-    */
-  private val qJsonlRoundtrip: Q = (s, dir) => {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-jsonl").toString
-    val docs = Tables.documents(s, dir)
-    graft.sources.Sources.jsonlWrite(docs, s"$tmp/docs", partitions = 4)
-    graft.sources.Sources.jsonl(s, s"$tmp/docs", docs.schema)
-      .select(col("lang"), col("doc_id"), col("n_chars"),
-        rolling_hash(col("text")).as("fp"))
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("chars"),
-        expr("bit_xor(doc_id)").as("id_xor"),
-        expr("bit_xor(fp)").as("text_xor"))
-      .orderBy("lang")
-  }
-
-  private def jsonlRoundtripSqlGen: String =
-    s"""SELECT lang, COUNT(*) AS n, CAST(SUM(n_chars) AS BIGINT) AS chars,
-       |  CAST(bit_xor(doc_id) AS BIGINT) AS id_xor,
-       |  CAST(bit_xor(${u64ToSigned(rollingFoldSql("text"))}) AS BIGINT) AS text_xor
-       |FROM documents GROUP BY lang ORDER BY lang""".stripMargin
-
-  /** Zstd-compressed JSONL corpus shards (sources.Sources.jsonlZst*): the
-    * de-facto public-corpus interchange layout (`part-*.jsonl.zst`, one
-    * non-splittable shard per task both ways). Documents stream out
-    * through the zstd sink and back with an explicit schema, then
-    * aggregate per source with order-free 64-bit content checksums — the
-    * oracle aggregates the ORIGINAL table, so the hash matches only if
-    * every row, every text byte, and the lang attribute survived the
-    * compress → shard → decompress → from_json hop.
-    */
-  private val qCorpusZst: Q = (s, dir) => {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-jsonlzst").toString
-    val docs = Tables.documents(s, dir)
-      .select(col("doc_id"), col("source"), col("lang"), col("text"))
-    graft.sources.Sources.jsonlZstWrite(docs, s"$tmp/corpus", numShards = 5)
-    graft.sources.Sources.jsonlZst(s, s"$tmp/corpus", docs.schema)
-      .select(col("source"), col("doc_id"),
-        length(col("text")).cast("long").as("chars"),
-        rolling_hash(col("text")).as("fp"),
-        rolling_hash(col("lang")).as("lfp"))
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n"), sum(col("chars")).as("chars"),
-        expr("bit_xor(doc_id)").as("id_xor"),
-        expr("bit_xor(fp)").as("text_xor"),
-        expr("bit_xor(lfp)").as("lang_xor"))
-      .orderBy("source")
-  }
-
-  private def corpusZstSqlGen: String =
-    s"""SELECT source, COUNT(*) AS n,
-       |  CAST(SUM(length(text)) AS BIGINT) AS chars,
-       |  CAST(bit_xor(doc_id) AS BIGINT) AS id_xor,
-       |  CAST(bit_xor(${u64ToSigned(rollingFoldSql("text"))}) AS BIGINT) AS text_xor,
-       |  CAST(bit_xor(${u64ToSigned(rollingFoldSql("lang"))}) AS BIGINT) AS lang_xor
-       |FROM documents GROUP BY source ORDER BY source""".stripMargin
-
-  /** WARC round-trip (sources.Warc): documents out to gzip'd WARC archives
-    * (the Common Crawl interchange shape — Content-Length-framed records,
-    * one non-splittable archive per partition) and parsed back, then
-    * aggregated per source with order-free content checksums. The oracle
-    * aggregates the ORIGINAL table — the hash matches only if every record,
-    * every text byte and both carried attributes survived the format hop.
-    */
-  private val qWarcRoundtrip: Q = (s, dir) => {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-warc").toString
-    graft.sources.Warc.write(Tables.documents(s, dir), s"$tmp/crawl",
-      numFiles = 6)
-    graft.sources.Warc.read(s, s"$tmp/crawl")
-      .select(col("source"), col("doc_id"),
-        length(col("text")).cast("long").as("chars"),
-        rolling_hash(col("text")).as("fp"),
-        rolling_hash(col("lang")).as("lfp"))
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n"), sum(col("chars")).as("chars"),
-        expr("bit_xor(doc_id)").as("id_xor"),
-        expr("bit_xor(fp)").as("text_xor"),
-        expr("bit_xor(lfp)").as("lang_xor"))
-      .orderBy("source")
-  }
-
-  private def warcRoundtripSqlGen: String =
-    s"""SELECT source, COUNT(*) AS n,
-       |  CAST(SUM(length(text)) AS BIGINT) AS chars,
-       |  CAST(bit_xor(doc_id) AS BIGINT) AS id_xor,
-       |  CAST(bit_xor(${u64ToSigned(rollingFoldSql("text"))}) AS BIGINT) AS text_xor,
-       |  CAST(bit_xor(${u64ToSigned(rollingFoldSql("lang"))}) AS BIGINT) AS lang_xor
-       |FROM documents GROUP BY source ORDER BY source""".stripMargin
-
-  /** Gopher document-level rule filter (quality.RuleFilters.gopher): the
-    * published rule bundle — word-count band, mean-word-length band,
-    * symbol-to-word ratio, alphabetic-word ratio, required-stopword hits —
-    * as ONE map-only codegen projection, thresholds in integer
-    * cross-multiplied form so every boolean is bit-exact. The oracle
-    * recomputes each rule from the same constants in DuckDB list SQL.
-    */
-  private val qGopherRules: Q = (s, dir) => {
-    graft.quality.RuleFilters.gopher(
-      Tables.documents(s, dir).select(col("doc_id"), col("lang"), col("text")))
-      .drop("text")
-      .orderBy("doc_id")
-  }
-
-  private val gopherRulesSql = {
-    import graft.quality.RuleFilters._
-    val stop = graft.functions.TextFunctions.EnglishStopwords
-      .map(w => s"'$w'").mkString("[", ", ", "]")
-    s"""WITH t AS (
-       |  SELECT doc_id, lang,
-       |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_words,
-       |    CAST(length(text) - (len(string_split(text, ' ')) - 1) AS BIGINT)
-       |      AS word_chars,
-       |    CAST(len(list_filter(string_split(text, ' '),
-       |      w -> regexp_matches(w, '[a-zA-Z]'))) AS BIGINT) AS alpha_words,
-       |    CAST((length(text) - length(replace(text, '#', ''))) +
-       |      (length(text) - length(replace(text, '...', ''))) // 3
-       |      AS BIGINT) AS symbols,
-       |    CAST(len(list_filter(string_split(text, ' '),
-       |      w -> list_contains($stop, w))) AS BIGINT) AS stop_hits
-       |  FROM documents)
-       |SELECT doc_id, lang,
-       |  (n_words >= $MinWords AND n_words <= $MaxWords) AS word_count_ok,
-       |  (word_chars >= $MinMeanWordLen * n_words AND
-       |   word_chars <= $MaxMeanWordLen * n_words) AS mean_word_len_ok,
-       |  (symbols * 10 < n_words) AS symbol_ratio_ok,
-       |  (alpha_words * 5 >= n_words * 4) AS alpha_ratio_ok,
-       |  (stop_hits >= $MinStopwordHits) AS stopwords_ok,
-       |  ((n_words >= $MinWords AND n_words <= $MaxWords) AND
-       |   (word_chars >= $MinMeanWordLen * n_words AND
-       |    word_chars <= $MaxMeanWordLen * n_words) AND
-       |   (symbols * 10 < n_words) AND
-       |   (alpha_words * 5 >= n_words * 4) AND
-       |   (stop_hits >= $MinStopwordHits)) AS keep
-       |FROM t ORDER BY doc_id""".stripMargin
-  }
-
-  /** HTML → text extraction (pipeline.HtmlExtract): each document becomes
-    * a deterministic synthetic PAGE — title, style + script blocks (whose
-    * content must vanish), two paragraphs, an entity (`&amp;`), an anchor
-    * carrying 4 tokens, an HTML comment — and the extractor strips blocks,
-    * strips tags, decodes entities, and collapses whitespace as one
-    * map-only codegen regex chain; link density comes out in exact integer
-    * form. The oracle rebuilds the identical page in SQL and replays the
-    * SAME regex chain (generated from the same pattern constants), so the
-    * extracted-text fingerprint matches only if every removal, decode, and
-    * collapse is byte-exact.
-    */
-  private val qHtmlExtract: Q = (s, dir) => {
-    import graft.pipeline.HtmlExtract
-    val toks = split(col("text"), " ")
-    val id = col("doc_id").cast("string")
-    val html = concat(
-      lit("<html><head><title>Doc "), id, lit("</title>"),
-      lit("<style>body { color: #000; }</style>"),
-      lit("<script>var n = "), id, lit("; if (n &lt; 0) {}</script>"),
-      lit("</head><body><h1>Doc "), id, lit("</h1>"),
-      lit("<p>"), array_join(slice(toks, 1, 12), " "), lit(" &amp; more</p>"),
-      lit("<a href=\"/doc/"), id, lit("\">"),
-      array_join(slice(toks, 13, 4), " "), lit("</a>"),
-      lit("<!-- crawler: ignore -->"),
-      lit("<p>"), array_join(slice(toks, 17, 1000000), " "),
-      lit("</p></body></html>"))
-    Tables.documents(s, dir)
-      .select(col("doc_id"), html.as("html"))
-      .select(col("doc_id"),
-        HtmlExtract.title(col("html")).as("title"),
-        length(HtmlExtract.text(col("html"))).cast("long").as("text_chars"),
-        rolling_hash(HtmlExtract.text(col("html"))).as("text_fp"),
-        length(HtmlExtract.anchorText(col("html"))).cast("long")
-          .as("anchor_chars"),
-        HtmlExtract.lowLinkDensity(col("html")).as("low_link_density"))
-      .orderBy("doc_id")
-  }
-
-  private def htmlExtractSqlGen: String = {
-    import graft.pipeline.HtmlExtract
-    val htmlExpr =
-      """'<html><head><title>Doc ' || doc_id || '</title>' ||
-        |'<style>body { color: #000; }</style>' ||
-        |'<script>var n = ' || doc_id || '; if (n &lt; 0) {}</script>' ||
-        |'</head><body><h1>Doc ' || doc_id || '</h1>' ||
-        |'<p>' || array_to_string(toks[1:12], ' ') || ' &amp; more</p>' ||
-        |'<a href="/doc/' || doc_id || '">' ||
-        |(CASE WHEN len(toks) >= 13
-        |      THEN array_to_string(toks[13:16], ' ') ELSE '' END) || '</a>' ||
-        |'<!-- crawler: ignore -->' ||
-        |'<p>' || (CASE WHEN len(toks) >= 17
-        |          THEN array_to_string(toks[17:len(toks)], ' ') ELSE '' END) ||
-        |'</p></body></html>'""".stripMargin
-    s"""WITH t AS (
-       |  SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-       |h AS (SELECT doc_id, $htmlExpr AS html FROM t),
-       |x AS (
-       |  SELECT doc_id, html,
-       |    ${HtmlExtract.textSql("html")} AS txt,
-       |    ${HtmlExtract.anchorTextSql("html")} AS atxt
-       |  FROM h)
-       |SELECT doc_id,
-       |  ${HtmlExtract.titleSql("html")} AS title,
-       |  CAST(length(txt) AS BIGINT) AS text_chars,
-       |  CAST(${u64ToSigned(rollingFoldSql("txt"))} AS BIGINT) AS text_fp,
-       |  CAST(length(atxt) AS BIGINT) AS anchor_chars,
-       |  (length(atxt) * 10 <= length(txt) * 3) AS low_link_density
-       |FROM x ORDER BY doc_id""".stripMargin
-  }
-
-  /** C4 line-level cleaning (quality.RuleFilters.c4KeptLines/c4PageDrop):
-    * each document becomes a deterministic synthetic PAGE — 8-token lines,
-    * terminal '.' on lines where (doc_id+i)%3≠0, '- ' bullet prefix where
-    * (doc_id+i)%5=0, a "lorem ipsum" line appended on doc_id%97=0 — then
-    * the published line rules run as one codegen projection: keep lines
-    * ending in terminal punctuation with ≥4 words that aren't bullets;
-    * drop pages containing a blocklisted phrase or braces. Output carries
-    * a rolling-hash fingerprint of the CLEANED text, so the oracle (which
-    * rebuilds the page and replays the rules in DuckDB list SQL) matches
-    * only if line synthesis, filtering, and reassembly are byte-exact.
-    */
-  private val qC4LineFilter: Q = (s, dir) => {
-    import graft.quality.RuleFilters
-    val toks = split(col("text"), " ")
-    val baseLines = transform(
-      sequence(lit(0), ((size(toks) + lit(7)) / lit(8)).cast("int") - lit(1)),
-      i => {
-        val base = array_join(slice(toks, i * lit(8) + lit(1), lit(8)), " ")
-        val bullet = when((col("doc_id") + i) % 5 === 0,
-          concat(lit("- "), base)).otherwise(base)
-        when((col("doc_id") + i) % 3 =!= 0, concat(bullet, lit(".")))
-          .otherwise(bullet)
-      })
-    val lines = when(col("doc_id") % 97 === 0,
-      concat(baseLines, array(lit("lorem ipsum dolor sit amet."))))
-      .otherwise(baseLines)
-    Tables.documents(s, dir)
-      .select(col("doc_id"), lines.as("lines"))
-      .select(col("doc_id"),
-        size(col("lines")).cast("long").as("n_lines"),
-        size(RuleFilters.c4KeptLines(col("lines"))).cast("long").as("n_kept"),
-        rolling_hash(concat_ws("\n", RuleFilters.c4KeptLines(col("lines"))))
-          .as("cleaned_fp"),
-        RuleFilters.c4PageDrop(col("lines")).as("page_drop"))
-      .orderBy("doc_id")
-  }
-
-  private def c4LineFilterSqlGen: String = {
-    val lineExpr = // i-th 8-token line with bullet/punct decoration
-      """CASE WHEN (doc_id + i) % 3 != 0 THEN
-        |  (CASE WHEN (doc_id + i) % 5 = 0
-        |     THEN '- ' || array_to_string(toks[i*8+1 : i*8+8], ' ')
-        |     ELSE array_to_string(toks[i*8+1 : i*8+8], ' ') END) || '.'
-        |ELSE
-        |  (CASE WHEN (doc_id + i) % 5 = 0
-        |     THEN '- ' || array_to_string(toks[i*8+1 : i*8+8], ' ')
-        |     ELSE array_to_string(toks[i*8+1 : i*8+8], ' ') END)
-        |END""".stripMargin
-    val keptExpr =
-      """list_filter(lines, l ->
-        |  (l LIKE '%.' OR l LIKE '%!' OR l LIKE '%?' OR l LIKE '%"')
-        |  AND len(string_split(l, ' ')) >= 4 AND l NOT LIKE '- %')""".stripMargin
-    s"""WITH t AS (
-       |  SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-       |p AS (
-       |  SELECT doc_id,
-       |    CASE WHEN doc_id % 97 = 0 THEN
-       |      list_concat(
-       |        list_transform(range(0, (len(toks)+7)//8), i -> $lineExpr),
-       |        ['lorem ipsum dolor sit amet.'])
-       |    ELSE list_transform(range(0, (len(toks)+7)//8), i -> $lineExpr)
-       |    END AS lines
-       |  FROM t),
-       |k AS (
-       |  SELECT doc_id, lines, $keptExpr AS kept,
-       |    array_to_string($keptExpr, chr(10)) AS cleaned
-       |  FROM p)
-       |SELECT doc_id,
-       |  CAST(len(lines) AS BIGINT) AS n_lines,
-       |  CAST(len(kept) AS BIGINT) AS n_kept,
-       |  CAST(${u64ToSigned(rollingFoldSql("cleaned"))} AS BIGINT) AS cleaned_fp,
-       |  (contains(lower(array_to_string(lines, chr(10))), 'lorem ipsum') OR
-       |   contains(array_to_string(lines, chr(10)), '{') OR
-       |   contains(array_to_string(lines, chr(10)), '}')) AS page_drop
-       |FROM k ORDER BY doc_id""".stripMargin
-  }
-
-  /** Hashed-feature linear classifier inference (quality.LinearScorer):
-    * per-document exact integer score from a fastText-style bucket-weight
-    * model baked into the plan as a literal — the apply-a-trained-filter
-    * pass of a training-data pipeline, shaped as ONE map-only codegen
-    * projection. The oracle replays hash, bucket mask and weight lookup
-    * from the same constants and weight array.
-    */
-  private val qQualityClassifier: Q = (s, dir) => {
-    import graft.quality.LinearScorer
-    Tables.documents(s, dir)
-      .select(col("doc_id"), col("lang"),
-        size(split(col("text"), " ")).cast("long").as("n_tokens"),
-        LinearScorer.score(col("text")).as("w_sum"))
-      .withColumn("kept", col("w_sum") > lit(0L))
-      .orderBy("doc_id")
-  }
-
-  private def qualityClassifierSqlGen: String =
-    s"""SELECT doc_id, lang,
-       |  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-       |  ${graft.quality.LinearScorer.scoreSql("text")} AS w_sum,
-       |  ${graft.quality.LinearScorer.scoreSql("text")} > 0 AS kept
-       |FROM documents ORDER BY doc_id""".stripMargin
-
-  /** Real media-container metadata decode (multimodal.MediaHeaders): one
-    * payload per document — a VALID minimal PNG / JPEG / GIF / BMP / WAV
-    * whose dimensions (or rate/channels) come from integer formulas of
-    * doc_id — header-parsed back with the real wire-format codecs (CRC'd
-    * PNG chunk walk, JPEG SOF scan, ...). The query aggregates PARSED
-    * values; the oracle recomputes the formulas directly — the hash
-    * matches only if encode∘parse is the identity on all five formats for
-    * every document. Batch map-only, the extractFeatures partition shape.
-    */
-  private val qMediaHeaders: Q = (s, dir) => {
-    import s.implicits._
-    import graft.multimodal.MediaHeaders
-    Tables.documents(s, dir).select(col("doc_id")).as[Long]
-      .mapPartitions { ids =>
-        ids.map { id =>
-          val w = 16 + ((id * 7) % 240).toInt
-          val h = 16 + ((id * 13) % 240).toInt
-          val bytes = (id % 5) match {
-            case 0 => MediaHeaders.pngBytes(w, h)
-            case 1 => MediaHeaders.jpegBytes(w, h)
-            case 2 => MediaHeaders.gifBytes(w, h)
-            case 3 => MediaHeaders.bmpBytes(w, h)
-            case _ => MediaHeaders.wavBytes(8000 + (id % 8).toInt * 4000,
-              1 + (id % 2).toInt)
-          }
-          val m = MediaHeaders.parse(bytes).get
-          (id, m.kind, m.a, m.b)
-        }
-      }.toDF("doc_id", "kind", "a", "b")
-      .groupBy("kind")
-      .agg(count(lit(1)).as("n"),
-        sum(col("a")).cast("long").as("a_sum"),
-        sum(col("b")).cast("long").as("b_sum"),
-        min(col("a")).cast("long").as("a_min"),
-        max(col("a")).cast("long").as("a_max"))
-      .orderBy("kind")
-  }
-
-  private val mediaHeadersSql =
-    """WITH m AS (
-      |  SELECT doc_id,
-      |    CASE doc_id % 5 WHEN 0 THEN 'png' WHEN 1 THEN 'jpeg'
-      |      WHEN 2 THEN 'gif' WHEN 3 THEN 'bmp' ELSE 'wav' END AS kind,
-      |    CASE WHEN doc_id % 5 = 4 THEN 8000 + (doc_id % 8) * 4000
-      |      ELSE 16 + (doc_id * 7) % 240 END AS a,
-      |    CASE WHEN doc_id % 5 = 4 THEN 1 + doc_id % 2
-      |      ELSE 16 + (doc_id * 13) % 240 END AS b
-      |  FROM documents)
-      |SELECT kind, COUNT(*) AS n, CAST(SUM(a) AS BIGINT) AS a_sum,
-      |  CAST(SUM(b) AS BIGINT) AS b_sum, CAST(MIN(a) AS BIGINT) AS a_min,
-      |  CAST(MAX(a) AS BIGINT) AS a_max
-      |FROM m GROUP BY kind ORDER BY kind""".stripMargin
-
-  /** Compressed A/V container metadata decode
-    * ([[graft.multimodal.MediaHeaders.parseAv]]): real wire-format parsing
-    * of the three containers a crawled A/V corpus is made of — MP4
-    * (ISO-BMFF box walk: mvhd timescale/duration normalized to ms by
-    * integer division, tkhd 16.16 pixel dims), MP3 (ID3v2 syncsafe skip +
-    * MPEG-1 Layer III header through the published bitrate/sample-rate
-    * tables), FLAC (STREAMINFO bit-unpack: rate 20b, channels 3b, total
-    * samples 36b). Fixtures are formula-built encoder output, so the
-    * oracle recomputes every field from the same formulas (the
-    * q_media_headers pattern) — a match proves encode∘parse identity
-    * including the timescale math and the table lookups.
-    */
-  private val qAvContainerMeta: Q = (s, dir) => {
-    import s.implicits._
-    import graft.multimodal.MediaHeaders
-    Tables.documents(s, dir).select(col("doc_id")).as[Long]
-      .mapPartitions { ids =>
-        ids.map { id =>
-          val bytes = (id % 3) match {
-            case 0 => MediaHeaders.mp4Bytes(
-              timescale = 600 + ((id % 5) * 200).toInt,
-              durationTicks = ((id * 37) % 100000).toInt,
-              w = 160 + ((id * 7) % 1760).toInt,
-              h = 90 + ((id * 11) % 990).toInt)
-            case 1 => MediaHeaders.mp3Bytes(
-              bitrateIdx = 1 + (id % 14).toInt, srIdx = ((id % 7) % 3).toInt)
-            case _ => MediaHeaders.flacBytes(
-              sampleRate = 8000 + ((id % 9) * 4900).toInt,
-              channels = 1 + (id % 2).toInt,
-              totalSamples = (id * 441) % 1000000)
-          }
-          val m = MediaHeaders.parseAv(bytes).get
-          (id, m.kind, m.a, m.b, m.c)
-        }
-      }.toDF("doc_id", "kind", "a", "b", "c")
-      .groupBy("kind")
-      .agg(count(lit(1)).as("n"), sum(col("a")).as("a_sum"),
-        sum(col("b")).as("b_sum"), sum(col("c")).as("c_sum"),
-        min(col("a")).as("a_min"), max(col("b")).as("b_max"))
-      .orderBy("kind")
-  }
-
-  private val avContainerMetaSql = {
-    val br = graft.multimodal.MediaHeaders.Mp3Bitrates.drop(1)
-      .mkString("[", ", ", "]")
-    val sr = graft.multimodal.MediaHeaders.Mp3SampleRates
-      .mkString("[", ", ", "]")
-    s"""WITH m AS (
-       |  SELECT doc_id,
-       |    CASE doc_id % 3 WHEN 0 THEN 'mp4' WHEN 1 THEN 'mp3'
-       |      ELSE 'flac' END AS kind,
-       |    CASE doc_id % 3
-       |      WHEN 0 THEN (((doc_id * 37) % 100000) * 1000)
-       |                    // (600 + (doc_id % 5) * 200)
-       |      WHEN 1 THEN CAST($br[CAST(doc_id % 14 AS INT) + 1] AS BIGINT)
-       |      ELSE 8000 + (doc_id % 9) * 4900 END AS a,
-       |    CASE doc_id % 3
-       |      WHEN 0 THEN 160 + (doc_id * 7) % 1760
-       |      WHEN 1 THEN CAST($sr[CAST((doc_id % 7) % 3 AS INT) + 1] AS BIGINT)
-       |      ELSE 1 + doc_id % 2 END AS b,
-       |    CASE doc_id % 3
-       |      WHEN 0 THEN 90 + (doc_id * 11) % 990
-       |      WHEN 1 THEN 0
-       |      ELSE (doc_id * 441) % 1000000 END AS c
-       |  FROM documents)
-       |SELECT kind, COUNT(*) AS n, CAST(SUM(a) AS BIGINT) AS a_sum,
-       |  CAST(SUM(b) AS BIGINT) AS b_sum, CAST(SUM(c) AS BIGINT) AS c_sum,
-       |  CAST(MIN(a) AS BIGINT) AS a_min, CAST(MAX(b) AS BIGINT) AS b_max
-       |FROM m GROUP BY kind ORDER BY kind""".stripMargin
-  }
-
-  /** Outlink host graph (pipeline.HtmlExtract.links): each document
-    * becomes a page with three formula-targeted anchors (plus a `<link>`
-    * stylesheet decoy the `<a>`-only extractor must skip), hrefs are
-    * extracted in document order by one codegen regex, and the host-level
-    * adjacency (crawl-source host → link-target host) is aggregated — the
-    * edge-building pass ahead of the graph suite (PageRank/CC run on
-    * exactly this relation at crawl scale). The oracle rebuilds the same
-    * pages and replays the same regex + host parse in SQL.
-    */
-  private val qLinkGraph: Q = (s, dir) => {
-    import graft.pipeline.HtmlExtract
-    def target(m: Int, a: Int) = pmod(col("doc_id") * m + a, lit(1000))
-    def anchor(m: Int, a: Int) = concat(
-      lit("<a class=\"out\" href=\"http://src"),
-      pmod(target(m, a), lit(10)),
-      lit(".example.com/docs/item-"), target(m, a), lit("\">l</a>"))
-    val html = concat(
-      lit("<html><body><link href=\"http://cdn.example.com/style.css\">"),
-      anchor(2, 17), lit("<p>text</p>"), anchor(3, 29), anchor(7, 43),
-      lit("</body></html>"))
-    Tables.documents(s, dir)
-      .select(col("doc_id"), col("source"), html.as("html"))
-      .select(col("source"),
-        explode(HtmlExtract.links(col("html"))).as("href"))
-      .select(concat(col("source"), lit(".example.com")).as("src_host"),
-        regexp_extract(col("href"), "^http://([^/]+)/", 1).as("dst_host"),
-        col("href"))
-      .groupBy("src_host", "dst_host")
-      .agg(count(lit(1)).as("n_links"),
-        countDistinct(col("href")).as("n_urls"))
-      .orderBy("src_host", "dst_host")
-  }
-
-  private def linkGraphSqlGen: String = {
-    import graft.pipeline.HtmlExtract
-    def anchorSql(m: Int, a: Int) =
-      s"""'<a class="out" href="http://src' || ((doc_id*$m+$a)%1000)%10 ||
-         |'.example.com/docs/item-' || (doc_id*$m+$a)%1000 || '">l</a>'""".stripMargin
-    s"""WITH h AS (
-       |  SELECT doc_id, source,
-       |    '<html><body><link href="http://cdn.example.com/style.css">' ||
-       |    ${anchorSql(2, 17)} || '<p>text</p>' ||
-       |    ${anchorSql(3, 29)} || ${anchorSql(7, 43)} ||
-       |    '</body></html>' AS html
-       |  FROM documents),
-       |l AS (SELECT doc_id, source,
-       |        unnest(${HtmlExtract.linksSql("html")}) AS href FROM h)
-       |SELECT source || '.example.com' AS src_host,
-       |  regexp_extract(href, '^http://([^/]+)/', 1) AS dst_host,
-       |  COUNT(*) AS n_links,
-       |  CAST(COUNT(DISTINCT href) AS BIGINT) AS n_urls
-       |FROM l GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
-  }
-
-  /** robots.txt compliance gate (pipeline.Robots): per-host robots files —
-    * each with a decoy `BadBot` group that disallows everything, a `*`
-    * group with a host-specific Disallow + a longer Allow exception, a
-    * non-rule directive, and comments — are parsed by the real REP parser,
-    * and every document URL is gated by RFC 9309 semantics (longest
-    * matching prefix wins, Allow wins ties, unmatched ⇒ allowed) through a
-    * broadcast rules join. The fixture formulas make each outcome class
-    * reachable (URL path digit collides with the host's disallow exactly
-    * when doc_id%5=0; the /ok suffix then flips it back to allowed), so
-    * the oracle derives every decision in closed form — a match proves
-    * group selection, tie-breaking, and prefix matching together.
-    */
-  private val qRobotsGate: Q = (s, dir) => {
-    import graft.pipeline.Robots
-    val robotsTxt = (0 until 10).map { h =>
-      (s"src$h.example.com",
-        s"""# crawl policy for src$h
-           |User-agent: BadBot
-           |Disallow: /
-           |
-           |User-agent: *
-           |Disallow: /docs/item-$h
-           |Allow: /docs/item-$h/ok
-           |Crawl-delay: 5
-           |Disallow: /tmp
-           |""".stripMargin)
-    }
-    import s.implicits._
-    val rules = Robots.rulesOf(robotsTxt.toDF("host", "txt"))
-    val urls = Tables.documents(s, dir).select(col("doc_id"),
-      concat(lit("src"), pmod(col("doc_id") * 3, lit(10)),
-        lit(".example.com")).as("host"),
-      concat(lit("/docs/item-"), pmod(col("doc_id"), lit(10)),
-        when(col("doc_id") % 3 === 1, lit("/ok"))
-          .when(col("doc_id") % 3 === 2, lit("/x"))
-          .otherwise(lit(""))).as("path"))
-    Robots.gate(urls, rules)
-      .groupBy("host")
-      .agg(count(lit(1)).as("n"),
-        sum(col("allowed").cast("long")).as("n_allowed"),
-        expr("bit_xor(case when allowed then 0 else doc_id end)")
-          .as("disallowed_xor"))
-      .orderBy("host")
-  }
-
-  private val robotsGateSql =
-    """WITH u AS (
-      |  SELECT doc_id,
-      |    'src' || (doc_id*3)%10 || '.example.com' AS host,
-      |    -- matched iff path digit = host digit ⟺ doc_id%5=0;
-      |    -- the /ok suffix (doc_id%3=1) hits the longer Allow rule
-      |    NOT (doc_id % 5 = 0 AND doc_id % 3 <> 1) AS allowed
-      |  FROM documents)
-      |SELECT host, COUNT(*) AS n,
-      |  CAST(SUM(CASE WHEN allowed THEN 1 ELSE 0 END) AS BIGINT) AS n_allowed,
-      |  CAST(bit_xor(CASE WHEN allowed THEN 0 ELSE doc_id END) AS BIGINT)
-      |    AS disallowed_xor
-      |FROM u GROUP BY host ORDER BY host""".stripMargin
-
-  /** Unicode-canonicalization dedup ([[org.apache.spark.sql.graftx.UnicodeFold]]
-    * — native codegen expression): the corpus is doubled with two
-    * renderings of the same logical prefix — composed uppercase
-    * `CAFÉ niño` (U+00C9/U+00F1) and decomposed lowercase
-    * `cafe´ nin˜o` (combining U+0301/U+0303) — and exact dedup runs on
-    * `rolling_hash(unicode_fold(t))`. Raw fingerprints see 2N distinct
-    * docs; folded fingerprints see N (every composed/decomposed/case pair
-    * collapses). The oracle folds with
-    * `lower(strip_accents(nfc_normalize(t)))` — independent code, same
-    * canonicalization contract — and replays both distinct counts plus the
-    * folded-key XOR.
-    */
-  private val qUnicodeDedup: Q = (s, dir) => {
-    import org.apache.spark.sql.graftx.UnicodeFold.unicode_fold
-    val docs = Tables.documents(s, dir)
-      .select(col("doc_id"), col("lang"), col("text"))
-    val va = docs.withColumn("t", concat(lit("CAFÉ niño - "), col("text")))
-    val vb = docs.withColumn("t",
-      concat(lit("cafe\u0301 nin\u0303o - "), col("text")))
-    va.unionByName(vb)
-      .select(col("lang"), rolling_hash(unicode_fold(col("t"))).as("k"),
-        rolling_hash(col("t")).as("raw_k"))
-      .groupBy("lang")
-      .agg(count(lit(1)).as("n_rows"),
-        countDistinct(col("k")).as("n_unique"),
-        countDistinct(col("raw_k")).as("n_raw"),
-        expr("bit_xor(distinct k)").as("k_xor"))
-      .orderBy("lang")
-  }
-
-  private def unicodeDedupSqlGen: String = {
-    val folded = "lower(strip_accents(nfc_normalize(t)))"
-    s"""WITH c AS (
-       |  SELECT lang, 'CAFÉ niño - ' || text AS t FROM documents
-       |  UNION ALL
-       |  SELECT lang, 'café niño - ' || text AS t FROM documents),
-       |k AS (
-       |  SELECT lang,
-       |    CAST(${u64ToSigned(rollingFoldSql(folded))} AS BIGINT) AS k,
-       |    CAST(${u64ToSigned(rollingFoldSql("t"))} AS BIGINT) AS raw_k
-       |  FROM c)
-       |SELECT lang, COUNT(*) AS n_rows,
-       |  CAST(COUNT(DISTINCT k) AS BIGINT) AS n_unique,
-       |  CAST(COUNT(DISTINCT raw_k) AS BIGINT) AS n_raw,
-       |  CAST(bit_xor(DISTINCT k) AS BIGINT) AS k_xor
-       |FROM k GROUP BY lang ORDER BY lang""".stripMargin
-  }
-
-  /** Charset sniffing over raw byte payloads
-    * ([[graft.multimodal.Charset]]): each document's text bytes get a
-    * formula-chosen tail — nothing (pure ASCII), valid 2-byte + 3-byte
-    * UTF-8 sequences, a lone continuation byte, or a truncated lead — and
-    * the hand-rolled RFC 3629 state machine classifies ascii/utf8/invalid,
-    * counting decoded codepoints and invalid bytes. The oracle knows what
-    * each tail must yield (ASCII text contributes its own length in
-    * codepoints; the valid tail +2 chars; each broken tail +1 bad byte) —
-    * a match proves the validator's sequence-length, continuation, and
-    * resync rules on every class.
-    */
-  private val qCharsetDetect: Q = (s, dir) => {
-    import s.implicits._
-    import graft.multimodal.Charset
-    Tables.documents(s, dir)
-      .select(col("doc_id"), col("text")).as[(Long, String)]
-      .mapPartitions { rows =>
-        rows.map { case (id, text) =>
-          val base = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          val tail: Array[Byte] = (id % 4) match {
-            case 0 => Array.empty
-            case 1 => Array(0xc3, 0xa9, 0xe4, 0xb8, 0xad).map(_.toByte) // é中
-            case 2 => Array(0x80.toByte) // lone continuation
-            case _ => Array(0xc3.toByte) // truncated lead
-          }
-          val inf = Charset.info(base ++ tail)
-          (id, inf.kind, inf.chars, inf.bad)
-        }
-      }.toDF("doc_id", "kind", "chars", "bad")
-      .groupBy("kind")
-      .agg(count(lit(1)).as("n"), sum(col("chars")).as("chars_sum"),
-        sum(col("bad")).as("bad_sum"),
-        expr("bit_xor(doc_id)").as("id_xor"))
-      .orderBy("kind")
-  }
-
-  private val charsetDetectSql =
-    """WITH m AS (
-      |  SELECT doc_id,
-      |    CASE doc_id % 4 WHEN 0 THEN 'ascii' WHEN 1 THEN 'utf8'
-      |      ELSE 'invalid' END AS kind,
-      |    CAST(length(text) + CASE WHEN doc_id % 4 = 1 THEN 2 ELSE 0 END
-      |      AS BIGINT) AS chars,
-      |    CAST(CASE WHEN doc_id % 4 >= 2 THEN 1 ELSE 0 END AS BIGINT) AS bad
-      |  FROM documents)
-      |SELECT kind, COUNT(*) AS n, CAST(SUM(chars) AS BIGINT) AS chars_sum,
-      |  CAST(SUM(bad) AS BIGINT) AS bad_sum,
-      |  CAST(bit_xor(doc_id) AS BIGINT) AS id_xor
-      |FROM m GROUP BY kind ORDER BY kind""".stripMargin
-
-  /** The DataSource V2 connector as a declared query: scan
-    * [[graft.sources.v2.SynthDocsSource]] through a doc_id range predicate
-    * (pushed to the connector, where it prunes whole input partitions —
-    * the declared-path twin of the plan assertions in OperatorsSpec), then
-    * fold every generated text into per-language content fingerprints.
-    * The oracle RE-GENERATES the identical table inside DuckDB — the
-    * connector's splitmix64 column functions replayed in staged HUGEINT
-    * mod-2^64 arithmetic, lookup lists emitted from the same Scala arrays —
-    * so the hash matches only if every generated byte, language pick and
-    * word-count branch agrees with the connector.
-    */
-  private val qSynthSource: Q = (s, _) =>
-    s.read.format(classOf[graft.sources.v2.SynthDocsSource].getName)
-      .option("rows", "2000").option("partitions", "8").option("seed", "42")
-      .load()
-      .filter(col("doc_id") >= 100 && col("doc_id") < 1500)
-      .select(col("lang"), col("doc_id"), col("n_chars"),
-        rolling_hash(col("text")).as("fp"))
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("chars"),
-        expr("bit_xor(doc_id)").as("id_xor"), expr("bit_xor(fp)").as("text_xor"))
-      .orderBy("lang")
-
-  /** Aggregate pushdown through the DSv2 connector: COUNT(*)/MIN/MAX over
-    * a doc_id range are answered by the source in closed form — one partial
-    * row per input partition, zero data rows generated (the filter is fully
-    * absorbed by range clipping, which is what legalizes the agg pushdown).
-    * Plan-asserted in OperatorsSpec; the oracle computes the same range
-    * arithmetic from generate_series.
-    */
-  private val qSynthAggPushdown: Q = (s, _) =>
-    s.read.format(classOf[graft.sources.v2.SynthDocsSource].getName)
-      .option("rows", "2000").option("partitions", "8").option("seed", "42")
-      .load()
-      .filter(col("doc_id") >= 100 && col("doc_id") < 1500)
-      .agg(expr("count(*)").as("n_docs"), min("doc_id").as("min_id"),
-        max("doc_id").as("max_id"))
-
-  private val synthAggPushdownSql =
-    """SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-      |  CAST(MIN(g) AS BIGINT) AS min_id, CAST(MAX(g) AS BIGINT) AS max_id
-      |FROM generate_series(100, 1499) t(g)""".stripMargin
-
-  /** Generated from SynthDocs/SketchKernels constants: splitmix64 is staged
-    * one finalizer step per CTE column (scalars) / per list_transform
-    * (word hashes) to keep the SQL expression tree linear.
-    */
-  private def synthSourceSqlGen: String = {
-    import org.apache.spark.sql.graftx.SketchKernels
-    import U64Sql.{u, unsignedVal, signedVal, xorShift, mulSplit}
-    val seed = 42L
-    val gg = u(SketchKernels.GoldenGamma)
-    val langs = graft.sources.v2.SynthDocs.Langs
-      .map(l => s"'$l'").mkString("list_value(", ", ", ")")
-    val words = graft.sources.v2.SynthDocs.Words
-      .map(w => s"'$w'").mkString("list_value(", ", ", ")")
-    // java.lang.Math.floorMod of the signed image
-    def fm(sv: String, m: Int) = s"CAST(((($sv) % $m) + $m) % $m AS INT)"
-    val stages: Seq[String => String] = Seq(
-      v => xorShift(v, 30), v => mulSplit(v, SketchKernels.Mix1),
-      v => xorShift(v, 27), v => mulSplit(v, SketchKernels.Mix2),
-      v => xorShift(v, 31))
-    // scalar chains: l* = splitmix64(doc_id XOR seed) picks the language,
-    // t* = splitmix64(doc_id*31 + seed) seeds the text
-    val scalarCtes = stages.zipWithIndex.map { case (f, i) =>
-      s"s${i + 1} AS (SELECT *, ${f(s"l$i")} AS l${i + 1}, ${f(s"t$i")} AS t${i + 1} FROM s$i)"
-    }.mkString(", ")
-    // list chain: one finalized hash per word position
-    val listCtes = stages.zipWithIndex.map { case (f, i) =>
-      s"w${i + 1} AS (SELECT *, list_transform(hs$i, h -> ${f("h")}) AS hs${i + 1} FROM w$i)"
-    }.mkString(", ")
-    s"""WITH ids AS (
-       |  SELECT CAST(g AS BIGINT) AS doc_id FROM generate_series(100, 1499) t(g)
-       |), s0 AS (
-       |  SELECT doc_id,
-       |    (${unsignedVal(s"xor(doc_id, $seed)")} + $gg) % ${U64Sql.Wrap} AS l0,
-       |    (${unsignedVal(s"doc_id * 31 + $seed")} + $gg) % ${U64Sql.Wrap} AS t0
-       |  FROM ids
-       |), $scalarCtes, base AS (
-       |  SELECT doc_id, $langs[${fm(signedVal("l5"), 5)} + 1] AS lang, t5 AS th,
-       |    8 + ${fm(signedVal("t5"), 25)} AS n
-       |  FROM s5
-       |), w0 AS (
-       |  SELECT doc_id, lang, list_transform(generate_series(0, n - 1),
-       |    i -> ((th + CAST(i AS HUGEINT)) % ${U64Sql.Wrap} + $gg) % ${U64Sql.Wrap}) AS hs0
-       |  FROM base
-       |), $listCtes, txt AS (
-       |  SELECT doc_id, lang,
-       |    array_to_string(list_transform(hs5,
-       |      h -> $words[${fm(signedVal("h"), 16)} + 1]), ' ') AS text
-       |  FROM w5
-       |)
-       |SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
-       |  CAST(SUM(length(text)) AS BIGINT) AS chars,
-       |  CAST(bit_xor(doc_id) AS BIGINT) AS id_xor,
-       |  CAST(bit_xor(${u64ToSigned(rollingFoldSql("text"))}) AS BIGINT) AS text_xor
-       |FROM txt GROUP BY lang ORDER BY lang""".stripMargin
-  }
-
-  /** Malformed-input tolerance (Sources.jsonlPermissive): documents are
-    * serialized to line JSON with every 7th line deterministically broken
-    * (truncated mid-object), then ingested in PERMISSIVE mode. Good rows
-    * parse fully, broken lines land in `_corrupt_record` — nothing fails,
-    * nothing is silently dropped. The oracle replays the same doc_id%7 rule
-    * over the source table; the bit_xor over surviving ids proves exactly
-    * the right rows parsed.
-    */
-  private val qJsonlCorrupt: Q = (s, dir) => {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-jcorrupt").toString
-    val docs = Tables.documents(s, dir)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-    docs
-      .select(when(col("doc_id") % 7 === 3,
-          concat(lit("{\"doc_id\":"), col("doc_id"), lit(",BROKEN")))
-        .otherwise(to_json(struct(col("doc_id"), col("lang"), col("n_chars"))))
-        .as("value"))
-      .coalesce(2)
-      .write.mode("overwrite").text(s"$tmp/in")
-    val parsed = graft.sources.Sources.jsonlPermissive(s, s"$tmp/in", docs.schema)
-    parsed.agg(
-        count(lit(1)).as("n_lines"),
-        sum(when(col("_corrupt_record").isNotNull, 1L).otherwise(0L)).as("n_corrupt"),
-        expr("bit_xor(CASE WHEN _corrupt_record IS NULL THEN doc_id END)").as("good_xor"),
-        sum(when(col("_corrupt_record").isNull, col("n_chars")).otherwise(0L))
-          .cast("long").as("good_chars"))
-  }
-
-  private val jsonlCorruptSql =
-    """SELECT CAST(COUNT(*) AS BIGINT) AS n_lines,
-      |  CAST(SUM(CASE WHEN doc_id % 7 = 3 THEN 1 ELSE 0 END) AS BIGINT) AS n_corrupt,
-      |  CAST(bit_xor(CASE WHEN doc_id % 7 <> 3 THEN doc_id END) AS BIGINT) AS good_xor,
-      |  CAST(SUM(CASE WHEN doc_id % 7 <> 3 THEN n_chars ELSE 0 END) AS BIGINT) AS good_chars
-      |FROM documents""".stripMargin
-
-  /** Sequence packing — the concat-then-chunk step that turns documents
-    * into fixed-token-budget training sequences: per language, documents in
-    * deterministic order accumulate a running token count and a document's
-    * sequence id is its preceding tokens ÷ budget (greedy packing, no doc
-    * splitting across the demo). One window per lang partition (bounded by
-    * per-lang corpus share), then a per-sequence aggregate — shuffle keys
-    * are (lang, seq_id), never text.
-    */
-  private val qSeqPacking: Q = (s, dir) => {
-    val budget = 256L
-    val t = Tables.documents(s, dir)
-      .select(col("lang"), col("doc_id"),
-        size(split(col("text"), " ")).cast("long").as("tokens"))
-    val w = Window.partitionBy(col("lang")).orderBy(col("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    t.withColumn("cum", sum(col("tokens")).over(w))
-      .select(col("lang"),
-        expr(s"(cum - tokens) div $budget").as("seq_id"),
-        col("tokens"))
-      .groupBy(col("lang"), col("seq_id"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("tokens")).as("seq_tokens"))
-      .orderBy("lang", "seq_id")
-  }
-
-  private val seqPackingSql =
-    """WITH t AS (
-      |  SELECT lang, doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS tokens
-      |  FROM documents
-      |), c AS (
-      |  SELECT lang, tokens, SUM(tokens) OVER (PARTITION BY lang ORDER BY doc_id
-      |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-      |  FROM t)
-      |SELECT lang, CAST((cum - tokens) // 256 AS BIGINT) AS seq_id,
-      |  CAST(COUNT(*) AS BIGINT) AS n_docs, CAST(SUM(tokens) AS BIGINT) AS seq_tokens
-      |FROM c GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
-
-  /** Temperature-based multilingual sampling weights (the pretraining
-    * alpha-sampling recipe): language share p_l, tempered weight
-    * q_l ∝ p_l^α (α = 0.3), expected docs at a 1000-doc budget. One count
-    * aggregate + a broadcast 1-row total; pow is the only transcendental
-    * and is rounded on both sides per the parity rule.
-    */
-  private val qAlphaSampling: Q = (s, dir) => {
-    val counts = Tables.documents(s, dir)
-      .groupBy(col("lang")).agg(count(lit(1)).as("n_docs"))
-    val total = counts.agg(sum(col("n_docs")).as("n_total"))
-    val z = counts.crossJoin(broadcast(total))
-      .select(col("lang"), col("n_docs"), col("n_total"),
-        pow(col("n_docs").cast("double") / col("n_total").cast("double"), 0.3).as("w"))
-    val zsum = z.agg(sum(col("w")).as("zsum"))
-    z.crossJoin(broadcast(zsum))
-      .select(col("lang"), col("n_docs"),
-        round(col("n_docs").cast("double") / col("n_total").cast("double"), 6).as("p"),
-        round(col("w") / col("zsum"), 6).as("q"),
-        round(lit(1000.0) * col("w") / col("zsum"), 3).as("expected_docs"))
-      .orderBy("lang")
-  }
-
-  private val alphaSamplingSql =
-    """WITH c AS (
-      |  SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs FROM documents GROUP BY lang
-      |), z AS (
-      |  SELECT lang, n_docs, SUM(n_docs) OVER () AS n_total,
-      |    pow(CAST(n_docs AS DOUBLE) / CAST(SUM(n_docs) OVER () AS DOUBLE), 0.3) AS w
-      |  FROM c)
-      |SELECT lang, n_docs,
-      |  round(CAST(n_docs AS DOUBLE) / CAST(n_total AS DOUBLE), 6) AS p,
-      |  round(w / SUM(w) OVER (), 6) AS q,
-      |  round(1000.0 * w / SUM(w) OVER (), 3) AS expected_docs
-      |FROM z ORDER BY lang""".stripMargin
-
-  /** Unigram-LM document scoring (CCNet-style quality signal): corpus-wide
-    * token frequencies become per-token log-probs; a doc's score is its
-    * mean token log-prob. Per-token log-probs are quantized to integer
-    * micros (round half away from zero — engines agree) so the per-doc SUM
-    * is an exact long — order-independent and oracle-reproducible; the
-    * transcendental ln is the only double step and is rounded per the
-    * established parity rule. Two-level aggregation, token join is
-    * hash-partitioned — at 100 TB the freq table is the classic word-count.
-    */
-  private val qUnigramLm: Q = (s, dir) => {
-    val toks = Tables.documents(s, dir)
-      .select(col("doc_id"), explode(TextFunctions.tokens(col("text"))).as("token"))
-      .filter(col("token") =!= "")
-    val freq = toks.groupBy(col("token")).agg(count(lit(1)).as("c"))
-    val total = freq.agg(sum(col("c")).as("n"))
-    toks.join(freq, Seq("token"))
-      .crossJoin(broadcast(total))
-      .select(col("doc_id"),
-        round(log(col("c").cast("double") / col("n").cast("double")) * lit(1000000.0))
-          .cast("long").as("u"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_toks"), sum(col("u")).as("sum_logp_u"))
-      .select(col("doc_id"), col("n_toks"), col("sum_logp_u"),
-        (col("sum_logp_u").cast("double") /
-          (col("n_toks").cast("double") * lit(1000000.0))).as("avg_logp"))
-      .orderBy("doc_id")
-  }
-
-  private val unigramLmSql =
-    """WITH tok AS (
-      |  SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents
-      |), t2 AS (SELECT doc_id, token FROM tok WHERE token <> ''),
-      |freq AS (SELECT token, COUNT(*) AS c FROM t2 GROUP BY token),
-      |tot AS (SELECT SUM(c) AS n FROM freq),
-      |scored AS (
-      |  SELECT doc_id,
-      |    CAST(round(ln(CAST(c AS DOUBLE) / CAST(n AS DOUBLE)) * 1000000.0)
-      |      AS BIGINT) AS u
-      |  FROM t2 JOIN freq USING (token), tot)
-      |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_toks,
-      |  CAST(SUM(u) AS BIGINT) AS sum_logp_u,
-      |  CAST(SUM(u) AS DOUBLE) / (CAST(COUNT(*) AS DOUBLE) * 1000000.0)
-      |    AS avg_logp
-      |FROM scored GROUP BY doc_id ORDER BY doc_id""".stripMargin
-
-  /** Deterministic hash-based train/validation/test split — the assignment
-    * must be a pure function of the key (not a random sample) so it is stable
-    * across reruns, engines, and cluster sizes. Bucket = first 4 hex chars of
-    * md5(doc_id) mod 100; 80/10/10.
-    */
-  private val qHashSplit: Q = (s, dir) => {
-    val bucket =
-      conv(substring(md5(col("doc_id").cast("string")), 1, 4), 16, 10)
-        .cast("long") % 100
-    Tables.documents(s, dir)
-      .withColumn("split",
-        when(bucket < 80, "train").when(bucket < 90, "validation")
-          .otherwise("test"))
-      .groupBy("split")
-      .agg(count(lit(1)).as("docs"), sum("n_chars").as("chars"))
-      .orderBy("split")
-  }
-
-  /** Oracle for the md5 bucket: DuckDB 1.0 has no base-16 conv(), so the hex
-    * value is rebuilt digit-by-digit — generated here so both sides share the
-    * same 4-hex-char window and modulus.
-    */
-  private val hashSplitSql = {
-    def hexDigit(i: Int) =
-      s"(strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), $i, 1)) - 1)"
-    val bucket = s"((${hexDigit(1)}*4096 + ${hexDigit(2)}*256 + " +
-      s"${hexDigit(3)}*16 + ${hexDigit(4)}) % 100)"
-    s"""SELECT CASE WHEN $bucket < 80 THEN 'train'
-       |            WHEN $bucket < 90 THEN 'validation'
-       |            ELSE 'test' END AS split,
-       |  COUNT(*) AS docs, CAST(SUM(n_chars) AS BIGINT) AS chars
-       |FROM documents GROUP BY 1 ORDER BY split""".stripMargin
-  }
-
-  /** Batch band join via `operators.RangeJoin`: purchases paired with the
-    * same user's clicks in the preceding hour — the batch twin of the
-    * stream-stream interval join, but as a bucketed hash join instead of the
-    * broadcast-nested-loop Spark would plan for the raw theta predicate.
-    */
-  private val qRangeJoin: Q = (s, dir) => {
-    val ev = Tables.events(s, dir)
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select(col("event_id"), col("user_id"), col("ts"))
-    val clicks = ev.filter(col("event_type") === "click")
-      .select(col("user_id"), col("ts").as("click_ts"),
-        col("event_id").as("click_id"))
-    val counted = graft.operators.RangeJoin(purchases, clicks, Seq("user_id"),
-        "ts", "click_ts", -3600L, 0L)
-      .groupBy("event_id").agg(count(lit(1)).as("prior_clicks"))
-    purchases.select("event_id").join(counted, Seq("event_id"), "left")
-      .select(col("event_id"),
-        coalesce(col("prior_clicks"), lit(0L)).as("prior_clicks"))
-      .orderBy("event_id")
-  }
-
-  private val rangeJoinSql =
-    """SELECT p.event_id, COUNT(c.event_id) AS prior_clicks
-      |FROM events p LEFT JOIN events c
-      |  ON c.user_id = p.user_id AND c.event_type = 'click'
-      | AND c.ts >= p.ts - INTERVAL 1 HOUR AND c.ts < p.ts
-      |WHERE p.event_type = 'purchase'
-      |GROUP BY p.event_id ORDER BY p.event_id""".stripMargin
-
-  /** TF-IDF top-3 terms per document. Spark's codegen routes log through
-    * StrictMath (fdlibm), which differs from DuckDB's ln by 1 ulp on some
-    * inputs — so the score is rounded to 6 dp on BOTH sides before ranking
-    * (ulp noise can't cross a 1e-6 boundary; near-ties fall to the token
-    * tie-break identically on both engines).
-    */
-  private val qTfidf: Q = (s, dir) => {
-    val docs = Tables.documents(s, dir)
-    val tok = docs.select(col("doc_id"),
-        explode(TextFunctions.tokens(col("text"))).as("token"))
-      .filter(col("token") =!= "")
-    val tf = tok.groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
-    val dfreq = tok.distinct().groupBy("token").agg(count(lit(1)).as("df"))
-    val total = docs.agg(count(lit(1)).as("n_docs"))
-    val w = Window.partitionBy("doc_id")
-      .orderBy(col("tfidf").desc, col("token").asc)
-    tf.join(dfreq, "token")
-      .crossJoin(broadcast(total))
-      .withColumn("tfidf", round(col("tf").cast("double") *
-        log((col("n_docs") + lit(1)).cast("double") /
-          (col("df") + lit(1)).cast("double")), 6))
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= 3)
-      .select(col("doc_id"), col("rk"), col("token"), col("tfidf"))
-      .orderBy("doc_id", "rk")
-  }
-
-  private val tfidfSql =
-    """WITH tok AS (
-      |  SELECT doc_id, token FROM (
-      |    SELECT doc_id, unnest(string_split(text, ' ')) AS token
-      |    FROM documents) u
-      |  WHERE token <> ''),
-      |tf AS (SELECT doc_id, token, COUNT(*) AS tf FROM tok GROUP BY 1, 2),
-      |dfreq AS (SELECT token, COUNT(DISTINCT doc_id) AS df FROM tok GROUP BY 1),
-      |total AS (SELECT COUNT(*) AS n_docs FROM documents),
-      |scored AS (
-      |  SELECT doc_id, token,
-      |    round(CAST(tf AS DOUBLE) *
-      |      ln(CAST(n_docs + 1 AS DOUBLE) / CAST(df + 1 AS DOUBLE)), 6) AS tfidf
-      |  FROM tf JOIN dfreq USING (token) CROSS JOIN total),
-      |ranked AS (
-      |  SELECT doc_id, token, tfidf,
-      |    CAST(ROW_NUMBER() OVER (PARTITION BY doc_id
-      |      ORDER BY tfidf DESC, token) AS BIGINT) AS rk
-      |  FROM scored)
-      |SELECT doc_id, rk, token, tfidf FROM ranked
-      |WHERE rk <= 3 ORDER BY doc_id, rk""".stripMargin
-
-  /** Deterministic per-class downsampling (class rebalancing): cap every
-    * language at 50 docs, chosen by md5 order — a pure function of the key,
-    * so the sample is identical on any engine or cluster size.
-    */
-  private val qStratifiedSample: Q = (s, dir) => {
-    val w = Window.partitionBy("lang")
-      .orderBy(md5(col("doc_id").cast("string")).asc, col("doc_id").asc)
-    Tables.documents(s, dir)
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= 50)
-      .select(col("lang"), col("rk"), col("doc_id"))
-      .orderBy("lang", "rk")
-  }
-
-  private val stratifiedSampleSql =
-    """SELECT lang, rk, doc_id FROM (
-      |  SELECT lang, doc_id,
-      |    CAST(ROW_NUMBER() OVER (PARTITION BY lang
-      |      ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS BIGINT) AS rk
-      |  FROM documents) t
-      |WHERE rk <= 50 ORDER BY lang, rk""".stripMargin
-
-  /** Time-series gap fill: date-spine generation (`sequence` + `explode`),
-    * zero-fill for counts, forward-fill (`last ignoreNulls`) for values.
-    * The global window runs on the day spine — a bounded list (≤ days in
-    * range), same discipline as the partition-list ranking, never fact rows.
-    */
-  private val qGapFill: Q = (s, dir) => {
-    val daily = Tables.orders(s, dir)
-      .filter(year(col("o_orderdate")) === 1998)
-      .groupBy(to_date(col("o_orderdate")).as("day"))
-      .agg(count(lit(1)).as("n_orders"), max(col("o_totalprice")).as("max_price"))
-    val spine = daily.agg(min("day").as("lo"), max("day").as("hi"))
-      .select(explode(sequence(col("lo"), col("hi"))).as("day"))
-    val w = Window.orderBy("day")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    spine.join(daily, Seq("day"), "left")
-      .select(col("day").cast("timestamp").as("day"),
-        coalesce(col("n_orders"), lit(0L)).as("n_orders"),
-        last(col("max_price"), ignoreNulls = true).over(w)
-          .as("filled_max_price"))
-      .orderBy("day")
-  }
-
-  private val gapFillSql =
-    """WITH daily AS (
-      |  SELECT CAST(o_orderdate AS DATE) AS day, COUNT(*) AS n_orders,
-      |    MAX(o_totalprice) AS max_price
-      |  FROM orders WHERE year(o_orderdate) = 1998 GROUP BY 1),
-      |spine AS (
-      |  SELECT CAST(unnest(generate_series(
-      |    CAST((SELECT MIN(day) FROM daily) AS TIMESTAMP),
-      |    CAST((SELECT MAX(day) FROM daily) AS TIMESTAMP),
-      |    INTERVAL 1 DAY)) AS DATE) AS day)
-      |SELECT CAST(s.day AS TIMESTAMP) AS day, COALESCE(d.n_orders, 0) AS n_orders,
-      |  last_value(d.max_price IGNORE NULLS) OVER (ORDER BY s.day
-      |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS filled_max_price
-      |FROM spine s LEFT JOIN daily d USING (day) ORDER BY day""".stripMargin
-
-  /** UNPIVOT (wide → long), the inverse of `q_pivot`; metric names come from
-    * the source column names on both sides.
-    */
-  private val qUnpivot: Q = (s, dir) => {
-    val agg = Tables.lineitem(s, dir).groupBy(col("l_returnflag"))
-      .agg(Exact.sumExact(col("l_quantity")).as("sum_qty"),
-        Exact.sumExact(col("l_extendedprice")).as("sum_price"))
-    agg.unpivot(Array(col("l_returnflag")),
-        Array(col("sum_qty"), col("sum_price")), "metric", "value")
-      .orderBy("l_returnflag", "metric")
-  }
-
-  private val unpivotSql =
-    """WITH a AS (SELECT l_returnflag,
-      |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
-      |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
-      |  FROM lineitem GROUP BY 1)
-      |SELECT l_returnflag, 'sum_qty' AS metric, sum_qty AS value FROM a
-      |UNION ALL
-      |SELECT l_returnflag, 'sum_price' AS metric, sum_price AS value FROM a
-      |ORDER BY l_returnflag, metric""".stripMargin
-
-  /** Equal-width histogram: bounds from one min/max aggregate (broadcast,
-    * single row), bin assignment as pure deterministic double arithmetic
-    * (identical op order on both engines — no transcendentals), top bin
-    * clamped so x = max lands in the last bucket.
-    */
-  private val qHistogram: Q = (s, dir) => {
-    val bins = 20
-    val stats = Tables.orders(s, dir)
-      .agg(min("o_totalprice").as("lo"), max("o_totalprice").as("hi"))
-    Tables.orders(s, dir).crossJoin(broadcast(stats))
-      .withColumn("bin",
-        least(floor((col("o_totalprice") - col("lo")) * lit(bins) /
-          (col("hi") - col("lo"))), lit(bins - 1)).cast("long"))
-      .groupBy("bin").agg(count(lit(1)).as("cnt"))
-      .orderBy("bin")
-  }
-
-  private val histogramSql =
-    """WITH s AS (SELECT MIN(o_totalprice) AS lo, MAX(o_totalprice) AS hi
-      |           FROM orders)
-      |SELECT CAST(LEAST(FLOOR((o_totalprice - lo) * 20 / (hi - lo)), 19)
-      |         AS BIGINT) AS bin,
-      |  COUNT(*) AS cnt
-      |FROM orders, s GROUP BY 1 ORDER BY 1""".stripMargin
-
-  // Unsigned-64 arithmetic helpers for DuckDB oracle SQL live in U64Sql
-  // (shared with SketchOracleSql) — HUGEINT mod-2^64 emulation of the
-  // wrapping folds, generated from the same Scala constants as the kernels.
-  // defs (not vals): referenced from oracle-SQL vals that may initialize
-  // earlier in declaration order
-  private def U64 = U64Sql.Wrap
-  private def I64Min = U64Sql.SignBit
-  private def u64ToSigned(h: String): String = U64Sql.toBigint(h)
-  private def byteListSql(text: String): String = U64Sql.byteList(text)
-
-  /** `fold(h, b) = h*Base + b  (mod 2^64)` — mirrors RollingHash.hashBytes. */
-  private def rollingFoldSql(text: String): String =
-    s"""list_reduce(list_prepend(CAST(0 AS HUGEINT), ${byteListSql(text)}),
-       |      (h, b) -> (h * ${org.apache.spark.sql.graftx.RollingHash.Base} + b) % $U64)""".stripMargin
-
-  /** Z-order layout as a declared round-trip: orders re-laid-out on the
-    * Morton curve of (custkey, totalprice-cents), read back and aggregated.
-    * The oracle aggregates the source directly, proving the re-layout is
-    * lossless; the min/max-skipping benefit itself is plan/file-range
-    * asserted in OperatorsSpec.
-    */
-  private val qZorderLayout: Q = (s, dir) => {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-zorder").toString
-    val src = Tables.orders(s, dir)
-      .select(col("o_orderkey"), col("o_custkey"),
-        (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")
-          .as("price_cents"))
-    graft.sources.ZOrder.write(src, "o_custkey", "price_cents", s"$tmp/z", numFiles = 8)
-    s.read.parquet(s"$tmp/z")
-      .groupBy((col("o_custkey") % 10).as("custkey_mod"))
-      .agg(count(lit(1)).as("n"), sum(col("price_cents")).as("cents"))
-      .orderBy("custkey_mod")
-  }
-
-  private val zorderLayoutSql =
-    """SELECT o_custkey % 10 AS custkey_mod, COUNT(*) AS n,
-      |  CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS cents
-      |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin
-
-  /** The reference's core path as a declared query: a quarter of orders is
-    * written INTO a real JDBC database (embedded Derby) with decimal-cast
-    * money and timestamp columns, extracted back with the 8-way partitioned
-    * JDBC read (the NUM_MAPPERS contract, split bounds from the data), and
-    * aggregated. The oracle aggregates the source directly — the hash
-    * matches only if every row, every decimal digit and every timestamp
-    * survived the write→extract hop. Closes S1/S9 (test-only until now)
-    * with a driver-visible check.
-    */
-  private val qJdbcExtract: Q = (s, dir) => {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-jdbcq").toString
-    val url = s"jdbc:derby:$tmp/db;create=true"
-    val src = Tables.orders(s, dir)
-      .filter(col("o_orderdate") >= lit("1997-01-01") &&
-        col("o_orderdate") < lit("1997-04-01"))
-      .select(col("o_orderkey"), col("o_custkey"),
-        col("o_totalprice").cast("decimal(18,4)").as("o_totalprice"),
-        col("o_orderdate"), col("o_orderpriority"))
-    src.write.jdbc(url, "orders_t", new java.util.Properties())
-    val b = src.agg(min(col("o_orderkey")), max(col("o_orderkey"))).head()
-    val back = graft.sources.Sources.jdbcPartitioned(s, url, "orders_t",
-      "o_orderkey", b.getLong(0), b.getLong(1) + 1L, 8)
-    back.groupBy(col("o_orderpriority"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("o_totalprice")).cast("double").as("total"),
-        max(unix_millis(col("o_orderdate"))).as("last_ms"))
-      .orderBy("o_orderpriority")
-  }
-
-  private val jdbcExtractSql =
-    """SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n,
-      |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total,
-      |  CAST(MAX(epoch_ms(o_orderdate)) AS BIGINT) AS last_ms
-      |FROM orders
-      |WHERE o_orderdate >= '1997-01-01' AND o_orderdate < '1997-04-01'
-      |GROUP BY 1 ORDER BY 1""".stripMargin
-
-  /** The shared plan-gate for the warehouse pushdown queries (r7 verdict
-    * task 5): `shaped(flag)` is the final query; the flag is derived from
-    * `shaped(false)`'s OWN executed plan containing every `marker`
-    * (`PushedAggregates`, `PushedTopN`, …). CONTRACT: the two instances
-    * differ ONLY in a boolean literal inside a projection — a literal
-    * cannot change scan planning, so the probed plan IS the final plan
-    * modulo that literal. Keep `shaped` literal-pure (no branching on the
-    * flag, no extra operators); routing every gate through this helper is
-    * what pins the assumption — a future edit that made the two plans
-    * diverge would have to bypass it visibly.
-    */
-  private def pushdownGated(shaped: Boolean => org.apache.spark.sql.DataFrame,
-      markers: String*): org.apache.spark.sql.DataFrame = {
-    val plan = shaped(false).queryExecution.executedPlan.toString
-    shaped(markers.forall(plan.contains))
-  }
-
-  /** A1/A4 executed WAREHOUSE-side (r5 "what's missing" #1): the catalog
-    * probes the reference runs inside Vertica — `count(*)` per unit and
-    * min/max split bounds (`sqoop_table.py:54-57`, `:145`) — through the
-    * DSv2 JDBC catalog with aggregate pushdown, against a real embedded
-    * Derby database. `agg_pushed` is computed FROM THE PLAN (scan must
-    * carry `PushedAggregates` — i.e. no row fetch precedes the aggregate)
-    * and hash-checked by the oracle's literal `true`, so a silent fallback
-    * to row-fetch-then-aggregate fails the correctness gate, not just a
-    * spec.
-    */
-  private val qJdbcAgg: Q = (s, dir) => {
-    val fx = Fixtures.getOrBuild(s"jdbcagg:$dir") { f =>
-      val url = s"jdbc:derby:$f/db;create=true"
-      Tables.orders(s, dir)
-        .filter(col("o_orderdate") >= lit("1997-01-01") &&
-          col("o_orderdate") < lit("1997-04-01"))
-        .select(col("o_orderkey"), col("o_custkey"), col("o_orderpriority"))
-        .write
-        // Derby's default String mapping is CLOB, which the warehouse
-        // refuses to GROUP BY — declare a comparable VARCHAR instead
-        // (real warehouse DDL would, too)
-        .option("createTableColumnTypes", "o_orderpriority VARCHAR(32)")
-        .jdbc(url, "orders_t", new java.util.Properties())
-    }
-    val cat = "graftdw_" + java.lang.Long.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(dir).toLong & 0xffffffffL)
-    graft.sources.Sources.jdbcCatalog(s, cat, s"jdbc:derby:$fx/db")
-    // DSv1 write.jdbc leaves the TABLE name unquoted (Derby normalizes it
-    // to upper case) while quoting COLUMN names — so the V2 identifier is
-    // upper-case, the columns stay lower-case.
-    val t = s.table(s"$cat.ORDERS_T")
-    val agg = t.groupBy(col("o_orderpriority"))
-      .agg(count(lit(1)).as("n"),
-        min(col("o_orderkey")).as("min_key"),
-        max(col("o_orderkey")).as("max_key"),
-        sum(col("o_custkey")).as("sum_cust"))
-    // flag from the final query's own plan, modulo the literal — the
-    // shared contract lives in [[pushdownGated]]
-    pushdownGated(v =>
-      agg.withColumn("agg_pushed", lit(v)).orderBy("o_orderpriority"),
-      "PushedAggregates")
-  }
-
-  private val jdbcAggSql =
-    """SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n,
-      |  CAST(MIN(o_orderkey) AS BIGINT) AS min_key,
-      |  CAST(MAX(o_orderkey) AS BIGINT) AS max_key,
-      |  CAST(SUM(o_custkey) AS BIGINT) AS sum_cust,
-      |  TRUE AS agg_pushed
-      |FROM orders
-      |WHERE o_orderdate >= '1997-01-01' AND o_orderdate < '1997-04-01'
-      |GROUP BY 1 ORDER BY 1""".stripMargin
-
-  /** O1/O2 executed WAREHOUSE-side: the reference's status probes are
-    * ordered-LIMIT SQL run inside the warehouse — oldest pending partition
-    * via `order by primary_partition_value LIMIT 1`
-    * (`sqoop_table.py:41`, `:50`, `:107`) and the newest-first discovery
-    * scan (`:145`, `order by primary_id desc`). Here the probe ("latest
-    * keys for a priority class") goes through the DSv2 JDBC catalog with
-    * TopN pushdown: filter + ORDER BY DESC + LIMIT all compile into the
-    * warehouse query (Derby's `FETCH FIRST n ROWS ONLY` via
-    * [[graft.sources.DerbyProbeDialect]]), so the scan transfers exactly k
-    * rows. `topn_pushed` is computed FROM THE PLAN (scan must carry a
-    * `PushedTopN` clause — i.e. the sort+limit happened warehouse-side,
-    * not on fetched rows) and hash-checked against the oracle's literal
-    * `true`: a silent fallback to fetch-then-sort fails correctness, not
-    * just a bench number. k=5 on a unique key keeps the result
-    * deterministic where the reference's LIMIT 1 tolerates ties.
-    */
-  private val qJdbcTopN: Q = (s, dir) => {
-    val fx = Fixtures.getOrBuild(s"jdbcagg:$dir") { f =>
-      val url = s"jdbc:derby:$f/db;create=true"
-      Tables.orders(s, dir)
-        .filter(col("o_orderdate") >= lit("1997-01-01") &&
-          col("o_orderdate") < lit("1997-04-01"))
-        .select(col("o_orderkey"), col("o_custkey"), col("o_orderpriority"))
-        .write
-        .option("createTableColumnTypes", "o_orderpriority VARCHAR(32)")
-        .jdbc(url, "orders_t", new java.util.Properties())
-    }
-    val cat = "graftdw_" + java.lang.Long.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(dir).toLong & 0xffffffffL)
-    graft.sources.Sources.jdbcCatalog(s, cat, s"jdbc:derby:$fx/db")
-    val probe = s.table(s"$cat.ORDERS_T")
-      .filter(col("o_orderpriority") === lit("1-URGENT"))
-      .orderBy(col("o_orderkey").desc)
-      .limit(5)
-      .select(col("o_orderkey"), col("o_custkey"))
-    pushdownGated(v =>
-      probe.withColumn("topn_pushed", lit(v)).orderBy(col("o_orderkey")),
-      "PushedTopN")
-  }
-
-  private val jdbcTopNSql =
-    """SELECT o_orderkey, o_custkey, TRUE AS topn_pushed FROM orders
-      |WHERE o_orderdate >= '1997-01-01' AND o_orderdate < '1997-04-01'
-      |  AND o_orderpriority = '1-URGENT'
-      |ORDER BY o_orderkey DESC LIMIT 5""".stripMargin
-
-  /** A1 extended to AVG + verified GROUP BY pushdown (r6 verdict task 6):
-    * the reference's per-unit verification probes are aggregate SQL run
-    * inside the warehouse (`sqoop_table.py:54-57`), including avg-style
-    * checks; here `AVG(...) GROUP BY ...` executes warehouse-side through
-    * the DSv2 JDBC catalog. `avg_pushed` gates BOTH `PushedAggregates` AND
-    * `PushedGroupByExpressions` in the final plan's scan — a fallback to
-    * row-fetch, or a group-by evaluated Spark-side over fetched rows,
-    * fails the correctness hash, not just a bench number. The averaged
-    * column is stored DOUBLE with exact integer values, so whichever side
-    * finishes the arithmetic (warehouse under complete pushdown; Spark
-    * over pushed SUM/COUNT under partial) computes the identical IEEE
-    * result the oracle's SUM/COUNT formula does.
-    */
-  private val qJdbcAvg: Q = (s, dir) => {
-    val fx = Fixtures.getOrBuild(s"jdbcavg:$dir") { f =>
-      val url = s"jdbc:derby:$f/db;create=true"
-      Tables.orders(s, dir)
-        .filter(col("o_orderdate") >= lit("1997-01-01") &&
-          col("o_orderdate") < lit("1997-04-01"))
-        .select(col("o_orderkey"), col("o_orderpriority"),
-          col("o_custkey").cast("double").as("o_custval"))
-        .write
-        .option("createTableColumnTypes",
-          "o_orderpriority VARCHAR(32), o_custval DOUBLE")
-        .jdbc(url, "orders_a", new java.util.Properties())
-    }
-    val cat = "graftdwa_" + java.lang.Long.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(dir).toLong & 0xffffffffL)
-    graft.sources.Sources.jdbcCatalog(s, cat, s"jdbc:derby:$fx/db")
-    val t = s.table(s"$cat.ORDERS_A")
-    val agg = t.groupBy(col("o_orderpriority"))
-      .agg(avg(col("o_custval")).as("avg_cust"),
-        count(lit(1)).as("n"))
-    pushdownGated(v =>
-      agg.withColumn("avg_pushed", lit(v)).orderBy("o_orderpriority"),
-      "PushedAggregates", "PushedGroupByExpressions")
-  }
-
-  private val jdbcAvgSql =
-    """SELECT o_orderpriority,
-      |  CAST(SUM(o_custkey) AS DOUBLE) / COUNT(*) AS avg_cust,
-      |  CAST(COUNT(*) AS BIGINT) AS n,
-      |  TRUE AS avg_pushed
-      |FROM orders
-      |WHERE o_orderdate >= '1997-01-01' AND o_orderdate < '1997-04-01'
-      |GROUP BY 1 ORDER BY 1""".stripMargin
-
-  /** Small-file compaction as a declared round-trip: lineitem scattered
-    * into 64 tiny files, compacted to a byte-size target with the atomic
-    * rename swap, read back and aggregated. The oracle aggregates the
-    * source — the hash matches only if compaction lost/duplicated nothing;
-    * `compacted` gates that the file count actually dropped.
-    */
-  private val qCompaction: Q = (s, dir) => {
-    // the 64-small-files layout is the build-once test input; compaction
-    // swaps files in place, so each run compacts a fresh local copy
-    val fx = Fixtures.getOrBuild(s"compact:$dir") { f =>
-      Tables.lineitem(s, dir)
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
-          col("l_extendedprice"), col("l_returnflag"))
-        .repartition(64)
-        .write.mode("overwrite").parquet(s"$f/t")
-    }
-    val tmp = Fixtures.mutableCopy(fx)
-    val st = graft.sources.Compaction.compact(s, s"$tmp/t",
-      targetBytes = 8L * 1024 * 1024)
-    s.read.parquet(s"$tmp/t")
-      .groupBy(col("l_returnflag"))
-      .agg(count(lit(1)).as("n"),
-        Exact.sumExact(col("l_quantity")).as("qty"),
-        Exact.sumExact(col("l_extendedprice")).as("price"))
-      .withColumn("compacted", lit(st.filesAfter < st.filesBefore))
-      .orderBy("l_returnflag")
-  }
-
-  private val compactionSql =
-    """SELECT l_returnflag, CAST(COUNT(*) AS BIGINT) AS n,
-      |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS qty,
-      |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS price,
-      |  TRUE AS compacted
-      |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin
-
-  /** CSV (S7) as a declared round-trip: orders out to delimited text and
-    * back through the explicit-schema reader (no inference pass), then
-    * aggregated per month against the oracle's direct read of the source —
-    * typed columns (bigint, double, timestamp) must survive the text hop.
-    */
-  private val qCsvRoundtrip: Q = (s, dir) => {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-csvq").toString
-    val src = Tables.orders(s, dir)
-      .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
-        col("o_orderdate"), col("o_orderpriority"))
-    src.write.mode("overwrite").option("header", "false").csv(s"$tmp/t")
-    graft.sources.Sources.csv(s, s"$tmp/t", src.schema)
-      .groupBy(monthSid(col("o_orderdate")).as("month_sid"))
-      .agg(count(lit(1)).as("n"),
-        Exact.sumExact(col("o_totalprice")).as("total"),
-        expr("bit_xor(o_orderkey)").as("key_xor"))
-      .orderBy("month_sid")
-  }
-
-  private val csvRoundtripSql =
-    s"""SELECT $monthSidSql AS month_sid, CAST(COUNT(*) AS BIGINT) AS n,
-       |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total,
-       |  CAST(bit_xor(o_orderkey) AS BIGINT) AS key_xor
-       |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin
-
-  /** SequenceFile round-trip (Sources.sequenceFileWrite/sequenceFile): the
-    * Sqoop --as-sequencefile format that completes S10 — typed columns
-    * (long/double/timestamp/string) through the block-compressed
-    * (LongWritable, Text-CSV) container and back, aggregated; the oracle
-    * aggregates the source directly, so the hash matches only if every
-    * field of every record survived the binary hop. Same contract as
-    * q_csv_roundtrip, different container.
-    */
-  private val qSeqfileRoundtrip: Q = (s, dir) => {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-seqq").toString
-    val src = Tables.orders(s, dir)
-      .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
-        col("o_orderdate"), col("o_orderpriority"))
-    graft.sources.Sources.sequenceFileWrite(src, "o_orderkey", s"$tmp/t")
-    graft.sources.Sources.sequenceFile(s, s"$tmp/t", src.schema)
-      .groupBy(monthSid(col("o_orderdate")).as("month_sid"))
-      .agg(count(lit(1)).as("n"),
-        Exact.sumExact(col("o_totalprice")).as("total"),
-        expr("bit_xor(o_orderkey)").as("key_xor"))
-      .orderBy("month_sid")
-  }
-
-  /** Bucketed co-located join as a declared query: both sides bucketed 8
-    * ways on the join key at write time, then joined through the catalog —
-    * the zero-exchange plan is asserted in PlanSpec; here the RESULT is
-    * hash-checked against the plain join, proving bucketing is semantically
-    * transparent (the q_salted_join contract, at the opposite end of the
-    * shuffle spectrum).
-    */
-  private val qBucketedJoin: Q = (s, dir) => {
-    // a fresh session's in-memory catalog doesn't know tables a previous
-    // run materialized — drop both catalog entry AND orphan warehouse dir,
-    // or saveAsTable fails with LOCATION_ALREADY_EXISTS
-    // the bucketed layout is a build-once artifact (cluster-by at load
-    // time); the timed operator is the zero-shuffle co-located join.
-    // Fixtures caches per (JVM, dir): first run drops + rebuilds, later
-    // runs reuse the catalog tables.
-    Fixtures.getOrBuild(s"bucketed:$dir") { _ =>
-      Seq("graft_q_orders_b", "graft_q_lineitem_b").foreach { t =>
-        s.sql(s"DROP TABLE IF EXISTS $t")
-        val p = new org.apache.hadoop.fs.Path(
-          s.conf.get("spark.sql.warehouse.dir"), t)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      }
-      graft.sources.Bucketing.writeBucketed(
-        Tables.orders(s, dir)
-          .select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice")),
-        "graft_q_orders_b", "o_orderkey", numBuckets = 8)
-      graft.sources.Bucketing.writeBucketed(
-        Tables.lineitem(s, dir)
-          .select(col("l_orderkey").as("o_orderkey"), col("l_quantity")),
-        "graft_q_lineitem_b", "o_orderkey", numBuckets = 8)
-    }
-    graft.sources.Bucketing.bucketedJoin(
-        s, "graft_q_orders_b", "graft_q_lineitem_b", "o_orderkey")
-      .groupBy(col("o_orderpriority"))
-      .agg(count(lit(1)).as("n"), Exact.sumExact(col("l_quantity")).as("qty"))
-      .orderBy("o_orderpriority")
-  }
-
-  private val bucketedJoinSql =
-    """SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n,
-      |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS qty
-      |FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-      |GROUP BY 1 ORDER BY 1""".stripMargin
-
-  /** Manifest-based file skipping (sources.StatsStore): orders laid out
-    * range-clustered on custkey, a per-file (count, min, max) manifest
-    * collected in one scan, then a custkey range query that opens only
-    * files whose interval intersects the range. The aggregate hash-matches
-    * the oracle's direct filter over the source (pruning is a superset
-    * guarantee, so any skipped-but-needed file would break the hash);
-    * `files_pruned` asserts the manifest actually skipped IO.
-    */
-  private val qStatsPruning: Q = (s, dir) => {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-stats").toString
-    Tables.orders(s, dir)
-      .repartitionByRange(8, col("o_custkey"))
-      .sortWithinPartitions("o_custkey")
-      .write.mode("overwrite").parquet(s"$tmp/data")
-    val stats = graft.sources.StatsStore.collect(s, s"$tmp/data", Seq("o_custkey"))
-      .localCheckpoint()
-    val nTotal = stats.count()
-    val nScan = graft.sources.StatsStore.survivingFiles(stats, "o_custkey", 300L, 600L).size
-    graft.sources.StatsStore.prunedRead(s, s"$tmp/data", stats, "o_custkey", 300L, 600L)
-      .groupBy(col("o_orderpriority"))
-      .agg(count(lit(1)).as("n"), Exact.sumExact(col("o_totalprice")).as("total"))
-      .withColumn("files_pruned", lit(nScan < nTotal))
-      .orderBy("o_orderpriority")
-  }
-
-  private val statsPruningSql =
-    """SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n,
-      |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total,
-      |  TRUE AS files_pruned
-      |FROM orders
-      |WHERE o_custkey >= 300 AND o_custkey <= 600
-      |GROUP BY 1 ORDER BY 1""".stripMargin
-
-  /** Per-file bloom index (sources.BloomIndex): point lookup on a column
-    * the layout is NOT clustered by — the data is hash-laid-out on
-    * o_custkey, so every file's o_orderkey min/max spans the whole domain
-    * and a StatsStore manifest prunes nothing; the bloom index prunes to
-    * the (1 + fpp·n) files that might hold the key. The `files_pruned`
-    * gate goes red if the probe stops skipping; `minmax_blind` goes red if
-    * the fixture accidentally becomes clustered (which would make the
-    * bloom demonstration vacuous).
-    */
-  private val qBloomIndex: Q = (s, dir) => {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-bloomidx").toString
-    Tables.orders(s, dir)
-      .repartition(8, col("o_custkey"))
-      .write.mode("overwrite").parquet(s"$tmp/data")
-    val idx = graft.sources.BloomIndex.build(s, s"$tmp/data", "o_orderkey",
-      expectedPerFile = 1L << 16).localCheckpoint()
-    val nTotal = idx.count()
-    val nScan = graft.sources.BloomIndex.survivingFiles(idx, "o_orderkey", 1234L).size
-    val ranges = graft.sources.StatsStore.collect(s, s"$tmp/data", Seq("o_orderkey"))
-      .agg(max(col("min_o_orderkey")).as("worst_min"),
-        min(col("max_o_orderkey")).as("worst_max"))
-      .head()
-    val minmaxBlind = // every file's range contains the probe key
-      ranges.getLong(0) <= 1234L && ranges.getLong(1) >= 1234L
-    graft.sources.BloomIndex.prunedRead(s, s"$tmp/data", idx, "o_orderkey", 1234L)
-      .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
-        col("o_totalprice"))
-      .withColumn("files_pruned", lit(nScan < nTotal))
-      .withColumn("minmax_blind", lit(minmaxBlind))
-      .orderBy("o_orderkey")
-  }
-
-  private val bloomIndexSql =
-    """SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice,
-      |  TRUE AS files_pruned, TRUE AS minmax_blind
-      |FROM orders WHERE o_orderkey = 1234 ORDER BY o_orderkey""".stripMargin
-
-  /** Skew-salted join (operators.SaltedJoin): the big side's hot keys are
-    * spread over `salts` shuffle partitions, the small side replicated
-    * `salts`×. Salting is semantically transparent, so the oracle is the
-    * PLAIN join — the hash check proves no rows are lost or duplicated by
-    * the salt/replicate/drop dance.
-    */
-  private val qSaltedJoin: Q = (s, dir) => {
-    val l = Tables.lineitem(s, dir)
-      .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
-    val o = Tables.orders(s, dir)
-      .filter(col("o_orderpriority") === "1-URGENT")
-      .select(col("o_orderkey").as("l_orderkey"), col("o_totalprice"))
-    operators.SaltedJoin(l, o, key = "l_orderkey", tieBreak = "l_linenumber", salts = 8)
-      .groupBy(col("l_orderkey"))
-      .agg(count(lit(1)).as("n"), Exact.sumExact(col("l_quantity")).as("qty"))
-      .orderBy("l_orderkey")
-  }
-
-  private val saltedJoinSql =
-    """SELECT l.l_orderkey, COUNT(*) AS n,
-      |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS qty
-      |FROM lineitem l JOIN (
-      |  SELECT o_orderkey FROM orders WHERE o_orderpriority = '1-URGENT') o
-      |ON l.l_orderkey = o.o_orderkey
-      |GROUP BY 1 ORDER BY 1""".stripMargin
-
-  private val qDocFingerprint: Q = (s, dir) =>
-    Tables.documents(s, dir)
-      .select(col("doc_id"), rolling_hash(col("text")).as("fp"))
-      .orderBy("doc_id")
-
-  private val docFingerprintSql =
-    s"""SELECT doc_id, ${u64ToSigned("h")} AS fp
-       |FROM (SELECT doc_id, ${rollingFoldSql("text")} AS h FROM documents)
-       |ORDER BY doc_id""".stripMargin
-
-  private val qMinhashNearDups: Q = (s, dir) =>
-    Dedup.minHashNearDups(Tables.documents(s, dir), threshold = 0.5)
-      .orderBy("doc_a", "doc_b")
-
-  /** The incremental-dedup shape as a declared query: build the persistent
-    * band index over doc_id < 400, then probe the rest as the "arriving
-    * batch" — no historical text is re-read; candidates come from the
-    * band-partitioned store and are scored by signature-estimated Jaccard.
-    * The oracle recomputes signatures, band keys and the estimate in
-    * mod-2^64 SQL with the same split.
-    */
-  private val qBandIndexProbe: Q = (s, dir) => {
-    val docs = Tables.documents(s, dir)
-    // the band-partitioned index is a build-once artifact; the probe (the
-    // timed operator) only reads its matching band partitions
-    val tmp = Fixtures.getOrBuild(s"bandidx:$dir") { f =>
-      Dedup.buildBandIndex(docs.filter(col("doc_id") < 400), f, mode = "overwrite")
-    }
-    Dedup.probeBandIndex(docs.filter(col("doc_id") >= 400), s, tmp,
-      minEstJaccard = 0.5)
-      .orderBy("new_id", "indexed_id")
-  }
-
-  /** Band-index compaction (sources.Compaction.compactPartitions): the
-    * index accrues THREE append waves (base + two), leaving a small-file
-    * layer per band partition per wave; per-partition in-place compaction
-    * (atomic-swap per directory) collapses them, and the probe over the
-    * compacted store must produce the identical pair set — the oracle
-    * replays the band probe against the logical index content (file
-    * layout cannot matter), and the query gates that files really shrank.
-    */
-  private val qBandCompaction: Q = (s, dir) => {
-    val docs = Tables.documents(s, dir)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-bandcmp").toString
-    Dedup.buildBandIndex(docs.filter(col("doc_id") < 150), tmp,
-      mode = "overwrite")
-    Dedup.buildBandIndex(
-      docs.filter(col("doc_id") >= 150 && col("doc_id") < 275), tmp)
-    Dedup.buildBandIndex(
-      docs.filter(col("doc_id") >= 275 && col("doc_id") < 400), tmp)
-    val st = graft.sources.Compaction.compactPartitions(s, s"$tmp/bands")
-    Dedup.probeBandIndex(docs.filter(col("doc_id") >= 400), s, tmp,
-      minEstJaccard = 0.5)
-      .agg(count(lit(1)).as("n_pairs"),
-        expr("bit_xor(new_id * 1000000 + indexed_id)").as("pair_xor"))
-      .withColumn("files_reduced", lit(st.filesAfter < st.filesBefore))
-  }
-
-  private val bandCompactionSql =
-    s"""SELECT CAST(COUNT(*) AS BIGINT) AS n_pairs,
-       |  CAST(bit_xor(new_id * 1000000 + indexed_id) AS BIGINT) AS pair_xor,
-       |  TRUE AS files_reduced
-       |FROM (${SketchOracleSql.bandIndexProbeSql(400L, 0.5)})""".stripMargin
-
-  /** The ONLINE ingest gate as a declared streaming query: documents with
-    * doc_id ≥ 400 arrive as a multi-micro-batch stream (8 input files,
-    * 2 per trigger) and are near-dup-checked — against the base index
-    * (doc_id < 400), against every earlier arrival, and within their own
-    * batch — with each batch's bands appended after probing. The drained
-    * canonical pair set is micro-batch-boundary independent, so ONE batch
-    * oracle replays it: every candidate pair whose greater doc_id is a
-    * stream arrival, scored by signature-estimated Jaccard. The shared
-    * band-index fixture is copied per run (the stream mutates its index).
-    */
-  private val qStreamNeardup: Q = (s, dir) => {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-sgate").toString
-    val docs = Tables.documents(s, dir)
-    val baseIdx = Fixtures.getOrBuild(s"bandidx:$dir") { f =>
-      Dedup.buildBandIndex(docs.filter(col("doc_id") < 400), f, mode = "overwrite")
-    }
-    val idx = Fixtures.mutableCopy(baseIdx)
-    docs.filter(col("doc_id") >= 400).repartition(8)
-      .write.parquet(s"$tmp/in")
-    withDrainParallelism(s, s"$tmp/in") {
-      graft.streaming.DocsStream.neardupGateDrain(s, s"$tmp/in", idx,
-        s"$tmp/out", s"$tmp/ck", minEstJaccard = 0.5)
-    }
-    s.read.parquet(s"$tmp/out") // drop the per-batch restart partition col
-      .select(col("hi_id"), col("lo_id"), col("est_jaccard"))
-      .orderBy("hi_id", "lo_id")
-  }
-
-  private val qSimhashNearDups: Q = (s, dir) =>
-    Dedup.simHashNearDups(Tables.documents(s, dir), maxHamming = 6)
-      .orderBy("doc_a", "doc_b")
-
-  /** The composed training-data flow (quality filter → exact dedup →
-    * per-language accounting) gated through the oracle end-to-end.
-    */
-  private val qTrainingPipeline: Q = (s, dir) =>
-    graft.pipeline.TrainingDataPipeline.summary(Tables.documents(s, dir))
-      .withColumn("n_tokens", col("n_tokens").cast("long"))
-
-  private val trainingPipelineSql =
-    s"""WITH q AS (
-       |  SELECT doc_id, lang, text,
-       |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-       |    CAST(len(list_filter(string_split(text, ' '), t -> list_contains($stopListSql, t))) AS DOUBLE)
-       |      / CAST(len(string_split(text, ' ')) AS DOUBLE) AS stop_ratio,
-       |    CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE)
-       |      / CAST(len(string_split(text, ' ')) AS DOUBLE) AS ttr
-       |  FROM documents
-       |), ok AS (
-       |  SELECT * FROM q
-       |  WHERE NOT (n_tokens < 5) AND NOT (ttr < 0.3) AND NOT (stop_ratio > 0.5)
-       |), canon AS (
-       |  SELECT min(doc_id) AS doc_id FROM ok GROUP BY text
-       |)
-       |SELECT lang, COUNT(*) AS n_docs, CAST(SUM(n_tokens) AS BIGINT) AS n_tokens
-       |FROM ok JOIN canon USING (doc_id)
-       |GROUP BY lang ORDER BY lang""".stripMargin
-
-  /** The v2 composed pipeline: quality gate → exact dedup → NEAR-dup
-    * clustering (blocked Jaccard pairs + connected components, keep cluster
-    * minimum) → per-language accounting. The oracle composes the quality
-    * CTEs, the blocked pair join and the recursive-CTE transitive closure —
-    * the entire multi-stage flow hash-checked end to end.
-    */
-  private val qTrainingPipelineV2: Q = (s, dir) =>
-    graft.pipeline.TrainingDataPipeline.summaryV2(Tables.documents(s, dir))
-      .withColumn("n_tokens", col("n_tokens").cast("long"))
-
-  private val trainingPipelineV2Sql =
-    s"""WITH RECURSIVE qv AS (
-       |  SELECT doc_id, lang, text, n_chars,
-       |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-       |    CAST(len(list_filter(string_split(text, ' '), t -> list_contains($stopListSql, t))) AS DOUBLE)
-       |      / CAST(len(string_split(text, ' ')) AS DOUBLE) AS stop_ratio,
-       |    CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE)
-       |      / CAST(len(string_split(text, ' ')) AS DOUBLE) AS ttr
-       |  FROM documents
-       |), okv AS (
-       |  SELECT * FROM qv
-       |  WHERE NOT (n_tokens < 5) AND NOT (ttr < 0.3) AND NOT (stop_ratio > 0.5)
-       |), canonv AS (
-       |  SELECT min(doc_id) AS doc_id FROM okv GROUP BY text
-       |), surv AS (
-       |  SELECT okv.* FROM okv JOIN canonv USING (doc_id)
-       |), k AS (
-       |  SELECT doc_id, lang, CAST(floor(n_chars / 100) AS BIGINT) AS len_bucket,
-       |    list_distinct(string_split(text, ' ')) AS toks
-       |  FROM surv
-       |), pairs AS (
-       |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM k a JOIN k b ON a.lang = b.lang AND a.len_bucket = b.len_bucket
-       |  WHERE a.doc_id < b.doc_id
-       |    AND CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE)
-       |      / CAST(len(list_distinct(list_concat(a.toks, b.toks))) AS DOUBLE) >= 0.6
-       |), edges AS (
-       |  SELECT doc_a AS u, doc_b AS v FROM pairs
-       |  UNION SELECT doc_b AS u, doc_a AS v FROM pairs
-       |), reach(u, v) AS (
-       |  SELECT u, v FROM edges
-       |  UNION SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-       |), labels AS (
-       |  SELECT u AS doc_id, LEAST(u, MIN(v)) AS cluster_id FROM reach GROUP BY u
-       |), kept AS (
-       |  SELECT * FROM surv
-       |  WHERE doc_id NOT IN (SELECT doc_id FROM labels WHERE doc_id <> cluster_id)
-       |)
-       |SELECT lang, COUNT(*) AS n_docs, CAST(SUM(n_tokens) AS BIGINT) AS n_tokens
-       |FROM kept GROUP BY lang ORDER BY lang""".stripMargin
-
-  // ------------------------------------------------------------ embeddings
-
-  /** DuckDB dot product mirroring VectorFunctions.dot's exact fold order:
-    * left-to-right double accumulation over float-widened elements.
-    */
-  private def dotSql(a: String, b: String) =
-    s"list_sum(list_transform(generate_series(1, len($a)), i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))"
-
-  private def cosSql(a: String, b: String) =
-    s"(${dotSql(a, b)} / (sqrt(${dotSql(a, a)}) * sqrt(${dotSql(b, b)})))"
-
-  private val qCosineTopk: Q = (s, dir) => {
-    val emb = Tables.embeddings(s, dir)
-    Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") < 5), k = 5)
-      .orderBy("query_id", "rk")
-  }
-
-  private val cosineTopkSql =
-    s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qvec FROM embeddings WHERE vec_id < 5),
-       |c AS (SELECT vec_id AS neighbor_id, embedding AS cvec FROM embeddings),
-       |scored AS (
-       |  SELECT query_id, neighbor_id, ${cosSql("qvec", "cvec")} AS cos
-       |  FROM c CROSS JOIN q WHERE query_id <> neighbor_id
-       |)
-       |SELECT query_id, neighbor_id, cos, rk FROM (
-       |  SELECT query_id, neighbor_id, cos,
-       |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS BIGINT) AS rk
-       |  FROM scored) t
-       |WHERE rk <= 5 ORDER BY query_id, rk""".stripMargin
-
-  /** LSH bucket oracle generated from the same hyperplane constants. */
-  private val lshBucketSqlFor: String => String = { v =>
-    val bits = (0 until VectorFunctions.LshBits).map { h =>
-      val proj = s"list_sum(list_transform(generate_series(1, len($v)), " +
-        s"i -> CAST($v[i] AS DOUBLE) * CAST(xor((i-1)*73856093, ${h * 19349663L}) % 7 - 3 AS DOUBLE)))"
-      s"(CASE WHEN $proj >= 0.0 THEN ${1L << h} ELSE 0 END)"
-    }
-    bits.mkString("(", " + ", ")")
-  }
-
-  private val qEmbeddingNearDups: Q = (s, dir) =>
-    Similarity.cosineNearDups(Tables.embeddings(s, dir), threshold = 0.2)
-      .orderBy("vec_a", "vec_b")
-
-  private val embeddingNearDupsSql =
-    s"""WITH k AS (
-       |  SELECT vec_id, embedding, ${lshBucketSqlFor("embedding")} AS bucket FROM embeddings
-       |)
-       |SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-       |  ${cosSql("a.embedding", "b.embedding")} AS cos
-       |FROM k a JOIN k b ON a.bucket = b.bucket
-       |WHERE a.vec_id < b.vec_id
-       |  AND ${cosSql("a.embedding", "b.embedding")} >= 0.2
-       |ORDER BY vec_a, vec_b""".stripMargin
-
-  /** The opt-in Catalyst rule on the declared path: the query is written as
-    * the NAIVE all-pairs cosine cross join; RewriteCosineSelfJoin (installed
-    * via experimental.extraOptimizations, gated by its conf flag) rewrites
-    * the plan into the LSH-bucket equi-join, and the oracle checks the
-    * BLOCKED semantics — the same result as ⊕ q_embedding_neardups. The
-    * rule stays installed for the session: it matches only this
-    * cross-join-plus-cosine-filter shape, which no other query builds.
-    */
-  private val qCosineRewrite: Q = (s, dir) => {
-    import org.apache.spark.sql.graftx.RewriteCosineSelfJoin
-    if (!s.experimental.extraOptimizations.contains(RewriteCosineSelfJoin))
-      s.experimental.extraOptimizations ++= Seq(RewriteCosineSelfJoin)
-    s.conf.set("spark.graft.similarity.rewrite", "true")
-    val emb = Tables.embeddings(s, dir)
-    val a = emb.select(col("vec_id").as("vec_a"), col("embedding").as("emb_a"))
-    val b = emb.select(col("vec_id").as("vec_b"), col("embedding").as("emb_b"))
-    a.crossJoin(b)
-      .filter(VectorFunctions.cosine(col("emb_a"), col("emb_b")) >= 0.2 &&
-        col("vec_a") < col("vec_b"))
-      .select(col("vec_a"), col("vec_b"),
-        VectorFunctions.cosine(col("emb_a"), col("emb_b")).as("cos"))
-      .orderBy("vec_a", "vec_b")
-  }
-
-  /** JL random projection (VectorFunctions.randomProjection) with a FULL
-    * value-level oracle: 64-dim embeddings down to 16 dims, exploded to one
-    * row per (vector, output dim). The weights are the PRNG-free integer
-    * family, the fold is strict left-to-right double — DuckDB replays the
-    * identical arithmetic, so every projected coordinate hash-matches
-    * bit-for-bit (no bound-check indirection needed).
-    */
-  private val qRandProjection: Q = (s, dir) =>
-    Tables.embeddings(s, dir)
-      .filter(col("vec_id") < 25)
-      .select(col("vec_id"),
-        posexplode(VectorFunctions.randomProjection(col("embedding"), 16)))
-      .select(col("vec_id"), col("pos").cast("long").as("d"), col("col").as("val"))
-      .orderBy("vec_id", "d")
-
-  private val randProjectionSql =
-    """SELECT vec_id, CAST(j AS BIGINT) AS d,
-      |  list_sum(list_transform(generate_series(1, len(embedding)),
-      |    i -> CAST(embedding[i] AS DOUBLE) *
-      |      CAST(xor((i-1)*73856093, j*19349663) % 7 - 3 AS DOUBLE))) AS val
-      |FROM embeddings, generate_series(0, 15) t(j)
-      |WHERE vec_id < 25
-      |ORDER BY vec_id, d""".stripMargin
-
-  /** PCA over int8-quantized embeddings (similarity.Pca): the corpus
-    * contributes an EXACT integer Gram matrix (order-free long sums — the
-    * accumulation path is hash-checked via the trace, which the oracle
-    * recomputes independently by replaying the quantization in SQL), and
-    * the 64×64 eigenproblem runs on the driver with deterministic Jacobi.
-    * Eigen-structure checks (descending order, orthonormality, trace =
-    * Σ eigenvalues) are emitted in-engine as booleans the oracle expects
-    * TRUE — the sketch-oracle contract, with a bit-exact integer anchor.
-    */
-  private val qPca: Q = (s, dir) => {
-    val emb = Tables.embeddings(s, dir)
-    val (gram, n) = similarity.Pca.int8Gram(emb)
-    val dim = gram.length
-    val traceExact = (0 until dim).map(d => gram(d)(d)).sum
-    val (evals, evecs) = similarity.Pca.jacobiEigen(
-      gram.map(_.map(_.toDouble / n)))
-    val descOk = evals.sliding(2).forall(p => p(0) >= p(1) - 1e-9)
-    val orthoOk = {
-      var worst = 0.0
-      for (i <- evecs.indices; j <- i until dim) {
-        val d = (0 until dim).map(k => evecs(i)(k) * evecs(j)(k)).sum
-        worst = math.max(worst, math.abs(d - (if (i == j) 1.0 else 0.0)))
-      }
-      worst < 1e-8
-    }
-    val traceOk =
-      math.abs(evals.sum - traceExact.toDouble / n) <= 1e-6 * math.abs(evals.sum)
-    import s.implicits._
-    (0 until 10).map(k =>
-        (k.toLong, descOk, orthoOk, traceOk, traceExact))
-      .toDF("k", "desc_ok", "ortho_ok", "trace_ok", "trace")
-      .orderBy("k")
-  }
-
-  private val pcaSql =
-    """WITH s0 AS (
-      |  SELECT list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS s,
-      |    embedding
-      |  FROM embeddings
-      |), qz AS (
-      |  SELECT list_transform(embedding,
-      |    x -> CAST(round(CAST(x AS DOUBLE) * 127 / s) AS BIGINT)) AS q
-      |  FROM s0
-      |), t AS (
-      |  SELECT CAST(SUM(list_sum(list_transform(q, v -> v * v))) AS BIGINT) AS trace
-      |  FROM qz
-      |)
-      |SELECT CAST(k AS BIGINT) AS k, TRUE AS desc_ok, TRUE AS ortho_ok,
-      |  TRUE AS trace_ok, trace
-      |FROM t, generate_series(0, 9) g(k) ORDER BY k""".stripMargin
-
-  private val qAnnLsh: Q = (s, dir) => {
-    val emb = Tables.embeddings(s, dir)
-    Similarity.lshTopK(emb, emb.filter(col("vec_id") < 5), k = 5)
-      .orderBy("query_id", "rk")
-  }
-
-  /** int8 scalar-quantized top-k (`Similarity.sqTopK`): 4× smaller scan
-    * side, and because the similarity math is exact integer dot products,
-    * the WHOLE quantized search is bit-reproducible in SQL — a full oracle,
-    * unlike float-sum formulations which only match under a fixed fold
-    * order.
-    */
-  private val qSqCosine: Q = (s, dir) => {
-    val emb = Tables.embeddings(s, dir)
-    Similarity.sqTopK(emb, emb.filter(col("vec_id") < 5), k = 5)
-      .orderBy("query_id", "rk")
-  }
-
-  private def idotSql(a: String, b: String) =
-    s"list_sum(list_transform(generate_series(1, len($a)), i -> ($a)[i] * ($b)[i]))"
-
-  private val sqCosineSql = {
-    val cosExpr =
-      s"CAST(${idotSql("qq", "cq")} AS DOUBLE) / " +
-        s"(sqrt(CAST(${idotSql("qq", "qq")} AS DOUBLE)) * " +
-        s"sqrt(CAST(${idotSql("cq", "cq")} AS DOUBLE)))"
-    s"""WITH s0 AS (
-       |  SELECT vec_id, embedding,
-       |    list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS s
-       |  FROM embeddings
-       |), qz AS (
-       |  SELECT vec_id,
-       |    list_transform(embedding,
-       |      x -> CAST(round(CAST(x AS DOUBLE) * 127 / s) AS BIGINT)) AS q
-       |  FROM s0
-       |), q AS (SELECT vec_id AS query_id, q AS qq FROM qz WHERE vec_id < 5),
-       |c AS (SELECT vec_id AS neighbor_id, q AS cq FROM qz),
-       |scored AS (
-       |  SELECT query_id, neighbor_id, $cosExpr AS qcos
-       |  FROM c CROSS JOIN q WHERE query_id <> neighbor_id
-       |)
-       |SELECT query_id, neighbor_id, qcos, rk FROM (
-       |  SELECT query_id, neighbor_id, qcos,
-       |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY qcos DESC, neighbor_id) AS BIGINT) AS rk
-       |  FROM scored) t
-       |WHERE rk <= 5 ORDER BY query_id, rk""".stripMargin
-  }
-
-  /** Multi-probe LSH ANN (`Similarity.ivfTopK`): each query probes its own
-    * bucket plus Hamming-1 neighbors. Deterministic end to end, so this ANN
-    * variant gets a FULL oracle — the probe list is the same XOR expansion
-    * in SQL.
-    */
-  private val qAnnIvfProbes: Q = (s, dir) => {
-    val emb = Tables.embeddings(s, dir)
-    Similarity.ivfTopK(emb, emb.filter(col("vec_id") < 5), k = 5, nprobe = 4)
-      .orderBy("query_id", "rk")
-  }
-
-  private val annIvfProbesSql =
-    s"""WITH k AS (
-       |  SELECT vec_id, embedding, ${lshBucketSqlFor("embedding")} AS bucket FROM embeddings
-       |), q0 AS (
-       |  SELECT vec_id AS query_id, embedding AS qvec, bucket AS qb FROM k WHERE vec_id < 5
-       |), q AS (
-       |  SELECT query_id, qvec, u.b AS bucket
-       |  FROM q0, UNNEST([qb, xor(qb, 1), xor(qb, 2), xor(qb, 4)]) AS u(b)
-       |), scored AS (
-       |  SELECT query_id, c.vec_id AS neighbor_id,
-       |    ${cosSql("qvec", "c.embedding")} AS cos
-       |  FROM k c JOIN q ON c.bucket = q.bucket
-       |  WHERE query_id <> c.vec_id
-       |)
-       |SELECT query_id, neighbor_id, cos, rk FROM (
-       |  SELECT query_id, neighbor_id, cos,
-       |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS BIGINT) AS rk
-       |  FROM scored) t
-       |WHERE rk <= 5 ORDER BY query_id, rk""".stripMargin
-
-  /** Full oracle: the LSH probe is deterministic (generated hyperplane
-    * constants), so the whole bucket-restricted top-k is SQL-expressible —
-    * same bucket bits, same exact-order cosine, same ranking tie-break.
-    */
-  private val annLshSql =
-    s"""WITH k AS (
-       |  SELECT vec_id, embedding, ${lshBucketSqlFor("embedding")} AS bucket FROM embeddings
-       |), q AS (
-       |  SELECT vec_id AS query_id, embedding AS qvec, bucket FROM k WHERE vec_id < 5
-       |), scored AS (
-       |  SELECT query_id, c.vec_id AS neighbor_id,
-       |    ${cosSql("qvec", "c.embedding")} AS cos
-       |  FROM k c JOIN q ON c.bucket = q.bucket
-       |  WHERE query_id <> c.vec_id
-       |)
-       |SELECT query_id, neighbor_id, cos, rk FROM (
-       |  SELECT query_id, neighbor_id, cos,
-       |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS BIGINT) AS rk
-       |  FROM scored) t
-       |WHERE rk <= 5 ORDER BY query_id, rk""".stripMargin
-
-  /** k-means IVF ANN (deterministic fit: lowest-id init, 3 Lloyd's iters).
-    *
-    * The k-means fit is float-order-sensitive, so the IVF result itself is
-    * not SQL-reproducible; instead the query measures recall@5 against the
-    * exact brute-force top-k IN-ENGINE and emits the bound check as data.
-    * The oracle recomputes the query count and expects `recall_ok = TRUE` —
-    * a broken index drops recall below the bound and the hash compare goes
-    * red. (0.2 mirrors SimilaritySpec: 4/16 clusters probed on near-random
-    * synthetic embeddings; observed recall is far higher.)
-    */
-  /** Shared recall@k harness for the approximate-index queries: one row
-    * (n_queries, recall_ok) where n_queries is oracle-computable and
-    * recall_ok gates the index against the exact brute-force top-k.
-    */
-  private def recallCheck(queries: DataFrame, approx: DataFrame,
-      exact: DataFrame, bound: Double): DataFrame = {
-    val nQueries = queries.agg(countDistinct(col("vec_id")).as("n_queries"))
-    val nExact = exact.agg(count(lit(1)).as("n_exact"))
-    val nHit = exact.select(col("query_id"), col("neighbor_id"))
-      .join(approx.select(col("query_id"), col("neighbor_id")),
-        Seq("query_id", "neighbor_id"))
-      .agg(count(lit(1)).as("n_hit"))
-    nQueries.crossJoin(broadcast(nExact)).crossJoin(broadcast(nHit))
-      .select(
-        col("n_queries"),
-        (col("n_hit").cast("double") / col("n_exact").cast("double") >= lit(bound))
-          .as("recall_ok"))
-  }
-
-  /** Fitted-model accessors: ANN quantizers are build-once artifacts, so the
-    * declared queries share one fit per (dataset, hyperparams) via
-    * [[ModelCache]] instead of re-running Lloyd's per query. Fits are
-    * deterministic, so cached and refit models are bit-identical.
-    */
-  private def ivfCentroids(emb: DataFrame, dir: String): Array[Array[Double]] =
-    ModelCache.getOrFit(s"ivf:k16:i3:$dir") { KMeansIvf.fit(emb, k = 16, iters = 3) }
-
-  private def pqModel(emb: DataFrame, dim: Int, dir: String): ProductQuantizer.Model =
-    ModelCache.getOrFit(s"pq:m8:k16:i3:$dir") {
-      ProductQuantizer.fit(emb, dim, m = 8, k = 16, iters = 3)
-    }
-
-  private def embDim(emb: DataFrame, dir: String): Int =
-    ModelCache.getOrFit(s"dim:$dir") {
-      java.lang.Integer.valueOf(emb.select(size(col("embedding"))).head().getInt(0))
-    }.intValue()
-
-  private val qAnnIvf: Q = (s, dir) => {
-    val emb = Tables.embeddings(s, dir)
-    val centroids = ivfCentroids(emb, dir)
-    val queries = emb.filter(col("vec_id") < 5)
-    val ivf = KMeansIvf.search(KMeansIvf.index(emb, centroids),
-      queries, centroids, k = 5, nprobe = 4)
-    recallCheck(queries, ivf, Similarity.bruteForceTopK(emb, queries, k = 5),
-      bound = 0.2)
-  }
-
-  private val annIvfSql =
-    """SELECT CAST(COUNT(*) AS BIGINT) AS n_queries, TRUE AS recall_ok
-      |FROM embeddings WHERE vec_id < 5""".stripMargin
-
-  /** Incremental corpus ingestion — the reference's incremental-backup
-    * discipline applied to the training pipeline: wave 1 (older docs) is
-    * deduped and its 16-byte fingerprint index PERSISTED; wave 2 processes
-    * ONLY new docs, deduping within itself and against the index (an
-    * anti join on longs — historical text is never refetched), then
-    * appends. The result is provably identical to batch-deduping the full
-    * corpus (min-id canonical + id-ordered waves commute), which is
-    * exactly what the oracle checks.
-    */
-  private val qIncrementalCorpus: Q = (s, dir) => {
-    val docs = Tables.documents(s, dir)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-inc").toString
-    val split = 250L
-    val wave1 = docs.filter(col("doc_id") < split)
-    val wave2 = docs.filter(col("doc_id") >= split)
-    // wave 1: dedup, persist canon + fingerprint index
-    Dedup.exactByFingerprint(wave1)
-      .select(col("fp"), col("canonical_id"))
-      .write.mode("overwrite").parquet(s"$tmp/fp_index")
-    wave1.join(
-        Dedup.exactByFingerprint(wave1).select(col("canonical_id").as("doc_id")),
-        "doc_id")
-      .write.mode("overwrite").parquet(s"$tmp/corpus")
-    // wave 2 (later run): known fingerprints excluded via the index —
-    // only (long, long) rows shuffle, no historical text
-    val idx = s.read.parquet(s"$tmp/fp_index").select(col("fp"))
-    val w2canon = Dedup.exactByFingerprint(wave2)
-      .join(idx, Seq("fp"), "left_anti")
-      .select(col("canonical_id").as("doc_id"))
-    wave2.join(w2canon, "doc_id")
-      .write.mode("append").parquet(s"$tmp/corpus")
-    // accounting over the incrementally-built corpus
-    s.read.parquet(s"$tmp/corpus")
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"), expr("bit_xor(doc_id)").as("id_xor"),
-        sum(col("n_chars")).as("chars"))
-      .orderBy("lang")
-  }
-
-  /** Oracle: batch dedup of the FULL corpus (min doc_id per text). */
-  private val incrementalCorpusSql =
-    """WITH canon AS (
-      |  SELECT MIN(doc_id) AS doc_id FROM documents GROUP BY text
-      |)
-      |SELECT lang, COUNT(*) AS n_docs,
-      |  CAST(bit_xor(doc_id) AS BIGINT) AS id_xor,
-      |  CAST(SUM(n_chars) AS BIGINT) AS chars
-      |FROM documents JOIN canon USING (doc_id)
-      |GROUP BY lang ORDER BY lang""".stripMargin
-
-  /** Point-in-time join — the warehouse pattern of joining facts to the
-    * SCD2 dimension version valid AT fact time: Scd2.build produces the
-    * version history, simultaneous changes collapse to their final
-    * version, and the as-of join (one shuffle + in-partition sort)
-    * attaches each purchase's state. The oracle replays SCD2 and uses
-    * DuckDB's native ASOF JOIN — tie rules must agree exactly.
-    */
-  private val qPitJoin: Q = (s, dir) => {
-    val evRaw = Tables.events(s, dir)
-    // dimension: the user's last NON-purchase activity state — so each
-    // purchase attributes to what the user was doing when they bought
-    val versions = graft.etl.Scd2
-      .build(evRaw.filter(col("event_type") =!= "purchase")
-        .select(col("user_id"), col("ts"), col("event_id"),
-          col("event_type")), Seq("user_id"), "event_type", "ts", Seq("event_id"))
-      .select(col("user_id"), col("event_type"), col("version"),
-        unix_micros(col("valid_from")).as("tus"))
-    val dim = versions.groupBy(col("user_id"), col("tus"))
-      .agg(max(struct(col("version"), col("event_type"))).as("m"))
-      .select(col("user_id"), col("tus"), col("m.event_type").as("state_type"))
-    val facts = evRaw.filter(col("event_type") === "purchase")
-      .select(col("user_id"), unix_micros(col("ts")).as("tus"),
-        col("event_id"), col("value"))
-    operators.AsofJoin(facts, dim, "user_id", "tus", Seq("state_type"))
-      .groupBy(coalesce(col("asof_state_type"), lit("none")).as("state_type"))
-      .agg(count(lit(1)).as("n"),
-        expr("bit_xor(event_id)").as("id_xor"),
-        sum(col("value").cast("decimal(18,6)")).cast("double").as("val_sum"))
-      .orderBy("state_type")
-  }
-
-  private val pitJoinSql =
-    """WITH ev AS (
-      |  SELECT user_id, epoch_us(ts) AS tus, event_id, event_type, value
-      |  FROM events
-      |), marked AS (
-      |  SELECT user_id, tus, event_id, event_type,
-      |    LAG(event_type) OVER (PARTITION BY user_id ORDER BY tus, event_id)
-      |      AS prev_type
-      |  FROM ev WHERE event_type <> 'purchase'
-      |), changed AS (
-      |  SELECT user_id, tus, event_id, event_type FROM marked
-      |  WHERE prev_type IS NULL OR prev_type <> event_type
-      |), versions AS (
-      |  SELECT user_id, event_type,
-      |    CAST(ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY tus, event_id)
-      |      AS BIGINT) AS version,
-      |    tus AS from_us
-      |  FROM changed
-      |), dim AS (
-      |  SELECT user_id, from_us, arg_max(event_type, version) AS state_type
-      |  FROM versions GROUP BY 1, 2
-      |), facts AS (
-      |  SELECT user_id, tus, event_id, CAST(value AS DECIMAL(18,6)) AS v
-      |  FROM ev WHERE event_type = 'purchase'
-      |)
-      |SELECT COALESCE(d.state_type, 'none') AS state_type, COUNT(*) AS n,
-      |  CAST(bit_xor(f.event_id) AS BIGINT) AS id_xor,
-      |  CAST(SUM(f.v) AS DOUBLE) AS val_sum
-      |FROM facts f ASOF LEFT JOIN dim d
-      |  ON f.user_id = d.user_id AND f.tus >= d.from_us
-      |GROUP BY 1 ORDER BY 1""".stripMargin
-
-  /** Streaming classifier gate (streaming.DocsStream): the hashed-linear
-    * quality filter applied inside Structured Streaming (codegen
-    * inference per micro-batch, stateless), drained AvailableNow to
-    * parquet, then aggregated. The oracle replays the classifier over the
-    * batch table — the hash matches only if the stream passed exactly the
-    * batch-gated rows with identical scores.
-    */
-  private val qStreamClassify: Q = (s, dir) => {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-sclass").toString
-    streaming.DocsStream.classifyDrain(s, dir, s"$tmp/out", s"$tmp/ck")
-    s.read.parquet(s"$tmp/out")
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n"), expr("bit_xor(doc_id)").as("id_xor"),
-        sum(col("w_sum")).as("w_total"))
-      .orderBy("lang")
-  }
-
-  private def streamClassifySqlGen: String =
-    s"""SELECT lang, COUNT(*) AS n,
-       |  CAST(bit_xor(doc_id) AS BIGINT) AS id_xor,
-       |  CAST(SUM(score) AS BIGINT) AS w_total
-       |FROM (SELECT doc_id, lang,
-       |        ${graft.quality.LinearScorer.scoreSql("text")} AS score
-       |      FROM documents) t
-       |WHERE score > 0 GROUP BY lang ORDER BY lang""".stripMargin
-
-  /** Key-skew diagnostics: the pre-flight a 100 TB join/agg runs to decide
-    * whether to salt — per-key count distribution (median/p99/max), the
-    * hottest key's share, and the suggested salt factor
-    * (⌈max_key_rows / mean_key_rows⌉ — how many ways the hottest key must
-    * split to look average). One aggregate over the key histogram; the
-    * histogram itself is the partial-agg'd groupBy.
-    */
-  private val qSkewStats: Q = (s, dir) => {
-    val counts = Tables.lineitem(s, dir)
-      .groupBy(col("l_suppkey").as("key")).agg(count(lit(1)).as("c"))
-    counts.agg(
-        count(lit(1)).as("n_keys"),
-        sum(col("c")).as("n_rows"),
-        max(col("c")).as("max_key_rows"),
-        expr("percentile(c, 0.5)").as("p50"),
-        expr("percentile(c, 0.99)").as("p99"))
-      .withColumn("suggested_salts",
-        ceil(col("max_key_rows") * col("n_keys") / col("n_rows")).cast("long"))
-  }
-
-  private val skewStatsSql =
-    """WITH h AS (SELECT l_suppkey AS key, COUNT(*) AS c FROM lineitem GROUP BY 1)
-      |SELECT CAST(COUNT(*) AS BIGINT) AS n_keys,
-      |  CAST(SUM(c) AS BIGINT) AS n_rows,
-      |  CAST(MAX(c) AS BIGINT) AS max_key_rows,
-      |  percentile_cont(0.5) WITHIN GROUP (ORDER BY c) AS p50,
-      |  percentile_cont(0.99) WITHIN GROUP (ORDER BY c) AS p99,
-      |  CAST(CEIL(MAX(c) * COUNT(*) / CAST(SUM(c) AS DOUBLE)) AS BIGINT)
-      |    AS suggested_salts
-      |FROM h""".stripMargin
-
-  /** Join-cardinality estimation from per-key histograms — the planning
-    * companion of q_skew_stats. |A ⋈ B| on a key equals Σ_k cA(k)·cB(k),
-    * computable from two input-sized aggregates WITHOUT materializing the
-    * join — at 100 TB that is the difference between sizing a
-    * possibly-exploding self-join and running it to find out. Sized here:
-    * the lineitem partkey self-join (the q17 shape). Emits exact output
-    * rows, the hottest key's contribution, and the integer-math strategy
-    * verdict a driver would act on (salt the hot keys vs plain shuffle).
-    */
-  private val qJoinCardinality: Q = (s, dir) => {
-    val perKey = Tables.lineitem(s, dir)
-      .groupBy(col("l_partkey").as("key")).agg(count(lit(1)).as("c"))
-    perKey.agg(
-        sum(col("c") * col("c")).as("join_rows"),
-        max(col("c") * col("c")).as("max_key_rows"),
-        count(lit(1)).as("n_keys"),
-        sum(col("c")).as("input_rows"))
-      .select(col("join_rows"), col("max_key_rows"), col("n_keys"),
-        col("input_rows"),
-        when(col("max_key_rows") * 20 > col("join_rows"), "salt_hot_keys")
-          .otherwise("shuffle_ok").as("strategy"))
-  }
-
-  private val joinCardinalitySql =
-    """WITH h AS (
-      |  SELECT l_partkey AS key, COUNT(*) AS c FROM lineitem GROUP BY 1
-      |)
-      |SELECT CAST(SUM(c * c) AS BIGINT) AS join_rows,
-      |  CAST(MAX(c * c) AS BIGINT) AS max_key_rows,
-      |  COUNT(*) AS n_keys,
-      |  CAST(SUM(c) AS BIGINT) AS input_rows,
-      |  CASE WHEN MAX(c * c) * 20 > SUM(c * c) THEN 'salt_hot_keys'
-      |       ELSE 'shuffle_ok' END AS strategy
-      |FROM h""".stripMargin
-
-  /** AQE skew-join: the runtime complement of the manual SaltedJoin. A
-    * deliberately skewed fact (≈3/4 of lineitem lands on one join key) is
-    * joined to a tiny dim with broadcast DISABLED, so the planner picks a
-    * shuffled join and AQE's OptimizeSkewedJoin must split the oversized
-    * partition at runtime from map-output statistics — the 100 TB answer
-    * when the skewed keys aren't known in advance (SaltedJoin is the
-    * static answer when they are). The query executes once internally on
-    * an isolated session (tuned skew thresholds; `newSession` shares the
-    * SparkContext but not the SQLConf, so sibling queries are untouched)
-    * and emits `skew_split` — whether the final adaptive plan actually
-    * split the skewed partition — as oracle-comparable data alongside the
-    * join aggregate itself. The hash matches only if the skew handling
-    * both fired AND preserved the exact join semantics.
-    */
-  private val qAqeSkewJoin: Q = (s0, dir) => {
-    val s = s0.newSession()
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    s.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    s.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-    s.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "16384")
-    s.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8192")
-    // round-robin pre-repartition models a real cluster's many map tasks:
-    // AQE splits a skewed reduce partition at MAPPER granularity, so a
-    // single-file local scan (one mapper) would leave nothing to split
-    val li = Tables.lineitem(s, dir).select(
-      when(col("l_orderkey") % 4 =!= 0, lit(0L))
-        .otherwise(col("l_orderkey") % 31 + 1).as("skew_key"),
-      col("l_extendedprice"), col("l_quantity")).repartition(8)
-    val dim = s.range(0, 32).select(col("id").as("skew_key"),
-      concat(lit("grp_"), (col("id") % 4).cast("string")).as("grp"))
-    val agg = li.join(dim, "skew_key")
-      .groupBy(col("grp"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("l_extendedprice").cast("decimal(18,4)")).cast("double")
-          .as("rev"),
-        sum(col("l_quantity").cast("decimal(18,4)")).cast("double").as("qty"))
-    // one materializing action finalizes the adaptive plan AND yields the
-    // 4-row result; returning it as local rows avoids re-running the join
-    // when the caller executes the returned frame
-    val ordered = agg.orderBy("grp")
-    val rows = ordered.collect()
-    val split =
-      ordered.queryExecution.executedPlan.toString.contains("skew=true")
-    import scala.jdk.CollectionConverters._
-    val out = rows.map(r =>
-      org.apache.spark.sql.Row.fromSeq(r.toSeq :+ split)).toSeq.asJava
-    s.createDataFrame(out, org.apache.spark.sql.types.StructType(
-      agg.schema.fields :+ org.apache.spark.sql.types.StructField(
-        "skew_split", org.apache.spark.sql.types.BooleanType, nullable = false)))
-  }
-
-  private val aqeSkewJoinSql =
-    """WITH li AS (
-      |  SELECT CASE WHEN l_orderkey % 4 <> 0 THEN 0
-      |              ELSE l_orderkey % 31 + 1 END AS skew_key,
-      |         l_extendedprice, l_quantity
-      |  FROM lineitem
-      |), dim AS (
-      |  SELECT i AS skew_key, 'grp_' || CAST(i % 4 AS VARCHAR) AS grp
-      |  FROM range(0, 32) t(i)
-      |)
-      |SELECT grp, COUNT(*) AS n,
-      |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS rev,
-      |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS qty,
-      |  TRUE AS skew_split
-      |FROM li JOIN dim USING (skew_key)
-      |GROUP BY grp ORDER BY grp""".stripMargin
-
-  /** k-core peeling (operators.KCore) over the supplier–part bipartite
-    * graph: iterative degree-< k node deletion for a FIXED round count,
-    * with convergence reported in-band. The oracle replays every round as
-    * generated CTEs (the LabelPropagation discipline) — node set, edge
-    * count and the fixed-point flag are all hash-checked.
-    */
-  private val qKCore: Q = (s, dir) => {
-    val pairs = Tables.lineitem(s, dir)
-      .select((col("l_suppkey") * 2).as("a"), (col("l_partkey") * 2 + 1).as("b"))
-    operators.KCore.run(pairs, "a", "b", k = KCoreK, rounds = KCoreRounds)
-  }
-
-  private val KCoreK = 20
-  private val KCoreRounds = 4
-
-  /** Single-source shortest paths (operators.ShortestPaths): Bellman–Ford
-    * over the quantity-weighted supplier–part bipartite graph from
-    * supplier #0, a fixed hop bound, convergence in-band. The oracle
-    * replays every relaxation round as generated CTEs (the KCore
-    * discipline) including the convergence comparison of the final two
-    * rounds; `path_xor` binds every reached node to its exact distance.
-    */
-  private val qShortestPaths: Q = (s, dir) => {
-    val base = Tables.lineitem(s, dir)
-      .groupBy((col("l_suppkey") * 2).as("a"), (col("l_partkey") * 2 + 1).as("b"))
-      .agg(min(col("l_quantity")).cast("long").as("w"))
-    val edges = base.select(col("a").as("src"), col("b").as("dst"), col("w"))
-      .unionByName(base.select(col("b").as("src"), col("a").as("dst"), col("w")))
-    operators.ShortestPaths.run(edges, source = 0L, rounds = SsspRounds)
-  }
-
-  private val SsspRounds = 4
-
-  private def shortestPathsSqlGen: String = {
-    val rounds = (1 to SsspRounds).map { i =>
-      s"""d$i AS (
-         |  SELECT node, MIN(dist) AS dist FROM (
-         |    SELECT e.dst AS node, d.dist + e.w AS dist
-         |    FROM d${i - 1} d JOIN e ON d.node = e.src
-         |    UNION ALL SELECT node, dist FROM d${i - 1}
-         |  ) t GROUP BY node)""".stripMargin
-    }.mkString(",\n")
-    val r = SsspRounds
-    s"""WITH e0 AS (
-       |  SELECT l_suppkey * 2 AS a, l_partkey * 2 + 1 AS b,
-       |         CAST(MIN(l_quantity) AS BIGINT) AS w
-       |  FROM lineitem GROUP BY 1, 2
-       |), e AS (
-       |  SELECT a AS src, b AS dst, w FROM e0
-       |  UNION ALL SELECT b AS src, a AS dst, w FROM e0
-       |), d0 AS (
-       |  SELECT CAST(0 AS BIGINT) AS node, CAST(0 AS BIGINT) AS dist
-       |),
-       |$rounds
-       |SELECT COUNT(*) AS n_reached,
-       |  CAST(SUM(dist) AS BIGINT) AS dist_sum,
-       |  CAST(MAX(dist) AS BIGINT) AS dist_max,
-       |  CAST(bit_xor(node * 100000 + dist) AS BIGINT) AS path_xor,
-       |  (SELECT COUNT(*) FROM d${r - 1}) = (SELECT COUNT(*) FROM d$r)
-       |    AND (SELECT CAST(SUM(dist) AS BIGINT) FROM d${r - 1})
-       |      = (SELECT CAST(SUM(dist) AS BIGINT) FROM d$r) AS converged
-       |FROM d$r""".stripMargin
-  }
-
-  private def kcoreSqlGen: String = {
-    val rounds = (1 to KCoreRounds).map { i =>
-      s"""n$i AS (SELECT src FROM e${i - 1} GROUP BY src HAVING COUNT(*) >= $KCoreK),
-         |e$i AS (SELECT e.src, e.dst FROM e${i - 1} e
-         |        JOIN n$i x ON e.src = x.src JOIN n$i y ON e.dst = y.src)""".stripMargin
-    }.mkString(",\n")
-    val last = s"e$KCoreRounds"
-    val prev = s"e${KCoreRounds - 1}"
-    s"""WITH p AS (
-       |  SELECT l_suppkey * 2 AS a, l_partkey * 2 + 1 AS b FROM lineitem
-       |), e0 AS (
-       |  SELECT DISTINCT a AS src, b AS dst FROM p WHERE a <> b
-       |  UNION SELECT b AS src, a AS dst FROM p WHERE a <> b
-       |),
-       |$rounds
-       |SELECT CAST(COUNT(DISTINCT src) AS BIGINT) AS n_nodes,
-       |  CAST(bit_xor(DISTINCT src) AS BIGINT) AS node_xor,
-       |  CAST((SELECT COUNT(*) FROM $last WHERE src < dst) AS BIGINT) AS n_edges,
-       |  (SELECT COUNT(DISTINCT src) FROM $prev) = COUNT(DISTINCT src) AS converged
-       |FROM $last""".stripMargin
-  }
-
-  /** The pure-SQL surface end to end: graft's native expressions reached
-    * through `spark.sql(...)` text (GraftFunctions registry) over a temp
-    * view — rolling_hash fingerprints and subword_pieces token accounting
-    * per language, hash-checked like any Column-API query. Proves a SQL-
-    * only client gets the same engine.
-    */
-  private val qSqlSurface: Q = (s, dir) => {
-    org.apache.spark.sql.graftx.GraftFunctions.registerAll(s)
-    Tables.documents(s, dir).createOrReplaceTempView("docs_sql")
-    s.sql("""SELECT lang, COUNT(*) AS n,
-      CAST(bit_xor(rolling_hash(text)) AS BIGINT) AS fp_xor,
-      CAST(SUM(size(subword_pieces(text))) AS BIGINT) AS pieces
-      FROM docs_sql GROUP BY lang ORDER BY lang""")
-  }
-
-  private def sqlSurfaceSqlGen: String =
-    s"""WITH RECURSIVE ${subwordCtes("documents")}, np AS (
-       |  SELECT t.doc_id, SUM(len(d.pieces)) AS n_pieces
-       |  FROM toks t JOIN done d USING (word) GROUP BY t.doc_id)
-       |SELECT lang, COUNT(*) AS n,
-       |  CAST(bit_xor(${u64ToSigned(rollingFoldSql("text"))}) AS BIGINT) AS fp_xor,
-       |  CAST(SUM(COALESCE(np.n_pieces, 0)) AS BIGINT) AS pieces
-       |FROM documents LEFT JOIN np USING (doc_id)
-       |GROUP BY lang ORDER BY lang""".stripMargin
-
-  /** Avro container round-trip (sources.Avro — built on the Avro core
-    * API): a typed orders projection out to deflate containers and back
-    * with an explicit schema, aggregated per priority with an order-free
-    * key xor + exact decimal money sum. The oracle aggregates the source
-    * directly — the hash matches only if every row and value survived the
-    * binary hop. Completes S10's alternate-format set with the Kafka/
-    * Hadoop interchange container.
-    */
-  private val qAvroRoundtrip: Q = (s, dir) => {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-avro").toString
-    val src = Tables.orders(s, dir).select(
-      col("o_orderkey"), col("o_custkey"),
-      col("o_totalprice").cast("double").as("price"),
-      col("o_orderpriority").as("prio"),
-      col("o_orderdate").cast("string").as("odate"))
-    graft.sources.Avro.write(src, s"$tmp/a", numFiles = 4)
-    graft.sources.Avro.read(s, s"$tmp/a", src.schema)
-      .groupBy(col("prio"))
-      .agg(count(lit(1)).as("n"),
-        expr("bit_xor(o_orderkey)").as("key_xor"),
-        sum(col("o_custkey")).as("cust_sum"),
-        sum(col("price").cast("decimal(18,4)")).cast("double").as("price_sum"),
-        max(col("odate")).as("last_date"))
-      .orderBy("prio")
-  }
-
-  private val avroRoundtripSql =
-    """SELECT o_orderpriority AS prio, COUNT(*) AS n,
-      |  CAST(bit_xor(o_orderkey) AS BIGINT) AS key_xor,
-      |  CAST(SUM(o_custkey) AS BIGINT) AS cust_sum,
-      |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS price_sum,
-      |  CAST(MAX(o_orderdate) AS VARCHAR) AS last_date
-      |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin
-
-  /** Protobuf wire-format round-trip (sources.ProtoWire): a typed lineitem
-    * projection out to gzip'd length-delimited protobuf containers and
-    * back with an explicit schema. The derived `days_off` column goes
-    * negative for roughly half the rows, so the zigzag varint path is
-    * exercised on real data, not just in the spec. The oracle aggregates
-    * the source directly — the hash matches only if every row and value
-    * survived the wire encoding. Completes S10's alternate-format set with
-    * the RPC-ingest interchange framing.
-    */
-  private val qProtoRoundtrip: Q = (s, dir) => {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-proto").toString
-    val src = Tables.lineitem(s, dir).select(
-      col("l_orderkey"), col("l_linenumber"),
-      col("l_quantity").as("qty"), col("l_returnflag").as("flag"),
-      datediff(to_date(col("l_shipdate")), lit("1995-06-17")).cast("long")
-        .as("days_off"))
-    graft.sources.ProtoWire.write(src, s"$tmp/p", numFiles = 4)
-    graft.sources.ProtoWire.read(s, s"$tmp/p", src.schema)
-      .groupBy(col("flag"))
-      .agg(count(lit(1)).as("n"),
-        expr("bit_xor(l_orderkey)").as("key_xor"),
-        sum(col("qty").cast("decimal(18,4)")).cast("double").as("qty_sum"),
-        sum(col("days_off")).as("days_sum"),
-        min(col("days_off")).as("days_min"),
-        max(col("l_linenumber")).as("line_max"))
-      .orderBy("flag")
-  }
-
-  private val protoRoundtripSql =
-    """SELECT l_returnflag AS flag, COUNT(*) AS n,
-      |  CAST(bit_xor(l_orderkey) AS BIGINT) AS key_xor,
-      |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS qty_sum,
-      |  CAST(SUM(date_diff('day', DATE '1995-06-17',
-      |    CAST(l_shipdate AS DATE))) AS BIGINT) AS days_sum,
-      |  CAST(MIN(date_diff('day', DATE '1995-06-17',
-      |    CAST(l_shipdate AS DATE))) AS BIGINT) AS days_min,
-      |  MAX(l_linenumber) AS line_max
-      |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin
-
-  /** Replica reconciliation (operators.Reconcile): the 100 TB upgrade of
-    * the reference's post-copy rowcount validation. A corrupted replica of
-    * orders (keys ≡7 mod 1000 dropped, prices ≡13 mod 1000 bumped) is
-    * reconciled against the source via per-bucket (count, fingerprint-xor)
-    * digests; only disagreeing buckets ship rows into the row-level diff.
-    * The oracle finds the true diff set INDEPENDENTLY — it replays the
-    * corruption and compares values directly, never fingerprints — so the
-    * hash matches only if the digest path finds exactly the real
-    * discrepancies (a fingerprint collision or bucket error would surface).
-    * Prices are quantized to integer cents before fingerprinting so the
-    * canonical rendering is engine-portable.
-    */
-  private val qReplicaReconcile: Q = (s, dir) => {
-    val n = 64
-    val src = Tables.orders(s, dir).select(col("o_orderkey").as("key"),
-      round(col("o_totalprice") * 100).cast("long").as("cents"))
-    val rep = src.filter(col("key") % 1000 =!= 7)
-      .withColumn("cents",
-        when(col("key") % 1000 === 13, col("cents") + 100L)
-          .otherwise(col("cents")))
-    def proj(df: DataFrame) = df.select(col("key"),
-      operators.Reconcile.fingerprint(col("key"), col("cents")).as("fp"))
-    val diffs = operators.Reconcile.rowDiff(proj(src), proj(rep), n)
-    val byKind = diffs.groupBy("kind")
-      .agg(count(lit(1)).as("n"), expr("bit_xor(key)").as("key_xor"),
-        min(col("key")).as("key_min"), max(col("key")).as("key_max"))
-    val buckets = operators.Reconcile.bucketDiff(proj(src), proj(rep), n)
-      .agg(count(lit(1)).as("n"), expr("bit_xor(bucket)").as("key_xor"),
-        min(col("bucket")).as("key_min"), max(col("bucket")).as("key_max"))
-      .select(lit("bucket_mismatch").as("kind"), col("n"), col("key_xor"),
-        col("key_min"), col("key_max"))
-    byKind.unionByName(buckets).orderBy("kind")
-  }
-
-  private val replicaReconcileSql =
-    """WITH src AS (
-      |  SELECT o_orderkey AS key,
-      |         CAST(ROUND(o_totalprice * 100) AS BIGINT) AS cents
-      |  FROM orders
-      |), rep AS (
-      |  SELECT key, CASE WHEN key % 1000 = 13 THEN cents + 100
-      |                   ELSE cents END AS cents
-      |  FROM src WHERE key % 1000 <> 7
-      |), diffs AS (
-      |  SELECT 'only_left' AS kind, key FROM src
-      |  WHERE key NOT IN (SELECT key FROM rep)
-      |  UNION ALL
-      |  SELECT 'changed' AS kind, s.key FROM src s JOIN rep r USING (key)
-      |  WHERE s.cents <> r.cents
-      |)
-      |SELECT kind, COUNT(*) AS n, CAST(bit_xor(key) AS BIGINT) AS key_xor,
-      |  MIN(key) AS key_min, MAX(key) AS key_max
-      |FROM diffs GROUP BY kind
-      |UNION ALL
-      |SELECT 'bucket_mismatch' AS kind, COUNT(*) AS n,
-      |  CAST(bit_xor(b) AS BIGINT) AS key_xor, MIN(b) AS key_min,
-      |  MAX(b) AS key_max
-      |FROM (SELECT DISTINCT key % 64 AS b FROM diffs) t
-      |ORDER BY kind""".stripMargin
-
-  /** Continuous protobuf ingest (ProtoWire.readStream): wave 1 of the
-    * containers is drained AvailableNow into a parquet sink; wave 2 lands
-    * and a RESTARTED drain (same checkpoint) must ingest only the new
-    * archives — the binaryFile source's processed-file log is what makes
-    * re-delivery impossible. The oracle aggregates the full source
-    * directly, so the hash matches only if the two drains together ingest
-    * every row exactly once.
-    */
-  private val qStreamProto: Q = (s, dir) => {
-    val src = Tables.lineitem(s, dir).select(
-      col("l_orderkey"), col("l_quantity").as("qty"),
-      col("l_returnflag").as("flag"))
-    // encoding the two container waves is producer-side input generation —
-    // build-once; the timed operator is the streaming ingest (decode +
-    // exactly-once drain), which runs fresh each time
-    val fx = Fixtures.getOrBuild(s"sproto:$dir") { f =>
-      graft.sources.ProtoWire.write(
-        src.filter(col("l_orderkey") % 2 === 0), s"$f/w1", numFiles = 3)
-      graft.sources.ProtoWire.write(
-        src.filter(col("l_orderkey") % 2 =!= 0), s"$f/w2", numFiles = 3)
-    }
-    val tmp = java.nio.file.Files.createTempDirectory("graft-sproto").toString
-    Fixtures.copyTree(s"$fx/w1", s"$tmp/in")
-    def drain(): Unit = {
-      val q = graft.sources.ProtoWire.readStream(s, s"$tmp/in", src.schema)
-        .writeStream.outputMode("append").format("parquet")
-        .option("path", s"$tmp/out").option("checkpointLocation", s"$tmp/ck")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    drain()
-    Fixtures.copyTree(s"$fx/w2", s"$tmp/in/wave2")
-    drain()
-    s.read.parquet(s"$tmp/out")
-      .groupBy(col("flag"))
-      .agg(count(lit(1)).as("n"),
-        expr("bit_xor(l_orderkey)").as("key_xor"),
-        sum(col("qty").cast("decimal(18,4)")).cast("double").as("qty_sum"))
-      .orderBy("flag")
-  }
-
-  private val streamProtoSql =
-    """SELECT l_returnflag AS flag, COUNT(*) AS n,
-      |  CAST(bit_xor(l_orderkey) AS BIGINT) AS key_xor,
-      |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS qty_sum
-      |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin
-
-  /** Embedding vectors through the protobuf wire (packed repeated fixed32
-    * — proto's layout for exactly this payload): the embeddings table out
-    * to containers and back, checked bit-for-bit via a position-weighted
-    * integer checksum over every element (ROUND(x·10⁶)·(i+1) summed —
-    * any flipped bit, lost element or reordered position breaks the hash).
-    * The oracle aggregates the source directly.
-    */
-  private val qProtoVectors: Q = (s, dir) => {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-protovec").toString
-    val src = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
-    graft.sources.ProtoWire.write(src, s"$tmp/v", numFiles = 4)
-    graft.sources.ProtoWire.read(s, s"$tmp/v", src.schema)
-      .groupBy((col("vec_id") % 8).as("grp"))
-      .agg(count(lit(1)).as("n"),
-        expr("bit_xor(vec_id)").as("id_xor"),
-        sum(expr("""aggregate(
-          transform(embedding,
-            (x, i) -> CAST(ROUND(CAST(x AS DOUBLE) * 1000000) AS BIGINT)
-                      * (CAST(i AS BIGINT) + 1)),
-          0L, (a, b) -> a + b)""")).as("vec_sum"),
-        sum(size(col("embedding")).cast("long")).as("n_elems"))
-      .orderBy("grp")
-  }
-
-  private val protoVectorsSql =
-    """SELECT vec_id % 8 AS grp, COUNT(*) AS n,
-      |  CAST(bit_xor(vec_id) AS BIGINT) AS id_xor,
-      |  CAST(SUM(list_sum(list_transform(
-      |    generate_series(1, len(embedding)),
-      |    i -> CAST(ROUND(CAST(embedding[i] AS DOUBLE) * 1000000) AS BIGINT)
-      |         * i))) AS BIGINT) AS vec_sum,
-      |  CAST(SUM(len(embedding)) AS BIGINT) AS n_elems
-      |FROM embeddings GROUP BY 1 ORDER BY 1""".stripMargin
-
-  /** Dense surrogate-key dictionary (operators.DictEncode) — the
-    * scale-correct replacement for Vertica sequence/nextval (F4): sorted
-    * range-partitioned distinct terms, ids = per-partition offset + local
-    * index (the zipWithIndex shape), NO global window. Built on an
-    * even-customers wave, then extended with all customers + suppliers —
-    * `extend` must keep wave-1 ids stable (anti-join) and continue densely
-    * after max(id). The oracle replays both waves with ROW_NUMBER (fine at
-    * oracle scale); `bind_sum` multiplies each id by the numeric suffix of
-    * its term, so a single swapped assignment breaks the hash.
-    */
-  private val qDictEncode: Q = (s, dir) => {
-    val cust = Tables.customer(s, dir)
-    val supp = Tables.supplier(s, dir)
-    val wave1 = cust.filter(col("c_custkey") % 2 === 0)
-      .select(col("c_name").as("term"))
-    val wave2 = cust.select(col("c_name").as("term"))
-      .unionByName(supp.select(col("s_name").as("term")))
-    val dict = operators.DictEncode.extend(
-      operators.DictEncode.build(wave1, "term"), wave2, "term")
-    dict.groupBy(substring(col("term"), 1, 8).as("entity"))
-      .agg(count(lit(1)).as("n"),
-        min(col("id")).as("min_id"), max(col("id")).as("max_id"),
-        expr("bit_xor(id)").as("id_xor"),
-        sum(col("id") * substring(col("term"), 10, 9).cast("long"))
-          .as("bind_sum"))
-      .orderBy("entity")
-  }
-
-  private val dictEncodeSql =
-    """WITH w1 AS (
-      |  SELECT DISTINCT c_name AS term FROM customer WHERE c_custkey % 2 = 0
-      |), d1 AS (
-      |  SELECT term, ROW_NUMBER() OVER (ORDER BY term) - 1 AS id FROM w1
-      |), w2 AS (
-      |  SELECT c_name AS term FROM customer
-      |  UNION SELECT s_name AS term FROM supplier
-      |), nw AS (
-      |  SELECT DISTINCT term FROM w2
-      |  WHERE term NOT IN (SELECT term FROM d1) AND term <> ''
-      |), base AS (
-      |  SELECT COALESCE(MAX(id), -1) + 1 AS b FROM d1
-      |), d2 AS (
-      |  SELECT term,
-      |    (SELECT b FROM base) + ROW_NUMBER() OVER (ORDER BY term) - 1 AS id
-      |  FROM nw
-      |), dict AS (
-      |  SELECT term, id FROM d1 UNION ALL SELECT term, id FROM d2
-      |)
-      |SELECT substr(term, 1, 8) AS entity, COUNT(*) AS n,
-      |  CAST(MIN(id) AS BIGINT) AS min_id,
-      |  CAST(MAX(id) AS BIGINT) AS max_id,
-      |  CAST(bit_xor(id) AS BIGINT) AS id_xor,
-      |  CAST(SUM(id * CAST(substr(term, 10, 9) AS BIGINT)) AS BIGINT)
-      |    AS bind_sum
-      |FROM dict GROUP BY 1 ORDER BY 1""".stripMargin
-
-  /** Persisted IVF index (similarity.IvfStore): corpus written
-    * cluster-partitioned, probes prune to their nprobe inverted lists at
-    * the SCAN (partition filter, plan-asserted in IvfStoreSpec). The query
-    * emits whether the store path returns row-identical results (ids,
-    * ranks AND cosines) to the in-memory IVF search — engine-side
-    * equality surfaced as oracle-comparable data, per the ANN pattern.
-    */
-  private val qIvfStore: Q = (s, dir) => {
-    val emb = Tables.embeddings(s, dir)
-    val cents = ivfCentroids(emb, dir)
-    // the cluster-partitioned store is THE build-once index artifact;
-    // probes (the timed operator) are read-only against it
-    val tmp = Fixtures.getOrBuild(s"ivfstore:$dir") { f =>
-      graft.similarity.IvfStore.build(emb, f, cents)
-    }
-    val queries = emb.filter(col("vec_id") < 5)
-    val store = graft.similarity.IvfStore.probe(queries, tmp, k = 5, nprobe = 4)
-    val mem = KMeansIvf.search(KMeansIvf.index(emb, cents), queries, cents,
-      k = 5, nprobe = 4)
-    val cols = Seq("query_id", "neighbor_id", "cos", "rk").map(col)
-    val d1 = store.select(cols: _*).exceptAll(mem.select(cols: _*))
-      .agg(count(lit(1)).as("d1"))
-    val d2 = mem.select(cols: _*).exceptAll(store.select(cols: _*))
-      .agg(count(lit(1)).as("d2"))
-    queries.agg(countDistinct(col("vec_id")).as("n_queries"))
-      .crossJoin(broadcast(d1)).crossJoin(broadcast(d2))
-      .select(col("n_queries"),
-        (col("d1") === 0L && col("d2") === 0L).as("paths_equal"))
-  }
-
-  private val ivfStoreSql =
-    """SELECT CAST(COUNT(*) AS BIGINT) AS n_queries, TRUE AS paths_equal
-      |FROM embeddings WHERE vec_id < 5""".stripMargin
-
-  /** IVF index maintenance (similarity.IvfStore.append): the store is
-    * built over the first 60% of the corpus, the remaining vectors arrive
-    * as an APPEND wave — assigned by the PERSISTED quantizer (centroids
-    * frozen, history never re-read) into the same cluster partitions — and
-    * probing the merged store must return row-identical results to the
-    * in-memory search over the full corpus with the same quantizer. The
-    * vector twin of q_phrase_index_incremental.
-    */
-  private val qIvfAppend: Q = (s, dir) => {
-    val emb = Tables.embeddings(s, dir)
-    val cents = ivfCentroids(emb, dir)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-ivfapp").toString
-    graft.similarity.IvfStore.build(emb.filter(col("vec_id") < 300), tmp, cents)
-    graft.similarity.IvfStore.append(emb.filter(col("vec_id") >= 300), tmp)
-    val queries = emb.filter(col("vec_id") < 5)
-    val store = graft.similarity.IvfStore.probe(queries, tmp, k = 5, nprobe = 4)
-    val mem = KMeansIvf.search(KMeansIvf.index(emb, cents), queries, cents,
-      k = 5, nprobe = 4)
-    val cols = Seq("query_id", "neighbor_id", "cos", "rk").map(col)
-    val d1 = store.select(cols: _*).exceptAll(mem.select(cols: _*))
-      .agg(count(lit(1)).as("d1"))
-    val d2 = mem.select(cols: _*).exceptAll(store.select(cols: _*))
-      .agg(count(lit(1)).as("d2"))
-    queries.agg(countDistinct(col("vec_id")).as("n_queries"))
-      .crossJoin(broadcast(d1)).crossJoin(broadcast(d2))
-      .select(col("n_queries"),
-        (col("d1") === 0L && col("d2") === 0L).as("paths_equal"))
-  }
-
-  /** IVF store MAINTENANCE (r7 verdict task 2): the vector twin of
-    * [[qVisidxCompaction]]. A 24/7 embedding ingest appends one parquet
-    * layer per `cluster=` inverted list per wave (`IvfStore.append`); this
-    * query builds that layered store (base corpus + three appended waves,
-    * a build-once fixture), compacts it with the pooled atomic-swap pass
-    * (`IvfStore.compact`), and probes the compacted store against the
-    * in-memory search over the full corpus — row-identical results
-    * required (ids, cosines AND ranks). `rows_preserved` pins the exact
-    * store row count pre/post (a pure probe would not see duplicated
-    * vectors ranked past k), and `files_reduced` gates that maintenance
-    * actually shrank the store.
-    */
-  private val qIvfidxCompaction: Q = (s, dir) => {
-    val emb = Tables.embeddings(s, dir)
-    val cents = ivfCentroids(emb, dir)
-    val layered = Fixtures.getOrBuild(s"ivflayers:$dir") { f =>
-      graft.similarity.IvfStore.build(emb.filter(col("vec_id") < 250), f, cents)
-      graft.similarity.IvfStore.append(
-        emb.filter(col("vec_id") >= 250 && col("vec_id") < 300), f)
-      graft.similarity.IvfStore.append(
-        emb.filter(col("vec_id") >= 300 && col("vec_id") < 350), f)
-      graft.similarity.IvfStore.append(emb.filter(col("vec_id") >= 350), f)
-    }
-    val idx = Fixtures.mutableCopy(layered)
-    val rowsBefore = s.read.parquet(s"$idx/vectors").count()
-    // leaf rewrites pooled — one shared pool over the cluster= leaves, the
-    // exact-throttle discipline of the visual index's maintenance pass
-    val st = graft.similarity.IvfStore.compact(s, idx, maxParallel = 8)
-    val rowsAfter = s.read.parquet(s"$idx/vectors").count()
-    val queries = emb.filter(col("vec_id") < 5)
-    val store = graft.similarity.IvfStore.probe(queries, idx, k = 5, nprobe = 4)
-    val mem = KMeansIvf.search(KMeansIvf.index(emb, cents), queries, cents,
-      k = 5, nprobe = 4)
-    val cols = Seq("query_id", "neighbor_id", "cos", "rk").map(col)
-    val d1 = store.select(cols: _*).exceptAll(mem.select(cols: _*))
-      .agg(count(lit(1)).as("d1"))
-    val d2 = mem.select(cols: _*).exceptAll(store.select(cols: _*))
-      .agg(count(lit(1)).as("d2"))
-    queries.agg(countDistinct(col("vec_id")).as("n_queries"))
-      .crossJoin(broadcast(d1)).crossJoin(broadcast(d2))
-      .select(col("n_queries"),
-        (col("d1") === 0L && col("d2") === 0L).as("paths_equal"))
-      .withColumn("files_reduced", lit(st.filesAfter < st.filesBefore))
-      .withColumn("rows_preserved", lit(rowsBefore == rowsAfter))
-  }
-
-  private val ivfidxCompactionSql =
-    """SELECT CAST(COUNT(*) AS BIGINT) AS n_queries, TRUE AS paths_equal,
-      |  TRUE AS files_reduced, TRUE AS rows_preserved
-      |FROM embeddings WHERE vec_id < 5""".stripMargin
-
-  /** PQ-ADC ANN (similarity.ProductQuantizer): 8×16 codebooks (≈32×
-    * compression of the float index), ADC candidate ranking by table
-    * lookups, exact cosine re-rank of the survivors. Same recall contract
-    * as `q_ann_ivf`; re-rank makes observed recall ≈ 1.
-    */
-  private val qAnnPq: Q = (s, dir) => {
-    val emb = Tables.embeddings(s, dir)
-    val model = pqModel(emb, embDim(emb, dir), dir)
-    val queries = emb.filter(col("vec_id") < 5)
-    val pq = ProductQuantizer.searchADC(
-      ProductQuantizer.encode(emb, model), queries, emb, model, k = 5)
-    recallCheck(queries, pq, Similarity.bruteForceTopK(emb, queries, k = 5),
-      bound = 0.6)
-  }
-
-  private val annPqSql = annIvfSql
-
-  /** Full IVF-PQ composition: coarse-cluster pruning (nprobe of 16 lists) ×
-    * PQ-ADC ranking × exact re-rank — the billion-scale index, recall-
-    * checked against exact brute force like its component queries.
-    */
-  private val qAnnIvfPq: Q = (s, dir) => {
-    val emb = Tables.embeddings(s, dir)
-    val centroids = ivfCentroids(emb, dir)
-    val model = pqModel(emb, embDim(emb, dir), dir)
-    val encodedIndexed = ProductQuantizer.encode(emb, model)
-      .join(KMeansIvf.index(emb, centroids).select("vec_id", "cluster"), "vec_id")
-    val queries = emb.filter(col("vec_id") < 5)
-    val ivfpq = ProductQuantizer.searchIvfPq(
-      encodedIndexed, queries, emb, centroids, model, k = 5, nprobe = 8)
-    recallCheck(queries, ivfpq, Similarity.bruteForceTopK(emb, queries, k = 5),
-      bound = 0.2)
-  }
-
-  private val annIvfPqSql = annIvfSql
-
-  /** Whole-corpus approximate kNN graph (similarity.KnnGraph, NN-Descent
-    * style): LSH-bucket + hash-ring init, 4 neighbor-of-neighbor rounds at
-    * K=10, recall@5 of the 25 lowest-id vectors checked in-engine against
-    * exact brute force (observed 0.80 at sf0.01; bound 0.5). Same
-    * sketch-oracle contract as the other ANN queries.
-    */
-  /** The kNN graph is a build-once artifact like the quantizer fits: one
-    * build per dataset shared by the graph query and graph-ANN serving
-    * (the checkpointed result is deterministic, so sharing can't change
-    * results).
-    */
-  private def knnGraphShared(emb: DataFrame, dir: String): DataFrame =
-    ModelCache.getOrFit(s"knngraph:k10:r4:$dir") {
-      similarity.KnnGraph.build(emb, k = 10, rounds = 4)
-    }
-
-  private val qKnnGraph: Q = (s, dir) => {
-    val emb = Tables.embeddings(s, dir)
-    val graph = knnGraphShared(emb, dir)
-    val queries = emb.filter(col("vec_id") < 25)
-    val approx = graph.filter(col("src") < 25)
-      .select(col("src").as("query_id"), col("dst").as("neighbor_id"))
-    recallCheck(queries, approx,
-      Similarity.bruteForceTopK(emb, queries, k = 5), bound = 0.5)
-  }
-
-  private val knnGraphSql =
-    """SELECT CAST(COUNT(*) AS BIGINT) AS n_queries, TRUE AS recall_ok
-      |FROM embeddings WHERE vec_id < 25""".stripMargin
-
-  /** HNSW-style serving over the shared kNN graph (similarity.GraphAnn):
-    * LSH-bucket + fixed entry points, 3 synchronized beam-search hops at
-    * beam 12, recall@5 of 25 query vectors checked in-engine against exact
-    * brute force — same sketch-oracle contract as the other ANN queries.
-    * Per-query work is beam×degree per hop regardless of corpus size.
-    */
-  private val qGraphAnn: Q = (s, dir) => {
-    val emb = Tables.embeddings(s, dir)
-    val graph = knnGraphShared(emb, dir)
-    val queries = emb.filter(col("vec_id") < 25)
-    val res = similarity.GraphAnn.search(graph, emb, queries,
-      k = 5, beam = 12, hops = 3)
-    recallCheck(queries, res.select(col("query_id"), col("neighbor_id")),
-      Similarity.bruteForceTopK(emb, queries, k = 5), bound = 0.6)
-  }
-
-  private val graphAnnSql = knnGraphSql
-
-  /** Hierarchical (HNSW-shape) graph ANN (similarity.HnswAnn): nested
-    * 1-in-4 decimated layers, kNN graph per layer, search descends from
-    * the sparsest layer — entries for each layer come from the layer
-    * above, not LSH buckets. Same recall contract as `q_graph_ann`.
-    */
-  private val qAnnHnsw: Q = (s, dir) => {
-    val emb = Tables.embeddings(s, dir)
-    // bottom layer = the maintained corpus kNN graph (shared fixture);
-    // upper layers cost a geometric fraction of it. The whole hierarchy is
-    // a build-once artifact (ModelCache, like the ANN quantizer fits).
-    val layers = ModelCache.getOrFit(s"hnsw:l3:k8:r2:$dir") {
-      similarity.HnswAnn.buildAbove(emb, knnGraphShared(emb, dir),
-        layers = 3, k = 8, rounds = 2)
-        .map { case (g, c) => (g.localCheckpoint(), c.localCheckpoint()) }
-    }
-    val queries = emb.filter(col("vec_id") < 25)
-    val res = similarity.HnswAnn.search(layers, queries,
-      k = 5, beam = 12, hopsPerLayer = 2)
-    recallCheck(queries, res.select(col("query_id"), col("neighbor_id")),
-      Similarity.bruteForceTopK(emb, queries, k = 5), bound = 0.6)
-  }
-
-  private val annHnswSql = knnGraphSql
-
-  // ------------------------------------------------------------ multimodal
-
-  private val qMultimodalMeta: Q = (s, dir) =>
-    Multimodal.payloadMeta(Multimodal.withPayload(Tables.documents(s, dir)))
-      .orderBy("doc_id")
-
-  private val multimodalMetaSql =
-    """SELECT doc_id,
-      |  CAST(octet_length(encode(text)) AS BIGINT) AS byte_len,
-      |  sha256(text) AS sha
-      |FROM documents ORDER BY doc_id""".stripMargin
-
-  /** REAL payload decode ([[graft.multimodal.PixelCodec]]): one payload per
-    * document — a valid PNG (deflated IDAT, per-scanline filter `(id+y)%5`
-    * so all five unfilter branches fire), 24-bit BMP (bottom-up padded BGR
-    * rows) or 16-bit PCM WAV — whose every pixel/sample value is an integer
-    * formula of (doc_id, position). The query decodes the payloads with the
-    * real codecs and emits integer statistics (count/sum/min/max and the
-    * position-weighted sum Σ(i+1)·vᵢ); the oracle recomputes the formulas
-    * directly. The hash matches only if decode ∘ encode is the identity on
-    * every value of every payload — inflate, unfilter, row un-padding,
-    * BGR→RGB, PCM sign-extension all proven bit-for-bit.
-    */
-  private val qMultimodalFeatures: Q = (s, dir) => {
-    import s.implicits._
-    import graft.multimodal.PixelCodec
-    val payloads = Tables.documents(s, dir).select(col("doc_id")).as[Long]
-      .mapPartitions { ids =>
-        ids.map { id =>
-          val w = 4 + ((id * 7) % 29).toInt
-          val h = 4 + ((id * 13) % 23).toInt
-          val bytes = (id % 3) match {
-            case 0 =>
-              val pix = Array.tabulate(w * h * 3)(i => ((id * 31 + i * 7) % 256).toByte)
-              PixelCodec.encodePng(w, h, 3, pix, y => ((id + y) % 5).toInt)
-            case 1 =>
-              val pix = Array.tabulate(w * h * 3)(i => ((id * 31 + i * 7) % 256).toByte)
-              PixelCodec.encodeBmp(w, h, pix)
-            case _ =>
-              val n = 64 + (id % 192).toInt
-              val samples = Array.tabulate(n)(i => ((id * 31 + i * 7) % 65536).toInt - 32768)
-              PixelCodec.encodeWav(8000 + (id % 8).toInt * 4000, 1, samples)
-          }
-          (id, bytes)
-        }
-      }.toDF("doc_id", "payload")
-    Multimodal.decodeStats(payloads).orderBy("doc_id")
-  }
-
-  private val multimodalFeaturesSql =
-    """WITH p AS (
-      |  SELECT doc_id,
-      |    CASE doc_id % 3 WHEN 0 THEN 'png' WHEN 1 THEN 'bmp' ELSE 'wav' END AS kind,
-      |    CASE WHEN doc_id % 3 = 2 THEN 8000 + (doc_id % 8) * 4000
-      |         ELSE 4 + (doc_id * 7) % 29 END AS width,
-      |    CASE WHEN doc_id % 3 = 2 THEN 1 ELSE 4 + (doc_id * 13) % 23 END AS height,
-      |    CASE WHEN doc_id % 3 = 2 THEN 2 ELSE 3 END AS channels,
-      |    CASE WHEN doc_id % 3 = 2 THEN 64 + doc_id % 192
-      |         ELSE (4 + (doc_id * 7) % 29) * (4 + (doc_id * 13) % 23) * 3 END AS n
-      |  FROM documents
-      |), v AS (
-      |  SELECT doc_id, kind, width, height, channels, n,
-      |    list_transform(generate_series(0, n - 1),
-      |      i -> CASE WHEN kind = 'wav'
-      |            THEN (doc_id * 31 + i * 7) % 65536 - 32768
-      |            ELSE (doc_id * 31 + i * 7) % 256 END) AS vals
-      |  FROM p
-      |)
-      |SELECT doc_id, kind, CAST(width AS INT) AS width,
-      |  CAST(height AS INT) AS height, CAST(channels AS INT) AS channels,
-      |  CAST(n AS BIGINT) AS n_vals,
-      |  CAST(list_sum(vals) AS BIGINT) AS v_sum,
-      |  CAST(list_min(vals) AS BIGINT) AS v_min,
-      |  CAST(list_max(vals) AS BIGINT) AS v_max,
-      |  CAST(list_sum(list_transform(generate_series(1, n), i -> i * vals[i])) AS BIGINT) AS v_wsum
-      |FROM v ORDER BY doc_id""".stripMargin
-
-  /** End-to-end pixel pipeline: encode a formula-pixel PNG per document,
-    * [[Multimodal.resize]] it (real decode → nearest-neighbor resample →
-    * PNG re-encode), decode the RESULT again and emit integer stats. The
-    * oracle replays the nearest-neighbor index map in closed form —
-    * output (x,y,c) reads source ((x·w)//8, (y·h)//8, c) — so the hash
-    * matches only if decode→scale→encode→decode agrees with the formula on
-    * all 192 values per document. Two full codec round-trips per row, all
-    * map-only.
-    */
-  private val qMediaResize: Q = (s, dir) => {
-    import s.implicits._
-    import graft.multimodal.PixelCodec
-    val payloads = Tables.documents(s, dir).select(col("doc_id")).as[Long]
-      .mapPartitions { ids =>
-        ids.map { id =>
-          val w = 4 + ((id * 7) % 29).toInt
-          val h = 4 + ((id * 13) % 23).toInt
-          val pix = Array.tabulate(w * h * 3)(i => ((id * 31 + i * 7) % 256).toByte)
-          (id, PixelCodec.encodePng(w, h, 3, pix, y => ((id + y) % 5).toInt))
-        }
-      }.toDF("doc_id", "payload")
-    val resized = Multimodal.resize(payloads, 8, 8).toDF()
-      .select(col("docId").as("doc_id"), col("payload"))
-    Multimodal.decodeStats(resized).orderBy("doc_id")
-  }
-
-  private val mediaResizeSql =
-    """WITH p AS (
-      |  SELECT doc_id, 4 + (doc_id * 7) % 29 AS w, 4 + (doc_id * 13) % 23 AS h
-      |  FROM documents
-      |), v AS (
-      |  SELECT doc_id,
-      |    list_transform(generate_series(0, 191), i ->
-      |      (doc_id * 31 +
-      |        ((((i // 24) * h // 8) * w + (((i % 24) // 3) * w // 8)) * 3
-      |          + i % 3) * 7) % 256) AS vals
-      |  FROM p
-      |)
-      |SELECT doc_id, 'png' AS kind, 8 AS width, 8 AS height, 3 AS channels,
-      |  CAST(192 AS BIGINT) AS n_vals,
-      |  CAST(list_sum(vals) AS BIGINT) AS v_sum,
-      |  CAST(list_min(vals) AS BIGINT) AS v_min,
-      |  CAST(list_max(vals) AS BIGINT) AS v_max,
-      |  CAST(list_sum(list_transform(generate_series(1, 192), i -> i * vals[i])) AS BIGINT) AS v_wsum
-      |FROM v ORDER BY doc_id""".stripMargin
-
-  /** Frame sampling through the batch demux plumbing: every 2nd 256-byte
-    * "frame" becomes a row (per-partition flatMap — a 2-hour video never
-    * materializes all frames at once). The oracle reproduces the exact
-    * accounting: sampled = ceil(ceil(bytes/256) / 2) per doc, plus the
-    * first-frame byte length.
-    */
-  private val qMultimodalFrames: Q = (s, dir) =>
-    Multimodal.sampleFrames(Multimodal.withPayload(Tables.documents(s, dir)), stride = 2)
-      .toDF()
-      .groupBy(col("docId").as("doc_id"))
-      .agg(count(lit(1)).as("n_sampled"),
-        max(when(col("frameIdx") === 0, length(col("payload")))).as("first_frame_bytes"))
-      .select(col("doc_id"), col("n_sampled"),
-        col("first_frame_bytes").cast("long").as("first_frame_bytes"))
-      .orderBy("doc_id")
-
-  private val multimodalFramesSql =
-    """SELECT doc_id,
-      |  CAST(ceil(ceil(octet_length(encode(text)) / 256.0) / 2.0) AS BIGINT) AS n_sampled,
-      |  CAST(LEAST(octet_length(encode(text)), 256) AS BIGINT) AS first_frame_bytes
-      |FROM documents WHERE length(text) > 0 ORDER BY doc_id""".stripMargin
-
-  /** REAL animated-GIF frame demux end-to-end: per document a valid GIF89a
-    * — 256-entry palette and 1 + id%6 frames of index pixels, all integer
-    * formulas of (doc_id, frame, position), odd frames written INTERLACED
-    * — sampled every 2nd frame by [[Multimodal.sampleFrames]] (per-frame
-    * LZW decompression, four-pass de-interlace, palette resolution, PNG
-    * re-encode), then each sampled frame re-decoded by
-    * [[Multimodal.decodeStats]] into integer value statistics. The oracle
-    * recomputes palette∘index formulas directly — the hash matches only if
-    * GIF-LZW decode ∘ encode is the identity on every frame, interlaced
-    * rows land exactly where GIF89a appendix E says, and the PNG hop
-    * preserves every value (v_wsum is position-weighted, so one swapped
-    * row breaks it). North-star addition; the reference has no binary
-    * surface.
-    */
-  private val qGifFrames: Q = (s, dir) => {
-    import s.implicits._
-    import graft.multimodal.PixelCodec
-    val payloads = Tables.documents(s, dir).select(col("doc_id")).as[Long]
-      .mapPartitions { ids =>
-        val palette = Array.tabulate(768) { j =>
-          val e = j / 3
-          ((j % 3) match {
-            case 0 => (e * 37 + 1) % 256
-            case 1 => (e * 73 + 5) % 256
-            case _ => (e * 101 + 9) % 256
-          }).toByte
-        }
-        ids.map { id =>
-          val w = 3 + ((id * 5) % 13).toInt
-          val h = 3 + ((id * 11) % 11).toInt
-          val nf = 1 + (id % 6).toInt
-          val frames = (0 until nf).map { f =>
-            Array.tabulate(w * h)(p =>
-              ((id * 17 + f * 29 + p * 3) % 256).toByte)
-          }
-          (id, PixelCodec.encodeGif(w, h, palette, frames,
-            interlaceFor = f => f % 2 == 1))
-        }
-      }.toDF("doc_id", "payload")
-    val frames = Multimodal.sampleFrames(payloads, stride = 2)
-    Multimodal.decodeStats(
-        frames.select((col("docId") * 100 + col("frameIdx")).as("doc_id"),
-          col("payload")))
-      .select(expr("CAST(doc_id DIV 100 AS BIGINT)").as("doc_id"),
-        expr("CAST(doc_id % 100 AS INT)").as("frame_idx"),
-        col("kind"), col("width"), col("height"), col("channels"),
-        col("n_vals"), col("v_sum"), col("v_min"), col("v_max"),
-        col("v_wsum"))
-      .orderBy("doc_id", "frame_idx")
-  }
-
-  private val gifFramesSql =
-    """WITH p AS (
-      |  SELECT doc_id, 3 + (doc_id*5)%13 AS w, 3 + (doc_id*11)%11 AS h,
-      |         1 + doc_id%6 AS nf
-      |  FROM documents
-      |), f AS (
-      |  SELECT doc_id, w, h, unnest(generate_series(0, nf - 1)) AS fi FROM p
-      |), v AS (
-      |  SELECT doc_id, fi, w, h,
-      |    list_transform(generate_series(0, w*h*3 - 1), i ->
-      |      CASE i % 3
-      |        WHEN 0 THEN (((doc_id*17 + fi*29 + (i//3)*3) % 256) * 37 + 1) % 256
-      |        WHEN 1 THEN (((doc_id*17 + fi*29 + (i//3)*3) % 256) * 73 + 5) % 256
-      |        ELSE (((doc_id*17 + fi*29 + (i//3)*3) % 256) * 101 + 9) % 256
-      |      END) AS vals
-      |  FROM f WHERE fi % 2 = 0
-      |)
-      |SELECT doc_id, CAST(fi AS INT) AS frame_idx, 'png' AS kind,
-      |  CAST(w AS INT) AS width, CAST(h AS INT) AS height, 3 AS channels,
-      |  CAST(w*h*3 AS BIGINT) AS n_vals,
-      |  CAST(list_sum(vals) AS BIGINT) AS v_sum,
-      |  CAST(list_min(vals) AS BIGINT) AS v_min,
-      |  CAST(list_max(vals) AS BIGINT) AS v_max,
-      |  CAST(list_sum(list_transform(generate_series(1, w*h*3), i -> i * vals[i])) AS BIGINT) AS v_wsum
-      |FROM v ORDER BY doc_id, frame_idx""".stripMargin
-
-  /** Integer-exact acoustic features over REAL WAV PCM decode
-    * ([[Multimodal.audioStats]]): per document a 16-bit mono WAV whose
-    * every sample is an integer formula of (doc_id, position); the query
-    * decodes with the real RIFF codec and emits energy Σs², peak |s|,
-    * strict zero-crossing count, and raw autocorrelation Σ s·s₊ₗ at lags
-    * 1/2/4 — all exact longs, the periodicity/voicing profile an audio
-    * quality filter keys on. The oracle recomputes every statistic from
-    * the sample formula. North-star addition; the reference has no binary
-    * surface.
-    */
-  private val qAudioFeatures: Q = (s, dir) => {
-    import s.implicits._
-    import graft.multimodal.PixelCodec
-    val payloads = Tables.documents(s, dir).select(col("doc_id")).as[Long]
-      .mapPartitions { ids =>
-        ids.map { id =>
-          val n = 64 + (id % 192).toInt
-          val samples = Array.tabulate(n)(i =>
-            ((id * 37 + i * 11) % 65536).toInt - 32768)
-          (id, PixelCodec.encodeWav(8000 + (id % 8).toInt * 4000, 1, samples))
-        }
-      }.toDF("doc_id", "payload")
-    Multimodal.audioStats(payloads).orderBy("doc_id")
-  }
-
-  private val audioFeaturesSql =
-    """WITH p AS (
-      |  SELECT doc_id, CAST(8000 + (doc_id % 8) * 4000 AS INT) AS sample_rate,
-      |         64 + doc_id % 192 AS n
-      |  FROM documents
-      |), v AS (
-      |  SELECT doc_id, sample_rate, n,
-      |    list_transform(generate_series(0, n - 1), i ->
-      |      (doc_id*37 + i*11) % 65536 - 32768) AS s
-      |  FROM p
-      |)
-      |SELECT doc_id, sample_rate, CAST(n AS BIGINT) AS n_samples,
-      |  CAST(list_sum(list_transform(s, x -> x*x)) AS BIGINT) AS energy,
-      |  CAST(list_max(list_transform(s, x -> abs(x))) AS BIGINT) AS peak,
-      |  CAST(list_sum(list_transform(generate_series(2, n), i ->
-      |    CASE WHEN s[i-1] * s[i] < 0 THEN 1 ELSE 0 END)) AS BIGINT) AS zero_crossings,
-      |  CAST(list_sum(list_transform(generate_series(2, n), i -> s[i-1] * s[i])) AS BIGINT) AS ac_lag1,
-      |  CAST(list_sum(list_transform(generate_series(3, n), i -> s[i-2] * s[i])) AS BIGINT) AS ac_lag2,
-      |  CAST(list_sum(list_transform(generate_series(5, n), i -> s[i-4] * s[i])) AS BIGINT) AS ac_lag4
-      |FROM v ORDER BY doc_id""".stripMargin
-
-  /** Cross-video near-dup detection by keyframe overlap
-    * ([[Multimodal.keyframeOverlap]]): per document an animated GIF whose
-    * frame content is a formula of a SMALL key space (dims × 64 base
-    * offsets), so distinct documents share frames; every frame is demuxed
-    * (real GIF-LZW decode), fingerprinted (SHA-256 of the canonical PNG
-    * re-encode), and documents pair via an equality join on the
-    * fingerprint — the banded-join shape, never all-pairs, no pixels in
-    * the pair shuffle. The oracle derives frame equality from the
-    * generation formulas directly ((w, h, base) key), so the hash matches
-    * only if demux + canonical re-encode map equal frames — and ONLY equal
-    * frames — to equal fingerprints. North-star addition; the reference
-    * has no binary surface.
-    */
-  private val qVideoNeardup: Q = (s, dir) => {
-    import s.implicits._
-    import graft.multimodal.PixelCodec
-    val payloads = Tables.documents(s, dir).select(col("doc_id")).as[Long]
-      .mapPartitions { ids =>
-        val palette = Array.tabulate(768) { j =>
-          val e = j / 3
-          ((j % 3) match {
-            case 0 => (e * 37 + 1) % 256
-            case 1 => (e * 73 + 5) % 256
-            case _ => (e * 101 + 9) % 256
-          }).toByte
-        }
-        ids.map { id =>
-          val w = 3 + ((id * 5) % 5).toInt
-          val h = 3 + ((id * 11) % 3).toInt
-          val nf = 1 + (id % 4).toInt
-          val frames = (0 until nf).map { f =>
-            val base = ((id * 17 + f * 29) % 64).toInt
-            Array.tabulate(w * h)(p => ((base + p * 3) % 256).toByte)
-          }
-          (id, PixelCodec.encodeGif(w, h, palette, frames))
-        }
-      }.toDF("doc_id", "payload")
-    Multimodal.keyframeOverlap(Multimodal.sampleFrames(payloads, stride = 1))
-      .orderBy("doc_a", "doc_b")
-  }
-
-  /** Perceptual image near-dup via dHash ([[Multimodal.dHash64]] +
-    * [[graft.dedup.Dedup.hammingPairs]]): per document a real BMP whose
-    * pixels come from a GROUP formula (docs in a group share dims and most
-    * pixel values, with doc-specific perturbations at ~1/23 of positions),
-    * decoded → integer-luma → 9×8 nearest grid → 64 adjacent-compare bits;
-    * pairs within Hamming ≤ 3 via the quarter-blocking join (exact by
-    * pigeonhole at that radius — the visual twin of `q_simhash_neardups`).
-    * The oracle replays pixel formula → luma → floor resample → bits →
-    * all-pairs Hamming in pure SQL, so the hash matches only if every
-    * stage of the perceptual pipeline is bit-identical. North-star
-    * addition; the reference has no binary surface.
-    */
-  /** The grouped-BMP payload fixture shared by the dHash queries: docs in
-    * a group share dims and most pixels, with doc-specific perturbations.
-    */
-  private def imagePayloads(s: SparkSession, dir: String,
-      partitions: Int = 0): DataFrame = {
-    import s.implicits._
-    import graft.multimodal.PixelCodec
-    // when a caller needs a specific output layout, the shuffle happens
-    // HERE, on bare 8-byte ids — synthesizing pixels first and then
-    // repartitioning would shuffle the payload bytes themselves (measured
-    // at sf1: ~1 GB moved for a 26 MB corpus), exactly the anti-pattern
-    // the multimodal contract forbids
-    val ids0 = Tables.documents(s, dir).select(col("doc_id")).as[Long]
-    // image DIVERSITY scales with the corpus: ~12.5 docs per perceptual
-    // group at any size (the text fixtures' fixed-planted-cluster rule).
-    // A constant group count made dup clusters grow with the corpus and
-    // emitted near-dup pairs grow QUADRATICALLY — measured at factor 30:
-    // ×908 pair rows for ×30 traffic before this derivation, ~×30 after.
-    // Exact integer arithmetic ((2n)/25, floor 40) so the oracle CTEs
-    // replay it; at the sf0.01 correctness scale n=500 ⇒ exactly the
-    // original 40 groups, every committed hash unchanged.
-    val groups = math.max(ids0.count() * 2 / 25, 40L)
-    val ids = if (partitions > 0) ids0.repartition(partitions) else ids0
-    ids
-      .mapPartitions { part =>
-        part.map { id =>
-          // group assignment is a multiplicative-hash range scale, NOT
-          // `id % groups`: replica id lattices (base + k·10M) align with
-          // any group count that divides the offset — measured at factor
-          // 100, where groups=40000 | 10M put all 100 replicas of each
-          // base in ONE group (clusters of 100, 24M pairs). The top bits
-          // of id·φ32 walk a Weyl orbit across any arithmetic id
-          // progression, so expected group population is n/groups for
-          // structured and unstructured ids alike.
-          // id·φ32 must not wrap Long: past 2^63/φ32 the Spark side would
-          // silently produce a NEGATIVE g (wrapped pixel data) while the
-          // DuckDB oracle errors loudly on the same overflow — fail just
-          // as loudly here, in the executor, before any divergence.
-          require(id >= 0 && id <= Long.MaxValue / 2654435761L,
-            s"doc_id $id overflows the image-group hash (max ${Long.MaxValue / 2654435761L}); mod ids first")
-          val g = ((id * 2654435761L % 4294967296L) * groups /
-            4294967296L).toInt
-          val w = 9 + (g * 3) % 8
-          val h = 8 + (g * 5) % 7
-          // group content must vary in the feature dHash actually SEES —
-          // and non-degenerately. Three measured failure modes led here:
-          // a g-dependent brightness offset cancels in adjacent-pixel
-          // comparisons (×447 pair rows for ×30 docs); a g-dependent
-          // linear stride enters differences only mod 256 and saturates
-          // at 256 signature classes (×1028 pairs at ×100); and ANY
-          // v(i)=f(A·g+B·i) construction is a ONE-parameter (phase)
-          // family whose signatures collide at ~1e-4 — cross-group pairs
-          // then dominate past factor 30. xor-then-multiply breaks the
-          // translational structure (the mask g·A enters nonlinearly), so
-          // per-group signatures are effectively independent: measured
-          // 4000/4000 distinct group signatures, 10 collision pairs over
-          // 8M, and total pair rows ×10.04 for ×10 docs.
-          val mask = (g.toLong * 2654435761L) % 4294967296L
-          val pix = Array.tabulate(w * h * 3) { i =>
-            val base =
-              (((mask ^ i.toLong) * 1597334677L % 4294967296L) >> 24).toInt
-            val v = if ((i + id) % 23 == 0) (base + 1 + (id % 13).toInt) % 256
-              else base
-            v.toByte
-          }
-          (id, PixelCodec.encodeBmp(w, h, pix))
-        }
-      }.toDF("doc_id", "payload")
-  }
-
-  /** [[imagePayloads]] for the scale probes (ScaleBench's long-drain
-    * visual-gate rehearsal shares the exact query fixture).
-    */
-  private[graft] def imagePayloadsFixture(s: SparkSession,
-      dir: String): DataFrame = imagePayloads(s, dir)
-
-  private val qImageNeardup: Q = (s, dir) =>
-    graft.dedup.Dedup.hammingPairs(
-        Multimodal.imageDhash(imagePayloads(s, dir)), maxHamming = 3)
-      .orderBy("doc_a", "doc_b")
-
-  /** The dHash bit-vector CTE chain shared by the image near-dup oracles:
-    * pixel formula → integer luma → 9×8 floor resample → adjacent-compare
-    * bits.
-    */
-  private val imageBitsCte =
-    """gp AS (
-      |  SELECT GREATEST(COUNT(*) * 2 // 25, 40) AS g0 FROM documents
-      |), p0 AS (
-      |  SELECT doc_id,
-      |         (doc_id * 2654435761 % 4294967296) * g0 // 4294967296 AS g
-      |  FROM documents CROSS JOIN gp
-      |), p AS (
-      |  SELECT doc_id, g,
-      |         9 + (g * 3) % 8 AS w,
-      |         8 + (g * 5) % 7 AS h
-      |  FROM p0
-      |), v AS (
-      |  SELECT doc_id, w, h,
-      |    list_transform(generate_series(0, w*h*3 - 1), i ->
-      |      CASE WHEN (i + doc_id) % 23 = 0
-      |           THEN (xor(g*2654435761 % 4294967296, i) * 1597334677
-      |                 % 4294967296 // 16777216 + 1 + doc_id % 13) % 256
-      |           ELSE xor(g*2654435761 % 4294967296, i) * 1597334677
-      |                % 4294967296 // 16777216
-      |      END) AS vals
-      |  FROM p
-      |), gr AS (
-      |  SELECT doc_id,
-      |    list_transform(generate_series(0, 71), t ->
-      |      (299 * vals[(((t // 9) * h // 8) * w + ((t % 9) * w // 9)) * 3 + 1]
-      |       + 587 * vals[(((t // 9) * h // 8) * w + ((t % 9) * w // 9)) * 3 + 2]
-      |       + 114 * vals[(((t // 9) * h // 8) * w + ((t % 9) * w // 9)) * 3 + 3]) // 1000) AS gray
-      |  FROM v
-      |), bits AS (
-      |  SELECT doc_id,
-      |    list_transform(generate_series(0, 63), b ->
-      |      CASE WHEN gray[(b // 8) * 9 + (b % 8) + 1] > gray[(b // 8) * 9 + (b % 8) + 2]
-      |           THEN 1 ELSE 0 END) AS bits
-      |  FROM gr
-      |)""".stripMargin
-
-  private val imageNeardupSql =
-    s"""WITH $imageBitsCte
-       |SELECT * FROM (
-       |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       |    CAST(list_sum(list_transform(generate_series(1, 64), i ->
-       |      CASE WHEN a.bits[i] <> b.bits[i] THEN 1 ELSE 0 END)) AS INT) AS hamming
-       |  FROM bits a JOIN bits b ON a.doc_id < b.doc_id)
-       |WHERE hamming <= 3 ORDER BY doc_a, doc_b""".stripMargin
-
-  /** Perceptual pairs → visual duplicate GROUPS: the dHash Hamming pairs
-    * of `q_image_neardup` fed through [[graft.operators.ConnectedComponents]],
-    * each image labeled with its cluster's min doc_id — the image-side
-    * twin of `q_dedup_clusters` (keep-one-per-visual-cluster is the
-    * actual dedup decision). Oracle: the same pair SQL, transitive
-    * closure by recursive CTE, min reachable id.
-    */
-  private val qImageClusters: Q = (s, dir) => {
-    val pairs = qImageNeardup(s, dir)
-    graft.operators.ConnectedComponents(pairs, "doc_a", "doc_b")
-      .select(col("id").cast("long").as("doc_id"),
-        col("component").cast("long").as("cluster_id"))
-      .orderBy("doc_id")
-  }
-
-  private val imageClustersSql = {
-    val pairs = imageNeardupSql.replace(" ORDER BY doc_a, doc_b", "")
-    s"""WITH RECURSIVE pairs AS (
-       |$pairs
-       |),
-       |edges AS (SELECT doc_a AS u, doc_b AS v FROM pairs
-       |          UNION SELECT doc_b AS u, doc_a AS v FROM pairs),
-       |reach(u, v) AS (SELECT u, v FROM edges
-       |                UNION SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u)
-       |SELECT u AS doc_id, LEAST(u, MIN(v)) AS cluster_id
-       |FROM reach GROUP BY u ORDER BY doc_id""".stripMargin
-  }
-
-  /** REAL baseline JPEG decode ([[graft.multimodal.JpegCodec]]): per
-    * document a grayscale JPEG of FLAT 8×8 blocks (block value a formula
-    * of (doc_id, block position)) — flat blocks quantize to a lone DC
-    * coefficient, so the decoded pixel is EXACTLY
-    * `clamp(floorDiv(round(8(v−128)/16)·16 + 4, 8) + 128)`, replayable in
-    * integer SQL with no cosine. The payload still exercises the real
-    * machinery: DHT canonical Huffman construction, entropy decode with
-    * byte-unstuffing, DC prediction across blocks, dequant, de-zigzag,
-    * IDCT, crop. The oracle recomputes the closed form per pixel
-    * (position-weighted sum catches block misplacement). General AC
-    * content is covered by `JpegCodecSpec` round-trips. North-star
-    * addition; the reference has no binary surface.
-    */
-  private val qJpegDecode: Q = (s, dir) => {
-    import s.implicits._
-    import graft.multimodal.JpegCodec
-    val payloads = Tables.documents(s, dir).select(col("doc_id")).as[Long]
-      .mapPartitions { ids =>
-        ids.map { id =>
-          val w = 8 * (2 + ((id * 3) % 3).toInt)
-          val h = 8 * (2 + ((id * 5) % 2).toInt)
-          val pixels = Array.tabulate(w * h) { i =>
-            val bx = (i % w) / 8; val by = (i / w) / 8
-            ((id * 11 + bx * 29 + by * 53) % 256).toByte
-          }
-          (id, JpegCodec.encodeJpeg(w, h, 1, pixels))
-        }
-      }.toDF("doc_id", "payload")
-    Multimodal.decodeStats(payloads).orderBy("doc_id")
-  }
-
-  private val jpegDecodeSql =
-    """WITH p AS (
-      |  SELECT doc_id, 8 * (2 + (doc_id*3)%3) AS w, 8 * (2 + (doc_id*5)%2) AS h
-      |  FROM documents
-      |), v AS (
-      |  -- px = floorDiv(round(d/16)*16 + 4, 8) + 128 with d = 8(v-128);
-      |  -- DuckDB // truncates toward zero, so divisions are offset into
-      |  -- positive range (+1032 = 8·128+8, +4 after re-adding 128·8)
-      |  -- where truncation IS floor — the identity is exact
-      |  SELECT doc_id, w, h,
-      |    list_transform(generate_series(0, w*h - 1), i ->
-      |      LEAST(GREATEST(
-      |        (((8*((doc_id*11 + ((i % w) // 8)*29 + ((i // w) // 8)*53) % 256) - 1024 + 1032) // 16) * 16 + 4) // 8,
-      |        0), 255)) AS px
-      |  FROM p
-      |)
-      |SELECT doc_id, 'jpeg' AS kind, CAST(w AS INT) AS width,
-      |  CAST(h AS INT) AS height, 1 AS channels,
-      |  CAST(w*h AS BIGINT) AS n_vals,
-      |  CAST(list_sum(px) AS BIGINT) AS v_sum,
-      |  CAST(list_min(px) AS BIGINT) AS v_min,
-      |  CAST(list_max(px) AS BIGINT) AS v_max,
-      |  CAST(list_sum(list_transform(generate_series(1, w*h), i -> i * px[i])) AS BIGINT) AS v_wsum
-      |FROM v ORDER BY doc_id""".stripMargin
-
-  /** 4:2:0 COLOR JPEG decode end-to-end: per document a chroma-subsampled
-    * JPEG of flat 16×16 macroblocks (RGB a formula of (doc_id, macro)).
-    * Flat macroblocks make every stage exactly replayable: the JFIF
-    * transforms are ×10⁶ integer fixed point ([[JpegCodec.rgbToYcc]]/
-    * `yccToRgb`), the 2×2 chroma downsample is lossless on flat regions,
-    * and each block is DC-only — so the oracle computes decoded (r,g,b)
-    * per macroblock in closed form and aggregates stats analytically
-    * (Σposition over a macro is arithmetic-series algebra, no per-pixel
-    * list). Exercises MCU interleaving (4 Y + Cb + Cr), cross-block DC
-    * prediction, and replication upsampling. North-star addition; the
-    * reference has no binary surface.
-    */
-  private val qJpegColor: Q = (s, dir) => {
-    import s.implicits._
-    import graft.multimodal.JpegCodec
-    val payloads = Tables.documents(s, dir).select(col("doc_id")).as[Long]
-      .mapPartitions { ids =>
-        ids.map { id =>
-          val w = 16 * (1 + ((id * 3) % 2).toInt)
-          val h = 16 * (1 + ((id * 7) % 2).toInt)
-          val pix = new Array[Byte](w * h * 3)
-          var p = 0
-          while (p < w * h) {
-            val mx = (p % w) / 16; val my = (p / w) / 16
-            pix(p * 3) = ((id * 23 + mx * 97 + my * 31) % 256).toByte
-            pix(p * 3 + 1) = ((id * 41 + mx * 53 + my * 71) % 256).toByte
-            pix(p * 3 + 2) = ((id * 59 + mx * 29 + my * 13) % 256).toByte
-            p += 1
-          }
-          (id, JpegCodec.encodeJpeg(w, h, 3, pix, subsample420 = true))
-        }
-      }.toDF("doc_id", "payload")
-    Multimodal.decodeStats(payloads).orderBy("doc_id")
-  }
-
-  private val jpegColorSql =
-    """WITH p AS (
-      |  SELECT doc_id, 16*(1+(doc_id*3)%2) AS w, 16*(1+(doc_id*7)%2) AS h
-      |  FROM documents
-      |), f AS (
-      |  SELECT doc_id, w, h,
-      |    unnest(generate_series(0, (w//16)*(h//16) - 1)) AS mi
-      |  FROM p
-      |), c0 AS (
-      |  SELECT doc_id, w, h, mi % (w//16) AS mx, mi // (w//16) AS my,
-      |    (doc_id*23 + (mi % (w//16))*97 + (mi // (w//16))*31) % 256 AS r0,
-      |    (doc_id*41 + (mi % (w//16))*53 + (mi // (w//16))*71) % 256 AS g0,
-      |    (doc_id*59 + (mi % (w//16))*29 + (mi // (w//16))*13) % 256 AS b0
-      |  FROM f
-      |), c1 AS (
-      |  -- JFIF forward transform in x10^6 fixed point (offsets keep the
-      |  -- truncating // in positive range where it IS floorDiv)
-      |  SELECT doc_id, w, h, mx, my,
-      |    LEAST(GREATEST((299000*r0 + 587000*g0 + 114000*b0 + 500000) // 1000000, 0), 255) AS y0,
-      |    LEAST(GREATEST((-168736*r0 - 331264*g0 + 500000*b0 + 128500000) // 1000000, 0), 255) AS cb0,
-      |    LEAST(GREATEST((500000*r0 - 418688*g0 - 81312*b0 + 128500000) // 1000000, 0), 255) AS cr0
-      |  FROM c0
-      |), c2 AS (
-      |  -- the DC-only quantize/dequantize/IDCT closed form, per plane
-      |  SELECT doc_id, w, h, mx, my,
-      |    LEAST(GREATEST((((8*y0 + 8) // 16) * 16 + 4) // 8, 0), 255) AS y1,
-      |    LEAST(GREATEST((((8*cb0 + 8) // 16) * 16 + 4) // 8, 0), 255) AS cb1,
-      |    LEAST(GREATEST((((8*cr0 + 8) // 16) * 16 + 4) // 8, 0), 255) AS cr1
-      |  FROM c1
-      |), c3 AS (
-      |  SELECT doc_id, w, h, mx, my,
-      |    LEAST(GREATEST((1000000*y1 + 1402000*(cr1 - 128) + 180500000) // 1000000 - 180, 0), 255) AS r1,
-      |    LEAST(GREATEST((1000000*y1 - 344136*(cb1 - 128) - 714136*(cr1 - 128) + 135500000) // 1000000 - 135, 0), 255) AS g1,
-      |    LEAST(GREATEST((1000000*y1 + 1772000*(cb1 - 128) + 227500000) // 1000000 - 227, 0), 255) AS b1,
-      |    16*w*(256*my + 120) + 16*(256*mx + 120) AS sp
-      |  FROM c2
-      |)
-      |SELECT doc_id, 'jpeg' AS kind, CAST(w AS INT) AS width,
-      |  CAST(h AS INT) AS height, 3 AS channels,
-      |  CAST(w*h*3 AS BIGINT) AS n_vals,
-      |  CAST(SUM(CAST(r1 + g1 + b1 AS BIGINT)) * 256 AS BIGINT) AS v_sum,
-      |  CAST(MIN(LEAST(r1, g1, b1)) AS BIGINT) AS v_min,
-      |  CAST(MAX(GREATEST(r1, g1, b1)) AS BIGINT) AS v_max,
-      |  CAST(SUM(3 * CAST(r1 + g1 + b1 AS BIGINT) * sp
-      |    + 256 * CAST(r1 + 2*g1 + 3*b1 AS BIGINT)) AS BIGINT) AS v_wsum
-      |FROM c3 GROUP BY doc_id, w, h ORDER BY doc_id""".stripMargin
-
-  /** WebDataset-style sharded tar export/import
-    * ([[graft.sources.TarShards]]): every document becomes a SAMPLE of two
-    * members — `<key>.txt` (the raw text bytes) and `<key>.bmp` (a real
-    * BMP with formula pixels) — written as USTAR shards (key-hashed so a
-    * sample's members share a shard, sorted within), read back through the
-    * shard-granular binaryFile path, regrouped into samples, and verified
-    * BOTH ways: text via md5 of the round-tripped bytes, image via real
-    * BMP decode statistics. The oracle computes md5(text) and the pixel
-    * formulas directly — matching only if tar headers, checksums, padding,
-    * sample grouping and the BMP hop are all byte-exact. North-star
-    * addition (reference extract surface is JDBC/CSV/ORC,
-    * sqoop_etl.py:31-53).
-    */
-  private val qTarRoundtrip: Q = (s, dir) => {
-    import s.implicits._
-    import graft.multimodal.PixelCodec
-    val tmp = java.nio.file.Files.createTempDirectory("graft-tar").toString
-    val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-    val txtMembers = docs.select(
-      format_string("%010d", col("doc_id")).as("key"),
-      lit("txt").as("ext"),
-      encode(col("text"), "UTF-8").cast("binary").as("content"))
-    val bmpMembers = docs.select(col("doc_id")).as[Long]
-      .mapPartitions { ids =>
-        ids.map { id =>
-          val w = 4 + ((id * 5) % 8).toInt
-          val h = 4 + ((id * 9) % 6).toInt
-          val pix = Array.tabulate(w * h * 3)(i => ((id * 29 + i * 13) % 256).toByte)
-          (f"$id%010d", "bmp", PixelCodec.encodeBmp(w, h, pix))
-        }
-      }.toDF("key", "ext", "content")
-    graft.sources.TarShards.write(txtMembers.unionByName(bmpMembers),
-      s"$tmp/shards", numShards = 6)
-    val samples = graft.sources.TarShards.readSamples(s, s"$tmp/shards")
-    val stats = Multimodal.decodeStats(samples.select(
-      col("key").cast("long").as("doc_id"),
-      element_at(col("members"), "bmp").as("payload")))
-    val texts = samples.select(col("key").cast("long").as("doc_id"),
-      md5(element_at(col("members"), "txt")).as("text_md5"))
-    texts.join(stats, "doc_id")
-      .select(col("doc_id"), col("text_md5"), col("width"), col("height"),
-        col("n_vals"), col("v_sum"), col("v_wsum"))
-      .orderBy("doc_id")
-  }
-
-  private val tarRoundtripSql =
-    """WITH p AS (
-      |  SELECT doc_id, md5(text) AS text_md5,
-      |         4 + (doc_id*5)%8 AS w, 4 + (doc_id*9)%6 AS h
-      |  FROM documents
-      |)
-      |SELECT doc_id, text_md5, CAST(w AS INT) AS width, CAST(h AS INT) AS height,
-      |  CAST(w*h*3 AS BIGINT) AS n_vals,
-      |  CAST(list_sum(list_transform(generate_series(0, w*h*3 - 1), i ->
-      |    (doc_id*29 + i*13) % 256)) AS BIGINT) AS v_sum,
-      |  CAST(list_sum(list_transform(generate_series(1, w*h*3), i ->
-      |    i * ((doc_id*29 + (i-1)*13) % 256))) AS BIGINT) AS v_wsum
-      |FROM p ORDER BY doc_id""".stripMargin
-
-  /** Shot-boundary detection ([[Multimodal.shotBoundaries]]): per document
-    * an animated GIF built from SCENES — frames of one scene identical,
-    * scene changes every 3 frames by formula — demuxed and segmented by
-    * consecutive-frame pixel delta; the emitted shots carry exact
-    * `entry_diff` (Σ|Δ| across palette-resolved channel values at the
-    * cut). The oracle derives shot spans from the scene formula and
-    * recomputes every boundary delta from the palette formulas — matching
-    * only if the demux, palette resolution, and integer diffing are
-    * bit-exact. North-star addition; the reference has no binary surface.
-    */
-  private val qShotBoundaries: Q = (s, dir) => {
-    import s.implicits._
-    import graft.multimodal.PixelCodec
-    val payloads = Tables.documents(s, dir).select(col("doc_id")).as[Long]
-      .mapPartitions { ids =>
-        val palette = Array.tabulate(768) { j =>
-          val e = j / 3
-          ((j % 3) match {
-            case 0 => (e * 37 + 1) % 256
-            case 1 => (e * 73 + 5) % 256
-            case _ => (e * 101 + 9) % 256
-          }).toByte
-        }
-        ids.map { id =>
-          val w = 4 + ((id * 3) % 6).toInt
-          val h = 4 + ((id * 7) % 5).toInt
-          val nf = 4 + (id % 5).toInt
-          val frames = (0 until nf).map { f =>
-            val sc = (f + id) / 3
-            Array.tabulate(w * h)(p => ((id * 13 + sc * 47 + p * 5) % 256).toByte)
-          }
-          (id, PixelCodec.encodeGif(w, h, palette, frames))
-        }
-      }.toDF("doc_id", "payload")
-    Multimodal.shotBoundaries(payloads, threshold = 0L)
-      .orderBy("doc_id", "shot_idx")
-  }
-
-  private val shotBoundariesSql =
-    """WITH p AS (
-      |  SELECT doc_id, 4 + (doc_id*3)%6 AS w, 4 + (doc_id*7)%5 AS h,
-      |         4 + doc_id%5 AS nf
-      |  FROM documents
-      |), f AS (
-      |  SELECT doc_id, w, h, unnest(generate_series(0, nf - 1)) AS fi FROM p
-      |), sc AS (
-      |  SELECT doc_id, w, h, fi, (fi + doc_id) // 3 AS scene FROM f
-      |), shots AS (
-      |  SELECT doc_id, w, h, scene, MIN(fi) AS start_frame,
-      |         MAX(fi) AS end_frame, COUNT(*) AS n_frames
-      |  FROM sc GROUP BY doc_id, w, h, scene
-      |)
-      |SELECT doc_id,
-      |  CAST(ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY start_frame) - 1 AS INT) AS shot_idx,
-      |  CAST(start_frame AS INT) AS start_frame,
-      |  CAST(end_frame AS INT) AS end_frame,
-      |  CAST(n_frames AS INT) AS n_frames,
-      |  CAST(CASE WHEN start_frame = 0 THEN 0 ELSE list_sum(
-      |    list_transform(generate_series(0, w*h - 1), p ->
-      |      abs(((doc_id*13 + scene*47 + p*5) % 256 * 37 + 1) % 256
-      |        - ((doc_id*13 + (scene-1)*47 + p*5) % 256 * 37 + 1) % 256)
-      |      + abs(((doc_id*13 + scene*47 + p*5) % 256 * 73 + 5) % 256
-      |        - ((doc_id*13 + (scene-1)*47 + p*5) % 256 * 73 + 5) % 256)
-      |      + abs(((doc_id*13 + scene*47 + p*5) % 256 * 101 + 9) % 256
-      |        - ((doc_id*13 + (scene-1)*47 + p*5) % 256 * 101 + 9) % 256)))
-      |  END AS BIGINT) AS entry_diff
-      |FROM shots ORDER BY doc_id, shot_idx""".stripMargin
-
-  /** Image sharpness/brightness profile ([[Multimodal.imageSharpness]]):
-    * per document a real BMP with formula pixels; the query decodes,
-    * computes integer luma, and folds the discrete Laplacian over interior
-    * pixels into exact sums — `lap_sq_sum` is the variance-of-Laplacian
-    * focus measure a blur filter thresholds on. The oracle replays pixel
-    * formula → luma → Laplacian index arithmetic in SQL lists. North-star
-    * addition; the reference has no binary surface.
-    */
-  private val qImageSharpness: Q = (s, dir) => {
-    import s.implicits._
-    import graft.multimodal.PixelCodec
-    val payloads = Tables.documents(s, dir).select(col("doc_id")).as[Long]
-      .mapPartitions { ids =>
-        ids.map { id =>
-          val w = 5 + ((id * 7) % 9).toInt
-          val h = 5 + ((id * 3) % 8).toInt
-          val pix = Array.tabulate(w * h * 3)(i => ((id * 19 + i * 23) % 256).toByte)
-          (id, PixelCodec.encodeBmp(w, h, pix))
-        }
-      }.toDF("doc_id", "payload")
-    Multimodal.imageSharpness(payloads).orderBy("doc_id")
-  }
-
-  private val imageSharpnessSql =
-    """WITH p AS (
-      |  SELECT doc_id, 5 + (doc_id*7)%9 AS w, 5 + (doc_id*3)%8 AS h
-      |  FROM documents
-      |), v AS (
-      |  SELECT doc_id, w, h,
-      |    list_transform(generate_series(0, w*h*3 - 1), i ->
-      |      (doc_id*19 + i*23) % 256) AS vals
-      |  FROM p
-      |), g AS (
-      |  SELECT doc_id, w, h,
-      |    list_transform(generate_series(0, w*h - 1), px ->
-      |      (299*vals[px*3+1] + 587*vals[px*3+2] + 114*vals[px*3+3]) // 1000) AS gray
-      |  FROM v
-      |), l AS (
-      |  SELECT doc_id, w, h, gray,
-      |    list_transform(generate_series(0, (w-2)*(h-2) - 1), t ->
-      |      4*gray[(t // (w-2) + 1)*w + (t % (w-2) + 1) + 1]
-      |      - gray[(t // (w-2) + 1)*w + (t % (w-2) + 1)]
-      |      - gray[(t // (w-2) + 1)*w + (t % (w-2) + 1) + 2]
-      |      - gray[(t // (w-2))*w + (t % (w-2) + 1) + 1]
-      |      - gray[(t // (w-2) + 2)*w + (t % (w-2) + 1) + 1]) AS lap
-      |  FROM g
-      |)
-      |SELECT doc_id, CAST(w AS INT) AS width, CAST(h AS INT) AS height,
-      |  CAST(w*h AS BIGINT) AS n_pixels,
-      |  CAST(list_sum(gray) AS BIGINT) AS gray_sum,
-      |  CAST((w-2)*(h-2) AS BIGINT) AS n_interior,
-      |  CAST(list_sum(lap) AS BIGINT) AS lap_sum,
-      |  CAST(list_sum(list_transform(lap, x -> x*x)) AS BIGINT) AS lap_sq_sum
-      |FROM l ORDER BY doc_id""".stripMargin
-
-  /** Streaming VISUAL ingest gate ([[graft.multimodal.VisualIndex]] +
-    * [[graft.streaming.DocsStream.visualGateDrain]]): a base corpus's
-    * dHash quarters live in a partitioned signature index; image payloads
-    * with doc_id ≥ 250 then ARRIVE as micro-batches, each decoded +
-    * hashed once, probed against the index (only matching (q, qb)
-    * partitions read) and against its own batch, then appended — the
-    * perceptual twin of `q_stream_neardup`, same exactly-once pair
-    * semantics and restart discipline. Because the emitted pair set is
-    * micro-batch-boundary independent, ONE batch oracle replays the whole
-    * drain: all Hamming ≤ 3 pairs whose later member is an arrival
-    * (hi_id ≥ 250). North-star addition; the reference has no binary
-    * surface.
-    */
-  private val qStreamVisualGate: Q = (s, dir) => {
-    import graft.multimodal.VisualIndex
-    val tmp = java.nio.file.Files.createTempDirectory("graft-vgate").toString
-    val payloads = imagePayloads(s, dir)
-    val baseIdx = Fixtures.getOrBuild(s"visidx:$dir") { f =>
-      VisualIndex.build(
-        Multimodal.imageDhash(payloads.filter(col("doc_id") < 250)), f)
-    }
-    // the arrival shards are a build-once fixture too (r6 verdict task 2):
-    // synthesizing + landing the payloads is test-data generation, not gate
-    // work — in production the stream's input directory is what ingest
-    // already wrote. 6 shards via an ID-level shuffle inside imagePayloads
-    // (payload bytes stay in their synthesis task; see imagePayloads note).
-    // What stays timed is the DRAIN: per micro-batch decode+hash, pruned
-    // index probe, pair sink, index append.
-    val arrivals = Fixtures.getOrBuild(s"visarrivals:$dir") { f =>
-      imagePayloads(s, dir, partitions = 6)
-        .filter(col("doc_id") >= 250)
-        .write.parquet(s"$f/in")
-    }
-    val idx = Fixtures.mutableCopy(baseIdx)
-    withDrainParallelism(s, s"$arrivals/in") {
-      graft.streaming.DocsStream.visualGateDrain(s, s"$arrivals/in", idx,
-        s"$tmp/out", s"$tmp/ck", maxHamming = 3)
-    }
-    s.read.parquet(s"$tmp/out")
-      .select(col("hi_id"), col("lo_id"), col("hamming"))
-      .orderBy("hi_id", "lo_id")
-  }
-
-  private val streamVisualGateSql =
-    s"""WITH $imageBitsCte
-       |SELECT * FROM (
-       |  SELECT b.doc_id AS hi_id, a.doc_id AS lo_id,
-       |    CAST(list_sum(list_transform(generate_series(1, 64), i ->
-       |      CASE WHEN a.bits[i] <> b.bits[i] THEN 1 ELSE 0 END)) AS INT) AS hamming
-       |  FROM bits a JOIN bits b ON a.doc_id < b.doc_id)
-       |WHERE hamming <= 3 AND hi_id >= 250
-       |ORDER BY hi_id, lo_id""".stripMargin
-
-  /** Visual index MAINTENANCE (r6 verdict task 3): the perceptual twin of
-    * [[qBandCompaction]]. A long-running visual ingest gate appends one
-    * small parquet layer per (q, qb) partition per micro-batch
-    * ([[VisualIndex.append]]); this query builds that layered store (base
-    * corpus + three arrival waves, a build-once fixture), compacts it with
-    * the NESTED atomic-swap pass (`Compaction.compactPartitions` recurses
-    * q=…/qb=…), and probes the compacted index. The oracle recomputes the
-    * expected pair set from the pixel formulas, so the hash matches only
-    * if compaction lost nothing; `rows_preserved` additionally pins the
-    * exact index row count pre/post (a pure pair probe would not see
-    * DUPLICATED quarter rows — the distinct() hides them), and
-    * `files_reduced` gates that maintenance actually shrank the store.
-    */
-  private val qVisidxCompaction: Q = (s, dir) => {
-    import graft.multimodal.VisualIndex
-    val layered = Fixtures.getOrBuild(s"visidxlayers:$dir") { f =>
-      val sigs = Multimodal.imageDhash(imagePayloads(s, dir))
-      VisualIndex.build(sigs.filter(col("doc_id") < 250), f)
-      VisualIndex.append(
-        sigs.filter(col("doc_id") >= 250 && col("doc_id") < 300), f)
-      VisualIndex.append(
-        sigs.filter(col("doc_id") >= 300 && col("doc_id") < 350), f)
-      VisualIndex.append(
-        sigs.filter(col("doc_id") >= 350 && col("doc_id") < 400), f)
-    }
-    val idx = Fixtures.mutableCopy(layered)
-    val rowsBefore = graft.sources.Listing.boundedStore(s)(
-      s.read.parquet(idx)).count()
-    // r12: the all-small-leaf case fuses into ONE distributed rewrite job
-    // + per-leaf atomic swaps (Compaction scaladoc); maxParallel only
-    // throttles the >targetBytes fallback
-    val st = graft.sources.Compaction.compactPartitions(s, idx,
-      maxParallel = 8)
-    val rowsAfter = graft.sources.Listing.boundedStore(s)(
-      s.read.parquet(idx)).count()
-    val probes = Multimodal.imageDhash(
-      imagePayloads(s, dir).filter(col("doc_id") >= 400))
-    VisualIndex.probe(probes, s, idx, maxHamming = 3)
-      .agg(count(lit(1)).as("n_pairs"),
-        expr("bit_xor(new_id * 1000000 + indexed_id)").as("pair_xor"))
-      .withColumn("files_reduced", lit(st.filesAfter < st.filesBefore))
-      .withColumn("rows_preserved", lit(rowsBefore == rowsAfter))
-  }
-
-  private val visidxCompactionSql =
-    s"""WITH $imageBitsCte
-       |SELECT CAST(COUNT(*) AS BIGINT) AS n_pairs,
-       |  CAST(bit_xor(new_id * 1000000 + indexed_id) AS BIGINT) AS pair_xor,
-       |  TRUE AS files_reduced, TRUE AS rows_preserved
-       |FROM (
-       |  SELECT b.doc_id AS new_id, a.doc_id AS indexed_id,
-       |    list_sum(list_transform(generate_series(1, 64), i ->
-       |      CASE WHEN a.bits[i] <> b.bits[i] THEN 1 ELSE 0 END)) AS hamming
-       |  FROM bits a JOIN bits b ON a.doc_id < 400 AND b.doc_id >= 400)
-       |WHERE hamming <= 3""".stripMargin
-
-  /** Silence-aware audio segmentation ([[Multimodal.audioSegments]]): per
-    * document a WAV alternating formula-quiet and formula-loud 32-sample
-    * blocks; the query decodes PCM, computes per-block energy Σs², and
-    * emits one row per contiguous run of speech blocks (gaps-and-islands
-    * in the codec task, map-only). The oracle replays sample formula →
-    * block energies → island grouping (ROW_NUMBER difference) in SQL —
-    * integer-exact bounds and energies. North-star addition; the
-    * reference has no binary surface.
-    */
-  /** The quiet/loud block WAV fixture shared by the audio queries. */
-  private def audioSegPayloads(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import graft.multimodal.PixelCodec
-    Tables.documents(s, dir).select(col("doc_id")).as[Long]
-      .mapPartitions { ids =>
-        ids.map { id =>
-          val n = 32 * (8 + (id % 16).toInt)
-          val samples = Array.tabulate(n) { i =>
-            if (((i / 32) + id) % 3 == 0) ((id * 7 + i * 13) % 129).toInt - 64
-            else ((id * 31 + i * 17) % 56000).toInt - 28000
-          }
-          (id, PixelCodec.encodeWav(16000, 1, samples))
-        }
-      }.toDF("doc_id", "payload")
-  }
-
-  private val qAudioSegments: Q = (s, dir) =>
-    Multimodal.audioSegments(audioSegPayloads(s, dir),
-        blockLen = 32, energyThreshold = 1000000L)
-      .orderBy("doc_id", "seg_idx")
-
-  /** Cross-modal ALIGNMENT: synthetic caption events (block positions, a
-    * formula of (doc_id, caption)) joined to the speech segments decoded
-    * from the SAME document's audio — the transcript-to-utterance
-    * containment join an A/V training pipeline runs (equi on doc_id +
-    * range on block position, so the shuffle is doc-keyed, never
-    * all-pairs). Left join keeps silent segments with zero captions. The
-    * oracle rebuilds segments from the sample formulas and replays the
-    * containment join. North-star addition; the reference has no binary
-    * surface.
-    */
-  private val qAvAlignment: Q = (s, dir) => {
-    val segs = Multimodal.audioSegments(audioSegPayloads(s, dir),
-      blockLen = 32, energyThreshold = 1000000L)
-    val caps = Tables.documents(s, dir)
-      .select(col("doc_id"),
-        expr("explode(sequence(0, 2 + CAST(doc_id % 5 AS INT)))").as("c"))
-      .select(col("doc_id"), col("c"),
-        expr("CAST((doc_id*3 + c*7) % (8 + doc_id % 16) AS INT)").as("pos"))
-    segs.as("s")
-      .join(caps.as("c"),
-        col("s.doc_id") === col("c.doc_id") &&
-          col("c.pos").between(col("s.start_block"), col("s.end_block")),
-        "left")
-      .groupBy(col("s.doc_id").as("doc_id"), col("s.seg_idx").as("seg_idx"),
-        col("s.start_block").as("start_block"),
-        col("s.end_block").as("end_block"))
-      .agg(count(col("c.pos")).as("n_caps"))
-      .orderBy("doc_id", "seg_idx")
-  }
-
-  private val avAlignmentSql =
-    """WITH p AS (
-      |  SELECT doc_id, 32 * (8 + doc_id % 16) AS n FROM documents
-      |), s AS (
-      |  SELECT doc_id, n,
-      |    list_transform(generate_series(0, n - 1), i ->
-      |      CASE WHEN ((i // 32) + doc_id) % 3 = 0
-      |           THEN (doc_id*7 + i*13) % 129 - 64
-      |           ELSE (doc_id*31 + i*17) % 56000 - 28000 END) AS smp
-      |  FROM p
-      |), b AS (
-      |  SELECT doc_id, smp, unnest(generate_series(0, n // 32 - 1)) AS blk FROM s
-      |), e AS (
-      |  SELECT doc_id, blk,
-      |    CAST(list_sum(list_transform(generate_series(1, 32), j ->
-      |      smp[blk*32 + j] * smp[blk*32 + j])) AS BIGINT) AS energy
-      |  FROM b
-      |), g AS (
-      |  SELECT doc_id, blk,
-      |    blk - ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY blk) AS grp
-      |  FROM e WHERE energy >= 1000000
-      |), seg AS (
-      |  SELECT doc_id, MIN(blk) AS start_block, MAX(blk) AS end_block,
-      |    ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY MIN(blk)) - 1 AS seg_idx
-      |  FROM g GROUP BY doc_id, grp
-      |), caps AS (
-      |  SELECT doc_id, (doc_id*3 + c*7) % (8 + doc_id % 16) AS pos
-      |  FROM (SELECT doc_id, unnest(generate_series(0, 2 + doc_id % 5)) AS c
-      |        FROM documents)
-      |)
-      |SELECT s.doc_id AS doc_id, CAST(s.seg_idx AS INT) AS seg_idx,
-      |  CAST(s.start_block AS INT) AS start_block,
-      |  CAST(s.end_block AS INT) AS end_block,
-      |  CAST(COUNT(c.pos) AS BIGINT) AS n_caps
-      |FROM seg s LEFT JOIN caps c
-      |  ON s.doc_id = c.doc_id AND c.pos BETWEEN s.start_block AND s.end_block
-      |GROUP BY s.doc_id, s.seg_idx, s.start_block, s.end_block
-      |ORDER BY s.doc_id, seg_idx""".stripMargin
-
-  private val audioSegmentsSql =
-    """WITH p AS (
-      |  SELECT doc_id, 32 * (8 + doc_id % 16) AS n FROM documents
-      |), s AS (
-      |  SELECT doc_id, n,
-      |    list_transform(generate_series(0, n - 1), i ->
-      |      CASE WHEN ((i // 32) + doc_id) % 3 = 0
-      |           THEN (doc_id*7 + i*13) % 129 - 64
-      |           ELSE (doc_id*31 + i*17) % 56000 - 28000 END) AS smp
-      |  FROM p
-      |), b AS (
-      |  SELECT doc_id, smp, unnest(generate_series(0, n // 32 - 1)) AS blk FROM s
-      |), e AS (
-      |  SELECT doc_id, blk,
-      |    CAST(list_sum(list_transform(generate_series(1, 32), j ->
-      |      smp[blk*32 + j] * smp[blk*32 + j])) AS BIGINT) AS energy
-      |  FROM b
-      |), g AS (
-      |  SELECT doc_id, blk, energy,
-      |    blk - ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY blk) AS grp
-      |  FROM e WHERE energy >= 1000000
-      |), seg AS (
-      |  SELECT doc_id, MIN(blk) AS start_block, MAX(blk) AS end_block,
-      |    COUNT(*) AS n_blocks, SUM(energy) AS seg_energy
-      |  FROM g GROUP BY doc_id, grp
-      |)
-      |SELECT doc_id,
-      |  CAST(ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY start_block) - 1 AS INT) AS seg_idx,
-      |  CAST(start_block AS INT) AS start_block,
-      |  CAST(end_block AS INT) AS end_block,
-      |  CAST(n_blocks AS INT) AS n_blocks,
-      |  CAST(seg_energy AS BIGINT) AS seg_energy
-      |FROM seg ORDER BY doc_id, seg_idx""".stripMargin
-
-  /** The composed MULTIMODAL curation flow
-    * ([[graft.pipeline.MultimodalPipeline]]): mixed payloads (even ids →
-    * grouped BMPs, odd ids → quiet/loud WAVs) routed by decoded kind,
-    * brightness-gated (images) / silence-gated (audio), surviving images
-    * perceptually deduped (dHash → Hamming pairs → connected components →
-    * keep cluster min), one accounting row per modality. The oracle
-    * composes the proven CTE pieces — pixel/sample formulas, luma,
-    * resample bits, all-pairs Hamming, recursive-CTE closure, block
-    * energies — into the same end-to-end flow, the
-    * `q_training_pipeline_v2` discipline applied to media. North-star
-    * addition; the reference has no binary surface.
-    */
-  private val qMultimodalPipeline: Q = (s, dir) => {
-    val payloads = imagePayloads(s, dir).filter(col("doc_id") % 2 === 0)
-      .unionByName(audioSegPayloads(s, dir).filter(col("doc_id") % 2 === 1))
-    graft.pipeline.MultimodalPipeline.curateSummary(payloads)
-  }
-
-  private val multimodalPipelineSql =
-    """WITH RECURSIVE gp AS (
-      |  SELECT GREATEST(COUNT(*) * 2 // 25, 40) AS g0 FROM documents
-      |), imgp0 AS (
-      |  SELECT doc_id,
-      |         (doc_id * 2654435761 % 4294967296) * g0 // 4294967296 AS g
-      |  FROM documents CROSS JOIN gp WHERE doc_id % 2 = 0
-      |), imgp AS (
-      |  SELECT doc_id, g,
-      |         9 + (g * 3) % 8 AS w,
-      |         8 + (g * 5) % 7 AS h
-      |  FROM imgp0
-      |), imgv AS (
-      |  SELECT doc_id, w, h,
-      |    list_transform(generate_series(0, w*h*3 - 1), i ->
-      |      CASE WHEN (i + doc_id) % 23 = 0
-      |           THEN (xor(g*2654435761 % 4294967296, i) * 1597334677
-      |                 % 4294967296 // 16777216 + 1 + doc_id % 13) % 256
-      |           ELSE xor(g*2654435761 % 4294967296, i) * 1597334677
-      |                % 4294967296 // 16777216
-      |      END) AS vals
-      |  FROM imgp
-      |), imggr AS (
-      |  SELECT doc_id, w, h,
-      |    list_transform(generate_series(0, w*h - 1), px ->
-      |      (299*vals[px*3+1] + 587*vals[px*3+2] + 114*vals[px*3+3]) // 1000) AS gray
-      |  FROM imgv
-      |), imgq AS (
-      |  SELECT doc_id, w, h, gray, list_sum(gray) AS gray_sum
-      |  FROM imggr WHERE list_sum(gray) >= 127 * w * h
-      |), bits AS (
-      |  SELECT doc_id,
-      |    list_transform(generate_series(0, 63), b ->
-      |      CASE WHEN gray[((b // 8) * h // 8) * w + ((b % 8) * w // 9) + 1]
-      |              > gray[((b // 8) * h // 8) * w + (((b % 8) + 1) * w // 9) + 1]
-      |           THEN 1 ELSE 0 END) AS bits
-      |  FROM imgq
-      |), pairs AS (
-      |  SELECT * FROM (
-      |    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-      |      list_sum(list_transform(generate_series(1, 64), i ->
-      |        CASE WHEN a.bits[i] <> b.bits[i] THEN 1 ELSE 0 END)) AS hamming
-      |    FROM bits a JOIN bits b ON a.doc_id < b.doc_id)
-      |  WHERE hamming <= 3
-      |), edges AS (
-      |  SELECT doc_a AS u, doc_b AS v FROM pairs
-      |  UNION SELECT doc_b AS u, doc_a AS v FROM pairs
-      |), reach(u, v) AS (
-      |  SELECT u, v FROM edges
-      |  UNION SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-      |), dropd AS (
-      |  SELECT u AS doc_id FROM reach GROUP BY u HAVING LEAST(u, MIN(v)) <> u
-      |), imgrow AS (
-      |  SELECT 'image' AS kind,
-      |    CAST(COUNT(*) AS BIGINT) AS n_quality,
-      |    CAST(SUM(CASE WHEN d.doc_id IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-      |    CAST(SUM(CASE WHEN d.doc_id IS NULL THEN q.w*q.h ELSE 0 END) AS BIGINT) AS units_kept,
-      |    CAST(SUM(CASE WHEN d.doc_id IS NULL THEN q.gray_sum ELSE 0 END) AS BIGINT) AS score_kept
-      |  FROM imgq q LEFT JOIN dropd d ON q.doc_id = d.doc_id
-      |), audp AS (
-      |  SELECT doc_id, 32 * (8 + doc_id % 16) AS n
-      |  FROM documents WHERE doc_id % 2 = 1
-      |), auds AS (
-      |  SELECT doc_id, n,
-      |    list_transform(generate_series(0, n - 1), i ->
-      |      CASE WHEN ((i // 32) + doc_id) % 3 = 0
-      |           THEN (doc_id*7 + i*13) % 129 - 64
-      |           ELSE (doc_id*31 + i*17) % 56000 - 28000 END) AS smp
-      |  FROM audp
-      |), audb AS (
-      |  SELECT doc_id, smp, unnest(generate_series(0, n // 32 - 1)) AS blk FROM auds
-      |), aude AS (
-      |  SELECT doc_id, blk,
-      |    CAST(list_sum(list_transform(generate_series(1, 32), j ->
-      |      smp[blk*32 + j] * smp[blk*32 + j])) AS BIGINT) AS energy
-      |  FROM audb
-      |), audagg AS (
-      |  SELECT doc_id,
-      |    SUM(CASE WHEN energy >= 1000000 THEN 1 ELSE 0 END) AS speech_blocks,
-      |    SUM(CASE WHEN energy >= 1000000 THEN energy ELSE 0 END) AS tot_energy
-      |  FROM aude GROUP BY doc_id
-      |), audrow AS (
-      |  SELECT 'audio' AS kind,
-      |    CAST(COUNT(*) AS BIGINT) AS n_quality,
-      |    CAST(COUNT(*) AS BIGINT) AS n_kept,
-      |    CAST(SUM(speech_blocks) AS BIGINT) AS units_kept,
-      |    CAST(SUM(tot_energy) AS BIGINT) AS score_kept
-      |  FROM audagg WHERE speech_blocks >= 8
-      |)
-      |SELECT * FROM imgrow UNION ALL SELECT * FROM audrow ORDER BY kind""".stripMargin
-
-  private val videoNeardupSql =
-    """WITH p AS (
-      |  SELECT doc_id, 3 + (doc_id*5)%5 AS w, 3 + (doc_id*11)%3 AS h,
-      |         1 + doc_id%4 AS nf
-      |  FROM documents
-      |), f AS (
-      |  SELECT doc_id, w, h, unnest(generate_series(0, nf - 1)) AS fi FROM p
-      |), k AS (
-      |  SELECT DISTINCT doc_id, w, h, (doc_id*17 + fi*29) % 64 AS base FROM f
-      |)
-      |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-      |  CAST(COUNT(*) AS BIGINT) AS shared_frames
-      |FROM k a JOIN k b
-      |  ON a.w = b.w AND a.h = b.h AND a.base = b.base AND a.doc_id < b.doc_id
-      |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
-
-  // ------------------------------------------------------------ events
-
-  private val qEventsHourly: Q = (s, dir) =>
-    Tables.events(s, dir)
-      .groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"), Exact.sumExact(col("value")).as("total_value"))
-      .orderBy("hour", "event_type")
-
-  private val eventsHourlySql =
-    """SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour, event_type,
-      |  COUNT(*) AS n,
-      |  CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS total_value
-      |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
-
-  private val qSessionize: Q = (s, dir) => {
-    val byUser = Window.partitionBy(col("user_id"))
-      .orderBy(col("tms").asc, col("event_id").asc)
-    val cum = byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    Tables.events(s, dir)
-      .select(col("user_id"), col("event_id"), unix_millis(col("ts")).as("tms"), col("value"))
-      .withColumn("new_s",
-        when(col("tms") - lag(col("tms"), 1).over(byUser) > 1800000L || lag(col("tms"), 1).over(byUser).isNull, 1)
-          .otherwise(0))
-      .withColumn("session_id", sum(col("new_s")).over(cum).cast("long"))
-      .groupBy(col("user_id"), col("session_id"))
-      .agg(
-        count(lit(1)).as("n_events"),
-        min(col("tms")).as("start_ms"),
-        max(col("tms")).as("end_ms"),
-        Exact.sumExact(col("value")).as("total_value"))
-      .orderBy("user_id", "session_id")
-  }
-
-  private val sessionizeSql =
-    """WITH e AS (
-      |  SELECT user_id, event_id, epoch_ms(ts) AS tms, value FROM events
-      |), flagged AS (
-      |  SELECT user_id, event_id, tms, value,
-      |    CASE WHEN tms - lag(tms) OVER (PARTITION BY user_id ORDER BY tms, event_id) > 1800000
-      |           OR lag(tms) OVER (PARTITION BY user_id ORDER BY tms, event_id) IS NULL
-      |         THEN 1 ELSE 0 END AS new_s
-      |  FROM e
-      |), sess AS (
-      |  SELECT user_id, event_id, tms, value,
-      |    CAST(SUM(new_s) OVER (PARTITION BY user_id ORDER BY tms, event_id
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-      |  FROM flagged
-      |)
-      |SELECT user_id, session_id, COUNT(*) AS n_events,
-      |  CAST(MIN(tms) AS BIGINT) AS start_ms, CAST(MAX(tms) AS BIGINT) AS end_ms,
-      |  CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS total_value
-      |FROM sess GROUP BY user_id, session_id ORDER BY user_id, session_id""".stripMargin
-
-  /** As-of join: each event matched to the user's most recent purchase at or
-    * before it. Times are pre-quantized to epoch-ms BIGINT so both engines
-    * compare identical integers; the right side is pre-aggregated to one row
-    * per (user, ms) for tie determinism.
-    */
-  private val qAsofPurchase: Q = (s, dir) => {
-    val ev = Tables.events(s, dir)
-      .select(col("event_id"), col("user_id"), unix_millis(col("ts")).as("tms"))
-    val purchases = Tables.events(s, dir)
-      .filter(col("event_type") === "purchase")
-      .select(col("user_id"), unix_millis(col("ts")).as("tms"), col("event_id"))
-      .groupBy(col("user_id"), col("tms"))
-      .agg(max(col("event_id")).as("p_id"))
-    operators.AsofJoin(ev, purchases, key = "user_id", time = "tms", rightCols = Seq("p_id"))
-      .withColumnRenamed("asof_p_id", "p_id")
-      .orderBy("event_id")
-  }
-
-  /** The same as-of semantics through the CUSTOM PHYSICAL OPERATOR
-    * (graftx.AsofJoinNode → AsofJoinStrategy → AsofJoinExec: one exchange +
-    * sort per side, single forward merge per co-partition) — hash-checked
-    * against the identical DuckDB ASOF JOIN oracle as `q_asof_purchase`.
-    */
-  private val qAsofExec: Q = (s, dir) => {
-    val ev = Tables.events(s, dir)
-      .select(col("event_id"), col("user_id"), unix_millis(col("ts")).as("tms"))
-    val purchases = Tables.events(s, dir)
-      .filter(col("event_type") === "purchase")
-      .select(col("user_id"), unix_millis(col("ts")).as("tms"), col("event_id"))
-      .groupBy(col("user_id"), col("tms"))
-      .agg(max(col("event_id")).as("p_id"))
-    org.apache.spark.sql.graftx.AsofPhysical
-      .asof(ev, purchases, key = "user_id", time = "tms", rightCols = Seq("p_id"))
-      .withColumnRenamed("asof_p_id", "p_id")
-      .orderBy("event_id")
-  }
-
-  private val asofPurchaseSql =
-    """SELECT l.event_id, l.user_id, l.tms, r.p_id
-      |FROM (SELECT event_id, user_id, epoch_ms(ts) AS tms FROM events) l
-      |ASOF LEFT JOIN (
-      |  SELECT user_id, epoch_ms(ts) AS tms, max(event_id) AS p_id
-      |  FROM events WHERE event_type = 'purchase' GROUP BY 1, 2) r
-      |ON l.user_id = r.user_id AND l.tms >= r.tms
-      |ORDER BY l.event_id""".stripMargin
-
-  /** Native session windows (30-min gap) — cross-validated against the
-    * manual gaps-and-islands formulation in the oracle (session end =
-    * last event + gap, Spark's `session_window` semantics).
-    */
-  private val qSessionWindow: Q = (s, dir) =>
-    Tables.events(s, dir)
-      .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("w"))
-      .agg(count(lit(1)).as("n_events"), Exact.sumExact(col("value")).as("total_value"))
-      .select(
-        col("user_id"),
-        unix_millis(col("w.start")).as("start_ms"),
-        unix_millis(col("w.end")).as("end_ms"),
-        col("n_events"), col("total_value"))
-      .orderBy("user_id", "start_ms")
-
-  private val sessionWindowSql =
-    """WITH e AS (
-      |  SELECT user_id, event_id, epoch_ms(ts) AS tms, value FROM events
-      |), flagged AS (
-      |  SELECT user_id, tms, value,
-      |    CASE WHEN tms - lag(tms) OVER (PARTITION BY user_id ORDER BY tms, event_id) >= 1800000
-      |           OR lag(tms) OVER (PARTITION BY user_id ORDER BY tms, event_id) IS NULL
-      |         THEN 1 ELSE 0 END AS new_s
-      |  FROM e
-      |), sess AS (
-      |  SELECT user_id, tms, value,
-      |    SUM(new_s) OVER (PARTITION BY user_id ORDER BY tms
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-      |  FROM flagged
-      |)
-      |SELECT user_id, CAST(MIN(tms) AS BIGINT) AS start_ms,
-      |  CAST(MAX(tms) + 1800000 AS BIGINT) AS end_ms,
-      |  COUNT(*) AS n_events,
-      |  CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS total_value
-      |FROM sess GROUP BY user_id, sid ORDER BY user_id, start_ms""".stripMargin
-
-  /** Merge-on-read upsert resolution (etl.MergeOnRead): base snapshot of
-    * orders + an update batch (every 10th key re-priced) + a tombstone batch
-    * (every 97th key deleted), resolved to the latest visible state at read
-    * time — the scale-shape of the reference's update-by-key.
-    */
-  private val qUpsertLatest: Q = (s, dir) => {
-    val base = Tables.orders(s, dir)
-      .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-      .withColumn("version", lit(0L)).withColumn("op", lit("u"))
-    val updates = Tables.orders(s, dir)
-      .filter(col("o_orderkey") % 10 === 0)
-      .select(col("o_orderkey"), col("o_custkey"),
-        (col("o_totalprice") * lit(2.0)).as("o_totalprice"))
-      .withColumn("version", lit(1L)).withColumn("op", lit("u"))
-    val deletes = Tables.orders(s, dir)
-      .filter(col("o_orderkey") % 97 === 0)
-      .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-      .withColumn("version", lit(2L)).withColumn("op", lit("d"))
-    graft.etl.MergeOnRead.latest(
-      base.unionByName(updates).unionByName(deletes),
-      keys = Seq("o_orderkey"), version = "version")
-      .orderBy("o_orderkey")
-  }
-
-  private val upsertLatestSql =
-    """WITH all_rows AS (
-      |  SELECT o_orderkey, o_custkey, o_totalprice, 0 AS version, 'u' AS op
-      |  FROM orders
-      |  UNION ALL
-      |  SELECT o_orderkey, o_custkey, o_totalprice * 2, 1, 'u'
-      |  FROM orders WHERE o_orderkey % 10 = 0
-      |  UNION ALL
-      |  SELECT o_orderkey, o_custkey, o_totalprice, 2, 'd'
-      |  FROM orders WHERE o_orderkey % 97 = 0
-      |), r AS (
-      |  SELECT *, row_number() OVER (PARTITION BY o_orderkey ORDER BY version DESC) AS rn
-      |  FROM all_rows
-      |)
-      |SELECT o_orderkey, o_custkey, o_totalprice
-      |FROM r WHERE rn = 1 AND op <> 'd' ORDER BY o_orderkey""".stripMargin
-
-  /** The streaming path as a declared, oracle-checked query: drain the
-    * events source with Trigger.AvailableNow (the reference's
-    * process-pending-then-stop loop, sqoop_etl.py:77-83) into parquet, then
-    * read the sink back. Append mode + 30-min watermark emit exactly the
-    * hour windows whose END is at or before `max(ts) - 30min` — the oracle
-    * applies the same cutoff to the batch aggregation, so window emission
-    * semantics (not just the arithmetic) are hash-checked.
-    */
-  private val qEventsHourlyStream: Q = (s, dir) => {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-stream-q").toString
-    withDrainParallelism(s, s"$dir/events.parquet") {
-      graft.streaming.EventsStream.runAvailableNow(s, dir, s"$tmp/out", s"$tmp/ck")
-    }
-    s.read.parquet(s"$tmp/out")
-      .select(col("hour"), col("event_type"), col("n"), col("total_value"))
-      .orderBy("hour", "event_type")
-  }
-
-  private val eventsHourlyStreamSql =
-    """WITH wm AS (SELECT max(ts) - INTERVAL 30 MINUTE AS w FROM events)
-      |SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour, event_type,
-      |  COUNT(*) AS n,
-      |  CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS total_value
-      |FROM events, wm
-      |WHERE date_trunc('hour', ts) + INTERVAL 1 HOUR <= w
-      |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
-
-  /** Streaming windowed quantiles (streaming.EventsStream
-    * .hourlyQuantilesDrain): per-hour p50/p95 estimated by the
-    * percentile sketch inside the watermarked window state (exact
-    * percentiles would buffer every value), drained AvailableNow, then
-    * each estimate validated against the batch data by RANK ERROR in
-    * exact integer form — |100·rank(est) − φ·100·n| ≤ n + 200, the
-    * sketch's ≤ n/accuracy guarantee plus definitional slack. The oracle
-    * emits the exact per-hour counts and expects every accuracy boolean
-    * TRUE.
-    */
-  private val qStreamQuantiles: Q = (s, dir) => {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-squant").toString
-    withDrainParallelism(s, s"$dir/events.parquet") {
-      graft.streaming.EventsStream.hourlyQuantilesDrain(s, dir, s"$tmp/out",
-        s"$tmp/ck")
-    }
-    val est = s.read.parquet(s"$tmp/out")
-    val ev = Tables.events(s, dir)
-    val closed = ev.crossJoin(broadcast(ev.agg(
-        (max(col("ts")).cast("long") - lit(1800L)).as("wm"))))
-      .filter(unix_seconds(date_trunc("hour", col("ts"))) + lit(3600L) <=
-        col("wm"))
-      .select(date_trunc("hour", col("ts")).as("hour"), col("value"))
-    closed.join(broadcast(est), Seq("hour"))
-      .groupBy(col("hour"), col("n_rows"))
-      .agg(count(lit(1)).as("n"),
-        sum(when(col("value") <= col("p50"), 1L).otherwise(0L)).as("r50"),
-        sum(when(col("value") <= col("p95"), 1L).otherwise(0L)).as("r95"))
-      .select(col("hour"), col("n"),
-        (col("n") === col("n_rows")).as("rows_match"),
-        (abs(col("r50") * 100 - col("n") * 50) <= col("n") + 200)
-          .as("p50_ok"),
-        (abs(col("r95") * 100 - col("n") * 95) <= col("n") + 200)
-          .as("p95_ok"))
-      .orderBy("hour")
-  }
-
-  private val streamQuantilesSql =
-    """WITH wm AS (SELECT max(ts) - INTERVAL 30 MINUTE AS w FROM events)
-      |SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour,
-      |  COUNT(*) AS n, TRUE AS rows_match, TRUE AS p50_ok, TRUE AS p95_ok
-      |FROM events, wm
-      |WHERE date_trunc('hour', ts) + INTERVAL 1 HOUR <= w
-      |GROUP BY 1 ORDER BY 1""".stripMargin
-
-  /** Streaming crawl-archive ingest (streaming.DocsStream.warcIngestDrain):
-    * WARC archives land in WAVES — wave 1 is drained, wave 2 arrives, the
-    * SAME checkpoint drains again — and the checkpointed file tracking
-    * must ingest every archive exactly once (no re-parse of wave 1, no
-    * miss of wave 2). The final corpus aggregates per source with content
-    * checksums; the oracle is the full-table aggregate (identical to the
-    * batch WARC round-trip), so any duplicate or dropped record breaks
-    * the hash.
-    */
-  private val qStreamWarcIngest: Q = (s, dir) => {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-swarc").toString
-    val docs = Tables.documents(s, dir)
-    graft.sources.Warc.write(docs.filter(col("doc_id") % 2 === 0),
-      s"$tmp/in/w1", numFiles = 3)
-    graft.streaming.DocsStream.warcIngestDrain(s, s"$tmp/in/*",
-      s"$tmp/out", s"$tmp/ck")
-    graft.sources.Warc.write(docs.filter(col("doc_id") % 2 === 1),
-      s"$tmp/in/w2", numFiles = 3)
-    graft.streaming.DocsStream.warcIngestDrain(s, s"$tmp/in/*",
-      s"$tmp/out", s"$tmp/ck")
-    s.read.parquet(s"$tmp/out")
-      .select(col("source"), col("doc_id"),
-        length(col("text")).cast("long").as("chars"),
-        rolling_hash(col("text")).as("fp"),
-        rolling_hash(col("lang")).as("lfp"))
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n"), sum(col("chars")).as("chars"),
-        expr("bit_xor(doc_id)").as("id_xor"),
-        expr("bit_xor(fp)").as("text_xor"),
-        expr("bit_xor(lfp)").as("lang_xor"))
-      .orderBy("source")
-  }
-
-  /** Streaming crawl CURATION (streaming.DocsStream.crawlCurateDrain):
-    * landing WARC archives are parsed AND Gopher-rule-gated inside one
-    * stateless drain — rejects never reach the sink — and the surviving
-    * corpus aggregates per language with content checksums. The oracle
-    * applies the same integer rule bundle to the full table, so a doc
-    * wrongly passed, wrongly dropped, or corrupted in the parse breaks
-    * the hash. The online half of the v4 release flow's gate.
-    */
-  private val qStreamCrawlCurate: Q = (s, dir) => {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-scurate").toString
-    graft.sources.Warc.write(Tables.documents(s, dir), s"$tmp/in/w1",
-      numFiles = 6)
-    graft.streaming.DocsStream.crawlCurateDrain(s, s"$tmp/in/*",
-      s"$tmp/out", s"$tmp/ck")
-    s.read.parquet(s"$tmp/out")
-      .select(col("lang"), col("doc_id"),
-        size(split(col("text"), " ")).cast("long").as("n_toks"),
-        rolling_hash(col("text")).as("fp"))
-      .groupBy("lang")
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_toks")).as("n_tokens"),
-        expr("bit_xor(doc_id)").as("id_xor"),
-        expr("bit_xor(fp)").as("text_xor"))
-      .orderBy("lang")
-  }
-
-  private def streamCrawlCurateSql: String = {
-    import graft.quality.RuleFilters._
-    val stop = graft.functions.TextFunctions.EnglishStopwords
-      .map(w => s"'$w'").mkString("[", ", ", "]")
-    s"""WITH t AS (
-       |  SELECT doc_id, lang, text,
-       |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_words,
-       |    CAST(length(text) - (len(string_split(text, ' ')) - 1) AS BIGINT)
-       |      AS word_chars,
-       |    CAST(len(list_filter(string_split(text, ' '),
-       |      w -> regexp_matches(w, '[a-zA-Z]'))) AS BIGINT) AS alpha_words,
-       |    CAST((length(text) - length(replace(text, '#', ''))) +
-       |      (length(text) - length(replace(text, '...', ''))) // 3
-       |      AS BIGINT) AS symbols,
-       |    CAST(len(list_filter(string_split(text, ' '),
-       |      w -> list_contains($stop, w))) AS BIGINT) AS stop_hits
-       |  FROM documents),
-       |g AS (
-       |  SELECT doc_id, lang, text, n_words FROM t
-       |  WHERE n_words >= $MinWords AND n_words <= $MaxWords
-       |    AND word_chars >= $MinMeanWordLen * n_words
-       |    AND word_chars <= $MaxMeanWordLen * n_words
-       |    AND symbols * 10 < n_words
-       |    AND alpha_words * 5 >= n_words * 4
-       |    AND stop_hits >= $MinStopwordHits)
-       |SELECT lang, COUNT(*) AS n_docs,
-       |  CAST(SUM(n_words) AS BIGINT) AS n_tokens,
-       |  CAST(bit_xor(doc_id) AS BIGINT) AS id_xor,
-       |  CAST(bit_xor(${u64ToSigned(rollingFoldSql("text"))}) AS BIGINT)
-       |    AS text_xor
-       |FROM g GROUP BY lang ORDER BY lang""".stripMargin
-  }
-
-  /** Streaming approximate distinct (streaming.EventsStream
-    * .hourlyDistinctDrain): per-hour distinct users estimated by an HLL
-    * sketch aggregate inside the watermarked window state (exact streaming
-    * distinct would hold every key — Spark refuses it), drained
-    * AvailableNow, then joined against the batch-exact distinct for the
-    * CLOSED hours. Emits the exact count plus accuracy booleans computed
-    * in exact integer form (|err|·20 ≤ exact+20, i.e. within 5%+1) — the
-    * estimate is deterministic, so the booleans are oracle-comparable data.
-    */
-  private val qStreamDistinct: Q = (s, dir) => {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-sdist").toString
-    withDrainParallelism(s, s"$dir/events.parquet") {
-      graft.streaming.EventsStream.hourlyDistinctDrain(s, dir, s"$tmp/out",
-        s"$tmp/ck")
-    }
-    val est = s.read.parquet(s"$tmp/out")
-      .select(col("hour"), col("est").cast("long").as("est"), col("n_rows"))
-    val ev = Tables.events(s, dir)
-    val closed = ev.crossJoin(broadcast(ev.agg(
-        (max(col("ts")).cast("long") - lit(1800L)).as("wm"))))
-      .filter(unix_seconds(date_trunc("hour", col("ts"))) + lit(3600L) <=
-        col("wm"))
-    val exact = closed.groupBy(date_trunc("hour", col("ts")).as("hour"))
-      .agg(countDistinct(col("user_id")).as("exact"),
-        count(lit(1)).as("n_rows_b"))
-    est.join(exact, Seq("hour"))
-      .select(col("hour"), col("exact"), col("n_rows"),
-        (col("n_rows") === col("n_rows_b")).as("rows_match"),
-        (abs(col("est") - col("exact")) * lit(20L) <=
-          col("exact") + lit(20L)).as("est_ok"))
-      .orderBy("hour")
-  }
-
-  private val streamDistinctSql =
-    """WITH wm AS (SELECT max(ts) - INTERVAL 30 MINUTE AS w FROM events)
-      |SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour,
-      |  CAST(COUNT(DISTINCT user_id) AS BIGINT) AS exact,
-      |  COUNT(*) AS n_rows, TRUE AS rows_match, TRUE AS est_ok
-      |FROM events, wm
-      |WHERE date_trunc('hour', ts) + INTERVAL 1 HOUR <= w
-      |GROUP BY 1 ORDER BY 1""".stripMargin
-
-  /** Stream-static enrichment join, end-to-end (streaming.EventsStream
-    * .enrich): events stream left-joined per micro-batch against a static
-    * customer dim (restricted to even keys so the missing-key path is
-    * exercised), drained with AvailableNow to parquet, then batch-
-    * aggregated per segment. The oracle runs the same left join over the
-    * full table — the hash matches only if every streamed row was enriched
-    * exactly once with the right dim row (or kept with a null segment).
-    */
-  private val qStreamEnrich: Q = (s, dir) => {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-senrich").toString
-    val ev = graft.streaming.EventsStream.readEvents(s, dir)
-    val dim = Tables.customer(s, dir).filter(col("c_custkey") % 2 === 0)
-      .select(col("c_custkey").as("user_id"), col("c_mktsegment"))
-    val enriched = graft.streaming.EventsStream.enrich(ev, dim)
-      .select(col("event_id"), col("event_type"), col("value"), col("c_mktsegment"))
-    val q = enriched.writeStream
-      .outputMode("append").format("parquet")
-      .option("path", s"$tmp/out").option("checkpointLocation", s"$tmp/ck")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.read.parquet(s"$tmp/out")
-      .groupBy(coalesce(col("c_mktsegment"), lit("(none)")).as("segment"))
-      .agg(count(lit(1)).as("n"), Exact.sumExact(col("value")).as("total_value"))
-      .orderBy("segment")
-  }
-
-  private val streamEnrichSql =
-    """SELECT COALESCE(c_mktsegment, '(none)') AS segment, COUNT(*) AS n,
-      |  CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS total_value
-      |FROM events LEFT JOIN customer ON user_id = c_custkey AND c_custkey % 2 = 0
-      |GROUP BY 1 ORDER BY 1""".stripMargin
-
-  /** CHAINED stateful streaming: exact dedup feeding a watermarked window
-    * aggregate in ONE streaming query (two stateful operators back to
-    * back — dropDuplicatesWithinWatermark then the hourly window). The
-    * doubled input must collapse to exactly-once BEFORE aggregation, and
-    * only watermark-closed windows may be emitted; the oracle is the plain
-    * closed-window aggregate of the ORIGINAL table, so both state
-    * machines' semantics are hash-checked together.
-    */
-  private def streamDedupHourlyBody(s: SparkSession, dir: String) = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-sdh").toString
-    val ev = Tables.events(s, dir)
-    ev.unionByName(ev).coalesce(1).write.mode("overwrite").parquet(s"$tmp/in")
-    val schema = s.read.parquet(s"$tmp/in").schema
-    withDrainParallelism(s, s"$tmp/in") {
-      val agg = graft.streaming.EventsStream.hourlyAggOn(
-        graft.streaming.EventsStream.dedupStream(
-          s.readStream.schema(schema).parquet(s"$tmp/in")))
-      val q = agg.writeStream
-        .outputMode("append").format("parquet")
-        .option("path", s"$tmp/out").option("checkpointLocation", s"$tmp/ck")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.read.parquet(s"$tmp/out")
-      .select(col("hour"), col("event_type"), col("n"), col("total_value"))
-      .orderBy("hour", "event_type")
-  }
-
-  private val qStreamDedupHourly: Q = (s, dir) => streamDedupHourlyBody(s, dir)
-
-  /** Scale-adaptive parallelism for a streaming drain (r12, guide §2).
-    * The state-store partition count is `spark.sql.shuffle.partitions` at
-    * stream start, and a fixed cpu-count value is pure per-partition fixed
-    * cost on small inputs: every stateful drain in the r11 driver bench ran
-    * FASTER at 8 cores than 32 (scaling ratios 0.48–0.93), and the r12
-    * probe measured q_stream_attribution_outer at 9.8 s with 32 state
-    * partitions vs 3.0 s with 1, q_stream_interp 17.7 s vs 4.3 s —
-    * identical results (per-key state machines are partition-count
-    * independent; the oracle gates every drain). So each drain derives its
-    * partition count from its INPUT BYTES — one partition per
-    * `spark.graft.stream.targetPartitionBytes` (default 64 MiB, the guide
-    * §2.2 sizing), floor 1 — capped by
-    * `spark.graft.stream.maxStatePartitions` (default 4 × the cluster's
-    * defaultParallelism, min 64). At 100 TB the CAP binds, giving the
-    * usual cores-proportional state layout; at bench SF the BYTES bind,
-    * removing the fixed cost. Both knobs are session confs, not constants.
-    * The previous shuffle-partition setting is restored after the drain,
-    * so the batch plans around it (and their bench fingerprints) are
-    * untouched.
-    */
-  private def drainInputBytes(s: SparkSession, paths: Seq[String]): Long =
-    paths.map { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(hp)) fs.getContentSummary(hp).getLength else 0L
-    }.sum
-
-  private def drainPartitionsFor(s: SparkSession, inputBytes: Long): Int = {
-    val target = s.conf.get("spark.graft.stream.targetPartitionBytes",
-      (64L << 20).toString).toLong
-    val cap = s.conf.get("spark.graft.stream.maxStatePartitions",
-      math.max(64, s.sparkContext.defaultParallelism * 4).toString).toInt
-    math.max(1, math.min(cap.toLong,
-      (inputBytes + target - 1) / math.max(1L, target)).toInt)
-  }
-
-  private def withShufflePartitions[T](s: SparkSession, n: Int)(f: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, n.toString)
-    try f
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None    => s.conf.unset(key)
-    }
-  }
-
-  /** Run drain body `f` with shuffle/state partitions sized from the bytes
-    * under `inputPaths` (see [[drainPartitionsFor]]).
-    */
-  private def withDrainParallelism[T](s: SparkSession, inputPaths: String*)(
-      f: => T): T =
-    withShufflePartitions(s,
-      drainPartitionsFor(s, drainInputBytes(s, inputPaths.toSeq)))(f)
-
-  /** State-store-backend scope: run a drain with the named provider, then
-    * restore the session's previous provider. The provider is a session
-    * conf read at stream start, so the scope is the per-query discipline
-    * (Verify/Bench run queries sequentially on one session).
-    */
-  private def withStateProvider[T](s: SparkSession, clazz: String)(f: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, clazz)
-    try f
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None    => s.conf.unset(key)
-    }
-  }
-
-  private val RocksDbProvider =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
-  /** [[qStreamDedupHourly]] on the RocksDB state store — the backend the
-    * heavy drains need at 100×: the default HDFS-backed store keeps every
-    * key's state ON HEAP (dedup keys + open windows grow with traffic →
-    * executor OOM is the first thing to fall over), while RocksDB spills
-    * state to local SSD with bounded memory. SAME oracle as the default-
-    * backend twin: results must be identical — only the state machine's
-    * storage moves. Benched as a separate entry so the backends' costs are
-    * compared round-over-round.
-    */
-  private val qStreamDedupHourlyRocksdb: Q = (s, dir) =>
-    withStateProvider(s, RocksDbProvider)(streamDedupHourlyBody(s, dir))
-
-  /** Streaming exact dedup, end-to-end: the events table is doubled (every
-    * event delivered twice), written as a single-file stream source, drained
-    * through `dropDuplicatesWithinWatermark` with AvailableNow, and the sink
-    * is aggregated per type. The oracle aggregates the ORIGINAL table — the
-    * hash check passes only if the stream emitted each event exactly once.
-    */
-  private val qStreamDedup: Q = (s, dir) => {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-sdedup").toString
-    val ev = Tables.events(s, dir)
-    // one file → one micro-batch → no first-occurrence-late ambiguity
-    ev.unionByName(ev).coalesce(1).write.mode("overwrite").parquet(s"$tmp/in")
-    val schema = s.read.parquet(s"$tmp/in").schema
-    withDrainParallelism(s, s"$tmp/in") {
-      val deduped = graft.streaming.EventsStream.dedupStream(
-        s.readStream.schema(schema).parquet(s"$tmp/in"))
-      val q = deduped.writeStream
-        .outputMode("append").format("parquet")
-        .option("path", s"$tmp/out").option("checkpointLocation", s"$tmp/ck")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.read.parquet(s"$tmp/out")
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"), Exact.sumExact(col("value")).as("total_value"))
-      .orderBy("event_type")
-  }
-
-  private val streamDedupSql =
-    """SELECT event_type, COUNT(*) AS n,
-      |  CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS total_value
-      |FROM events GROUP BY 1 ORDER BY 1""".stripMargin
-
-  /** Ordered conversion funnel (view → click-after-view →
-    * purchase-after-that-click): each stage's entry time is the min event
-    * time after the previous stage's entry — chained per-user aggregations,
-    * all key-partitioned. One row per stage with surviving-user counts.
-    */
-  private val qFunnel: Q = (s, dir) => {
-    val ev = Tables.events(s, dir)
-      .select(col("user_id"), col("event_type"), unix_millis(col("ts")).as("tms"))
-    def stageAfter(prev: DataFrame, evType: String, outCol: String,
-        prevCol: String): DataFrame =
-      ev.filter(col("event_type") === evType)
-        .join(prev, Seq("user_id"))
-        .filter(col("tms") > col(prevCol))
-        .groupBy(col("user_id"), col(prevCol))
-        .agg(min(col("tms")).as(outCol))
-    val t1 = ev.filter(col("event_type") === "view")
-      .groupBy(col("user_id")).agg(min(col("tms")).as("t1"))
-    val t2 = stageAfter(t1, "click", "t2", "t1")
-    val t3 = stageAfter(t2.select("user_id", "t2"), "purchase", "t3", "t2")
-    t1.agg(count(lit(1)).as("n")).select(lit("1_view").as("stage"), col("n"))
-      .unionByName(t2.agg(count(lit(1)).as("n"))
-        .select(lit("2_click").as("stage"), col("n")))
-      .unionByName(t3.agg(count(lit(1)).as("n"))
-        .select(lit("3_purchase").as("stage"), col("n")))
-      .orderBy("stage")
-  }
-
-  private val funnelSql =
-    """WITH e AS (
-      |  SELECT user_id, event_type, epoch_ms(ts) AS tms FROM events
-      |), t1 AS (
-      |  SELECT user_id, MIN(tms) AS t1 FROM e WHERE event_type = 'view'
-      |  GROUP BY user_id
-      |), t2 AS (
-      |  SELECT e.user_id, MIN(e.tms) AS t2
-      |  FROM e JOIN t1 ON e.user_id = t1.user_id
-      |  WHERE e.event_type = 'click' AND e.tms > t1.t1
-      |  GROUP BY e.user_id
-      |), t3 AS (
-      |  SELECT e.user_id, MIN(e.tms) AS t3
-      |  FROM e JOIN t2 ON e.user_id = t2.user_id
-      |  WHERE e.event_type = 'purchase' AND e.tms > t2.t2
-      |  GROUP BY e.user_id
-      |)
-      |SELECT '1_view' AS stage, CAST((SELECT COUNT(*) FROM t1) AS BIGINT) AS n
-      |UNION ALL
-      |SELECT '2_click', CAST((SELECT COUNT(*) FROM t2) AS BIGINT)
-      |UNION ALL
-      |SELECT '3_purchase', CAST((SELECT COUNT(*) FROM t3) AS BIGINT)
-      |ORDER BY stage""".stripMargin
-
-  /** Cohort retention matrix: users grouped by first-activity day, counted
-    * per day-offset of later activity. Day numbers are epoch-ms integer
-    * division — exact on both engines.
-    */
-  private val qCohortRetention: Q = (s, dir) => {
-    val act = Tables.events(s, dir)
-      .select(col("user_id"),
-        (unix_millis(col("ts")) / lit(86400000L)).cast("long").as("day"))
-      .distinct()
-    val cohort = act.groupBy(col("user_id")).agg(min(col("day")).as("cohort_day"))
-    act.join(cohort, Seq("user_id"))
-      .groupBy(col("cohort_day"), (col("day") - col("cohort_day")).as("day_offset"))
-      .agg(countDistinct(col("user_id")).as("n_users"))
-      .orderBy("cohort_day", "day_offset")
-  }
-
-  private val cohortRetentionSql =
-    """WITH act AS (
-      |  SELECT DISTINCT user_id, epoch_ms(ts) // 86400000 AS day FROM events
-      |), cohort AS (
-      |  SELECT user_id, MIN(day) AS cohort_day FROM act GROUP BY user_id
-      |)
-      |SELECT cohort_day, day - cohort_day AS day_offset,
-      |  CAST(COUNT(DISTINCT act.user_id) AS BIGINT) AS n_users
-      |FROM act JOIN cohort ON act.user_id = cohort.user_id
-      |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
-
-  /** Per-user EWMA smoothing (α = 0.15) of event values — the sequential
-    * time-series fold that window functions can't express. Values quantize
-    * to ×10⁴ longs and every step is integer arithmetic with truncating
-    * division, so the inherently ORDER-DEPENDENT recurrence is still
-    * bit-reproducible: Spark's `aggregate` HOF over the (tms, event_id)-
-    * sorted series ≡ DuckDB's `list_reduce` over `list(... ORDER BY ...)`.
-    * Per-user series are bounded (a user's events fit one row — the same
-    * boundedness argument as session state); the heavy work stays in the
-    * per-user hash aggregation.
-    */
-  private val qEwma: Q = (s, dir) => {
-    val ev = Tables.events(s, dir)
-      .select(col("user_id"),
-        struct(unix_millis(col("ts")).as("tms"), col("event_id"),
-          (col("value").cast("decimal(18,4)") * lit(10000)).cast("long").as("v4"))
-          .as("e"))
-    ev.groupBy(col("user_id"))
-      .agg(expr("transform(array_sort(collect_list(e)), x -> x.v4)").as("xs"))
-      .select(col("user_id"),
-        size(col("xs")).cast("long").as("n_events"),
-        expr("""aggregate(slice(xs, 2, size(xs) - 1), element_at(xs, 1),
-                 (acc, x) -> (150 * x + 850 * acc) div 1000)""").as("ewma_e4"))
-      .orderBy("user_id")
-  }
-
-  private val ewmaSql =
-    """WITH e AS (
-      |  SELECT user_id, epoch_ms(ts) AS tms, event_id,
-      |    CAST(CAST(value AS DECIMAL(18,4)) * 10000 AS BIGINT) AS v4
-      |  FROM events
-      |), s AS (
-      |  SELECT user_id, list(v4 ORDER BY tms, event_id) AS xs
-      |  FROM e GROUP BY user_id
-      |)
-      |SELECT user_id, CAST(len(xs) AS BIGINT) AS n_events,
-      |  CAST(list_reduce(xs, (acc, x) -> (150 * x + 850 * acc) // 1000)
-      |    AS BIGINT) AS ewma_e4
-      |FROM s ORDER BY user_id""".stripMargin
-
-  /** Click attribution, batch twin of the stream-stream interval join
-    * (`EventsStream.clickAttribution`): each purchase matched to the same
-    * user's clicks in the preceding 30 minutes THROUGH operators.RangeJoin —
-    * the band-bucketed shuffled hash join, not a broadcast nested loop.
-    * Oracle is the naive BETWEEN theta join at µs precision.
-    */
-  private val qClickAttribution: Q = (s, dir) => {
-    val ev = Tables.events(s, dir)
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"), col("user_id"),
-        col("ts").as("p_ts"))
-    val clicks = ev.filter(col("event_type") === "click")
-      .select(col("user_id"), col("ts").as("c_ts"))
-    operators.RangeJoin(purchases, clicks, keys = Seq("user_id"),
-        leftTime = "p_ts", rightTime = "c_ts",
-        lowerSec = -1800L, upperSec = 0L)
-      .groupBy(col("purchase_id"))
-      .agg(count(lit(1)).as("n_clicks"),
-        max(unix_micros(col("c_ts"))).as("last_click_us"))
-      .orderBy("purchase_id")
-  }
-
-  private val clickAttributionSql =
-    """WITH p AS (
-      |  SELECT event_id AS purchase_id, user_id, epoch_ns(ts) // 1000 AS pus
-      |  FROM events WHERE event_type = 'purchase'
-      |), c AS (
-      |  SELECT user_id, epoch_ns(ts) // 1000 AS cus
-      |  FROM events WHERE event_type = 'click'
-      |)
-      |SELECT purchase_id, COUNT(*) AS n_clicks,
-      |  CAST(MAX(cus) AS BIGINT) AS last_click_us
-      |FROM p JOIN c ON p.user_id = c.user_id
-      |  AND cus >= pus - 1800000000 AND cus < pus
-      |GROUP BY purchase_id ORDER BY purchase_id""".stripMargin
-
-  /** Stream-stream interval join end-to-end (EventsStream.clickAttribution),
-    * through a real AvailableNow drain with both sides watermarked: each
-    * purchase joined to the same user's clicks in the preceding 30 minutes.
-    * The source is one file → one micro-batch, so inner-join emission is
-    * complete (no cross-batch late-arrival drops) and the oracle is the
-    * full interval join — the streaming twin of ⊕ q_click_attribution,
-    * with the stream's own inclusive upper bound (click_ts <= purchase_ts).
-    */
-  private val qStreamAttribution: Q = (s, dir) => {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-sattr").toString
-    Tables.events(s, dir).coalesce(1).write.mode("overwrite").parquet(s"$tmp/in")
-    val schema = s.read.parquet(s"$tmp/in").schema
-    withDrainParallelism(s, s"$tmp/in") {
-      val src = s.readStream.schema(schema).parquet(s"$tmp/in")
-      val joined = graft.streaming.EventsStream.clickAttribution(
-        src.filter(col("event_type") === "click"),
-        src.filter(col("event_type") === "purchase"))
-      val q = joined.writeStream
-        .outputMode("append").format("parquet")
-        .option("path", s"$tmp/out").option("checkpointLocation", s"$tmp/ck")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.read.parquet(s"$tmp/out")
-      .groupBy(col("purchase_id"))
-      .agg(count(lit(1)).as("n_clicks"),
-        max(unix_micros(col("click_ts"))).as("last_click_us"))
-      .orderBy("purchase_id")
-  }
-
-  private val streamAttributionSql =
-    """WITH p AS (
-      |  SELECT event_id AS purchase_id, user_id, epoch_ns(ts) // 1000 AS pus
-      |  FROM events WHERE event_type = 'purchase'
-      |), c AS (
-      |  SELECT user_id, epoch_ns(ts) // 1000 AS cus
-      |  FROM events WHERE event_type = 'click'
-      |)
-      |SELECT purchase_id, COUNT(*) AS n_clicks,
-      |  CAST(MAX(cus) AS BIGINT) AS last_click_us
-      |FROM p JOIN c ON p.user_id = c.user_id
-      |  AND cus >= pus - 1800000000 AND cus <= pus
-      |GROUP BY purchase_id ORDER BY purchase_id""".stripMargin
-
-  /** LEFT-OUTER stream-stream interval join end-to-end
-    * (EventsStream.clickAttributionOuter): matched purchases emit their
-    * click pairs; purchases with NO qualifying click emit null-extended
-    * only once the watermark passes their purchase time (no earlier click
-    * can still arrive). The oracle replays BOTH rules: the full interval
-    * join, plus zero-click rows for unmatched purchases strictly below the
-    * final watermark min(max click, max purchase) − 30 min — unmatched
-    * purchases inside the horizon must be ABSENT. Emission timing is the
-    * thing under test, so the hash fails if Spark's outer-eviction
-    * semantics differ from the declared rule (calibrated empirically,
-    * same device as q_stream_sessions).
-    */
-  private def streamAttributionOuterBody(s: SparkSession, dir: String) = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-souter").toString
-    Tables.events(s, dir).coalesce(1).write.mode("overwrite").parquet(s"$tmp/in")
-    val schema = s.read.parquet(s"$tmp/in").schema
-    withDrainParallelism(s, s"$tmp/in") {
-      val src = s.readStream.schema(schema).parquet(s"$tmp/in")
-      val joined = graft.streaming.EventsStream.clickAttributionOuter(
-        src.filter(col("event_type") === "click"),
-        src.filter(col("event_type") === "purchase"))
-      val q = joined.writeStream
-        .outputMode("append").format("parquet")
-        .option("path", s"$tmp/out").option("checkpointLocation", s"$tmp/ck")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.read.parquet(s"$tmp/out")
-      .groupBy(col("purchase_id"))
-      .agg(sum(when(col("click_id").isNotNull, 1L).otherwise(0L)).as("n_clicks"))
-      .orderBy("purchase_id")
-  }
-
-  private val qStreamAttributionOuter: Q = (s, dir) =>
-    streamAttributionOuterBody(s, dir)
-
-  /** [[qStreamAttributionOuter]] on the RocksDB state store (see
-    * [[qStreamDedupHourlyRocksdb]] for why): the outer interval join is the
-    * heaviest state machine in the catalog — both sides buffered up to the
-    * watermark horizon — so it's the first drain to need off-heap state at
-    * 100×. Same oracle; identical results required.
-    */
-  private val qStreamAttributionOuterRocksdb: Q = (s, dir) =>
-    withStateProvider(s, RocksDbProvider)(streamAttributionOuterBody(s, dir))
-
-  private val streamAttributionOuterSql =
-    """WITH p AS (
-      |  SELECT event_id AS purchase_id, user_id, epoch_ns(ts) // 1000 AS pus
-      |  FROM events WHERE event_type = 'purchase'
-      |), c AS (
-      |  SELECT user_id, epoch_ns(ts) // 1000 AS cus
-      |  FROM events WHERE event_type = 'click'
-      |), wm AS (
-      |  SELECT least((SELECT max(cus) FROM c), (SELECT max(pus) FROM p))
-      |    - 1800000000 AS w
-      |), m AS (
-      |  SELECT purchase_id, CAST(COUNT(*) AS BIGINT) AS n_clicks
-      |  FROM p JOIN c ON p.user_id = c.user_id
-      |    AND cus >= pus - 1800000000 AND cus <= pus
-      |  GROUP BY purchase_id
-      |)
-      |SELECT purchase_id, n_clicks FROM m
-      |UNION ALL
-      |SELECT purchase_id, CAST(0 AS BIGINT) AS n_clicks
-      |FROM p CROSS JOIN wm
-      |WHERE purchase_id NOT IN (SELECT purchase_id FROM m) AND pus < w
-      |ORDER BY purchase_id""".stripMargin
-
-  /** Change feed (etl.MergeOnRead.changesSince) — the CDC/CDF primitive:
-    * events become a versioned upsert/tombstone log (every 13th event a
-    * delete), and the feed returns the LATEST visible state of every key
-    * touched in the last two hours of the log — `change_op` marks deletes.
-    * The oracle replays the cursor arithmetic and latest-wins resolution
-    * directly; cost shape is one key-shuffle over touched keys, never a
-    * two-snapshot diff.
-    */
-  private val qChangeFeed: Q = (s, dir) => {
-    val ev = Tables.events(s, dir)
-      .select(col("event_id"), unix_millis(col("ts")).as("tms"),
-        col("user_id"), col("value"))
-    val all = ev.select(col("user_id"), col("tms"), col("value"),
-      (col("tms") * 1000000L + col("event_id")).as("version"),
-      when(col("event_id") % 13 === 5, lit(graft.etl.MergeOnRead.DeleteOp))
-        .otherwise(lit(graft.etl.MergeOnRead.UpsertOp)).as("op"))
-    val maxTms = ev.agg(max("tms")).head().getLong(0)
-    val since = (maxTms - 7200000L) * 1000000L
-    graft.etl.MergeOnRead.changesSince(all, since, Seq("user_id"), "version")
-      .orderBy("user_id")
-  }
-
-  private val changeFeedSql =
-    """WITH e AS (
-      |  SELECT event_id, epoch_ms(ts) AS tms, user_id, value FROM events
-      |), v AS (
-      |  SELECT user_id, tms, value, tms * 1000000 + event_id AS version,
-      |    CASE WHEN event_id % 13 = 5 THEN 'd' ELSE 'u' END AS op
-      |  FROM e
-      |), mx AS (
-      |  SELECT (max(tms) - 7200000) * 1000000 AS since FROM e
-      |), touched AS (
-      |  SELECT DISTINCT user_id FROM v, mx WHERE version > since
-      |), r AS (
-      |  SELECT v.user_id, v.tms, v.value, v.op,
-      |    row_number() OVER (PARTITION BY v.user_id ORDER BY v.version DESC) AS rn
-      |  FROM v JOIN touched USING (user_id))
-      |SELECT user_id, tms, value,
-      |  CASE WHEN op = 'd' THEN 'd' ELSE 'u' END AS change_op
-      |FROM r WHERE rn = 1 ORDER BY user_id""".stripMargin
-
-  /** Time travel (etl.MergeOnRead.asOf): the user-state table AS OF a
-    * version cursor two hours before the end of the log — latest-wins with
-    * tombstones applied, over only the changes at or below the cursor.
-    * Aggregated per user-id bucket so the result is compact; the oracle
-    * replays the cursor filter and resolution.
-    */
-  private val qTimeTravel: Q = (s, dir) => {
-    val ev = Tables.events(s, dir)
-      .select(col("event_id"), unix_millis(col("ts")).as("tms"),
-        col("user_id"), col("value"))
-    val all = ev.select(col("user_id"), col("tms"), col("value"),
-      (col("tms") * 1000000L + col("event_id")).as("version"),
-      when(col("event_id") % 13 === 5, lit(graft.etl.MergeOnRead.DeleteOp))
-        .otherwise(lit(graft.etl.MergeOnRead.UpsertOp)).as("op"))
-    val maxTms = ev.agg(max("tms")).head().getLong(0)
-    val cursor = (maxTms - 7200000L) * 1000000L
-    graft.etl.MergeOnRead.asOf(all, cursor, Seq("user_id"), "version")
-      .groupBy((col("user_id") % 10).as("user_bucket"))
-      .agg(count(lit(1)).as("n_users"),
-        Exact.sumExact(col("value")).as("state_value"),
-        max(col("tms")).as("latest_ms"))
-      .orderBy("user_bucket")
-  }
-
-  private val timeTravelSql =
-    """WITH e AS (
-      |  SELECT event_id, epoch_ms(ts) AS tms, user_id, value FROM events
-      |), v AS (
-      |  SELECT user_id, tms, value, tms * 1000000 + event_id AS version,
-      |    CASE WHEN event_id % 13 = 5 THEN 'd' ELSE 'u' END AS op
-      |  FROM e
-      |), mx AS (
-      |  SELECT (max(tms) - 7200000) * 1000000 AS cursor FROM e
-      |), r AS (
-      |  SELECT v.user_id, v.tms, v.value, v.op,
-      |    row_number() OVER (PARTITION BY v.user_id ORDER BY v.version DESC) AS rn
-      |  FROM v CROSS JOIN mx WHERE v.version <= cursor)
-      |SELECT user_id % 10 AS user_bucket, CAST(COUNT(*) AS BIGINT) AS n_users,
-      |  CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS state_value,
-      |  CAST(MAX(tms) AS BIGINT) AS latest_ms
-      |FROM r WHERE rn = 1 AND op <> 'd'
-      |GROUP BY 1 ORDER BY 1""".stripMargin
-
-  /** Streaming upsert end-to-end: events re-laid as a multi-file stream
-    * source, drained in ≥2 micro-batches (maxFilesPerTrigger=2) through
-    * foreachBatch into merge-on-read delta appends, then resolved with
-    * MergeOnRead.latest. The (ms×10⁶ + event_id) version makes the final
-    * state independent of batch boundaries/order, so the oracle is simply
-    * latest-event-per-user over the original table.
-    */
-  private val qStreamUpsert: Q = (s, dir) => {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-supsert").toString
-    val ev = Tables.events(s, dir)
-      .select(col("event_id"), col("ts"), col("user_id"), col("value"))
-    ev.repartition(4).write.mode("overwrite").parquet(s"$tmp/in")
-    val schema = s.read.parquet(s"$tmp/in").schema
-    withDrainParallelism(s, s"$tmp/in") {
-      graft.streaming.EventsStream.upsertStream(s, s"$tmp/in", schema,
-        s"$tmp/delta", s"$tmp/ck")
-    }
-    graft.etl.MergeOnRead.latest(
-        s.read.parquet(s"$tmp/delta"), keys = Seq("user_id"), version = "version")
-      .orderBy("user_id")
-  }
-
-  private val streamUpsertSql =
-    """SELECT user_id, tms, value FROM (
-      |  SELECT user_id, epoch_ms(ts) AS tms, value,
-      |    row_number() OVER (PARTITION BY user_id
-      |      ORDER BY epoch_ms(ts) DESC, event_id DESC) AS rn
-      |  FROM events) t
-      |WHERE rn = 1 ORDER BY user_id""".stripMargin
-
-  /** flatMapGroupsWithState sessionization, end-to-end through a real
-    * streaming drain: gap-closed sessions emit as they close inside the
-    * batch; the per-user tail session emits only when its event-time timeout
-    * (last + 30 min) falls strictly below the final watermark
-    * (max event time − 30 min). The oracle reproduces BOTH rules over the
-    * batch islands-and-gaps sessionization: every non-tail island, plus tail
-    * islands whose timeout the final watermark passed. Totals are exact ×10⁴
-    * fixed-point, so micro-batch boundaries can't perturb the hash.
-    */
-  private val qStreamSessions: Q = (s, dir) => {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-ssess").toString
-    withDrainParallelism(s, s"$dir/events.parquet") {
-      val q = graft.streaming.EventsStream.sessionizeClosed(s,
-          graft.streaming.EventsStream.readEvents(s, dir))
-        .writeStream
-        .outputMode("append").format("parquet")
-        .option("path", s"$tmp/out").option("checkpointLocation", s"$tmp/ck")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.read.parquet(s"$tmp/out")
-      .select(col("user_id"), col("start_ms"), col("end_ms"),
-        col("n_events"), col("total_e4"))
-      .orderBy("user_id", "start_ms")
-  }
-
-  /** Streaming TIMESERIES interpolation drain (the stateful twin of
-    * `q_timeseries_interp` — same spine, same arithmetic, SAME oracle SQL).
-    * A far-future sentinel row rides along so the final watermark passes
-    * every user's last point and the timeout emission rule (tail slices →
-    * null) fires inside the AvailableNow drain; the in-band rule
-    * (bracketed slices → linear interp) fires on point arrival. The
-    * sentinel must be a PURCHASE row on a reserved negative user id:
-    * Catalyst pushes the deterministic `event_type = 'purchase'` filter
-    * below the `EventTimeWatermark` node, so a non-purchase sentinel is
-    * filtered out before the watermark stats ever see it — and then the
-    * user holding the global max event time never times out (its timeout
-    * timestamp sits above max−delay, the final watermark). The reserved
-    * user's own emitted slices are dropped after the drain. Output matches
-    * the batch query row-for-row, bit-for-bit.
-    */
-  private val qStreamInterp: Q = (s, dir) => {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-sinterp").toString
-    val ev = Tables.events(s, dir)
-    val maxTms = ev.agg(max(unix_millis(col("ts")))).head().getLong(0)
-    val sentinel = s.range(1).select(
-      lit(-1L).as("event_id"),
-      timestamp_millis(lit(maxTms + 90L * 86400000L)).as("ts"),
-      lit(-1L).as("user_id"), lit("purchase").as("event_type"),
-      lit(0.0).as("value"), lit("{}").as("props"))
-    // time-range-ordered multi-batch arrival: the watermark advances
-    // between batches, so the gated buffer drains as the replay progresses
-    // — the bounded-state shape a large replay uses — instead of buffering
-    // whole series under a single cold batch. Each range is written as a
-    // SEPARATE sequential job: FileStreamSource orders files by
-    // modification time, and a single multi-file write gives near-tied
-    // mtimes, i.e. arbitrary arrival order — which a 30-minute watermark
-    // would turn into whole-file late drops. The sentinel rides the last
-    // range by construction (its ts is the maximum).
-    val all = ev.unionByName(sentinel)
-    val day = 86400000L
-    val cuts = Seq(1704067200000L + 8 * day, 1704067200000L + 16 * day,
-      1704067200000L + 24 * day)
-    val ranges = Seq(
-      unix_millis(col("ts")) < cuts(0),
-      unix_millis(col("ts")) >= cuts(0) && unix_millis(col("ts")) < cuts(1),
-      unix_millis(col("ts")) >= cuts(1) && unix_millis(col("ts")) < cuts(2),
-      unix_millis(col("ts")) >= cuts(2))
-    ranges.foreach { pred =>
-      all.filter(pred).coalesce(1).write.mode("append").parquet(s"$tmp/in")
-    }
-    val schema = s.read.parquet(s"$tmp/in").schema
-    withDrainParallelism(s, s"$tmp/in") {
-      val out = graft.streaming.EventsStream.interpolateStream(s,
-        s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-          .parquet(s"$tmp/in"),
-        t0 = 1704067200000L, nSlices = 31, stepMs = 86400000L)
-      val q = out.writeStream
-        .outputMode("append").format("parquet")
-        .option("path", s"$tmp/out").option("checkpointLocation", s"$tmp/ck")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.read.parquet(s"$tmp/out")
-      .filter(col("user_id") >= 0) // drop the flush sentinel's own slices
-      .select(col("user_id"), col("slice_ms"), col("v_interp"))
-      .orderBy("user_id", "slice_ms")
-  }
-
-  private val streamSessionsSql =
-    """WITH e AS (
-      |  SELECT user_id, event_id, epoch_ms(ts) AS tms, value FROM events
-      |), flagged AS (
-      |  SELECT user_id, event_id, tms, value,
-      |    CASE WHEN tms - lag(tms) OVER (PARTITION BY user_id ORDER BY tms, event_id) > 1800000
-      |           OR lag(tms) OVER (PARTITION BY user_id ORDER BY tms, event_id) IS NULL
-      |         THEN 1 ELSE 0 END AS new_s
-      |  FROM e
-      |), sess AS (
-      |  SELECT user_id, event_id, tms, value,
-      |    SUM(new_s) OVER (PARTITION BY user_id ORDER BY tms, event_id
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-      |  FROM flagged
-      |), agg AS (
-      |  SELECT user_id, sid,
-      |    CAST(MIN(tms) AS BIGINT) AS start_ms,
-      |    CAST(MAX(tms) AS BIGINT) AS end_ms,
-      |    COUNT(*) AS n_events,
-      |    CAST(SUM(CAST(value AS DECIMAL(18,4))) * 10000 AS BIGINT) AS total_e4,
-      |    sid = MAX(sid) OVER (PARTITION BY user_id) AS is_tail
-      |  FROM sess GROUP BY user_id, sid
-      |), wm AS (SELECT MAX(epoch_ms(ts)) - 1800000 AS w FROM events)
-      |SELECT user_id, start_ms, end_ms, n_events, total_e4
-      |FROM agg, wm
-      |WHERE NOT is_tail OR end_ms + 1800000 < w
-      |ORDER BY user_id, start_ms""".stripMargin
-
-  /** Streaming SCD2 through a real drain: closed dimension versions emit
-    * as the change that closes them arrives; the open tail version stays
-    * in state. The oracle is the batch SCD2 (q_scd2's SQL) restricted to
-    * closed versions — bit-identical interval bounds and version numbers.
-    */
-  private val qStreamScd2: Q = (s, dir) => {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-sscd2").toString
-    withDrainParallelism(s, s"$dir/events.parquet") {
-      val q = graft.streaming.EventsStream.scd2Stream(s,
-          graft.streaming.EventsStream.readEvents(s, dir))
-        .writeStream
-        .outputMode("append").format("parquet")
-        .option("path", s"$tmp/out").option("checkpointLocation", s"$tmp/ck")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.read.parquet(s"$tmp/out")
-      .select(col("user_id"), col("event_type"), col("version"),
-        col("from_us"), col("to_us"))
-      .orderBy("user_id", "version")
-  }
-
-  private val streamScd2Sql =
-    """WITH ev AS (
-      |  SELECT user_id, epoch_us(ts) AS tus, event_id, event_type FROM events
-      |), marked AS (
-      |  SELECT user_id, tus, event_id, event_type,
-      |    LAG(event_type) OVER (PARTITION BY user_id ORDER BY tus, event_id)
-      |      AS prev_type
-      |  FROM ev
-      |), changed AS (
-      |  SELECT user_id, tus, event_id, event_type FROM marked
-      |  WHERE prev_type IS NULL OR prev_type <> event_type
-      |), versioned AS (
-      |  SELECT user_id, event_type,
-      |    CAST(ROW_NUMBER() OVER w AS BIGINT) AS version,
-      |    CAST(tus AS BIGINT) AS from_us,
-      |    CAST(LEAD(tus) OVER w AS BIGINT) AS to_us
-      |  FROM changed
-      |  WINDOW w AS (PARTITION BY user_id ORDER BY tus, event_id)
-      |)
-      |SELECT user_id, event_type, version, from_us, to_us
-      |FROM versioned WHERE to_us IS NOT NULL
-      |ORDER BY user_id, version""".stripMargin
-
-  /** transformWithState running totals through a real drain (RocksDB state
-    * store — the API requires it; provider restored after the run). Each
-    * event carries its per-user sequence number and exact ×10⁴ running
-    * total; the oracle is the running-window SQL.
-    */
-  private val qStreamRunning: Q = (s, dir) => {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-srun").toString
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try withDrainParallelism(s, s"$dir/events.parquet") {
-      val q = graft.streaming.EventsStream.runningTotals(s,
-          graft.streaming.EventsStream.readEvents(s, dir))
-        .writeStream
-        .outputMode("append").format("parquet")
-        .option("path", s"$tmp/out").option("checkpointLocation", s"$tmp/ck")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
-    s.read.parquet(s"$tmp/out")
-      .select(col("event_id"), col("user_id"), col("seq"), col("running_e4"))
-      .orderBy("user_id", "seq")
-  }
-
-  private val streamRunningSql =
-    """SELECT event_id, user_id,
-      |  CAST(ROW_NUMBER() OVER w AS BIGINT) AS seq,
-      |  CAST(SUM(CAST(CAST(value AS DECIMAL(18,4)) * 10000 AS BIGINT))
-      |    OVER w AS BIGINT) AS running_e4
-      |FROM events
-      |WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id
-      |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-      |ORDER BY user_id, seq""".stripMargin
-
-  /** Fixed-size token-window chunking with overlap (context-window prep):
-    * windows of `ChunkW` tokens every `ChunkS` — the map-only explode
-    * shape (no shuffle; chunk fingerprints via md5 of the joined window).
-    * Window starts come from `sequence`, the slice stays inside codegen.
-    */
-  private val ChunkW = 64
-  private val ChunkS = 48
-
-  private val qChunking: Q = (s, dir) => {
-    Tables.documents(s, dir)
-      .withColumn("t", TextFunctions.tokens(col("text")))
-      .select(col("doc_id"), col("t"),
-        explode(sequence(lit(0), greatest(size(col("t")) - 1, lit(0)), lit(ChunkS)))
-          .as("start"))
-      .select(col("doc_id"), col("start").cast("long").as("start"),
-        size(slice(col("t"), col("start") + 1, lit(ChunkW))).cast("long")
-          .as("chunk_len"),
-        md5(array_join(slice(col("t"), col("start") + 1, lit(ChunkW)), " "))
-          .as("chunk_md5"))
-      .orderBy("doc_id", "start")
-  }
-
-  private val chunkingSql =
-    s"""WITH tok AS (
-       |  SELECT doc_id, string_split(text, ' ') AS t FROM documents
-       |), st AS (
-       |  SELECT doc_id, t, CAST(i AS BIGINT) AS start
-       |  FROM tok, UNNEST(range(0, GREATEST(len(t) - 1, 0) + 1, $ChunkS)) AS r(i)
-       |)
-       |SELECT doc_id, start,
-       |  CAST(len(list_slice(t, start + 1, start + $ChunkW)) AS BIGINT) AS chunk_len,
-       |  md5(array_to_string(list_slice(t, start + 1, start + $ChunkW), ' '))
-       |    AS chunk_md5
-       |FROM st ORDER BY doc_id, start""".stripMargin
-
-  /** GPT-style sequence packing ([[graft.pipeline.Packing]]): documents
-    * concatenated (with EOS) per hash shard and cut into fixed 64-token
-    * training windows; the query is the SPAN MANIFEST (one row per
-    * document × window it occupies). Unlike q_seq_packing (doc-level
-    * greedy grouping, no splitting), documents STRADDLE window boundaries
-    * here — zero padding except each shard's final window, the actual
-    * autoregressive-pretraining layout. The oracle replays the per-shard
-    * prefix sum and the closed-form window arithmetic — straddles, spans
-    * and offsets must match to the token.
-    */
-  private val PackL = 64
-  private val PackShards = 8
-
-  private val qPackManifest: Q = (s, dir) =>
-    graft.pipeline.Packing
-      .packManifest(Tables.documents(s, dir), PackL, PackShards)
-      .orderBy("shard", "window_id", "doc_id")
-
-  private val packManifestSql =
-    s"""WITH d AS (
-       |  SELECT doc_id,
-       |    CAST(len(string_split(text, ' ')) + 1 AS BIGINT) AS ntok,
-       |    CAST(doc_id % $PackShards AS BIGINT) AS shard
-       |  FROM documents),
-       |c AS (
-       |  SELECT doc_id, ntok, shard,
-       |    SUM(ntok) OVER (PARTITION BY shard ORDER BY doc_id) AS tend
-       |  FROM d),
-       |s AS (SELECT doc_id, ntok, shard, tend, tend - ntok AS tstart FROM c)
-       |SELECT shard, CAST(w AS BIGINT) AS window_id, doc_id,
-       |  CAST(GREATEST(w*$PackL - tstart, 0) AS BIGINT) AS tok_from,
-       |  CAST(LEAST(ntok, (w+1)*$PackL - tstart) AS BIGINT) AS tok_to,
-       |  CAST(GREATEST(tstart - w*$PackL, 0) AS BIGINT) AS win_offset
-       |FROM s, UNNEST(range(CAST(tstart // $PackL AS BIGINT),
-       |  CAST((tend - 1) // $PackL + 1 AS BIGINT))) AS r(w)
-       |ORDER BY shard, window_id, doc_id""".stripMargin
-
-  /** Incremental packing ([[graft.pipeline.Packing.packAppend]]): the
-    * corpus is split at doc_id 250 into "history" and an "arriving wave";
-    * the wave is packed continuing each shard's stream from history's
-    * running totals. Because wave ids follow history ids within every
-    * shard, the appended spans must be BIT-IDENTICAL to the same docs'
-    * spans in a from-scratch pack of everything — which is exactly what
-    * the oracle computes (full manifest filtered to the wave).
-    */
-  private val qPackAppend: Q = (s, dir) => {
-    val all = Tables.documents(s, dir)
-    val hist = all.filter(col("doc_id") < 250)
-    val wave = all.filter(col("doc_id") >= 250)
-    graft.pipeline.Packing.packAppend(wave,
-        graft.pipeline.Packing.packStats(hist, PackL, PackShards)
-          .select(col("shard"), col("n_tokens")),
-        PackL, PackShards)
-      .orderBy("shard", "window_id", "doc_id")
-  }
-
-  // oracle: the from-scratch full manifest, restricted to the wave's docs
-  // (identity the query asserts); same CTE chain as packManifestSql
-  private val packAppendSql =
-    s"""WITH d AS (
-       |  SELECT doc_id,
-       |    CAST(len(string_split(text, ' ')) + 1 AS BIGINT) AS ntok,
-       |    CAST(doc_id % $PackShards AS BIGINT) AS shard
-       |  FROM documents),
-       |c AS (
-       |  SELECT doc_id, ntok, shard,
-       |    SUM(ntok) OVER (PARTITION BY shard ORDER BY doc_id) AS tend
-       |  FROM d),
-       |s AS (SELECT doc_id, ntok, shard, tend, tend - ntok AS tstart FROM c)
-       |SELECT shard, CAST(w AS BIGINT) AS window_id, doc_id,
-       |  CAST(GREATEST(w*$PackL - tstart, 0) AS BIGINT) AS tok_from,
-       |  CAST(LEAST(ntok, (w+1)*$PackL - tstart) AS BIGINT) AS tok_to,
-       |  CAST(GREATEST(tstart - w*$PackL, 0) AS BIGINT) AS win_offset
-       |FROM s, UNNEST(range(CAST(tstart // $PackL AS BIGINT),
-       |  CAST((tend - 1) // $PackL + 1 AS BIGINT))) AS r(w)
-       |WHERE doc_id >= 250
-       |ORDER BY shard, window_id, doc_id""".stripMargin
-
-  /** Size-balanced packing ([[graft.pipeline.Packing.packManifestBalanced]],
-    * r5 verdict task 8): docs are dealt to shards by size-ranked
-    * round-robin within hash super-groups instead of `doc_id % shards`, so
-    * doc-length skew cannot overfill a shard's token budget. The oracle
-    * replays the ranking window, the deal, and the per-shard prefix-sum
-    * window arithmetic — assignment and spans must match to the token.
-    */
-  private val PackG = 2 // super-groups; each feeds PackShards/PackG shards
-
-  private val qPackBalanced: Q = (s, dir) =>
-    graft.pipeline.Packing
-      .packManifestBalanced(Tables.documents(s, dir), PackL, PackShards, PackG)
-      .orderBy("shard", "window_id", "doc_id")
-
-  private val packBalancedSql =
-    s"""WITH d AS (
-       |  SELECT doc_id,
-       |    CAST(len(string_split(text, ' ')) + 1 AS BIGINT) AS ntok,
-       |    CAST(doc_id % $PackG AS BIGINT) AS sg
-       |  FROM documents),
-       |a AS (
-       |  SELECT doc_id, ntok,
-       |    CAST(sg * ${PackShards / PackG} +
-       |      (row_number() OVER (PARTITION BY sg ORDER BY ntok DESC, doc_id)
-       |        - 1) % ${PackShards / PackG} AS BIGINT) AS shard
-       |  FROM d),
-       |c AS (
-       |  SELECT doc_id, ntok, shard,
-       |    SUM(ntok) OVER (PARTITION BY shard ORDER BY doc_id) AS tend
-       |  FROM a),
-       |s AS (SELECT doc_id, ntok, shard, tend, tend - ntok AS tstart FROM c)
-       |SELECT shard, CAST(w AS BIGINT) AS window_id, doc_id,
-       |  CAST(GREATEST(w*$PackL - tstart, 0) AS BIGINT) AS tok_from,
-       |  CAST(LEAST(ntok, (w+1)*$PackL - tstart) AS BIGINT) AS tok_to,
-       |  CAST(GREATEST(tstart - w*$PackL, 0) AS BIGINT) AS win_offset
-       |FROM s, UNNEST(range(CAST(tstart // $PackL AS BIGINT),
-       |  CAST((tend - 1) // $PackL + 1 AS BIGINT))) AS r(w)
-       |ORDER BY shard, window_id, doc_id""".stripMargin
-
-  /** Packing efficiency per shard — padding exists only in each shard's
-    * final window; the number that sizes `shards` at 100 TB.
-    */
-  private val qPackingStats: Q = (s, dir) =>
-    graft.pipeline.Packing
-      .packStats(Tables.documents(s, dir), PackL, PackShards)
-      .orderBy("shard")
-
-  private val packingStatsSql =
-    s"""WITH d AS (
-       |  SELECT CAST(len(string_split(text, ' ')) + 1 AS BIGINT) AS ntok,
-       |    CAST(doc_id % $PackShards AS BIGINT) AS shard FROM documents)
-       |SELECT shard, COUNT(*) AS n_docs,
-       |  CAST(SUM(ntok) AS BIGINT) AS n_tokens,
-       |  CAST((SUM(ntok) + ${PackL - 1}) // $PackL AS BIGINT) AS n_windows,
-       |  CAST(((SUM(ntok) + ${PackL - 1}) // $PackL) * $PackL - SUM(ntok)
-       |    AS BIGINT) AS padding
-       |FROM d GROUP BY shard ORDER BY shard""".stripMargin
-
-  private val qEventsJson: Q = (s, dir) =>
-    Tables.events(s, dir)
-      .select(get_json_object(col("props"), "$.k").cast("long").as("k"), col("value"))
-      .groupBy((col("k") % 10).as("k_mod"))
-      .agg(count(lit(1)).as("n"), Exact.sumExact(col("value")).as("total_value"))
-      .orderBy("k_mod")
-
-  private val eventsJsonSql =
-    """SELECT CAST(json_extract_string(props, '$.k') AS BIGINT) % 10 AS k_mod,
-      |  COUNT(*) AS n,
-      |  CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS total_value
-      |FROM events GROUP BY 1 ORDER BY 1""".stripMargin
-
-  /** Data-quality audit (quality.DataChecks): five contract rules over
-    * orders/customer compiled into one aggregate scan + one key-only
-    * anti-join. The oracle recomputes every rule in plain SQL.
-    */
-  private val qDqChecks: Q = (s, dir) =>
-    graft.quality.DataChecks.audit(
-      Tables.orders(s, dir),
-      Seq(
-        graft.quality.DataChecks.NotNull("o_custkey"),
-        graft.quality.DataChecks.Unique("o_orderkey"),
-        graft.quality.DataChecks.InSet("o_orderstatus", Seq("O", "F", "P")),
-        graft.quality.DataChecks.InRange("o_totalprice", 0d, 1000000d),
-        graft.quality.DataChecks.ForeignKey(
-          "o_custkey", Tables.customer(s, dir), "c_custkey")))
-
-  private val dqChecksSql =
-    """WITH t AS (SELECT CAST(COUNT(*) AS BIGINT) AS total FROM orders),
-      |v AS (
-      |  SELECT 'not_null_o_custkey' AS check_name,
-      |    CAST(COUNT(*) FILTER (WHERE o_custkey IS NULL) AS BIGINT) AS violations
-      |  FROM orders
-      |  UNION ALL
-      |  SELECT 'unique_o_orderkey',
-      |    CAST(COUNT(o_orderkey) - COUNT(DISTINCT o_orderkey) AS BIGINT)
-      |  FROM orders
-      |  UNION ALL
-      |  SELECT 'in_set_o_orderstatus',
-      |    CAST(COUNT(*) FILTER (WHERE o_orderstatus IS NOT NULL
-      |      AND o_orderstatus NOT IN ('O','F','P')) AS BIGINT)
-      |  FROM orders
-      |  UNION ALL
-      |  SELECT 'in_range_o_totalprice',
-      |    CAST(COUNT(*) FILTER (WHERE o_totalprice IS NOT NULL
-      |      AND (o_totalprice < 0 OR o_totalprice > 1000000)) AS BIGINT)
-      |  FROM orders
-      |  UNION ALL
-      |  SELECT 'fk_o_custkey',
-      |    CAST((SELECT COUNT(*) FROM orders o WHERE o.o_custkey IS NOT NULL
-      |      AND NOT EXISTS (SELECT 1 FROM customer c
-      |                      WHERE c.c_custkey = o.o_custkey)) AS BIGINT)
-      |)
-      |SELECT check_name, violations, total, violations = 0 AS pass
-      |FROM v CROSS JOIN t ORDER BY check_name""".stripMargin
-
-  /** Event-type transition matrix (first-order Markov estimate) over
-    * per-user event sequences: one `lead` window keyed by user + one
-    * count aggregate. Probabilities are exact-count ratios (single IEEE
-    * division on both sides).
-    */
-  private val qMarkovTransitions: Q = (s, dir) => {
-    val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-    Tables.events(s, dir)
-      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-      .withColumn("dst", lead(col("event_type"), 1).over(w))
-      .filter(col("dst").isNotNull)
-      .groupBy(col("event_type").as("src"), col("dst"))
-      .agg(count(lit(1)).as("cnt"))
-      .withColumn("prob", col("cnt").cast("double") /
-        sum(col("cnt")).over(Window.partitionBy("src")).cast("double"))
-      .orderBy("src", "dst")
-  }
-
-  private val markovTransitionsSql =
-    """WITH seq AS (
-      |  SELECT event_type AS src,
-      |    lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS dst
-      |  FROM events
-      |), pairs AS (
-      |  SELECT src, dst, COUNT(*) AS cnt FROM seq
-      |  WHERE dst IS NOT NULL GROUP BY src, dst
-      |)
-      |SELECT src, dst, cnt,
-      |  CAST(cnt AS DOUBLE) / CAST(SUM(cnt) OVER (PARTITION BY src) AS DOUBLE) AS prob
-      |FROM pairs ORDER BY src, dst""".stripMargin
-
-  /** BPE merge-round statistics (pipeline.BpePairs): corpus → vocabulary →
-    * weighted adjacent-char-pair counts. Top pairs with deterministic
-    * tie-break; fully SQL-expressible → exact oracle.
-    */
-  private val qBpePairs: Q = (s, dir) =>
-    graft.pipeline.BpePairs.pairCounts(Tables.documents(s, dir))
-      .orderBy(col("cnt").desc, col("pair"))
-      .limit(50)
-
-  private val bpePairsSql =
-    """WITH vocab AS (
-      |  SELECT token, COUNT(*) AS freq
-      |  FROM (SELECT unnest(string_split(text, ' ')) AS token FROM documents) t
-      |  WHERE token <> '' AND length(token) >= 2
-      |  GROUP BY token
-      |), pairs AS (
-      |  SELECT substring(token, CAST(i AS INTEGER), 2) AS pair, freq
-      |  FROM vocab, unnest(generate_series(1, length(token) - 1)) AS u(i)
-      |)
-      |SELECT pair, CAST(SUM(freq) AS BIGINT) AS cnt
-      |FROM pairs GROUP BY pair
-      |ORDER BY cnt DESC, pair LIMIT 50""".stripMargin
-
-  /** Deterministic interleaved sharding (pipeline.Sharding): round-robin
-    * deal over a per-language hash ranking. The oracle recomputes the
-    * assignment and the per-(shard, lang) membership fingerprints.
-    */
-  private val qShardInterleave: Q = (s, dir) =>
-    graft.pipeline.Sharding.interleave(Tables.documents(s, dir), nShards = 8)
-      .groupBy("shard", "lang")
-      .agg(count(lit(1)).as("n"), expr("bit_xor(doc_id)").as("id_xor"))
-      .orderBy("shard", "lang")
-
-  private val shardInterleaveSql =
-    """WITH r AS (
-      |  SELECT doc_id, lang,
-      |    CAST(row_number() OVER (PARTITION BY lang
-      |      ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS BIGINT) AS rk
-      |  FROM documents
-      |)
-      |SELECT CAST((rk - 1) % 8 AS BIGINT) AS shard, lang, COUNT(*) AS n,
-      |  CAST(bit_xor(doc_id) AS BIGINT) AS id_xor
-      |FROM r GROUP BY 1, 2 ORDER BY shard, lang""".stripMargin
-
-  /** Semantic dedup (dedup.SemanticDedup): LSH-blocked cosine pairs →
-    * connected components → one representative (min id) per cluster. The
-    * oracle recomputes the pair graph from the generated hyperplane SQL and
-    * resolves components with a recursive CTE; survivors are fingerprinted
-    * per label.
-    */
-  private val qSemanticDedup: Q = (s, dir) =>
-    graft.dedup.SemanticDedup.survivors(Tables.embeddings(s, dir), threshold = 0.2)
-      .groupBy("label")
-      .agg(count(lit(1)).as("n"), expr("bit_xor(vec_id)").as("id_xor"))
-      .orderBy("label")
-
-  private val semanticDedupSql =
-    s"""WITH RECURSIVE k AS (
-       |  SELECT vec_id, embedding, ${lshBucketSqlFor("embedding")} AS bucket FROM embeddings
-       |), pairs AS (
-       |  SELECT a.vec_id AS va, b.vec_id AS vb
-       |  FROM k a JOIN k b ON a.bucket = b.bucket
-       |  WHERE a.vec_id < b.vec_id
-       |    AND ${cosSql("a.embedding", "b.embedding")} >= 0.2
-       |), edges AS (
-       |  SELECT va AS u, vb AS v FROM pairs UNION SELECT vb, va FROM pairs
-       |), reach(u, v) AS (
-       |  SELECT u, v FROM edges
-       |  UNION SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-       |), dropped AS (
-       |  SELECT u FROM reach GROUP BY u HAVING MIN(v) < u
-       |)
-       |SELECT label, COUNT(*) AS n, CAST(bit_xor(vec_id) AS BIGINT) AS id_xor
-       |FROM embeddings WHERE vec_id NOT IN (SELECT u FROM dropped)
-       |GROUP BY label ORDER BY label""".stripMargin
-
-  /** Schema evolution: two parquet generations (the second adds a column)
-    * read through `mergeSchema`, missing values null-filled and defaulted.
-    * The oracle reconstructs the same view from the source — the hash
-    * matches only if both generations are read and the fill is exact.
-    * (At 100 TB prefer a declared read schema over footer merging; the
-    * merge here proves the null-fill semantics.)
-    */
-  private val qSchemaEvolution: Q = (s, dir) => {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-schevo").toString
-    val o = Tables.orders(s, dir)
-    o.filter(col("o_orderdate") < lit("1995-01-01"))
-      .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-      .write.mode("overwrite").parquet(s"$tmp/gen1")
-    o.filter(col("o_orderdate") >= lit("1995-01-01"))
-      .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
-        col("o_orderpriority"))
-      .write.mode("overwrite").parquet(s"$tmp/gen2")
-    s.read.option("mergeSchema", "true").parquet(s"$tmp/gen1", s"$tmp/gen2")
-      .groupBy(coalesce(col("o_orderpriority"), lit("unknown")).as("priority"))
-      .agg(count(lit(1)).as("n"), expr("bit_xor(o_orderkey)").as("key_xor"),
-        Exact.sumExact(col("o_totalprice")).as("total"))
-      .orderBy("priority")
-  }
-
-  private val schemaEvolutionSql =
-    """SELECT
-      |  CASE WHEN o_orderdate >= TIMESTAMP '1995-01-01'
-      |       THEN o_orderpriority ELSE 'unknown' END AS priority,
-      |  COUNT(*) AS n,
-      |  CAST(bit_xor(o_orderkey) AS BIGINT) AS key_xor,
-      |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total
-      |FROM orders GROUP BY 1 ORDER BY priority""".stripMargin
-
-  /** Winsorized (clamped) robust aggregation: per-group discrete p10/p90
-    * bounds picked by exact rank (no interpolation — the bound IS a data
-    * element, so the clamped exact-decimal sum is engine-independent),
-    * values clamped, summed. Bounds via one ranking window; the clamp join
-    * broadcasts 5 group rows.
-    */
-  private val qWinsorize: Q = (s, dir) => {
-    val o = Tables.orders(s, dir)
-      .select(col("o_orderpriority"), col("o_orderkey"), col("o_totalprice"))
-    val wOrd = Window.partitionBy("o_orderpriority")
-      .orderBy(col("o_totalprice").asc, col("o_orderkey").asc)
-    val ranked = o
-      .withColumn("rn", row_number().over(wOrd).cast("long"))
-      .withColumn("n", count(lit(1))
-        .over(Window.partitionBy("o_orderpriority")))
-    val bounds = ranked.groupBy("o_orderpriority").agg(
-      max(when(col("rn") === ceil(lit(0.1) * col("n")), col("o_totalprice")))
-        .as("lo"),
-      max(when(col("rn") === ceil(lit(0.9) * col("n")), col("o_totalprice")))
-        .as("hi"))
-    o.join(broadcast(bounds), Seq("o_orderpriority"))
-      .select(col("o_orderpriority"),
-        least(greatest(col("o_totalprice"), col("lo")), col("hi")).as("v"),
-        col("lo"), col("hi"))
-      .groupBy("o_orderpriority")
-      .agg(count(lit(1)).as("n"), Exact.sumExact(col("v")).as("clamped_total"),
-        max(col("lo")).as("lo"), max(col("hi")).as("hi"))
-      .orderBy("o_orderpriority")
-  }
-
-  private val winsorizeSql =
-    """WITH ranked AS (
-      |  SELECT o_orderpriority, o_totalprice,
-      |    CAST(row_number() OVER (PARTITION BY o_orderpriority
-      |      ORDER BY o_totalprice, o_orderkey) AS BIGINT) AS rn,
-      |    COUNT(*) OVER (PARTITION BY o_orderpriority) AS n
-      |  FROM orders
-      |), bounds AS (
-      |  SELECT o_orderpriority,
-      |    MAX(CASE WHEN rn = CEIL(0.1 * n) THEN o_totalprice END) AS lo,
-      |    MAX(CASE WHEN rn = CEIL(0.9 * n) THEN o_totalprice END) AS hi
-      |  FROM ranked GROUP BY o_orderpriority
-      |)
-      |SELECT o.o_orderpriority, COUNT(*) AS n,
-      |  CAST(SUM(CAST(LEAST(GREATEST(o.o_totalprice, b.lo), b.hi)
-      |    AS DECIMAL(18,4))) AS DOUBLE) AS clamped_total,
-      |  MAX(b.lo) AS lo, MAX(b.hi) AS hi
-      |FROM orders o JOIN bounds b USING (o_orderpriority)
-      |GROUP BY o.o_orderpriority ORDER BY o.o_orderpriority""".stripMargin
-
-  /** Salted two-phase aggregation (operators.SkewAgg): the explicit
-    * hot-key-aggregate escape hatch. Salting is semantically transparent,
-    * so the oracle is the PLAIN group aggregate — the hash matches only if
-    * the salt decomposition is exact.
-    */
-  private val qSkewAgg: Q = (s, dir) =>
-    graft.operators.SkewAgg.sumCount(
-      Tables.lineitem(s, dir),
-      key = col("l_returnflag"), valueCol = col("l_extendedprice"),
-      saltFrom = col("l_orderkey"), salts = 16)
-      .orderBy("key")
-
-  private val skewAggSql =
-    """SELECT l_returnflag AS key, COUNT(*) AS n,
-      |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS total
-      |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin
-
-  /** PII redaction (masking) over text: emails are synthesized
-    * deterministically per doc (the corpus has none), then redacted with a
-    * regex shared by both engines; the redacted text is fingerprinted with
-    * the rolling-hash fold, so the hash matches only if the masked bytes
-    * are identical.
-    */
-  private val qRedact: Q = (s, dir) => {
-    val pattern = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+"
-    Tables.documents(s, dir)
-      .select(col("doc_id"), col("lang"),
-        concat(col("text"), lit(" contact: user"),
-          col("doc_id").cast("string"), lit("@example.com")).as("with_pii"))
-      .select(col("lang"),
-        rolling_hash(regexp_replace(col("with_pii"), pattern, "<EMAIL>"))
-          .as("fp"),
-        (size(split(col("with_pii"), pattern)) - 1).cast("long").as("n_found"))
-      .groupBy("lang")
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_found")).as("n_redacted"),
-        expr("bit_xor(fp)").as("text_xor"))
-      .orderBy("lang")
-  }
-
-  private val redactSql = {
-    val redacted =
-      "regexp_replace(text || ' contact: user' || CAST(doc_id AS VARCHAR) " +
-        "|| '@example.com', '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+', '<EMAIL>', 'g')"
-    val withPii =
-      "text || ' contact: user' || CAST(doc_id AS VARCHAR) || '@example.com'"
-    s"""SELECT lang, COUNT(*) AS n_docs,
-       |  CAST(SUM(len(regexp_split_to_array($withPii,
-       |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+')) - 1) AS BIGINT) AS n_redacted,
-       |  CAST(bit_xor(${u64ToSigned(rollingFoldSql(redacted))}) AS BIGINT)
-       |    AS text_xor
-       |FROM documents GROUP BY lang ORDER BY lang""".stripMargin
-  }
-
-  /** Luhn-gated credit-card scrub (functions.TextFunctions.scrubCards):
-    * two formula 16-digit runs are injected per document, and the
-    * scrubber masks only those passing the Luhn mod-10 check — the
-    * false-positive guard separating card numbers from order ids. Whether
-    * each injected run IS valid varies with doc_id (both branches occur
-    * ~10%/90% across the corpus); the oracle recomputes the identical
-    * digit formula, the same Luhn fold, and the same conditional masking
-    * in DuckDB list SQL, and the masked-text fingerprint matches only if
-    * extraction, validation, and replacement agree byte-for-byte.
-    */
-  private val qCardScrub: Q = (s, dir) => {
-    import graft.functions.TextFunctions
-    def card(m: Int, a: Int) = concat((1 to 16).map(i =>
-      pmod(col("doc_id") * m + i * a, lit(10)).cast("string")): _*)
-    val withPii = concat(col("text"), lit(" card "), card(7, 3),
-      lit(" ref "), card(11, 5))
-    Tables.documents(s, dir)
-      .select(col("doc_id"), col("lang"), withPii.as("t"))
-      .select(col("lang"),
-        size(expr("regexp_extract_all(t, '\\\\b[0-9]{16}\\\\b', 0)"))
-          .cast("long").as("n_cards"),
-        size(filter(expr("regexp_extract_all(t, '\\\\b[0-9]{16}\\\\b', 0)"),
-          c => TextFunctions.luhnValid(c))).cast("long").as("n_valid"),
-        rolling_hash(TextFunctions.scrubCards(col("t"))).as("fp"))
-      .groupBy("lang")
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_cards")).as("n_cards"),
-        sum(col("n_valid")).as("n_valid"), expr("bit_xor(fp)").as("text_xor"))
-      .orderBy("lang")
-  }
-
-  private def cardScrubSqlGen: String = {
-    def cardSql(m: Int, a: Int) =
-      s"array_to_string(list_transform(range(1, 17), i -> " +
-        s"CAST((doc_id*$m + i*$a) % 10 AS VARCHAR)), '')"
-    val luhn = // Luhn fold over a 16-char digit string expression c
-      """list_sum(list_transform(range(1, 17), i ->
-        |  CASE WHEN (17 - i) % 2 = 0 THEN
-        |    (CASE WHEN CAST(c[i] AS INT) * 2 > 9 THEN CAST(c[i] AS INT) * 2 - 9
-        |          ELSE CAST(c[i] AS INT) * 2 END)
-        |  ELSE CAST(c[i] AS INT) END)) % 10 = 0""".stripMargin
-    s"""WITH p AS (
-       |  SELECT doc_id, lang,
-       |    text || ' card ' || ${cardSql(7, 3)} || ' ref ' || ${cardSql(11, 5)}
-       |      AS t
-       |  FROM documents),
-       |m AS (
-       |  SELECT lang,
-       |    regexp_extract_all(t, '\\b[0-9]{16}\\b', 0) AS cards,
-       |    list_filter(regexp_extract_all(t, '\\b[0-9]{16}\\b', 0),
-       |      c -> $luhn) AS valid,
-       |    t
-       |  FROM p),
-       |s AS (
-       |  SELECT lang, len(cards) AS n_cards, len(valid) AS n_valid,
-       |    list_reduce(list_prepend(t, valid),
-       |      (acc, c) -> replace(acc, c, '${"#" * 16}')) AS masked
-       |  FROM m)
-       |SELECT lang, COUNT(*) AS n_docs,
-       |  CAST(SUM(n_cards) AS BIGINT) AS n_cards,
-       |  CAST(SUM(n_valid) AS BIGINT) AS n_valid,
-       |  CAST(bit_xor(${u64ToSigned(rollingFoldSql("masked"))}) AS BIGINT)
-       |    AS text_xor
-       |FROM s GROUP BY lang ORDER BY lang""".stripMargin
-  }
-
-  /** Per-key rate limiting / windowed event dedup: keep the FIRST event per
-    * (user, event_type) in each 5-minute bucket — the data-plane twin of
-    * the reference's extract-throttling knob, and the batch twin of
-    * streaming dropDuplicates-within-watermark. One window keyed by the
-    * bucket; survivors fingerprinted.
-    */
-  private val qEventThrottle: Q = (s, dir) => {
-    val bucket = (unix_millis(col("ts")) / lit(300000L)).cast("long")
-    val w = Window.partitionBy(col("user_id"), col("event_type"), bucket)
-      .orderBy(col("ts").asc, col("event_id").asc)
-    Tables.events(s, dir)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .groupBy("event_type")
-      .agg(count(lit(1)).as("n_kept"), expr("bit_xor(event_id)").as("id_xor"))
-      .orderBy("event_type")
-  }
-
-  private val eventThrottleSql =
-    """WITH ranked AS (
-      |  SELECT event_type, event_id,
-      |    row_number() OVER (
-      |      PARTITION BY user_id, event_type, epoch_ms(ts) // 300000
-      |      ORDER BY ts, event_id) AS rn
-      |  FROM events
-      |)
-      |SELECT event_type, COUNT(*) AS n_kept,
-      |  CAST(bit_xor(event_id) AS BIGINT) AS id_xor
-      |FROM ranked WHERE rn = 1
-      |GROUP BY event_type ORDER BY event_type""".stripMargin
-
-  /** Hive-style directory partition pruning: orders written
-    * `partitionBy(month)`, a one-month query planned so the scan LISTS only
-    * that month's directory (Catalyst partition pruning — distinct from
-    * row-group min/max skipping). The gate counts the scan's selected
-    * partition directories out of the executed plan; the aggregate
-    * hash-matches the oracle's direct filter.
-    */
-  private val qHivePruning: Q = (s, dir) => {
-    // the partitioned layout is a build-once artifact; the timed operator
-    // is the pruned read (read-only — no per-run copy needed)
-    val tmp = Fixtures.getOrBuild(s"hivep:$dir") { f =>
-      Tables.orders(s, dir)
-        .withColumn("om", monthSid(col("o_orderdate")))
-        .write.partitionBy("om").mode("overwrite").parquet(s"$f/t")
-    }
-    val pruned = s.read.parquet(s"$tmp/t").filter(col("om") === 199703L)
-    val nSelected: Int = pruned.queryExecution.executedPlan.collectLeaves()
-      .collect {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-          f.selectedPartitions.partitionCount
-      }.sum
-    pruned
-      .groupBy(col("o_orderpriority"))
-      .agg(count(lit(1)).as("n"), Exact.sumExact(col("o_totalprice")).as("total"))
-      .withColumn("one_dir_scanned", lit(nSelected == 1))
-      .orderBy("o_orderpriority")
-  }
-
-  private val hivePruningSql =
-    s"""SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n,
-       |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total,
-       |  TRUE AS one_dir_scanned
-       |FROM orders WHERE $monthSidSql = 199703
-       |GROUP BY 1 ORDER BY 1""".stripMargin
-
-  /** Late-data backfill via dynamic partition overwrite: a three-month
-    * partitioned table gets a correction batch for ONE month
-    * (`partitionOverwriteMode=dynamic` rewrites only the touched
-    * directory). The read-back hash matches the oracle's corrected view,
-    * and `untouched_intact` pins the other partitions' file lists
-    * byte-identical — the reference's re-copy-one-partition discipline
-    * (sqoop_etl restart semantics) as a declared query.
-    */
-  private val qBackfill: Q = (s, dir) => {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-backfill").toString
-    val o = Tables.orders(s, dir)
-      .filter(col("o_orderdate") >= lit("1997-01-01") &&
-        col("o_orderdate") < lit("1997-04-01"))
-      .withColumn("om", monthSid(col("o_orderdate")))
-    o.write.partitionBy("om").mode("overwrite").parquet(s"$tmp/t")
-    def listOthers(): Seq[String] = {
-      val root = new java.io.File(s"$tmp/t")
-      root.listFiles().filter(_.getName.startsWith("om="))
-        .filterNot(_.getName == "om=199703").flatMap(_.listFiles())
-        .map(f => s"${f.getName}:${f.length}").sorted.toSeq
-    }
-    val before = listOthers()
-    val prev = s.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      o.filter(col("om") === 199703L)
-        .withColumn("o_orderpriority", lit("0-CORRECTED"))
-        .write.partitionBy("om").mode("overwrite").parquet(s"$tmp/t")
-    } finally prev match {
-      case Some(v) => s.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => s.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
-    val intact = listOthers() == before
-    // partition-dir readback infers `om` as int — restore the source type
-    s.read.parquet(s"$tmp/t")
-      .groupBy(col("om").cast("long").as("om"), col("o_orderpriority"))
-      .agg(count(lit(1)).as("n"), expr("bit_xor(o_orderkey)").as("key_xor"))
-      .withColumn("untouched_intact", lit(intact))
-      .orderBy("om", "o_orderpriority")
-  }
-
-  private val backfillSql =
-    s"""WITH t AS (
-       |  SELECT $monthSidSql AS om,
-       |    CASE WHEN $monthSidSql = 199703 THEN '0-CORRECTED'
-       |         ELSE o_orderpriority END AS o_orderpriority,
-       |    o_orderkey
-       |  FROM orders
-       |  WHERE o_orderdate >= TIMESTAMP '1997-01-01'
-       |    AND o_orderdate < TIMESTAMP '1997-04-01'
-       |)
-       |SELECT om, o_orderpriority, COUNT(*) AS n,
-       |  CAST(bit_xor(o_orderkey) AS BIGINT) AS key_xor,
-       |  TRUE AS untouched_intact
-       |FROM t GROUP BY om, o_orderpriority ORDER BY om, o_orderpriority""".stripMargin
-
-  /** BM25 retrieval over the inverted index ([[graft.functions.Bm25]]):
-    * fixed query terms, every matching doc scored. Per-term contributions
-    * are integer micros so the per-doc sum is exact; the oracle is
-    * generated from the same (terms, k1, b) constants.
-    */
-  private val Bm25Terms = Seq("join", "vector", "spark")
-
-  private val qBm25: Q = (s, dir) => {
-    val docs = Tables.documents(s, dir)
-    graft.functions.Bm25.score(
-        graft.functions.Bm25.buildIndex(docs),
-        graft.functions.Bm25.docLengths(docs), Bm25Terms)
-      .orderBy("doc_id")
-  }
-
-  private val bm25Sql = graft.functions.Bm25.oracleSql(Bm25Terms)
-
-  /** Exact-phrase retrieval over positional postings
-    * (functions.Bm25.buildPositionalIndex/phraseSearch): two fixed phrases
-    * run through the consecutive-position join chain — each term's
-    * postings filtered before any join, then (doc_id, pos+i) hash joins —
-    * emitting per-doc occurrence counts and first positions. The oracle
-    * rebuilds positions with generate_subscripts and replays the
-    * position-offset join for the same phrases.
-    */
-  private val PhraseQueries = Seq("join order", "stream spark")
-
-  private val qPhraseSearch: Q = (s, dir) => {
-    val pindex = graft.functions.Bm25
-      .buildPositionalIndex(Tables.documents(s, dir))
-    PhraseQueries.map { ph =>
-      graft.functions.Bm25.phraseSearch(pindex, ph.split(" ").toSeq)
-        .withColumn("phrase", lit(ph))
-    }.reduce(_.unionByName(_))
-      .select(col("phrase"), col("doc_id"), col("n_hits"), col("first_pos"))
-      .orderBy("phrase", "doc_id")
-  }
-
-  private def phraseSearchSqlGen: String = {
-    val branches = PhraseQueries.map { ph =>
-      val terms = ph.split(" ")
-      val joins = terms.zipWithIndex.drop(1).map { case (t, i) =>
-        s"JOIN tok t$i ON t$i.doc_id = t0.doc_id AND t$i.pos = t0.pos + $i AND t$i.token = '$t'"
-      }.mkString("\n  ")
-      s"""SELECT '$ph' AS phrase, t0.doc_id, COUNT(*) AS n_hits,
-         |  CAST(MIN(t0.pos) AS BIGINT) AS first_pos
-         |FROM tok t0
-         |  $joins
-         |WHERE t0.token = '${terms.head}'
-         |GROUP BY t0.doc_id""".stripMargin
-    }
-    s"""WITH toks AS (
-       |  SELECT doc_id, string_split(text, ' ') AS ts FROM documents),
-       |tok AS (
-       |  SELECT doc_id, CAST(generate_subscripts(ts, 1) - 1 AS BIGINT) AS pos,
-       |    ts[generate_subscripts(ts, 1)] AS token
-       |  FROM toks)
-       |${branches.mkString("\nUNION ALL\n")}
-       |ORDER BY phrase, doc_id""".stripMargin
-  }
-
-  /** Phrase retrieval over the PERSISTED positional index — the 100 TB
-    * serving shape: postings land bucketed by md5(token) directory
-    * (`Bm25.writeIndex` layout), and a phrase probe enumerates its terms'
-    * buckets driver-side so pruning happens at file-listing time (gated
-    * from the executed plan's selected-partition count, the q_bm25_index
-    * discipline); scores/positions must equal the in-memory path's.
-    */
-  private val qPhraseIndex: Q = (s, dir) => {
-    import graft.functions.Bm25
-    val tmp = java.nio.file.Files.createTempDirectory("graft-pidx").toString
-    val terms = PhraseQueries.head.split(" ").toSeq
-    Bm25.writeIndex(Bm25.buildPositionalIndex(Tables.documents(s, dir)),
-      s"$tmp/pidx")
-    val probed = Bm25.probePositionalIndex(s, s"$tmp/pidx", terms)
-    val nSelected: Int = probed.queryExecution.executedPlan.collectLeaves()
-      .collect {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-          f.selectedPartitions.partitionCount
-      }.sum
-    val nBuckets = terms.map(Bm25.bucketOf(_)).distinct.size
-    Bm25.phraseSearch(probed, terms)
-      .withColumn("pruned_scan", lit(nSelected <= nBuckets))
-      .orderBy("doc_id")
-  }
-
-  private def phraseIndexSqlGen: String = {
-    val terms = PhraseQueries.head.split(" ")
-    val joins = terms.zipWithIndex.drop(1).map { case (t, i) =>
-      s"JOIN tok t$i ON t$i.doc_id = t0.doc_id AND t$i.pos = t0.pos + $i AND t$i.token = '$t'"
-    }.mkString("\n  ")
-    s"""WITH toks AS (
-       |  SELECT doc_id, string_split(text, ' ') AS ts FROM documents),
-       |tok AS (
-       |  SELECT doc_id, CAST(generate_subscripts(ts, 1) - 1 AS BIGINT) AS pos,
-       |    ts[generate_subscripts(ts, 1)] AS token
-       |  FROM toks)
-       |SELECT t0.doc_id, COUNT(*) AS n_hits,
-       |  CAST(MIN(t0.pos) AS BIGINT) AS first_pos, TRUE AS pruned_scan
-       |FROM tok t0
-       |  $joins
-       |WHERE t0.token = '${terms.head}'
-       |GROUP BY t0.doc_id ORDER BY t0.doc_id""".stripMargin
-  }
-
-  /** Index-store bucket balance (the ops check for a hash-partitioned
-    * store): postings land in md5 token buckets (Bm25.writeIndex layout),
-    * and this report counts tokens/postings per bucket from the PERSISTED
-    * store plus an exact-integer balance gate (max bucket ≤ 4× the even
-    * share) — hash skew in the partition key is what silently turns a
-    * pruned probe into a full scan, so it is measured, not assumed. The
-    * oracle rebuilds the bucket assignment digit-by-digit from the same
-    * md5 window.
-    */
-  private val qBucketStats: Q = (s, dir) => {
-    import graft.functions.Bm25
-    val tmp = Fixtures.getOrBuild(s"bucketstats-idx:$dir") { f =>
-      Bm25.writeIndex(Bm25.buildIndex(Tables.documents(s, dir)), f)
-    }
-    val store = s.read.parquet(tmp)
-    val total = store.agg(count(lit(1)).as("n_total"))
-    store.groupBy(col("token_bucket").cast("long").as("bucket"))
-      .agg(countDistinct(col("token")).as("n_tokens"),
-        count(lit(1)).as("n_postings"))
-      .crossJoin(broadcast(total))
-      .select(col("bucket"), col("n_tokens"), col("n_postings"),
-        (col("n_postings") * lit(graft.functions.Bm25.IndexBuckets.toLong) <=
-          col("n_total") * 4L).as("balanced"))
-      .orderBy("bucket")
-  }
-
-  private val bucketStatsSql = {
-    def hexDigit(i: Int) =
-      s"(strpos('0123456789abcdef', substr(md5(token), $i, 1)) - 1)"
-    val bucket = s"((${hexDigit(1)}*4096 + ${hexDigit(2)}*256 + " +
-      s"${hexDigit(3)}*16 + ${hexDigit(4)}) % ${graft.functions.Bm25.IndexBuckets})"
-    s"""WITH tokb AS (
-       |  SELECT doc_id, unnest(string_split(text, ' ')) AS token
-       |  FROM documents),
-       |idx AS (SELECT token, doc_id FROM tokb WHERE token <> ''
-       |        GROUP BY token, doc_id),
-       |b AS (SELECT CAST($bucket AS BIGINT) AS bucket, token FROM idx),
-       |tot AS (SELECT COUNT(*) AS n_total FROM b)
-       |SELECT bucket, CAST(COUNT(DISTINCT token) AS BIGINT) AS n_tokens,
-       |  COUNT(*) AS n_postings,
-       |  (COUNT(*) * ${graft.functions.Bm25.IndexBuckets} <= n_total * 4)
-       |    AS balanced
-       |FROM b, tot GROUP BY bucket, n_total ORDER BY bucket""".stripMargin
-  }
-
-  /** Stop-postings index pruning (functions.Bm25.pruneIndex): tokens with
-    * df > 395 — the corpus-wide stopwords carrying the longest posting
-    * lists and the least idf mass — are dropped, the index provably
-    * shrinks (exact posting counts both sides), and scoring the query
-    * terms (all below the threshold) over the pruned index is
-    * row-identical to the full index. The oracle recomputes both posting
-    * counts and the BM25 scores exactly.
-    */
-  private val PruneMaxDf = 395L
-
-  private val qPrunedIndex: Q = (s, dir) => {
-    import graft.functions.Bm25
-    val docs = Tables.documents(s, dir)
-    val full = Bm25.buildIndex(docs).localCheckpoint()
-    val pruned = Bm25.pruneIndex(full, PruneMaxDf)
-    val lens = Bm25.docLengths(docs)
-    val s1 = Bm25.score(full, lens, Bm25Terms)
-    val s2 = Bm25.score(pruned, lens, Bm25Terms)
-    val cols = Seq("doc_id", "n_terms", "score_u").map(col)
-    val d1 = s1.select(cols: _*).exceptAll(s2.select(cols: _*))
-      .agg(count(lit(1)).as("d1"))
-    val d2 = s2.select(cols: _*).exceptAll(s1.select(cols: _*))
-      .agg(count(lit(1)).as("d2"))
-    s2.agg(count(lit(1)).as("n_docs_scored"),
-        expr("bit_xor(score_u)").as("score_xor"))
-      .crossJoin(broadcast(full.agg(count(lit(1)).as("postings_full"))))
-      .crossJoin(broadcast(pruned.agg(count(lit(1)).as("postings_pruned"))))
-      .crossJoin(broadcast(d1)).crossJoin(broadcast(d2))
-      .select(col("n_docs_scored"), col("score_xor"),
-        col("postings_full"), col("postings_pruned"),
-        (col("d1") === 0L && col("d2") === 0L).as("scores_equal"))
-  }
-
-  private def prunedIndexSqlGen: String = {
-    val bm = graft.functions.Bm25.oracleSql(Bm25Terms)
-    s"""WITH bm AS (SELECT * FROM ($bm)),
-       |tokp AS (
-       |  SELECT doc_id, unnest(string_split(text, ' ')) AS token
-       |  FROM documents),
-       |idx AS (SELECT token, doc_id, COUNT(*) AS tf FROM tokp
-       |        WHERE token <> '' GROUP BY 1, 2),
-       |dfs AS (SELECT token, COUNT(*) AS df FROM idx GROUP BY 1)
-       |SELECT CAST((SELECT COUNT(*) FROM bm) AS BIGINT) AS n_docs_scored,
-       |  CAST((SELECT bit_xor(score_u) FROM bm) AS BIGINT) AS score_xor,
-       |  CAST((SELECT COUNT(*) FROM idx) AS BIGINT) AS postings_full,
-       |  CAST((SELECT COUNT(*) FROM idx JOIN dfs USING (token)
-       |        WHERE df <= $PruneMaxDf) AS BIGINT) AS postings_pruned,
-       |  TRUE AS scores_equal""".stripMargin
-  }
-
-  /** Incremental index maintenance (functions.Bm25.appendIndex): the
-    * positional index is built over the first 60% of the corpus, the
-    * remaining documents arrive as an APPEND wave into the same bucket
-    * directories — no rebuild, historical postings never re-read — and the
-    * phrase probe over the merged store must equal a from-scratch build
-    * (the oracle replays the phrase against the FULL corpus). The pruning
-    * gate still holds on the merged store.
-    */
-  private val qPhraseIndexIncremental: Q = (s, dir) => {
-    import graft.functions.Bm25
-    val tmp = java.nio.file.Files.createTempDirectory("graft-pidxinc").toString
-    val terms = PhraseQueries.head.split(" ").toSeq
-    val docs = Tables.documents(s, dir)
-    Bm25.writeIndex(
-      Bm25.buildPositionalIndex(docs.filter(col("doc_id") < 300)),
-      s"$tmp/pidx")
-    Bm25.appendIndex(
-      Bm25.buildPositionalIndex(docs.filter(col("doc_id") >= 300)),
-      s"$tmp/pidx")
-    val probed = Bm25.probePositionalIndex(s, s"$tmp/pidx", terms)
-    val nSelected: Int = probed.queryExecution.executedPlan.collectLeaves()
-      .collect {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-          f.selectedPartitions.partitionCount
-      }.sum
-    val nBuckets = terms.map(Bm25.bucketOf(_)).distinct.size
-    Bm25.phraseSearch(probed, terms)
-      .withColumn("pruned_scan", lit(nSelected <= nBuckets))
-      .orderBy("doc_id")
-  }
-
-  /** Postings-store MAINTENANCE — the last append-mode index without a
-    * measured maintenance story (the r7 verdict's missing #2 named the
-    * IVF store AND this positional index): three corpus waves each leave
-    * a small-file layer per `token_bucket=` partition;
-    * `Compaction.compactPartitions` collapses them with the pooled
-    * atomic-swap pass. The phrase probe over the compacted store must
-    * equal the full-corpus oracle, the scan must STILL prune to the query
-    * terms' buckets (compaction may not break the partition layout),
-    * `rows_preserved` pins the exact postings count pre/post, and
-    * `files_reduced` gates that maintenance shrank the store.
-    */
-  private val qPhraseidxCompaction: Q = (s, dir) => {
-    import graft.functions.Bm25
-    val terms = PhraseQueries.head.split(" ").toSeq
-    val docs = Tables.documents(s, dir)
-    val layered = Fixtures.getOrBuild(s"pidxlayers:$dir") { f =>
-      Bm25.writeIndex(
-        Bm25.buildPositionalIndex(docs.filter(col("doc_id") < 250)), f)
-      Bm25.appendIndex(
-        Bm25.buildPositionalIndex(
-          docs.filter(col("doc_id") >= 250 && col("doc_id") < 375)), f)
-      Bm25.appendIndex(
-        Bm25.buildPositionalIndex(docs.filter(col("doc_id") >= 375)), f)
-    }
-    val idx = Fixtures.mutableCopy(layered)
-    val rowsBefore = s.read.parquet(idx).count()
-    val st = graft.sources.Compaction.compactPartitions(s, idx,
-      maxParallel = 8)
-    val rowsAfter = s.read.parquet(idx).count()
-    val probed = Bm25.probePositionalIndex(s, idx, terms)
-    val nSelected: Int = probed.queryExecution.executedPlan.collectLeaves()
-      .collect {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-          f.selectedPartitions.partitionCount
-      }.sum
-    val nBuckets = terms.map(Bm25.bucketOf(_)).distinct.size
-    Bm25.phraseSearch(probed, terms)
-      .agg(count(lit(1)).as("n_docs"),
-        expr("bit_xor(doc_id * 1000000 + n_hits * 10000 + first_pos)")
-          .as("hit_xor"))
-      .withColumn("pruned_scan", lit(nSelected <= nBuckets))
-      .withColumn("files_reduced", lit(st.filesAfter < st.filesBefore))
-      .withColumn("rows_preserved", lit(rowsBefore == rowsAfter))
-  }
-
-  /** Oracle for [[qPhraseidxCompaction]]: the phrase hits recomputed from
-    * the full corpus (file layout cannot matter), checksummed; the three
-    * maintenance gates are literal TRUE.
-    */
-  private def phraseidxCompactionSqlGen: String = {
-    val terms = PhraseQueries.head.split(" ")
-    val joins = terms.zipWithIndex.drop(1).map { case (t, i) =>
-      s"JOIN tok t$i ON t$i.doc_id = t0.doc_id AND t$i.pos = t0.pos + $i AND t$i.token = '$t'"
-    }.mkString("\n  ")
-    s"""WITH toks AS (
-       |  SELECT doc_id, string_split(text, ' ') AS ts FROM documents),
-       |tok AS (
-       |  SELECT doc_id, CAST(generate_subscripts(ts, 1) - 1 AS BIGINT) AS pos,
-       |    ts[generate_subscripts(ts, 1)] AS token
-       |  FROM toks),
-       |hits AS (
-       |  SELECT t0.doc_id, COUNT(*) AS n_hits,
-       |    CAST(MIN(t0.pos) AS BIGINT) AS first_pos
-       |  FROM tok t0
-       |    $joins
-       |  WHERE t0.token = '${terms.head}'
-       |  GROUP BY t0.doc_id)
-       |SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-       |  CAST(bit_xor(doc_id * 1000000 + n_hits * 10000 + first_pos) AS BIGINT)
-       |    AS hit_xor,
-       |  TRUE AS pruned_scan, TRUE AS files_reduced, TRUE AS rows_preserved
-       |FROM hits""".stripMargin
-  }
-
-  /** Hybrid lexical+dense retrieval with Reciprocal Rank Fusion
-    * (similarity.HybridRetrieval): BM25 top-100 for the fixed terms fused
-    * with cosine top-100 for a fixed query embedding by exact-integer RRF
-    * (`floor(1e9/(60+rank))` per retriever, full-outer over the two rank
-    * lists — the standard RAG-serving combiner). Each retriever reduces
-    * the corpus to ≤100 rows via TakeOrderedAndProject BEFORE fusion
-    * touches anything, so the fusion cost is constant at any corpus size.
-    * The oracle replays both rankings (the generated BM25 SQL and the
-    * exact-order cosine) and the same integer fusion.
-    */
-  private val qHybridRetrieval: Q = (s, dir) => {
-    import graft.similarity.HybridRetrieval
-    val docs = Tables.documents(s, dir)
-    val scored = graft.functions.Bm25.score(
-      graft.functions.Bm25.buildIndex(docs),
-      graft.functions.Bm25.docLengths(docs), Bm25Terms)
-    val trank = HybridRetrieval.topRanks(scored, "doc_id", "score_u", 100)
-    val emb = Tables.embeddings(s, dir)
-    val vrank = Similarity
-      .bruteForceTopK(emb, emb.filter(col("vec_id") === 0), k = 100)
-      .select(col("neighbor_id").as("doc_id"),
-        col("rk").cast("long").as("rank"))
-    HybridRetrieval.rrfFuse(trank, vrank, "doc_id", topK = 20)
-      .select(col("doc_id"), col("r_a").as("r_text"),
-        col("r_b").as("r_vec"), col("rrf_u"))
-      .orderBy(col("rrf_u").desc, col("doc_id"))
-  }
-
-  /** Planted near-dup evaluation (the number every dedup pipeline reports
-    * before running at scale): a bounded sample of the corpus is augmented
-    * with perturbed copies (every 13th token replaced — Jaccard stays
-    * comfortably above the 0.5 threshold), ground truth is the brute-force
-    * exact-Jaccard pair set over the sample, and the system under test is
-    * the production banded MinHash+LSH pipeline (Dedup.minHashNearDups,
-    * same kernels as q_minhash_neardups). Precision is 1 by construction
-    * (candidates are exact-verified); RECALL — pairs the banding surfaces —
-    * is the measured quantity, emitted with planted-pair accounting in
-    * exact integer form. Both sides are deterministic: the oracle replays
-    * the LSH pipeline bit-for-bit over the same augmented corpus AND
-    * recomputes the brute-force truth. The brute-force self-join is
-    * bounded by the EVAL SAMPLE (240 docs), an algorithm constant — the
-    * production path is the banded join; brute force exists here only to
-    * measure it.
-    */
-  /** (bands, rowsPerBand) configurations under evaluation: 6×4 (the
-    * production default) vs 8×3 — shorter bands fire on lower-similarity
-    * pairs, trading candidate volume for recall; the eval quantifies it.
-    */
-  private val NeardupEvalConfigs = Seq(("b6r4", 4), ("b8r3", 3))
-
-  private val qNeardupEval: Q = (s, dir) => {
-    import graft.functions.TextFunctions
-    val base = Tables.documents(s, dir).filter(col("doc_id") < 200)
-      .select(col("doc_id"), col("text"))
-    val tk = split(col("text"), " ")
-    val perturbed = array_join(
-      transform(sequence(lit(1), size(tk)),
-        p => when(p % 13 === 0, lit("dupword")).otherwise(element_at(tk, p))),
-      " ")
-    val planted = Tables.documents(s, dir).filter(col("doc_id") < 40)
-      .select((col("doc_id") + 10000L).as("doc_id"), perturbed.as("text"))
-    val corpus = base.unionByName(planted).localCheckpoint()
-    val sh = corpus.select(col("doc_id"),
-      array_distinct(TextFunctions.wordShingles(col("text"), 3)).as("sset"))
-    val inter = size(array_intersect(col("x.sset"), col("y.sset")))
-    val jac = inter.cast("double") /
-      (size(col("x.sset")) + size(col("y.sset")) - inter).cast("double")
-    val truth = sh.as("x").join(sh.as("y"),
-        col("x.doc_id") < col("y.doc_id"))
-      .filter(jac >= lit(0.5))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      .localCheckpoint()
-    NeardupEvalConfigs.map { case (label, rpb) =>
-      val lsh = graft.dedup.Dedup
-        .minHashNearDups(corpus, threshold = 0.5, rowsPerBand = rpb)
-        .select(col("doc_a"), col("doc_b"))
-      truth.join(lsh.withColumn("found", lit(true)),
-          Seq("doc_a", "doc_b"), "left")
-        .select(col("doc_a"), col("doc_b"),
-          coalesce(col("found"), lit(false)).as("found"),
-          (col("doc_b") >= 10000L).as("planted"))
-        .agg(count(lit(1)).as("n_truth"),
-          sum(when(col("found"), 1L).otherwise(0L)).as("n_found"),
-          sum(when(col("planted"), 1L).otherwise(0L)).as("n_planted"),
-          sum(when(col("planted") && col("found"), 1L).otherwise(0L))
-            .as("n_planted_found"))
-        .withColumn("recall_milli", expr("n_found * 1000 div n_truth"))
-        .withColumn("config", lit(label))
-        .select("config", "n_truth", "n_found", "n_planted",
-          "n_planted_found", "recall_milli")
-    }.reduce(_.unionByName(_)).orderBy("config")
-  }
-
-  private def neardupEvalSqlGen: String = {
-    val corpusSql =
-      """SELECT doc_id, text FROM documents WHERE doc_id < 200
-        |UNION ALL
-        |SELECT doc_id + 10000, array_to_string(
-        |  list_transform(range(1, len(tk) + 1),
-        |    p -> CASE WHEN p % 13 = 0 THEN 'dupword' ELSE tk[p] END), ' ')
-        |FROM (SELECT doc_id, string_split(text, ' ') AS tk
-        |      FROM documents WHERE doc_id < 40)""".stripMargin
-    NeardupEvalConfigs.map { case (label, rpb) =>
-      s"SELECT * FROM (${SketchOracleSql.neardupEvalSql(corpusSql,
-        plantedFrom = 10000L, threshold = 0.5, rowsPerBand = rpb,
-        label = label)})"
-    }.mkString("", "\nUNION ALL\n", "\nORDER BY config")
-  }
-
-  /** Deterministic epoch reshuffle — the training-stream ordering op: each
-    * epoch re-orders the corpus by `md5(epoch:doc_id)` (RNG-free, so any
-    * run reproduces the exact stream), docs land in hash shards, and order
-    * WITHIN a shard is the served order (the production shape: a global
-    * sort never happens — range/hash partition + sortWithinPartitions).
-    * Emitted per (epoch, shard): counts and an ORDER-SENSITIVE checksum
-    * (Σ rank·doc_id) that moves if any two docs swap places — the oracle
-    * replays key, shard, and ranking; different epochs provably produce
-    * different orders while each epoch is bit-stable.
-    */
-  private val qEpochShuffle: Q = (s, dir) => {
-    val key = md5(concat(col("e").cast("string"), lit(":"),
-      col("doc_id").cast("string")))
-    val w = Window.partitionBy(col("e"), col("shard"))
-      .orderBy(col("k"), col("doc_id"))
-    Tables.documents(s, dir)
-      .select(col("doc_id"), explode(sequence(lit(0), lit(2))).as("e"))
-      .withColumn("k", key)
-      .withColumn("shard",
-        (conv(substring(col("k"), 1, 1), 16, 10) % 4).cast("long"))
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .groupBy("e", "shard")
-      .agg(count(lit(1)).as("n"),
-        sum(col("rk") * col("doc_id")).as("ordsum"),
-        min(col("k")).as("first_key"))
-      .orderBy("e", "shard")
-  }
-
-  private val epochShuffleSql = {
-    def nib(i: Int) =
-      s"(strpos('0123456789abcdef', substr(k, $i, 1)) - 1)"
-    s"""WITH x AS (
-       |  SELECT doc_id, e,
-       |    md5(CAST(e AS VARCHAR) || ':' || CAST(doc_id AS VARCHAR)) AS k
-       |  FROM documents, generate_series(0, 2) g(e)),
-       |r AS (
-       |  SELECT doc_id, e, k, CAST(${nib(1)} % 4 AS BIGINT) AS shard
-       |  FROM x),
-       |rk AS (
-       |  SELECT e, shard, doc_id, k,
-       |    CAST(ROW_NUMBER() OVER (PARTITION BY e, shard
-       |      ORDER BY k, doc_id) AS BIGINT) AS rk
-       |  FROM r)
-       |SELECT CAST(e AS INT) AS e, shard, COUNT(*) AS n,
-       |  CAST(SUM(rk * doc_id) AS BIGINT) AS ordsum,
-       |  min(k) AS first_key
-       |FROM rk GROUP BY e, shard ORDER BY e, shard""".stripMargin
-  }
-
-  /** Corpus datasheet — the per-source release report ("datasheets for
-    * datasets"): document/token volume, exact-dup rate (fingerprint
-    * distinct), language spread, published-rule pass rate, and the mean
-    * classifier score — every column exact-integer so the report is
-    * engine-reproducible, all from ONE aggregate over a map-only
-    * projection (fingerprint, score, and rule bits are codegen'd; nothing
-    * but per-source partials shuffles).
-    */
-  private val qDatasheet: Q = (s, dir) => {
-    import graft.quality.{LinearScorer, RuleFilters}
-    val rules = RuleFilters.gopherRules(col("text"))
-    val keep = rules.map(_._2).reduce(_ && _)
-    Tables.documents(s, dir)
-      .select(col("source"), col("lang"),
-        size(split(col("text"), " ")).cast("long").as("n_toks"),
-        rolling_hash(col("text")).as("fp"),
-        LinearScorer.score(col("text")).as("score"),
-        keep.as("gopher_keep"))
-      .groupBy("source")
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("n_toks")).as("n_tokens"),
-        countDistinct(col("fp")).as("n_unique"),
-        countDistinct(col("lang")).as("n_langs"),
-        sum(when(col("gopher_keep"), 1L).otherwise(0L)).as("n_gopher_pass"),
-        sum(col("score")).as("score_sum"))
-      .withColumn("dup_rate_milli",
-        expr("(n_docs - n_unique) * 1000 div n_docs"))
-      .withColumn("mean_score_micro", expr("score_sum div n_docs"))
-      .orderBy("source")
-  }
-
-  private def datasheetSql: String = {
-    import graft.quality.RuleFilters._
-    val stop = graft.functions.TextFunctions.EnglishStopwords
-      .map(w => s"'$w'").mkString("[", ", ", "]")
-    val sc = graft.quality.LinearScorer.scoreSql("text")
-    s"""WITH t AS (
-       |  SELECT source, lang, text,
-       |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_toks,
-       |    ${u64ToSigned(rollingFoldSql("text"))} AS fp,
-       |    $sc AS score,
-       |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_words,
-       |    CAST(length(text) - (len(string_split(text, ' ')) - 1) AS BIGINT)
-       |      AS word_chars,
-       |    CAST(len(list_filter(string_split(text, ' '),
-       |      w -> regexp_matches(w, '[a-zA-Z]'))) AS BIGINT) AS alpha_words,
-       |    CAST((length(text) - length(replace(text, '#', ''))) +
-       |      (length(text) - length(replace(text, '...', ''))) // 3
-       |      AS BIGINT) AS symbols,
-       |    CAST(len(list_filter(string_split(text, ' '),
-       |      w -> list_contains($stop, w))) AS BIGINT) AS stop_hits
-       |  FROM documents),
-       |k AS (
-       |  SELECT *,
-       |    (n_words >= $MinWords AND n_words <= $MaxWords AND
-       |     word_chars >= $MinMeanWordLen * n_words AND
-       |     word_chars <= $MaxMeanWordLen * n_words AND
-       |     symbols * 10 < n_words AND
-       |     alpha_words * 5 >= n_words * 4 AND
-       |     stop_hits >= $MinStopwordHits) AS gopher_keep
-       |  FROM t)
-       |SELECT source, COUNT(*) AS n_docs,
-       |  CAST(SUM(n_toks) AS BIGINT) AS n_tokens,
-       |  CAST(COUNT(DISTINCT fp) AS BIGINT) AS n_unique,
-       |  CAST(COUNT(DISTINCT lang) AS BIGINT) AS n_langs,
-       |  CAST(SUM(CASE WHEN gopher_keep THEN 1 ELSE 0 END) AS BIGINT)
-       |    AS n_gopher_pass,
-       |  CAST(SUM(score) AS BIGINT) AS score_sum,
-       |  CAST((COUNT(*) - COUNT(DISTINCT fp)) * 1000 // COUNT(*) AS BIGINT)
-       |    AS dup_rate_milli,
-       |  CAST(CAST(SUM(score) AS BIGINT) // COUNT(*) AS BIGINT)
-       |    AS mean_score_micro
-       |FROM k GROUP BY source ORDER BY source""".stripMargin
-  }
-
-  /** Language-ID confusion matrix — the eval half of the lang-ID heuristic
-    * (TextFunctions.langId): predictions against the gold `lang` column as
-    * (gold, pred, n) cells plus per-cell hit accounting. The oracle
-    * replays the marker-count argmax from the same marker lists
-    * (first-listed language wins ties, zero hits ⇒ 'unk').
-    */
-  private val qLangConfusion: Q = (s, dir) =>
-    Tables.documents(s, dir)
-      .select(col("lang").as("gold"),
-        graft.functions.TextFunctions.langId(col("text")).as("pred"))
-      .groupBy("gold", "pred")
-      .agg(count(lit(1)).as("n"))
-      .withColumn("hit", col("gold") === col("pred"))
-      .orderBy("gold", "pred")
-
-  private def langConfusionSql: String = {
-    val markers = graft.functions.TextFunctions.LangMarkers
-    val scores = markers.map { case (lang, ws) =>
-      val set = ws.map(w => s"'$w'").mkString("[", ", ", "]")
-      s"CAST(len(list_filter(string_split(text, ' '), " +
-        s"t -> list_contains($set, t))) AS BIGINT) AS s_$lang"
-    }.mkString(",\n    ")
-    val m = markers.map { case (l, _) => s"s_$l" }.mkString("greatest(", ", ", ")")
-    val pick = markers.map { case (l, _) =>
-      s"WHEN s_$l = m THEN '$l'"
-    }.mkString("\n      ")
-    s"""WITH sc AS (
-       |  SELECT lang AS gold,
-       |    $scores
-       |  FROM documents),
-       |p AS (
-       |  SELECT gold, CASE WHEN m = 0 THEN 'unk'
-       |      $pick
-       |      ELSE 'unk' END AS pred
-       |  FROM (SELECT *, $m AS m FROM sc))
-       |SELECT gold, pred, COUNT(*) AS n, (gold = pred) AS hit
-       |FROM p GROUP BY gold, pred ORDER BY gold, pred""".stripMargin
-  }
-
-  /** PMI domain keywords — per-source vocabulary signature: pointwise
-    * mutual information of (token, source) over the corpus word counts,
-    * micro-quantized (`round(1e6·ln((c_ws·N)/(c_w·c_s)))` — ln over exact
-    * integer ratios, the q_bm25 parity rule), support-filtered, top-3 per
-    * source by a source-partitioned rank. The word-count aggregates are
-    * the classic map-side-combine shape; nothing wider than (token,
-    * source, count) shuffles.
-    */
-  private val qPmiKeywords: Q = (s, dir) => {
-    val toks = Tables.documents(s, dir)
-      .select(col("source"),
-        explode(graft.functions.TextFunctions.tokens(col("text")))
-          .as("token"))
-      .filter(col("token") =!= "")
-    val cws = toks.groupBy("source", "token").agg(count(lit(1)).as("c_ws"))
-    val cw = toks.groupBy("token").agg(count(lit(1)).as("c_w"))
-    val cs = toks.groupBy("source").agg(count(lit(1)).as("c_s"))
-    val n = toks.agg(count(lit(1)).as("n_total"))
-    val pmi = cws.join(broadcast(cw), "token").join(broadcast(cs), "source")
-      .crossJoin(broadcast(n))
-      .filter(col("c_ws") >= 5)
-      .withColumn("pmi_u",
-        round(log(col("c_ws").cast("double") * col("n_total").cast("double") /
-          (col("c_w").cast("double") * col("c_s").cast("double"))) *
-          lit(1000000.0)).cast("long"))
-    val w = Window.partitionBy(col("source"))
-      .orderBy(col("pmi_u").desc, col("token"))
-    pmi.withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= 3)
-      .select(col("source"), col("rk"), col("token"), col("c_ws"),
-        col("pmi_u"))
-      .orderBy("source", "rk")
-  }
-
-  private val pmiKeywordsSql =
-    """WITH t AS (
-      |  SELECT source, unnest(string_split(text, ' ')) AS token
-      |  FROM documents),
-      |t2 AS (SELECT source, token FROM t WHERE token <> ''),
-      |cws AS (SELECT source, token, COUNT(*) AS c_ws FROM t2 GROUP BY 1, 2),
-      |cw AS (SELECT token, COUNT(*) AS c_w FROM t2 GROUP BY 1),
-      |cs AS (SELECT source, COUNT(*) AS c_s FROM t2 GROUP BY 1),
-      |n AS (SELECT COUNT(*) AS n_total FROM t2),
-      |pmi AS (
-      |  SELECT source, token, c_ws,
-      |    CAST(round(ln(CAST(c_ws AS DOUBLE) * CAST(n_total AS DOUBLE) /
-      |      (CAST(c_w AS DOUBLE) * CAST(c_s AS DOUBLE))) * 1000000.0)
-      |      AS BIGINT) AS pmi_u
-      |  FROM cws JOIN cw USING (token) JOIN cs USING (source), n
-      |  WHERE c_ws >= 5)
-      |SELECT source, rk, token, c_ws, pmi_u FROM (
-      |  SELECT source, token, c_ws, pmi_u,
-      |    CAST(ROW_NUMBER() OVER (PARTITION BY source
-      |      ORDER BY pmi_u DESC, token) AS BIGINT) AS rk
-      |  FROM pmi) x
-      |WHERE rk <= 3 ORDER BY source, rk""".stripMargin
-
-  /** Contrastive training-pair generation (dedup.Dedup.contrastivePairs):
-    * the LSH band join surfaces candidates once, and exact Jaccard
-    * classifies them into positives (≥0.7, anchor/positive pairs) and
-    * HARD negatives ([0.2, 0.5) — blocked-together-but-verified-different,
-    * the confusable pairs a contrastive loss needs). The oracle replays
-    * banding bit-for-bit and the same classification.
-    */
-  private val qContrastivePairs: Q = (s, dir) =>
-    graft.dedup.Dedup.contrastivePairs(
-        Tables.documents(s, dir).select(col("doc_id"), col("text")),
-        posThreshold = 0.7, negLo = 0.0, negHi = 0.5, rowsPerBand = 2)
-      .groupBy("kind")
-      .agg(count(lit(1)).as("n_pairs"),
-        expr("bit_xor(doc_a * 1000000 + doc_b)").as("pair_xor"))
-      .orderBy("kind")
-
-  private val contrastivePairsSqlGen: String =
-    SketchOracleSql.contrastivePairsSql(posThreshold = 0.7, negLo = 0.0,
-      negHi = 0.5, rowsPerBand = 2)
-
-  /** Quality-weighted upsampling (the mixture technique of modern
-    * pretraining recipes: higher-quality documents recur more often in the
-    * training stream). The learned classifier score
-    * (quality.LinearScorer, a map-only codegen projection) buckets each
-    * doc into a repetition factor 3/2/1/0; `explode(sequence(1, rep))`
-    * materializes the epoch slots deterministically — no RNG, so the
-    * mixture is byte-reproducible and the oracle replays score → bucket →
-    * slot fan-out exactly. Scale shape: a map-side explode whose fan-out
-    * is the mixture factor (bounded by 3), then one per-lang aggregate.
-    */
-  private val qQualityUpsample: Q = (s, dir) => {
-    import graft.quality.LinearScorer
-    val score = LinearScorer.score(col("text"))
-    val rep = when(score > -5000L, lit(3))
-      .when(score > -10500L, lit(2))
-      .when(score > -20500L, lit(1))
-      .otherwise(lit(0))
-    Tables.documents(s, dir)
-      .select(col("doc_id"), col("lang"), rep.as("rep"))
-      .filter(col("rep") > 0)
-      .select(col("doc_id"), col("lang"), col("rep"),
-        explode(sequence(lit(1), col("rep"))).as("slot"))
-      .groupBy("lang")
-      .agg(countDistinct(col("doc_id")).as("n_docs"),
-        count(lit(1)).as("n_rows_out"),
-        sum(when(col("slot") === 1, col("rep").cast("long")).otherwise(0L))
-          .as("rep_sum"),
-        expr("bit_xor(doc_id * 8 + slot)").as("slot_xor"))
-      .orderBy("lang")
-  }
-
-  private def qualityUpsampleSql: String = {
-    val sc = graft.quality.LinearScorer.scoreSql("text")
-    s"""WITH r AS (
-       |  SELECT doc_id, lang,
-       |    CASE WHEN $sc > -5000 THEN 3
-       |         WHEN $sc > -10500 THEN 2
-       |         WHEN $sc > -20500 THEN 1
-       |         ELSE 0 END AS rep
-       |  FROM documents),
-       |x AS (
-       |  SELECT doc_id, lang, rep,
-       |    CAST(unnest(range(1, rep + 1)) AS BIGINT) AS slot
-       |  FROM r WHERE rep > 0)
-       |SELECT lang, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs,
-       |  COUNT(*) AS n_rows_out,
-       |  CAST(SUM(CASE WHEN slot = 1 THEN rep ELSE 0 END) AS BIGINT)
-       |    AS rep_sum,
-       |  CAST(bit_xor(doc_id * 8 + slot) AS BIGINT) AS slot_xor
-       |FROM x GROUP BY lang ORDER BY lang""".stripMargin
-  }
-
-  /** Corpus release diff — the audit between two dataset versions: docs
-    * only in A (removed), only in B (added), present in both with changed
-    * content (fingerprint mismatch), and unchanged. Releases are
-    * formula-derived views (A drops id%10=0, B drops id%10=1 and revises
-    * text where id%7=0), the diff is two fingerprint anti/inner joins —
-    * 16-byte shuffle rows, never text — and the oracle rebuilds both
-    * releases and the same classification.
-    */
-  private val qReleaseDiff: Q = (s, dir) => {
-    val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-    val relA = docs.filter(col("doc_id") % 10 =!= 0)
-      .select(col("doc_id"), rolling_hash(col("text")).as("fp"))
-    val relB = docs.filter(col("doc_id") % 10 =!= 1)
-      .select(col("doc_id"),
-        rolling_hash(when(col("doc_id") % 7 === 0,
-          concat(col("text"), lit(" v2"))).otherwise(col("text"))).as("fp"))
-    val a = relA.withColumnRenamed("fp", "fp_a")
-    val b = relB.withColumnRenamed("fp", "fp_b")
-    a.join(b, Seq("doc_id"), "full_outer")
-      .select(col("doc_id"),
-        when(col("fp_a").isNull, lit("added"))
-          .when(col("fp_b").isNull, lit("removed"))
-          .when(col("fp_a") =!= col("fp_b"), lit("changed"))
-          .otherwise(lit("unchanged")).as("kind"))
-      .groupBy("kind")
-      .agg(count(lit(1)).as("n"), expr("bit_xor(doc_id)").as("id_xor"))
-      .orderBy("kind")
-  }
-
-  private def releaseDiffSqlGen: String =
-    s"""WITH a AS (
-       |  SELECT doc_id, ${u64ToSigned(rollingFoldSql("text"))} AS fp_a
-       |  FROM documents WHERE doc_id % 10 <> 0),
-       |b AS (
-       |  SELECT doc_id, ${u64ToSigned(rollingFoldSql(
-             "CASE WHEN doc_id % 7 = 0 THEN text || ' v2' ELSE text END"))}
-       |    AS fp_b
-       |  FROM documents WHERE doc_id % 10 <> 1),
-       |j AS (
-       |  SELECT COALESCE(a.doc_id, b.doc_id) AS doc_id,
-       |    CASE WHEN a.doc_id IS NULL THEN 'added'
-       |         WHEN b.doc_id IS NULL THEN 'removed'
-       |         WHEN fp_a <> fp_b THEN 'changed'
-       |         ELSE 'unchanged' END AS kind
-       |  FROM a FULL OUTER JOIN b ON b.doc_id = a.doc_id)
-       |SELECT kind, COUNT(*) AS n, CAST(bit_xor(doc_id) AS BIGINT) AS id_xor
-       |FROM j GROUP BY kind ORDER BY kind""".stripMargin
-
-  /** Format parity matrix — one corpus through EVERY text-capable sink
-    * (parquet, tuned ORC, gzip JSONL, zstd JSONL shards, WARC archives)
-    * and back, emitting one row per format with identical order-free
-    * content checksums: a single query certifying that no interchange
-    * path loses or alters a byte. The oracle computes the checksum once
-    * from the source table and expects it five times.
-    */
-  private val qFormatMatrix: Q = (s, dir) => {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-fmtx").toString
-    val docs = Tables.documents(s, dir)
-      .select(col("doc_id"), col("lang"), col("source"), col("text"))
-    docs.write.mode("overwrite").parquet(s"$tmp/pq")
-    graft.sources.OrcSink.write(docs, s"$tmp/orc",
-      graft.etl.JobConfig("format_matrix"))
-    graft.sources.Sources.jsonlWrite(docs, s"$tmp/jsonl", partitions = 4)
-    graft.sources.Sources.jsonlZstWrite(docs, s"$tmp/zst", numShards = 4)
-    graft.sources.Warc.write(docs, s"$tmp/warc", numFiles = 4)
-    val readers: Seq[(String, DataFrame)] = Seq(
-      "1_parquet" -> s.read.parquet(s"$tmp/pq"),
-      "2_orc" -> graft.sources.Sources.orc(s, s"$tmp/orc"),
-      "3_jsonl" -> graft.sources.Sources.jsonl(s, s"$tmp/jsonl", docs.schema),
-      "4_jsonl_zst" -> graft.sources.Sources.jsonlZst(s, s"$tmp/zst", docs.schema),
-      "5_warc" -> graft.sources.Warc.read(s, s"$tmp/warc"))
-    readers.map { case (name, df) =>
-      df.select(rolling_hash(col("text")).as("fp"), col("doc_id"))
-        .agg(count(lit(1)).as("n"), expr("bit_xor(doc_id)").as("id_xor"),
-          expr("bit_xor(fp)").as("text_xor"))
-        .withColumn("format", lit(name))
-        .select("format", "n", "id_xor", "text_xor")
-    }.reduce(_.unionByName(_)).orderBy("format")
-  }
-
-  private def formatMatrixSqlGen: String = {
-    val row = (n: String) =>
-      s"""SELECT '$n' AS format, COUNT(*) AS n,
-         |  CAST(bit_xor(doc_id) AS BIGINT) AS id_xor,
-         |  CAST(bit_xor(${u64ToSigned(rollingFoldSql("text"))}) AS BIGINT)
-         |    AS text_xor
-         |FROM documents""".stripMargin
-    Seq("1_parquet", "2_orc", "3_jsonl", "4_jsonl_zst", "5_warc")
-      .map(row).mkString("", "\nUNION ALL\n", "\nORDER BY format")
-  }
-
-  /** v4 composed pipeline — the CORPUS-RELEASE flow
-    * (pipeline.TrainingDataPipeline.summaryV4): published Gopher rule gate
-    * (integer cross-multiplied thresholds) → exact dedup keep-canonical →
-    * per-language token budget (hash-ordered running sum) → `.jsonl.zst`
-    * shard export, with the per-language accounting computed from the
-    * READ-BACK shards — the content checksums prove the released bytes
-    * survived gate∘dedup∘budget∘compress∘decompress end to end. The
-    * oracle composes the rule CTEs, the min-id dedup, and the same budget
-    * window, aggregating the original table.
-    */
-  private val V4Budgets = Map("en" -> 9000L)
-  private val V4DefaultBudget = 4000L
-
-  private val qTrainingPipelineV4: Q = (s, dir) => {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-v4").toString
-    graft.pipeline.TrainingDataPipeline.summaryV4(
-      Tables.documents(s, dir), s"$tmp/release", V4Budgets, V4DefaultBudget)
-  }
-
-  private def trainingPipelineV4Sql: String = {
-    import graft.quality.RuleFilters._
-    val stop = graft.functions.TextFunctions.EnglishStopwords
-      .map(w => s"'$w'").mkString("[", ", ", "]")
-    s"""WITH t AS (
-       |  SELECT doc_id, lang, text,
-       |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_words,
-       |    CAST(length(text) - (len(string_split(text, ' ')) - 1) AS BIGINT)
-       |      AS word_chars,
-       |    CAST(len(list_filter(string_split(text, ' '),
-       |      w -> regexp_matches(w, '[a-zA-Z]'))) AS BIGINT) AS alpha_words,
-       |    CAST((length(text) - length(replace(text, '#', ''))) +
-       |      (length(text) - length(replace(text, '...', ''))) // 3
-       |      AS BIGINT) AS symbols,
-       |    CAST(len(list_filter(string_split(text, ' '),
-       |      w -> list_contains($stop, w))) AS BIGINT) AS stop_hits
-       |  FROM documents),
-       |g AS (
-       |  SELECT doc_id, lang, text, n_words FROM t
-       |  WHERE n_words >= $MinWords AND n_words <= $MaxWords
-       |    AND word_chars >= $MinMeanWordLen * n_words
-       |    AND word_chars <= $MaxMeanWordLen * n_words
-       |    AND symbols * 10 < n_words
-       |    AND alpha_words * 5 >= n_words * 4
-       |    AND stop_hits >= $MinStopwordHits),
-       |canon AS (SELECT min(doc_id) AS doc_id FROM g GROUP BY text),
-       |c AS (SELECT g.* FROM g JOIN canon USING (doc_id)),
-       |r AS (
-       |  SELECT doc_id, lang, text, n_words,
-       |    CAST(SUM(n_words) OVER (w ROWS BETWEEN UNBOUNDED PRECEDING
-       |      AND CURRENT ROW) AS BIGINT) AS cum_tokens
-       |  FROM c
-       |  WINDOW w AS (PARTITION BY lang
-       |    ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id)),
-       |sel AS (
-       |  SELECT * FROM r WHERE cum_tokens <=
-       |    CASE WHEN lang = 'en' THEN ${V4Budgets("en")}
-       |         ELSE $V4DefaultBudget END)
-       |SELECT lang, COUNT(*) AS n_docs, CAST(SUM(n_words) AS BIGINT)
-       |    AS n_tokens,
-       |  CAST(bit_xor(doc_id) AS BIGINT) AS id_xor,
-       |  CAST(bit_xor(${u64ToSigned(rollingFoldSql("text"))}) AS BIGINT)
-       |    AS text_xor
-       |FROM sel GROUP BY lang ORDER BY lang""".stripMargin
-  }
-
-  /** Bitext mining (parallel-corpus discovery, the margin criterion of
-    * published bitext pipelines): every `en` document is matched against
-    * the `es` side by embedding cosine — best + runner-up give the margin
-    * ratio, and a pair is MUTUAL when the reverse direction also ranks it
-    * first (the standard precision filter). Brute force here runs on the
-    * bounded per-language query batches (the ANN-family shape: query batch
-    * broadcast, corpus scanned once; at 100 TB the same code takes the IVF
-    * index path). Cosines are deterministic, so margins and mutuality are
-    * oracle-replayable exactly.
-    */
-  private val qBitextMining: Q = (s, dir) => {
-    val langs = Tables.documents(s, dir).select(col("doc_id"), col("lang"))
-    val emb = Tables.embeddings(s, dir)
-      .join(langs, col("vec_id") === col("doc_id"))
-      .select(col("vec_id"), col("embedding"), col("lang"))
-    val en = emb.filter(col("lang") === "en").select("vec_id", "embedding")
-    val es = emb.filter(col("lang") === "es").select("vec_id", "embedding")
-    val fwd = Similarity.bruteForceTopK(es, en, k = 2)
-    val f1 = fwd.filter(col("rk") === 1)
-      .select(col("query_id").as("en_id"), col("neighbor_id").as("es_id"),
-        col("cos"))
-    val f2 = fwd.filter(col("rk") === 2)
-      .select(col("query_id").as("en_id"), col("cos").as("cos2"))
-    val bwd = Similarity.bruteForceTopK(en, es, k = 1)
-      .select(col("query_id").as("es_id"), col("neighbor_id").as("b_en_id"))
-    f1.join(f2, "en_id")
-      .join(bwd, Seq("es_id"), "left")
-      .select(col("en_id"), col("es_id"), col("cos"),
-        (col("cos") / col("cos2")).as("margin"),
-        (col("b_en_id") === col("en_id")).as("mutual"))
-      .orderBy("en_id")
-  }
-
-  private val bitextMiningSql =
-    s"""WITH d AS (SELECT doc_id, lang FROM documents),
-       |en AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings
-       |       JOIN d ON doc_id = vec_id WHERE lang = 'en'),
-       |es AS (SELECT vec_id AS cid, embedding AS cv FROM embeddings
-       |       JOIN d ON doc_id = vec_id WHERE lang = 'es'),
-       |fw AS (SELECT qid, cid, cos, CAST(ROW_NUMBER() OVER (PARTITION BY qid
-       |         ORDER BY cos DESC, cid) AS BIGINT) AS rk
-       |       FROM (SELECT qid, cid, ${cosSql("qv", "cv")} AS cos
-       |             FROM en, es)),
-       |bw AS (SELECT qid, cid, CAST(ROW_NUMBER() OVER (PARTITION BY cid
-       |         ORDER BY cos DESC, qid) AS BIGINT) AS rk
-       |       FROM (SELECT qid, cid, ${cosSql("qv", "cv")} AS cos
-       |             FROM en, es)),
-       |f1 AS (SELECT qid, cid, cos FROM fw WHERE rk = 1),
-       |f2 AS (SELECT qid, cos AS cos2 FROM fw WHERE rk = 2),
-       |b1 AS (SELECT qid AS b_en_id, cid FROM bw WHERE rk = 1)
-       |SELECT f1.qid AS en_id, f1.cid AS es_id, f1.cos,
-       |  f1.cos / f2.cos2 AS margin, (b1.b_en_id = f1.qid) AS mutual
-       |FROM f1 JOIN f2 ON f2.qid = f1.qid
-       |LEFT JOIN b1 ON b1.cid = f1.cid
-       |ORDER BY en_id""".stripMargin
-
-  /** Batch multi-query retrieval (functions.Bm25.scoreBatch): three
-    * queries scored in ONE pass over the postings — the query-term
-    * relation joins the (pre-filtered, broadcast-pruned) postings once
-    * instead of N per-query scans — then bounded top-3 per query via the
-    * TopKAgg typed aggregator (map tasks ship ≤k rows per query into the
-    * shuffle, never the full score relation). The oracle replays each
-    * query through the generated single-query BM25 SQL and ranks with the
-    * same (score desc, doc) order.
-    */
-  private val BatchQueries: Seq[(Long, Seq[String])] = Seq(
-    1L -> Seq("join", "vector"),
-    2L -> Seq("spark", "stream"),
-    3L -> Seq("hash", "merge", "scan"))
-
-  private val qBatchRetrieval: Q = (s, dir) => {
-    import s.implicits._
-    val docs = Tables.documents(s, dir)
-    val queries = BatchQueries.toDF("query_id", "terms")
-    val scored = graft.functions.Bm25.scoreBatch(
-      graft.functions.Bm25.buildIndex(docs),
-      graft.functions.Bm25.docLengths(docs), queries)
-    val tk = udaf(new graft.functions.TopKAgg(3))
-    scored.groupBy("query_id")
-      .agg(tk(col("score_u").cast("double"), col("doc_id")).as("top"))
-      .select(col("query_id"), posexplode(col("top")))
-      .select(col("query_id"), (col("pos") + 1).cast("long").as("rk"),
-        col("col.id").as("doc_id"), col("col.score").cast("long").as("score_u"))
-      .orderBy("query_id", "rk")
-  }
-
-  private def batchRetrievalSqlGen: String = {
-    val branches = BatchQueries.map { case (qid, terms) =>
-      s"SELECT $qid AS query_id, doc_id, score_u FROM " +
-        s"(${graft.functions.Bm25.oracleSql(terms)})"
-    }
-    s"""WITH all_q AS (
-       |${branches.mkString("\nUNION ALL\n")})
-       |SELECT CAST(query_id AS BIGINT) AS query_id, rk, doc_id, score_u
-       |FROM (
-       |  SELECT query_id, doc_id, score_u,
-       |    CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-       |      ORDER BY score_u DESC, doc_id) AS BIGINT) AS rk
-       |  FROM all_q) t
-       |WHERE rk <= 3 ORDER BY query_id, rk""".stripMargin
-  }
-
-  /** Offline retrieval evaluation (similarity.RetrievalEval): the hybrid
-    * RRF top-20 is scored against exact-cosine ground truth (top-20 of the
-    * dense ranking) with recall@20, reciprocal rank of the truth #1, and
-    * nDCG@10 — all in exact integer form (the log2 discounts are
-    * pre-quantized once in Scala and shared with the oracle as literals,
-    * so no runtime transcendental enters either engine). Rankings are
-    * deterministic, hence so are the metrics; the oracle replays system
-    * and truth lists from the shared CTE body and folds the same integer
-    * metric arithmetic.
-    */
-  private val qRetrievalEval: Q = (s, dir) => {
-    import graft.similarity.{HybridRetrieval, RetrievalEval}
-    val docs = Tables.documents(s, dir)
-    val scored = graft.functions.Bm25.score(
-      graft.functions.Bm25.buildIndex(docs),
-      graft.functions.Bm25.docLengths(docs), Bm25Terms)
-    val trank = HybridRetrieval.topRanks(scored, "doc_id", "score_u", 100)
-    val emb = Tables.embeddings(s, dir)
-    val vr = Similarity
-      .bruteForceTopK(emb, emb.filter(col("vec_id") === 0), k = 100)
-      .select(col("neighbor_id").as("doc_id"),
-        col("rk").cast("long").as("rank"))
-    val fused = HybridRetrieval.rrfFuse(trank, vr, "doc_id", topK = 20)
-    val sys = fused.select(col("doc_id"),
-      row_number().over(Window.orderBy(col("rrf_u").desc, col("doc_id")))
-        .cast("long").as("sys_rank"))
-    val gt = vr.filter(col("rank") <= 20)
-      .select(col("doc_id"), col("rank").as("gt_rank"))
-    RetrievalEval.metrics(sys.join(gt, Seq("doc_id"), "left"))
-  }
-
-  private def retrievalEvalSqlGen: String = {
-    import graft.similarity.HybridRetrieval.{RrfK, RrfScale}
-    import graft.similarity.RetrievalEval.{DcgWeightsMicro, IdcgMicro}
-    val w = DcgWeightsMicro.mkString("[", ", ", "]")
-    val dcg = s"""SUM(CASE WHEN gt_rank IS NOT NULL AND sys_rank <= 10
-                 |  THEN (21 - gt_rank) * ($w)[CAST(sys_rank AS INT)]
-                 |  ELSE 0 END)""".stripMargin
-    s"""WITH $hybridCtesSql,
-       |fused AS (SELECT doc_id,
-       |    (COALESCE($RrfScale // ($RrfK + r_text), 0) +
-       |     COALESCE($RrfScale // ($RrfK + r_vec), 0)) AS rrf_u
-       |  FROM f),
-       |syst AS (SELECT doc_id, CAST(row_number() OVER
-       |           (ORDER BY rrf_u DESC, doc_id) AS BIGINT) AS sys_rank
-       |         FROM (SELECT * FROM fused ORDER BY rrf_u DESC, doc_id
-       |               LIMIT 20)),
-       |gt AS (SELECT doc_id, r_vec AS gt_rank FROM vrank WHERE r_vec <= 20),
-       |j AS (SELECT s.doc_id, sys_rank, gt_rank
-       |      FROM syst s LEFT JOIN gt USING (doc_id))
-       |SELECT CAST(COUNT(*) AS BIGINT) AS n_sys,
-       |  CAST(SUM(CASE WHEN gt_rank IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-       |    AS overlap,
-       |  CAST($dcg AS BIGINT) AS dcg_u,
-       |  CAST(($dcg * 1000) // $IdcgMicro AS BIGINT) AS ndcg_milli,
-       |  CAST(MAX(CASE WHEN gt_rank = 1 THEN $RrfScale // sys_rank
-       |           ELSE 0 END) AS BIGINT) AS rr_u
-       |FROM j""".stripMargin
-  }
-
-  /** Shared CTE body for the hybrid-retrieval oracles: BM25 + cosine rank
-    * lists and their full-outer fusion input `f(doc_id, r_text, r_vec)`.
-    */
-  private def hybridCtesSql: String = {
-    val bm = graft.functions.Bm25.oracleSql(Bm25Terms)
-    s"""bm AS (SELECT * FROM ($bm)),
-       |ttop AS (SELECT doc_id, score_u FROM bm
-       |         ORDER BY score_u DESC, doc_id LIMIT 100),
-       |trank AS (SELECT doc_id, CAST(row_number() OVER
-       |            (ORDER BY score_u DESC, doc_id) AS BIGINT) AS r_text
-       |          FROM ttop),
-       |qv AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0),
-       |vs AS (SELECT vec_id AS doc_id, ${cosSql("qvec", "cvec")} AS cos
-       |       FROM (SELECT vec_id, embedding AS cvec FROM embeddings
-       |             WHERE vec_id <> 0) c, qv),
-       |vtop AS (SELECT doc_id, cos FROM vs ORDER BY cos DESC, doc_id LIMIT 100),
-       |vrank AS (SELECT doc_id, CAST(row_number() OVER
-       |            (ORDER BY cos DESC, doc_id) AS BIGINT) AS r_vec
-       |          FROM vtop),
-       |f AS (SELECT COALESCE(t.doc_id, v.doc_id) AS doc_id, r_text, r_vec
-       |      FROM trank t FULL OUTER JOIN vrank v ON t.doc_id = v.doc_id)""".stripMargin
-  }
-
-  private def hybridRetrievalSqlGen: String = {
-    import graft.similarity.HybridRetrieval.{RrfK, RrfScale}
-    s"""WITH $hybridCtesSql
-       |SELECT doc_id, r_text, r_vec,
-       |  (COALESCE($RrfScale // ($RrfK + r_text), 0) +
-       |   COALESCE($RrfScale // ($RrfK + r_vec), 0)) AS rrf_u
-       |FROM f ORDER BY rrf_u DESC, doc_id LIMIT 20""".stripMargin
-  }
-
-  /** Part co-occurrence edge list (parts sharing an order), the input graph
-    * for `q_triangles` and `q_label_prop`. Built ONCE per sf dir and cached
-    * as a [[Fixtures]] parquet: in production an edge list is materialized
-    * when data lands and every graph job reads it — only a per-query
-    * harness would re-run the lineitem self-join per consumer. Duplicate
-    * pairs are preserved (both consumers canonicalize/dedup themselves),
-    * so cached rows are exactly the derivation's rows and hashes cannot
-    * move.
-    */
-  private def coPurchaseEdges(s: SparkSession, dir: String): DataFrame = {
-    val fx = Fixtures.getOrBuild(s"copurchase-edges:$dir") { out =>
-      val li = Tables.lineitem(s, dir)
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-      li.as("x").join(li.as("y"), col("x.ok") === col("y.ok"))
-        .filter(col("x.pk") < col("y.pk"))
-        .select(col("x.pk").as("a"), col("y.pk").as("b"))
-        .write.parquet(s"$out/edges")
-    }
-    s.read.parquet(s"$fx/edges")
-  }
-
-  /** Supplier→customer bipartite edge list (supplier shipped an order line
-    * to the customer), the input graph for `q_pagerank` and `q_ppr` —
-    * same build-once [[Fixtures]] discipline as [[coPurchaseEdges]].
-    */
-  private def suppCustEdges(s: SparkSession, dir: String): DataFrame = {
-    val fx = Fixtures.getOrBuild(s"suppcust-edges:$dir") { out =>
-      Tables.lineitem(s, dir).select(col("l_suppkey"), col("l_orderkey"))
-        .join(Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey")),
-          col("l_orderkey") === col("o_orderkey"))
-        .select((col("l_suppkey") * 2).as("src"),
-          (col("o_custkey") * 2 + 1).as("dst"))
-        .write.parquet(s"$out/edges")
-    }
-    s.read.parquet(s"$fx/edges")
-  }
-
-  /** Triangle counting ([[graft.operators.Triangles]]) on the part
-    * co-occurrence graph (parts sharing an order). The oracle replays the
-    * same degree orientation in SQL, so the wedge count — the quantity the
-    * orientation exists to bound — is itself hash-checked, not just the
-    * triangle total.
-    */
-  private val qTriangles: Q = (s, dir) =>
-    graft.operators.Triangles.countTriangles(coPurchaseEdges(s, dir), "a", "b")
-
-  private val trianglesSql =
-    """WITH canon AS (
-      |  SELECT DISTINCT x.l_partkey AS lo, y.l_partkey AS hi
-      |  FROM lineitem x JOIN lineitem y ON x.l_orderkey = y.l_orderkey
-      |   AND x.l_partkey < y.l_partkey),
-      |deg AS (
-      |  SELECT v, COUNT(*) AS d FROM (
-      |    SELECT lo AS v FROM canon UNION ALL SELECT hi FROM canon) u
-      |  GROUP BY 1),
-      |o AS (
-      |  SELECT CASE WHEN dl.d < dh.d OR (dl.d = dh.d AND lo < hi)
-      |              THEN lo ELSE hi END AS src,
-      |         CASE WHEN dl.d < dh.d OR (dl.d = dh.d AND lo < hi)
-      |              THEN hi ELSE lo END AS dst,
-      |         CASE WHEN dl.d < dh.d OR (dl.d = dh.d AND lo < hi)
-      |              THEN dh.d ELSE dl.d END AS d_dst
-      |  FROM canon JOIN deg dl ON dl.v = canon.lo
-      |             JOIN deg dh ON dh.v = canon.hi),
-      |w AS (
-      |  SELECT e1.dst AS b, e2.dst AS c
-      |  FROM o e1 JOIN o e2 ON e1.src = e2.src
-      |  WHERE e1.d_dst < e2.d_dst
-      |     OR (e1.d_dst = e2.d_dst AND e1.dst < e2.dst)),
-      |tri AS (SELECT COUNT(*) AS n FROM w JOIN o ON o.src = w.b AND o.dst = w.c)
-      |SELECT CAST((SELECT COUNT(*) FROM canon) AS BIGINT) AS n_edges,
-      |  CAST((SELECT COUNT(*) FROM w) AS BIGINT) AS n_wedges,
-      |  CAST((SELECT n FROM tri) AS BIGINT) AS n_triangles""".stripMargin
-
-  /** SCD Type-2 dimension build ([[graft.etl.Scd2]]): each user's
-    * event_type change log becomes versioned validity intervals —
-    * consecutive repeats collapsed, `[valid_from, lead)` intervals,
-    * open-ended current version. Timestamps emitted as exact micros.
-    */
-  private val qScd2: Q = (s, dir) => {
-    val ev = Tables.events(s, dir)
-      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-    graft.etl.Scd2.build(ev, Seq("user_id"), "event_type", "ts", Seq("event_id"))
-      .select(col("user_id"), col("event_type"), col("version"),
-        unix_micros(col("valid_from")).as("from_us"),
-        coalesce(unix_micros(col("valid_to")), lit(-1L)).as("to_us"),
-        col("is_current"))
-      .orderBy("user_id", "version")
-  }
-
-  private val scd2Sql =
-    """WITH ev AS (
-      |  SELECT user_id, epoch_us(ts) AS tus, event_id, event_type FROM events
-      |), marked AS (
-      |  SELECT user_id, tus, event_id, event_type,
-      |    LAG(event_type) OVER (PARTITION BY user_id ORDER BY tus, event_id)
-      |      AS prev_type
-      |  FROM ev
-      |), changed AS (
-      |  SELECT user_id, tus, event_id, event_type FROM marked
-      |  WHERE prev_type IS NULL OR prev_type <> event_type
-      |)
-      |SELECT user_id, event_type,
-      |  CAST(ROW_NUMBER() OVER w AS BIGINT) AS version,
-      |  CAST(tus AS BIGINT) AS from_us,
-      |  CAST(COALESCE(LEAD(tus) OVER w, -1) AS BIGINT) AS to_us,
-      |  (LEAD(tus) OVER w IS NULL) AS is_current
-      |FROM changed
-      |WINDOW w AS (PARTITION BY user_id ORDER BY tus, event_id)
-      |ORDER BY user_id, version""".stripMargin
-
-  /** Bounded top-k per group via the typed [[graft.functions.TopKAgg]]
-    * Aggregator — partial-aggregation-friendly, so each map task ships at
-    * most k rows per group into the shuffle (the window formulation ships
-    * and sorts every row). Oracle = the window formulation, proving the
-    * two are equivalent.
-    */
-  private val qTopkAgg: Q = (s, dir) => {
-    val tk = udaf(new graft.functions.TopKAgg(3))
-    Tables.orders(s, dir)
-      .groupBy(monthSid(col("o_orderdate")).as("month_sid"))
-      .agg(tk(col("o_totalprice"), col("o_orderkey")).as("top"))
-      .select(col("month_sid"), posexplode(col("top")))
-      .select(col("month_sid"), (col("pos") + 1).cast("long").as("rk"),
-        col("col.id").as("o_orderkey"), col("col.score").as("o_totalprice"))
-      .orderBy("month_sid", "rk")
-  }
-
-  private val topkAggSql =
-    s"""SELECT month_sid, rk, o_orderkey, o_totalprice FROM (
-       |  SELECT $monthSidSql AS month_sid,
-       |    CAST(ROW_NUMBER() OVER (PARTITION BY $monthSidSql
-       |      ORDER BY o_totalprice DESC, o_orderkey) AS BIGINT) AS rk,
-       |    o_orderkey, o_totalprice
-       |  FROM orders) t
-       |WHERE rk <= 3 ORDER BY month_sid, rk""".stripMargin
-
-  /** Bigram LM scoring with add-1 smoothing: p(w2|w1) =
-    * (c(w1,w2)+1)/(c(w1)+V) over corpus bigram counts — the 2-gram
-    * extension of q_unigram_lm's CCNet-style signal. Log-probs quantized
-    * to integer micros before the per-doc sum (order-free, engine-exact);
-    * bigram extraction is an index-zip inside codegen, counts are two
-    * word-count-shaped aggregates.
-    */
-  private val qBigramLm: Q = (s, dir) => {
-    val bg = Tables.documents(s, dir)
-      .withColumn("t", TextFunctions.tokens(col("text")))
-      .filter(size(col("t")) >= 2)
-      .select(col("doc_id"), explode(expr(
-        "transform(sequence(0, size(t)-2), i -> struct(t[i] AS w1, t[i+1] AS w2))"))
-        .as("bg"))
-      .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
-    val c12 = bg.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
-    val c1 = bg.groupBy("w1").agg(count(lit(1)).as("c1"))
-    val vocab = Tables.documents(s, dir)
-      .select(explode(TextFunctions.tokens(col("text"))).as("tok"))
-      .agg(countDistinct(col("tok")).as("v"))
-    bg.join(c12, Seq("w1", "w2")).join(c1, Seq("w1"))
-      .crossJoin(broadcast(vocab))
-      .select(col("doc_id"),
-        round(log((col("c12").cast("double") + lit(1.0)) /
-          (col("c1").cast("double") + col("v").cast("double"))) * lit(1000000.0))
-          .cast("long").as("u"))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_bigrams"), sum(col("u")).as("sum_logp_u"))
-      .select(col("doc_id"), col("n_bigrams"), col("sum_logp_u"),
-        (col("sum_logp_u").cast("double") /
-          (col("n_bigrams").cast("double") * lit(1000000.0))).as("avg_logp"))
-      .orderBy("doc_id")
-  }
-
-  private val bigramLmSql =
-    """WITH tok AS (
-      |  SELECT doc_id, string_split(text, ' ') AS t FROM documents
-      |), bg AS (
-      |  SELECT doc_id, t[i] AS w1, t[i + 1] AS w2
-      |  FROM tok, UNNEST(range(1, len(t))) AS r(i)
-      |  WHERE len(t) >= 2
-      |), c12 AS (SELECT w1, w2, COUNT(*) AS c12 FROM bg GROUP BY 1, 2),
-      |c1 AS (SELECT w1, COUNT(*) AS c1 FROM bg GROUP BY 1),
-      |vocab AS (
-      |  SELECT COUNT(DISTINCT tok) AS v FROM (
-      |    SELECT unnest(string_split(text, ' ')) AS tok FROM documents) u),
-      |scored AS (
-      |  SELECT doc_id,
-      |    CAST(round(ln((CAST(c12 AS DOUBLE) + 1.0) /
-      |      (CAST(c1 AS DOUBLE) + CAST(v AS DOUBLE))) * 1000000.0) AS BIGINT) AS u
-      |  FROM bg JOIN c12 USING (w1, w2) JOIN c1 USING (w1), vocab)
-      |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-      |  CAST(SUM(u) AS BIGINT) AS sum_logp_u,
-      |  CAST(SUM(u) AS DOUBLE) / (CAST(COUNT(*) AS DOUBLE) * 1000000.0)
-      |    AS avg_logp
-      |FROM scored GROUP BY doc_id ORDER BY doc_id""".stripMargin
-
-  /** BM25 over the PERSISTED index store: postings written partitioned by
-    * token bucket, the probe enumerates its terms' buckets driver-side and
-    * the scan lists only those directories (gated from the executed plan,
-    * the q_hive_pruning device). Scores must equal the in-memory q_bm25
-    * path — the store round-trip changes nothing.
-    */
-  private val qBm25Index: Q = (s, dir) => {
-    import graft.functions.Bm25
-    val tmp = java.nio.file.Files.createTempDirectory("graft-bm25idx").toString
-    val docs = Tables.documents(s, dir)
-    Bm25.writeIndex(Bm25.buildIndex(docs), s"$tmp/idx")
-    val probed = Bm25.probeIndex(s, s"$tmp/idx", Bm25Terms)
-    val nSelected: Int = probed.queryExecution.executedPlan.collectLeaves()
-      .collect {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-          f.selectedPartitions.partitionCount
-      }.sum
-    val nBuckets = Bm25Terms.map(Bm25.bucketOf(_)).distinct.size
-    Bm25.score(probed, Bm25.docLengths(docs), Bm25Terms)
-      .withColumn("pruned_scan", lit(nSelected <= nBuckets))
-      .orderBy("doc_id")
-  }
-
-  private val bm25IndexSql =
-    graft.functions.Bm25.oracleSql(Bm25Terms, gateCol = Some("pruned_scan"))
-
-  /** Label-propagation communities ([[graft.operators.LabelPropagation]])
-    * on the part co-occurrence graph, 3 synchronous rounds. Deterministic
-    * min-label tie-breaking makes every round replayable, so the oracle is
-    * 3 GENERATED chained CTE rounds (the q_pagerank discipline) and the
-    * final labeling is hash-checked node by node — not a modularity bound.
-    */
-  private val LpaIters = 3
-
-  private val qLabelProp: Q = (s, dir) =>
-    graft.operators.LabelPropagation.run(coPurchaseEdges(s, dir), "a", "b", LpaIters)
-      .orderBy("node")
-
-  private val labelPropSql: String = {
-    val rounds = (1 to LpaIters).map { i =>
-      s"""c$i AS (
-         |  SELECT u.src AS node, p.label, COUNT(*) AS c
-         |  FROM und u JOIN l${i - 1} p ON p.node = u.dst
-         |  GROUP BY 1, 2),
-         |l$i AS (
-         |  SELECT node, label FROM (
-         |    SELECT node, label, ROW_NUMBER() OVER (
-         |      PARTITION BY node ORDER BY c DESC, label) AS rk
-         |    FROM c$i) t
-         |  WHERE rk = 1)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH pairs AS (
-       |  SELECT DISTINCT x.l_partkey AS a, y.l_partkey AS b
-       |  FROM lineitem x JOIN lineitem y ON x.l_orderkey = y.l_orderkey
-       |   AND x.l_partkey < y.l_partkey
-       |), und AS (
-       |  SELECT a AS src, b AS dst FROM pairs
-       |  UNION SELECT b, a FROM pairs
-       |), l0 AS (
-       |  SELECT DISTINCT src AS node, src AS label FROM und
-       |),
-       |$rounds
-       |SELECT node, label FROM l$LpaIters ORDER BY node""".stripMargin
-  }
-
-  /** Weighted sampling without replacement via the deterministic
-    * exponential race (Efraimidis–Spirakis A-ExpJ): each doc gets
-    * key = -ln(u)/w with u a pure function of doc_id (md5 bits) and
-    * w = n_chars; the k smallest keys are the sample. A pure-function
-    * race means the sample is reproducible on any engine or cluster size,
-    * and top-k by key is `TakeOrderedAndProject` — per-partition heaps,
-    * no global sort. Keys quantized to integer picos (1e12) before
-    * ranking per the ln-parity rule.
-    */
-  private val qWeightedSample: Q = (s, dir) => {
-    val h = conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
-      .cast("double")
-    val u = (h + lit(0.5)) / lit(4294967296.0)
-    val key = round(-log(u) / col("n_chars").cast("double") * lit(1e12))
-      .cast("long")
-    Tables.documents(s, dir)
-      .select(col("doc_id"), col("n_chars"), key.as("key_p"))
-      .orderBy(col("key_p").asc, col("doc_id").asc)
-      .limit(50)
-  }
-
-  /** md5-hex → integer rebuilt digit-by-digit (DuckDB has no base-16
-    * conv) — the q_hash_split device, widened to 8 hex digits.
-    */
-  private val weightedSampleSql = {
-    def hexDigit(i: Int) =
-      s"(strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), $i, 1)) - 1)"
-    val h = (1 to 8).map(i =>
-      s"${hexDigit(i)} * ${java.lang.Long.toString(1L << (4 * (8 - i)))}")
-      .mkString(" + ")
-    s"""SELECT doc_id, n_chars,
-       |  CAST(round(-ln((($h) + 0.5) / 4294967296.0) /
-       |    CAST(n_chars AS DOUBLE) * 1e12) AS BIGINT) AS key_p
-       |FROM documents
-       |ORDER BY key_p, doc_id LIMIT 50""".stripMargin
-  }
-
-  /** DSIR-style data selection ([[graft.pipeline.ImportanceSelect]]):
-    * hashed-token importance resampling against the English subset as the
-    * target distribution — ONE conditional-count aggregation fits both
-    * distributions (256 hashed buckets, partial-agg collapses the
-    * exchange to O(tasks×256) rows), the driver collects exactly 256
-    * weight rows (bounded constant), and scoring is a map-only
-    * array-literal lookup summed per doc in integer micro-units, top-k
-    * via TakeOrderedAndProject. The oracle replays md5 bucketing,
-    * add-one-smoothed micro-quantized log ratios, and the integer doc
-    * sums — selection is hash-checked end to end, not recall-tested.
-    */
-  private val qImportanceSelect: Q = (s, dir) => {
-    graft.pipeline.ImportanceSelect
-      .select(Tables.documents(s, dir), "text", "doc_id",
-        col("lang") === lit("en"), 100)
-      .select(col("doc_id"), col("lang"), col("source"), col("score_u"))
-  }
-
-  private val importanceSelectSql = {
-    def hexDigit(i: Int) =
-      s"(strpos('0123456789abcdef', substr(md5(w), $i, 1)) - 1)"
-    val h = (1 to 8).map(i =>
-      s"${hexDigit(i)} * ${java.lang.Long.toString(1L << (4 * (8 - i)))}")
-      .mkString(" + ")
-    val B = graft.pipeline.ImportanceSelect.Buckets
-    s"""WITH toks AS (
-       |  SELECT doc_id, lang, unnest(string_split(text, ' ')) AS w
-       |  FROM documents
-       |), tb AS (
-       |  SELECT doc_id, lang, CAST(($h) % $B AS BIGINT) AS b FROM toks
-       |), dist AS (
-       |  SELECT b, COUNT(*) AS cc,
-       |    COUNT(*) FILTER (WHERE lang = 'en') AS tc
-       |  FROM tb GROUP BY 1
-       |), tot AS (
-       |  SELECT CAST(SUM(cc) + $B AS DOUBLE) AS nc,
-       |    CAST(SUM(tc) + $B AS DOUBLE) AS nt FROM dist
-       |), wts AS (
-       |  SELECT r.range AS b,
-       |    CAST(round(1e6 * ln((COALESCE(d.tc, 0) + 1.0) * t.nc /
-       |      ((COALESCE(d.cc, 0) + 1.0) * t.nt))) AS BIGINT) AS wt
-       |  FROM range($B) r LEFT JOIN dist d ON d.b = r.range CROSS JOIN tot t
-       |), scores AS (
-       |  SELECT tb.doc_id, SUM(w.wt) AS score_u
-       |  FROM tb JOIN wts w ON w.b = tb.b GROUP BY 1
-       |)
-       |SELECT d.doc_id, d.lang, d.source, CAST(s.score_u AS BIGINT) AS score_u
-       |FROM scores s JOIN documents d ON d.doc_id = s.doc_id
-       |ORDER BY score_u DESC, s.doc_id LIMIT 100""".stripMargin
-  }
-
-  /** Incremental materialized-view refresh: the persisted base MV (orders
-    * before 1998) is merged with the DELTA's partial aggregate — refresh
-    * cost is O(delta + MV), never a rescan of base facts. Count-sums and
-    * exact decimal revenue-sums are re-aggregable, so the oracle — a full
-    * recompute over all orders — must hash-match the merge exactly.
-    */
-  private val qMvIncremental: Q = (s, dir) => {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-mvinc").toString
-    val o = Tables.orders(s, dir)
-    def partial(df: DataFrame) =
-      df.groupBy(monthSid(col("o_orderdate")).as("month_sid"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("o_totalprice").cast("decimal(18,2)")).as("rev"))
-    partial(o.filter(col("o_orderdate") < lit("1998-01-01")))
-      .write.mode("overwrite").parquet(s"$tmp/mv")
-    s.read.parquet(s"$tmp/mv")
-      .unionAll(partial(o.filter(col("o_orderdate") >= lit("1998-01-01"))))
-      .groupBy("month_sid")
-      .agg(sum(col("n")).as("n"), sum(col("rev")).as("rev2"))
-      .select(col("month_sid"), col("n"), col("rev2").cast("double").as("rev"))
-      .orderBy("month_sid")
-  }
-
-  private val mvIncrementalSql =
-    s"""SELECT $monthSidSql AS month_sid, CAST(COUNT(*) AS BIGINT) AS n,
-       |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS rev
-       |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin
-
-  // ---------------------------------------------- event-series analytics II
-
-  /** Vertica's CONDITIONAL_CHANGE_EVENT / CONDITIONAL_TRUE_EVENT analytic
-    * pair: per user, ordered by (event-ms, event_id), `cce` counts
-    * transitions of event_type and `cte` counts rows where the monitored
-    * predicate (value > 600) held — both as running totals, Vertica's
-    * semantics (the change counter increments ON the changed row).
-    * Partitioned window over user_id — key cardinality scales with data,
-    * never a global window. Emits the per-row running counters for a
-    * deterministic user subsample so the analytic itself (not just a
-    * final value) is hash-checked. The subsample keeps whole users, so
-    * filtering before/after the window is equivalent in both engines.
-    */
-  private val qChangeEvents: Q = (s, dir) => {
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("tms").asc, col("event_id").asc)
-    val cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    Tables.events(s, dir)
-      .select(col("user_id"), col("event_id"),
-        unix_millis(col("ts")).as("tms"), col("event_type"), col("value"))
-      .withColumn("chg",
-        when(lag(col("event_type"), 1).over(w).isNotNull &&
-          lag(col("event_type"), 1).over(w) =!= col("event_type"), 1)
-          .otherwise(0))
-      .withColumn("hit", when(col("value") > 600.0d, 1).otherwise(0))
-      .withColumn("cce", sum(col("chg")).over(cum).cast("long"))
-      .withColumn("cte", sum(col("hit")).over(cum).cast("long"))
-      .filter(pmod(col("user_id"), lit(29)) === 1)
-      .select(col("user_id"), col("event_id"), col("tms"), col("cce"), col("cte"))
-      .orderBy("user_id", "tms", "event_id")
-  }
-
-  private val changeEventsSql =
-    """WITH e AS (
-      |  SELECT user_id, event_id, epoch_ms(ts) AS tms, event_type, value
-      |  FROM events WHERE user_id % 29 = 1
-      |), f AS (
-      |  SELECT user_id, event_id, tms,
-      |    CASE WHEN lag(event_type) OVER w IS NOT NULL
-      |           AND lag(event_type) OVER w <> event_type THEN 1 ELSE 0 END AS chg,
-      |    CASE WHEN value > 600 THEN 1 ELSE 0 END AS hit
-      |  FROM e
-      |  WINDOW w AS (PARTITION BY user_id ORDER BY tms, event_id)
-      |)
-      |SELECT user_id, event_id, tms,
-      |  CAST(SUM(chg) OVER c AS BIGINT) AS cce,
-      |  CAST(SUM(hit) OVER c AS BIGINT) AS cte
-      |FROM f
-      |WINDOW c AS (PARTITION BY user_id ORDER BY tms, event_id
-      |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-      |ORDER BY user_id, tms, event_id""".stripMargin
-
-  /** Vertica MATCH-clause event pattern matching (MATCH_RECOGNIZE
-    * semantics): per user, the time-ordered event stream is reduced to a
-    * symbol string (one char per event — the five event_type initials are
-    * distinct) and the pattern `view+ click purchase` is matched greedily,
-    * non-overlapping, leftmost-first — Vertica's matching rule. The
-    * per-key collect is bounded by per-user activity (the sessionize
-    * discipline); matching is one regex pass per user — no joins, no
-    * state machine materialization, and the groupBy is the only shuffle.
-    */
-  private val qEventMatch: Q = (s, dir) => {
-    Tables.events(s, dir)
-      .select(col("user_id"), unix_millis(col("ts")).as("tms"),
-        col("event_id"), substring(col("event_type"), 1, 1).as("sym"))
-      .groupBy(col("user_id"))
-      .agg(array_sort(collect_list(struct(col("tms"), col("event_id"), col("sym")))).as("seq"))
-      .withColumn("str", expr("array_join(transform(seq, x -> x.sym), '')"))
-      .withColumn("ms", expr("regexp_extract_all(str, 'v+cp', 0)"))
-      .filter(size(col("ms")) > 0)
-      .select(col("user_id"),
-        size(col("ms")).cast("long").as("n_matches"),
-        expr("aggregate(ms, 0L, (a, m) -> a + length(m))").as("matched_len"),
-        expr("array_max(transform(ms, m -> CAST(length(m) AS BIGINT)))").as("longest"))
-      .orderBy("user_id")
-  }
-
-  private val eventMatchSql =
-    """WITH seq AS (
-      |  SELECT user_id,
-      |    string_agg(substr(event_type, 1, 1), ''
-      |      ORDER BY epoch_ms(ts), event_id) AS s
-      |  FROM events GROUP BY user_id
-      |), m AS (
-      |  SELECT user_id, regexp_extract_all(s, 'v+cp') AS ms FROM seq
-      |)
-      |SELECT user_id, CAST(len(ms) AS BIGINT) AS n_matches,
-      |  CAST(list_sum(list_transform(ms, x -> length(x))) AS BIGINT) AS matched_len,
-      |  CAST(list_max(list_transform(ms, x -> length(x))) AS BIGINT) AS longest
-      |FROM m WHERE len(ms) > 0 ORDER BY user_id""".stripMargin
-
-  /** Vertica TIMESERIES clause with linear interpolation: per user, the
-    * purchase-value series is resampled onto a fixed daily slice spine
-    * (31 days of Jan 2024, pure epoch-ms arithmetic — timezone-free),
-    * each slice linearly interpolated between the bracketing real points
-    * and NULL outside the known range (Vertica's TS edge rule).
-    * Partitioned by user — per-key series are bounded, key cardinality
-    * scales with data, no global window; the spine is generated per key
-    * by sequence(), never stored. Points sort before a coincident slice,
-    * so a slice landing exactly on a point returns that point's value.
-    * Both engines evaluate the identical double expression on identical
-    * exact inputs, so the interpolated doubles are bit-equal.
-    */
-  private val qTimeseriesInterp: Q = (s, dir) => {
-    val day = 86400000L
-    val t0 = 1704067200000L // 2024-01-01T00:00:00Z
-    val pts = Tables.events(s, dir)
-      .filter(col("event_type") === "purchase")
-      .select(col("user_id"), unix_millis(col("ts")).as("tms"),
-        col("event_id"), col("value"))
-      .groupBy(col("user_id"), col("tms"))
-      .agg(max(struct(col("event_id"), col("value"))).as("m"))
-      .select(col("user_id"), col("tms"), col("m").getField("value").as("v"),
-        lit(0).as("is_slice"))
-    val spine = pts.select(col("user_id")).distinct()
-      .select(col("user_id"),
-        explode(expr(s"sequence(${t0}L, ${t0 + 30 * day}L, ${day}L)")).as("tms"))
-      .select(col("user_id"), col("tms"), lit(null).cast("double").as("v"),
-        lit(1).as("is_slice"))
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("tms").asc, col("is_slice").asc)
-    val back = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val fwd = w.rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    val pt = when(col("is_slice") === 0, col("tms"))
-    pts.unionByName(spine)
-      .withColumn("prev_v", last(col("v"), ignoreNulls = true).over(back))
-      .withColumn("prev_t", last(pt, ignoreNulls = true).over(back))
-      .withColumn("next_v", first(col("v"), ignoreNulls = true).over(fwd))
-      .withColumn("next_t", first(pt, ignoreNulls = true).over(fwd))
-      .filter(col("is_slice") === 1)
-      .select(col("user_id"), col("tms").as("slice_ms"),
-        when(col("prev_t").isNotNull && col("next_t").isNotNull,
-          col("prev_v") + (col("next_v") - col("prev_v")) *
-            ((col("tms") - col("prev_t")).cast("double") /
-              (col("next_t") - col("prev_t")).cast("double"))).as("v_interp"))
-      .orderBy("user_id", "slice_ms")
-  }
-
-  private val timeseriesInterpSql =
-    """WITH p AS (
-      |  SELECT user_id, epoch_ms(ts) AS tms, arg_max(value, event_id) AS v
-      |  FROM events WHERE event_type = 'purchase'
-      |  GROUP BY user_id, epoch_ms(ts)
-      |), pts AS (
-      |  SELECT user_id, tms, v, 0 AS is_slice FROM p
-      |  UNION ALL
-      |  SELECT u.user_id, g.tms, NULL AS v, 1 AS is_slice
-      |  FROM (SELECT DISTINCT user_id FROM p) u
-      |  CROSS JOIN (SELECT CAST(gs AS BIGINT) AS tms
-      |    FROM generate_series(1704067200000, 1706659200000, 86400000) t(gs)) g
-      |), f AS (
-      |  SELECT user_id, tms, is_slice,
-      |    last_value(v IGNORE NULLS) OVER b AS prev_v,
-      |    last_value(CASE WHEN is_slice = 0 THEN tms END IGNORE NULLS) OVER b AS prev_t,
-      |    first_value(v IGNORE NULLS) OVER fw AS next_v,
-      |    first_value(CASE WHEN is_slice = 0 THEN tms END IGNORE NULLS) OVER fw AS next_t
-      |  FROM pts
-      |  WINDOW b AS (PARTITION BY user_id ORDER BY tms, is_slice
-      |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-      |  fw AS (PARTITION BY user_id ORDER BY tms, is_slice
-      |    ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)
-      |)
-      |SELECT user_id, tms AS slice_ms,
-      |  CASE WHEN prev_t IS NOT NULL AND next_t IS NOT NULL
-      |    THEN prev_v + (next_v - prev_v) *
-      |      (CAST(tms - prev_t AS DOUBLE) / CAST(next_t - prev_t AS DOUBLE))
-      |  END AS v_interp
-      |FROM f WHERE is_slice = 1 ORDER BY user_id, slice_ms""".stripMargin
-
-  /** REGR_SLOPE / REGR_INTERCEPT (per-nation price trend) from exact
-    * sufficient statistics: Σx, Σx² (day offsets, integer), Σy, Σxy
-    * (money, exact DECIMAL) — every aggregate map-side combinable, the
-    * closed-form OLS arithmetic done once per group in double at the end.
-    * sum(double) never happens, so the result is bit-stable under any
-    * partitioning at any scale; the only shuffles are the fact-dim join
-    * and the groupBy.
-    */
-  private val qRegression: Q = (s, dir) => {
-    val x = datediff(col("o_orderdate"), lit("1992-01-01")).cast("long")
-    val y = col("o_totalprice").cast("decimal(18,2)")
-    Tables.orders(s, dir)
-      .join(Tables.customer(s, dir), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(Tables.nation(s, dir)),
-        col("c_nationkey") === col("n_nationkey"))
-      .select(col("n_name"), x.as("x"), y.as("y"))
-      .groupBy(col("n_name"))
-      .agg(count(lit(1)).as("n"), sum(col("x")).as("sx"),
-        sum(col("x") * col("x")).as("sxx"), sum(col("y")).as("sy"),
-        sum(col("x").cast("decimal(18,0)") * col("y")).as("sxy"))
-      .select(col("n_name"), col("n"),
-        col("sx").cast("double").as("sxd"), col("sxx").cast("double").as("sxxd"),
-        col("sy").cast("double").as("syd"), col("sxy").cast("double").as("sxyd"))
-      .withColumn("slope",
-        (col("n") * col("sxyd") - col("sxd") * col("syd")) /
-          (col("n") * col("sxxd") - col("sxd") * col("sxd")))
-      .withColumn("intercept",
-        (col("syd") - col("slope") * col("sxd")) / col("n"))
-      .select(col("n_name"), col("n"), col("slope"), col("intercept"))
-      .orderBy("n_name")
-  }
-
-  private val regressionSql =
-    """WITH s AS (
-      |  SELECT n_name, COUNT(*) AS n,
-      |    CAST(SUM(x) AS DOUBLE) AS sxd,
-      |    CAST(SUM(x * x) AS DOUBLE) AS sxxd,
-      |    CAST(SUM(y) AS DOUBLE) AS syd,
-      |    CAST(SUM(CAST(x AS DECIMAL(18,0)) * y) AS DOUBLE) AS sxyd
-      |  FROM (
-      |    SELECT n_name,
-      |      CAST(date_diff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE)) AS BIGINT) AS x,
-      |      CAST(o_totalprice AS DECIMAL(18,2)) AS y
-      |    FROM orders
-      |    JOIN customer ON o_custkey = c_custkey
-      |    JOIN nation ON c_nationkey = n_nationkey
-      |  ) t GROUP BY n_name
-      |)
-      |SELECT n_name, n,
-      |  (n * sxyd - sxd * syd) / (n * sxxd - sxd * sxd) AS slope,
-      |  (syd - ((n * sxyd - sxd * syd) / (n * sxxd - sxd * sxd)) * sxd) / n
-      |    AS intercept
-      |FROM s ORDER BY n_name""".stripMargin
-
-  /** The stream-side purge run end-to-end: condemned keys (a deterministic
-    * sample standing in for a deletion-request batch) anti-joined out of
-    * the event stream inside Structured Streaming
-    * ([[graft.streaming.EventsStream.purgeDrain]]), drained to parquet,
-    * then aggregated. `condemned_seen` is the in-band audit bit — 0 only
-    * if no condemned key survived the stream. The oracle replays the
-    * complement over the batch table: the hash matches only if the stream
-    * passed exactly the surviving rows, byte for byte.
-    */
-  private val qStreamPurge: Q = (s, dir) => {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-spurge").toString
-    val condemned = Tables.events(s, dir)
-      .select(col("user_id")).filter(pmod(col("user_id"), lit(19)) === 3)
-      .distinct()
-    streaming.EventsStream.purgeDrain(s, dir, condemned, s"$tmp/out", s"$tmp/ck")
-    s.read.parquet(s"$tmp/out")
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"), expr("bit_xor(event_id)").as("id_xor"),
-        max(when(pmod(col("user_id"), lit(19)) === 3, 1).otherwise(0))
-          .cast("long").as("condemned_seen"),
-        Exact.sumExact(col("value")).as("total_value"))
-      .orderBy("event_type")
-  }
-
-  private val streamPurgeSql =
-    """SELECT event_type, COUNT(*) AS n,
-      |  CAST(bit_xor(event_id) AS BIGINT) AS id_xor,
-      |  CAST(MAX(CASE WHEN user_id % 19 = 3 THEN 1 ELSE 0 END) AS BIGINT)
-      |    AS condemned_seen,
-      |  CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS total_value
-      |FROM events WHERE user_id % 19 <> 3
-      |GROUP BY event_type ORDER BY event_type""".stripMargin
-
-  // ---------------------------------------------- profiling / hygiene
-
-  /** Column profiling (operators.Profile — the ANALYZE_STATISTICS shape):
-    * one aggregate pass over lineitem emitting count/nulls/NDV/min/max
-    * per column, one row each. Exact NDV for oracle parity; the 100 TB
-    * variant swaps in approx_count_distinct with the same plan shape.
-    */
-  private val qProfile: Q = (s, dir) =>
-    operators.Profile.profile(Tables.lineitem(s, dir),
-      numericCols = Seq("l_quantity", "l_extendedprice", "l_discount"),
-      stringCols = Seq("l_returnflag", "l_linestatus"))
-      .orderBy("col_name")
-
-  private val profileSql = {
-    def num(c: String) =
-      s"""SELECT '$c' AS col_name,
-         |  COUNT(*) - COUNT($c) AS n_nulls, COUNT($c) AS n_values,
-         |  COUNT(DISTINCT $c) AS ndv,
-         |  CAST(MIN($c) AS DOUBLE) AS min_num, CAST(MAX($c) AS DOUBLE) AS max_num,
-         |  CAST(NULL AS VARCHAR) AS min_str, CAST(NULL AS VARCHAR) AS max_str
-         |FROM lineitem""".stripMargin
-    def str(c: String) =
-      s"""SELECT '$c' AS col_name,
-         |  COUNT(*) - COUNT($c) AS n_nulls, COUNT($c) AS n_values,
-         |  COUNT(DISTINCT $c) AS ndv,
-         |  CAST(NULL AS DOUBLE) AS min_num, CAST(NULL AS DOUBLE) AS max_num,
-         |  MIN($c) AS min_str, MAX($c) AS max_str
-         |FROM lineitem""".stripMargin
-    (Seq("l_quantity", "l_extendedprice", "l_discount").map(num) ++
-      Seq("l_returnflag", "l_linestatus").map(str))
-      .mkString("", "\nUNION ALL\n", "\nORDER BY col_name")
-  }
-
-  /** URL canonicalization + canonical-URL dedup
-    * ([[graft.pipeline.UrlCurate]]): deterministic messy synthetic URLs
-    * (the q_pii_scrub injection discipline — the testdata has no URL
-    * column) normalized by lowercasing scheme/host, stripping `www.` and
-    * default ports, collapsing trailing slashes, dropping tracking params
-    * + fragments, and SORTING surviving query params; dedup keeps the min
-    * doc_id per canonical URL. Map-only canonicalization, one 8-byte-ish
-    * keyed aggregate — the free pre-content dedup pass of a web-crawl
-    * pipeline. Regex/array semantics chosen to match Java and RE2
-    * identically; the oracle replays injection + canonicalization +
-    * winner election verbatim.
-    */
-  private val qUrlCanonicalize: Q = (s, dir) =>
-    graft.pipeline.UrlCurate.curate(Tables.documents(s, dir))
-      .orderBy("doc_id")
-
-  /** Host-level crawl stats over the same canonicalized URLs — the
-    * curation dashboard a crawl pipeline keys its per-host policies on
-    * (crawl budgets, block decisions): docs per host, distinct canonical
-    * URLs, dup rate, content volume. One aggregate over the map-only
-    * canonicalization; the host is low-cardinality so the shuffle is
-    * trivial at any corpus size.
-    */
-  private val qHostStats: Q = (s, dir) => {
-    val docs = Tables.documents(s, dir)
-    graft.pipeline.UrlCurate.curate(docs)
-      .join(docs.select(col("doc_id"), col("n_chars")), "doc_id")
-      .groupBy(col("host"))
-      .agg(count(lit(1)).as("n_docs"),
-        countDistinct(col("canon_url")).as("n_urls"),
-        sum(when(col("keep"), 1L).otherwise(0L)).as("n_kept"),
-        sum(col("n_chars")).as("total_chars"))
-      .withColumn("dup_rate",
-        lit(1.0) - col("n_kept").cast("double") / col("n_docs").cast("double"))
-      .orderBy("host")
-  }
-
-  private val urlCanonicalizeSql =
-    """WITH u AS (
-      |  SELECT doc_id,
-      |    (CASE WHEN doc_id % 5 = 0 THEN 'HTTPS://'
-      |          WHEN doc_id % 5 = 1 THEN 'https://' ELSE 'http://' END)
-      |    || (CASE WHEN doc_id % 3 = 0 THEN 'WWW.' ELSE '' END)
-      |    || upper(substr(source, 1, 1)) || substr(source, 2, 100)
-      |    || '.Example.COM'
-      |    || (CASE WHEN doc_id % 5 = 0 THEN ':443'
-      |             WHEN doc_id % 7 = 0 THEN ':80' ELSE '' END)
-      |    || '/docs/item-' || CAST(doc_id % 10 AS VARCHAR)
-      |    || (CASE WHEN doc_id % 4 = 0 THEN '/' ELSE '' END)
-      |    || (CASE WHEN doc_id % 2 = 0 THEN '?b=2&utm_source=feed&a=1'
-      |             ELSE '?a=1&b=2&utm_campaign=x&fbclid=abc' END)
-      |    || (CASE WHEN doc_id % 2 = 0 THEN '#sec' ELSE '' END) AS url
-      |  FROM documents
-      |), parts AS (
-      |  SELECT doc_id, url,
-      |    lower(regexp_extract(url, '^([A-Za-z]+)://([^/?#]+)([^?#]*)\??([^#]*)#?.*$', 1)) AS scheme,
-      |    lower(regexp_extract(url, '^([A-Za-z]+)://([^/?#]+)([^?#]*)\??([^#]*)#?.*$', 2)) AS host_port,
-      |    regexp_extract(url, '^([A-Za-z]+)://([^/?#]+)([^?#]*)\??([^#]*)#?.*$', 3) AS raw_path,
-      |    regexp_extract(url, '^([A-Za-z]+)://([^/?#]+)([^?#]*)\??([^#]*)#?.*$', 4) AS raw_query
-      |  FROM u
-      |), canon AS (
-      |  SELECT doc_id,
-      |    CASE WHEN scheme = 'https'
-      |      THEN regexp_replace(regexp_replace(host_port, '^www\.', ''), ':443$', '')
-      |      ELSE regexp_replace(regexp_replace(host_port, '^www\.', ''), ':80$', '')
-      |    END AS host,
-      |    CASE WHEN raw_path = '' THEN '/'
-      |         WHEN regexp_replace(raw_path, '/$', '') = '' THEN '/'
-      |         ELSE regexp_replace(raw_path, '/$', '') END AS path,
-      |    list_sort(list_filter(string_split(raw_query, '&'),
-      |      p -> p <> '' AND NOT starts_with(p, 'utm_')
-      |        AND NOT starts_with(p, 'fbclid')
-      |        AND NOT starts_with(p, 'gclid'))) AS kept,
-      |    scheme
-      |  FROM parts
-      |), c2 AS (
-      |  SELECT doc_id, host,
-      |    scheme || '://' || host || path ||
-      |      (CASE WHEN len(kept) = 0 THEN ''
-      |            ELSE '?' || array_to_string(kept, '&') END) AS canon_url
-      |  FROM canon
-      |)
-      |SELECT doc_id, canon_url, host,
-      |  doc_id = MIN(doc_id) OVER (PARTITION BY canon_url) AS keep
-      |FROM c2 ORDER BY doc_id""".stripMargin
-
-  /** Same injection/canonicalization CTE chain, aggregated per host.
-    * Built by plain concatenation — the embedded SQL contains `||` concat
-    * operators that an outer `stripMargin` would mangle.
-    */
-  private val hostStatsSql =
-    Seq(
-      "WITH k AS (",
-      urlCanonicalizeSql.stripSuffix(" ORDER BY doc_id"),
-      ")",
-      "SELECT host, CAST(COUNT(*) AS BIGINT) AS n_docs,",
-      "  CAST(COUNT(DISTINCT canon_url) AS BIGINT) AS n_urls,",
-      "  CAST(SUM(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,",
-      "  CAST(SUM(d.n_chars) AS BIGINT) AS total_chars,",
-      "  1.0 - CAST(SUM(CASE WHEN keep THEN 1 ELSE 0 END) AS DOUBLE)",
-      "      / CAST(COUNT(*) AS DOUBLE) AS dup_rate",
-      "FROM k JOIN documents d USING (doc_id)",
-      "GROUP BY host ORDER BY host").mkString("\n")
-
-  /** PII scrubbing for training corpora: deterministic synthetic PII
-    * (emails keyed by doc_id, a phone token) is injected, then redacted
-    * with codegen regexp_replace — a single map-only projection, no
-    * shuffle beyond the final per-language aggregate. The oracle replays
-    * injection + redaction; `residual_pii` is the in-band audit bit (1 if
-    * any pattern survived). Patterns avoid engine-specific syntax so Java
-    * and RE2 match identically.
-    */
-  private val qPiiScrub: Q = (s, dir) => {
-    val emailPat = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+[.][A-Za-z]{2,}"
-    val phonePat = "\\b[0-9]{3}-[0-9]{4}\\b"
-    Tables.documents(s, dir)
-      .withColumn("t", concat(col("text"),
-        when(pmod(col("doc_id"), lit(7)) === 0,
-          concat(lit(" contact user"), col("doc_id").cast("string"),
-            lit("@example.com"))).otherwise(lit("")),
-        when(pmod(col("doc_id"), lit(11)) === 0, lit(" call 555-0199"))
-          .otherwise(lit(""))))
-      .withColumn("n_email", regexp_count(col("t"), lit(emailPat)))
-      .withColumn("n_phone", regexp_count(col("t"), lit(phonePat)))
-      .withColumn("scrubbed",
-        regexp_replace(regexp_replace(col("t"), emailPat, "[EMAIL]"),
-          phonePat, "[PHONE]"))
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("n_email")).cast("long").as("emails_redacted"),
-        sum(col("n_phone")).cast("long").as("phones_redacted"),
-        sum(length(col("scrubbed"))).cast("long").as("chars_after"),
-        max(when(regexp_count(col("scrubbed"), lit(emailPat)) +
-          regexp_count(col("scrubbed"), lit(phonePat)) > 0, 1).otherwise(0))
-          .cast("long").as("residual_pii"))
-      .orderBy("lang")
-  }
-
-  private val piiScrubSql =
-    """WITH inj AS (
-      |  SELECT lang, text ||
-      |    CASE WHEN doc_id % 7 = 0
-      |      THEN ' contact user' || CAST(doc_id AS VARCHAR) || '@example.com'
-      |      ELSE '' END ||
-      |    CASE WHEN doc_id % 11 = 0 THEN ' call 555-0199' ELSE '' END AS t
-      |  FROM documents
-      |), scr AS (
-      |  SELECT lang, t,
-      |    len(regexp_extract_all(t, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+[.][A-Za-z]{2,}')) AS n_email,
-      |    len(regexp_extract_all(t, '\b[0-9]{3}-[0-9]{4}\b')) AS n_phone,
-      |    regexp_replace(regexp_replace(t,
-      |      '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+[.][A-Za-z]{2,}', '[EMAIL]', 'g'),
-      |      '\b[0-9]{3}-[0-9]{4}\b', '[PHONE]', 'g') AS scrubbed
-      |  FROM inj
-      |)
-      |SELECT lang, COUNT(*) AS n_docs,
-      |  CAST(SUM(n_email) AS BIGINT) AS emails_redacted,
-      |  CAST(SUM(n_phone) AS BIGINT) AS phones_redacted,
-      |  CAST(SUM(length(scrubbed)) AS BIGINT) AS chars_after,
-      |  CAST(MAX(CASE WHEN
-      |      len(regexp_extract_all(scrubbed, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+[.][A-Za-z]{2,}')) +
-      |      len(regexp_extract_all(scrubbed, '\b[0-9]{3}-[0-9]{4}\b')) > 0
-      |    THEN 1 ELSE 0 END) AS BIGINT) AS residual_pii
-      |FROM scr GROUP BY lang ORDER BY lang""".stripMargin
-
-  /** Jaro–Winkler similarity through the custom codegen expression
-    * (graftx.JaroWinkler — Spark has levenshtein but not JW): consecutive
-    * customer names (high-similarity, exercises the Winkler prefix boost)
-    * and name-vs-mktsegment (low-similarity, no-boost path), both checked
-    * against DuckDB's jaro_winkler_similarity to the last bit. Map-only
-    * compute; the key-shift self-join is the only shuffle.
-    */
-  private val qJaroWinkler: Q = (s, dir) => {
-    import org.apache.spark.sql.graftx.JaroWinkler.jaro_winkler
-    val c = Tables.customer(s, dir)
-      .select(col("c_custkey"), col("c_name"), col("c_mktsegment"))
-    val a = c.filter(col("c_custkey") <= 200)
-      .select(col("c_custkey").as("k"), col("c_name").as("name_a"),
-        col("c_mktsegment").as("seg_a"))
-    val b = c.select((col("c_custkey") - 1).as("k"), col("c_name").as("name_b"))
-    a.join(b, "k")
-      .select(col("k"),
-        jaro_winkler(col("name_a"), col("name_b")).as("jw_name"),
-        jaro_winkler(col("name_a"), col("seg_a")).as("jw_cross"))
-      .orderBy("k")
-  }
-
-  private val jaroWinklerSql =
-    """SELECT a.c_custkey AS k,
-      |  jaro_winkler_similarity(a.c_name, b.c_name) AS jw_name,
-      |  jaro_winkler_similarity(a.c_name, a.c_mktsegment) AS jw_cross
-      |FROM customer a JOIN customer b ON b.c_custkey = a.c_custkey + 1
-      |WHERE a.c_custkey <= 200 ORDER BY k""".stripMargin
-
-  /** Chi-square independence test (orderpriority × orderstatus): the
-    * contingency table with expected counts and per-cell χ² contributions.
-    * All counts are exact map-combinable aggregates; the double arithmetic
-    * happens once per cell on identical exact inputs, so contributions are
-    * bit-equal across engines (the total statistic is one small sum the
-    * caller can take — emitting per-cell keeps the compare exact).
-    */
-  private val qChisq: Q = (s, dir) => {
-    val o = Tables.orders(s, dir)
-      .select(col("o_orderpriority").as("pri"), col("o_orderstatus").as("st"))
-    val cells = o.groupBy(col("pri"), col("st")).agg(count(lit(1)).as("obs"))
-    val rowT = o.groupBy(col("pri")).agg(count(lit(1)).as("row_n"))
-    val colT = o.groupBy(col("st")).agg(count(lit(1)).as("col_n"))
-    val tot = o.agg(count(lit(1)).as("n"))
-    cells.join(broadcast(rowT), "pri").join(broadcast(colT), "st")
-      .crossJoin(broadcast(tot))
-      .withColumn("expected",
-        col("row_n").cast("double") * col("col_n") / col("n"))
-      .withColumn("contrib",
-        (col("obs") - col("expected")) * (col("obs") - col("expected")) /
-          col("expected"))
-      .select(col("pri"), col("st"), col("obs"), col("expected"), col("contrib"))
-      .orderBy("pri", "st")
-  }
-
-  private val chisqSql =
-    """WITH c AS (
-      |  SELECT o_orderpriority AS pri, o_orderstatus AS st, COUNT(*) AS obs
-      |  FROM orders GROUP BY 1, 2
-      |), r AS (
-      |  SELECT o_orderpriority AS pri, COUNT(*) AS row_n FROM orders GROUP BY 1
-      |), cl AS (
-      |  SELECT o_orderstatus AS st, COUNT(*) AS col_n FROM orders GROUP BY 1
-      |), t AS (SELECT COUNT(*) AS n FROM orders),
-      |e AS (
-      |  SELECT pri, st, obs, CAST(row_n AS DOUBLE) * col_n / n AS expected
-      |  FROM c JOIN r USING (pri) JOIN cl USING (st) CROSS JOIN t
-      |)
-      |SELECT pri, st, obs, expected,
-      |  (obs - expected) * (obs - expected) / expected AS contrib
-      |FROM e ORDER BY pri, st""".stripMargin
-
-  /** Group-aware train/test split — the leakage-safe ML split: the md5
-    * bucket is computed on the GROUP key (user), so every user's events
-    * land wholly in one split; `leaky_users` is the in-band audit (count
-    * of users straddling splits — 0 by construction, and the oracle
-    * recomputes it independently). Same md5-bucket replay discipline as
-    * q_hash_split.
-    */
-  private val qGroupSplit: Q = (s, dir) => {
-    val bucket =
-      conv(substring(md5(col("user_id").cast("string")), 1, 4), 16, 10)
-        .cast("long") % 10
-    val ev = Tables.events(s, dir)
-      .withColumn("split", when(bucket < 8, "train").otherwise("test"))
-    val leaks = ev.groupBy(col("user_id"))
-      .agg(countDistinct(col("split")).as("ns"))
-      .filter(col("ns") > 1)
-      .agg(count(lit(1)).as("leaky_users"))
-    ev.groupBy(col("split"))
-      .agg(count(lit(1)).as("n_events"),
-        countDistinct(col("user_id")).as("n_users"),
-        expr("bit_xor(event_id)").as("id_xor"))
-      .crossJoin(broadcast(leaks))
-      .orderBy("split")
-  }
-
-  private val groupSplitSql = {
-    def hexDigit(i: Int) =
-      s"(strpos('0123456789abcdef', substr(md5(CAST(user_id AS VARCHAR)), $i, 1)) - 1)"
-    val bucket = s"((${hexDigit(1)}*4096 + ${hexDigit(2)}*256 + " +
-      s"${hexDigit(3)}*16 + ${hexDigit(4)}) % 10)"
-    s"""WITH ev AS (
-       |  SELECT user_id, event_id,
-       |    CASE WHEN $bucket < 8 THEN 'train' ELSE 'test' END AS split
-       |  FROM events
-       |), l AS (
-       |  SELECT COUNT(*) AS leaky_users FROM (
-       |    SELECT user_id FROM ev GROUP BY user_id
-       |    HAVING COUNT(DISTINCT split) > 1) t
-       |)
-       |SELECT split, COUNT(*) AS n_events,
-       |  COUNT(DISTINCT user_id) AS n_users,
-       |  CAST(bit_xor(event_id) AS BIGINT) AS id_xor, leaky_users
-       |FROM ev CROSS JOIN l GROUP BY split, leaky_users
-       |ORDER BY split""".stripMargin
-  }
-
-  /** BPE-style merge induction over the corpus — the vocabulary-training
-    * half of the tokenizer story (graftx.SubwordPieces is the inference
-    * half): R rounds of (count adjacent token pairs) → (pick the most
-    * frequent, count-desc/lexicographic tie-break) → (merge its
-    * occurrences left-to-right, non-overlapping). Token state rides as a
-    * double-space-joined string, so a round's merge is ONE codegen
-    * `replace` — the double separator makes non-overlapping left-to-right
-    * replacement exact (a single-space join would let adjacent matches
-    * share a boundary space and under-merge).
-    *
-    * Scale shape: pair counting is a map-side-combinable aggregate whose
-    * shuffle is bounded by the distinct-pair vocabulary, never corpus
-    * rows; the per-round argmax ships exactly ONE row to the driver
-    * (TakeOrdered — the ConnectedComponents convergence discipline); the
-    * merge is a map-only projection; `localCheckpoint` truncates lineage
-    * per round. Production BPE trainers run these same rounds over a
-    * corpus sample — here the slice is doc_id < 200 so the oracle can
-    * replay every round as a generated MATERIALIZED CTE (chosen pair,
-    * its count, and the post-merge corpus token total, all hash-compared
-    * per round).
-    */
-  private val BpeRounds = 6
-
-  private val qBpeTrain: Q = (s, dir) => {
-    var seqs = Tables.documents(s, dir).filter(col("doc_id") < 200)
-      .select(col("doc_id"), regexp_replace(col("text"), " ", "  ").as("seq"))
-      .localCheckpoint()
-    val rows = (1 to BpeRounds).map { r =>
-      val best = seqs.select(explode(expr(
-          "zip_with(slice(split(seq, '  '), 1, size(split(seq, '  ')) - 1), " +
-            "slice(split(seq, '  '), 2, size(split(seq, '  ')) - 1), " +
-            "(a, b) -> struct(a, b))")).as("p"))
-        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-        .agg(count(lit(1)).as("cnt"))
-        .orderBy(col("cnt").desc, col("a").asc, col("b").asc)
-        .limit(1).head()
-      val (a, b, cnt) =
-        (best.getString(0), best.getString(1), best.getLong(2))
-      def q(t: String) = sqlTok(t)
-      seqs = seqs.select(col("doc_id"),
-        expr(s"trim(replace(concat('  ', seq, '  '), " +
-          s"' ${q(a)}  ${q(b)} ', ' ${q(a)}_${q(b)} '))").as("seq"))
-        .localCheckpoint()
-      val tokens = seqs
-        .agg(sum(size(split(col("seq"), "  "))).cast("long")).head().getLong(0)
-      (r, s"${a}_$b", cnt, tokens)
-    }
-    import s.implicits._
-    rows.toDF("round", "merged", "cnt", "corpus_tokens").orderBy("round")
-  }
-
-  private val bpeTrainSql = {
-    val parts = Seq("WITH r0 AS MATERIALIZED (SELECT doc_id, " +
-      "replace(text, ' ', '  ') AS seq FROM documents WHERE doc_id < 200)") ++
-      (1 to BpeRounds).flatMap { i =>
-        val prev = s"r${i - 1}"
-        Seq(
-          s"""b$i AS MATERIALIZED (
-             |  SELECT a, b, COUNT(*) AS cnt FROM (
-             |    SELECT u.p[1] AS a, u.p[2] AS b FROM (
-             |      SELECT UNNEST(list_zip(toks[1:len(toks)-1], toks[2:len(toks)])) AS p
-             |      FROM (SELECT string_split(seq, '  ') AS toks FROM $prev) t) u
-             |  ) GROUP BY a, b ORDER BY cnt DESC, a, b LIMIT 1
-             |)""".stripMargin,
-          s"""r$i AS MATERIALIZED (
-             |  SELECT doc_id, trim(replace('  ' || seq || '  ',
-             |    ' ' || (SELECT a FROM b$i) || '  ' || (SELECT b FROM b$i) || ' ',
-             |    ' ' || (SELECT a FROM b$i) || '_' || (SELECT b FROM b$i) || ' ')) AS seq
-             |  FROM $prev
-             |)""".stripMargin)
-      }
-    val outRows = (1 to BpeRounds).map { i =>
-      s"""SELECT $i AS round,
-         |  (SELECT a || '_' || b FROM b$i) AS merged,
-         |  (SELECT cnt FROM b$i) AS cnt,
-         |  (SELECT CAST(SUM(len(string_split(seq, '  '))) AS BIGINT) FROM r$i)
-         |    AS corpus_tokens""".stripMargin
-    }
-    parts.mkString(",\n") + "\n" + outRows.mkString("\nUNION ALL\n") +
-      "\nORDER BY round"
-  }
-
-  /** The learned BPE merge list (same rounds as q_bpe_train), cached per
-    * (JVM, sfDir) — training is deterministic, so a cached merge list is
-    * identical to a refit one (the ModelCache contract).
-    */
-  /** Escape a learned token for a Spark SQL string literal: backslash
-    * first, then quote-doubling — the ONE sanitizer for all three BPE
-    * paths (train loop, merge-list fit, apply chain), so a corpus token
-    * containing `'` or `\` can't break parsing in any of them.
-    */
-  private def sqlTok(t: String): String =
-    t.replace("\\", "\\\\").replace("'", "''")
-
-  private def bpeMerges(s: SparkSession, dir: String): Seq[(String, String)] =
-    graft.similarity.ModelCache.getOrFit(s"bpe:$dir") {
-      var seqs = Tables.documents(s, dir).filter(col("doc_id") < 200)
-        .select(regexp_replace(col("text"), " ", "  ").as("seq"))
-        .localCheckpoint()
-      (1 to BpeRounds).map { _ =>
-        val best = seqs.select(explode(expr(
-            "zip_with(slice(split(seq, '  '), 1, size(split(seq, '  ')) - 1), " +
-              "slice(split(seq, '  '), 2, size(split(seq, '  ')) - 1), " +
-              "(a, b) -> struct(a, b))")).as("p"))
-          .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-          .agg(count(lit(1)).as("cnt"))
-          .orderBy(col("cnt").desc, col("a").asc, col("b").asc)
-          .limit(1).head()
-        val (a, b) = (best.getString(0), best.getString(1))
-        seqs = seqs.select(
-          expr(s"trim(replace(concat('  ', seq, '  '), " +
-            s"' ${sqlTok(a)}  ${sqlTok(b)} ', ' ${sqlTok(a)}_${sqlTok(b)} '))")
-            .as("seq")).localCheckpoint()
-        (a, b)
-      }
-    }
-
-  /** Train-on-sample, apply-at-scale — the production tokenizer pattern:
-    * the merge list induced by q_bpe_train's rounds (cached build-once)
-    * is applied to EVERY document as a chain of R codegen replaces — one
-    * map-only projection over the corpus, no shuffle until the per-lang
-    * accounting. The oracle re-derives the same merges from its own
-    * round CTEs and applies the same chain, so tokenization (total and
-    * merged-token counts per language) must agree exactly.
-    */
-  private val qBpeApply: Q = (s, dir) => {
-    val merges = bpeMerges(s, dir)
-    // the R-merge chain as nested SQL text — one codegen projection
-    val seqSql = merges.foldLeft("replace(text, ' ', '  ')") {
-      case (inner, (a, b)) =>
-        s"trim(replace(concat('  ', $inner, '  '), " +
-          s"' ${sqlTok(a)}  ${sqlTok(b)} ', ' ${sqlTok(a)}_${sqlTok(b)} '))"
-    }
-    Tables.documents(s, dir)
-      .select(col("lang"), expr(s"split($seqSql, '  ')").as("toks"))
-      .select(col("lang"), size(col("toks")).cast("long").as("n_toks"),
-        expr("size(filter(toks, t -> contains(t, '_')))").cast("long")
-          .as("n_merged"))
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_toks")).as("total_tokens"),
-        sum(col("n_merged")).as("merged_tokens"))
-      .orderBy("lang")
-  }
-
-  private val bpeApplySql = {
-    // the same training CTEs as bpeTrainSql, then application to ALL docs
-    val trainParts = Seq("WITH r0 AS MATERIALIZED (SELECT doc_id, " +
-      "replace(text, ' ', '  ') AS seq FROM documents WHERE doc_id < 200)") ++
-      (1 to BpeRounds).flatMap { i =>
-        val prev = s"r${i - 1}"
-        Seq(
-          s"""b$i AS MATERIALIZED (
-             |  SELECT a, b, COUNT(*) AS cnt FROM (
-             |    SELECT u.p[1] AS a, u.p[2] AS b FROM (
-             |      SELECT UNNEST(list_zip(toks[1:len(toks)-1], toks[2:len(toks)])) AS p
-             |      FROM (SELECT string_split(seq, '  ') AS toks FROM $prev) t) u
-             |  ) GROUP BY a, b ORDER BY cnt DESC, a, b LIMIT 1
-             |)""".stripMargin,
-          s"""r$i AS MATERIALIZED (
-             |  SELECT doc_id, trim(replace('  ' || seq || '  ',
-             |    ' ' || (SELECT a FROM b$i) || '  ' || (SELECT b FROM b$i) || ' ',
-             |    ' ' || (SELECT a FROM b$i) || '_' || (SELECT b FROM b$i) || ' ')) AS seq
-             |  FROM $prev
-             |)""".stripMargin)
-      }
-    val applyParts = Seq(
-      "a0 AS MATERIALIZED (SELECT lang, replace(text, ' ', '  ') AS seq FROM documents)") ++
-      (1 to BpeRounds).map { i =>
-        s"""a$i AS MATERIALIZED (
-           |  SELECT lang, trim(replace('  ' || seq || '  ',
-           |    ' ' || (SELECT a FROM b$i) || '  ' || (SELECT b FROM b$i) || ' ',
-           |    ' ' || (SELECT a FROM b$i) || '_' || (SELECT b FROM b$i) || ' ')) AS seq
-           |  FROM a${i - 1}
-           |)""".stripMargin
-      }
-    (trainParts ++ applyParts).mkString(",\n") +
-      s"""
-         |SELECT lang, COUNT(*) AS n_docs,
-         |  CAST(SUM(len(string_split(seq, '  '))) AS BIGINT) AS total_tokens,
-         |  CAST(SUM(len(list_filter(string_split(seq, '  '), t -> contains(t, '_'))))
-         |    AS BIGINT) AS merged_tokens
-         |FROM a$BpeRounds GROUP BY lang ORDER BY lang""".stripMargin
-  }
-
-  /** Rolling z-score anomaly detection — the monitoring companion of
-    * q_ewma: per user, a trailing 10-event window's mean/std computed
-    * from EXACT decimal sums (Σx, Σx² — order-independent), the z-score
-    * and variance arithmetic done in double once per row, so both
-    * engines produce bit-identical scores. Only full windows score
-    * (row ≥ 10); emitted rows are the |z| > 2 outliers. Partitioned by
-    * user — no global window, one shuffle.
-    */
-  private val qAnomaly: Q = (s, dir) => {
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("tms").asc, col("event_id").asc)
-    val trail = w.rowsBetween(-9, Window.currentRow)
-    Tables.events(s, dir)
-      .select(col("user_id"), col("event_id"),
-        unix_millis(col("ts")).as("tms"), col("value"))
-      .withColumn("rn", row_number().over(w))
-      .withColumn("sx", sum(col("value").cast("decimal(18,4)")).over(trail)
-        .cast("double"))
-      .withColumn("sxx",
-        sum((col("value").cast("decimal(18,4)") *
-          col("value").cast("decimal(18,4)"))).over(trail).cast("double"))
-      .filter(col("rn") >= 10)
-      .withColumn("mean", col("sx") / 10.0d)
-      .withColumn("variance",
-        (col("sxx") - col("sx") * col("sx") / 10.0d) / 9.0d)
-      .withColumn("z", (col("value") - col("mean")) / sqrt(col("variance")))
-      .filter(abs(col("z")) > 2.0d)
-      .select(col("user_id"), col("event_id"), col("tms"), col("z"))
-      .orderBy("user_id", "tms", "event_id")
-  }
-
-  private val anomalySql =
-    """WITH e AS (
-      |  SELECT user_id, event_id, epoch_ms(ts) AS tms, value,
-      |    row_number() OVER w AS rn,
-      |    CAST(SUM(CAST(value AS DECIMAL(18,4))) OVER t AS DOUBLE) AS sx,
-      |    CAST(SUM(CAST(value AS DECIMAL(18,4)) * CAST(value AS DECIMAL(18,4)))
-      |      OVER t AS DOUBLE) AS sxx
-      |  FROM events
-      |  WINDOW w AS (PARTITION BY user_id ORDER BY epoch_ms(ts), event_id),
-      |  t AS (PARTITION BY user_id ORDER BY epoch_ms(ts), event_id
-      |    ROWS BETWEEN 9 PRECEDING AND CURRENT ROW)
-      |), scored AS (
-      |  SELECT user_id, event_id, tms,
-      |    (value - sx / 10.0) / sqrt((sxx - sx * sx / 10.0) / 9.0) AS z
-      |  FROM e WHERE rn >= 10
-      |)
-      |SELECT user_id, event_id, tms, z FROM scored
-      |WHERE abs(z) > 2.0 ORDER BY user_id, tms, event_id""".stripMargin
-
-  /** Delta compaction for the merge-on-read store — the VACUUM/OPTIMIZE
-    * analogue (etl.MergeOnRead.compact): base ∪ accumulated deltas
-    * (upserts over two versions + tombstones) folded back into a single
-    * resolved base with an atomic rename swap, delta dir removed, read
-    * amplification reset to zero. The fixture (base + two delta batches
-    * derived from orders) is build-once; each run compacts a fresh copy.
-    * The oracle recomputes the resolved state from the delta RULES
-    * (latest-wins by version, tombstones drop), so the hash matches only
-    * if compaction applied exactly the merge-on-read semantics;
-    * `delta_dir_removed` and `max_version` ride in-band.
-    */
-  private val qDeltaCompact: Q = (s, dir) => {
-    val fx = Fixtures.getOrBuild(s"mor:$dir") { f =>
-      val o = Tables.orders(s, dir).select(col("o_orderkey").as("k"),
-        col("o_totalprice").cast("decimal(18,2)").as("v"))
-      o.select(col("k"), col("v"), lit(0L).as("version"), lit("u").as("op"))
-        .write.parquet(s"$f/base")
-      o.filter(col("k") % 7 === 0)
-        .select(col("k"),
-          (col("v") + lit(10).cast("decimal(18,2)")).cast("decimal(18,2)").as("v"),
-          lit(1L).as("version"), lit("u").as("op"))
-        .write.parquet(s"$f/delta")
-      o.filter(col("k") % 13 === 0)
-        .select(col("k"), col("v"), lit(2L).as("version"), lit("d").as("op"))
-        .unionByName(
-          o.filter(col("k") % 11 === 0 && col("k") % 13 =!= 0)
-            .select(col("k"),
-              (col("v") + lit(20).cast("decimal(18,2)")).cast("decimal(18,2)").as("v"),
-              lit(2L).as("version"), lit("u").as("op")))
-        .write.mode("append").parquet(s"$f/delta")
-    }
-    val tmp = Fixtures.mutableCopy(fx)
-    etl.MergeOnRead.compact(s, s"$tmp/base", s"$tmp/delta", Seq("k"), "version")
-    val fs = new org.apache.hadoop.fs.Path(tmp)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val deltaGone = !fs.exists(new org.apache.hadoop.fs.Path(s"$tmp/delta"))
-    s.read.parquet(s"$tmp/base")
-      .agg(count(lit(1)).as("n_rows"),
-        sum(col("v")).cast("double").as("val_sum"),
-        expr("bit_xor(k)").as("key_xor"),
-        max(col("version")).cast("long").as("max_version"))
-      .withColumn("delta_dir_removed", lit(deltaGone))
-  }
-
-  private val deltaCompactSql =
-    """WITH final AS (
-      |  SELECT o_orderkey AS k,
-      |    CASE WHEN o_orderkey % 11 = 0 AND o_orderkey % 13 <> 0
-      |         THEN CAST(o_totalprice AS DECIMAL(18,2)) + 20
-      |         WHEN o_orderkey % 7 = 0
-      |         THEN CAST(o_totalprice AS DECIMAL(18,2)) + 10
-      |         ELSE CAST(o_totalprice AS DECIMAL(18,2)) END AS v
-      |  FROM orders WHERE o_orderkey % 13 <> 0
-      |)
-      |SELECT COUNT(*) AS n_rows, CAST(SUM(v) AS DOUBLE) AS val_sum,
-      |  CAST(bit_xor(k) AS BIGINT) AS key_xor,
-      |  CAST(0 AS BIGINT) AS max_version, TRUE AS delta_dir_removed
-      |FROM final""".stripMargin
-
-  /** Temperature-scaled source mixing — the corpus-mixing step of an LLM
-    * data pipeline: per-source sampling rates ∝ size^α (α = 0.5, the
-    * up-weight-the-tail exponent), applied as a deterministic md5-bucket
-    * acceptance test per document. Weights are floored to integer micros
-    * BEFORE the cross-source sum so the normalization constant is exact —
-    * a raw double Σ√size would be summation-order dependent and could
-    * flip a rate at the 10⁻¹⁵ boundary between engines. Two tiny
-    * aggregates + one broadcast join; the corpus pass is map-only.
-    */
-  private val qSourceMixing: Q = (s, dir) => {
-    val docs = Tables.documents(s, dir)
-    val stats = docs.groupBy(col("source"))
-      .agg(count(lit(1)).as("n_src_docs"), sum(col("n_chars")).as("chars"))
-      .withColumn("w",
-        floor(sqrt(col("chars").cast("double")) * lit(1000000.0d)).cast("long"))
-    val tot = stats.agg(sum(col("w")).as("sumw"))
-    val rates = stats.crossJoin(broadcast(tot))
-      .withColumn("rate10k", least(
-        floor(lit(30000.0d) * col("w") / col("sumw") / col("chars") *
-          lit(10000.0d)).cast("long"),
-        lit(10000L)))
-      .select(col("source"), col("rate10k"))
-    val bucket =
-      conv(substring(md5(col("doc_id").cast("string")), 1, 4), 16, 10)
-        .cast("long") % 10000
-    docs.withColumn("bucket", bucket)
-      .join(broadcast(rates), "source")
-      .groupBy(col("source"), col("rate10k"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(when(col("bucket") < col("rate10k"), 1).otherwise(0))
-          .cast("long").as("picked_docs"),
-        sum(when(col("bucket") < col("rate10k"), col("n_chars"))
-          .otherwise(lit(0L))).cast("long").as("picked_chars"),
-        expr("bit_xor(CASE WHEN bucket < rate10k THEN doc_id ELSE 0 END)")
-          .as("id_xor"))
-      .orderBy("source")
-  }
-
-  private val sourceMixingSql = {
-    def hexDigit(i: Int) =
-      s"(strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), $i, 1)) - 1)"
-    val bucket = s"((${hexDigit(1)}*4096 + ${hexDigit(2)}*256 + " +
-      s"${hexDigit(3)}*16 + ${hexDigit(4)}) % 10000)"
-    s"""WITH stats AS (
-       |  SELECT source, SUM(n_chars) AS chars,
-       |    CAST(floor(sqrt(CAST(SUM(n_chars) AS DOUBLE)) *
-       |      CAST(1000000 AS DOUBLE)) AS BIGINT) AS w
-       |  FROM documents GROUP BY source
-       |), tot AS (SELECT SUM(w) AS sumw FROM stats),
-       |rates AS (
-       |  SELECT source, LEAST(CAST(floor(CAST(30000 AS DOUBLE) * w / sumw
-       |    / chars * CAST(10000 AS DOUBLE)) AS BIGINT), 10000) AS rate10k
-       |  FROM stats CROSS JOIN tot
-       |), d AS (
-       |  SELECT d.source, d.doc_id, d.n_chars, r.rate10k,
-       |    $bucket AS bucket
-       |  FROM documents d JOIN rates r USING (source)
-       |)
-       |SELECT source, rate10k, COUNT(*) AS n_docs,
-       |  CAST(SUM(CASE WHEN bucket < rate10k THEN 1 ELSE 0 END) AS BIGINT)
-       |    AS picked_docs,
-       |  CAST(SUM(CASE WHEN bucket < rate10k THEN n_chars ELSE 0 END) AS BIGINT)
-       |    AS picked_chars,
-       |  CAST(bit_xor(CASE WHEN bucket < rate10k THEN doc_id ELSE 0 END)
-       |    AS BIGINT) AS id_xor
-       |FROM d GROUP BY source, rate10k ORDER BY source""".stripMargin
-  }
-
-  /** Multi-column zone map: orders Z-ORDERED on (custkey, order-day), a
-    * per-file (min,max) manifest on BOTH columns, and a conjunctive range
-    * query that opens only files whose intervals intersect BOTH
-    * predicates — skipping compounds across columns, which is the whole
-    * point of the Z-layout (either column alone leaves more files alive).
-    * `files_pruned` and `conj_beats_single` ride in-band; the hash
-    * matches the oracle's direct filter only if pruning kept a superset.
-    */
-  private val qZoneMap: Q = (s, dir) => {
-    val tmp = Fixtures.getOrBuild(s"zonemap:$dir") { f =>
-      val o = Tables.orders(s, dir).withColumn("oday",
-        datediff(col("o_orderdate"), lit("1992-01-01")).cast("long"))
-      graft.sources.ZOrder.write(o, "o_custkey", "oday", s"$f/data",
-        numFiles = 16)
-    }
-    val stats = graft.sources.StatsStore
-      .collect(s, s"$tmp/data", Seq("o_custkey", "oday")).localCheckpoint()
-    val nTotal = stats.count()
-    val preds = Seq(("o_custkey", 300L, 600L), ("oday", 1200L, 1400L))
-    val nCust = graft.sources.StatsStore
-      .survivingFiles(stats, "o_custkey", 300L, 600L).size
-    val nDay = graft.sources.StatsStore
-      .survivingFiles(stats, "oday", 1200L, 1400L).size
-    val nConj = graft.sources.StatsStore.survivingFilesAll(stats, preds).size
-    graft.sources.StatsStore.prunedReadAll(s, s"$tmp/data", stats, preds)
-      .groupBy(col("o_orderpriority"))
-      .agg(count(lit(1)).as("n"),
-        Exact.sumExact(col("o_totalprice")).as("total"),
-        expr("bit_xor(o_orderkey)").as("key_xor"))
-      .withColumn("files_pruned", lit(nConj < nTotal))
-      .withColumn("conj_beats_single", lit(nConj <= math.min(nCust, nDay)))
-      .orderBy("o_orderpriority")
-  }
-
-  private val zoneMapSql =
-    """SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n,
-      |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total,
-      |  CAST(bit_xor(o_orderkey) AS BIGINT) AS key_xor,
-      |  TRUE AS files_pruned, TRUE AS conj_beats_single
-      |FROM orders
-      |WHERE o_custkey BETWEEN 300 AND 600
-      |  AND date_diff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE))
-      |    BETWEEN 1200 AND 1400
-      |GROUP BY 1 ORDER BY 1""".stripMargin
-
-  /** Personalized PageRank (random walk with restart) over the same
-    * bipartite supplier→customer graph as q_pagerank, teleporting only to
-    * every-10th supplier (node % 20 = 0 under the 2k/2k+1 encoding) —
-    * ranks become proximity to that cohort, the recommendation primitive.
-    * Fixed-point integer rounds, replayed bit-exact by the generated
-    * oracle (teleport term gated by the same node predicate).
-    */
-  private val qPpr: Q = (s, dir) =>
-    operators.PageRank
-      .runPersonalized(suppCustEdges(s, dir), pmod(col("node"), lit(20)) === 0,
-        iters = 5, dedup = true)
-      .orderBy(col("r").desc, col("node").asc)
-      .limit(50)
-
-  private val pprSql: String = {
-    val scale = 1000000000000L
-    val damping = 850L
-    val iters = 5
-    val iterCtes = (1 to iters).map { i =>
-      s"""it$i AS (
-         |  SELECT n.node,
-         |    (CASE WHEN n.node % 20 = 0 THEN (SELECT b FROM params) ELSE 0 END)
-         |      + COALESCE(c.cs, 0) AS r
-         |  FROM nodes n LEFT JOIN (
-         |    SELECT e.dst AS node, SUM((p.r * $damping) // (1000 * od.od)) AS cs
-         |    FROM it${i - 1} p JOIN edges e ON p.node = e.src
-         |    JOIN outdeg od ON od.src = e.src
-         |    GROUP BY e.dst) c USING (node))""".stripMargin
-    }.mkString(",\n")
-    s"""WITH edges AS (
-       |  SELECT DISTINCT l_suppkey * 2 AS src, o_custkey * 2 + 1 AS dst
-       |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-       |), nodes AS (
-       |  SELECT src AS node FROM edges UNION SELECT dst FROM edges
-       |), outdeg AS (
-       |  SELECT src, COUNT(*) AS od FROM edges GROUP BY src
-       |), params AS (
-       |  SELECT ($scale * ${1000 - damping}) // (1000 * COUNT(*)) AS b,
-       |         $scale // COUNT(*) AS r0
-       |  FROM nodes WHERE node % 20 = 0
-       |), it0 AS (
-       |  SELECT node,
-       |    CASE WHEN node % 20 = 0 THEN (SELECT r0 FROM params) ELSE 0 END AS r
-       |  FROM nodes
-       |),
-       |$iterCtes
-       |SELECT node, CAST(r AS BIGINT) AS r FROM it$iters
-       |ORDER BY r DESC, node LIMIT 50""".stripMargin
-  }
-
-  /** Min-max feature scaling per group — the normalization step before
-    * model features: scaled = (x − min)/(max − min) with min/max exact
-    * (no arithmetic, just selection) and one double expression per row,
-    * identical in both engines. Emitted for a deterministic customer
-    * sample; the stats join is a broadcast of one row per group.
-    */
-  private val qFeatureScale: Q = (s, dir) => {
-    val o = Tables.orders(s, dir)
-      .join(Tables.customer(s, dir), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(Tables.nation(s, dir)),
-        col("c_nationkey") === col("n_nationkey"))
-      .select(col("o_orderkey"), col("o_custkey"), col("n_name"),
-        col("o_totalprice").as("p"))
-    val stats = o.groupBy(col("n_name"))
-      .agg(min(col("p")).as("mn"), max(col("p")).as("mx"))
-    o.filter(col("o_custkey") <= 50)
-      .join(broadcast(stats), "n_name")
-      .select(col("o_orderkey"), col("n_name"),
-        ((col("p") - col("mn")) / (col("mx") - col("mn"))).as("scaled"))
-      .orderBy("o_orderkey")
-  }
-
-  private val featureScaleSql =
-    """WITH o AS (
-      |  SELECT o_orderkey, o_custkey, n_name, o_totalprice AS p
-      |  FROM orders
-      |  JOIN customer ON o_custkey = c_custkey
-      |  JOIN nation ON c_nationkey = n_nationkey
-      |), s AS (
-      |  SELECT n_name, MIN(p) AS mn, MAX(p) AS mx FROM o GROUP BY n_name
-      |)
-      |SELECT o_orderkey, o.n_name, (p - mn) / (mx - mn) AS scaled
-      |FROM o JOIN s USING (n_name)
-      |WHERE o_custkey <= 50 ORDER BY o_orderkey""".stripMargin
-
-  // ------------------------------------------------------------ registry
+  private[graft] val specs: Seq[QuerySpec] =
+    EtlQueries.specs ++ AnalyticsQueries.specs ++ TextQueries.specs ++
+      EmbeddingQueries.specs ++ MultimodalQueries.specs ++ EventQueries.specs ++
+      ProfilingQueries.specs
 
   /** Pipelines excluded from Bench timing (they write files in a many-job
     * loop or run a full streaming drain; Verify still correctness-gates
     * them).
     */
-  val benchExcluded: Set[String] =
-    Set("q_etl_backup", "q_etl_bulk", "q_etl_pruned", "q_etl_conc", "q_etl_incr", "q_etl_incr_part", "q_etl_journal", "q_etl_skip", "q_events_hourly_stream",
-      "q_stream_dedup_hourly_rocksdb", "q_stream_attribution_outer_rocksdb", "q_stream_dedup", "q_stream_neardup",
-      "q_stream_sessions", "q_stream_interp", "q_stream_upsert", "q_stream_attribution",
-      "q_stream_attribution_outer", "q_stream_enrich", "q_stream_scd2",
-      "q_stream_running",
-      "q_stream_dedup_hourly", "q_stream_classify", "q_stream_visual_gate",
-      "q_stream_distinct", "q_stream_warc_ingest", "q_stream_crawl_curate", "q_stream_quantiles")
+  val benchExcluded: Set[String] = specs.filter(_.kind != Batch).map(_.name).toSet
 
   /** The streaming drains — every query whose body starts and awaits
     * Structured Streaming queries. The state-store BACKEND AXIS applies to
@@ -11503,8 +41,7 @@ object QueryCatalog {
     * twins pin their provider inside their own bodies; the outer wrapper
     * composes harmlessly — innermost setting wins at stream start.)
     */
-  val streamingDrains: Set[String] =
-    benchExcluded -- Set("q_etl_backup", "q_etl_bulk", "q_etl_pruned", "q_etl_conc", "q_etl_incr", "q_etl_incr_part", "q_etl_journal", "q_etl_skip")
+  val streamingDrains: Set[String] = specs.filter(_.kind == Drain).map(_.name).toSet
 
   /** Run `f` with the named state-store backend ("rocksdb" | "hdfs" |
     * "default"); the provider is a session conf read at stream start, so
@@ -11513,7 +50,7 @@ object QueryCatalog {
     */
   def withStateBackend[T](s: SparkSession, backend: String)(f: => T): T =
     backend match {
-      case "rocksdb"          => withStateProvider(s, RocksDbProvider)(f)
+      case "rocksdb"          => withConf(s, StateProviderKey, RocksDbProvider)(f)
       case "hdfs" | "default" => f
       case other => sys.error(s"unknown state backend: $other")
     }
@@ -11532,623 +69,7 @@ object QueryCatalog {
       }
     }
 
-  val queries: Map[String, Q] = backendWrapped(Map(
-    "q_bm25" -> qBm25,
-    "q_hybrid_retrieval" -> qHybridRetrieval,
-    "q_retrieval_eval" -> qRetrievalEval,
-    "q_batch_retrieval" -> qBatchRetrieval,
-    "q_neardup_eval" -> qNeardupEval,
-    "q_bitext_mining" -> qBitextMining,
-    "q_training_pipeline_v4" -> qTrainingPipelineV4,
-    "q_release_diff" -> qReleaseDiff,
-    "q_format_matrix" -> qFormatMatrix,
-    "q_quality_upsample" -> qQualityUpsample,
-    "q_contrastive_pairs" -> qContrastivePairs,
-    "q_lang_confusion" -> qLangConfusion,
-    "q_datasheet" -> qDatasheet,
-    "q_epoch_shuffle" -> qEpochShuffle,
-    "q_tokenizer_fertility" -> qTokenizerFertility,
-    "q_pmi_keywords" -> qPmiKeywords,
-    "q_phrase_search" -> qPhraseSearch,
-    "q_phrase_index" -> qPhraseIndex,
-    "q_phrase_index_incremental" -> qPhraseIndexIncremental,
-    "q_phraseidx_compaction" -> qPhraseidxCompaction,
-    "q_pruned_index" -> qPrunedIndex,
-    "q_bucket_stats" -> qBucketStats,
-    "q_bm25_index" -> qBm25Index,
-    "q_label_prop" -> qLabelProp,
-    "q_weighted_sample" -> qWeightedSample,
-    "q_mv_incremental" -> qMvIncremental,
-    "q_triangles" -> qTriangles,
-    "q_scd2" -> qScd2,
-    "q_topk_agg" -> qTopkAgg,
-    "q_bigram_lm" -> qBigramLm,
-    "q_etl_backup" -> qEtlBackup,
-    "q_etl_bulk" -> qEtlBulk,
-    "q_etl_pruned" -> qEtlPruned,
-    "q_etl_conc" -> qEtlConc,
-    "q_etl_incr" -> qEtlIncr,
-    "q_etl_incr_part" -> qEtlIncrPart,
-    "q_etl_journal" -> qEtlJournal,
-    "q_etl_skip" -> qEtlSkip,
-    "q_partition_discovery" -> qPartitionDiscovery,
-    "q_oldest_pending" -> qOldestPending,
-    "q_partition_rowcount" -> qPartitionRowcount,
-    "q_distinct_partitions" -> qDistinctPartitions,
-    "q_bucket_histogram" -> qBucketHistogram,
-    "q_schema_ddl" -> qSchemaDdl,
-    "q_customers_without_orders" -> qCustomersWithoutOrders,
-    "q_segment_with_orders" -> qSegmentWithOrders,
-    "q_latest_order_per_customer" -> qLatestOrderPerCustomer,
-    "q1_pricing_summary" -> qPricingSummary,
-    "q3_top_orders" -> qTopOrders,
-    "q5_region_revenue" -> qRegionRevenue,
-    "q10_returned_items" -> qReturnedItems,
-    "q18_large_orders" -> qLargeOrders,
-    "q4_order_priority" -> qOrderPriority,
-    "q7_nation_volume" -> qNationVolume,
-    "q14_promo_revenue" -> qPromoRevenue,
-    "q19_brand_revenue" -> qBrandRevenue,
-    "q22_idle_customers" -> qIdleCustomers,
-    "q2_min_cost_supplier" -> qMinCostSupplier,
-    "q6_forecast_revenue" -> qForecastRevenue,
-    "q8_market_share" -> qMarketShare,
-    "q9_product_profit" -> qProductProfit,
-    "q11_important_parts" -> qImportantParts,
-    "q12_late_lines" -> qLateLines,
-    "q13_cust_distribution" -> qCustDistribution,
-    "q15_top_supplier" -> qTopSupplier,
-    "q16_supplier_cnt" -> qSupplierCnt,
-    "q17_small_qty_revenue" -> qSmallQtyRevenue,
-    "q20_excess_suppliers" -> qExcessSuppliers,
-    "q21_waiting_suppliers" -> qWaitingSuppliers,
-    "q_stats_moments" -> qStatsMoments,
-    "q_window_misc" -> qWindowMisc,
-    "q_pagerank" -> qPageRank,
-    "q_rollup_orders" -> qRollupOrders,
-    "q_running_revenue" -> qRunningRevenue,
-    "q_order_gaps" -> qOrderGaps,
-    "q_set_ops" -> qSetOps,
-    "q_set_ops_all" -> qSetOpsAll,
-    "q_not_in" -> qNotIn,
-    "q_monthly_orders" -> qMonthlyOrders,
-    "q_cube_orders" -> qCubeOrders,
-    "q_grouping_sets" -> qGroupingSets,
-    "q_string_funcs" -> qStringFuncs,
-    "q_date_funcs" -> qDateFuncs,
-    "q_case_null" -> qCaseNull,
-    "q_in_subquery" -> qInSubquery,
-    "q_union_all" -> qUnionAll,
-    "q_conditional_agg" -> qConditionalAgg,
-    "q_approx_distinct" -> qApproxDistinct,
-    "q_approx_quantiles" -> qApproxQuantiles,
-    "q_normalized_dedup" -> qNormalizedDedup,
-    "q_char_entropy" -> qCharEntropy,
-    "q_shingle_explode" -> qShingleExplode,
-    "q_upsert_latest" -> qUpsertLatest,
-    "q_outer_join" -> qOuterJoin,
-    "q_percentiles" -> qPercentiles,
-    "q_events_sliding" -> qEventsSliding,
-    "q_collect_list" -> qCollectList,
-    "q_regex" -> qRegex,
-    "q_range_frame" -> qRangeFrame,
-    "q_scalar_subquery" -> qScalarSubquery,
-    "q_pivot" -> qPivot,
-    "q_ntile" -> qNtile,
-    "q_first_last" -> qFirstLast,
-    "q_token_stats" -> qTokenStats,
-    "q_text_quality" -> qTextQuality,
-    "q_lang_id" -> qLangId,
-    "q_exact_dedup" -> qExactDedup,
-    "q_training_pipeline" -> qTrainingPipeline,
-    "q_training_pipeline_v2" -> qTrainingPipelineV2,
-    "q_ngram_jaccard" -> qNgramJaccard,
-    "q_dedup_clusters" -> qDedupClusters,
-    "q_cc_copurchase" -> qCcCopurchase,
-    "q_cc_incremental" -> qCcIncremental,
-    "q_word_freq" -> qWordFreq,
-    "q_token_budget" -> qTokenBudget,
-    "q_heavy_hitters" -> qHeavyHitters,
-    "q_rep_ngrams" -> qRepNgrams,
-    "q_decontaminate" -> qDecontaminate,
-    "q_substring_dedup" -> qSubstringDedup,
-    "q_winnow_pairs" -> qWinnowPairs,
-    "q_bloom_decontaminate" -> qBloomDecontaminate,
-    "q_fuzzy_join" -> qFuzzyJoin,
-    "q_boilerplate" -> qBoilerplate,
-    "q_source_pref_dedup" -> qSourcePrefDedup,
-    "q_source_overlap" -> qSourceOverlap,
-    "q_mv_projection" -> qMvProjection,
-    "q_mv_rewrite" -> qMvRewrite,
-    "q_jsonl_roundtrip" -> qJsonlRoundtrip,
-    "q_corpus_zst" -> qCorpusZst,
-    "q_warc_roundtrip" -> qWarcRoundtrip,
-    "q_quality_classifier" -> qQualityClassifier,
-    "q_gopher_rules" -> qGopherRules,
-    "q_html_extract" -> qHtmlExtract,
-    "q_c4_line_filter" -> qC4LineFilter,
-    "q_media_headers" -> qMediaHeaders,
-    "q_av_container_meta" -> qAvContainerMeta,
-    "q_charset_detect" -> qCharsetDetect,
-    "q_unicode_dedup" -> qUnicodeDedup,
-    "q_link_graph" -> qLinkGraph,
-    "q_robots_gate" -> qRobotsGate,
-    "q_media_resize" -> qMediaResize,
-    "q_entity_resolution" -> qEntityResolution,
-    "q_subword_tokens" -> qSubwordTokens,
-    "q_training_pipeline_v3" -> qTrainingPipelineV3,
-    "q_ivf_store" -> qIvfStore,
-    "q_ivf_append" -> qIvfAppend,
-    "q_ivfidx_compaction" -> qIvfidxCompaction,
-    "q_avro_roundtrip" -> qAvroRoundtrip,
-    "q_proto_roundtrip" -> qProtoRoundtrip,
-    "q_proto_vectors" -> qProtoVectors,
-    "q_stream_proto" -> qStreamProto,
-    "q_dict_encode" -> qDictEncode,
-    "q_replica_reconcile" -> qReplicaReconcile,
-    "q_sql_surface" -> qSqlSurface,
-    "q_kcore" -> qKCore,
-    "q_skew_stats" -> qSkewStats,
-    "q_aqe_skew_join" -> qAqeSkewJoin,
-    "q_join_cardinality" -> qJoinCardinality,
-    "q_spearman" -> qSpearman,
-    "q_mv_prejoin" -> qMvPrejoin,
-    "q_interval_merge" -> qIntervalMerge,
-    "q_key_purge" -> qKeyPurge,
-    "q_sketch_intersect" -> qSketchIntersect,
-    "q_equidepth_hist" -> qEquidepthHist,
-    "q_shortest_paths" -> qShortestPaths,
-    "q_mode_agg" -> qModeAgg,
-    "q_stream_classify" -> qStreamClassify,
-    "q_pit_join" -> qPitJoin,
-    "q_incremental_corpus" -> qIncrementalCorpus,
-    "q_ann_hnsw" -> qAnnHnsw,
-    "q_jsonl_corrupt" -> qJsonlCorrupt,
-    "q_seq_packing" -> qSeqPacking,
-    "q_alpha_sampling" -> qAlphaSampling,
-    "q_sketch_store" -> qSketchStore,
-    "q_quantile_store" -> qQuantileStore,
-    "q_unigram_lm" -> qUnigramLm,
-    "q_hash_split" -> qHashSplit,
-    "q_range_join" -> qRangeJoin,
-    "q_tfidf" -> qTfidf,
-    "q_stratified_sample" -> qStratifiedSample,
-    "q_gap_fill" -> qGapFill,
-    "q_unpivot" -> qUnpivot,
-    "q_histogram" -> qHistogram,
-    "q_doc_fingerprint" -> qDocFingerprint,
-    "q_salted_join" -> qSaltedJoin,
-    "q_zorder_layout" -> qZorderLayout,
-    "q_dq_checks" -> qDqChecks,
-    "q_markov_transitions" -> qMarkovTransitions,
-    "q_bpe_pairs" -> qBpePairs,
-    "q_shard_interleave" -> qShardInterleave,
-    "q_semantic_dedup" -> qSemanticDedup,
-    "q_schema_evolution" -> qSchemaEvolution,
-    "q_winsorize" -> qWinsorize,
-    "q_skew_agg" -> qSkewAgg,
-    "q_redact" -> qRedact,
-    "q_card_scrub" -> qCardScrub,
-    "q_event_throttle" -> qEventThrottle,
-    "q_hive_pruning" -> qHivePruning,
-    "q_backfill" -> qBackfill,
-    "q_stats_pruning" -> qStatsPruning,
-    "q_bloom_index" -> qBloomIndex,
-    "q_jdbc_extract" -> qJdbcExtract,
-    "q_jdbc_agg" -> qJdbcAgg,
-    "q_jdbc_topn" -> qJdbcTopN,
-    "q_jdbc_avg" -> qJdbcAvg,
-    "q_importance_select" -> qImportanceSelect,
-    "q_compaction" -> qCompaction,
-    "q_bucketed_join" -> qBucketedJoin,
-    "q_csv_roundtrip" -> qCsvRoundtrip,
-    "q_seqfile_roundtrip" -> qSeqfileRoundtrip,
-    "q_band_index_probe" -> qBandIndexProbe,
-    "q_band_compaction" -> qBandCompaction,
-    "q_visidx_compaction" -> qVisidxCompaction,
-    "q_stream_neardup" -> qStreamNeardup,
-    "q_minhash_neardups" -> qMinhashNearDups,
-    "q_simhash_neardups" -> qSimhashNearDups,
-    "q_cosine_topk" -> qCosineTopk,
-    "q_embedding_neardups" -> qEmbeddingNearDups,
-    "q_cosine_rewrite" -> qCosineRewrite,
-    "q_rand_projection" -> qRandProjection,
-    "q_pca" -> qPca,
-    "q_ann_lsh" -> qAnnLsh,
-    "q_ann_ivf" -> qAnnIvf,
-    "q_ann_ivf_probes" -> qAnnIvfProbes,
-    "q_ann_pq" -> qAnnPq,
-    "q_ann_ivf_pq" -> qAnnIvfPq,
-    "q_knn_graph" -> qKnnGraph,
-    "q_graph_ann" -> qGraphAnn,
-    "q_sq_cosine" -> qSqCosine,
-    "q_multimodal_meta" -> qMultimodalMeta,
-    "q_multimodal_features" -> qMultimodalFeatures,
-    "q_multimodal_frames" -> qMultimodalFrames,
-    "q_gif_frames" -> qGifFrames,
-    "q_audio_features" -> qAudioFeatures,
-    "q_video_neardup" -> qVideoNeardup,
-    "q_image_neardup" -> qImageNeardup,
-    "q_image_clusters" -> qImageClusters,
-    "q_audio_segments" -> qAudioSegments,
-    "q_shot_boundaries" -> qShotBoundaries,
-    "q_image_sharpness" -> qImageSharpness,
-    "q_tar_roundtrip" -> qTarRoundtrip,
-    "q_jpeg_decode" -> qJpegDecode,
-    "q_jpeg_color" -> qJpegColor,
-    "q_stream_visual_gate" -> qStreamVisualGate,
-    "q_multimodal_pipeline" -> qMultimodalPipeline,
-    "q_av_alignment" -> qAvAlignment,
-    "q_events_hourly" -> qEventsHourly,
-    "q_events_hourly_stream" -> qEventsHourlyStream,
-    "q_stream_dedup" -> qStreamDedup,
-    "q_stream_enrich" -> qStreamEnrich,
-    "q_stream_distinct" -> qStreamDistinct,
-    "q_stream_warc_ingest" -> qStreamWarcIngest,
-    "q_stream_crawl_curate" -> qStreamCrawlCurate,
-    "q_stream_quantiles" -> qStreamQuantiles,
-    "q_stream_dedup_hourly" -> qStreamDedupHourly,
-    "q_stream_dedup_hourly_rocksdb" -> qStreamDedupHourlyRocksdb,
-    "q_stream_sessions" -> qStreamSessions,
-    "q_stream_interp" -> qStreamInterp,
-    "q_stream_upsert" -> qStreamUpsert,
-    "q_stream_attribution" -> qStreamAttribution,
-    "q_stream_attribution_outer" -> qStreamAttributionOuter,
-    "q_stream_attribution_outer_rocksdb" -> qStreamAttributionOuterRocksdb,
-    "q_stream_scd2" -> qStreamScd2,
-    "q_stream_running" -> qStreamRunning,
-    "q_chunking" -> qChunking,
-    "q_pack_manifest" -> qPackManifest,
-    "q_pack_append" -> qPackAppend,
-    "q_pack_balanced" -> qPackBalanced,
-    "q_packing_stats" -> qPackingStats,
-    "q_change_feed" -> qChangeFeed,
-    "q_time_travel" -> qTimeTravel,
-    "q_funnel" -> qFunnel,
-    "q_cohort_retention" -> qCohortRetention,
-    "q_click_attribution" -> qClickAttribution,
-    "q_ewma" -> qEwma,
-    "q_synth_source" -> qSynthSource,
-    "q_synth_agg_pushdown" -> qSynthAggPushdown,
-    "q_sessionize" -> qSessionize,
-    "q_session_window" -> qSessionWindow,
-    "q_asof_purchase" -> qAsofPurchase,
-    "q_asof_exec" -> qAsofExec,
-    "q_change_events" -> qChangeEvents,
-    "q_event_match" -> qEventMatch,
-    "q_timeseries_interp" -> qTimeseriesInterp,
-    "q_regression" -> qRegression,
-    "q_stream_purge" -> qStreamPurge,
-    "q_profile" -> qProfile,
-    "q_pii_scrub" -> qPiiScrub,
-    "q_url_canonicalize" -> qUrlCanonicalize,
-    "q_host_stats" -> qHostStats,
-    "q_jaro_winkler" -> qJaroWinkler,
-    "q_chisq" -> qChisq,
-    "q_group_split" -> qGroupSplit,
-    "q_bpe_train" -> qBpeTrain,
-    "q_bpe_apply" -> qBpeApply,
-    "q_anomaly" -> qAnomaly,
-    "q_delta_compact" -> qDeltaCompact,
-    "q_source_mixing" -> qSourceMixing,
-    "q_zone_map" -> qZoneMap,
-    "q_ppr" -> qPpr,
-    "q_feature_scale" -> qFeatureScale,
-    "q_events_json" -> qEventsJson))
+  val queries: Map[String, Q] = backendWrapped(specs.map(q => q.name -> q.body).toMap)
 
-  val oracleSql: Map[String, String] = Map(
-    "q_bm25" -> bm25Sql,
-    "q_hybrid_retrieval" -> hybridRetrievalSqlGen,
-    "q_retrieval_eval" -> retrievalEvalSqlGen,
-    "q_batch_retrieval" -> batchRetrievalSqlGen,
-    "q_neardup_eval" -> neardupEvalSqlGen,
-    "q_bitext_mining" -> bitextMiningSql,
-    "q_training_pipeline_v4" -> trainingPipelineV4Sql,
-    "q_release_diff" -> releaseDiffSqlGen,
-    "q_format_matrix" -> formatMatrixSqlGen,
-    "q_quality_upsample" -> qualityUpsampleSql,
-    "q_contrastive_pairs" -> contrastivePairsSqlGen,
-    "q_lang_confusion" -> langConfusionSql,
-    "q_datasheet" -> datasheetSql,
-    "q_epoch_shuffle" -> epochShuffleSql,
-    "q_tokenizer_fertility" -> tokenizerFertilitySqlGen,
-    "q_pmi_keywords" -> pmiKeywordsSql,
-    "q_phrase_search" -> phraseSearchSqlGen,
-    "q_phrase_index" -> phraseIndexSqlGen,
-    "q_phrase_index_incremental" -> phraseIndexSqlGen,
-    "q_phraseidx_compaction" -> phraseidxCompactionSqlGen,
-    "q_pruned_index" -> prunedIndexSqlGen,
-    "q_bucket_stats" -> bucketStatsSql,
-    "q_bm25_index" -> bm25IndexSql,
-    "q_label_prop" -> labelPropSql,
-    "q_cc_copurchase" -> ccCopurchaseSql,
-    // deliberately the same closure: union-of-waves ≡ from-scratch is the claim
-    "q_cc_incremental" -> ccCopurchaseSql,
-    "q_weighted_sample" -> weightedSampleSql,
-    "q_mv_incremental" -> mvIncrementalSql,
-    "q_triangles" -> trianglesSql,
-    "q_scd2" -> scd2Sql,
-    "q_topk_agg" -> topkAggSql,
-    "q_bigram_lm" -> bigramLmSql,
-    "q_etl_backup" -> etlBackupSql,
-    "q_etl_bulk" -> etlBackupSql,
-    "q_etl_pruned" -> etlBackupSql,
-    "q_etl_conc" -> etlBackupSql,
-    "q_etl_incr" -> etlBackupSql,
-    "q_etl_incr_part" -> etlBackupSql,
-    "q_etl_journal" -> etlBackupSql,
-    "q_etl_skip" -> etlSkipSql,
-    "q_partition_discovery" -> partitionDiscoverySql,
-    "q_oldest_pending" -> (partitionDiscoverySql.replace("ORDER BY d.month_sid", "ORDER BY d.month_sid LIMIT 1")),
-    "q_partition_rowcount" ->
-      s"SELECT COUNT(*) AS cnt FROM orders WHERE $monthSidSql = 199801",
-    "q_distinct_partitions" ->
-      s"SELECT DISTINCT $monthSidSql AS month_sid FROM orders ORDER BY month_sid",
-    "q_bucket_histogram" ->
-      "SELECT CAST(o_orderkey % 8 AS BIGINT) AS bucket, COUNT(*) AS cnt FROM orders GROUP BY 1 ORDER BY 1",
-    "q_schema_ddl" ->
-      "SELECT n_nationkey, n_name || ' ' || r_name AS ddl FROM nation JOIN region ON n_regionkey = r_regionkey ORDER BY n_nationkey",
-    "q_customers_without_orders" ->
-      "SELECT c_custkey, c_name FROM customer WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey) ORDER BY c_custkey",
-    "q_segment_with_orders" ->
-      "SELECT c_mktsegment, COUNT(*) AS n FROM customer WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey) GROUP BY c_mktsegment ORDER BY c_mktsegment",
-    "q_latest_order_per_customer" ->
-      """SELECT o_custkey, o_orderkey, o_orderdate FROM (
-        |  SELECT o_custkey, o_orderkey, o_orderdate,
-        |    row_number() OVER (PARTITION BY o_custkey ORDER BY o_orderdate DESC, o_orderkey) AS rn
-        |  FROM orders) t WHERE rn = 1 ORDER BY o_custkey""".stripMargin,
-    "q1_pricing_summary" -> pricingSummarySql,
-    "q3_top_orders" -> topOrdersSql,
-    "q5_region_revenue" -> regionRevenueSql,
-    "q10_returned_items" -> returnedItemsSql,
-    "q18_large_orders" -> largeOrdersSql,
-    "q4_order_priority" -> orderPrioritySql,
-    "q7_nation_volume" -> nationVolumeSql,
-    "q14_promo_revenue" -> promoRevenueSql,
-    "q19_brand_revenue" -> brandRevenueSql,
-    "q22_idle_customers" -> idleCustomersSql,
-    "q2_min_cost_supplier" -> minCostSupplierSql,
-    "q6_forecast_revenue" -> forecastRevenueSql,
-    "q8_market_share" -> marketShareSql,
-    "q9_product_profit" -> productProfitSql,
-    "q11_important_parts" -> importantPartsSql,
-    "q12_late_lines" -> lateLinesSql,
-    "q13_cust_distribution" -> custDistributionSql,
-    "q15_top_supplier" -> topSupplierSql,
-    "q16_supplier_cnt" -> supplierCntSql,
-    "q17_small_qty_revenue" -> smallQtyRevenueSql,
-    "q20_excess_suppliers" -> excessSuppliersSql,
-    "q21_waiting_suppliers" -> waitingSuppliersSql,
-    "q_stats_moments" -> statsMomentsSql,
-    "q_window_misc" -> windowMiscSql,
-    "q_pagerank" -> pageRankSql,
-    "q_rollup_orders" -> rollupOrdersSql,
-    "q_running_revenue" -> runningRevenueSql,
-    "q_order_gaps" -> orderGapsSql,
-    "q_set_ops" -> setOpsSql,
-    "q_set_ops_all" -> setOpsAllSql,
-    "q_not_in" -> notInSql,
-    "q_monthly_orders" -> monthlyOrdersSql,
-    "q_cube_orders" -> cubeOrdersSql,
-    "q_grouping_sets" -> groupingSetsSql,
-    "q_string_funcs" -> stringFuncsSql,
-    "q_date_funcs" -> dateFuncsSql,
-    "q_case_null" -> caseNullSql,
-    "q_in_subquery" -> inSubquerySql,
-    "q_union_all" -> unionAllSql,
-    "q_conditional_agg" -> conditionalAggSql,
-    "q_approx_distinct" -> approxDistinctSql,
-    "q_approx_quantiles" -> approxQuantilesSql,
-    "q_normalized_dedup" -> normalizedDedupSql,
-    "q_char_entropy" -> charEntropySql,
-    "q_shingle_explode" -> shingleExplodeSql,
-    "q_upsert_latest" -> upsertLatestSql,
-    "q_doc_fingerprint" -> docFingerprintSql,
-    "q_ann_lsh" -> annLshSql,
-    "q_multimodal_features" -> multimodalFeaturesSql,
-    "q_media_resize" -> mediaResizeSql,
-    "q_salted_join" -> saltedJoinSql,
-    "q_zorder_layout" -> zorderLayoutSql,
-    "q_dq_checks" -> dqChecksSql,
-    "q_markov_transitions" -> markovTransitionsSql,
-    "q_bpe_pairs" -> bpePairsSql,
-    "q_shard_interleave" -> shardInterleaveSql,
-    "q_semantic_dedup" -> semanticDedupSql,
-    "q_schema_evolution" -> schemaEvolutionSql,
-    "q_winsorize" -> winsorizeSql,
-    "q_skew_agg" -> skewAggSql,
-    "q_redact" -> redactSql,
-    "q_card_scrub" -> cardScrubSqlGen,
-    "q_event_throttle" -> eventThrottleSql,
-    "q_hive_pruning" -> hivePruningSql,
-    "q_backfill" -> backfillSql,
-    "q_stats_pruning" -> statsPruningSql,
-    "q_bloom_index" -> bloomIndexSql,
-    "q_jdbc_extract" -> jdbcExtractSql,
-    "q_jdbc_agg" -> jdbcAggSql,
-    "q_jdbc_topn" -> jdbcTopNSql,
-    "q_jdbc_avg" -> jdbcAvgSql,
-    "q_importance_select" -> importanceSelectSql,
-    "q_compaction" -> compactionSql,
-    "q_bucketed_join" -> bucketedJoinSql,
-    "q_csv_roundtrip" -> csvRoundtripSql,
-    "q_seqfile_roundtrip" -> csvRoundtripSql,
-    "q_band_index_probe" -> SketchOracleSql.bandIndexProbeSql(splitId = 400, minEstJaccard = 0.5),
-    "q_band_compaction" -> bandCompactionSql,
-    "q_visidx_compaction" -> visidxCompactionSql,
-    "q_stream_neardup" -> // same kernel as the drain, one batch replay (pair set is boundary-independent)
-      SketchOracleSql.streamIngestGateSql(splitId = 400, minEstJaccard = 0.5),
-    "q_minhash_neardups" -> SketchOracleSql.minHashNearDupsSql(threshold = 0.5),
-    "q_simhash_neardups" -> SketchOracleSql.simHashNearDupsSql(maxHamming = 6),
-    "q_ann_ivf" -> annIvfSql,
-    "q_ann_ivf_probes" -> annIvfProbesSql,
-    "q_ann_pq" -> annPqSql,
-    "q_ann_ivf_pq" -> annIvfPqSql,
-    "q_knn_graph" -> knnGraphSql,
-    "q_graph_ann" -> graphAnnSql,
-    "q_sq_cosine" -> sqCosineSql,
-    "q_ntile" -> ntileSql,
-    "q_first_last" -> firstLastSql,
-    "q_outer_join" -> outerJoinSql,
-    "q_percentiles" -> percentilesSql,
-    "q_events_sliding" -> eventsSlidingSql,
-    "q_collect_list" -> collectListSql,
-    "q_regex" -> regexSql,
-    "q_range_frame" -> rangeFrameSql,
-    "q_scalar_subquery" -> scalarSubquerySql,
-    "q_pivot" -> pivotSql,
-    "q_token_stats" -> tokenStatsSql,
-    "q_text_quality" -> textQualitySql,
-    "q_lang_id" -> langIdSql,
-    "q_exact_dedup" -> exactDedupSql,
-    "q_training_pipeline" -> trainingPipelineSql,
-    "q_training_pipeline_v2" -> trainingPipelineV2Sql,
-    "q_ngram_jaccard" -> ngramJaccardSql,
-    "q_dedup_clusters" -> dedupClustersSql,
-    "q_word_freq" -> wordFreqSql,
-    "q_token_budget" -> tokenBudgetSql,
-    "q_heavy_hitters" -> heavyHittersSql,
-    "q_rep_ngrams" -> repNgramsSql,
-    "q_decontaminate" -> decontaminateSql,
-    "q_bloom_decontaminate" -> decontaminateSql,
-    "q_substring_dedup" -> SketchOracleSql.substringDedupSql(k = 32),
-    "q_winnow_pairs" -> SketchOracleSql.winnowPairsSql(k = 32, w = 16),
-    "q_fuzzy_join" -> fuzzyJoinSql,
-    "q_boilerplate" -> boilerplateSql,
-    "q_source_pref_dedup" -> sourcePrefDedupSql,
-    "q_source_overlap" -> sourceOverlapSql,
-    "q_mv_projection" -> mvProjectionSql,
-    "q_mv_rewrite" -> mvRewriteSql,
-    "q_jsonl_roundtrip" -> jsonlRoundtripSqlGen,
-    "q_corpus_zst" -> corpusZstSqlGen,
-    "q_warc_roundtrip" -> warcRoundtripSqlGen,
-    "q_quality_classifier" -> qualityClassifierSqlGen,
-    "q_gopher_rules" -> gopherRulesSql,
-    "q_html_extract" -> htmlExtractSqlGen,
-    "q_c4_line_filter" -> c4LineFilterSqlGen,
-    "q_media_headers" -> mediaHeadersSql,
-    "q_av_container_meta" -> avContainerMetaSql,
-    "q_charset_detect" -> charsetDetectSql,
-    "q_unicode_dedup" -> unicodeDedupSqlGen,
-    "q_link_graph" -> linkGraphSqlGen,
-    "q_robots_gate" -> robotsGateSql,
-    "q_entity_resolution" -> entityResolutionSql,
-    "q_subword_tokens" -> subwordTokensSqlGen,
-    "q_training_pipeline_v3" -> trainingPipelineV3SqlGen,
-    "q_ivf_store" -> ivfStoreSql,
-    "q_ivf_append" -> ivfStoreSql,
-    "q_ivfidx_compaction" -> ivfidxCompactionSql,
-    "q_avro_roundtrip" -> avroRoundtripSql,
-    "q_proto_roundtrip" -> protoRoundtripSql,
-    "q_proto_vectors" -> protoVectorsSql,
-    "q_stream_proto" -> streamProtoSql,
-    "q_dict_encode" -> dictEncodeSql,
-    "q_replica_reconcile" -> replicaReconcileSql,
-    "q_sql_surface" -> sqlSurfaceSqlGen,
-    "q_kcore" -> kcoreSqlGen,
-    "q_skew_stats" -> skewStatsSql,
-    "q_aqe_skew_join" -> aqeSkewJoinSql,
-    "q_join_cardinality" -> joinCardinalitySql,
-    "q_spearman" -> spearmanSql,
-    "q_mv_prejoin" -> mvPrejoinSql,
-    "q_interval_merge" -> intervalMergeSql,
-    "q_key_purge" -> keyPurgeSql,
-    "q_sketch_intersect" -> sketchIntersectSql,
-    "q_equidepth_hist" -> equidepthHistSql,
-    "q_shortest_paths" -> shortestPathsSqlGen,
-    "q_mode_agg" -> modeAggSql,
-    "q_stream_classify" -> streamClassifySqlGen,
-    "q_pit_join" -> pitJoinSql,
-    "q_incremental_corpus" -> incrementalCorpusSql,
-    "q_ann_hnsw" -> annHnswSql,
-    "q_jsonl_corrupt" -> jsonlCorruptSql,
-    "q_seq_packing" -> seqPackingSql,
-    "q_alpha_sampling" -> alphaSamplingSql,
-    "q_sketch_store" -> sketchStoreSql,
-    "q_quantile_store" -> quantileStoreSql,
-    "q_unigram_lm" -> unigramLmSql,
-    "q_hash_split" -> hashSplitSql,
-    "q_range_join" -> rangeJoinSql,
-    "q_tfidf" -> tfidfSql,
-    "q_stratified_sample" -> stratifiedSampleSql,
-    "q_gap_fill" -> gapFillSql,
-    "q_unpivot" -> unpivotSql,
-    "q_histogram" -> histogramSql,
-    "q_cosine_topk" -> cosineTopkSql,
-    "q_embedding_neardups" -> embeddingNearDupsSql,
-    "q_cosine_rewrite" -> embeddingNearDupsSql,
-    "q_rand_projection" -> randProjectionSql,
-    "q_pca" -> pcaSql,
-    "q_multimodal_meta" -> multimodalMetaSql,
-    "q_multimodal_frames" -> multimodalFramesSql,
-    "q_gif_frames" -> gifFramesSql,
-    "q_audio_features" -> audioFeaturesSql,
-    "q_video_neardup" -> videoNeardupSql,
-    "q_image_neardup" -> imageNeardupSql,
-    "q_image_clusters" -> imageClustersSql,
-    "q_audio_segments" -> audioSegmentsSql,
-    "q_shot_boundaries" -> shotBoundariesSql,
-    "q_image_sharpness" -> imageSharpnessSql,
-    "q_tar_roundtrip" -> tarRoundtripSql,
-    "q_jpeg_decode" -> jpegDecodeSql,
-    "q_jpeg_color" -> jpegColorSql,
-    "q_stream_visual_gate" -> streamVisualGateSql,
-    "q_multimodal_pipeline" -> multimodalPipelineSql,
-    "q_av_alignment" -> avAlignmentSql,
-    "q_events_hourly" -> eventsHourlySql,
-    "q_events_hourly_stream" -> eventsHourlyStreamSql,
-    "q_stream_dedup" -> streamDedupSql,
-    "q_stream_enrich" -> streamEnrichSql,
-    "q_stream_distinct" -> streamDistinctSql,
-    "q_stream_warc_ingest" -> warcRoundtripSqlGen,
-    "q_stream_crawl_curate" -> streamCrawlCurateSql,
-    "q_stream_quantiles" -> streamQuantilesSql,
-    "q_stream_dedup_hourly" -> eventsHourlyStreamSql,
-    "q_stream_dedup_hourly_rocksdb" -> eventsHourlyStreamSql,
-    "q_stream_sessions" -> streamSessionsSql,
-    "q_stream_interp" -> timeseriesInterpSql, // bit-identical to the batch twin
-    "q_stream_upsert" -> streamUpsertSql,
-    "q_stream_attribution" -> streamAttributionSql,
-    "q_stream_attribution_outer" -> streamAttributionOuterSql,
-    "q_stream_attribution_outer_rocksdb" -> streamAttributionOuterSql,
-    "q_stream_scd2" -> streamScd2Sql,
-    "q_stream_running" -> streamRunningSql,
-    "q_chunking" -> chunkingSql,
-    "q_pack_manifest" -> packManifestSql,
-    "q_pack_append" -> packAppendSql,
-    "q_pack_balanced" -> packBalancedSql,
-    "q_packing_stats" -> packingStatsSql,
-    "q_change_feed" -> changeFeedSql,
-    "q_time_travel" -> timeTravelSql,
-    "q_funnel" -> funnelSql,
-    "q_cohort_retention" -> cohortRetentionSql,
-    "q_click_attribution" -> clickAttributionSql,
-    "q_ewma" -> ewmaSql,
-    "q_synth_source" -> synthSourceSqlGen,
-    "q_synth_agg_pushdown" -> synthAggPushdownSql,
-    "q_sessionize" -> sessionizeSql,
-    "q_session_window" -> sessionWindowSql,
-    "q_asof_purchase" -> asofPurchaseSql,
-    "q_asof_exec" -> asofPurchaseSql,
-    "q_change_events" -> changeEventsSql,
-    "q_event_match" -> eventMatchSql,
-    "q_timeseries_interp" -> timeseriesInterpSql,
-    "q_regression" -> regressionSql,
-    "q_stream_purge" -> streamPurgeSql,
-    "q_profile" -> profileSql,
-    "q_pii_scrub" -> piiScrubSql,
-    "q_url_canonicalize" -> urlCanonicalizeSql,
-    "q_host_stats" -> hostStatsSql,
-    "q_jaro_winkler" -> jaroWinklerSql,
-    "q_chisq" -> chisqSql,
-    "q_group_split" -> groupSplitSql,
-    "q_bpe_train" -> bpeTrainSql,
-    "q_bpe_apply" -> bpeApplySql,
-    "q_anomaly" -> anomalySql,
-    "q_delta_compact" -> deltaCompactSql,
-    "q_source_mixing" -> sourceMixingSql,
-    "q_zone_map" -> zoneMapSql,
-    "q_ppr" -> pprSql,
-    "q_feature_scale" -> featureScaleSql,
-    "q_events_json" -> eventsJsonSql)
+  val oracleSql: Map[String, String] = specs.map(q => q.name -> q.oracleSql).toMap
 }

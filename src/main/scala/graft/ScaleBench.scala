@@ -412,7 +412,7 @@ object ScaleBench {
       // signatures once, checkpointed: decode cost is per-image and
       // identical across regimes — the probe isolates INDEX maintenance
       val sigs = graft.multimodal.Multimodal.imageDhash(
-        QueryCatalog.imagePayloadsFixture(spark, dir)).localCheckpoint()
+        catalog.MultimodalQueries.imagePayloadsFixture(spark, dir)).localCheckpoint()
       def countFiles(root: String): Int = {
         val fs = new org.apache.hadoop.fs.Path(root)
           .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -747,7 +747,7 @@ object ScaleBench {
       val job = new graft.etl.IncrementalBackup(spark, cfg,
         new graft.etl.StatusStore(spark, s"$tmp/status"), s"$tmp/dest")
       val sigs = graft.multimodal.Multimodal.imageDhash(
-        QueryCatalog.imagePayloadsFixture(spark, dir)).localCheckpoint()
+        catalog.MultimodalQueries.imagePayloadsFixture(spark, dir)).localCheckpoint()
       val visIdx = s"$tmp/vis"
       graft.multimodal.VisualIndex.build(sigs.filter(col("doc_id") < 250), visIdx)
       val emb = Tables.embeddings(spark, dir).localCheckpoint()

@@ -2,10 +2,11 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
-  * The full query surface lives in [[QueryCatalog]]; this object is the
-  * stable entry point the driver harness invokes.
+  * The full query surface lives in [[QueryCatalog]], one spec per query in
+  * the family objects under `graft/catalog/`; this object is the stable
+  * entry point the driver harness invokes.
   */
 object SparkEntry {
 
@@ -18,8 +19,8 @@ object SparkEntry {
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = QueryCatalog.queries
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for non-SQL-expressible ops.
+  /** For every key in queries, equivalent ANSI SQL runnable by DuckDB on
+    * the same parquet tables.
     */
   def oracleSql: Map[String, String] = QueryCatalog.oracleSql
 }

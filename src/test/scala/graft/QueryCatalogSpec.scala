@@ -1,5 +1,9 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.streaming.StreamingQueryListener
+
 import graft.multimodal.Multimodal
 
 /** Smoke over the whole declared surface at sf0.001 + targeted invariants.
@@ -10,11 +14,37 @@ class QueryCatalogSpec extends SparkSpec {
 
   test("every declared query runs and every oracle key has a query") {
     assert(QueryCatalog.oracleSql.keySet.subsetOf(QueryCatalog.queries.keySet))
-    QueryCatalog.queries.foreach { case (name, fn) =>
+    // the maps are built with toMap, which keeps the last of two equal keys
+    val names = QueryCatalog.specs.map(_.name)
+    assert(names.distinct == names, s"duplicate query names: ${names.diff(names.distinct)}")
+    // onQueryStarted runs before start() returns, so `current` names the
+    // query whose body started the stream
+    @volatile var current = ""
+    val started = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+        started.add(current)
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(listener)
+    try QueryCatalog.queries.foreach { case (name, fn) =>
+      current = name
       val df = fn(spark, sf)
       assert(df.columns.nonEmpty, s"$name has no columns")
       df.count() // must execute without throwing
-    }
+    } finally spark.streams.removeListener(listener)
+    val streamed = started.asScala.toSet
+    assert(streamed == QueryCatalog.streamingDrains,
+      s"start a stream but are not Drain: ${(streamed -- QueryCatalog.streamingDrains).toSeq.sorted}; " +
+        s"Drain but start none: ${(QueryCatalog.streamingDrains -- streamed).toSeq.sorted}")
+  }
+
+  test("q_backfill and q_stream_running leave the session conf as they found it") {
+    val before = spark.conf.getAll
+    QueryCatalog.queries("q_backfill")(spark, sf).collect()
+    QueryCatalog.queries("q_stream_running")(spark, sf).collect()
+    assert(spark.conf.getAll == before)
   }
 
   test("join cardinality estimate equals the materialized self-join size") {

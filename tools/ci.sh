@@ -1,7 +1,7 @@
 #!/bin/bash
-# CI gate: the rename allowlist, the lock gate, the manifest-root gate,
-# compile, unit/e2e suites, the benchmark's own build, the idle-job and
-# steady-drain job gates, the ETL oracle and the scaladoc build.
+# CI gate: the rename allowlist, the lock gate, the manifest-root gate, the
+# catalog gate, compile, unit/e2e suites, the benchmark's own build, the
+# idle-job and steady-drain job gates, the ETL oracle and the scaladoc build.
 # The ETL oracle runs the 8 q_etl_* queries (every write path of the backup
 # loop) through Verify at sf0.001 and checks them against DuckDB; without
 # the testdata it is skipped, and says so. A malformed doc comment fails `sbt doc`; any
@@ -44,6 +44,14 @@ fi
 # or stat of the root would be a metadata op on every call.
 if grep -nE 'listStatus\(root|exists\(root' src/main/scala/graft/sources/ManifestLog.scala; then
   echo "ManifestLog lists or stats its root directly (read it through AtomicLog.list)" >&2
+  exit 1
+fi
+# Catalog gate: a query is one QuerySpec next to its body in a family
+# object under graft/catalog/; QueryCatalog only concatenates the families'
+# specs. A query body (`: Q =`) or a `"q_…" ->` map entry in it would grow
+# the monolith back.
+if grep -nE ': Q =|"q[0-9a-z_]*" *->' src/main/scala/graft/QueryCatalog.scala; then
+  echo "QueryCatalog.scala defines a query (declare it as a QuerySpec in its family under graft/catalog/)" >&2
   exit 1
 fi
 sbt -batch compile Test/compile
