@@ -385,12 +385,9 @@ object Bench {
     * comma-joined. TSV instead of JSON so the parent's merge needs no
     * parser beyond split.
     */
-  private def childMain(sfDir: String, cpus: String, section: String,
-      outPath: String, keep: String => Boolean): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
+  /** The session a section is timed in, child or in-process. */
+  private def session(cpus: String): SparkSession = {
+    val spark = GraftSession.local(cpus)
       // Plan TEXT truncation is fingerprint poison: Spark elides metadata
       // strings (DataFilters, Location) past 100 chars BEFORE our exprId
       // normalization, so the cut position depends on the raw exprId
@@ -401,6 +398,12 @@ object Bench {
       .config("spark.sql.debug.maxToStringFields", "100000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  private def childMain(sfDir: String, cpus: String, section: String,
+      outPath: String, keep: String => Boolean): Unit = {
+    val spark = session(cpus)
     // JVM/codegen warmup so the first measured query doesn't absorb JIT +
     // session init cost (flagship on the smallest SF touches the same
     // read/agg machinery)
@@ -568,14 +571,7 @@ object Bench {
         // accumulation drift the fork exists to prevent; flagged in diag
         if (fork) System.err.println(
           s"[bench] child JVM for $section failed — falling back in-process")
-        val spark = SparkSession.builder()
-          .master(s"local[$cpus]")
-          .config("spark.sql.shuffle.partitions", cpus)
-          .config("spark.ui.enabled", "false")
-          .config("spark.sql.maxMetadataStringLength", "100000")
-          .config("spark.sql.debug.maxToStringFields", "100000")
-          .getOrCreate()
-        spark.sparkContext.setLogLevel("WARN")
+        val spark = session(cpus)
         try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
         val planDiag = new StringBuilder
         val inProc = runSection(spark, sfDir, section, keep,

@@ -103,11 +103,7 @@ object EtlMain {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val root = args.lift(1).getOrElse(
       java.nio.file.Files.createTempDirectory("graft-etl").toString)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession.builder(sys.env.getOrElse("SPARK_MASTER", "local[8]"), "8")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     println(run(spark, sfDir, root, args.drop(2).toSeq))

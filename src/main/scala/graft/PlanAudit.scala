@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev/audit tool: physical-plan profile of every declared query —
   * exchanges (shuffles), broadcast vs sort-merge joins, scans, and
   * whole-stage-codegen coverage — written as a markdown table so plan
@@ -35,14 +33,11 @@ object PlanAudit {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = args.lift(1).getOrElse("PLANS.md")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+    val spark = GraftSession.local(cpus)
       // static plans: with AQE on, executedPlan is an AdaptiveSparkPlan
       // shell whose WholeStageCodegen/stage structure only materializes
       // during execution — useless for a textual audit
       .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val rows = QueryCatalog.queries.toSeq.sortBy(_._1).map { case (name, fn) =>

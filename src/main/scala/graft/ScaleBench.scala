@@ -3,7 +3,6 @@ package graft
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** The sf1 scale rehearsal (VERDICT r4 task 1): measure the flagship
@@ -109,12 +108,7 @@ object ScaleBench {
       .map(_.split(",").map(_.trim).toSet)
     val outJson = sys.env.getOrElse("SPARK_GRAFT_SCALE_JSON", "BENCH_sf1.json")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // Section selection. Legacy values: "all" (families + extras) and

@@ -33,9 +33,10 @@ object Tables {
     * adjusted-to-UTC flag, which Spark 4 infers as TIMESTAMP_NTZ
     * (`o_orderdate`, `l_shipdate`, `events.ts`). All consumers and the
     * DuckDB oracle treat these as epoch-anchored instants, and every
-    * entrypoint pins the session timezone to UTC, so casting NTZ→TIMESTAMP
-    * is the identity on wall-clock values — it just restores the type the
-    * whole catalog (unix_millis, watermarks, window ranges) was built on.
+    * entrypoint pins the session timezone to UTC (its session is a
+    * [[GraftSession]]), so casting NTZ→TIMESTAMP is the identity on
+    * wall-clock values — it just restores the type the whole catalog
+    * (unix_millis, watermarks, window ranges) was built on.
     */
   private def normalizeNtz(df: DataFrame): DataFrame =
     df.schema.fields.collect {
@@ -53,17 +54,18 @@ object Tables {
   def orders(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "orders")
   def lineitem(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "lineitem")
   /** `events.ts` arrives in whatever physical type the generator emitted
-    * that round — TIMESTAMP(NANOS) (which Spark's vectorized reader rejects;
-    * read nanos as long and floor-convert) or TIMESTAMP(MICROS) without the
+    * that round — TIMESTAMP(NANOS) or TIMESTAMP(MICROS) without the
     * adjusted-to-UTC flag (which Spark 4 infers as TIMESTAMP_NTZ).
-    * Normalize both to plain TIMESTAMP: every consumer (`unix_millis`,
-    * watermarks, window ranges) and the DuckDB oracle (`epoch_ms`) assume
-    * epoch-anchored micros, and the session timezone is pinned to UTC in
-    * every entrypoint, so the NTZ→LTZ cast is the identity on the wall-clock
-    * values the oracle sees.
+    * Spark's reader rejects NANOS unless the session was built with
+    * `spark.sql.legacy.parquet.nanosAsLong=true` (every [[GraftSession]]
+    * is; this reader does not set it), which reads the nanos as a long,
+    * floor-converted here. Normalize both to plain TIMESTAMP: every
+    * consumer (`unix_millis`, watermarks, window ranges) and the DuckDB
+    * oracle (`epoch_ms`) assume epoch-anchored micros, and the session
+    * timezone is pinned to UTC in every entrypoint, so the NTZ→LTZ cast is
+    * the identity on the wall-clock values the oracle sees.
     */
   def events(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = load(spark, sfDir, "events")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Dev tool: time named queries (count action) for N reps each.
   * `runMain graft.Timeq <sfDir> <reps> <query ...>`
   */
@@ -9,11 +8,7 @@ object Timeq {
     val reps = args(1).toInt
     val names = args.drop(2).toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     names.foreach { n =>
       val times = (1 to reps).map { _ =>

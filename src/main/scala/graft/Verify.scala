@@ -12,8 +12,9 @@ import java.nio.file.{Files, Paths}
   *    already-dumped query gradeable instead of an all-or-nothing artifact;
   *  - default parallelism raised (local[12]) and the independent queries
   *    run through a small driver-side pool (`SPARK_GRAFT_VERIFY_POOL`,
-  *    default 4) — each task on its own `spark.newSession()` so per-query
-  *    conf mutations stay isolated, with Spark's FAIR scheduler
+  *    default 4) — each task on its own `spark.newSession()`, so the
+  *    streaming drains' scoped settings (`CatalogCommon.withConf`) stay
+  *    isolated from the concurrent queries, with Spark's FAIR scheduler
   *    interleaving the concurrent jobs;
   *  - queries start longest-first (LPT order, costed from the committed
   *    BENCH_DETAILS.json) so stragglers don't serialize at the tail;
@@ -42,14 +43,10 @@ object Verify {
     val only = args.drop(2).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "12")
     val poolSize = sys.env.getOrElse("SPARK_GRAFT_VERIFY_POOL", "4").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = GraftSession.local(cpus)
       // FAIR so the pool's concurrent query jobs share task slots instead
       // of queueing whole jobs FIFO behind one wide stage
       .config("spark.scheduler.mode", "FAIR")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

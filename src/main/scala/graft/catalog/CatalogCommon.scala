@@ -142,13 +142,22 @@ private[graft] object CatalogCommon {
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   /** Run `f` with the session conf `key` set to `value`, then restore the
-    * session's previous value. The state-store provider and the shuffle
-    * partition count are read at stream start, so the scope is the
-    * per-query discipline (Verify/Bench run queries sequentially on one
-    * session).
+    * session's previous value: the one save/set/restore scope left in
+    * `src/main`, used only around the streaming drains (through
+    * `withDrainParallelism` and `QueryCatalog.withStateBackend`). The
+    * state-store provider and the shuffle partition count are read when a
+    * stream starts, so they must be set in the session that starts it; and
+    * a session's `StreamingQueryListener`s hear only the streams started
+    * in that session, so running the drain in an isolated clone instead
+    * would hide it from Bench's state meter and from the catalog spec's
+    * kind check. The scope is not safe under two overlapping calls on one
+    * session: Verify runs each pooled query on its own session, and Bench
+    * runs queries one at a time. A key the session did not set is unset
+    * again (`getOption` would return its default, and restoring that would
+    * leave the key set).
     */
   private[graft] def withConf[T](s: SparkSession, key: String, value: String)(f: => T): T = {
-    val prev = s.conf.getOption(key)
+    val prev = s.conf.getAll.get(key)
     s.conf.set(key, value)
     try f
     finally prev match {

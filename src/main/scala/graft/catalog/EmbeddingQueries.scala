@@ -56,18 +56,16 @@ private[graft] object EmbeddingQueries {
        |ORDER BY vec_a, vec_b""".stripMargin
 
   /** The opt-in Catalyst rule on the declared path: the query is written as
-    * the NAIVE all-pairs cosine cross join; RewriteCosineSelfJoin (installed
-    * via experimental.extraOptimizations, gated by its conf flag) rewrites
-    * the plan into the LSH-bucket equi-join, and the oracle checks the
-    * BLOCKED semantics — the same result as ⊕ q_embedding_neardups. The
-    * rule stays installed for the session: it matches only this
-    * cross-join-plus-cosine-filter shape, which no other query builds.
+    * the NAIVE all-pairs cosine cross join; RewriteCosineSelfJoin (added to
+    * an isolated clone of the caller's session with its conf flag on)
+    * rewrites the plan into the LSH-bucket equi-join, and the oracle checks
+    * the BLOCKED semantics — the same result as ⊕ q_embedding_neardups. The
+    * caller's session is left without the rule and the flag.
     */
-  private val qCosineRewrite: Q = (s, dir) => {
-    import org.apache.spark.sql.graftx.RewriteCosineSelfJoin
-    if (!s.experimental.extraOptimizations.contains(RewriteCosineSelfJoin))
-      s.experimental.extraOptimizations ++= Seq(RewriteCosineSelfJoin)
-    s.conf.set("spark.graft.similarity.rewrite", "true")
+  private val qCosineRewrite: Q = (s0, dir) => {
+    import org.apache.spark.sql.graftx.{IsolatedSession, RewriteCosineSelfJoin}
+    val s = IsolatedSession(s0, Map("spark.graft.similarity.rewrite" -> "true"),
+      Seq(RewriteCosineSelfJoin))
     val emb = Tables.embeddings(s, dir)
     val a = emb.select(col("vec_id").as("vec_a"), col("embedding").as("emb_a"))
     val b = emb.select(col("vec_id").as("vec_b"), col("embedding").as("emb_b"))
@@ -527,21 +525,19 @@ private[graft] object EmbeddingQueries {
     * partition at runtime from map-output statistics — the 100 TB answer
     * when the skewed keys aren't known in advance (SaltedJoin is the
     * static answer when they are). The query executes once internally on
-    * an isolated session (tuned skew thresholds; `newSession` shares the
-    * SparkContext but not the SQLConf, so sibling queries are untouched)
-    * and emits `skew_split` — whether the final adaptive plan actually
-    * split the skewed partition — as oracle-comparable data alongside the
-    * join aggregate itself. The hash matches only if the skew handling
+    * an isolated clone of the caller's session (tuned skew thresholds; the
+    * caller's session is untouched) and emits `skew_split` — whether the
+    * final adaptive plan actually split the skewed partition — as
+    * oracle-comparable data alongside the join aggregate itself. The hash matches only if the skew handling
     * both fired AND preserved the exact join semantics.
     */
   private val qAqeSkewJoin: Q = (s0, dir) => {
-    val s = s0.newSession()
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    s.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    s.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-    s.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "16384")
-    s.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8192")
+    val s = org.apache.spark.sql.graftx.IsolatedSession(s0, Map(
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "16384",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "8192"))
     // round-robin pre-repartition models a real cluster's many map tasks:
     // AQE splits a skewed reduce partition at MAPPER granularity, so a
     // single-file local scan (one mapper) would leave nothing to split

@@ -894,15 +894,13 @@ private[graft] object MultimodalQueries {
         sigs.filter(col("doc_id") >= 350 && col("doc_id") < 400), f)
     }
     val idx = Fixtures.mutableCopy(layered)
-    val rowsBefore = graft.sources.Listing.boundedStore(s)(
-      s.read.parquet(idx)).count()
+    val rowsBefore = graft.sources.Listing.read(s, idx).count()
     // r12: the all-small-leaf case fuses into ONE distributed rewrite job
     // + per-leaf atomic swaps (Compaction scaladoc); maxParallel only
     // throttles the >targetBytes fallback
     val st = graft.sources.Compaction.compactPartitions(s, idx,
       maxParallel = 8)
-    val rowsAfter = graft.sources.Listing.boundedStore(s)(
-      s.read.parquet(idx)).count()
+    val rowsAfter = graft.sources.Listing.read(s, idx).count()
     val probes = Multimodal.imageDhash(
       imagePayloads(s, dir).filter(col("doc_id") >= 400))
     VisualIndex.probe(probes, s, idx, maxHamming = 3)

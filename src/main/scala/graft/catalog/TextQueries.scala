@@ -1,13 +1,14 @@
 package graft
 package catalog
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.dedup.Dedup
 import graft.functions.{CountMin, Exact, SketchStore, TextFunctions}
 import graft.pipeline.TokenBudget
+import org.apache.spark.sql.graftx.{IsolatedSession, RewriteAggToProjection}
 import org.apache.spark.sql.graftx.RollingHash.rolling_hash
 
 import CatalogCommon._
@@ -721,24 +722,28 @@ private[graft] object TextQueries {
     * directly, hash-proving the swap is semantics-preserving.
     */
   private val qMvRewrite: Q = (s, dir) => {
-    import org.apache.spark.sql.graftx.{MvRegistry, RewriteAggToProjection}
+    import org.apache.spark.sql.graftx.MvRegistry
     val tmp = java.nio.file.Files.createTempDirectory("graft-mvr").toString
     val groups = Seq("l_returnflag")
     val measures = Seq("l_extendedprice")
     etl.AggProjection.build(Tables.lineitem(s, dir), groups, measures, s"$tmp/proj")
-    def naive = Tables.lineitem(s, dir)
+    def naive(on: SparkSession) = Tables.lineitem(on, dir)
       .groupBy(col("l_returnflag"))
       .agg(count(lit(1)).as("cnt"),
         Exact.sumExact(col("l_extendedprice")).as("sum_l_extendedprice"))
       .orderBy("l_returnflag")
     val viaMv = etl.AggProjection.answer(s, s"$tmp/proj", groups, measures)
       .orderBy("l_returnflag")
-    MvRegistry.register(naive, viaMv)
-    if (!s.experimental.extraOptimizations.contains(RewriteAggToProjection))
-      s.experimental.extraOptimizations ++= Seq(RewriteAggToProjection)
-    s.conf.set("spark.graft.mv.rewrite", "true")
-    naive // a FRESH naive plan — matched by canonical equality, not identity
+    MvRegistry.register(naive(s), viaMv)
+    // a FRESH naive plan — matched by canonical equality, not identity
+    naive(withMvRewrite(s))
   }
+
+  /** A clone of `s` that plans with [[RewriteAggToProjection]] on; `s`
+    * stays as it was.
+    */
+  private def withMvRewrite(s: SparkSession): SparkSession =
+    IsolatedSession(s, Map("spark.graft.mv.rewrite" -> "true"), Seq(RewriteAggToProjection))
 
   private val mvRewriteSql =
     """SELECT l_returnflag, CAST(COUNT(*) AS BIGINT) AS cnt,
@@ -756,7 +761,7 @@ private[graft] object TextQueries {
     * projection is semantically transparent.
     */
   private val qMvPrejoin: Q = (s, dir) => {
-    import org.apache.spark.sql.graftx.{MvRegistry, RewriteAggToProjection}
+    import org.apache.spark.sql.graftx.MvRegistry
     val tmp = java.nio.file.Files.createTempDirectory("graft-mvpj").toString
     etl.PrejoinProjection.build(Tables.orders(s, dir),
       Tables.customer(s, dir), col("o_custkey") === col("c_custkey"),
@@ -768,13 +773,10 @@ private[graft] object TextQueries {
       .agg(count(lit(1)).as("n"), expr("bit_xor(o_orderkey)").as("key_xor"),
         Exact.sumExact(col("o_totalprice")).as("revenue"))
       .orderBy("c_mktsegment")
-    def naive = agg(Tables.orders(s, dir).join(Tables.customer(s, dir),
+    def naive(on: SparkSession) = agg(Tables.orders(on, dir).join(Tables.customer(on, dir),
       col("o_custkey") === col("c_custkey")))
-    MvRegistry.register(naive, agg(store))
-    if (!s.experimental.extraOptimizations.contains(RewriteAggToProjection))
-      s.experimental.extraOptimizations ++= Seq(RewriteAggToProjection)
-    s.conf.set("spark.graft.mv.rewrite", "true")
-    naive // fresh plan — rerouted by canonical equality, not identity
+    MvRegistry.register(naive(s), agg(store))
+    naive(withMvRewrite(s)) // fresh plan — rerouted by canonical equality, not identity
   }
 
   private val mvPrejoinSql =
@@ -2173,11 +2175,11 @@ private[graft] object TextQueries {
     }
     val cat = "graftdw_" + java.lang.Long.toHexString(
       scala.util.hashing.MurmurHash3.stringHash(dir).toLong & 0xffffffffL)
-    graft.sources.Sources.jdbcCatalog(s, cat, s"jdbc:derby:$fx/db")
+    val w = graft.sources.Sources.jdbcCatalog(s, cat, s"jdbc:derby:$fx/db")
     // DSv1 write.jdbc leaves the TABLE name unquoted (Derby normalizes it
     // to upper case) while quoting COLUMN names — so the V2 identifier is
     // upper-case, the columns stay lower-case.
-    val t = s.table(s"$cat.ORDERS_T")
+    val t = w.table(s"$cat.ORDERS_T")
     val agg = t.groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("n"),
         min(col("o_orderkey")).as("min_key"),
@@ -2229,8 +2231,8 @@ private[graft] object TextQueries {
     }
     val cat = "graftdw_" + java.lang.Long.toHexString(
       scala.util.hashing.MurmurHash3.stringHash(dir).toLong & 0xffffffffL)
-    graft.sources.Sources.jdbcCatalog(s, cat, s"jdbc:derby:$fx/db")
-    val probe = s.table(s"$cat.ORDERS_T")
+    val probe = graft.sources.Sources.jdbcCatalog(s, cat, s"jdbc:derby:$fx/db")
+      .table(s"$cat.ORDERS_T")
       .filter(col("o_orderpriority") === lit("1-URGENT"))
       .orderBy(col("o_orderkey").desc)
       .limit(5)
@@ -2274,8 +2276,8 @@ private[graft] object TextQueries {
     }
     val cat = "graftdwa_" + java.lang.Long.toHexString(
       scala.util.hashing.MurmurHash3.stringHash(dir).toLong & 0xffffffffL)
-    graft.sources.Sources.jdbcCatalog(s, cat, s"jdbc:derby:$fx/db")
-    val t = s.table(s"$cat.ORDERS_A")
+    val t = graft.sources.Sources.jdbcCatalog(s, cat, s"jdbc:derby:$fx/db")
+      .table(s"$cat.ORDERS_A")
     val agg = t.groupBy(col("o_orderpriority"))
       .agg(avg(col("o_custval")).as("avg_cust"),
         count(lit(1)).as("n"))
@@ -2383,28 +2385,20 @@ private[graft] object TextQueries {
     * shuffle spectrum).
     */
   private val qBucketedJoin: Q = (s, dir) => {
-    // a fresh session's in-memory catalog doesn't know tables a previous
-    // run materialized — drop both catalog entry AND orphan warehouse dir,
-    // or saveAsTable fails with LOCATION_ALREADY_EXISTS
     // the bucketed layout is a build-once artifact (cluster-by at load
     // time); the timed operator is the zero-shuffle co-located join.
-    // Fixtures caches per (JVM, dir): first run drops + rebuilds, later
-    // runs reuse the catalog tables.
-    Fixtures.getOrBuild(s"bucketed:$dir") { _ =>
-      Seq("graft_q_orders_b", "graft_q_lineitem_b").foreach { t =>
-        s.sql(s"DROP TABLE IF EXISTS $t")
-        val p = new org.apache.hadoop.fs.Path(
-          s.conf.get("spark.sql.warehouse.dir"), t)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      }
+    // Fixtures caches per (JVM, dir): the first run writes both tables
+    // under the fixture's temp dir (replacing a catalog entry of the same
+    // name), later runs reuse the catalog tables.
+    Fixtures.getOrBuild(s"bucketed:$dir") { f =>
       graft.sources.Bucketing.writeBucketed(
         Tables.orders(s, dir)
           .select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice")),
-        "graft_q_orders_b", "o_orderkey", numBuckets = 8)
+        "graft_q_orders_b", "o_orderkey", numBuckets = 8, s"$f/graft_q_orders_b")
       graft.sources.Bucketing.writeBucketed(
         Tables.lineitem(s, dir)
           .select(col("l_orderkey").as("o_orderkey"), col("l_quantity")),
-        "graft_q_lineitem_b", "o_orderkey", numBuckets = 8)
+        "graft_q_lineitem_b", "o_orderkey", numBuckets = 8, s"$f/graft_q_lineitem_b")
     }
     graft.sources.Bucketing.bucketedJoin(
         s, "graft_q_orders_b", "graft_q_lineitem_b", "o_orderkey")

@@ -42,10 +42,8 @@ object VisualIndex {
     * cell count instead of the input split count.
     */
   def build(sigs: DataFrame, path: String, mode: String = "overwrite"): Unit =
-    graft.sources.Listing.boundedStore(sigs.sparkSession) {
-      quarters(sigs).repartition(col("q"), col("qb"))
-        .write.partitionBy("q", "qb").mode(mode).parquet(path)
-    }
+    quarters(sigs).repartition(col("q"), col("qb"))
+      .write.partitionBy("q", "qb").mode(mode).parquet(path)
 
   /** Append a batch's quarters (the post-probe step of the gate). */
   def append(sigs: DataFrame, path: String): Unit =
@@ -61,8 +59,7 @@ object VisualIndex {
     // ≤ 4·64 = 256 driver-side keys — bounded by construction, not data
     val keys = bq.select((col("q") * 64 + col("qb")).cast("long"))
       .distinct().collect().map(_.getLong(0)).toSeq
-    val idx = graft.sources.Listing.boundedStore(spark)(
-        spark.read.parquet(path))
+    val idx = graft.sources.Listing.read(spark, path)
       .filter((col("q") * 64 + col("qb")).isin(keys: _*))
       .select(col("q"), col("qhash"), col("doc_id").as("indexed_id"),
         col("sig").as("sig_idx"))

@@ -14,11 +14,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Bucketing {
 
+  /** Write `df` as catalog table `table`, bucketed and sorted on
+    * `bucketCol`, with its files at `location` (an external table, not a
+    * managed dir under the session's warehouse). An existing table of that
+    * name is replaced.
+    */
   def writeBucketed(df: DataFrame, table: String, bucketCol: String,
-      numBuckets: Int): Unit =
+      numBuckets: Int, location: String): Unit =
     df.write
       .mode("overwrite")
       .format("parquet")
+      .option("path", location)
       .bucketBy(numBuckets, bucketCol)
       .sortBy(bucketCol)
       .saveAsTable(table)

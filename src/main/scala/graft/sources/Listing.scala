@@ -1,8 +1,15 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.ConcurrentHashMap
 
-/** Listing-mode scope for BOUNDED partitioned stores (r12, guide §6).
+import org.apache.hadoop.fs.{FileStatus, FileSystem, LocatedFileStatus, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{DataSource, FileFormat, FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.graftx.{Nullable, ParquetFooterSchema}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+
+/** Driver-listed reads of BOUNDED partitioned stores (r12, guide §6).
   *
   * Spark fans file listing out to a distributed job once a directory level
   * has more than `spark.sql.sources.parallelPartitionDiscovery.threshold`
@@ -15,25 +22,70 @@ import org.apache.spark.sql.SparkSession
   * measured r12 at 1.0 s vs 0.36 s for a plain read of the 256-dir visual
   * index, 2.4 s vs 0.8 s for a gate probe.
   *
-  * The threshold inside the scope comes from
-  * `spark.graft.store.listingThreshold` (default 4096 — covers every
-  * bounded store here with slack). Deployments reading these stores off
-  * high-latency object stores set it back to 32 (or lower) in the session
-  * conf; the knob is a conf, not a constant, per the scale-adaptivity rule.
-  * The previous value is restored on exit so unbounded-table scans keep
-  * Spark's default behavior.
+  * [[read]] lists the store on the driver, one `listStatus` per directory,
+  * and hands that listing to Spark's own `InMemoryFileIndex` through a
+  * private `FileStatusCache`, so the index never lists (and never starts a
+  * listing job) while partition discovery, pruning and the plan stay
+  * Spark's: the scan reads `InMemoryFileIndex(1 paths)[<root>]` as a
+  * `spark.read` of the same root does. The data schema comes from one
+  * file on the driver (a parquet footer; other formats through their own
+  * inference). No session setting is read or written.
   */
 object Listing {
-  private val SparkKey = "spark.sql.sources.parallelPartitionDiscovery.threshold"
 
-  def boundedStore[T](spark: SparkSession)(f: => T): T = {
-    val prev = spark.conf.getOption(SparkKey)
-    val v = spark.conf.get("spark.graft.store.listingThreshold", "4096")
-    spark.conf.set(SparkKey, v)
-    try f
-    finally prev match {
-      case Some(p) => spark.conf.set(SparkKey, p)
-      case None    => spark.conf.unset(SparkKey)
+  /** The store under `root` in `format`, as `spark.read.format(format)
+    * .load(root)` reads it, with its files listed on the driver. The
+    * partition columns named in `stringColumns` are STRINGs holding their
+    * dir values verbatim (`qb=00` reads `"00"`, not `0`), so a rewrite
+    * writes back the same dir names. Fails naming `root` when it holds no
+    * non-empty file.
+    */
+  def read(spark: SparkSession, root: String, format: String = "parquet",
+      stringColumns: Seq[String] = Nil): DataFrame = {
+    val path = new Path(root)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val qualified = fs.makeQualified(path)
+    val files = leafFiles(fs, qualified)
+    val sample = files.find(_.getLen > 0).getOrElse(throw new java.io.FileNotFoundException(
+      s"nothing to read under $root: no non-empty file"))
+    val cache = new FileStatusCache {
+      private val leaves = new ConcurrentHashMap[Path, Array[FileStatus]]()
+      leaves.put(qualified, files.toArray)
+      override def getLeafFiles(p: Path): Option[Array[FileStatus]] = Option(leaves.get(p))
+      override def putLeafFiles(p: Path, l: Array[FileStatus]): Unit = leaves.put(p, l)
+      override def invalidateAll(): Unit = leaves.clear()
     }
+    val strings = Some(StructType(stringColumns.map(StructField(_, StringType))))
+      .filter(_.nonEmpty)
+    val index = new InMemoryFileIndex(spark, Seq(qualified), Map.empty, strings, cache,
+      None, None)
+    val fileFormat = DataSource(spark, className = format).providingClass
+      .getConstructor().newInstance().asInstanceOf[FileFormat]
+    val inferred = fileFormat match {
+      case _: ParquetFileFormat => ParquetFooterSchema.of(spark, sample.getPath)
+      case f => f.inferSchema(spark, Map.empty, Seq(sample)).getOrElse(
+        throw new IllegalStateException(s"no schema in ${sample.getPath}"))
+    }
+    val partCols = index.partitionSchema.fieldNames.toSet
+    val dataSchema = StructType(inferred.filterNot(f => partCols.contains(f.name)))
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
+      Nullable(dataSchema), None, fileFormat, Map.empty)(spark))
+  }
+
+  /** The files under `dir` whose path below it has no hidden name (`_`/`.`:
+    * `_SUCCESS`, `.crc`, staging dirs), each dir's files before its
+    * subdirs' as Spark's serial listing orders them, with block locations
+    * built from the file's length (a located status of a local file would
+    * look up its permissions by launching a process).
+    */
+  private def leafFiles(fs: FileSystem, dir: Path): Seq[FileStatus] = {
+    val (dirs, files) = fs.listStatus(dir).toSeq.filterNot { st =>
+      val n = st.getPath.getName
+      n.startsWith("_") || n.startsWith(".")
+    }.partition(_.isDirectory)
+    files.map(f => new LocatedFileStatus(f.getLen, false, f.getReplication, f.getBlockSize,
+      f.getModificationTime, 0L, null, null, null, null, f.getPath,
+      fs.getFileBlockLocations(f, 0L, f.getLen))) ++
+      dirs.flatMap(d => leafFiles(fs, d.getPath))
   }
 }

@@ -44,24 +44,23 @@ object Sources {
     * pushes filters but always fetches rows before aggregating; the V2
     * `JDBCTableCatalog` compiles the aggregate to dialect SQL and, on an
     * unpartitioned read, executes it COMPLETELY warehouse-side (the plan
-    * shows `PushedAggregates` and no row-level scan). Read tables as
-    * `spark.table(s"\$name.<table>")`.
-    *
-    * Catalog instances are cached by name in the session's CatalogManager
-    * after first resolution — callers must use a distinct `name` per URL.
+    * shows `PushedAggregates` and no row-level scan). The catalog is
+    * registered in the returned session, a clone of `spark`
+    * ([[org.apache.spark.sql.graftx.IsolatedSession]]); `spark` itself is
+    * left as it was. Read tables as `<returned>.table(s"\$name.<table>")`.
     */
   def jdbcCatalog(spark: SparkSession, name: String, url: String,
-      extra: Map[String, String] = Map.empty): Unit = {
+      extra: Map[String, String] = Map.empty): SparkSession = {
     // the embedded test warehouse needs the FETCH FIRST spelling before
     // ordered probes can push their TopN warehouse-side
     DerbyProbeDialectRegistration.register()
-    spark.conf.set(s"spark.sql.catalog.$name",
-      "org.apache.spark.sql.execution.datasources.v2.jdbc.JDBCTableCatalog")
-    spark.conf.set(s"spark.sql.catalog.$name.url", url)
-    spark.conf.set(s"spark.sql.catalog.$name.pushDownAggregate", "true")
-    spark.conf.set(s"spark.sql.catalog.$name.pushDownLimit", "true")
-    extra.foreach { case (k, v) =>
-      spark.conf.set(s"spark.sql.catalog.$name.$k", v) }
+    val key = s"spark.sql.catalog.$name"
+    org.apache.spark.sql.graftx.IsolatedSession(spark, Map(
+      key -> "org.apache.spark.sql.execution.datasources.v2.jdbc.JDBCTableCatalog",
+      s"$key.url" -> url,
+      s"$key.pushDownAggregate" -> "true",
+      s"$key.pushDownLimit" -> "true") ++
+      extra.map { case (k, v) => s"$key.$k" -> v })
   }
 
   /** S7: delimited-text source — the reference's Hive external text table

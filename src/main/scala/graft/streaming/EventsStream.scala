@@ -26,10 +26,11 @@ object EventsStream {
 
   /** Streaming source over the events parquet (schema pinned — no inference).
     * Handles the TIMESTAMP(NANOS) storage the same way as
-    * [[graft.Tables.events]]: nanos read as long, floor-converted to µs.
+    * [[graft.Tables.events]]: nanos read as long (in a session built with
+    * `nanosAsLong`, as every [[graft.GraftSession]] is), floor-converted
+    * to µs.
     */
   def readEvents(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
     // glob (not bare file path): FileStreamSource requires its basePath to be
     // a directory; the glob also matches events.parquet/part-* layouts

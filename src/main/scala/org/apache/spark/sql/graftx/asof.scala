@@ -34,8 +34,8 @@ case class AsofJoinNode(
     copy(left = newLeft, right = newRight)
 }
 
-/** Planner strategy: registered via `spark.experimental.extraStrategies`
-  * (see [[AsofPhysical.asof]]) or `GraftExtensions`.
+/** Planner strategy of [[AsofJoinNode]], installed at session build by
+  * [[GraftExtensions]].
   */
 object AsofJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
@@ -154,14 +154,13 @@ object AsofPhysical {
   /** As-of join via the custom physical operator: semantics identical to
     * `graft.operators.AsofJoin` (right value columns come back as
     * `asof_<name>`, null when no right row qualifies). Right value column
-    * names must not collide with left column names.
+    * names must not collide with left column names. The session of `left`
+    * must have been built with [[GraftExtensions]] (every `graft.GraftSession`
+    * is); without its planner strategy the join fails to plan.
     */
   def asof(left: DataFrame, right: DataFrame, key: String, time: String,
       rightCols: Seq[String]): DataFrame = {
     val spark = left.sparkSession
-    if (!spark.experimental.extraStrategies.contains(AsofJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsofJoinStrategy
     // fresh exprIds on the right side (Alias always re-ids) so a self-join
     // never carries duplicate attribute ids into the binary node
     val rightFresh = right.select(

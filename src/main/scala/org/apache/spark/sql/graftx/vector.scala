@@ -213,8 +213,10 @@ object VectorExprs {
   *
   * This is an APPROXIMATION (pairs in different buckets are dropped — recall
   * < 1 for t far below 1), so it only fires when
-  * `spark.graft.similarity.rewrite=true`. At 100 TB it converts an O(n²)
-  * cartesian into a hash-partitioned equality join — the plan a user gets by
+  * `spark.graft.similarity.rewrite=true` in a session whose optimizer
+  * carries it (`q_cosine_rewrite` plans in an [[IsolatedSession]] with
+  * both). At 100 TB it converts an O(n²) cartesian into a
+  * hash-partitioned equality join — the plan a user gets by
   * writing the naive query and opting in, instead of hand-rewriting to
   * `Similarity.cosineNearDups`.
   */
@@ -262,13 +264,18 @@ object RewriteCosineSelfJoin extends Rule[LogicalPlan] {
     }
 }
 
-/** Session-extension wiring for host applications:
+/** Session-extension wiring: the planner strategy of the as-of join
+  * ([[AsofJoinStrategy]]), which [[AsofPhysical.asof]] needs to plan. A
+  * host application adds it once, when it builds its session —
   * `SparkSession.builder().withExtensions(new GraftExtensions) …` or
-  * `--conf spark.sql.extensions=org.apache.spark.sql.graftx.GraftExtensions`.
+  * `--conf spark.sql.extensions=org.apache.spark.sql.graftx.GraftExtensions`
+  * — as `graft.GraftSession` does for graft's own entry points; graft
+  * never installs it into a running session. The opt-in optimizer rules
+  * ([[RewriteCosineSelfJoin]], [[RewriteAggToProjection]]) are not part of
+  * it: they are added per query, with their flags, to an
+  * [[IsolatedSession]].
   */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    e.injectOptimizerRule(_ => RewriteCosineSelfJoin)
+  override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit =
     e.injectPlannerStrategy(_ => AsofJoinStrategy)
-  }
 }

@@ -13,12 +13,13 @@ class PlanSpec extends SparkSpec {
     df.queryExecution.executedPlan.toString
 
   test("bucketed join on the bucket key plans without a shuffle exchange") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-bucketed").toString
     Bucketing.writeBucketed(
       Tables.orders(spark, sf).select("o_orderkey", "o_custkey", "o_totalprice"),
-      "orders_b", "o_orderkey", 4)
+      "orders_b", "o_orderkey", 4, s"$tmp/orders_b")
     Bucketing.writeBucketed(
       Tables.lineitem(spark, sf).select(col("l_orderkey").as("o_orderkey"), col("l_quantity")),
-      "lineitem_b", "o_orderkey", 4)
+      "lineitem_b", "o_orderkey", 4, s"$tmp/lineitem_b")
     val joined = Bucketing.bucketedJoin(spark, "orders_b", "lineitem_b", "o_orderkey")
     val p = plan(joined)
     assert(!p.contains("Exchange hashpartitioning"),

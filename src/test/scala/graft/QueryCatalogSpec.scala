@@ -27,13 +27,20 @@ class QueryCatalogSpec extends SparkSpec {
       override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
       override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
     }
+    // what a body may not leave changed in the session it is given
+    def sessionState = (spark.conf.getAll, spark.experimental.extraOptimizations,
+      spark.experimental.extraStrategies)
+    val leaked = scala.collection.mutable.ArrayBuffer.empty[String]
     spark.streams.addListener(listener)
     try QueryCatalog.queries.foreach { case (name, fn) =>
       current = name
+      val before = sessionState
       val df = fn(spark, sf)
       assert(df.columns.nonEmpty, s"$name has no columns")
       df.count() // must execute without throwing
+      if (sessionState != before) leaked += name
     } finally spark.streams.removeListener(listener)
+    assert(leaked.isEmpty, s"change the session they are given: ${leaked.sorted}")
     val streamed = started.asScala.toSet
     assert(streamed == QueryCatalog.streamingDrains,
       s"start a stream but are not Drain: ${(streamed -- QueryCatalog.streamingDrains).toSeq.sorted}; " +

@@ -1,14 +1,14 @@
 #!/bin/bash
 # CI gate: the rename allowlist, the lock gate, the manifest-root gate, the
-# catalog gate, compile, unit/e2e suites, the benchmark's own build, the
-# idle-job and steady-drain job gates, the ETL oracle and the scaladoc build.
-# The ETL oracle runs the 8 q_etl_* queries (every write path of the backup
-# loop) through Verify at sf0.001 and checks them against DuckDB; without
-# the testdata it is skipped, and says so. A malformed doc comment fails `sbt doc`; any
-# warning it prints (a broken, ambiguous or private [[link]]) fails this
-# gate too, so the API docs stay publishable. The full correctness drive
-# (all queries through Verify + DuckDB) is run manually per README when
-# touching query semantics.
+# catalog gate, the session gate, compile, unit/e2e suites, the benchmark's
+# own build, the idle-job and steady-drain job gates, the ETL oracle and the
+# scaladoc build. The ETL oracle runs the 8 q_etl_* queries (every write path
+# of the backup loop) through Verify at sf0.001 and checks them against
+# DuckDB; without the testdata it is skipped, and says so. A malformed doc
+# comment fails `sbt doc`; any warning it prints (a broken, ambiguous or
+# private [[link]]) fails this gate too, so the API docs stay publishable.
+# The full correctness drive (all queries through Verify + DuckDB) is run
+# manually per README when touching query semantics.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 # Rename gate: a rename under src/main publishes something, and only the
@@ -52,6 +52,23 @@ fi
 # the monolith back.
 if grep -nE ': Q =|"q[0-9a-z_]*" *->' src/main/scala/graft/QueryCatalog.scala; then
   echo "QueryCatalog.scala defines a query (declare it as a QuerySpec in its family under graft/catalog/)" >&2
+  exit 1
+fi
+# Session gate: library code never writes the caller's SparkSession. A
+# setting is made once at session build (GraftSession), or in an isolated
+# clone of the caller's session (IsolatedSession); only the files below may
+# set a session conf or touch its experimental rules, each for the one
+# reason given.
+declare -A session_ok=(
+  [GraftSession.scala]="the session builder"
+  [IsolatedSession.scala]="the isolation helper"
+  [CatalogCommon.scala]="streaming drains: settings read at stream start, listeners per session"
+)
+session_bad=$({ grep -rlE 'conf\.(set|unset)\(|experimental\.' src/main || true; } |
+  while read -r f; do [[ -n "${session_ok[$(basename "$f")]:-}" ]] || echo "$f"; done)
+if [[ -n "$session_bad" ]]; then
+  echo "session conf or experimental rule written outside the allowlist (build it into GraftSession or plan in an IsolatedSession):" >&2
+  echo "$session_bad" >&2
   exit 1
 fi
 sbt -batch compile Test/compile
